@@ -28,7 +28,11 @@ Round 14 (VERDICT-r13 #3, additions only): a query whose in-suite time
 exceeds 5x the trailing median (and 2 s absolute) is re-run immediately;
 ``stall_reruns`` records {first, rerun} so per-query JVM-internal stalls
 — which the single-core probes provably cannot see — are attributable
-from the record itself. ``timings``/``value`` keep the first number.
+from the record itself. ``timings``/``value`` keep the first number. A
+rerun that read a session-store memo carries ``"served_from_memo": true``
+(its fast rerun is shared-build amortization, not a stall), and the full
+record's ``memo_builds`` lists every shared relation the suite built:
+{key: {built_by, build_s, bytes, hits}} from ``store.stats``.
 """
 
 from __future__ import annotations
@@ -85,6 +89,7 @@ def main() -> int:
     only = set(sys.argv[1:])
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from weather_data_ingestion_gcp_spark import store
     from weather_data_ingestion_gcp_spark.plans import QUERIES
     from weather_data_ingestion_gcp_spark.session import get_spark
 
@@ -166,6 +171,9 @@ def main() -> int:
     stall_reruns: dict[str, dict[str, float]] = {}
     recent: list[float] = []  # trailing in-suite timings (this run)
 
+    def _memo_hits() -> int:
+        return sum(e["hits"] for e in store.stats(spark).values())
+
     def _trailing_median() -> float | None:
         if len(recent) < 8:  # too early to call anything a stall
             return None
@@ -195,10 +203,13 @@ def main() -> int:
             and timings[name] > STALL_FACTOR * med
             and timings[name] > 2.0
         ):
+            hits = _memo_hits()
             t1 = time.time()
             fn(spark, sf_dir).toArrow().num_rows
             rerun = round(time.time() - t1, 3)
             stall_reruns[name] = {"first": timings[name], "rerun": rerun}
+            if _memo_hits() > hits:
+                stall_reruns[name]["served_from_memo"] = True
             print(
                 f"# stall-check rerun {name}: first {timings[name]:.2f}s,"
                 f" rerun {rerun:.2f}s (trailing median {med:.2f}s)",
@@ -233,12 +244,12 @@ def main() -> int:
         isolated_warm[name] = round(time.time() - t0, 3)
         print(f"# warm {name}: {isolated_warm[name]:.2f}s", file=sys.stderr)
 
-    # the dedup block persists shared shingle relations; release them once
-    # the suite (and the warm re-runs that rely on them) is done rather
-    # than leaving the session to LRU eviction
-    from weather_data_ingestion_gcp_spark.operators.dedup import release_shingle_caches
-
-    release_shingle_caches()
+    # the suite keeps shared relations in the session store; record what
+    # each cost, then release them once the suite (and the warm re-runs
+    # that rely on them) is done rather than leaving the session to LRU
+    # eviction
+    memo_builds = store.stats(spark)
+    store.release()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -323,6 +334,7 @@ def main() -> int:
         "calibration": calibration,
         "host_noise": host_noise,
         "stall_reruns": stall_reruns,
+        "memo_builds": memo_builds,
         "calibrated_s_per_query": cal_spq,
         "peak_storage_mb": round(peak_storage_mb, 1),
         "sf": sf_val,

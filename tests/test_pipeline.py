@@ -265,3 +265,65 @@ def test_streaming_processing_time_trigger_live_cadence(spark, tmp_path):
     # the micro-batches also refreshed daily: day 3 saw the 23:59 row
     d3 = {r.dt: r for r in wh.read_daily().collect()}[dt.date(2022, 7, 3)]
     assert d3.till_time == "EOD"
+
+
+def test_corrupt_batch_leaves_no_cached_rdd(spark, tmp_path):
+    """A micro-batch carrying a corrupt line must not leave a cached
+    relation in the block manager (the quarantine filter once rebound
+    the cached frame, so the wrong one was unpersisted), and its log
+    rows stay one error (the quarantine count) plus one success. An
+    empty batch writes and logs nothing."""
+    sc = spark.sparkContext._jsc.sc()
+    landing = str(tmp_path / "landing")
+    os.makedirs(landing)
+    good = spark.createDataFrame(hourly_rows(days=1), WEATHER_SCHEMA).toJSON().collect()
+    with open(os.path.join(landing, "mixed.json"), "w") as f:
+        f.write("\n".join(good[:5]) + "\n")
+        f.write('{"this is not: valid json\n')
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+    wh.load_and_transform(read_landing(spark, landing))
+    assert [i.name() for i in sc.getRDDStorageInfo() if i.id() not in before] == []
+    logs = {(r.message_type, r.message) for r in wh.read_logs().collect()}
+    assert logs == {
+        ("error", "quarantined 1 corrupt row(s) (null dt)"),
+        ("success", "loaded 1 day(s)"),
+    }
+    empty = WeatherWarehouse(spark, str(tmp_path / "empty"))
+    empty.load_and_transform(spark.createDataFrame([], WEATHER_SCHEMA))
+    assert not os.path.exists(str(tmp_path / "empty"))
+
+
+def test_writes_keep_the_session_overwrite_mode(spark, tmp_path):
+    """Day refresh and MERGE pass dynamic partition overwrite on the
+    writer: a session set to static stays static, and the refresh still
+    replaces only the days it wrote."""
+    from weather_data_ingestion_gcp_spark.operators.merge import upsert_partitioned
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+        wh.append_hourly(spark.createDataFrame(hourly_rows(days=3), WEATHER_SCHEMA))
+        wh.refresh_daily()
+        wh.refresh_daily([dt.date(2022, 7, 2)])
+        assert spark.conf.get(key) == "static"
+        assert sorted(r.dt for r in wh.read_daily().collect()) == [
+            dt.date(2022, 7, 1), dt.date(2022, 7, 2), dt.date(2022, 7, 3),
+        ]
+        path = str(tmp_path / "tbl")
+        rows = [(1, "a", "2024-01-01"), (2, "b", "2024-01-02")]
+        upsert_partitioned(
+            spark, path, spark.createDataFrame(rows, "k BIGINT, v STRING, d STRING"),
+            key_cols=["k"], partition_col="d",
+        )
+        upsert_partitioned(
+            spark, path, spark.createDataFrame([(2, "b2", "2024-01-02")], "k BIGINT, v STRING, d STRING"),
+            key_cols=["k"], partition_col="d",
+        )
+        assert spark.conf.get(key) == "static"
+        got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
+        assert got == {(1, "a"), (2, "b2")}
+    finally:
+        spark.conf.set(key, prev)

@@ -202,47 +202,55 @@ def test_load_table_memoizes_per_session_and_dir(spark):
     assert dict(e.dtypes)["ts"] == "timestamp"
 
 
-def test_run_after_graph_is_flat_and_resolvable():
-    """_apply_driver_window does not support follower chains (a follower
-    anchoring on another follower would be silently appended at the
-    tail, exactly the cache-adjacency break the map exists to prevent)
-    and an unregistered anchor would likewise dump its follower at the
-    tail. Pin both properties, plus: every follower actually lands
-    immediately after its anchor in the final suite order (or inside
-    the contiguous follower run of that anchor), unless the follower
-    itself is pulled into the driver window."""
-    from weather_data_ingestion_gcp_spark.plans import (
-        DRIVER_WINDOW,
-        RUN_AFTER,
-    )
+def test_shares_groups_run_contiguously():
+    """Suite order past the driver window is derived from
+    ``register(shares=...)``: the first declarer of a key (window first,
+    then registration order) anchors it and every later declarer runs
+    right after it, so the shared relation is hottest when read.
 
-    followers = set(RUN_AFTER)
-    for follower, anchor in RUN_AFTER.items():
-        assert anchor in QUERIES, f"anchor {anchor} not registered"
-        assert anchor not in followers, (
-            f"{follower} anchors on {anchor}, itself a follower — "
-            "chains are unsupported; anchor FLAT on the block head"
-        )
+    Pinned: each key has at least two declarers (a lone declaration
+    shares nothing, e.g. a misspelt key); a sharer outside the window
+    anchors no key of its own; the window is never reordered;
+    the sharers outside the window run as one contiguous run right
+    after their anchor — or, for an anchor inside the window, inside
+    the run of window-anchored sharers that opens the post-window
+    suite."""
+    from weather_data_ingestion_gcp_spark.plans import DRIVER_WINDOW, SHARES
+
+    declarers: dict[str, list[str]] = {}
+    for name in DRIVER_WINDOW + [n for n in QUERIES if n not in DRIVER_WINDOW]:
+        for key in SHARES.get(name, ()):
+            declarers.setdefault(key, []).append(name)
+    anchors = {names[0] for names in declarers.values()}
+    for key, names in declarers.items():
+        assert len(names) >= 2, f"shares key {key!r} has one declarer: {names}"
+        for n in names[1:]:
+            assert n in DRIVER_WINDOW or n not in anchors, (
+                f"{n} follows {names[0]} and anchors another key: chains are unsupported"
+            )
     order = list(QUERIES)
     window = set(DRIVER_WINDOW)
+    assert order[: len(DRIVER_WINDOW)] == DRIVER_WINDOW
     pos = {n: i for i, n in enumerate(order)}
-    for follower, anchor in RUN_AFTER.items():
-        if follower in window:
-            continue  # the window orders it explicitly
+    anchor_of = {
+        n: names[0] for names in declarers.values() for n in names[1:]
+        if n not in window
+    }
+    window_followers = {n for n, a in anchor_of.items() if a in window}
+    for key, names in declarers.items():
+        anchor = names[0]
+        outside = [n for n in names[1:] if n not in window]
+        if not outside:
+            continue
         if anchor in window:
-            # window-internal anchors: their followers form the
-            # post-window prefix (ordered by anchor position); require
-            # only that nothing NON-follower separates them from the
-            # boundary — two window anchors' groups legally queue
-            for between in order[len(DRIVER_WINDOW) : pos[follower]]:
-                assert RUN_AFTER.get(between) in window, (
-                    f"{between} separates {follower} from the window "
+            # the post-window suite opens with window-anchored sharers
+            for between in order[len(DRIVER_WINDOW) : max(pos[n] for n in outside)]:
+                assert between in window_followers, (
+                    f"{between} separates {key!r} sharers from the window "
                     f"boundary (anchor {anchor} is inside the window)"
                 )
             continue
-        # contiguity: everything between the anchor and this follower
-        # is a follower of the SAME anchor
-        for between in order[pos[anchor] + 1 : pos[follower]]:
-            assert RUN_AFTER.get(between) == anchor, (
-                f"{between} separates {follower} from its anchor {anchor}"
-            )
+        run = order[pos[anchor] : pos[anchor] + 1 + len(outside)]
+        assert run == [anchor] + outside, (
+            f"{key!r} sharers do not run right after {anchor}: {run}"
+        )

@@ -796,9 +796,9 @@ def test_snm_rank_correct_without_exchange_reuse(spark):
             spark.conf.unset("spark.sql.exchange.reuse")
         else:
             spark.conf.set("spark.sql.exchange.reuse", prev)
-        # snm_ranked persist_tracked-registers its pid relation in the
-        # shared shingle-cache registry — release it so this test does
-        # not leak a cached frame into the rest of the session.
+        # snm_ranked keeps its pid relation in the session store —
+        # release it so this test does not leak a cached frame into the
+        # rest of the session.
         dedup.release_shingle_caches()
     want = {
         (r.doc_id, r.lang): r.rk
@@ -817,16 +817,14 @@ def test_snm_rank_correct_without_exchange_reuse(spark):
     assert got == want
 
 
-def test_session_memo_persist_invalidated_on_release(spark):
-    """The round-10 ADVICE staleness: the shared-relation memos
-    (word_freq_shared / emb_bands_shared / _dsir_scored_shared) kept
-    their handles after release_shingle_caches() unpersisted them, so
-    any later caller silently got an unpersisted DataFrame and the
-    documented session persistence was never restored. The extracted
-    session_memo_persist must (a) build once per (key, sf_dir), (b)
-    return a persisted handle, and (c) be invalidated by release —
-    next call rebuilds AND re-persists."""
-    from weather_data_ingestion_gcp_spark.operators import dedup
+def test_store_shared_builds_once_and_release_invalidates(spark):
+    """store.shared builds once per (session object, key, sf dir) and
+    hands back a stored handle. release() must unpersist it AND forget
+    the memo: a memo left populated would hand later callers an
+    unpersisted DataFrame, silently dropping the documented session
+    persistence. A sibling session (spark.newSession(), same
+    application id) starts cold."""
+    from weather_data_ingestion_gcp_spark import store
 
     calls = []
 
@@ -834,34 +832,59 @@ def test_session_memo_persist_invalidated_on_release(spark):
         calls.append(1)
         return spark.range(5).select(F.col("id").alias("x"))
 
-    a = dedup.session_memo_persist(spark, "t_memo", "/fake/sf", build)
-    b = dedup.session_memo_persist(spark, "t_memo", "/fake/sf", build)
+    a = store.shared(spark, "t_memo", "/fake/sf", build)
+    b = store.shared(spark, "t_memo", "/fake/sf", build)
     assert a is b
     assert len(calls) == 1
     assert a.storageLevel.useMemory or a.storageLevel.useDisk
+    assert store.stats(spark)["t_memo"]["hits"] == 1
     # distinct sf_dir -> distinct cache entry, not an alias
-    dedup.session_memo_persist(spark, "t_memo", "/fake/sf2", build)
+    store.shared(spark, "t_memo", "/fake/sf2", build)
     assert len(calls) == 2
-    dedup.release_shingle_caches()
+    sib = spark.newSession()
+    assert store.shared(sib, "t_memo", "/fake/sf", build) is not a
+    assert len(calls) == 3
+    store.release()
     assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
-    c = dedup.session_memo_persist(spark, "t_memo", "/fake/sf", build)
-    assert len(calls) == 3  # rebuilt, not the stale unpersisted handle
+    assert store.stats(spark) == {}
+    c = store.shared(spark, "t_memo", "/fake/sf", build)
+    assert len(calls) == 4  # rebuilt, not the stale unpersisted handle
     assert c.storageLevel.useMemory or c.storageLevel.useDisk
-    dedup.release_shingle_caches()
+    store.release()
+
+
+def test_store_shared_keeps_one_copy_of_a_checkpoint(spark):
+    """A shared value that is already a checkpoint (store.truncate) is
+    stored exactly once: no persist on top of the checkpoint blocks."""
+    from weather_data_ingestion_gcp_spark import store
+
+    sc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in sc.getRDDStorageInfo()}
+    try:
+        df = store.shared(
+            spark, "t_ckpt", "/fake/sf",
+            lambda: store.truncate(spark.range(50).selectExpr("id % 7 AS k")),
+        )
+        assert df.count() == 50
+        assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
+        new = [i for i in sc.getRDDStorageInfo() if i.id() not in before]
+        assert len(new) == 1
+        assert store.stats(spark)["t_ckpt"]["bytes"] == new[0].memSize() + new[0].diskSize() > 0
+    finally:
+        store.release()
 
 
 def test_session_memo_registry_adds_no_retention():
-    """Round-11 ADVICE: the memo registry kept one entry per session
-    forever (stopped sessions included) — a slow leak in long-lived
-    multi-session processes. The WeakSet of owning sessions must not
-    itself keep an owner alive: once the last outside reference drops,
-    the owner (and its memo dict) must leave the registry. Exercised
-    with a stand-in owner because PySpark itself pins real sessions
-    elsewhere — the property under test is OUR registry's retention,
-    not PySpark's."""
+    """The store's registry of memo-owning sessions must not itself keep
+    an owner alive: once the last outside reference drops, the owner
+    (and its memo dict) must leave the registry — one entry per session
+    forever would be a slow leak in long-lived multi-session processes.
+    Exercised with a stand-in owner because PySpark itself pins real
+    sessions elsewhere — the property under test is the store's
+    retention, not PySpark's."""
     import gc
 
-    from weather_data_ingestion_gcp_spark.operators import dedup
+    from weather_data_ingestion_gcp_spark import store
 
     class FakeDF:
         def persist(self, *a, **k):
@@ -874,14 +897,14 @@ def test_session_memo_registry_adds_no_retention():
         pass
 
     owner = FakeSession()
-    before = len(dedup._SESSION_MEMO_OWNERS)
-    df = dedup.session_memo_persist(owner, "t_weak", "/fake/sf", FakeDF)
+    before = len(store._OWNERS)
+    df = store.shared(owner, "t_weak", "/fake/sf", FakeDF)
     assert isinstance(df, FakeDF)
-    assert len(dedup._SESSION_MEMO_OWNERS) == before + 1
+    assert len(store._OWNERS) == before + 1
     del owner
     gc.collect()
-    assert len(dedup._SESSION_MEMO_OWNERS) == before
-    dedup.release_shingle_caches()
+    assert len(store._OWNERS) == before
+    store.release()
 
 
 def test_std_minhash_pairs_shared_and_content_identical(spark):
@@ -900,11 +923,16 @@ def test_std_minhash_pairs_shared_and_content_identical(spark):
         std_minhash_pairs,
     )
 
+    from weather_data_ingestion_gcp_spark import store
+
     try:
         a = std_minhash_pairs(spark, SF)
         b = std_minhash_pairs(spark, SF)
         assert a is b  # one build per (session, sf_dir)
-        assert a.storageLevel.useMemory or a.storageLevel.useDisk
+        # stored once, as the lineage-truncated checkpoint: no second
+        # persisted copy on top of it
+        assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
+        assert store.stats(spark)["std_minhash_pairs_tri8"]["bytes"] > 0
         d = load_table(spark, SF, "documents")
         direct = dedup.minhash_near_duplicates(
             d, "doc_id", "text", num_hashes=8, rows_per_band=2,
@@ -988,7 +1016,7 @@ def test_cms_sketch_broadcasts_to_the_word_relation(spark):
     assert plan.count("InMemoryTableScan") >= 3
 
 
-def test_persist_tracked_storage_levels(spark):
+def test_store_keep_storage_levels(spark):
     """big=True (exploded corpus x shingle relations) must be
     MEMORY_ONLY — an evicted block RECOMPUTES (its materialized form is
     ~50x the parquet source; the round-8 probe measured disk
@@ -996,11 +1024,11 @@ def test_persist_tracked_storage_levels(spark):
     relations keep the MEMORY_AND_DISK fallback."""
     from pyspark.storagelevel import StorageLevel
 
-    from weather_data_ingestion_gcp_spark.operators import dedup
+    from weather_data_ingestion_gcp_spark import store
 
     df = spark.range(10)
-    compact = dedup.persist_tracked(spark.range(10))
-    big = dedup.persist_tracked(df.selectExpr("id", "explode(array(1,2)) v"), big=True)
+    compact = store.keep(spark.range(10))
+    big = store.keep(df.selectExpr("id", "explode(array(1,2)) v"), big=True)
     try:
         assert compact.storageLevel == StorageLevel.MEMORY_AND_DISK
         assert big.storageLevel == StorageLevel.MEMORY_ONLY

@@ -838,24 +838,22 @@ def test_load_table_memo_is_per_session_object(spark):
     newSession() shares the applicationId — the memo must key on the
     session OBJECT, so a sibling session never receives a foreign
     DataFrame."""
-    from weather_data_ingestion_gcp_spark.plans.registry import (
-        _MEMO_ATTR,
-        load_table,
-    )
+    from weather_data_ingestion_gcp_spark import store
+    from weather_data_ingestion_gcp_spark.plans.registry import load_table
 
     sf = "/root/testdata/sf0.001"
     a = load_table(spark, sf, "region")
     assert load_table(spark, sf, "region") is a  # memo hit in-session
     sib = spark.newSession()
     try:
-        assert getattr(sib, _MEMO_ATTR, None) is None  # no bleed-through
+        assert getattr(sib, store._MEMO, None) is None  # no bleed-through
         b = load_table(sib, sf, "region")
         assert b is not a
         assert load_table(sib, sf, "region") is b
         assert b.count() == a.count()
     finally:
-        if hasattr(sib, _MEMO_ATTR):
-            delattr(sib, _MEMO_ATTR)
+        if hasattr(sib, store._MEMO):
+            delattr(sib, store._MEMO)
 
 
 def test_staged_compaction_streams_and_preserves_micros(tmp_path):

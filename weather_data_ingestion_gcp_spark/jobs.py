@@ -24,8 +24,10 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .operators.rollup import daily_rollup
 from .schemas import LOG_SCHEMA, WEATHER_SCHEMA
@@ -128,7 +130,10 @@ class WeatherWarehouse:
             runtime=dt.datetime.now().strftime("%Y%m%d-%H:%M:%S"),
         )
         base.update(fields)
-        row_df = self.spark.createDataFrame([Row(**base)], LOG_SCHEMA)
+        # Arrow-built: a list-built frame re-serializes through Python workers
+        row_df = self.spark.createDataFrame(
+            pa.Table.from_pylist([base], schema=to_arrow_schema(LOG_SCHEMA))
+        )
         self.storage.append(
             row_df, "logs", ["log_type", "message_type"], fmt="json"
         )
@@ -150,8 +155,12 @@ class WeatherWarehouse:
         row instead of polluting the warehouse with a null partition.
         """
         try:
-            batch = batch.cache()  # two passes: append + affected-dates
-            n_corrupt = batch.filter(F.col("dt").isNull()).count()
+            # one aggregate yields emptiness (an empty batch writes and
+            # logs nothing), the quarantine count and the affected days
+            rows_by_day = {r["dt"]: r["count"] for r in batch.groupBy("dt").count().collect()}
+            if not rows_by_day:
+                return
+            n_corrupt = rows_by_day.pop(None, 0)
             if n_corrupt:
                 self.log(
                     log_type="bq-load-logging",
@@ -161,7 +170,7 @@ class WeatherWarehouse:
                 )
                 batch = batch.filter(F.col("dt").isNotNull())
             self.append_hourly(batch)
-            dates = [r.dt for r in batch.select("dt").distinct().collect()]
+            dates = list(rows_by_day)
             self.refresh_daily(dates)
             self.log(
                 log_type="bq-load-logging",
@@ -177,6 +186,4 @@ class WeatherWarehouse:
                 message=str(exc)[:1000],
             )
             raise
-        finally:
-            batch.unpersist()
 

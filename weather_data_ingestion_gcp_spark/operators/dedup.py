@@ -21,51 +21,12 @@ hex->int conversion.
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Shingle relations persisted by minhash_near_duplicates(cache_shingles=
-#: True). The cache is what lets every dedup query over one table share a
-#: single tokenization, but each distinct (input, shingle_n) plan holds a
-#: MEMORY_AND_DISK entry for the session lifetime; long-running callers
-#: release explicitly instead of leaning on LRU block eviction.
-_SHINGLE_CACHE: list[DataFrame] = []
-
-#: Sessions holding a memo dict handed out by session_memo_persist. Memo
-#: values are persist_tracked handles, so a release_shingle_caches() that
-#: unpersisted them but left the memos populated would silently hand
-#: later callers unpersisted DataFrames — the documented session
-#: persistence never restored (round-10 ADVICE). A WeakSet of the OWNING
-#: sessions (the memo dict itself is not weakref-able) lets release
-#: clear every live session's memo in the same sweep while dead
-#: sessions drop out automatically — the round-11 list-of-dicts form
-#: kept one entry per session forever, a slow leak in long-lived
-#: multi-session processes (round-11 ADVICE).
-_SESSION_MEMO_OWNERS: weakref.WeakSet = weakref.WeakSet()
-
-
-def release_shingle_caches(blocking: bool = False) -> int:
-    """Unpersist every shingle relation cached by
-    ``minhash_near_duplicates`` and return how many were released. Call
-    after a dedup block completes in a long-running session (the bench
-    harness does, once, after the suite). Also invalidates every
-    ``session_memo_persist`` memo, so the next call rebuilds + re-persists
-    instead of returning a stale unpersisted handle."""
-    n = 0
-    for cached in _SHINGLE_CACHE:
-        try:
-            cached.unpersist(blocking)
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
-    _SHINGLE_CACHE.clear()
-    for owner in list(_SESSION_MEMO_OWNERS):
-        memo = getattr(owner, "_graft_session_memo", None)
-        if memo is not None:
-            memo.clear()
-    return n
+from ..store import keep
+# store.release under its older name, still called by perfbench's reset
+from ..store import release as release_shingle_caches  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -363,31 +324,16 @@ def minhash_near_duplicates(
     - per-doc shingle counts are folded into the SAME groupBy that computes
       the signature mins (one wide aggregate, ``stack``-unpivoted after),
       eliminating the separate sizes scan verify_jaccard would run;
-    - with ``cache_shingles`` (default), the shingle rows persist
-      MEMORY_AND_DISK via the CacheManager, which substitutes one shared
-      InMemoryRelation into every reference — tokenization runs once, not
-      once per subtree (measured 8.1s -> 3.5s cold at sf0.1; a lazy
-      localCheckpoint does NOT get this because concurrent branch stages
-      race before its blocks land). Cached entries are deduped by
-      canonicalized plan, so every dedup query over the same table shares
-      one entry, and blocks are LRU-evictable — but at the 100 TB design
-      point the shingle relation is ~corpus-sized, so flip
-      ``cache_shingles=False`` there and eat the extra scans (or dedup in
-      date-partition slices so each slice's cache fits).
-
-    Every persisted handle is tracked; long-running sessions call
-    ``release_shingle_caches()`` after their dedup block completes (the
-    bench harness does) instead of relying on LRU eviction alone.
+    - with ``cache_shingles`` (default), the shingle rows (``big``) and
+      the signatures are kept in the session store (``store.keep``; the
+      storage-level and 100 TB rationale lives there), so every dedup
+      query over the same table shares one tokenization. The verified
+      pairs are NOT kept here: consumers that scan them several times
+      keep or truncate the returned frame themselves.
     """
     sh = shingles(df, id_col, text_col, n=shingle_n)
     if cache_shingles:
-        from pyspark.storagelevel import StorageLevel
-
-        # MEMORY_ONLY: the exploded shingle relation is the classic
-        # big=True case — see persist_tracked (evict -> recompute beats
-        # evict -> disk-round-trip by 3.5x, measured at sf10)
-        sh = sh.persist(StorageLevel.MEMORY_ONLY)
-        _SHINGLE_CACHE.append(sh)
+        sh = keep(sh, big=True)
     wide = minhash_wide_signatures(sh, num_hashes=num_hashes)
     if cache_shingles:
         # the verify prune's candidate-id set re-reads the signature
@@ -396,15 +342,7 @@ def minhash_near_duplicates(
         # (A/B: PageRank isolated-warm 7.5 s -> ~4 s). O(docs x k x 32B),
         # the designated compact persist candidate — see
         # minhash_wide_signatures.
-        wide = persist_tracked(wide)
-    # NOTE: the verified-pairs output is deliberately NOT session-cached
-    # here. An A/B at sf0.1 showed a global CacheManager entry for every
-    # pairs plan slows the REST of the suite by ~15% (plan-matching
-    # against large cached trees on every compile) while only multi-
-    # reference consumers benefit. Consumers that reference the pairs
-    # relation several times in ONE plan (PageRank's per-round joins,
-    # triangle counting's three-way self-join) persist the returned
-    # frame themselves via cache_pairs_frame().
+        wide = keep(wide)
     return verified_pairs_from_wide(
         wide,
         sh,
@@ -484,95 +422,6 @@ def verified_pairs_from_wide(
         pairs, shingle_df, sizes=sizes, candidate_ids=cand_ids,
         prune_unique=prune_unique,
     ).filter(F.col("jaccard") >= threshold)
-
-
-def persist_tracked(df: DataFrame, big: bool = False) -> DataFrame:
-    """Persist a relation and register the handle in the shingle-cache
-    registry so ``release_shingle_caches()`` frees it with everything
-    else.
-
-    ``big=False`` (compact or expensive-to-recompute relations — pairs,
-    signatures, UDF outputs, the pid-pinned rank relations): MEMORY_AND_
-    DISK, so an evicted block round-trips local disk instead of
-    re-running an expensive join/UDF/exchange.
-
-    ``big=True`` (corpus x shingle EXPLODED relations whose recompute is
-    a cheap split+explode over a much smaller parquet source):
-    MEMORY_ONLY, so an evicted block is RECOMPUTED. The round-8 probe
-    measured why: at sf10 the shingle relation exceeds the storage
-    region and MEMORY_AND_DISK's warm re-read of the partially evicted
-    cache cost 297 s vs 84 s for a cold recompute (the materialized
-    exploded form is ~50x its parquet source, so disk-deserializing it
-    loses to recomputing it). When the relation fits — every driver SF,
-    or a cluster with per-executor share sized to data — the two levels
-    behave identically."""
-    from pyspark.storagelevel import StorageLevel
-
-    out = df.persist(
-        StorageLevel.MEMORY_ONLY if big else StorageLevel.MEMORY_AND_DISK
-    )
-    _SHINGLE_CACHE.append(out)
-    return out
-
-
-def session_memo_persist(spark, key: str, sf_dir: str, builder, big: bool = False) -> DataFrame:
-    """Session-lifetime persisted relation, built at most once per
-    (session, key, sf dir): the shared-relation discipline behind the
-    RUN_AFTER adjacencies (one word-frequency table feeding both BPE
-    entries, one sign-LSH band index feeding ANN lookup + SemDedup, one
-    DSIR-scored relation feeding weights + top-p). ``builder`` is a
-    zero-arg callable returning the DataFrame to persist; storage level
-    per ``persist_tracked``. The memo dict rides on the SparkSession (a
-    new session naturally starts cold) and is registered for
-    invalidation by ``release_shingle_caches`` — round 10 grew three
-    copies of this getattr/setattr boilerplate, each inventing its own
-    session attribute and none invalidated on release."""
-    memo: dict | None = getattr(spark, "_graft_session_memo", None)
-    if memo is None:
-        memo = {}
-        setattr(spark, "_graft_session_memo", memo)
-        _SESSION_MEMO_OWNERS.add(spark)
-    k = (key, str(sf_dir))
-    hit = memo.get(k)
-    if hit is not None:
-        return hit
-    df = persist_tracked(builder(), big=big)
-    memo[k] = df
-    return df
-
-
-def cache_pairs_frame(pairs: DataFrame) -> DataFrame:
-    """Persist a verified-pairs relation for a consumer that scans it
-    multiple times within one plan (graph analytics). The relation is
-    O(near-duplicate pairs) — far below corpus size, safe at the 100 TB
-    design point. persist(), not localCheckpoint: the CacheManager
-    entry is shared ACROSS queries by canonical-plan matching (an A/B
-    that checkpointed all 13 call sites lost that sharing and cost the
-    suite ~12 s). Consumers that LOOP over the frame wrap it with
-    loop_frame() on top."""
-    return persist_tracked(pairs)
-
-
-def loop_frame(df: DataFrame) -> DataFrame:
-    """Truncate lineage for a frame consumed by an ITERATIVE algorithm
-    (PageRank power rounds, alternating-star CC): each round compiles a
-    new plan, and every compile canonicalizes the frame's FULL lineage
-    (shingles -> signatures -> bands -> prune -> verify) against the
-    CacheManager — measured at ~0.5 s/round of pure plan-compile after
-    the round-8 verify-prune subtree grew the lineage (PageRank
-    isolated-warm 3.3 -> 8.7 s). An EAGER localCheckpoint materializes
-    once (reading the shared cache when the input is persisted) and
-    hands the loop a leaf RDD scan, so per-round compile is O(1) in
-    lineage depth. Eager is required: a lazy checkpoint under the first
-    round's concurrent stages races (the round-2 shingle-cache
-    finding). Blocks are reference-managed by the ContextCleaner.
-
-    CALLER CONTRACT: because the checkpoint is eager, calling this
-    function EXECUTES the input's full pipeline immediately — plan
-    construction of any consumer stops being lazy. Wrap only frames an
-    iterative driver is about to loop over, never relations on a
-    build-only/explain-only path."""
-    return df.localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -829,8 +678,8 @@ def _sub_blocked_jaccard_grouped(
     # doc is preserved at row grain, collisions only nudge one n_inter
     # with odds ~|shingles|^2 / 2^64. Persisted: sizes and the group
     # aggregate both scan it; MEMORY_ONLY because recompute beats
-    # disk-round-tripping the exploded form (persist_tracked big=True).
-    hashed = persist_tracked(
+    # disk-round-tripping the exploded form (store.keep big=True).
+    hashed = keep(
         sh.select(
             "doc_id", *block_cols, sub, F.xxhash64("shingle").alias("shingle")
         ),
@@ -948,7 +797,7 @@ def repeated_spans(
     # only REPEATED grams — a small fraction of the corpus — so
     # MEMORY_AND_DISK (cheap to keep, expensive to recompute: the
     # recompute is the full tokenize + count pass).
-    g = persist_tracked(g.join(kept, "h", "left_semi"))
+    g = keep(g.join(kept, "h", "left_semi"))
     a = g.select(F.col("doc_id").alias("id_a"), F.col("pos").alias("pa"), "h")
     b = g.select(F.col("doc_id").alias("id_b"), F.col("pos").alias("pb"), "h")
     m = (

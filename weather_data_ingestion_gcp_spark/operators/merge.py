@@ -22,8 +22,6 @@ by construction.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,7 +41,6 @@ def upsert_partitioned(
         raise ValueError(f"updates must carry partition column {partition_col!r}")
 
     parts = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     if not _exists(spark, table_path):
         updates.write.mode("overwrite").partitionBy(partition_col).parquet(table_path)
@@ -70,6 +67,7 @@ def upsert_partitioned(
     (
         merged.repartition(partition_col)
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
         .parquet(table_path)
     )

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..store import keep
+
 
 def _dot(a: Column, b: Column) -> Column:
     """Sequential left-fold in double precision — deterministic accumulation
@@ -698,8 +700,6 @@ def semantic_dedup_prune(
         bkeys = ["band", "bsig", "_sub"]
     else:
         bkeys = ["band", "bsig"]
-    from .dedup import persist_tracked
-
     # Round-14 verify (guide §8 / §4.2, VERDICT-r13 #7): candidate
     # generation AND cosine verify run in ONE grouped Arrow pass per
     # (band, bsig[, _sub]) bucket — each bucket's vectors cross the
@@ -778,7 +778,7 @@ def semantic_dedup_prune(
     # several bands is verified once per collision (cheap numpy work) and
     # deduped here — the old shape deduped candidates BEFORE the verify;
     # the verified SET is identical because the cosine is deterministic.
-    dup = persist_tracked(
+    dup = keep(
         raw_pairs.where(F.round(F.col("raw"), 6) >= tau)
         .select("id_a", "id_b")
         .distinct()

@@ -12,6 +12,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..store import keep
+
 #: Tiny function-word lists for the n-gram/stopword language heuristic.
 #: (Deliberately small + deterministic; a production list is a config.)
 STOPWORDS = {
@@ -340,15 +342,12 @@ def winnow_fingerprints(
         # explode: one row per doc) so every winnow consumer in a
         # session — summary entry, overlap pairs, any later caller —
         # shares ONE UDF tokenization pass via CacheManager plan-dedup,
-        # the same pattern as the shared shingle relations. Registered
-        # in the shingle-cache registry: release_shingle_caches() frees
-        # it. The DEFAULT is False: a one-shot corpus-scale caller must
+        # the same pattern as the shared shingle relations; store.release()
+        # frees it. The DEFAULT is False: a one-shot corpus-scale caller must
         # not pin a corpus-sized relation for zero reuse; multi-consumer
         # suites opt in (r4 measured 4.1 s/invocation rebuilt vs ~1 s
         # shared at sf0.1).
-        from .dedup import persist_tracked
-
-        base = persist_tracked(base)
+        base = keep(base)
     if output == "fps":  # one row per fingerprint (for joins/overlap tests)
         return base.select("doc_id", F.explode("_fps").alias("fp"))
     return base.select(

@@ -5,7 +5,7 @@ family from SURVEY.md section 2, plus the large-scale training-data
 extensions).
 """
 
-from .registry import ORACLE, QUERIES, load_table, register  # noqa: F401
+from .registry import ORACLE, QUERIES, SHARES, load_table, register  # noqa: F401
 from . import core  # noqa: F401,E402
 from . import llm_ops  # noqa: F401,E402
 from . import tpch_extra  # noqa: F401,E402
@@ -46,7 +46,7 @@ from . import round13  # noqa: F401,E402
 #    stragglers that compose its persisted relations
 #    (ppjoin_prefix_similarity after lsh_recall_contract — the r8 fix —
 #    and decontaminate_test_split) sit inside the block, preserving
-#    their RUN_AFTER adjacencies inside the window.
+#    their shares adjacencies inside the window.
 # 3. The rest of the 33-entry r08 vintage grouped by scan family
 #    (documents, embeddings, events, scalar/dimension), with
 #    multimodal_frame_offsets adjacent to the new patch-stats entry
@@ -61,8 +61,8 @@ DRIVER_WINDOW = [
     "streaming_engagement_sink_equiv",
     "scd2_customer_history",
     # r09 trigram-minhash block (anchor first; cache-sharing followers
-    # adjacent — RUN_AFTER is a no-op inside the window, so the order
-    # here IS the adjacency)
+    # adjacent — shares never reorder the window, so the order here IS
+    # the adjacency)
     "dedup_minhash_lsh",
     "minhash_estimate_contract",
     "lsh_recall_contract",
@@ -74,8 +74,8 @@ DRIVER_WINDOW = [
     "neardup_cluster_stats",
     "graph_pagerank_neardup",
     "graph_triangle_counts",
-    # r09 embeddings: the sign-LSH band-index builder (its follower
-    # dedup_semantic_prune re-anchors via RUN_AFTER just past the window)
+    # r09 embeddings: the sign-LSH band-index builder (its shares
+    # follower dedup_semantic_prune runs just past the window)
     "similarity_ann_rp_lsh",
     # r08 embeddings scans
     "embedding_outlier_scores",
@@ -124,83 +124,17 @@ DRIVER_WINDOW = [
     "multimodal_frame_energy",  # NEW r13: audio sibling, same scan
 ]
 
-#: Tail adjacency: cache-sharing queries registered in different modules
-#: otherwise end up ~60 suite positions apart, and the shared persisted
-#: relation (8-gram shingles etc.) gets churned by everything in between
-#: (measured: the bloom prefilter at the registry tail re-paid the full
-#: tokenization, 4.6s -> 13.2s in-suite). Each entry runs immediately
-#: AFTER its anchor so the shared cache is hottest. Ordering only — the
-#: driver window (first 50) is unaffected.
-RUN_AFTER = {
-    # entries currently inside DRIVER_WINDOW are no-ops here (the window
-    # already orders them); they stay listed so a future rotation that
-    # evicts them restores the adjacency automatically.
-    "decontaminate_bloom_prefilter": "decontaminate_ngram_exact",
-    "hll_distinct_contract": "approx_distinct_users",
-    "dataset_mix_temperature": "dataset_mix_by_lang",
-    "packing_padding_efficiency": "chunk_documents_overlap",
-    # --- the trigram-minhash dedup block (VERDICT r9 #4): every
-    # consumer of the shared trigram shingle / wide-signature /
-    # verified-pairs caches anchors FLAT on dedup_minhash_lsh, so the
-    # cache build always lands on the designated first entry and
-    # in-suite times stop flapping with rotation (r8<->r9 measured
-    # dedup_minhash_lsh 2.3<->8.1 s purely by which query built the
-    # cache first). Dict order = suite order after the anchor; chains
-    # (follower anchoring on a follower) are NOT supported by
-    # _apply_driver_window — keep this flat. lsh_recall_contract sits
-    # immediately before ppjoin_prefix_similarity, preserving the r8
-    # fix (they share the full-corpus ppjoin_pairs_frame pipeline).
-    "neardup_cluster_stats": "dedup_minhash_lsh",
-    "dedup_shrinkage_by_source": "dedup_minhash_lsh",
-    "dedup_clusters": "dedup_minhash_lsh",
-    "dedup_clusters_star": "dedup_minhash_lsh",
-    "graph_pagerank_neardup": "dedup_minhash_lsh",
-    "graph_triangle_counts": "dedup_minhash_lsh",
-    # shares the graph block's shingle + verified-pairs caches (r4
-    # measured 9.5s cold vs 1.4s warm-adjacent)
-    "minhash_estimate_contract": "dedup_minhash_lsh",
-    "lsh_recall_contract": "dedup_minhash_lsh",
-    "ppjoin_prefix_similarity": "dedup_minhash_lsh",
-    # r10 bench finding: the window rotation scattered these family
-    # members 60-100 suite positions from their relation builders, and
-    # each re-paid its full cold build late in the session where the
-    # accumulated storage region turns the rebuild into eviction thrash
-    # (lsh_recall_contract_sampled: 2.9 s in-suite r9 -> 42.7 s r10).
-    # test_split composes the block's persisted trigram-shingle /
-    # signature plans verbatim (same 8/2/3 params) — CacheManager hits.
-    # The SAMPLED contract's plans sit atop its 20% hash-filtered docs,
-    # so nothing CacheManager-shares; its adjacency buys locality only
-    # (documents page cache + the block's JVM-warm codegen), which is
-    # what its r9 in-suite 2.9 s vs scattered 42.7 s measured.
-    "decontaminate_test_split": "dedup_minhash_lsh",
-    "lsh_recall_contract_sampled": "dedup_minhash_lsh",
-    # both compose emb_bands_shared (llm_ops) — one session-persisted
-    # sign-LSH band index; the follower's Arrow signature UDF pass is a
-    # cache hit (in-suite 3.4 s r9 -> 30.6 s r10 when scattered to tail)
-    "dedup_semantic_prune": "similarity_ann_rp_lsh",
-    # both compose _dsir_scored_shared (round7) — one session-persisted
-    # scored relation; the follower's scoring pipeline is a cache hit
-    "dsir_select_topp": "dsir_importance_weights",
-    # learner + encoder compose word_freq_shared (round3) — one
-    # session-persisted word-frequency relation; anchoring both on the
-    # char-pair entry keeps the flat-anchor rule while making the two
-    # sharers adjacent to EACH OTHER (cpc itself is a different pipeline
-    # over the same documents scan — locality only)
-    "bpe_learn_merges": "bpe_char_pair_counts",
-    "bpe_apply_encode": "bpe_char_pair_counts",
-    # shares the persisted winnow fingerprint-array relation (r4 verdict:
-    # 4.1 s isolated because the relation was rebuilt per invocation)
-    "winnow_overlap_pairs": "text_winnow_fingerprints",
-    # the scrub composes the finder's spans plan verbatim, so its
-    # persisted repeated-gram relation (positioned xxhash64 grams,
-    # occurrence-banded) is a CacheManager hit when adjacent
-    "dedup_span_scrub": "dedup_repeated_spans",
-    # both compose snm_candidates_shared (round6b) — one
-    # session-memoized persisted SNM pair relation; the linkage scorer
-    # was the in-suite GC-stall victim two rounds running when it
-    # rebuilt the block from scratch at max heap debt (VERDICT r11 #6)
-    "record_linkage_fellegi_sunter": "dedup_sorted_neighborhood",
-}
+# Suite order past the window comes from what queries declare. Sharers
+# registered in different modules otherwise end up ~60 positions apart,
+# and the shared relation gets churned by everything in between
+# (measured: the bloom prefilter at the registry tail re-paid the full
+# tokenization, 4.6 s -> 13.2 s in-suite; lsh_recall_contract_sampled
+# went 2.9 s -> 42.7 s when a hand-kept adjacency map drifted). The first
+# declarer of a ``register(shares=...)`` key, in DRIVER_WINDOW-then-
+# registration order, anchors it; every later declarer runs right after
+# its anchor (after the window, for an anchor inside it), so the first
+# consumer builds the relation and the rest read it hot. The window
+# itself is never reordered, and a sharer anchors no key of its own.
 
 
 def _apply_driver_window() -> None:
@@ -208,28 +142,23 @@ def _apply_driver_window() -> None:
     if missing:
         raise RuntimeError(f"DRIVER_WINDOW names not registered: {missing}")
     window = set(DRIVER_WINDOW)
-    front = {n: QUERIES[n] for n in DRIVER_WINDOW}
-    moved = {n: a for n, a in RUN_AFTER.items() if n not in window}
-    rest_names = [
-        n for n in QUERIES if n not in window and n not in moved
-    ]
-    # followers whose anchor is INSIDE the window run first after it —
-    # the shared relation their anchor persisted is hottest right at the
-    # window boundary (ordered by the anchor's window position so a
-    # window-tail anchor's follower is exactly adjacent)
-    ordered: list[str] = sorted(
-        (m for m, a in moved.items() if a in window),
-        key=lambda m: DRIVER_WINDOW.index(moved[m]),
-    )
-    for n in rest_names:
-        ordered.append(n)
-        ordered.extend(m for m, a in moved.items() if a == n)
-    # anchors not registered at all: append at the tail
-    ordered.extend(m for m in moved if m not in ordered)
-    rest = {n: QUERIES[n] for n in ordered}
+    seq = DRIVER_WINDOW + [n for n in QUERIES if n not in window]
+    pos = {n: i for i, n in enumerate(seq)}
+    anchor: dict[str, str] = {}
+    for n in seq:
+        for key in SHARES.get(n, ()):
+            anchor.setdefault(key, n)
+
+    def slot(n: str) -> tuple[int, int]:
+        # a sharer sorts right behind its anchor; anything else keeps its
+        # place (a window anchor's sharers open the post-window suite)
+        anchors = [pos[anchor[k]] for k in SHARES.get(n, ()) if anchor[k] != n]
+        return (anchors[0] if anchors else pos[n], pos[n])
+
+    order = DRIVER_WINDOW + sorted(seq[len(DRIVER_WINDOW):], key=slot)
+    fns = {n: QUERIES[n] for n in order}
     QUERIES.clear()
-    QUERIES.update(front)
-    QUERIES.update(rest)
+    QUERIES.update(fns)
 
 
 _apply_driver_window()

@@ -1529,8 +1529,9 @@ def approx_percentile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the tolerance pytest (tests/test_ops_extensions.py::
 # test_approx_distinct_within_tolerance).
 # ---------------------------------------------------------------------------
+# shares: locality only (the same events user_id scan as the HLL contract)
 @register(
-    "approx_distinct_users",
+    "approx_distinct_users", shares=("events_users",),
     oracle="""
     SELECT event_type,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,

@@ -53,8 +53,9 @@ def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MIX_RATES = {"en": 100, "de": 60, "es": 40, "fr": 30, "zh": 20}
 
 
+# shares: locality only (the same documents scan as the temperature mix)
 @register(
-    "dataset_mix_by_lang",
+    "dataset_mix_by_lang", shares=("docs_by_lang",),
     oracle=f"""
     WITH rated AS (
         SELECT lang, n_chars,
@@ -616,8 +617,9 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (sequence + posexplode per row; row growth bounded by n/stride).
 # Complements sequence_pack_offsets (the cross-document packing half).
 # ---------------------------------------------------------------------------
+# shares: locality only (the same documents word-count scan as the packing report)
 @register(
-    "chunk_documents_overlap",
+    "chunk_documents_overlap", shares=("doc_chunks",),
     oracle=r"""
     WITH d AS (
         SELECT doc_id,

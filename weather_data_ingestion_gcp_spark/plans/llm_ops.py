@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators import dedup, graph, multimodal, similarity, text
 from .registry import _sql_hex4_to_int
 from .registry import capped_minhash_pairs, load_table, register, std_minhash_pairs
@@ -57,8 +58,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.exact_dedup_groups(d, "doc_id", "text").orderBy("fp")
 
 
+# shares: the trigram shingle / signature caches and the std-pairs memo; the
+# sampled recall contract shares locality only (r10: 2.9 s -> 42.7 s scattered)
 @register(
-    "dedup_minhash_lsh",
+    "dedup_minhash_lsh", shares=("minhash_trigram",),
     oracle=rf"""
     WITH sh AS ({_SQL_SHINGLES3}),
     sig AS (
@@ -111,7 +114,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_clusters",
+    "dedup_clusters", shares=("minhash_trigram",),
     oracle=rf"""
     WITH RECURSIVE sh AS ({_SQL_SHINGLES3}),
     sig AS (
@@ -173,7 +176,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_clusters_star",
+    "dedup_clusters_star", shares=("minhash_trigram",),
     oracle="""
     SELECT doc_id,
            MIN(doc_id) OVER (PARTITION BY lang, source) AS component
@@ -221,7 +224,7 @@ _SQL_DOCID_BUCKET = (
 
 
 @register(
-    "decontaminate_test_split",
+    "decontaminate_test_split", shares=("minhash_trigram",),
     oracle=rf"""
     WITH sh AS ({_SQL_SHINGLES3}),
     sig AS (
@@ -591,22 +594,20 @@ def similarity_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _brute_topk8_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized exact top-5 neighbors of the 8 probe queries —
-    the shared-relation discipline (operators/dedup.py
-    session_memo_persist): `similarity_cosine_topk` RETURNS this
+    the shared-relation discipline (``store.shared``):
+    `similarity_cosine_topk` RETURNS this
     relation and `similarity_ann_ivf_kmeans` consumes it as recall
     ground truth, and each used to re-run the full corpus×8 dot pass.
     The persisted relation is the OUTPUT (40 rows), so the memo costs
     nothing at the 100 TB design point — the brute-force pass itself
     stays the audited broadcast-queries shape, run once per session."""
-    from ..operators.dedup import session_memo_persist
-
     def build() -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         return similarity.brute_force_topk(
             emb, emb.filter(F.col("vec_id") < 8), k=5
         )
 
-    return session_memo_persist(spark, "brute_topk8_k5", sf_dir, build)
+    return store.shared(spark, "brute_topk8_k5", sf_dir, build)
 
 
 @register(
@@ -659,21 +660,20 @@ def similarity_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometric k-means clusters is >= 0.6 at sf0.001/0.01/0.1 (nprobe=2 of
     8 clusters), so the pinned bound has 3x slack while still failing the
     hash compare on any real ANN regression."""
-    from ..operators.dedup import loop_frame
     from ..operators.similarity import ivf_topk, kmeans_assign
 
     emb = load_table(spark, sf_dir, "embeddings")
     # The assignment relation is consumed by BOTH sides of the IVF
     # (centroid aggregate + candidate search) and the query filter, so
     # the composed plan references the k-means subtree — pandas UDF,
-    # per-round lineage — several times per run. loop_frame (eager
+    # per-round lineage — several times per run. store.truncate (eager
     # localCheckpoint) hands every reference a 2000-row leaf instead:
     # cold 7.2 s -> 3.1 s, warm 3.1 s -> 2.6 s at sf0.1, output
     # identical. (A spread_small of the embeddings input was also
     # probed: SLOWER — 2000 rows pay more in per-task overhead across
     # 32 partitions than the parallel rounds save.)
     corpus = emb.join(
-        loop_frame(kmeans_assign(emb, k=8, max_iter=3)), "vec_id"
+        store.truncate(kmeans_assign(emb, k=8, max_iter=3)), "vec_id"
     )
     queries = corpus.filter(F.col("vec_id") < 8)
     ann = ivf_topk(corpus, queries, k=5, nprobe=2, cluster_col="kmeans_cluster")
@@ -750,15 +750,14 @@ def emb_bands_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table's sign-LSH band relation (vec_id, band,
     bsig) at the engine-default parameters (16 bits, 4 bands), session-
     persisted and memoized per (session, sf dir) — ONE index feeding
-    ``similarity_ann_rp_lsh`` and its RUN_AFTER follower
+    ``similarity_ann_rp_lsh`` and its ``shares`` follower
     ``dedup_semantic_prune`` (round3), which otherwise each re-run the
     Arrow signature UDF over the full table. This is what a real
     deployment maintains: a persisted ANN index consulted by every
     lookup, not re-signed per query. O(corpus x 4 bands) narrow rows."""
-    from ..operators.dedup import session_memo_persist
     from ..operators.similarity import random_hyperplane_bands
 
-    return session_memo_persist(
+    return store.shared(
         spark,
         "emb_bands",
         sf_dir,
@@ -766,7 +765,7 @@ def emb_bands_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("similarity_ann_rp_lsh", oracle=_rp_lsh_oracle())
+@register("similarity_ann_rp_lsh", shares=("emb_bands",), oracle=_rp_lsh_oracle())
 def similarity_ann_rp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via random-hyperplane sign-LSH (the LSH-bucketed scale path
     alongside IVF): 16 deterministic hyperplanes -> 4 bands of 4 sign bits;
@@ -1198,8 +1197,9 @@ _SQL_WINNOW_FPS = r"""norm AS (
     )"""
 
 
+# shares: the persisted fingerprint-array relation (4.1 s rebuilt vs ~1 s shared)
 @register(
-    "text_winnow_fingerprints",
+    "text_winnow_fingerprints", shares=("winnow_fingerprints",),
     oracle=f"""
     WITH {_SQL_WINNOW_FPS}
     SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fp,
@@ -1266,9 +1266,9 @@ def word_pair_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist it so the tokenize+distinct shuffle runs once (guide
     # §2.4 — share one exchange). MEMORY_ONLY via big=True: exploded
     # token relations recompute cheaper than they disk-round-trip
-    # (persist_tracked docstring), and release_shingle_caches frees it
-    # with the dedup block's relations.
-    toks = dedup.persist_tracked(
+    # (see store.py), and store.release() frees it with the dedup
+    # block's relations.
+    toks = store.keep(
         d.select(
             "doc_id", F.explode(text.words(F.col("text"))).alias("token")
         ).distinct(),
@@ -1312,8 +1312,10 @@ def word_pair_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# shares: locality only (the same documents word scan); learner and encoder
+# read the word_freq_shared memo
 @register(
-    "bpe_char_pair_counts",
+    "bpe_char_pair_counts", shares=("bpe_words",),
     oracle=r"""
     WITH w AS (
         SELECT w FROM (
@@ -1478,8 +1480,10 @@ _SQL_SHINGLES8 = r"""
 """
 
 
+# shares: the persisted 8-gram shingle relation (the bloom prefilter re-paid
+# the full tokenization at the registry tail, 4.6 s -> 13.2 s in-suite)
 @register(
-    "decontaminate_ngram_exact",
+    "decontaminate_ngram_exact", shares=("doc_8grams",),
     oracle=rf"""
     WITH sh AS ({_SQL_SHINGLES8}),
     split AS (SELECT doc_id, {_SQL_DOCID_BUCKET} AS b FROM documents),
@@ -1512,7 +1516,7 @@ def decontaminate_ngram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted + registry-tracked: the full-corpus 8-gram relation is
     # CacheManager-shared with any other same-shape consumer, so the
     # corpus tokenizes once for the whole decontamination block
-    sh = dedup.persist_tracked(dedup.shingles(d, "doc_id", "text", n=8), big=True)
+    sh = store.keep(dedup.shingles(d, "doc_id", "text", n=8), big=True)
     b = hash_bucket(F.col("doc_id"))
     # round-14 probe, REJECTED at decade scale: filtering the gram
     # relation directly on the md5 doc-id bucket (instead of these

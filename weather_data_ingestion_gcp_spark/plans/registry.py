@@ -15,8 +15,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import store
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
+#: query -> the session relations it shares (``register(shares=...)``)
+SHARES: dict[str, tuple[str, ...]] = {}
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -59,38 +63,22 @@ def type_class(type_name: str) -> str:
     return t.lower()
 
 
-def register(name: str, oracle: str | None = None):
+def register(name: str, oracle: str | None = None, shares: tuple[str, ...] = ()):
     """Register a query; ``oracle`` is the DuckDB-equivalent ANSI SQL
     (omit only for genuinely non-SQL-expressible ops -> weaker rows-only
-    driver check)."""
+    driver check). ``shares`` names the session relations the query
+    reuses with others; sharers run next to each other in the suite
+    (``plans/__init__.py``)."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
+        if shares:
+            SHARES[name] = tuple(shares)
         return fn
 
     return deco
-
-
-#: Per-session memo (sf_dir, table) -> analyzed DataFrame, stored as an
-#: attribute ON the SparkSession object itself. DataFrames are immutable
-#: logical plans, so handing every caller the same object is safe — and
-#: skips the per-call spark.read.parquet re-analysis (file listing +
-#: footer schema read + py4j round trips, measured ~0.12 s per call at
-#: sf0.1, the single largest share of the 0.70 s/query suite floor).
-#: Bounded: #tables x #sf_dirs per session; dies with the session.
-#: Session-object keying matters: DataFrames are bound to the session
-#: that created them, and spark.newSession() SHARES the applicationId —
-#: an app-id-keyed global memo would hand a sibling session a foreign
-#: DataFrame whose conf (e.g. the events nanosAsLong legacy flag) may
-#: differ, and entries for stopped sessions would linger forever.
-#: Execution still scans parquet (pushdown/pruning unaffected), but the
-#: memo DOES pin the file LISTING captured at first read — fine for the
-#: driver's sf dirs, which are immutable by contract; a caller pointing
-#: load_table at a directory it mutates mid-session must use
-#: _load_table_uncached (fresh listing every call) instead.
-_MEMO_ATTR = "_graft_table_memo"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -102,20 +90,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     reader rejects; read nanos as long and floor-convert to microseconds
     (integer division — double division would lose precision at 1e18),
     matching DuckDB's own nanos->micros truncation.
+
+    The handle is memoized per (session, sf dir, table) in the session
+    store (``store.handle``); it pins the file listing taken at first
+    read, fine for the immutable driver sf dirs. A caller reading a
+    directory it mutates mid-session uses ``_load_table_uncached``.
     """
-    memo: dict[tuple[str, str], DataFrame] | None = getattr(
-        spark, _MEMO_ATTR, None
+    return store.handle(
+        spark, ("table", name), sf_dir,
+        lambda: _load_table_uncached(spark, sf_dir, name),
     )
-    if memo is None:
-        memo = {}
-        setattr(spark, _MEMO_ATTR, memo)
-    key = (str(sf_dir), name)
-    hit = memo.get(key)
-    if hit is not None:
-        return hit
-    df = _load_table_uncached(spark, sf_dir, name)
-    memo[key] = df
-    return df
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -153,37 +137,18 @@ def std_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate join + Jaccard verify re-executed every time (~0.5-1.2 s
     warm per entry). One persisted (id_a, id_b, jaccard) relation —
     O(near-dup pairs), far below corpus size, the same
-    session_memo_persist discipline as the SNM pair relation — makes
+    ``store.shared`` discipline as the SNM pair relation — makes
     every later consumer a cache read. Consumers apply their own
     projections/rounding; content is byte-identical to the per-entry
     pipelines it replaces (same operator, same parameters).
 
-    The memo value is lineage-truncated (loop_frame: eager
-    localCheckpoint) before the persist: with the raw persist, every
-    one of the 13 consumers embedded the FULL shingle->signature->
-    band->verify lineage in its compiled tree (dedup_minhash_lsh's
-    formatted plan: 2655 lines / 159 Exchange nodes for a 256-row
-    projection) and re-canonicalized it per run. The old objection to
-    checkpointing ("an A/B that checkpointed all 13 call sites lost
-    CacheManager sharing", cache_pairs_frame) is void here: sharing is
-    by memo OBJECT now, not by canonical plan — and the shingle/wide
-    caches the build persists as a side effect still seed the
-    canonical-plan sharers (minhash_estimate_contract, ppjoin ground
-    truth, decontaminate_test_split)."""
-    from ..operators import dedup
-
-    def build() -> DataFrame:
-        d = load_table(spark, sf_dir, "documents")
-        return dedup.loop_frame(
-            dedup.minhash_near_duplicates(
-                d, "doc_id", "text", num_hashes=8, rows_per_band=2,
-                shingle_n=3, threshold=0.5,
-            )
-        )
-
-    return dedup.session_memo_persist(
-        spark, "std_minhash_pairs_tri8", sf_dir, build
-    )
+    The memo value is the lineage-truncated relation (``store.truncate``),
+    stored once: without the cut, every one of the 13 consumers embedded
+    the FULL shingle->signature->band->verify lineage in its compiled
+    tree. The shingle/wide relations the build keeps as a side effect
+    still seed the canonical-plan sharers (minhash_estimate_contract,
+    ppjoin ground truth, decontaminate_test_split)."""
+    return _minhash_pairs(spark, sf_dir, "std_minhash_pairs_tri8", shingle_n=3)
 
 
 def capped_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,7 +161,7 @@ def capped_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT-r13 #1): before this memo each of the three re-ran the
     capped LSH candidate join + Jaccard verify per invocation (the
     shingle cache was shared, the verify was not), and the two graph
-    entries additionally paid a construction-time ``loop_frame``
+    entries additionally paid a construction-time lineage
     checkpoint of the full capped lineage EACH — the suite executed the
     capped verify pipeline three times. One persisted, lineage-truncated
     (id_a, id_b, jaccard) relation — O(capped near-dup pairs), linear in
@@ -204,20 +169,21 @@ def capped_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaf reads. Consumers apply their own projections/rounding; content
     is byte-identical to the per-entry pipelines it replaces (same
     operator, same parameters)."""
+    return _minhash_pairs(
+        spark, sf_dir, "capped_minhash_pairs_uni8", shingle_n=1, max_bucket_size=50
+    )
+
+
+def _minhash_pairs(spark: SparkSession, sf_dir: str, key: str, **params) -> DataFrame:
     from ..operators import dedup
 
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
-        return dedup.loop_frame(
-            dedup.minhash_near_duplicates(
-                d, "doc_id", "text", num_hashes=8, rows_per_band=2,
-                shingle_n=1, threshold=0.5, max_bucket_size=50,
-            )
-        )
+        return store.truncate(dedup.minhash_near_duplicates(
+            d, "doc_id", "text", num_hashes=8, rows_per_band=2, threshold=0.5, **params
+        ))
 
-    return dedup.session_memo_persist(
-        spark, "capped_minhash_pairs_uni8", sf_dir, build
-    )
+    return store.shared(spark, key, sf_dir, build)
 
 
 def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:

@@ -38,8 +38,9 @@ _SQL_POS_SHINGLES8 = r"""
 """
 
 
+# shares: the persisted repeated-gram relation the scrub composes verbatim
 @register(
-    "dedup_repeated_spans",
+    "dedup_repeated_spans", shares=("repeated_spans",),
     oracle=rf"""
     WITH pg AS ({_SQL_POS_SHINGLES8}),
     kept AS (SELECT shingle FROM pg GROUP BY shingle
@@ -115,7 +116,7 @@ _SQL_SPANS = rf"""
 
 
 @register(
-    "dedup_span_scrub",
+    "dedup_span_scrub", shares=("repeated_spans",),
     oracle=rf"""
     WITH {_SQL_SPANS},
     rng AS (
@@ -163,7 +164,7 @@ def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out per doc bounded by its span count); the text rebuild is one
     partial-aggregated groupBy over the token relation, and the spans
     plan composes the SAME persisted positioned-gram relation as
-    dedup_repeated_spans (CacheManager plan-dedup; RUN_AFTER-adjacent).
+    dedup_repeated_spans (CacheManager plan-dedup; shares-adjacent).
     """
     d = load_table(spark, sf_dir, "documents")
     g = dedup.positioned_shingles(d, "doc_id", "text", n=8)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import store
 from ..operators import sketch, text
 from .core import _cents
 from .registry import load_table, register, std_minhash_pairs
@@ -604,14 +605,12 @@ def _bpe_oracle(n_rounds: int) -> str:
 def word_freq_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus word-frequency relation (w, n), session-persisted and
     memoized per (session, sf dir) — one cache entry feeding
-    ``bpe_learn_merges`` and its RUN_AFTER-adjacent ``bpe_apply_encode``
+    ``bpe_learn_merges`` and its shares-adjacent ``bpe_apply_encode``
     (round3b), which otherwise each re-run the documents scan + explode
     + groupBy (the learner's internal loop cache is built FROM this and
     released at return, so nothing else survives across the pair).
     O(vocabulary) rows — bounded far below corpus size at any scale."""
-    from ..operators.dedup import session_memo_persist
-
-    return session_memo_persist(
+    return store.shared(
         spark,
         "word_freq",
         sf_dir,
@@ -624,7 +623,7 @@ def word_freq_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("bpe_learn_merges", oracle=_bpe_oracle(_BPE_ROUNDS))
+@register("bpe_learn_merges", shares=("bpe_words",), oracle=_bpe_oracle(_BPE_ROUNDS))
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learn 5 BPE merges over the corpus word-frequency table — the
     iterative driver-loop operator family's tokenizer member (compare
@@ -716,13 +715,13 @@ def _semantic_dedup_oracle(
     """
 
 
-@register("dedup_semantic_prune", oracle=_semantic_dedup_oracle(_SEM_TAU))
+@register("dedup_semantic_prune", shares=("emb_bands",), oracle=_semantic_dedup_oracle(_SEM_TAU))
 def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDedup over the embeddings table: kept flag + neighborhood size
     per vector (see operators.similarity.semantic_dedup_prune; bucket
     cap rationale at _SEM_CAP). Composes the session-shared sign-LSH
     band index (one cache entry with similarity_ann_rp_lsh, this
-    entry's RUN_AFTER anchor)."""
+    entry's shares anchor)."""
     from ..operators import similarity
     from .llm_ops import emb_bands_shared
 
@@ -766,7 +765,7 @@ def _winnow_pairs_oracle() -> str:
     """
 
 
-@register("winnow_overlap_pairs", oracle=_winnow_pairs_oracle())
+@register("winnow_overlap_pairs", shares=("winnow_fingerprints",), oracle=_winnow_pairs_oracle())
 def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document pairs with substring-level content overlap: shared
     winnowing fingerprints (df-capped) counted per pair. The join runs
@@ -1193,7 +1192,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     representative) — every near-duplicate family lands wholly in one
     split. Composes the verified minhash -> connected-components path
     with the deterministic hash bucket the samplers use."""
-    from ..operators import dedup, graph, sampling
+    from ..operators import graph, sampling
 
     d = load_table(spark, sf_dir, "documents")
     pairs = std_minhash_pairs(spark, sf_dir)

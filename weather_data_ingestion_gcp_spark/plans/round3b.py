@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import store
 from ..operators import temporal, text
 from ..operators.similarity import _norm, dot_pandas
 from .core import _KMV_K, _KMV_SPACE, _sql_hex12_to_bigint
@@ -628,21 +629,12 @@ def _pagerank_frame(d: DataFrame, pairs: DataFrame) -> DataFrame:
     """3-round power iteration over a verified-pairs edge relation —
     shared by the uncapped and capped graph entries (the algorithm is
     edge-source-agnostic; only the pairs derivation differs)."""
-    from ..operators import dedup
-
-    # every power-iteration round re-scans the edge list; persist it so
-    # the minhash chain runs once, not once per round (dedup.
-    # cache_pairs_frame — released with the shingle-cache registry),
-    # then truncate lineage for the loop (dedup.loop_frame — each
-    # round's plan compile otherwise re-canonicalizes the whole minhash
-    # lineage; see the round-8 verify-prune note there).
-    # SIDE EFFECT: loop_frame's eager localCheckpoint RUNS the minhash
-    # pipeline here, at plan-CONSTRUCTION time — calling this function
-    # (or explaining its result) executes Spark jobs before any action.
-    # Deliberate: the power rounds below unroll into the returned plan,
-    # so the checkpoint cannot be deferred past construction without
-    # giving back the O(1)-lineage compile it exists to provide.
-    e = dedup.loop_frame(dedup.cache_pairs_frame(pairs.select("id_a", "id_b")))
+    # ``pairs`` is a stored, lineage-truncated memo (std_/capped_minhash_
+    # pairs): every power round re-scans the edge list, and each round's
+    # compile stays O(1) in lineage depth because the edge list is a
+    # leaf. Building that memo runs the minhash pipeline at plan-
+    # CONSTRUCTION time (see store.truncate).
+    e = pairs.select("id_a", "id_b")
     sym = e.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")).unionAll(
         e.select(F.col("id_b").alias("u"), F.col("id_a").alias("v"))
     )
@@ -668,11 +660,11 @@ def _pagerank_frame(d: DataFrame, pairs: DataFrame) -> DataFrame:
         # spillable at any corpus size, never driver-side. The previous
         # round's (cached) scores ARE the node set, so no per-round
         # re-scan of the documents table is needed. (Round-13 probe: a
-        # per-round eager loop_frame checkpoint instead of this persist
+        # per-round eager checkpoint instead of this persist
         # shrank the compiled tree 738 -> 12 Exchanges but moved the
         # same jobs to construction time and measured SLOWER cold —
         # 2.5 s -> 4.1 s capped — so the persist stands.)
-        scores = dedup.cache_pairs_frame(
+        scores = store.keep(
             scores.select("doc_id", "n")
             .join(inflow, "doc_id", "left")
             .select(
@@ -692,7 +684,10 @@ def _pagerank_frame(d: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-@register("graph_pagerank_neardup", oracle=_pagerank_oracle(_PR_ITERS))
+@register(
+    "graph_pagerank_neardup", shares=("minhash_trigram",),
+    oracle=_pagerank_oracle(_PR_ITERS),
+)
 def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round power iteration on the near-dup graph, integer nano-unit
     scores: contrib(u) = (85 * (s(u) // deg(u))) // 100, s'(v) = base +
@@ -701,8 +696,6 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     of scores onto the (cached) symmetric edge list + one aggregate; the
     edge relation re-uses the session-cached minhash pairs, and score
     state is O(nodes), never materialized on the driver."""
-    from ..operators import dedup
-
     d = load_table(spark, sf_dir, "documents")
     return _pagerank_frame(d, std_minhash_pairs(spark, sf_dir))
 
@@ -729,7 +722,7 @@ def _triangle_oracle(pairs: str | None = None) -> str:
     """
 
 
-@register("graph_triangle_counts", oracle=_triangle_oracle())
+@register("graph_triangle_counts", shares=("minhash_trigram",), oracle=_triangle_oracle())
 def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts on the near-dup graph: canonical a<b<c
     enumeration (edges stored low<high, so the wedge join e1(a,b)⋈e2(b,c)
@@ -738,26 +731,18 @@ def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale the standard degree-ordered orientation bounds the wedge join
     by sum(deg^2) of low-degree endpoints; near-dup graphs are
     clique-clustered, so wedges stay within clusters."""
-    from ..operators import dedup
-
     return _triangle_frame(std_minhash_pairs(spark, sf_dir))
 
 
 def _triangle_frame(pairs: DataFrame) -> DataFrame:
     """Triangle enumeration over a verified-pairs edge relation — shared
     by the uncapped and capped graph entries."""
-    from ..operators import dedup
-
-    # the wedge join scans the edge list three times in one plan; the
-    # persist makes execution share one materialization, and the
-    # loop_frame checkpoint additionally hands the three join legs a
-    # LEAF relation — without it each leg's logical plan embeds the
-    # whole minhash lineage and the compiled tree reached 1028
-    # Exchange nodes / 649 scans (round-13 probe), with every compile
-    # re-canonicalizing that tree against the CacheManager (warm 2.5 s
-    # -> see OPTIMIZATION_r13.md). The checkpoint materializes the
-    # O(near-dup pairs) relation once, reading the shared pairs cache.
-    e = dedup.loop_frame(dedup.cache_pairs_frame(pairs.select("id_a", "id_b")))
+    # the wedge join scans the edge list three times in one plan; pairs
+    # is a stored, lineage-truncated memo, so the three legs read one
+    # materialization as a LEAF relation (without the cut each leg
+    # embedded the whole minhash lineage: 1028 Exchange nodes / 649
+    # scans in the compiled tree, round-13 probe)
+    e = pairs.select("id_a", "id_b")
     e1 = e.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     e2 = e.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))
     e3 = e.select(F.col("id_a").alias("a"), F.col("id_b").alias("c"))
@@ -792,11 +777,10 @@ def _capped_pairs(spark: SparkSession, sf_dir: str):
     # round-14 (VERDICT-r13 #1): the capped pairs ride the session memo
     # shared with dedup_minhash_lsh_capped — before this, each capped
     # graph entry re-ran the capped LSH verify pipeline AND paid a
-    # construction-time loop_frame checkpoint of its full lineage
+    # construction-time checkpoint of its full lineage
     # (graph_pagerank_neardup_capped: 6.3 s in-suite / 3.7 s warm at the
     # r14 baseline, the worst non-sink entry). The memo value is already
-    # lineage-truncated, so _pagerank_frame/_triangle_frame's own
-    # loop_frame re-checkpoints a leaf select — one tiny job.
+    # lineage-truncated, so _pagerank_frame/_triangle_frame read it as is.
     return d, capped_minhash_pairs(spark, sf_dir)
 
 
@@ -975,7 +959,7 @@ def ppjoin_pairs_frame(d: DataFrame) -> DataFrame:
     # the shingle relation feeds ranking AND both verify legs (3 scans in
     # one plan) — persist it; CacheManager dedupes with the minhash
     # family's identical shingle cache, so no extra footprint
-    tok = dedup.cache_pairs_frame(
+    tok = store.keep(
         dedup.shingles(d, "doc_id", "text", n=3).withColumnRenamed("shingle", "t")
     )
     dfreq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
@@ -1010,14 +994,14 @@ def ppjoin_pairs_frame(d: DataFrame) -> DataFrame:
     # persist the (tiny) verified pair set: the recall contract re-runs
     # this exact pipeline as its ground truth and CacheManager serves it
     # from this entry instead of re-joining
-    return dedup.cache_pairs_frame(
+    return store.keep(
         ov.filter(jac >= _PPJ_T).select(
             "id_a", "id_b", F.round(jac, 6).alias("jaccard")
         )
     )
 
 
-@register("ppjoin_prefix_similarity", oracle=_ppjoin_oracle())
+@register("ppjoin_prefix_similarity", shares=("minhash_trigram",), oracle=_ppjoin_oracle())
 def ppjoin_prefix_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return ppjoin_pairs_frame(d).orderBy("id_a", "id_b")
@@ -1096,8 +1080,6 @@ def _pca_oracle(iters: int) -> str:
 
 @register("pca_power_iteration", oracle=_pca_oracle(_PCA_ITERS))
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup
-
     emb = load_table(spark, sf_dir, "embeddings")
     # The n·d² outer-product sums are computed as Arrow-batched numpy
     # matmuls (Q^T·Q per batch, int64-exact — same quantization as the
@@ -1139,7 +1121,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     parts = emb.select("embedding").mapInPandas(_gram_partials, "j int, k int, v long")
-    parts = dedup.cache_pairs_frame(parts)
+    parts = store.keep(parts)
     nn = parts.filter(F.col("j") == -1).agg(F.sum("v").alias("n"))
     s = parts.filter((F.col("k") == -1) & (F.col("j") > 0)).groupBy("j").agg(
         F.sum("v").alias("s")
@@ -1155,7 +1137,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n·d² covariance aggregation runs once, not once per iteration
     # d² rows: coalesce to one partition so each power round schedules
     # one task against the cached matrix, not shuffle-partitions many
-    m = dedup.cache_pairs_frame(
+    m = store.keep(
         p.join(sj, "j")
         .join(sk, "k")
         .crossJoin(F.broadcast(nn))
@@ -1171,7 +1153,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         # y is referenced twice per round (renorm + max); without a
         # persist each reference re-evaluates the whole chain of prior
         # rounds — 2^iters blowup. The persisted frame is d rows.
-        y = dedup.cache_pairs_frame(
+        y = store.keep(
             m.join(F.broadcast(x.select(F.col("j").alias("k"), "x")), "k")
             .groupBy("j")
             .agg(F.sum(F.col("c") * F.col("x")).alias("y"))
@@ -1720,10 +1702,8 @@ def recall_summary(exact: DataFrame, lsh: DataFrame) -> DataFrame:
     )
 
 
-@register("lsh_recall_contract", oracle=_lsh_recall_oracle())
+@register("lsh_recall_contract", shares=("minhash_trigram",), oracle=_lsh_recall_oracle())
 def lsh_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup
-
     d = load_table(spark, sf_dir, "documents")
     # same (id_a, id_b) subtree the graph-analytics queries persist —
     # CacheManager serves one shared entry across all of them
@@ -1786,13 +1766,13 @@ def _bpe_apply_oracle(rounds: int, k: int = 20) -> str:
     )
 
 
-@register("bpe_apply_encode", oracle=_bpe_apply_oracle(5))
+@register("bpe_apply_encode", shares=("bpe_words",), oracle=_bpe_apply_oracle(5))
 def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import bpe
     from .round3 import word_freq_shared
 
     # the session-shared word-frequency relation (one cache entry with
-    # bpe_learn_merges, this entry's RUN_AFTER-adjacent predecessor)
+    # bpe_learn_merges, this entry's shares-adjacent predecessor)
     wx = word_freq_shared(spark, sf_dir)
     merges = bpe.bpe_learn_merges(wx, "w", "n", n_merges=5).collect()  # O(model)
     enc = wx.select("w", "n", bpe.spell(F.col("w")).alias("seq"))
@@ -2411,7 +2391,7 @@ def _pretrain_build_oracle() -> str:
 
 @register("pretrain_data_build", oracle=_pretrain_build_oracle())
 def pretrain_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup, graph, sampling
+    from ..operators import graph, sampling
 
     d = load_table(spark, sf_dir, "documents")
     gated = d.select(
@@ -2519,8 +2499,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_source_syndication(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup
-
     d = load_table(spark, sf_dir, "documents")
     pairs = std_minhash_pairs(spark, sf_dir).select("id_a", "id_b")
     src = d.select("doc_id", "source")
@@ -2605,7 +2583,10 @@ def _minhash_estimate_oracle() -> str:
     """
 
 
-@register("minhash_estimate_contract", oracle=_minhash_estimate_oracle())
+@register(
+    "minhash_estimate_contract", shares=("minhash_trigram",),
+    oracle=_minhash_estimate_oracle(),
+)
 def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup, sampling
     from .registry import _sample_pct
@@ -2629,8 +2610,8 @@ def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the per-pair agreement columns (round 3 ran the identical
     # groupBy twice — the suite's most expensive query at 9.5s/sf0.1).
     # wide is O(sampled docs x 8 x 32B), safe to persist.
-    sh = dedup.persist_tracked(dedup.shingles(d, "doc_id", "text", n=3), big=True)
-    wide = dedup.persist_tracked(dedup.minhash_wide_signatures(sh, num_hashes=8))
+    sh = store.keep(dedup.shingles(d, "doc_id", "text", n=3), big=True)
+    wide = store.keep(dedup.minhash_wide_signatures(sh, num_hashes=8))
     if pct >= 100:
         # full-corpus path (every driver SF): the pairs leg IS the
         # standard-parameter relation — read the session-memoized,

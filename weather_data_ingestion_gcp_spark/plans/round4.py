@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators import dedup, sketch
 from ..operators.sampling import hash_bucket
 from ..operators.text import words as text_words
@@ -25,7 +26,7 @@ from .registry import load_table, register, std_minhash_pairs
 
 
 @register(
-    "decontaminate_bloom_prefilter",
+    "decontaminate_bloom_prefilter", shares=("doc_8grams",),
     oracle=rf"""
     WITH sh AS ({_SQL_SHINGLES8}),
     split AS (SELECT doc_id, {_SQL_DOCID_BUCKET} AS b FROM documents),
@@ -77,7 +78,7 @@ def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     b = hash_bucket(F.col("doc_id"))
     # test split: tokenize ONLY the 10% split; persisted because both
     # the bloom build and the exact join consume it
-    te = dedup.persist_tracked(
+    te = store.keep(
         dedup.shingles(d.filter(b < 10), "doc_id", "text", n=8), big=True
     )
     # adaptive width (r7): a fixed 2^20-bit bloom saturates once the
@@ -93,7 +94,7 @@ def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     # is O(maybe-contaminating grams) — bounded by the bloom, NOT
     # corpus-sized, so persisting it is safe at any scale.
     tr = dedup.shingles(d.filter(b >= 15), "doc_id", "text", n=8)
-    tr_pruned = dedup.persist_tracked(
+    tr_pruned = store.keep(
         sketch.bloom_xl_prune(tr, "shingle", words, hexw)
     )
     out = dedup.ngram_exact_overlap(te, tr_pruned, min_shared=2, max_gram_df=50)
@@ -108,7 +109,7 @@ def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
-    "hll_distinct_contract",
+    "hll_distinct_contract", shares=("events_users",),
     oracle="""
     SELECT event_type,
            CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
@@ -144,7 +145,7 @@ def hll_distinct_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dataset_mix_temperature",
+    "dataset_mix_temperature", shares=("docs_by_lang",),
     oracle=r"""
     WITH src AS (
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -193,7 +194,7 @@ def dataset_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "packing_padding_efficiency",
+    "packing_padding_efficiency", shares=("doc_chunks",),
     oracle=r"""
     WITH docs AS (
         SELECT doc_id,
@@ -297,7 +298,7 @@ def _cluster_assign_oracle() -> str:
 
 
 @register(
-    "neardup_cluster_stats",
+    "neardup_cluster_stats", shares=("minhash_trigram",),
     oracle=f"""
     SELECT cluster_size,
            CAST(COUNT(*) AS BIGINT) AS n_clusters,
@@ -339,7 +340,7 @@ def neardup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_shrinkage_by_source",
+    "dedup_shrinkage_by_source", shares=("minhash_trigram",),
     oracle=f"""
     WITH assign AS ({_cluster_assign_oracle()})
     SELECT d.source,

@@ -23,10 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators import dedup, sampling
 from .registry import (
     _sample_pct,
-    _sql_hex4_to_int,
     _sql_sampled_docs_cte,
     load_table,
     register,
@@ -57,7 +57,10 @@ def _sampled_recall_oracle() -> str:
     return f"WITH {_sql_sampled_docs_cte()},\n" + body
 
 
-@register("lsh_recall_contract_sampled", oracle=_sampled_recall_oracle())
+@register(
+    "lsh_recall_contract_sampled", shares=("minhash_trigram",),
+    oracle=_sampled_recall_oracle(),
+)
 def lsh_recall_contract_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH recall measured on a deterministic 20% hash-sample of
     the corpus — the 100 TB form of `lsh_recall_contract` (round3b).
@@ -80,7 +83,7 @@ def lsh_recall_contract_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pct = _sample_pct(docs.count())
     d = docs.filter(sampling.hash_bucket(F.col("doc_id")) < pct)
-    lsh = dedup.cache_pairs_frame(
+    lsh = store.keep(
         dedup.minhash_near_duplicates(
             d, "doc_id", "text", num_hashes=8, rows_per_band=2, shingle_n=3,
             threshold=0.5,

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators import dedup
 from .registry import load_table, register
 
@@ -74,8 +75,6 @@ def snm_ranked(d: DataFrame, prefix: int = _SNM_PREFIX) -> DataFrame:
     blocks, so consistency no longer depends on optimizer behavior.
     The cached projection is 4 narrow columns (~60 B/row) — O(corpus
     rows), far below corpus size, registry-tracked for unpersist."""
-    from ..operators.dedup import persist_tracked
-
     spark = d.sparkSession
     try:
         # platforms may set this conf to non-numeric values (e.g. "auto")
@@ -87,7 +86,7 @@ def snm_ranked(d: DataFrame, prefix: int = _SNM_PREFIX) -> DataFrame:
         "lang",
         F.substring(F.lower("text"), 1, prefix).alias("sk"),
     )
-    t = persist_tracked(
+    t = store.keep(
         base.repartitionByRange(n_parts, "lang", "sk", "doc_id").withColumn(
             "pid", F.spark_partition_id()
         )
@@ -144,7 +143,7 @@ def snm_candidates(d: DataFrame, w: int = _SNM_W, prefix: int = _SNM_PREFIX) -> 
 
 def snm_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized persisted SNM candidate relation at the default
-    (w, prefix) — the shared-relation discipline (session_memo_persist)
+    (w, prefix) — the shared-relation discipline (``store.shared``)
     applied to the pair block both `dedup_sorted_neighborhood` and
     `record_linkage_fellegi_sunter` rebuild from scratch: the two
     entries are suite-adjacent, and the rebuild (rank + explode-join
@@ -154,9 +153,7 @@ def snm_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     7 queries past the periodic GC at max heap debt). The relation is
     exactly N*w (id_a, id_b) pairs — far below corpus size, safe to
     persist at the 100 TB design point."""
-    from ..operators.dedup import session_memo_persist
-
-    return session_memo_persist(
+    return store.shared(
         spark,
         "snm_candidates",
         sf_dir,
@@ -165,7 +162,7 @@ def snm_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_sorted_neighborhood",
+    "dedup_sorted_neighborhood", shares=("snm_candidates",),
     oracle=rf"""
     WITH ranked AS (
         SELECT doc_id, lang,

@@ -190,7 +190,7 @@ _FS_ORACLE = """
 """
 
 
-@register("record_linkage_fellegi_sunter", oracle=_FS_ORACLE)
+@register("record_linkage_fellegi_sunter", shares=("snm_candidates",), oracle=_FS_ORACLE)
 def record_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter probabilistic linkage over SNM candidate pairs:
     fields = (8-char normalized prefix, length-bucket n_chars div 8,

@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators.sampling import hash_bucket
 from ..operators.text import ngram_array
 from .registry import _sql_hex4_to_int, load_table, register
@@ -122,13 +123,11 @@ _DSIR_ORACLE = rf"""
 def _dsir_scored_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The with_meta=True scored relation, session-persisted and memoized
     per (session, sf dir) — ONE cache entry feeding both
-    ``dsir_importance_weights`` and ``dsir_select_topp`` (its RUN_AFTER
+    ``dsir_importance_weights`` and ``dsir_select_topp`` (its shares
     follower), the repo-wide shared-relation discipline. O(raw-pool
     docs) x 5 narrow columns — bounded far below corpus size, safe to
     persist at any scale."""
-    from ..operators.dedup import session_memo_persist
-
-    return session_memo_persist(
+    return store.shared(
         spark,
         "dsir_scored",
         sf_dir,
@@ -200,7 +199,7 @@ def dsir_scored_docs(
     )
 
 
-@register("dsir_importance_weights", oracle=_DSIR_ORACLE)
+@register("dsir_importance_weights", shares=("dsir_scored",), oracle=_DSIR_ORACLE)
 def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR: score every raw-pool doc (source != 'src0') by its summed
     hashed-bigram log importance ratio against the 'src0' target domain;
@@ -208,7 +207,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     the arithmetic and scale shape.
 
     Composes the SAME persisted with_meta=True scored relation as
-    round-8's ``dsir_select_topp`` (its RUN_AFTER follower), so the
+    round-8's ``dsir_select_topp`` (its shares follower), so the
     scoring pipeline runs once for the pair; the projection here drops
     the meta keys without touching the per-doc sums."""
     return (
@@ -294,9 +293,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanges and 18 jobs; this one is 1 scan of events). The
     # relation is O(types x days x digit-buckets) — calendar-sized,
     # safe to reference repeatedly at any corpus scale.
-    from ..operators.dedup import persist_tracked
-
-    base = persist_tracked(
+    base = store.keep(
         e.select(
             "event_type",
             F.to_date("ts").alias("day"),

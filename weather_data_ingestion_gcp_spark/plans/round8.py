@@ -62,7 +62,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.dedup import persist_tracked
+from .. import store
 from .registry import _sql_hex4_to_int, register
 from .round7 import _DSIR_B, _DSIR_TARGET
 
@@ -84,7 +84,7 @@ def global_range_rank(df: DataFrame, *order) -> DataFrame:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         n_parts = spark.sparkContext.defaultParallelism
-    t = persist_tracked(
+    t = store.keep(
         df.repartitionByRange(n_parts, *order).withColumn(
             "pid", F.spark_partition_id()
         )
@@ -195,7 +195,7 @@ _DSIR_TOPP_ORACLE = rf"""
 """
 
 
-@register("dsir_select_topp", oracle=_DSIR_TOPP_ORACLE)
+@register("dsir_select_topp", shares=("dsir_scored",), oracle=_DSIR_TOPP_ORACLE)
 def dsir_select_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply DSIR: keep the top ~10% of raw-pool docs by importance
     weight (ties to the smaller doc_id; pool = raw docs with >= 1
@@ -203,7 +203,7 @@ def dsir_select_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition per (lang, source) in exact ppm. See module docstring
     for the rank's scale shape."""
     # compose the session-shared scored relation (one cache entry with
-    # dsir_importance_weights, its RUN_AFTER anchor); the projection is
+    # dsir_importance_weights, its shares anchor); the projection is
     # a cheap scan of the cached base, so no second persist needed even
     # though the rank below reads it twice
     from .round7 import _dsir_scored_shared
@@ -330,12 +330,12 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import words
 
     d = load_table(spark, sf_dir, "documents")
-    wc = persist_tracked(
+    wc = store.keep(
         d.select(F.explode(words(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    bk = persist_tracked(
+    bk = store.keep(
         wc.select(
             "w", "cnt", *[_cms_bucket(i, F.col("w")).alias(f"b{i}") for i in range(_CMS_D)]
         ).selectExpr(

@@ -139,11 +139,9 @@ class ParquetTableStorage(TableStorage):
 
     def overwrite_partitions(self, df: DataFrame, table: str,
                              partition_by: list[str]) -> None:
-        self.spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         (
             df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(*partition_by)
             .parquet(self.path(table))
         )

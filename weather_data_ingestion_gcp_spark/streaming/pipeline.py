@@ -30,8 +30,7 @@ from ..sources.landing import stream_landing
 
 def _batch_processor(warehouse: WeatherWarehouse, dedup: bool):
     def process(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+        # an empty batch is a no-op inside load_and_transform
         if dedup:
             batch = batch.dropDuplicates(["dt", "current_time", "name"])
         warehouse.load_and_transform(batch)
