@@ -127,6 +127,17 @@ def test_stopword_hits_matches_hof(edge_df):
             )
 
 
+
+@pytest.mark.parametrize("bad", ["", "a b"])
+def test_stopword_list_rejects_empty_and_multi_token_entries(monkeypatch, bad):
+    """An empty or whitespace-bearing stopword would corrupt the pattern;
+    the check raises ValueError, which ``python -O`` does not strip."""
+    monkeypatch.setitem(
+        text_ops.STOPWORDS, "en", [*text_ops.STOPWORDS["en"], bad]
+    )
+    with pytest.raises(ValueError, match="single tokens"):
+        text_ops._stopword_alternation("en")
+
 def test_char_pair_capture_matches_substr_windows(edge_df):
     w = edge_df.select(F.explode(_words_hof(F.col("text"))).alias("w")).filter(
         F.length("w") >= 2

@@ -1,0 +1,104 @@
+"""Each DuckDB oracle primitive is spelled once, in ``plans/oracle_sql.py``.
+
+Scans the package source: the hand-spelled fragments of the md5-hex
+integer, the word split, the MinHash signature and the Jaccard verify
+join occur in ``oracle_sql.py`` only; no plan module rewrites SQL with
+``re.sub`` or imports a ``_SQL_*`` / ``_sql_*`` fragment from a sibling.
+Then pins the md5-hex integer across engines: DuckDB ``hex_sql`` and
+Spark ``hex_int`` must both equal Python's reading of the same digest.
+"""
+
+from __future__ import annotations
+
+import ast
+import hashlib
+import re
+from pathlib import Path
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from weather_data_ingestion_gcp_spark.operators.sampling import hex_int
+from weather_data_ingestion_gcp_spark.plans.oracle_sql import hex_sql
+
+PACKAGE = Path(__file__).resolve().parent.parent / "weather_data_ingestion_gcp_spark"
+PLANS = PACKAGE / "plans"
+HOME = "plans/oracle_sql.py"
+FRAGMENTS = [
+    "strpos('0123456789abcdef'",
+    "string_split_regex(lower(text)",
+    "MIN(md5(shingle",
+    "JOIN sh sb ON",
+]
+FRAGMENT_NAME = re.compile(r"^_(SQL|sql)_")
+
+
+def _sources():
+    for path in sorted(PACKAGE.rglob("*.py")):
+        yield path.relative_to(PACKAGE).as_posix(), path.read_text()
+
+
+@pytest.mark.parametrize("fragment", FRAGMENTS)
+def test_fragment_spelled_once_in_oracle_sql(fragment):
+    found = {rel: src.count(fragment) for rel, src in _sources() if fragment in src}
+    assert found == {HOME: 1}, found
+
+
+def test_plan_modules_neither_rewrite_sql_nor_share_private_fragments():
+    offenders = []
+    for path in sorted(PLANS.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        re_names = {
+            a.asname or a.name
+            for n in ast.walk(tree) if isinstance(n, ast.Import)
+            for a in n.names if a.name == "re"
+        }
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "sub" and isinstance(n.func.value, ast.Name)
+                and n.func.value.id in re_names
+            ):
+                offenders.append(f"{path.name}:{n.lineno}: re.sub")
+            if isinstance(n, ast.ImportFrom):
+                sibling = (n.module or "").rsplit(".", 1)[-1]
+                from_plans = n.level == 1 or (n.module or "").startswith(
+                    "weather_data_ingestion_gcp_spark.plans"
+                )
+                if from_plans and sibling != "oracle_sql":
+                    offenders += [
+                        f"{path.name}:{n.lineno}: {a.name} from {sibling}"
+                        for a in n.names if FRAGMENT_NAME.match(a.name)
+                    ]
+    assert not offenders, offenders
+
+
+KEYS = ["0", "-1", "-9223372036854775808", "x" * 10_000, None]
+SLICES = [(1, 4), (5, 4), (1, 12)]
+
+
+def _expected(key, start, width):
+    if key is None:
+        return None
+    digest = hashlib.md5(key.encode()).hexdigest()
+    return int(digest[start - 1:start - 1 + width], 16)
+
+
+@pytest.mark.parametrize("start,width", SLICES)
+def test_hex_integer_matches_python_in_duckdb_and_spark(spark, start, width):
+    expected = [_expected(k, start, width) for k in KEYS]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE keys (i INTEGER, k VARCHAR)")
+    con.executemany("INSERT INTO keys VALUES (?, ?)", list(enumerate(KEYS)))
+    duck = [
+        r[0] for r in con.execute(
+            f"SELECT {hex_sql('md5(k)', start, width)} FROM keys ORDER BY i"
+        ).fetchall()
+    ]
+    assert duck == expected
+
+    df = spark.createDataFrame(list(enumerate(KEYS)), "i INT, k STRING")
+    got = df.orderBy("i").select(hex_int(F.md5("k"), start, width).alias("h"))
+    assert [r["h"] for r in got.collect()] == expected

@@ -1,10 +1,13 @@
-"""Regenerate PLANS.md: formatted physical plans of the headline queries,
-so plan shapes (pushdown, broadcast, partial agg) are reviewable without
-running Spark. Usage: python tools/dump_plans.py"""
+"""Print the formatted physical plans of the headline queries (or of the
+named ones) to stdout, so plan shapes (pushdown, broadcast, partial agg)
+can be reviewed or diffed between two checkouts.
+
+Usage: python tools/dump_plans.py SF_DIR [query ...]"""
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 HEADLINERS = [
     "daily_rollup_events",
@@ -104,7 +107,11 @@ HEADLINERS = [
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    if len(sys.argv) < 2:
+        print(__doc__, file=sys.stderr)
+        return 2
+    sf, names = sys.argv[1], sys.argv[2:] or HEADLINERS
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from weather_data_ingestion_gcp_spark.plans import QUERIES
     from weather_data_ingestion_gcp_spark.session import get_spark
 
@@ -113,23 +120,16 @@ def main() -> int:
         extra_confs={"spark.ui.showConsoleProgress": "false", "spark.driver.memory": "4g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sf = "/root/testdata/sf0.001"
-    out = [
-        "# PLANS — physical plans of the headline queries",
-        "",
-        "Generated by `python tools/dump_plans.py` (sf0.001, AQE pre-execution",
-        "view). The things to check per plan: `PushedFilters`/`ReadSchema` on",
-        "every scan, `BroadcastHashJoin` for dimensions, no `CartesianProduct`,",
-        "partial+final aggregate pairs around each exchange.",
-        "",
-    ]
-    for name in HEADLINERS:
+    print(
+        "# Physical plans (AQE pre-execution view). Check per plan:\n"
+        "# PushedFilters/ReadSchema on every scan, BroadcastHashJoin for\n"
+        "# dimensions, no CartesianProduct, partial+final aggregate pairs\n"
+        "# around each exchange.\n"
+    )
+    for name in names:
         df = QUERIES[name](spark, sf)
         plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote PLANS.md ({len(HEADLINERS)} plans)")
+        print(f"## {name}\n\n{plan.rstrip()}\n", flush=True)
     return 0
 
 

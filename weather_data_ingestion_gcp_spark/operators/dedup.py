@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..store import keep
+from .sampling import hex_int
 # store.release under its older name, still called by perfbench's reset
 from ..store import release as release_shingle_caches  # noqa: F401
 
@@ -428,20 +429,6 @@ def verified_pairs_from_wide(
 # SimHash
 # ---------------------------------------------------------------------------
 
-#: portable hex-nibble value: engines disagree on hex->int casts, but
-#: "position in the hex alphabet" is pure string ops on both.
-_HEX = "0123456789abcdef"
-
-
-def _hex4_to_int(col: Column) -> Column:
-    """First 4 hex chars of an md5 -> 16-bit int, via alphabet positions."""
-    out = F.lit(0)
-    for k in range(4):
-        nib = F.instr(F.lit(_HEX), F.substring(col, k + 1, 1)) - 1
-        out = out * 16 + nib
-    return out
-
-
 def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """16-bit SimHash per document over term frequencies.
 
@@ -455,7 +442,7 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
     tf = tokens.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("cnt"))
     hashed = tf.select(
-        "doc_id", "cnt", _hex4_to_int(F.md5("token")).alias("hv")
+        "doc_id", "cnt", hex_int(F.md5("token")).alias("hv")
     )
     bits = hashed.select(
         "doc_id",
@@ -614,8 +601,7 @@ def blocked_jaccard_pairs(
         n_sub = F.expr(
             f"(`{bn}` + {int(max_block_size) - 1}) div {int(max_block_size)}"
         )
-        hex4 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4)
-        salt = F.conv(hex4, 16, 10).cast("long") % n_sub
+        salt = hex_int(F.md5(F.col("doc_id").cast("string"))) % n_sub
         # re-select: a USING join moves the key columns first, which would
         # silently break the positional toDF renames below. counts is
         # block-cardinality-sized -> broadcast side of this join.
@@ -663,8 +649,7 @@ def _sub_blocked_jaccard_grouped(
     n_sub = F.expr(
         f"(`{bn}` + {int(max_block_size) - 1}) div {int(max_block_size)}"
     )
-    hex4 = F.substring(F.md5(F.col(id_col).cast("string")), 1, 4)
-    salt = F.conv(hex4, 16, 10).cast("long") % n_sub
+    salt = hex_int(F.md5(F.col(id_col).cast("string"))) % n_sub
     # counts is block-cardinality-sized -> broadcast side; the salt is
     # computable in the same projection, so the blocking key rides the
     # narrow explode instead of a corpus-sized join afterwards

@@ -17,13 +17,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def hex_int(md5_col: Column, start: int = 1, width: int = 4) -> Column:
+    """Integer value (long) of ``width`` hex digits of the md5 hex column
+    ``md5_col`` starting at 1-based ``start``. Only string slicing and
+    base conversion, so every SQL dialect computes the same integer
+    (DuckDB mirror: plans.oracle_sql.hex_sql); NULL stays NULL."""
+    return F.conv(F.substring(md5_col, start, width), 16, 10).cast("long")
+
+
 def hash_bucket(key: Column, n_buckets: int = 100) -> Column:
     """Stable bucket in [0, n_buckets) from the md5 of the key's string
     form. Uses only arithmetic on the first 4 hex chars so the identical
     computation is expressible in any SQL dialect (no engine-native hash).
     """
-    hex4 = F.substring(F.md5(key.cast("string")), 1, 4)
-    return (F.conv(hex4, 16, 10).cast("long") % n_buckets).alias("bucket")
+    return (hex_int(F.md5(key.cast("string"))) % n_buckets).alias("bucket")
 
 
 def bernoulli_hash_sample(
@@ -72,9 +79,7 @@ def weighted_sample_topk(
     of the data — for a sampling operator, cross-engine reproducibility
     is worth the (sub-1e-6) weighting granularity it costs. Pass
     ``key_decimals=None`` for full-precision keys."""
-    hex4 = F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 4), 16, 10
-    ).cast("double")
+    hex4 = hex_int(F.md5(F.col(key_col).cast("string")))
     u = (hex4 + 0.5) / 65536.0
     skey = F.pow(u, F.lit(1.0) / F.col(weight_col))
     if key_decimals is not None:

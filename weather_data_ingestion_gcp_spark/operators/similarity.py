@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..store import keep
+from .sampling import hex_int
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -72,14 +73,6 @@ def dot_pandas(a: Column, b: Column) -> Column:
     (e.g. inside otherwise pure-codegen projections of few rows)."""
     return _make_dot_pandas()(
         a.cast("array<double>"), b.cast("array<double>")
-    )
-
-
-def cosine_pandas(a: Column, b: Column) -> Column:
-    """Cosine via three Arrow dot products — bitwise-equal to
-    :func:`cosine` and to the DuckDB `list_dot_product` formulation."""
-    return dot_pandas(a, b) / (
-        F.sqrt(dot_pandas(a, a)) * F.sqrt(dot_pandas(b, b))
     )
 
 
@@ -692,8 +685,7 @@ def semantic_dedup_prune(
         n_sub = F.expr(
             f"(`_bn` + {int(max_bucket_size) - 1}) div {int(max_bucket_size)}"
         )
-        hex4 = F.substring(F.md5(F.col(id_col).cast("string")), 1, 4)
-        salt = F.conv(hex4, 16, 10).cast("long") % n_sub
+        salt = hex_int(F.md5(F.col(id_col).cast("string"))) % n_sub
         bands = bands.join(F.broadcast(counts), ["band", "bsig"]).select(
             id_col, "band", "bsig", salt.alias("_sub")
         )

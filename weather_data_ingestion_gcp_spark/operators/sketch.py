@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .sampling import hex_int
+
 #: k hash positions from disjoint 16-bit md5 slices -> m = 65536 bits.
 BLOOM_K = 4
 BLOOM_M = 1 << 16
@@ -30,10 +32,7 @@ def bloom_positions(key: Column) -> list[Column]:
     """k position columns in [0, m) for a key: nibble-group slices of its
     md5, converted via base-16 string conv (portable to any SQL dialect)."""
     fp = F.md5(key)
-    return [
-        F.conv(F.substring(fp, 4 * j + 1, 4), 16, 10).cast("long")
-        for j in range(BLOOM_K)
-    ]
+    return [hex_int(fp, start=4 * j + 1) for j in range(BLOOM_K)]
 
 
 def bloom_build(df: DataFrame, key_col: str) -> DataFrame:
@@ -80,7 +79,7 @@ def cms_bucket(key: Column, seed: int) -> Column:
     key, mod w — portable (md5 + base conversion only) like the Bloom and
     KMV sketches, so estimates reproduce bit-for-bit anywhere."""
     h = F.md5(F.concat_ws("|", F.lit(str(seed)), key.cast("string")))
-    return (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % CMS_W).alias("bucket")
+    return (hex_int(h) % CMS_W).alias("bucket")
 
 
 def countmin_build(df: DataFrame, key_col: str) -> DataFrame:
@@ -221,10 +220,7 @@ def bloom_xl_width(n_keys: int) -> int:
 
 def bloom_xl_positions(key: Column, hexw: int = BLOOM_XL_HEXW) -> list[Column]:
     fp = F.md5(key)
-    return [
-        F.conv(F.substring(fp, hexw * j + 1, hexw), 16, 10).cast("long")
-        for j in range(BLOOM_XL_K)
-    ]
+    return [hex_int(fp, start=hexw * j + 1, width=hexw) for j in range(BLOOM_XL_K)]
 
 
 def bloom_bitset_words(

@@ -102,14 +102,13 @@ def _stopword_alternation(lang: str) -> str:
     alphabetic so the escape is a no-op, but a future entry containing a
     regex metacharacter would silently change the count instead of
     failing, and a whitespace-bearing entry can never match a single
-    token of the normalized string — assert both so a list edit cannot
-    corrupt the pattern."""
+    token of the normalized string — reject both (ValueError, which
+    ``python -O`` keeps) so a list edit cannot corrupt the pattern."""
     import re as _re
 
     ws = STOPWORDS[lang]
-    assert all(w and not _re.search(r"\s", w) for w in ws), (
-        f"STOPWORDS[{lang!r}] must be non-empty single tokens"
-    )
+    if not all(w and not _re.search(r"\s", w) for w in ws):
+        raise ValueError(f"STOPWORDS[{lang!r}] must be non-empty single tokens")
     return "|".join(_re.escape(w) for w in ws)
 
 

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.layout import spread_small
+from ..operators.sampling import hex_int
+from .oracle_sql import hash_bucket_sql, hex_sql
 from .registry import load_table, register
 
 
@@ -1564,17 +1566,6 @@ _KMV_K = 64
 _KMV_SPACE = float(1 << 48)
 
 
-def _sql_hex12_to_bigint(col: str) -> str:
-    """DuckDB: first 12 hex chars -> BIGINT via alphabet positions (DuckDB
-    1.0 has no hex->int cast; strpos arithmetic is portable and exact)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr({col}, {i + 1}, 1)) - 1) * "
-        f"CAST({16 ** (11 - i)} AS BIGINT)"
-        for i in range(12)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 @register(
     "approx_distinct_kmv",
     oracle=f"""
@@ -1594,7 +1585,7 @@ def _sql_hex12_to_bigint(col: str) -> str:
     SELECT event_type,
            ROUND(CASE WHEN m < {_KMV_K} THEN CAST(m AS DOUBLE)
                       ELSE ({_KMV_K} - 1.0)
-                           / (CAST({_sql_hex12_to_bigint('kth')} AS DOUBLE)
+                           / (CAST({hex_sql('kth', width=12)} AS DOUBLE)
                               / {_KMV_SPACE!r})
                  END, 2) AS est_users
     FROM sk ORDER BY event_type
@@ -1628,7 +1619,7 @@ def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.max("hh").alias("kth"), F.count(F.lit(1)).alias("m"))
     )
-    kth_val = F.conv(F.substring("kth", 1, 12), 16, 10).cast("bigint")
+    kth_val = hex_int(F.col("kth"), width=12)
     est = F.when(F.col("m") < _KMV_K, F.col("m").cast("double")).otherwise(
         F.lit(_KMV_K - 1.0) / (kth_val.cast("double") / F.lit(_KMV_SPACE))
     )
@@ -1642,12 +1633,9 @@ def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pos AS (
         SELECT doc_id,
-               {{bucket}} AS b,
+               {hash_bucket_sql("doc_id")} % 100 AS b,
                u.j,
-               (strpos('0123456789abcdef', substr(md5(text), u.j * 4 + 1, 1)) - 1) * 4096
-             + (strpos('0123456789abcdef', substr(md5(text), u.j * 4 + 2, 1)) - 1) * 256
-             + (strpos('0123456789abcdef', substr(md5(text), u.j * 4 + 3, 1)) - 1) * 16
-             + (strpos('0123456789abcdef', substr(md5(text), u.j * 4 + 4, 1)) - 1) AS pos
+               {hex_sql("md5(text)", start="u.j * 4 + 1")} AS pos
         FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j) u
     ),
     bits AS (SELECT DISTINCT pos FROM pos WHERE b >= 15),
@@ -1659,12 +1647,7 @@ def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS maybe_member
     FROM probe p LEFT JOIN bits USING (pos)
     GROUP BY p.doc_id ORDER BY p.doc_id
-    """.format(
-        bucket="((strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096"
-        " + (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256"
-        " + (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16"
-        " + (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)) % 100"
-    ),
+    """,
 )
 def bloom_membership_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable Bloom-filter membership: the train split's content
@@ -2220,25 +2203,13 @@ def conditional_null_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_hex4_expr(md5_arg: str) -> str:
-    """First 16 bits of md5(md5_arg) as an integer (DuckDB; mirrors
-    F.conv(substring(md5(..),1,4),16,10))."""
-    d = f"md5({md5_arg})"
-    return (
-        f"((strpos('0123456789abcdef', substring({d}, 1, 1)) - 1) * 4096"
-        f" + (strpos('0123456789abcdef', substring({d}, 2, 1)) - 1) * 256"
-        f" + (strpos('0123456789abcdef', substring({d}, 3, 1)) - 1) * 16"
-        f" + (strpos('0123456789abcdef', substring({d}, 4, 1)) - 1))"
-    )
-
-
 @register(
     "countmin_heavy_hitters",
     oracle=f"""
     WITH seeds AS (SELECT unnest(generate_series(0, 3)) AS s),
     sb AS (
         SELECT user_id, s,
-               {_sql_hex4_expr("CAST(s AS VARCHAR) || '|' || CAST(user_id AS VARCHAR)")} % 256
+               {hex_sql("md5(CAST(s AS VARCHAR) || '|' || CAST(user_id AS VARCHAR))")} % 256
                    AS bucket
         FROM events CROSS JOIN seeds WHERE user_id IS NOT NULL),
     cells AS (SELECT s, bucket, COUNT(*) AS c FROM sb GROUP BY s, bucket),
@@ -2290,11 +2261,11 @@ def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT l_returnflag,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(bit_xor({_sql_hex4_expr(
-               "CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)"
-               " || '|' || CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR)"
-           )} * 65536 + {_sql_hex4_expr(
-               "'x|' || CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)"
+           CAST(bit_xor({hex_sql(
+               "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)"
+               " || '|' || CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
+           )} * 65536 + {hex_sql(
+               "md5('x|' || CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR))"
            )}) AS BIGINT) AS checksum
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
@@ -2329,8 +2300,7 @@ def table_checksum_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_linenumber").cast("string"),
     )
     h = (
-        F.conv(F.substring(F.md5(key1), 1, 4), 16, 10).cast("long") * 65536
-        + F.conv(F.substring(F.md5(key2), 1, 4), 16, 10).cast("long")
+        hex_int(F.md5(key1)) * 65536 + hex_int(F.md5(key2))
     )
     return (
         li.groupBy("l_returnflag")

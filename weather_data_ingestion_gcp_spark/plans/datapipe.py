@@ -16,7 +16,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import sampling, text
-from .registry import load_table, register, std_minhash_pairs, _sql_hex4_to_int  # noqa: F401 (re-export)
+from .oracle_sql import (
+    clusters_sql,
+    hash_bucket_sql,
+    shingles_sql,
+    stoplist_sql,
+    tokens_sql,
+    words_sql,
+)
+from .registry import load_table, register, std_minhash_pairs
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -36,7 +44,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, lang
     FROM documents
-    WHERE {_sql_hex4_to_int('doc_id')} % 100 < 10
+    WHERE {hash_bucket_sql('doc_id')} % 100 < 10
     ORDER BY doc_id
     """,
 )
@@ -62,7 +70,7 @@ _MIX_RATES = {"en": 100, "de": 60, "es": 40, "fr": 30, "zh": 20}
                CASE lang WHEN 'en' THEN 100 WHEN 'de' THEN 60
                          WHEN 'es' THEN 40 WHEN 'fr' THEN 30
                          WHEN 'zh' THEN 20 ELSE 0 END AS keep_pct,
-               {_sql_hex4_to_int('doc_id')} % 100 AS b
+               {hash_bucket_sql('doc_id')} % 100 AS b
         FROM documents)
     SELECT lang,
            CAST(COUNT(*) AS BIGINT)                         AS n_total,
@@ -104,7 +112,7 @@ def dataset_mix_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, n_chars, sample_key FROM (
         SELECT doc_id, n_chars,
-               ROUND(pow(({_sql_hex4_to_int('doc_id')} + 0.5) / 65536.0,
+               ROUND(pow(({hash_bucket_sql('doc_id')} + 0.5) / 65536.0,
                    1.0 / n_chars), 6) AS sample_key
         FROM documents)
     ORDER BY sample_key DESC, doc_id LIMIT 100
@@ -166,7 +174,7 @@ def sample_stratified_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'train' END AS split,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            ROUND(AVG(n_chars), 2)   AS avg_chars
-    FROM (SELECT n_chars, {_sql_hex4_to_int('doc_id')} % 100 AS b
+    FROM (SELECT n_chars, {hash_bucket_sql('doc_id')} % 100 AS b
           FROM documents)
     GROUP BY split ORDER BY split
     """,
@@ -276,15 +284,8 @@ def pii_scrub_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ngram_bigram_topk",
-    oracle=r"""
-    WITH toks AS (
-        SELECT list_filter(string_split_regex(lower(text), '\s+'),
-                           x -> x <> '') AS ts
-        FROM documents),
-    bg AS (
-        SELECT unnest(list_transform(generate_series(1, len(ts) - 1),
-                                     i -> ts[i] || ' ' || ts[i + 1])) AS bigram
-        FROM toks WHERE len(ts) >= 2)
+    oracle=f"""
+    WITH bg AS (SELECT shingle AS bigram FROM ({shingles_sql(2, positional=True)}))
     SELECT bigram, CAST(COUNT(*) AS BIGINT) AS n
     FROM bg GROUP BY bigram
     ORDER BY n DESC, bigram LIMIT 50
@@ -332,54 +333,12 @@ def cube_lang_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # filter; the summary is one map-side-combining aggregate.
 # ---------------------------------------------------------------------------
 def _curation_oracle() -> str:
-    from .llm_ops import _SQL_SHINGLES3, _SQL_TOKENS, _sql_stoplist
-
-    return rf"""
-    WITH RECURSIVE sh AS ({_SQL_SHINGLES3}),
-    sig AS (
-        SELECT doc_id, s.seed,
-               MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
-        FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) s
-        GROUP BY doc_id, s.seed
-    ),
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               md5(CAST(seed // 2 AS VARCHAR) || '|' ||
-                   string_agg(minhash, '|' ORDER BY minhash)) AS band_key
-        FROM sig GROUP BY doc_id, band
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b USING (band_key)
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT p.id_a, p.id_b, COUNT(*) AS n_inter
-        FROM pairs p
-        JOIN sh sa ON sa.doc_id = p.id_a
-        JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-        GROUP BY p.id_a, p.id_b
-    ),
-    good AS (
-        SELECT i.id_a, i.id_b
-        FROM inter i
-        JOIN sizes na ON na.doc_id = i.id_a
-        JOIN sizes nb ON nb.doc_id = i.id_b
-        WHERE i.n_inter * 1.0 / (na.n + nb.n - i.n_inter) >= 0.5
-    ),
-    edges AS (SELECT id_a AS src, id_b AS dst FROM good
-              UNION SELECT id_b, id_a FROM good),
-    reach AS (
-        SELECT doc_id AS a, doc_id AS b FROM documents
-        UNION
-        SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src
-    ),
-    comp AS (SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a),
+    return f"""
+    WITH comp AS ({clusters_sql}),
     toks AS (
         SELECT doc_id, COUNT(*) AS n_words,
-               SUM(CASE WHEN token IN ({_sql_stoplist('en')}) THEN 1 ELSE 0 END) AS sw_hits
-        FROM ({_SQL_TOKENS}) GROUP BY doc_id
+               SUM(CASE WHEN token IN ({stoplist_sql('en')}) THEN 1 ELSE 0 END) AS sw_hits
+        FROM ({tokens_sql}) GROUP BY doc_id
     ),
     keep AS (
         SELECT d.doc_id, d.lang, d.source, t.n_words
@@ -388,7 +347,7 @@ def _curation_oracle() -> str:
         JOIN comp c ON c.doc_id = d.doc_id
         WHERE t.n_words >= 30 AND t.sw_hits >= 1
           AND d.doc_id = c.component
-          AND {_sql_hex4_to_int('d.doc_id')} % 100 < 50
+          AND {hash_bucket_sql('d.doc_id')} % 100 < 50
     )
     SELECT lang, source,
            CAST(COUNT(*) AS BIGINT)     AS n_docs,
@@ -433,20 +392,13 @@ def curation_pipeline_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_repetition_signals",
-    oracle=r"""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-        FROM documents),
-    uni AS (SELECT doc_id, unnest(ws) AS w FROM toks),
+    oracle=f"""
+    WITH uni AS (SELECT doc_id, unnest({words_sql}) AS w FROM documents),
     wc AS (SELECT doc_id, w, COUNT(*) AS c FROM uni GROUP BY doc_id, w),
     ws AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_words,
                   COUNT(*) AS n_uniq, MAX(c) AS top_n
            FROM wc GROUP BY doc_id),
-    bgl AS (SELECT doc_id,
-                   unnest(list_transform(generate_series(1, greatest(len(ws) - 1, 0)),
-                          i -> ws[i] || ' ' || ws[i+1])) AS g
-            FROM toks),
+    bgl AS (SELECT doc_id, shingle AS g FROM ({shingles_sql(2, positional=True)})),
     bc AS (SELECT doc_id, g, COUNT(*) AS c FROM bgl GROUP BY doc_id, g),
     bs AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_bg, COUNT(*) AS n_uniq_bg
            FROM bc GROUP BY doc_id)
@@ -515,11 +467,10 @@ def quality_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sequence_pack_offsets",
-    oracle=r"""
+    oracle=f"""
     WITH t AS (
         SELECT lang, doc_id,
-               CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                                    w -> w <> '')) AS BIGINT) AS n_tokens
+               CAST(len({words_sql}) AS BIGINT) AS n_tokens
         FROM documents),
     c AS (
         SELECT lang, doc_id, n_tokens,
@@ -558,7 +509,7 @@ def sequence_pack_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "incremental_ingest_dedup",
     oracle=f"""
     WITH split AS (
-        SELECT doc_id, lang, text, {_sql_hex4_to_int('doc_id')} % 100 AS b
+        SELECT doc_id, lang, text, {hash_bucket_sql('doc_id')} % 100 AS b
         FROM documents),
     inc AS (SELECT doc_id, lang, text FROM split WHERE b < 30),
     corp AS (SELECT DISTINCT text FROM split WHERE b >= 30)
@@ -620,11 +571,10 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shares: locality only (the same documents word-count scan as the packing report)
 @register(
     "chunk_documents_overlap", shares=("doc_chunks",),
-    oracle=r"""
+    oracle=f"""
     WITH d AS (
         SELECT doc_id,
-               CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                        w -> w <> '')) AS BIGINT) AS n
+               CAST(len({words_sql}) AS BIGINT) AS n
         FROM documents WHERE doc_id < 2000
     ),
     c AS (
@@ -714,11 +664,10 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "text_entropy_quality",
-    oracle=r"""
+    oracle=f"""
     WITH uni AS (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                      w -> w <> '')) AS w
+               unnest({words_sql}) AS w
         FROM documents WHERE doc_id < 2000
     ),
     wc AS (SELECT doc_id, w, COUNT(*) AS c FROM uni GROUP BY doc_id, w)

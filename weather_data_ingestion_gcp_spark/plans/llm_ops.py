@@ -19,28 +19,20 @@ from pyspark.sql import functions as F
 
 from .. import store
 from ..operators import dedup, graph, multimodal, similarity, text
-from .registry import _sql_hex4_to_int
+from .oracle_sql import (
+    clusters_sql,
+    hash_bucket_sql,
+    minhash_bands_sql,
+    minhash_pairs_sql,
+    shingles_sql,
+    simhash16_sql,
+    stoplist_sql,
+    tokens_sql,
+    verify_jaccard_sql,
+    winnow_fps_sql,
+    words_sql,
+)
 from .registry import capped_minhash_pairs, load_table, register, std_minhash_pairs
-
-# DuckDB fragment: distinct lowercase whitespace tokens, one row per (doc_id, token).
-_SQL_TOKENS = r"""
-    SELECT doc_id, w AS token
-    FROM (SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w
-          FROM documents)
-    WHERE w <> ''
-"""
-
-# DuckDB fragment: distinct word-3-gram shingles, one row per (doc_id, shingle) —
-# mirrors operators.dedup.shingles(n=3).
-_SQL_SHINGLES3 = r"""
-    SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, greatest(len(ws) - 2, 0)),
-                      i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS shingle
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-              FROM documents))
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -62,40 +54,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sampled recall contract shares locality only (r10: 2.9 s -> 42.7 s scattered)
 @register(
     "dedup_minhash_lsh", shares=("minhash_trigram",),
-    oracle=rf"""
-    WITH sh AS ({_SQL_SHINGLES3}),
-    sig AS (
-        SELECT doc_id, s.seed,
-               MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
-        FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) s
-        GROUP BY doc_id, s.seed
-    ),
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               md5(CAST(seed // 2 AS VARCHAR) || '|' ||
-                   string_agg(minhash, '|' ORDER BY minhash)) AS band_key
-        FROM sig GROUP BY doc_id, band
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b USING (band_key)
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT p.id_a, p.id_b, COUNT(*) AS n_inter
-        FROM pairs p
-        JOIN sh sa ON sa.doc_id = p.id_a
-        JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-        GROUP BY p.id_a, p.id_b
-    )
-    SELECT i.id_a, i.id_b,
-           ROUND(i.n_inter * 1.0 / (na.n + nb.n - i.n_inter), 6) AS jaccard
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.id_a
-    JOIN sizes nb ON nb.doc_id = i.id_b
-    WHERE i.n_inter * 1.0 / (na.n + nb.n - i.n_inter) >= 0.5
-    """,
+    oracle=minhash_pairs_sql("documents", 3, None),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram shingles (the standard near-dup granularity: unigram
@@ -115,50 +74,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_clusters", shares=("minhash_trigram",),
-    oracle=rf"""
-    WITH RECURSIVE sh AS ({_SQL_SHINGLES3}),
-    sig AS (
-        SELECT doc_id, s.seed,
-               MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
-        FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) s
-        GROUP BY doc_id, s.seed
-    ),
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               md5(CAST(seed // 2 AS VARCHAR) || '|' ||
-                   string_agg(minhash, '|' ORDER BY minhash)) AS band_key
-        FROM sig GROUP BY doc_id, band
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b USING (band_key)
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT p.id_a, p.id_b, COUNT(*) AS n_inter
-        FROM pairs p
-        JOIN sh sa ON sa.doc_id = p.id_a
-        JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-        GROUP BY p.id_a, p.id_b
-    ),
-    good AS (
-        SELECT i.id_a, i.id_b
-        FROM inter i
-        JOIN sizes na ON na.doc_id = i.id_a
-        JOIN sizes nb ON nb.doc_id = i.id_b
-        WHERE i.n_inter * 1.0 / (na.n + nb.n - i.n_inter) >= 0.5
-    ),
-    edges AS (SELECT id_a AS src, id_b AS dst FROM good
-              UNION SELECT id_b, id_a FROM good),
-    reach AS (
-        SELECT doc_id AS a, doc_id AS b FROM documents
-        UNION
-        SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src
-    )
-    SELECT a AS doc_id, MIN(b) AS component
-    FROM reach GROUP BY a ORDER BY doc_id
-    """,
+    oracle=f"{clusters_sql} ORDER BY doc_id",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs -> clusters: iterative min-label propagation over the verified
@@ -213,53 +129,19 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.orderBy("doc_id")
 
 
-#: hex4(md5(doc_id)) as an integer — the split predicate shared with the
-#: sampling oracles (plans/datapipe._sql_hex4_to_int, inlined here).
-_SQL_DOCID_BUCKET = (
-    "((strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096"
-    " + (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256"
-    " + (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16"
-    " + (strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)) % 100"
-)
-
-
 @register(
     "decontaminate_test_split", shares=("minhash_trigram",),
-    oracle=rf"""
-    WITH sh AS ({_SQL_SHINGLES3}),
-    sig AS (
-        SELECT doc_id, s.seed,
-               MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
-        FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) s
-        GROUP BY doc_id, s.seed
-    ),
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               md5(CAST(seed // 2 AS VARCHAR) || '|' ||
-                   string_agg(minhash, '|' ORDER BY minhash)) AS band_key
-        FROM sig GROUP BY doc_id, band
-    ),
-    split AS (SELECT doc_id, {_SQL_DOCID_BUCKET} AS b FROM documents),
+    oracle=f"""
+    WITH sh AS ({shingles_sql(3)}),
+    {minhash_bands_sql()},
+    split AS (SELECT doc_id, {hash_bucket_sql("doc_id")} % 100 AS b FROM documents),
     tb AS (SELECT bands.doc_id AS test_id, band_key
            FROM bands JOIN split USING (doc_id) WHERE split.b < 10),
     rb AS (SELECT bands.doc_id AS train_id, band_key
            FROM bands JOIN split USING (doc_id) WHERE split.b >= 15),
     cand AS (SELECT DISTINCT tb.test_id, rb.train_id
              FROM tb JOIN rb USING (band_key)),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT c.test_id, c.train_id, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN sh sa ON sa.doc_id = c.test_id
-        JOIN sh sb ON sb.doc_id = c.train_id AND sb.shingle = sa.shingle
-        GROUP BY c.test_id, c.train_id
-    )
-    SELECT i.test_id, i.train_id,
-           ROUND(i.n_inter * 1.0 / (na.n + nb.n - i.n_inter), 6) AS jaccard
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.test_id
-    JOIN sizes nb ON nb.doc_id = i.train_id
-    WHERE i.n_inter * 1.0 / (na.n + nb.n - i.n_inter) >= 0.5
+    {verify_jaccard_sql("cand", 0.5, ids=("test_id", "train_id"))}
     """,
 )
 def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -296,42 +178,7 @@ def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_lsh_capped",
-    oracle=rf"""
-    WITH sh AS (SELECT DISTINCT doc_id, token AS shingle FROM ({_SQL_TOKENS})),
-    sig AS (
-        SELECT doc_id, s.seed,
-               MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
-        FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) s
-        GROUP BY doc_id, s.seed
-    ),
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               md5(CAST(seed // 2 AS VARCHAR) || '|' ||
-                   string_agg(minhash, '|' ORDER BY minhash)) AS band_key
-        FROM sig GROUP BY doc_id, band
-    ),
-    ok AS (SELECT band_key FROM bands GROUP BY band_key HAVING COUNT(*) <= 50),
-    capped AS (SELECT b.* FROM bands b JOIN ok USING (band_key)),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM capped a JOIN capped b USING (band_key)
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT p.id_a, p.id_b, COUNT(*) AS n_inter
-        FROM pairs p
-        JOIN sh sa ON sa.doc_id = p.id_a
-        JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-        GROUP BY p.id_a, p.id_b
-    )
-    SELECT i.id_a, i.id_b,
-           ROUND(i.n_inter * 1.0 / (na.n + nb.n - i.n_inter), 6) AS jaccard
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.id_a
-    JOIN sizes nb ON nb.doc_id = i.id_b
-    WHERE i.n_inter * 1.0 / (na.n + nb.n - i.n_inter) >= 0.5
-    """,
+    oracle=minhash_pairs_sql("documents", 1, 50),
 )
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production shape of MinHash-LSH: band buckets over 50 docs are
@@ -346,28 +193,7 @@ def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash",
-    oracle=f"""
-    WITH tf AS (
-        SELECT doc_id, token, COUNT(*) AS cnt FROM ({_SQL_TOKENS}) GROUP BY doc_id, token
-    ),
-    hv AS (
-        SELECT doc_id, cnt,
-               (strpos('0123456789abcdef', substr(md5(token), 1, 1)) - 1) * 4096
-             + (strpos('0123456789abcdef', substr(md5(token), 2, 1)) - 1) * 256
-             + (strpos('0123456789abcdef', substr(md5(token), 3, 1)) - 1) * 16
-             + (strpos('0123456789abcdef', substr(md5(token), 4, 1)) - 1) AS hv
-        FROM tf
-    ),
-    bits AS (
-        SELECT doc_id, b.bit, SUM(cnt * (2 * ((hv >> b.bit) & 1) - 1)) AS s
-        FROM hv CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS bit) b
-        GROUP BY doc_id, b.bit
-    )
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT)
-             AS simhash
-    FROM bits GROUP BY doc_id ORDER BY doc_id
-    """,
+    oracle=f"{simhash16_sql} ORDER BY doc_id",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -377,28 +203,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_simhash_hamming",
     oracle=f"""
-    WITH tf AS (
-        SELECT doc_id, token, COUNT(*) AS cnt FROM ({_SQL_TOKENS}) GROUP BY doc_id, token
-    ),
-    hv AS (
-        SELECT doc_id, cnt,
-               (strpos('0123456789abcdef', substr(md5(token), 1, 1)) - 1) * 4096
-             + (strpos('0123456789abcdef', substr(md5(token), 2, 1)) - 1) * 256
-             + (strpos('0123456789abcdef', substr(md5(token), 3, 1)) - 1) * 16
-             + (strpos('0123456789abcdef', substr(md5(token), 4, 1)) - 1) AS hv
-        FROM tf
-    ),
-    bits AS (
-        SELECT doc_id, b.bit, SUM(cnt * (2 * ((hv >> b.bit) & 1) - 1)) AS s
-        FROM hv CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS bit) b
-        GROUP BY doc_id, b.bit
-    ),
-    sig AS (
-        SELECT doc_id,
-               CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT)
-                 AS simhash
-        FROM bits GROUP BY doc_id
-    ),
+    WITH sig AS ({simhash16_sql}),
     bands AS (
         SELECT doc_id, simhash, b.band, (simhash >> (8 * b.band)) & 255 AS nib
         FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 1)) AS band) b
@@ -429,30 +234,17 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
 
 
-#: DuckDB md5-hex4 bucket of d.doc_id (mirrors sampling.hash_bucket) —
-#: the sub-block salt both engines must compute identically
-_HEX4_DOC = _sql_hex4_to_int("d.doc_id")
-
-
 @register(
     "dedup_ngram_jaccard",
-    oracle=rf"""
-    WITH words AS (
-        SELECT doc_id, lang, source,
-               list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-        FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i + 1] AS shingle
-        FROM words, UNNEST(generate_series(1, greatest(len(ws) - 1, 0))) AS g(i)
-    ),
+    oracle=f"""
+    WITH sh AS ({shingles_sql(2)}),
     bn AS (
         SELECT lang, source, COUNT(*) AS n FROM documents
         GROUP BY lang, source
     ),
     base AS (
         SELECT d.doc_id, d.lang, d.source,
-               ({_HEX4_DOC}) % ((bn.n + 99) // 100) AS sub
+               {hash_bucket_sql("d.doc_id")} % ((bn.n + 99) // 100) AS sub
         FROM documents d JOIN bn USING (lang, source)
     ),
     pairs AS (
@@ -461,20 +253,7 @@ _HEX4_DOC = _sql_hex4_to_int("d.doc_id")
         ON a.lang = b.lang AND a.source = b.source AND a.sub = b.sub
         WHERE a.doc_id < b.doc_id
     ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT p.id_a, p.id_b, COUNT(*) AS n_inter
-        FROM pairs p
-        JOIN sh sa ON sa.doc_id = p.id_a
-        JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-        GROUP BY p.id_a, p.id_b
-    )
-    SELECT i.id_a, i.id_b,
-           ROUND(i.n_inter * 1.0 / (na.n + nb.n - i.n_inter), 6) AS jaccard
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.id_a
-    JOIN sizes nb ON nb.doc_id = i.id_b
-    WHERE i.n_inter * 1.0 / (na.n + nb.n - i.n_inter) >= 0.05
+    {verify_jaccard_sql("pairs", 0.05)}
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -842,23 +621,19 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
-def _sql_stoplist(lang: str) -> str:
-    return ", ".join(f"'{w}'" for w in text.STOPWORDS[lang])
-
-
 @register(
     "text_langid_scores",
     oracle=f"""
-    WITH toks AS ({_SQL_TOKENS}),
+    WITH toks AS ({tokens_sql}),
     agg AS (
         SELECT doc_id, COUNT(*) AS n_tokens,
-               ROUND(SUM(CASE WHEN token IN ({_sql_stoplist('de')}) THEN 1 ELSE 0 END) * 1.0
+               ROUND(SUM(CASE WHEN token IN ({stoplist_sql('de')}) THEN 1 ELSE 0 END) * 1.0
                      / greatest(COUNT(*), 1), 4) AS score_de,
-               ROUND(SUM(CASE WHEN token IN ({_sql_stoplist('en')}) THEN 1 ELSE 0 END) * 1.0
+               ROUND(SUM(CASE WHEN token IN ({stoplist_sql('en')}) THEN 1 ELSE 0 END) * 1.0
                      / greatest(COUNT(*), 1), 4) AS score_en,
-               ROUND(SUM(CASE WHEN token IN ({_sql_stoplist('es')}) THEN 1 ELSE 0 END) * 1.0
+               ROUND(SUM(CASE WHEN token IN ({stoplist_sql('es')}) THEN 1 ELSE 0 END) * 1.0
                      / greatest(COUNT(*), 1), 4) AS score_es,
-               ROUND(SUM(CASE WHEN token IN ({_sql_stoplist('fr')}) THEN 1 ELSE 0 END) * 1.0
+               ROUND(SUM(CASE WHEN token IN ({stoplist_sql('fr')}) THEN 1 ELSE 0 END) * 1.0
                      / greatest(COUNT(*), 1), 4) AS score_fr
         FROM toks GROUP BY doc_id
     )
@@ -886,8 +661,8 @@ def text_langid_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, COUNT(*) AS n_words,
-               SUM(CASE WHEN token IN ({_sql_stoplist('en')}) THEN 1 ELSE 0 END) AS sw_hits
-        FROM ({_SQL_TOKENS}) GROUP BY doc_id
+               SUM(CASE WHEN token IN ({stoplist_sql('en')}) THEN 1 ELSE 0 END) AS sw_hits
+        FROM ({tokens_sql}) GROUP BY doc_id
     )
     SELECT d.doc_id,
            t.n_words,
@@ -913,10 +688,9 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_token_counts",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
-           len(list_filter(string_split_regex(lower(text), '\s+'), w -> w <> ''))
-             AS ws_tokens,
+           len({words_sql}) AS ws_tokens,
            len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
              AS re_tokens
     FROM documents ORDER BY doc_id
@@ -1046,7 +820,7 @@ def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_tfidf_top_terms",
     oracle=f"""
-    WITH toks AS ({_SQL_TOKENS}),
+    WITH toks AS ({tokens_sql}),
     tf AS (SELECT doc_id, token AS term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
     dfc AS (SELECT term, COUNT(*) AS df
             FROM (SELECT DISTINCT doc_id, token AS term FROM toks) GROUP BY term),
@@ -1072,16 +846,8 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "inverted_index_bigrams",
-    oracle=r"""
-    WITH wordsx AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-        FROM documents
-    ),
-    bg AS (
-        SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i + 1] AS term
-        FROM wordsx, UNNEST(generate_series(1, greatest(len(ws) - 1, 0))) AS g(i)
-    )
+    oracle=f"""
+    WITH bg AS (SELECT doc_id, shingle AS term FROM ({shingles_sql(2)}))
     SELECT term, CAST(COUNT(*) AS BIGINT) AS df_count,
            array_to_string(list_slice(list(doc_id ORDER BY doc_id), 1, 10), '|')
                AS postings
@@ -1116,7 +882,7 @@ _BM25_TERMS = ["spark", "merge", "window"]
 @register(
     "bm25_lexical_topk",
     oracle=f"""
-    WITH toks AS ({_SQL_TOKENS}),
+    WITH toks AS ({tokens_sql}),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM toks GROUP BY doc_id),
     q AS (SELECT doc_id, token AS term, COUNT(*) AS tf FROM toks
           WHERE token IN ('spark', 'merge', 'window') GROUP BY doc_id, term),
@@ -1158,50 +924,11 @@ def bm25_lexical_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bm25_topk(d, _BM25_TERMS, "doc_id", "text", k=20).orderBy("rk")
 
 
-#: DuckDB fragment: per-doc winnowing fingerprint SETS (doc_id, fps list)
-#: — shared by the summary entry and the overlap-pairs entry. Mirrors
-#: operators.text.winnow_fingerprints (k=8 char-grams, w=4 windows,
-#: base-128 Horner gram value scrambled by the odd golden-ratio
-#: multiplier mod 2^63 — the identical arithmetic the pandas UDF runs).
-_SQL_WINNOW_FPS = r"""norm AS (
-        SELECT doc_id,
-               trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-        FROM documents
-    ),
-    g AS (
-        SELECT doc_id,
-               CASE WHEN len(t) >= 8
-                    THEN list_transform(generate_series(1, len(t) - 7),
-                         i -> CAST((CAST(
-                                (((((((CAST(ord(substr(t, i, 1)) AS BIGINT) * 128
-                                     + ord(substr(t, i + 1, 1))) * 128
-                                     + ord(substr(t, i + 2, 1))) * 128
-                                     + ord(substr(t, i + 3, 1))) * 128
-                                     + ord(substr(t, i + 4, 1))) * 128
-                                     + ord(substr(t, i + 5, 1))) * 128
-                                     + ord(substr(t, i + 6, 1))) * 128
-                                     + ord(substr(t, i + 7, 1)))
-                              AS HUGEINT) * 11400714819323198485)
-                              % 9223372036854775808 AS BIGINT))
-                    ELSE [] END AS hs
-        FROM norm
-    ),
-    fp AS (
-        SELECT doc_id,
-               list_distinct(
-                   CASE WHEN len(hs) >= 4
-                        THEN list_transform(generate_series(1, len(hs) - 3),
-                                            j -> list_min(list_slice(hs, j, j + 3)))
-                        ELSE [] END) AS fps
-        FROM g
-    )"""
-
-
 # shares: the persisted fingerprint-array relation (4.1 s rebuilt vs ~1 s shared)
 @register(
     "text_winnow_fingerprints", shares=("winnow_fingerprints",),
     oracle=f"""
-    WITH {_SQL_WINNOW_FPS}
+    WITH {winnow_fps_sql}
     SELECT doc_id, CAST(len(fps) AS BIGINT) AS n_fp,
            list_min(fps) AS min_fp, list_max(fps) AS max_fp
     FROM fp ORDER BY doc_id
@@ -1223,7 +950,7 @@ def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "word_pair_pmi",
     oracle=f"""
-    WITH toks AS (SELECT DISTINCT doc_id, token FROM ({_SQL_TOKENS})),
+    WITH toks AS (SELECT DISTINCT doc_id, token FROM ({tokens_sql})),
     n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents),
     dfc AS (SELECT token, COUNT(*) AS df FROM toks GROUP BY token),
     co AS (
@@ -1316,12 +1043,9 @@ def word_pair_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # read the word_freq_shared memo
 @register(
     "bpe_char_pair_counts", shares=("bpe_words",),
-    oracle=r"""
+    oracle=f"""
     WITH w AS (
-        SELECT w FROM (
-            SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                          x -> x <> '')) AS w
-            FROM documents)
+        SELECT w FROM (SELECT unnest({words_sql}) AS w FROM documents)
         WHERE len(w) >= 2
     ),
     p AS (SELECT substr(w, i, 2) AS pair
@@ -1465,28 +1189,13 @@ def multimodal_frame_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "frame_offset")
 
 
-#: Distinct word-8-gram shingles per document (DuckDB side of
-#: dedup.shingles(n=8) — same lowercasing + whitespace split).
-_SQL_SHINGLES8 = r"""
-    SELECT DISTINCT doc_id, shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, greatest(len(ws) - 7, 0)),
-                      i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-                           ws[i+3] || ' ' || ws[i+4] || ' ' || ws[i+5] || ' ' ||
-                           ws[i+6] || ' ' || ws[i+7])) AS shingle
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-              FROM documents))
-"""
-
-
 # shares: the persisted 8-gram shingle relation (the bloom prefilter re-paid
 # the full tokenization at the registry tail, 4.6 s -> 13.2 s in-suite)
 @register(
     "decontaminate_ngram_exact", shares=("doc_8grams",),
     oracle=rf"""
-    WITH sh AS ({_SQL_SHINGLES8}),
-    split AS (SELECT doc_id, {_SQL_DOCID_BUCKET} AS b FROM documents),
+    WITH sh AS ({shingles_sql(8)}),
+    split AS (SELECT doc_id, {hash_bucket_sql("doc_id")} % 100 AS b FROM documents),
     te AS (SELECT sh.doc_id AS test_id, shingle
            FROM sh JOIN split USING (doc_id) WHERE split.b < 10),
     tr AS (SELECT sh.doc_id AS train_id, shingle
@@ -1632,48 +1341,8 @@ def similarity_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_keep_best_quality",
-    oracle=rf"""
-    WITH RECURSIVE sh AS ({_SQL_SHINGLES3}),
-    sig AS (
-        SELECT doc_id, s.seed,
-               MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
-        FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) s
-        GROUP BY doc_id, s.seed
-    ),
-    bands AS (
-        SELECT doc_id, seed // 2 AS band,
-               md5(CAST(seed // 2 AS VARCHAR) || '|' ||
-                   string_agg(minhash, '|' ORDER BY minhash)) AS band_key
-        FROM sig GROUP BY doc_id, band
-    ),
-    pairs AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a JOIN bands b USING (band_key)
-        WHERE a.doc_id < b.doc_id
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT p.id_a, p.id_b, COUNT(*) AS n_inter
-        FROM pairs p
-        JOIN sh sa ON sa.doc_id = p.id_a
-        JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-        GROUP BY p.id_a, p.id_b
-    ),
-    good AS (
-        SELECT i.id_a, i.id_b
-        FROM inter i
-        JOIN sizes na ON na.doc_id = i.id_a
-        JOIN sizes nb ON nb.doc_id = i.id_b
-        WHERE i.n_inter * 1.0 / (na.n + nb.n - i.n_inter) >= 0.5
-    ),
-    edges AS (SELECT id_a AS src, id_b AS dst FROM good
-              UNION SELECT id_b, id_a FROM good),
-    reach AS (
-        SELECT doc_id AS a, doc_id AS b FROM documents
-        UNION
-        SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src
-    ),
-    comp AS (SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a),
+    oracle=f"""
+    WITH comp AS ({clusters_sql}),
     ranked AS (
         SELECT c.component, c.doc_id, d.n_chars,
                ROW_NUMBER() OVER (PARTITION BY c.component
@@ -1729,13 +1398,8 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "vocab_oov_rate",
-    oracle=r"""
-    WITH uni AS (
-        SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                      w -> w <> '')) AS w
-        FROM documents
-    ),
+    oracle=f"""
+    WITH uni AS (SELECT doc_id, unnest({words_sql}) AS w FROM documents),
     cnt AS (SELECT w, COUNT(*) AS c FROM uni GROUP BY w),
     vocab AS (
         SELECT w FROM
@@ -1797,13 +1461,10 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "boilerplate_prefix_groups",
-    oracle=r"""
+    oracle=f"""
     WITH p AS (
         SELECT doc_id, source,
-               array_to_string(
-                   list_slice(
-                       list_filter(string_split_regex(lower(text), '\s+'),
-                                   w -> w <> ''), 1, 2), ' ') AS prefix
+               array_to_string(list_slice({words_sql}, 1, 2), ' ') AS prefix
         FROM documents
     )
     SELECT source, prefix,

@@ -1,0 +1,245 @@
+"""DuckDB mirrors of the shared operators, one builder per operator.
+
+Every registered query carries a DuckDB oracle; the oracles of queries
+that run the same operator (the word split, shingling, MinHash banding,
+Jaccard verify, the md5-hex integer, ...) build it here, so each
+primitive is spelled exactly once. This module registers no queries and
+imports no plan module that does, so any plan module can use it without
+depending on registration order.
+
+Fragments that take no parameter are plain strings. Builders that
+return CTE text (``minhash_bands_sql``, ``overlap_sql``,
+``verify_jaccard_sql``) expect the caller's ``WITH`` to define ``sh``,
+the distinct ``(doc_id, shingle)`` relation.
+"""
+
+from __future__ import annotations
+
+from ..operators import text
+from .registry import _SAMPLE_PCT, _SAMPLE_TARGET_DOCS
+
+#: lowercase whitespace split with empty tokens dropped — mirrors
+#: operators.text.words / operators.dedup._words
+words_sql = r"list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')"
+
+#: one row per (doc_id, token) occurrence
+tokens_sql = f"SELECT doc_id, unnest({words_sql}) AS token FROM documents"
+
+#: MinHash parameters every oracle uses (dedup.minhash_signatures /
+#: lsh_band_keys at num_hashes=8, rows_per_band=2)
+_NUM_HASHES = 8
+_ROWS_PER_BAND = 2
+
+
+def hex_sql(md5_hex: str, start: int | str = 1, width: int = 4) -> str:
+    """Integer value of ``width`` hex digits of the lowercase hex digest
+    ``md5_hex`` starting at 1-based ``start`` (an int, or a SQL
+    expression) — mirrors operators.sampling.hex_int. DuckDB 1.0 has no
+    hex->int cast; alphabet positions are portable and exact, and a NULL
+    digest stays NULL."""
+
+    def pos(i: int) -> str:
+        return str(start + i) if isinstance(start, int) else f"{start} + {i}"
+
+    terms = [
+        f"(strpos('0123456789abcdef', substring({md5_hex}, {pos(i)}, 1)) - 1)"
+        f" * {16 ** (width - 1 - i)}"
+        for i in range(width)
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
+def hash_bucket_sql(key_sql: str) -> str:
+    """First 4 hex digits of md5(key) as an integer — mirrors
+    operators.sampling.hash_bucket."""
+    return hex_sql(f"md5(CAST({key_sql} AS VARCHAR))")
+
+
+def sampled_docs_sql(cap_pct: int = _SAMPLE_PCT) -> str:
+    """CTE ``docs_sampled``: the deterministic doc sample the Spark side
+    takes with sampling.hash_bucket(doc_id) < registry._sample_pct(n,
+    cap_pct)."""
+    n = "(SELECT COUNT(*) FROM documents)"
+    pct = (
+        f"COALESCE(LEAST({cap_pct}, "
+        f"(100 * {_SAMPLE_TARGET_DOCS} + {n} - 1) // NULLIF({n}, 0)), "
+        f"{cap_pct})"
+    )
+    return (
+        "docs_sampled AS (SELECT * FROM documents "
+        f"WHERE {hash_bucket_sql('doc_id')} % 100 < {pct})"
+    )
+
+
+def stoplist_sql(lang: str) -> str:
+    """operators.text.STOPWORDS[lang] as a SQL IN-list body."""
+    return ", ".join(f"'{w}'" for w in text.STOPWORDS[lang])
+
+
+def shingles_sql(n: int, positional: bool = False, src: str = "documents") -> str:
+    """Word-``n``-gram shingles of ``src`` (doc_id, text): distinct
+    ``(doc_id, shingle)`` rows — mirrors dedup.shingles — or, with
+    ``positional``, one ``(doc_id, pos, shingle)`` row per occurrence at
+    its 1-based token position — mirrors dedup.positioned_shingles."""
+    gram = " || ' ' || ".join(
+        "ws[i]" if k == 0 else f"ws[i + {k}]" for k in range(n)
+    )
+    rows = f"""
+        SELECT doc_id, i AS pos, {gram} AS shingle
+        FROM (SELECT doc_id, {words_sql} AS ws FROM {src}) w,
+             UNNEST(generate_series(1, greatest(len(ws) - {n - 1}, 0))) AS g(i)"""
+    if positional:
+        return rows
+    return f"SELECT DISTINCT doc_id, shingle FROM ({rows})"
+
+
+def minhash_bands_sql(cap: int | None = None) -> str:
+    """CTEs ``sig`` (doc_id, seed, minhash) and ``bands`` (doc_id, band,
+    band_key) over ``sh`` — mirrors dedup.minhash_signatures +
+    lsh_band_keys. Lexicographic MIN over fixed-width md5 hex equals the
+    numeric min-hash. With ``cap``, band buckets holding more than
+    ``cap`` docs are dropped (the max_bucket_size skew control)."""
+    sig = f"""sig AS (
+        SELECT doc_id, s.seed,
+               MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
+        FROM sh CROSS JOIN
+             (SELECT unnest(generate_series(0, {_NUM_HASHES - 1})) AS seed) s
+        GROUP BY doc_id, s.seed
+    )"""
+    name = "bands" if cap is None else "all_bands"
+    bands = f"""{name} AS (
+        SELECT doc_id, seed // {_ROWS_PER_BAND} AS band,
+               md5(CAST(seed // {_ROWS_PER_BAND} AS VARCHAR) || '|' ||
+                   string_agg(minhash, '|' ORDER BY minhash)) AS band_key
+        FROM sig GROUP BY doc_id, band
+    )"""
+    if cap is None:
+        return f"{sig},\n    {bands}"
+    return f"""{sig},
+    {bands},
+    bands AS (
+        SELECT b.* FROM all_bands b JOIN (
+            SELECT band_key FROM all_bands GROUP BY band_key
+            HAVING COUNT(*) <= {cap}) USING (band_key)
+    )"""
+
+
+def overlap_sql(pairs: str, ids: tuple[str, str] = ("id_a", "id_b")) -> str:
+    """CTEs ``sizes`` (doc_id, n) and ``inter`` (<ids>, n_inter): shingle
+    set sizes over ``sh`` and the shingle-overlap count of each candidate
+    pair in relation ``pairs`` — mirrors the join half of
+    dedup.verify_jaccard."""
+    a, b = ids
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+    inter AS (
+        SELECT p.{a}, p.{b}, COUNT(*) AS n_inter
+        FROM {pairs} p
+        JOIN sh sa ON sa.doc_id = p.{a}
+        JOIN sh sb ON sb.doc_id = p.{b} AND sb.shingle = sa.shingle
+        GROUP BY p.{a}, p.{b}
+    )"""
+
+
+def verify_jaccard_sql(
+    pairs: str, threshold: float, ids: tuple[str, str] = ("id_a", "id_b")
+) -> str:
+    """``overlap_sql`` CTEs followed by the final SELECT of the pairs in
+    ``pairs`` whose exact shingle Jaccard is >= ``threshold``:
+    (<ids>, jaccard rounded to 6 dp) — mirrors dedup.verify_jaccard."""
+    a, b = ids
+    j = "i.n_inter * 1.0 / (na.n + nb.n - i.n_inter)"
+    return f"""{overlap_sql(pairs, ids)}
+    SELECT i.{a}, i.{b}, ROUND({j}, 6) AS jaccard
+    FROM inter i
+    JOIN sizes na ON na.doc_id = i.{a}
+    JOIN sizes nb ON nb.doc_id = i.{b}
+    WHERE {j} >= {threshold}"""
+
+
+def minhash_pairs_sql(src: str, shingle_n: int, cap: int | None) -> str:
+    """Jaccard-verified (>= 0.5) MinHash-LSH near-dup pairs (id_a, id_b,
+    jaccard) over ``src`` — mirrors dedup.minhash_near_duplicates at
+    num_hashes=8, rows_per_band=2 (registry.std_minhash_pairs is
+    ``("documents", 3, None)``, capped_minhash_pairs ``("documents", 1,
+    50)``)."""
+    return f"""
+    WITH sh AS ({shingles_sql(shingle_n, src=src)}),
+    {minhash_bands_sql(cap)},
+    pairs AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM bands a JOIN bands b USING (band_key)
+        WHERE a.doc_id < b.doc_id
+    ),
+    {verify_jaccard_sql("pairs", 0.5)}"""
+
+
+#: (doc_id, component) over the std MinHash pairs graph: every document
+#: labelled with the min doc_id it reaches — the recursive-CTE closure
+#: mirroring graph.connected_components over registry.std_minhash_pairs
+clusters_sql = f"""
+    WITH RECURSIVE good AS (
+        SELECT id_a, id_b FROM ({minhash_pairs_sql("documents", 3, None)})
+    ),
+    edges AS (SELECT id_a AS src, id_b AS dst FROM good
+              UNION SELECT id_b, id_a FROM good),
+    reach AS (
+        SELECT doc_id AS a, doc_id AS b FROM documents
+        UNION
+        SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src
+    )
+    SELECT a AS doc_id, MIN(b) AS component FROM reach GROUP BY a"""
+
+#: (doc_id, simhash) 16-bit SimHash over term-frequency-weighted tokens
+#: hashed by the first 4 hex digits of md5(token) — mirrors dedup.simhash16
+simhash16_sql = f"""
+    WITH tf AS (
+        SELECT doc_id, token, COUNT(*) AS cnt FROM ({tokens_sql}) GROUP BY doc_id, token
+    ),
+    hv AS (SELECT doc_id, cnt, {hex_sql("md5(token)")} AS hv FROM tf),
+    bits AS (
+        SELECT doc_id, b.bit, SUM(cnt * (2 * ((hv >> b.bit) & 1) - 1)) AS s
+        FROM hv CROSS JOIN (SELECT unnest(generate_series(0, 15)) AS bit) b
+        GROUP BY doc_id, b.bit
+    )
+    SELECT doc_id,
+           CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT)
+             AS simhash
+    FROM bits GROUP BY doc_id"""
+
+#: CTEs ``norm``, ``g``, ``fp``: per-doc winnowing fingerprint SETS
+#: (doc_id, fps list). Mirrors operators.text.winnow_fingerprints (k=8
+#: char-grams, w=4 windows, base-128 Horner gram value scrambled by the
+#: odd golden-ratio multiplier mod 2^63 — the identical arithmetic the
+#: pandas UDF runs).
+winnow_fps_sql = r"""norm AS (
+        SELECT doc_id,
+               trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
+        FROM documents
+    ),
+    g AS (
+        SELECT doc_id,
+               CASE WHEN len(t) >= 8
+                    THEN list_transform(generate_series(1, len(t) - 7),
+                         i -> CAST((CAST(
+                                (((((((CAST(ord(substr(t, i, 1)) AS BIGINT) * 128
+                                     + ord(substr(t, i + 1, 1))) * 128
+                                     + ord(substr(t, i + 2, 1))) * 128
+                                     + ord(substr(t, i + 3, 1))) * 128
+                                     + ord(substr(t, i + 4, 1))) * 128
+                                     + ord(substr(t, i + 5, 1))) * 128
+                                     + ord(substr(t, i + 6, 1))) * 128
+                                     + ord(substr(t, i + 7, 1)))
+                              AS HUGEINT) * 11400714819323198485)
+                              % 9223372036854775808 AS BIGINT))
+                    ELSE [] END AS hs
+        FROM norm
+    ),
+    fp AS (
+        SELECT doc_id,
+               list_distinct(
+                   CASE WHEN len(hs) >= 4
+                        THEN list_transform(generate_series(1, len(hs) - 3),
+                                            j -> list_min(list_slice(hs, j, j + 3)))
+                        ELSE [] END) AS fps
+        FROM g
+    )"""

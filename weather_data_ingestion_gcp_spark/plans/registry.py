@@ -201,20 +201,6 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     return spark.sql(sql)
 
 
-def _sql_hex4_to_int(key_sql: str) -> str:
-    """DuckDB expression: first 4 hex chars of md5(key) as an integer —
-    mirrors sampling.hash_bucket's F.conv(substring(md5(key),1,4),16,10).
-    Lives here (not datapipe) so any plan module can build oracles with
-    it without perturbing registration order."""
-    digit = (
-        "(strpos('0123456789abcdef', substring(md5(CAST({k} AS VARCHAR)), {i}, 1)) - 1)"
-    )
-    terms = [
-        f"{digit.format(k=key_sql, i=i)} * {16 ** (4 - i)}" for i in range(1, 5)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 #: deterministic sample rate CAP for the sampled accuracy contracts
 #: (percent of md5-hex4 doc_id buckets)
 _SAMPLE_PCT = 20
@@ -230,7 +216,7 @@ _SAMPLE_TARGET_DOCS = 10_000
 
 def _sample_pct(n_docs: int, cap_pct: int = _SAMPLE_PCT) -> int:
     """min(cap_pct, ceil(TARGET/n) in percent) — integer arithmetic
-    only, mirrored verbatim by the oracles' scalar subqueries.
+    only, mirrored verbatim by oracle_sql.sampled_docs_sql.
 
     ``cap_pct=20`` (default): the recall contract's shape — never more
     than a 20% sample even on tiny corpora (its PPJoin ground truth is
@@ -246,20 +232,3 @@ def _sample_pct(n_docs: int, cap_pct: int = _SAMPLE_PCT) -> int:
         cap_pct, (100 * _SAMPLE_TARGET_DOCS + n_docs - 1) // n_docs
     )
 
-
-def _sql_sampled_docs_cte(
-    cte_name: str = "docs_sampled", cap_pct: int = _SAMPLE_PCT
-) -> str:
-    """DuckDB CTE text selecting the same deterministic doc sample the
-    Spark side takes with sampling.hash_bucket(doc_id) <
-    _sample_pct(n, cap_pct)."""
-    n = "(SELECT COUNT(*) FROM documents)"
-    pct = (
-        f"COALESCE(LEAST({cap_pct}, "
-        f"(100 * {_SAMPLE_TARGET_DOCS} + {n} - 1) // NULLIF({n}, 0)), "
-        f"{cap_pct})"
-    )
-    return (
-        f"{cte_name} AS (SELECT * FROM documents "
-        f"WHERE {_sql_hex4_to_int('doc_id')} % 100 < {pct})"
-    )

@@ -19,75 +19,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
+from .oracle_sql import hash_bucket_sql, shingles_sql
 from .registry import load_table, register
 
-#: DuckDB mirror of dedup.positioned_shingles(n=8): 1-based token
-#: position + the same lowercase/whitespace tokenization as
-#: _SQL_SHINGLES8, kept positional via struct_pack instead of DISTINCT.
-_SQL_POS_SHINGLES8 = r"""
-    SELECT doc_id, u.p AS pos, u.g AS shingle FROM (
-        SELECT doc_id,
-               unnest(list_transform(generate_series(1, greatest(len(ws) - 7, 0)),
-                      i -> struct_pack(p := i,
-                           g := ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-                                ws[i+3] || ' ' || ws[i+4] || ' ' || ws[i+5] || ' ' ||
-                                ws[i+6] || ' ' || ws[i+7]))) AS u
-        FROM (SELECT doc_id,
-                     list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-              FROM documents))
-"""
-
-
-# shares: the persisted repeated-gram relation the scrub composes verbatim
-@register(
-    "dedup_repeated_spans", shares=("repeated_spans",),
-    oracle=rf"""
-    WITH pg AS ({_SQL_POS_SHINGLES8}),
-    kept AS (SELECT shingle FROM pg GROUP BY shingle
-             HAVING COUNT(*) BETWEEN 2 AND 20),
-    g AS (SELECT doc_id, pos, shingle FROM pg JOIN kept USING (shingle)),
-    m AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
-        FROM g a JOIN g b USING (shingle)
-        WHERE a.doc_id < b.doc_id
-    ),
-    isl AS (
-        SELECT *,
-               pa - ROW_NUMBER() OVER (
-                   PARTITION BY id_a, id_b, diag ORDER BY pa) AS grp
-        FROM m
-    )
-    SELECT id_a, id_b,
-           CAST(MIN(pa) AS BIGINT) AS start_a,
-           CAST(MIN(pb) AS BIGINT) AS start_b,
-           CAST(COUNT(*) + 7 AS BIGINT) AS token_len
-    FROM isl
-    GROUP BY id_a, id_b, diag, grp
-    HAVING COUNT(*) + 7 >= 12
-    ORDER BY id_a, id_b, start_a, start_b
-    """,
-)
-def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal repeated token spans (>= 12 tokens) between document
-    pairs: position-aligned word-8-gram matches coalesced per alignment
-    diagonal (operators/dedup.repeated_spans). The 20-occurrence
-    stop-gram cap bounds every gram's self-join fan-out at any corpus
-    size; islands are one window over the matched rows. Near-copies
-    surface as one long span, template reuse as several short ones —
-    the whole-doc entries (dedup_minhash_lsh, dedup_ngram_jaccard)
-    can't distinguish those two shapes."""
-    d = load_table(spark, sf_dir, "documents")
-    g = dedup.positioned_shingles(d, "doc_id", "text", n=8)
-    out = dedup.repeated_spans(g, n=8, min_tokens=12, max_gram_occ=20)
-    return out.orderBy("id_a", "id_b", "start_a", "start_b")
-
-
-#: The spans CTE block shared verbatim by the finder oracle above and
-#: the scrub oracle below (finder/apply pairs mirror their oracles the
-#: same way dsir_importance_weights / dsir_select_topp do).
-_SQL_SPANS = rf"""
-    pg AS ({_SQL_POS_SHINGLES8}),
+#: The spans CTE block shared by the finder and scrub oracles
+#: (finder/apply pairs mirror their oracles the same way
+#: dsir_importance_weights / dsir_select_topp do).
+_SQL_SPANS = f"""
+    pg AS ({shingles_sql(8, positional=True)}),
     kept AS (SELECT shingle FROM pg GROUP BY shingle
              HAVING COUNT(*) BETWEEN 2 AND 20),
     g AS (SELECT doc_id, pos, shingle FROM pg JOIN kept USING (shingle)),
@@ -115,6 +54,29 @@ _SQL_SPANS = rf"""
 """
 
 
+# shares: the persisted repeated-gram relation the scrub composes verbatim
+@register(
+    "dedup_repeated_spans", shares=("repeated_spans",),
+    oracle=f"""
+    WITH {_SQL_SPANS}
+    SELECT * FROM spans ORDER BY id_a, id_b, start_a, start_b
+    """,
+)
+def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Maximal repeated token spans (>= 12 tokens) between document
+    pairs: position-aligned word-8-gram matches coalesced per alignment
+    diagonal (operators/dedup.repeated_spans). The 20-occurrence
+    stop-gram cap bounds every gram's self-join fan-out at any corpus
+    size; islands are one window over the matched rows. Near-copies
+    surface as one long span, template reuse as several short ones —
+    the whole-doc entries (dedup_minhash_lsh, dedup_ngram_jaccard)
+    can't distinguish those two shapes."""
+    d = load_table(spark, sf_dir, "documents")
+    g = dedup.positioned_shingles(d, "doc_id", "text", n=8)
+    out = dedup.repeated_spans(g, n=8, min_tokens=12, max_gram_occ=20)
+    return out.orderBy("id_a", "id_b", "start_a", "start_b")
+
+
 @register(
     "dedup_span_scrub", shares=("repeated_spans",),
     oracle=rf"""
@@ -124,13 +86,7 @@ _SQL_SPANS = rf"""
         FROM spans
     ),
     toks AS (
-        SELECT doc_id, u.p AS p, u.w AS w FROM (
-            SELECT doc_id,
-                   unnest(list_transform(generate_series(1, len(ws)),
-                          i -> struct_pack(p := i, w := ws[i]))) AS u
-            FROM (SELECT doc_id,
-                         list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-                  FROM documents))
+        SELECT doc_id, pos AS p, shingle AS w FROM ({shingles_sql(1, positional=True)})
     ),
     keep AS (
         SELECT t.* FROM toks t
@@ -208,20 +164,11 @@ def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_docid_bucket() -> str:
-    """The doc-id hash-bucket split predicate shared with the other
-    decontamination oracles (llm_ops._SQL_DOCID_BUCKET) — imported
-    lazily to keep this module import-order independent."""
-    from .llm_ops import _SQL_DOCID_BUCKET
-
-    return _SQL_DOCID_BUCKET
-
-
 @register(
     "decontaminate_span_provenance",
     oracle=rf"""
-    WITH pg AS ({_SQL_POS_SHINGLES8}),
-    split AS (SELECT doc_id, {_sql_docid_bucket()} AS b FROM documents),
+    WITH pg AS ({shingles_sql(8, positional=True)}),
+    split AS (SELECT doc_id, {hash_bucket_sql("doc_id")} % 100 AS b FROM documents),
     te AS (SELECT pg.doc_id AS probe_id, pos AS pa, shingle
            FROM pg JOIN split USING (doc_id) WHERE split.b < 10),
     tr0 AS (SELECT pg.doc_id AS corpus_id, pos AS pb, shingle

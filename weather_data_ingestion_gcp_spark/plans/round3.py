@@ -26,15 +26,14 @@ from pyspark.sql.window import Window
 from .. import store
 from ..operators import sketch, text
 from .core import _cents
+from .oracle_sql import (
+    clusters_sql,
+    hash_bucket_sql,
+    shingles_sql,
+    winnow_fps_sql,
+    words_sql,
+)
 from .registry import load_table, register, std_minhash_pairs
-
-#: DuckDB fragment: (doc_id, source, ws) with the shared word-split rule.
-_SQL_WS = r"""
-    SELECT doc_id, source,
-           list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '') AS ws
-    FROM documents
-"""
-
 
 def _docs_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
@@ -55,7 +54,8 @@ _REP_THRESHOLD_PPM = 60000  # top bigram covering >6% of a doc => repetitive
     "gopher_repetition_flags",
     oracle=f"""
     WITH sized AS (
-        SELECT doc_id, ws, len(ws) AS n_words FROM ({_SQL_WS})
+        SELECT doc_id, ws, len(ws) AS n_words
+        FROM (SELECT doc_id, {words_sql} AS ws FROM documents)
     ),
     uni AS (
         SELECT doc_id, MAX(c) AS top_uni_n FROM (
@@ -67,10 +67,8 @@ _REP_THRESHOLD_PPM = 60000  # top bigram covering >6% of a doc => repetitive
     bi AS (
         SELECT doc_id, MAX(c) AS top_bi_n FROM (
             SELECT doc_id, COUNT(*) AS c
-            FROM (SELECT doc_id,
-                         unnest(list_transform(generate_series(1, len(ws) - 1),
-                                i -> ws[i] || ' ' || ws[i + 1])) AS bg
-                  FROM sized WHERE len(ws) >= 2)
+            FROM (SELECT doc_id, shingle AS bg
+                  FROM ({shingles_sql(2, positional=True)}))
             GROUP BY doc_id, bg)
         GROUP BY doc_id
     )
@@ -146,10 +144,10 @@ def gopher_repetition_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "zipf_slope_by_source",
-    oracle=r"""
+    oracle=f"""
     WITH wc AS (
         SELECT source, w, COUNT(*) AS c
-        FROM (SELECT source, unnest(ws) AS w FROM (""" + _SQL_WS + r"""))
+        FROM (SELECT source, unnest({words_sql}) AS w FROM documents)
         GROUP BY source, w
     ),
     ranked AS (
@@ -234,7 +232,7 @@ _SQL_TOPVOCAB = rf"""
         SELECT source, w,
                ROW_NUMBER() OVER (PARTITION BY source ORDER BY c DESC, w) AS rnk
         FROM (SELECT source, w, COUNT(*) AS c
-              FROM (SELECT source, unnest(ws) AS w FROM ({_SQL_WS}))
+              FROM (SELECT source, unnest({words_sql}) AS w FROM documents)
               GROUP BY source, w))
     WHERE rnk <= {_VOCAB_K}
 """
@@ -464,7 +462,7 @@ def event_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_unigram_kl",
     oracle=f"""
-    WITH wx AS (SELECT source, unnest(ws) AS w FROM ({_SQL_WS})),
+    WITH wx AS (SELECT source, unnest({words_sql}) AS w FROM documents),
     corpus AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM wx GROUP BY w),
     tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
                    CAST(COUNT(DISTINCT w) AS BIGINT) AS v FROM wx),
@@ -535,7 +533,7 @@ _MG_K = 30
 @register(
     "heavy_hitters_mg",
     oracle=f"""
-    WITH wx AS (SELECT w FROM (SELECT unnest(ws) AS w FROM ({_SQL_WS})) ),
+    WITH wx AS (SELECT unnest({words_sql}) AS w FROM documents),
     tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM wx)
     SELECT w, CAST(COUNT(*) AS BIGINT) AS exact_count, n_total
     FROM wx CROSS JOIN tot
@@ -566,8 +564,7 @@ def _bpe_oracle(n_rounds: int) -> str:
         rf"""w0 AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n,
                ' ' || regexp_replace(w, '(.)', '\1 ', 'g') AS seq
-        FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                        x -> x <> '')) AS w
+        FROM (SELECT unnest({words_sql}) AS w
               FROM documents)
         GROUP BY w
     )"""
@@ -659,7 +656,6 @@ def _semantic_dedup_oracle(
     tau: float, n_bits: int = 16, band_bits: int = 4
 ) -> str:
     from ..operators.similarity import hyperplanes
-    from .registry import _sql_hex4_to_int
 
     W = hyperplanes(n_bits=n_bits, dim=64)
 
@@ -684,7 +680,7 @@ def _semantic_dedup_oracle(
     bc AS (SELECT band, bsig, COUNT(*) AS bn FROM cb GROUP BY band, bsig),
     cbs AS (
         SELECT cb.vec_id, cb.band, cb.bsig,
-               {_sql_hex4_to_int("cb.vec_id")}
+               {hash_bucket_sql("cb.vec_id")}
                  % ((bc.bn + {_SEM_CAP - 1}) // {_SEM_CAP}) AS sub
         FROM cb JOIN bc ON bc.band = cb.band AND bc.bsig = cb.bsig
     ),
@@ -747,10 +743,8 @@ _WINNOW_MIN_SHARED = 3
 
 
 def _winnow_pairs_oracle() -> str:
-    from .llm_ops import _SQL_WINNOW_FPS
-
     return f"""
-    WITH {_SQL_WINNOW_FPS},
+    WITH {winnow_fps_sql},
     fps AS (SELECT doc_id, unnest(fps) AS fp FROM fp),
     rare AS (
         SELECT fp FROM fps GROUP BY fp HAVING COUNT(*) <= {_WINNOW_MAX_DF}
@@ -870,10 +864,9 @@ def asof_join_nearest_views(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "doc_unigram_logprob",
-    oracle=r"""
+    oracle=f"""
     WITH wx AS (
-        SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                          w -> w <> '')) AS w
+        SELECT doc_id, unnest({words_sql}) AS w
         FROM documents
     ),
     corpus AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c FROM wx GROUP BY w),
@@ -1171,17 +1164,14 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # into test through near-dups (the contamination the decontamination
 # entries then have to scrub). Assigning by the cluster representative's
 # hash keeps every near-dup family on one side by construction. The
-# oracle composes the dedup_clusters closure verbatim.
+# oracle composes the same closure as dedup_clusters (oracle_sql.clusters_sql).
 # ---------------------------------------------------------------------------
 def _leakage_safe_oracle() -> str:
-    from .datapipe import _sql_hex4_to_int
-    from .registry import ORACLE
-
-    bucket = _sql_hex4_to_int("c.component")
+    bucket = hash_bucket_sql("c.component")
     return f"""
     SELECT c.doc_id, c.component,
            CASE WHEN {bucket} % 100 < 80 THEN 'train' ELSE 'test' END AS split
-    FROM ({ORACLE["dedup_clusters"]}) c
+    FROM ({clusters_sql}) c
     ORDER BY c.doc_id
     """
 

@@ -23,12 +23,21 @@ from pyspark.sql.window import Window
 
 from .. import store
 from ..operators import temporal, text
+from ..operators.sampling import hex_int
 from ..operators.similarity import _norm, dot_pandas
-from .core import _KMV_K, _KMV_SPACE, _sql_hex12_to_bigint
-from .registry import ORACLE, load_table, register, std_minhash_pairs
-
-_SQL_WORDS = r"list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')"
-
+from .core import _KMV_K, _KMV_SPACE
+from .oracle_sql import (
+    clusters_sql,
+    hash_bucket_sql,
+    hex_sql,
+    minhash_bands_sql,
+    minhash_pairs_sql,
+    overlap_sql,
+    sampled_docs_sql,
+    shingles_sql,
+    words_sql,
+)
+from .registry import load_table, register, std_minhash_pairs
 
 # ---------------------------------------------------------------------------
 # Passage-level exact dedup (C4 / Lee et al. '22 granularity): documents are
@@ -46,7 +55,7 @@ _PASSAGE_W = 20
     "passage_exact_dedup",
     oracle=f"""
     WITH ws AS (
-        SELECT doc_id, source, {_SQL_WORDS} AS ws FROM documents
+        SELECT doc_id, source, {words_sql} AS ws FROM documents
     ),
     idx AS (
         SELECT source, ws,
@@ -115,7 +124,7 @@ def passage_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH t AS (
         SELECT lang,
-               len({_SQL_WORDS}) AS ws_tokens,
+               len({words_sql}) AS ws_tokens,
                len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
                  AS re_tokens,
                n_chars
@@ -285,7 +294,7 @@ _SHARD_TOKENS = 400
     "shard_pack_by_tokens",
     oracle=rf"""
     WITH t AS (
-        SELECT doc_id, source, len({_SQL_WORDS}) AS n_tokens FROM documents
+        SELECT doc_id, source, len({words_sql}) AS n_tokens FROM documents
     ),
     packed AS (
         SELECT source, doc_id, n_tokens,
@@ -472,7 +481,7 @@ def _sql_kmv_est(tag: str) -> str:
         SELECT '{tag}' AS s, CASE WHEN COUNT(*) < {_KMV_K}
                     THEN CAST(COUNT(*) AS DOUBLE)
                     ELSE ({_KMV_K} - 1.0)
-                         / (CAST({_sql_hex12_to_bigint('MAX(hh)')} AS DOUBLE)
+                         / (CAST({hex_sql('MAX(hh)', width=12)} AS DOUBLE)
                             / {_KMV_SPACE!r}) END AS est
         FROM (SELECT DISTINCT md5(CAST(user_id AS VARCHAR)) AS hh
               FROM events WHERE event_type {_tag_pred(tag)}
@@ -522,7 +531,7 @@ def kmv_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         sk = h.orderBy("hh").limit(_KMV_K).agg(
             F.max("hh").alias("kth"), F.count(F.lit(1)).alias("m")
         )
-        kth_val = F.conv(F.substring("kth", 1, 12), 16, 10).cast("bigint")
+        kth_val = hex_int(F.col("kth"), width=12)
         return sk.select(
             F.when(F.col("m") < _KMV_K, F.col("m").cast("double"))
             .otherwise(
@@ -577,13 +586,11 @@ def kmv_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PR_ITERS = 3
 
 
-def _pagerank_oracle(iters: int, pairs: str | None = None) -> str:
+def _pagerank_oracle(iters: int, pairs: str) -> str:
     """PageRank oracle over ANY verified-pairs SQL: the edge CTE composes
     the pairs query verbatim, so the capped variant differs from the
     uncapped one ONLY in which relation it composes — exactly like the
     Spark side."""
-    if pairs is None:
-        pairs = ORACLE["dedup_minhash_lsh"]
     parts = [
         f"e AS (SELECT id_a, id_b FROM ({pairs}))",
         """sym AS (
@@ -686,7 +693,7 @@ def _pagerank_frame(d: DataFrame, pairs: DataFrame) -> DataFrame:
 
 @register(
     "graph_pagerank_neardup", shares=("minhash_trigram",),
-    oracle=_pagerank_oracle(_PR_ITERS),
+    oracle=_pagerank_oracle(_PR_ITERS, minhash_pairs_sql("documents", 3, None)),
 )
 def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-round power iteration on the near-dup graph, integer nano-unit
@@ -700,9 +707,7 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pagerank_frame(d, std_minhash_pairs(spark, sf_dir))
 
 
-def _triangle_oracle(pairs: str | None = None) -> str:
-    if pairs is None:
-        pairs = ORACLE["dedup_minhash_lsh"]
+def _triangle_oracle(pairs: str) -> str:
     return f"""
     WITH e AS (SELECT id_a, id_b FROM ({pairs})),
     tri AS (
@@ -722,7 +727,10 @@ def _triangle_oracle(pairs: str | None = None) -> str:
     """
 
 
-@register("graph_triangle_counts", shares=("minhash_trigram",), oracle=_triangle_oracle())
+@register(
+    "graph_triangle_counts", shares=("minhash_trigram",),
+    oracle=_triangle_oracle(minhash_pairs_sql("documents", 3, None)),
+)
 def graph_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts on the near-dup graph: canonical a<b<c
     enumeration (edges stored low<high, so the wedge join e1(a,b)⋈e2(b,c)
@@ -786,7 +794,7 @@ def _capped_pairs(spark: SparkSession, sf_dir: str):
 
 @register(
     "graph_pagerank_neardup_capped",
-    oracle=_pagerank_oracle(_PR_ITERS, ORACLE["dedup_minhash_lsh_capped"]),
+    oracle=_pagerank_oracle(_PR_ITERS, minhash_pairs_sql("documents", 1, 50)),
 )
 def graph_pagerank_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the CAPPED near-dup pairs — the scale-safe
@@ -798,7 +806,7 @@ def graph_pagerank_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "graph_triangle_counts_capped",
-    oracle=_triangle_oracle(ORACLE["dedup_minhash_lsh_capped"]),
+    oracle=_triangle_oracle(minhash_pairs_sql("documents", 1, 50)),
 )
 def graph_triangle_counts_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the CAPPED near-dup pairs — same
@@ -910,12 +918,10 @@ def winsorized_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PPJ_T = 0.5  # Jaccard threshold; prefix length = sz - ceil(t*sz) + 1
 
 
-def _ppjoin_oracle() -> str:
-    from .llm_ops import _SQL_SHINGLES3
-
+def _ppjoin_oracle(src: str = "documents") -> str:
     return rf"""
     WITH tok AS (
-        SELECT doc_id, shingle AS t FROM ({_SQL_SHINGLES3})
+        SELECT doc_id, shingle AS t FROM ({shingles_sql(3, src=src)})
     ),
     df AS (SELECT t, COUNT(*) AS df FROM tok GROUP BY t),
     ranked AS (
@@ -1573,7 +1579,7 @@ def window_value_functions_breadth(spark: SparkSession, sf_dir: str) -> DataFram
     "passage_dedup_rewrite",
     oracle=f"""
     WITH ws AS (
-        SELECT doc_id, {_SQL_WORDS} AS ws FROM documents
+        SELECT doc_id, {words_sql} AS ws FROM documents
     ),
     idx AS (
         SELECT doc_id, ws,
@@ -1659,11 +1665,9 @@ def passage_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # contract pattern (exact + pinned verdict) is how this repo hash-checks
 # every approximate operator.
 # ---------------------------------------------------------------------------
-def _lsh_recall_oracle() -> str:
-    from .llm_ops import _SQL_SHINGLES3  # noqa: F401  (via composed oracles)
-
-    exact = _ppjoin_oracle()
-    lsh = ORACLE["dedup_minhash_lsh"]
+def _lsh_recall_oracle(src: str = "documents") -> str:
+    exact = _ppjoin_oracle(src)
+    lsh = minhash_pairs_sql(src, 3, None)
     return f"""
     WITH exact_pairs AS (SELECT id_a, id_b FROM ({exact})),
     lsh_pairs AS (SELECT id_a, id_b FROM ({lsh})),
@@ -1724,11 +1728,10 @@ def lsh_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _bpe_apply_oracle(rounds: int, k: int = 20) -> str:
     parts = [
-        r"""w0 AS (
+        rf"""w0 AS (
         SELECT w, CAST(COUNT(*) AS BIGINT) AS n,
                ' ' || regexp_replace(w, '(.)', '\1 ', 'g') AS seq
-        FROM (SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                        x -> x <> '')) AS w
+        FROM (SELECT unnest({words_sql}) AS w
               FROM documents)
         GROUP BY w
     )"""
@@ -1805,16 +1808,12 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "doc_bigram_interp_logprob",
-    oracle=r"""
-    WITH ws AS (
-        SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'),
-                                   w -> w <> '') AS ws
-        FROM documents
-    ),
+    oracle=f"""
+    WITH ws AS (SELECT doc_id, {words_sql} AS ws FROM documents),
     bg AS (
         SELECT doc_id,
                unnest(list_transform(generate_series(1, len(ws) - 1),
-                      i -> {'a': ws[i], 'b': ws[i + 1]})) AS p
+                      i -> {{'a': ws[i], 'b': ws[i + 1]}})) AS p
         FROM ws WHERE len(ws) >= 2
     ),
     wx AS (SELECT doc_id, unnest(ws) AS w FROM ws),
@@ -1893,12 +1892,11 @@ def doc_bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dataset_card_summary",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
         SELECT doc_id, lang, source,
                md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-               len(list_filter(string_split_regex(lower(text), '\s+'),
-                               w -> w <> '')) AS n_words
+               len({words_sql}) AS n_words
         FROM documents
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2036,19 +2034,10 @@ def zorder_layout_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 # side first), FLOOR'd ppm.
 # ---------------------------------------------------------------------------
 def _containment_oracle() -> str:
-    from .llm_ops import _SQL_SHINGLES3
-
     return f"""
-    WITH sh AS ({_SQL_SHINGLES3}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    cand AS (SELECT id_a, id_b FROM ({ORACLE["dedup_minhash_lsh"]})),
-    inter AS (
-        SELECT c.id_a, c.id_b, COUNT(*) AS n_inter
-        FROM cand c
-        JOIN sh sa ON sa.doc_id = c.id_a
-        JOIN sh sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-        GROUP BY c.id_a, c.id_b
-    )
+    WITH sh AS ({shingles_sql(3)}),
+    cand AS (SELECT id_a, id_b FROM ({minhash_pairs_sql("documents", 3, None)})),
+    {overlap_sql("cand")}
     SELECT i.id_a, i.id_b,
            CAST(FLOOR(i.n_inter * 1000000.0
                       / LEAST(na.n, nb.n)) AS BIGINT) AS containment_ppm,
@@ -2352,9 +2341,7 @@ def array_hof_breadth_2(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text never moves after tokenization.
 # ---------------------------------------------------------------------------
 def _pretrain_build_oracle() -> str:
-    from .datapipe import _sql_hex4_to_int
-
-    bucket = _sql_hex4_to_int("k.component")
+    bucket = hash_bucket_sql("k.component")
     return rf"""
     SELECT split, source, shard,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2376,11 +2363,11 @@ def _pretrain_build_oracle() -> str:
                                       ORDER BY g.n_words DESC, g.doc_id) AS rn
             FROM (
                 SELECT doc_id, source,
-                       len({_SQL_WORDS}) AS n_words
+                       len({words_sql}) AS n_words
                 FROM documents
-                WHERE len({_SQL_WORDS}) >= 10
+                WHERE len({words_sql}) >= 10
             ) g
-            JOIN ({ORACLE["dedup_clusters"]}) c ON c.doc_id = g.doc_id
+            JOIN ({clusters_sql}) c ON c.doc_id = g.doc_id
         ) k
         WHERE k.rn = 1
     )
@@ -2485,7 +2472,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_source_syndication",
     oracle=f"""
-    WITH pairs AS (SELECT id_a, id_b FROM ({ORACLE["dedup_minhash_lsh"]})),
+    WITH pairs AS (SELECT id_a, id_b FROM ({minhash_pairs_sql("documents", 3, None)})),
     m AS (
         SELECT LEAST(da.source, db.source) AS source_lo,
                GREATEST(da.source, db.source) AS source_hi
@@ -2547,25 +2534,14 @@ def dedup_source_syndication(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the complete measurement.
 # ---------------------------------------------------------------------------
 def _minhash_estimate_oracle() -> str:
-    import re
-
-    from .llm_ops import _SQL_SHINGLES3
-    from .registry import _sql_sampled_docs_cte
-
-    shingles_sampled = re.sub(r"\bdocuments\b", "docs_sampled", _SQL_SHINGLES3)
-    pairs_sampled = re.sub(
-        r"\bdocuments\b", "docs_sampled", ORACLE["dedup_minhash_lsh"]
-    )
     return f"""
-    WITH {_sql_sampled_docs_cte(cap_pct=100)},
-    sh AS ({shingles_sampled}),
-    sig AS (
-        SELECT doc_id, s.seed,
-               MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
-        FROM sh CROSS JOIN (SELECT unnest(generate_series(0, 7)) AS seed) s
-        GROUP BY doc_id, s.seed
+    WITH {sampled_docs_sql(cap_pct=100)},
+    sh AS ({shingles_sql(3, src="docs_sampled")}),
+    {minhash_bands_sql()},
+    pairs AS (
+        SELECT id_a, id_b, jaccard
+        FROM ({minhash_pairs_sql("docs_sampled", 3, None)})
     ),
-    pairs AS (SELECT id_a, id_b, jaccard FROM ({pairs_sampled})),
     agree AS (
         SELECT p.id_a, p.id_b, p.jaccard,
                SUM(CASE WHEN a.minhash = b.minhash THEN 1 ELSE 0 END) AS n_agree
@@ -2666,15 +2642,12 @@ def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sized and joins by word (broadcast at test SF, shuffle join at scale).
 # ---------------------------------------------------------------------------
 def _split_lm_oracle() -> str:
-    from .datapipe import _sql_hex4_to_int
-
-    bucket = _sql_hex4_to_int("doc_id")
+    bucket = hash_bucket_sql("doc_id")
     return rf"""
     WITH wx AS (
         SELECT doc_id,
                CASE WHEN {bucket} % 100 < 80 THEN 'train' ELSE 'test' END AS split,
-               unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  w -> w <> '')) AS w
+               unnest({words_sql}) AS w
         FROM documents
     ),
     model AS (

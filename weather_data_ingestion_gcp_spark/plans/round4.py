@@ -21,15 +21,15 @@ from .. import store
 from ..operators import dedup, sketch
 from ..operators.sampling import hash_bucket
 from ..operators.text import words as text_words
-from .llm_ops import _SQL_DOCID_BUCKET, _SQL_SHINGLES8
+from .oracle_sql import clusters_sql, hash_bucket_sql, shingles_sql, words_sql
 from .registry import load_table, register, std_minhash_pairs
 
 
 @register(
     "decontaminate_bloom_prefilter", shares=("doc_8grams",),
     oracle=rf"""
-    WITH sh AS ({_SQL_SHINGLES8}),
-    split AS (SELECT doc_id, {_SQL_DOCID_BUCKET} AS b FROM documents),
+    WITH sh AS ({shingles_sql(8)}),
+    split AS (SELECT doc_id, {hash_bucket_sql("doc_id")} % 100 AS b FROM documents),
     te AS (SELECT sh.doc_id AS test_id, shingle
            FROM sh JOIN split USING (doc_id) WHERE split.b < 10),
     tr AS (SELECT sh.doc_id AS train_id, shingle
@@ -195,11 +195,10 @@ def dataset_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "packing_padding_efficiency", shares=("doc_chunks",),
-    oracle=r"""
+    oracle=f"""
     WITH docs AS (
         SELECT doc_id,
-               CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-                                    w -> w <> '')) AS BIGINT) AS n_words
+               CAST(len({words_sql}) AS BIGINT) AS n_words
         FROM documents
     ),
     seq AS (
@@ -289,14 +288,6 @@ def packing_padding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cluster_assign_oracle() -> str:
-    from .registry import ORACLE
-
-    # the dedup_clusters oracle (recursive-CTE transitive closure) as a
-    # subquery — same hyperparameters, so the assignment is shared
-    return ORACLE["dedup_clusters"]
-
-
 @register(
     "neardup_cluster_stats", shares=("minhash_trigram",),
     oracle=f"""
@@ -305,7 +296,7 @@ def _cluster_assign_oracle() -> str:
            CAST(SUM(cluster_size) AS BIGINT) AS n_docs
     FROM (
         SELECT component, CAST(COUNT(*) AS BIGINT) AS cluster_size
-        FROM ({_cluster_assign_oracle()})
+        FROM ({clusters_sql})
         GROUP BY component
     )
     GROUP BY cluster_size ORDER BY cluster_size
@@ -342,7 +333,7 @@ def neardup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_shrinkage_by_source", shares=("minhash_trigram",),
     oracle=f"""
-    WITH assign AS ({_cluster_assign_oracle()})
+    WITH assign AS ({clusters_sql})
     SELECT d.source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(COUNT(DISTINCT md5(d.text)) AS BIGINT) AS n_exact_unique,

@@ -14,15 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.sampling import hex_int
 from ..operators.text import words as text_words
-from .datapipe import _sql_hex4_to_int
+from .oracle_sql import hash_bucket_sql, words_sql
 from .registry import ORACLE, load_table, register
 from .round4 import dataset_mix_temperature, join_skew_profile
-
-#: DuckDB-side tokenizer — the single canonical fragment (mirrors
-#: operators.text.words); imported, not restated, so a tokenizer change
-#: cannot silently diverge between consumers
-from .round3b import _SQL_WORDS as _SQL_WORDS_R5  # noqa: E402
 
 
 # ---------------------------------------------------------------------------
@@ -59,7 +55,7 @@ def _mix_apply_oracle() -> str:
     kept AS (
         SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_kept
         FROM documents d JOIN rates r ON d.source = r.source
-        WHERE {_sql_hex4_to_int('d.doc_id')} * 1000000 < r.keep_ppm * 65536
+        WHERE {hash_bucket_sql('d.doc_id')} * 1000000 < r.keep_ppm * 65536
         GROUP BY d.source
     ),
     tot AS (SELECT CAST(SUM(n_kept) AS BIGINT) AS tk FROM kept)
@@ -118,9 +114,7 @@ def mix_apply_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = load_table(spark, sf_dir, "documents")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("long")
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string")))
     kept = (
         d.join(F.broadcast(rates.select("source", "keep_ppm")), "source")
         .where(bucket * F.lit(1000000) < F.col("keep_ppm") * F.lit(65536))
@@ -230,16 +224,11 @@ def skew_adaptive_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # integer differences (IEEE-deterministic given identical operands).
 # ---------------------------------------------------------------------------
 
-_SQL_WORDCOUNT = (
-    "len(list_filter(string_split_regex(lower(text), '\\s+'), w -> w <> ''))"
-)
-
-
 @register(
     "regression_words_chars",
     oracle=f"""
     WITH xy AS (
-        SELECT lang, n_chars AS x, CAST({_SQL_WORDCOUNT} AS BIGINT) AS y
+        SELECT lang, n_chars AS x, CAST(len({words_sql}) AS BIGINT) AS y
         FROM documents
     ),
     s AS (
@@ -324,7 +313,7 @@ _N_TRAIN_SHARDS = 16
     oracle=f"""
     WITH h AS (
         SELECT doc_id, source, n_chars,
-               {_sql_hex4_to_int(f"'{_SHUFFLE_SEED}' || CAST(doc_id AS VARCHAR)")}
+               {hash_bucket_sql(f"'{_SHUFFLE_SEED}' || CAST(doc_id AS VARCHAR)")}
                  AS hv
         FROM documents
     )
@@ -345,15 +334,7 @@ def training_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     the disjoint hash ranges (shards ARE hash ranges); n_sources shows
     every shard draws from the full source mix."""
     d = load_table(spark, sf_dir, "documents")
-    hv = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(_SHUFFLE_SEED), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
+    hv = hex_int(F.md5(F.concat(F.lit(_SHUFFLE_SEED), F.col("doc_id").cast("string"))))
     width = 65536 // _N_TRAIN_SHARDS
     return (
         d.select("source", "n_chars", hv.alias("hv"))
@@ -488,7 +469,7 @@ _DISTINCT_TOP_K = 5
     "source_distinctive_terms",
     oracle=rf"""
     WITH wx AS (
-        SELECT source, unnest({_SQL_WORDS_R5}) AS w
+        SELECT source, unnest({words_sql}) AS w
         FROM documents
     ),
     sw AS (

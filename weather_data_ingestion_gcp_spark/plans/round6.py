@@ -25,12 +25,8 @@ from pyspark.sql import functions as F
 
 from .. import store
 from ..operators import dedup, sampling
-from .registry import (
-    _sample_pct,
-    _sql_sampled_docs_cte,
-    load_table,
-    register,
-)
+from .oracle_sql import sampled_docs_sql, shingles_sql, words_sql
+from .registry import _sample_pct, load_table, register
 from .round3b import _lsh_recall_oracle, ppjoin_pairs_frame, recall_summary
 
 # sample-rate constants and the cap formula live in registry.py (shared
@@ -44,22 +40,12 @@ from .round3b import _lsh_recall_oracle, ppjoin_pairs_frame, recall_summary
 # unbiasedly at constant cost.
 
 
-def _sampled_recall_oracle() -> str:
-    import re
-
-    base = _lsh_recall_oracle().strip()
-    assert base.startswith("WITH ")
-    # rewrite every `documents` reference inside the composed exact/LSH
-    # oracles to the sampled CTE (DuckDB rejects a same-named shadowing
-    # CTE as a circular reference; the composed oracles touch no other
-    # table, so a word-boundary rewrite is exact)
-    body = re.sub(r"\bdocuments\b", "docs_sampled", base[len("WITH "):])
-    return f"WITH {_sql_sampled_docs_cte()},\n" + body
-
-
 @register(
     "lsh_recall_contract_sampled", shares=("minhash_trigram",),
-    oracle=_sampled_recall_oracle(),
+    oracle=f"""
+    WITH {sampled_docs_sql()}
+    SELECT * FROM ({_lsh_recall_oracle("docs_sampled")})
+    """,
 )
 def lsh_recall_contract_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH recall measured on a deterministic 20% hash-sample of
@@ -106,10 +92,6 @@ def lsh_recall_contract_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # before every shuffle, no pair x pair growth anywhere. All integer ppm
 # (floor division both engines), so the hash compare is exact.
 # ---------------------------------------------------------------------------
-
-_SQL_WORDS_R6 = r"list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')"
-
-
 def _rouge_oracle() -> str:
     def metric(tag: str, grams: str) -> str:
         return f"""
@@ -124,15 +106,14 @@ def _rouge_oracle() -> str:
     tb{tag} AS (SELECT pair_id, CAST(SUM(c) AS BIGINT) AS n FROM b{tag} GROUP BY pair_id)"""
 
     return f"""
-    WITH w AS (SELECT doc_id, {_SQL_WORDS_R6} AS ws FROM documents),
+    WITH w AS (SELECT doc_id, {words_sql} AS ws FROM documents),
     uni AS (
         SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS c
         FROM (SELECT doc_id, unnest(ws) AS g FROM w) GROUP BY doc_id, g
     ),
     big AS (
-        SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS c
-        FROM (SELECT doc_id, ws[i] || ' ' || ws[i + 1] AS g
-              FROM w, UNNEST(generate_series(1, greatest(len(ws) - 1, 0))) AS t(i))
+        SELECT doc_id, shingle AS g, CAST(COUNT(*) AS BIGINT) AS c
+        FROM ({shingles_sql(2, positional=True)})
         GROUP BY doc_id, g
     ),
     pairs AS (

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import store
 from ..operators import dedup
+from .oracle_sql import shingles_sql, verify_jaccard_sql
 from .registry import load_table, register
 
 #: sorted-neighborhood window (pairs per doc) and sort-key prefix length
@@ -178,30 +179,8 @@ def snm_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ranked a JOIN ranked b
           ON a.lang = b.lang AND b.rk BETWEEN a.rk + 1 AND a.rk + {_SNM_W}
     ),
-    words AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(lower(text), '\s+'),
-                           w -> w <> '') AS ws
-        FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i + 1] AS shingle
-        FROM words, UNNEST(generate_series(1, greatest(len(ws) - 1, 0))) AS g(i)
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT p.id_a, p.id_b, COUNT(*) AS n_inter
-        FROM cand p
-        JOIN sh sa ON sa.doc_id = p.id_a
-        JOIN sh sb ON sb.doc_id = p.id_b AND sb.shingle = sa.shingle
-        GROUP BY p.id_a, p.id_b
-    )
-    SELECT i.id_a, i.id_b,
-           ROUND(i.n_inter * 1.0 / (na.n + nb.n - i.n_inter), 6) AS jaccard
-    FROM inter i
-    JOIN sizes na ON na.doc_id = i.id_a
-    JOIN sizes nb ON nb.doc_id = i.id_b
-    WHERE i.n_inter * 1.0 / (na.n + nb.n - i.n_inter) >= 0.05
+    sh AS ({shingles_sql(2)}),
+    {verify_jaccard_sql("cand", 0.05)}
     """,
 )
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .oracle_sql import words_sql
 from .registry import load_table, register
 from .round6b import snm_candidates_shared
 
@@ -278,12 +279,11 @@ def record_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame
 # float path at all. Scale shape: explode -> two partial-aggregated hash
 # aggregates; state is O(vocab) then O(sources), never O(tokens).
 # ---------------------------------------------------------------------------
-_GT_ORACLE = """
+_GT_ORACLE = f"""
     WITH words AS (
         SELECT source, w
         FROM (SELECT source,
-                     list_filter(string_split_regex(lower(text), '\\s+'),
-                                 x -> x <> '') AS ws
+                     {words_sql} AS ws
               FROM documents), UNNEST(ws) AS t(w)
     ),
     wc AS (

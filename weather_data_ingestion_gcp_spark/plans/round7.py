@@ -49,7 +49,8 @@ from pyspark.sql import functions as F
 from .. import store
 from ..operators.sampling import hash_bucket
 from ..operators.text import ngram_array
-from .registry import _sql_hex4_to_int, load_table, register
+from .oracle_sql import hash_bucket_sql, shingles_sql
+from .registry import load_table, register
 
 #: DSIR hashed-feature dimensionality and target domain
 _DSIR_B = 1024
@@ -63,19 +64,13 @@ def _nano_ln(c) -> F.Column:
 
 
 _DSIR_ORACLE = rf"""
-    WITH w AS (
-        SELECT doc_id, source,
-               list_filter(string_split_regex(lower(text), '\s+'),
-                           x -> x <> '') AS ws
-        FROM documents
-    ),
-    bg AS (
-        SELECT doc_id, source, ws[i] || ' ' || ws[i + 1] AS g
-        FROM w, UNNEST(generate_series(1, greatest(len(ws) - 1, 0))) AS t(i)
+    WITH bg AS (
+        SELECT doc_id, d.source, s.shingle AS g
+        FROM ({shingles_sql(2, positional=True)}) s JOIN documents d USING (doc_id)
     ),
     bk AS (
         SELECT doc_id, source,
-               CAST({_sql_hex4_to_int("g")} % {_DSIR_B} AS BIGINT) AS b
+               CAST({hash_bucket_sql("g")} % {_DSIR_B} AS BIGINT) AS b
         FROM bg
     ),
     tc AS (
@@ -371,10 +366,10 @@ _SEMDECON_ORACLE = f"""
         FROM embeddings
     ),
     te AS (SELECT * FROM v
-           WHERE {_sql_hex4_to_int("vec_id")} % 100 < 10
+           WHERE {hash_bucket_sql("vec_id")} % 100 < 10
              AND list_dot_product(e, e) > 0),
     tr AS (SELECT * FROM v
-           WHERE {_sql_hex4_to_int("vec_id")} % 100 >= 15
+           WHERE {hash_bucket_sql("vec_id")} % 100 >= 15
              AND list_dot_product(e, e) > 0),
     scored AS (
         SELECT te.vec_id AS test_id, tr.vec_id AS train_id,

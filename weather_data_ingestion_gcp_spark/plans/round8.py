@@ -52,7 +52,7 @@ stream reduces map-side to the distinct-word relation before any md5 is
 computed (hashing cost is per distinct word, not per occurrence), the
 estimate join broadcasts the 4096-row sketch, and the phi threshold is
 a 1-row scalar broadcast. Buckets use the repo's md5-hex4 discipline
-(`sampling.hash_bucket` / `registry._sql_hex4_to_int`) so both engines
+(`sampling.hash_bucket` / `oracle_sql.hash_bucket_sql`) so both engines
 compute bit-identical sketches — the collision pattern itself is part
 of the parity contract.
 """
@@ -63,7 +63,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import store
-from .registry import _sql_hex4_to_int, register
+from ..operators.sampling import hex_int
+from .oracle_sql import hash_bucket_sql, shingles_sql, words_sql
+from .registry import register
 from .round7 import _DSIR_B, _DSIR_TARGET
 
 #: keep the top 1/_DSIR_KEEP_DIV of the scored pool (ceil)
@@ -111,19 +113,13 @@ def global_range_rank(df: DataFrame, *order) -> DataFrame:
 
 
 _DSIR_TOPP_ORACLE = rf"""
-    WITH w AS (
-        SELECT doc_id, lang, source,
-               list_filter(string_split_regex(lower(text), '\s+'),
-                           x -> x <> '') AS ws
-        FROM documents
-    ),
-    bg AS (
-        SELECT doc_id, lang, source, ws[i] || ' ' || ws[i + 1] AS g
-        FROM w, UNNEST(generate_series(1, greatest(len(ws) - 1, 0))) AS t(i)
+    WITH bg AS (
+        SELECT doc_id, d.lang, d.source, s.shingle AS g
+        FROM ({shingles_sql(2, positional=True)}) s JOIN documents d USING (doc_id)
     ),
     bk AS (
         SELECT doc_id, lang, source,
-               CAST({_sql_hex4_to_int("g")} % {_DSIR_B} AS BIGINT) AS b
+               CAST({hash_bucket_sql("g")} % {_DSIR_B} AS BIGINT) AS b
         FROM bg
     ),
     tc AS (
@@ -272,19 +268,17 @@ def _cms_bucket(i: int, w) -> F.Column:
     """Row-``i`` CMS bucket of word column ``w`` — md5-hex4 of "i:word",
     mod W (the engine-portable hash discipline of sampling.hash_bucket,
     salted per sketch row)."""
-    hex4 = F.substring(F.md5(F.concat(F.lit(f"{i}:"), w)), 1, 4)
-    return (F.conv(hex4, 16, 10).cast("long") % _CMS_W).cast("long")
+    return (hex_int(F.md5(F.concat(F.lit(f"{i}:"), w))) % _CMS_W).cast("long")
 
 
 def _sql_cms_bucket(i: int, w_sql: str) -> str:
     key = f"'{i}:' || {w_sql}"
-    return f"CAST({_sql_hex4_to_int(key)} % {_CMS_W} AS BIGINT)"
+    return f"CAST({hash_bucket_sql(key)} % {_CMS_W} AS BIGINT)"
 
 
 _CMS_ORACLE = rf"""
     WITH tok AS (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                  x -> x <> '')) AS w
+        SELECT unnest({words_sql}) AS w
         FROM documents
     ),
     wc AS (

@@ -14,7 +14,6 @@ fetch is injected (tests pass a fixture loader; production passes a
 
 from __future__ import annotations
 
-import json
 import os
 import time
 import uuid
@@ -98,8 +97,3 @@ def stream_landing(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.json(landing_dir)
-
-
-def parse_landing_json(text: str) -> dict:
-    """Lenient single-record parse (ast.literal_eval analog, P11)."""
-    return json.loads(text)

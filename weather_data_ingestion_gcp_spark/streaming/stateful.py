@@ -204,12 +204,11 @@ def streaming_heavy_hitter_candidates(
     split across states."""
     from pyspark.sql import functions as F
 
+    from ..operators.sampling import hex_int
+
     bucketed = words.select(
         F.col(word_col).alias("w"),
-        (
-            F.conv(F.substring(F.md5(F.col(word_col)), 1, 4), 16, 10).cast("long")
-            % n_buckets
-        )
+        (hex_int(F.md5(F.col(word_col))) % n_buckets)
         .cast("int")
         .alias("bucket"),
     )
