@@ -51,6 +51,13 @@ def test_clean_weather_null_struct_propagation(spark):
     assert out.weather.id is None  # empty array -> element_at -> null
 
 
+def test_daily_rollup_plans_no_sort(hourly_df):
+    """The rollup feeds a partitioned write: a global ORDER BY would add a
+    range-sampling job and a range-partitioning shuffle to every refresh."""
+    plan = daily_rollup(hourly_df)._jdf.queryExecution().executedPlan().toString()
+    assert "rangepartitioning" not in plan.lower()
+
+
 def test_daily_rollup_semantics(hourly_df):
     out = daily_rollup(hourly_df)
     assert [f.name for f in out.schema.fields] == [f.name for f in DAILY_SCHEMA.fields]

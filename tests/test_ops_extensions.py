@@ -1200,13 +1200,13 @@ def test_blocked_jaccard_grouped_matches_pairs_join_form(spark):
 
 
 def test_multimodal_patch_stats_matches_numpy_reference(spark):
-    """patch_stats (plans/round13.py): per-channel patch statistics over
+    """patch_stats (plans/multimodal_payloads.py): per-channel patch statistics over
     interleaved-RGB payload bytes must match an independent per-byte
     reference — patch tiling (48 bytes per patch), tail patches shorter
     than 16 samples, the 4-bucket histogram edges (means exactly on a
     multiple of 64 land in the upper bucket), and empty payloads
     (no rows)."""
-    from weather_data_ingestion_gcp_spark.plans.round13 import patch_stats
+    from weather_data_ingestion_gcp_spark.plans.multimodal_payloads import patch_stats
 
     texts = [
         (0, "a"),                      # 1 byte: channel 0 only, 1 patch
@@ -1252,12 +1252,12 @@ def test_multimodal_patch_stats_matches_numpy_reference(spark):
 
 
 def test_multimodal_frame_energy_matches_python_reference(spark):
-    """frame_energy (plans/round13.py): the PCM interpretation must
+    """frame_energy (plans/multimodal_payloads.py): the PCM interpretation must
     match an independent per-byte reference — little-endian int16
     pairing, sign fold at 32768, the odd trailing byte dropped, the
     trailing partial frame kept, integer thresholds, and payloads too
     short for one sample (no rows)."""
-    from weather_data_ingestion_gcp_spark.plans.round13 import (
+    from weather_data_ingestion_gcp_spark.plans.multimodal_payloads import (
         _FRAME_SAMPLES,
         _LOUD_AT_LEAST,
         _SILENT_BELOW,

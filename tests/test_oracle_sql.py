@@ -74,6 +74,20 @@ def test_plan_modules_neither_rewrite_sql_nor_share_private_fragments():
     assert not offenders, offenders
 
 
+def test_plan_modules_never_read_another_entry_oracle():
+    """An oracle that composes another entry's SQL takes it from a module
+    constant or builder, never from ``ORACLE[...]``: a registry read breaks
+    as soon as registration order changes."""
+    offenders = [
+        f"{path.name}:{n.lineno}"
+        for path in sorted(PLANS.glob("*.py"))
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Subscript) and isinstance(n.value, ast.Name)
+        and n.value.id == "ORACLE" and isinstance(n.ctx, ast.Load)
+    ]
+    assert not offenders, offenders
+
+
 KEYS = ["0", "-1", "-9223372036854775808", "x" * 10_000, None]
 SLICES = [(1, 4), (5, 4), (1, 12)]
 

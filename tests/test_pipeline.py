@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from weather_data_ingestion_gcp_spark.jobs import WeatherWarehouse
 from weather_data_ingestion_gcp_spark.operators.rollup import daily_rollup
-from weather_data_ingestion_gcp_spark.schemas import WEATHER_SCHEMA
+from weather_data_ingestion_gcp_spark.schemas import DAILY_SCHEMA, WEATHER_SCHEMA
 from weather_data_ingestion_gcp_spark.sources.landing import (
     ingest_once,
     read_landing,
@@ -53,6 +53,20 @@ def test_ingest_once_lands_one_clean_file(spark, tmp_path):
     row = back.collect()[0]
     assert row.coordinate.longitude == 87.07
     assert row.dt == dt.date(2022, 7, 3)
+
+
+def test_read_daily_starts_no_job(spark, tmp_path):
+    """read_daily passes the stored schema, so building the DataFrame reads
+    no parquet footer (footer schema inference runs a Spark job)."""
+    wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+    wh.append_hourly(spark.createDataFrame(hourly_rows(days=2), WEATHER_SCHEMA))
+    wh.refresh_daily()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    daily = wh.read_daily()
+    assert scheduler.nextJobId() == before
+    assert sorted(daily.columns) == sorted(DAILY_SCHEMA.names)
+    assert daily.count() == 2
 
 
 def test_load_and_transform_and_idempotent_refresh(spark, tmp_path):

@@ -229,7 +229,7 @@ def test_ppjoin_prefix_filter_is_complete(spark, docs, tmp_path_factory):
     import itertools
     import os
 
-    from weather_data_ingestion_gcp_spark.plans.round3b import ppjoin_prefix_similarity
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import ppjoin_prefix_similarity
 
     rows = [(i, t, "en", "s", len(t)) for i, t in enumerate(docs)]
     d = spark.createDataFrame(
@@ -264,7 +264,7 @@ def test_winsorize_matches_python_reference(spark, cents, tmp_path_factory):
     import math
     import os
 
-    from weather_data_ingestion_gcp_spark.plans.round3b import winsorized_robust_stats
+    from weather_data_ingestion_gcp_spark.plans.audit_stats import winsorized_robust_stats
 
     rows = [
         (i, _ts0, 1, "click", c / 100.0, "{}") for i, c in enumerate(cents)
@@ -301,7 +301,7 @@ def test_integer_pagerank_matches_python_reference(spark, edges, tmp_path_factor
 
     # build docs whose minhash graph is IRRELEVANT — drive the operator's
     # arithmetic directly through its building blocks instead
-    from weather_data_ingestion_gcp_spark.plans.round3b import _PR_ITERS
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import _PR_ITERS
 
     n_nodes = 8
     sym = {}

@@ -254,3 +254,33 @@ def test_shares_groups_run_contiguously():
         assert run == [anchor] + outside, (
             f"{key!r} sharers do not run right after {anchor}: {run}"
         )
+
+
+def test_plan_modules_are_laid_out_by_domain():
+    """Each plan module holds one domain's entries and the helpers only
+    that domain uses: a plan module imports nothing from a sibling plan
+    module but ``registry`` and ``oracle_sql`` (shared helpers live
+    there), and no module or test file is named for the round that added
+    it."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    package = root / "weather_data_ingestion_gcp_spark"
+    plans = package / "plans"
+    siblings = {p.stem for p in plans.glob("*.py")} - {"__init__", "registry", "oracle_sql"}
+    offenders = [
+        f"{path.name}:{n.lineno}: .{m}"
+        for path in sorted(plans.glob("*.py")) if path.name != "__init__.py"
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.ImportFrom) and n.level == 1
+        for m in ([n.module] if n.module else [a.name for a in n.names])
+        if m in siblings
+    ]
+    assert not offenders, offenders
+    round_named = [
+        p.relative_to(root).as_posix()
+        for base in (package, root / "tests") for p in base.rglob("*.py")
+        if p.name.startswith("round")
+    ]
+    assert not round_named, round_named

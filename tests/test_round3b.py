@@ -1,4 +1,4 @@
-"""Crafted-input units for the round-3b extensions (plans/round3b.py):
+"""Crafted-input units for the round-3b extensions:
 passage dedup, shard packing, last-touch attribution, hard negatives,
 code-density counting, and KMV intersection estimation."""
 
@@ -127,7 +127,7 @@ def test_hard_negatives_exclude_same_label(spark, tmp_path):
 
     sf = str(tmp_path)
     emb.write.mode("overwrite").parquet(os.path.join(sf, "embeddings.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import hard_negative_topk
+    from weather_data_ingestion_gcp_spark.plans.embeddings import hard_negative_topk
 
     rows = hard_negative_topk(spark, sf).collect()
     q0 = [r for r in rows if r["q_id"] == 0]
@@ -138,7 +138,7 @@ def test_hard_negatives_exclude_same_label(spark, tmp_path):
 def test_code_signal_counts_exact(spark):
     d = _docs(spark, [(0, "plain words only", "en", "s", 16)])
     # doc_id 0 -> % 4 == 0 -> code snippet prepended
-    from weather_data_ingestion_gcp_spark.plans.round3b import _CODE_SNIPPET, _count_lit
+    from weather_data_ingestion_gcp_spark.plans.text_tokenizer import _CODE_SNIPPET, _count_lit
 
     injected = d.select(
         F.concat(F.lit(_CODE_SNIPPET), F.col("text")).alias("text")
@@ -167,7 +167,7 @@ def test_kmv_intersection_estimate_reasonable(spark, tmp_path):
     )
     sf = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import kmv_join_cardinality
+    from weather_data_ingestion_gcp_spark.plans.audit_stats import kmv_join_cardinality
 
     r = kmv_join_cardinality(spark, sf).first()
     assert r["exact_intersection"] == 100
@@ -189,7 +189,7 @@ def test_triangle_counts_on_crafted_clique(spark, tmp_path):
     )
     sf = str(tmp_path)
     d.write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import graph_triangle_counts
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import graph_triangle_counts
 
     got = {r["doc_id"]: r["n_triangles"] for r in graph_triangle_counts(spark, sf).collect()}
     assert got == {1: 3, 2: 3, 3: 3, 4: 3}
@@ -208,7 +208,7 @@ def test_pagerank_symmetry_and_isolation(spark, tmp_path):
     )
     sf = str(tmp_path)
     d.write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import graph_pagerank_neardup
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import graph_pagerank_neardup
 
     rows = {r["doc_id"]: r for r in graph_pagerank_neardup(spark, sf).collect()}
     clique_scores = {rows[i]["score_nano"] for i in (1, 2, 3, 4)}
@@ -230,7 +230,7 @@ def test_winsorize_thresholds_and_clipping(spark, tmp_path):
     )
     sf = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import winsorized_robust_stats
+    from weather_data_ingestion_gcp_spark.plans.audit_stats import winsorized_robust_stats
 
     r = winsorized_robust_stats(spark, sf).first()
     assert (r["th_low_cents"], r["th_high_cents"]) == (100, 1900)
@@ -254,7 +254,7 @@ def test_ppjoin_finds_exactly_the_high_jaccard_pair(spark, tmp_path):
     )
     sf = str(tmp_path)
     d.write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import ppjoin_prefix_similarity
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import ppjoin_prefix_similarity
 
     rows = ppjoin_prefix_similarity(spark, sf).collect()
     assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
@@ -269,7 +269,7 @@ def test_pca_power_iteration_finds_dominant_axis(spark, tmp_path):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     sf = str(tmp_path)
     emb.write.mode("overwrite").parquet(os.path.join(sf, "embeddings.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import pca_power_iteration
+    from weather_data_ingestion_gcp_spark.plans.embeddings import pca_power_iteration
 
     out = {r["dim"]: r["eigvec_milli"] for r in pca_power_iteration(spark, sf).collect()}
     assert abs(out[1]) == 1000  # dim 1 (1-based) carries all variance
@@ -293,7 +293,7 @@ def test_multi_touch_credit_and_window(spark, tmp_path):
     )
     sf = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import (
+    from weather_data_ingestion_gcp_spark.plans.streaming_events import (
         attribution_linear_multi_touch,
     )
 
@@ -320,7 +320,7 @@ def test_dq_checks_flag_crafted_violations(spark, tmp_path):
     )
     sf = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import dq_expectation_checks
+    from weather_data_ingestion_gcp_spark.plans.audit_stats import dq_expectation_checks
 
     got = {r["check_name"]: r["n_violations"] for r in dq_expectation_checks(spark, sf).collect()}
     assert got == {
@@ -348,7 +348,7 @@ def test_wilson_interval_brackets_rate(spark, tmp_path):
     )
     sf = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import conversion_wilson_by_day
+    from weather_data_ingestion_gcp_spark.plans.audit_stats import conversion_wilson_by_day
 
     r = conversion_wilson_by_day(spark, sf).first()
     assert (r["n_clickers"], r["n_converted"]) == (20, 5)
@@ -373,7 +373,7 @@ def test_cumulative_distinct_counts_first_appearances_once(spark, tmp_path):
     )
     sf = str(tmp_path)
     e.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import cumulative_distinct_users
+    from weather_data_ingestion_gcp_spark.plans.streaming_events import cumulative_distinct_users
 
     got = [(str(r["d"]), r["n_new_users"], r["cumulative_users"])
            for r in cumulative_distinct_users(spark, sf).collect()]
@@ -394,7 +394,7 @@ def test_passage_rewrite_keeps_first_occurrence_only(spark, tmp_path):
     )
     sf = str(tmp_path)
     d.write.mode("overwrite").parquet(os.path.join(sf, "documents.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.round3b import passage_dedup_rewrite
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import passage_dedup_rewrite
     import hashlib
 
     got = {r["doc_id"]: r for r in passage_dedup_rewrite(spark, sf).collect()}
@@ -408,7 +408,7 @@ def test_passage_rewrite_keeps_first_occurrence_only(spark, tmp_path):
 def test_zorder_interleave_locality(spark):
     # the interleave of (u, d) = (3, 0) -> bits of u at even positions
     from pyspark.sql import functions as F
-    from weather_data_ingestion_gcp_spark.plans.round3b import _sql_interleave8
+    from weather_data_ingestion_gcp_spark.plans.warehouse import _sql_interleave8
 
     df = spark.createDataFrame([(3, 0), (0, 3), (255, 255)], "u long, d long")
     got = [r["z"] for r in df.select(F.expr(_sql_interleave8("u", "d")).alias("z")).collect()]

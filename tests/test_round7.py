@@ -284,9 +284,9 @@ def test_semantic_decontamination_chunked_fold_equals_naive(
     pair split ACROSS tiles (must keep the smaller id), (b) the strict
     best in the LAST tile (running max must replace), and (c) a test
     side wider than one tile."""
-    from weather_data_ingestion_gcp_spark.plans import round7
+    from weather_data_ingestion_gcp_spark.plans import embeddings
 
-    monkeypatch.setattr(round7, "_SEMDECON_CHUNK", 3)
+    monkeypatch.setattr(embeddings, "_SEMDECON_CHUNK", 3)
     test_ids = [i for i in range(3000) if _hex4_bucket(i) < 10][:5]
     train_ids = [i for i in range(3000) if _hex4_bucket(i) >= 15][:20]
     import random

@@ -585,7 +585,7 @@ def test_zorder_layout_skips_files_on_the_second_dimension(spark, tmp_path):
 
     e = QUERIES["zorder_layout_buckets"]  # reuse the registered arithmetic
     del e  # (imported for provenance; the layout is rebuilt below)
-    from weather_data_ingestion_gcp_spark.plans.round3b import _sql_interleave8
+    from weather_data_ingestion_gcp_spark.plans.warehouse import _sql_interleave8
 
     ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet")
     t = ev.selectExpr(
@@ -737,7 +737,7 @@ def test_snm_rank_matches_naive_window_rank(spark):
     row-for-row — partitioning is an execution detail, never semantics."""
     from pyspark.sql import Window
 
-    from weather_data_ingestion_gcp_spark.plans.round6b import snm_ranked
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import snm_ranked
 
     docs = spark.range(500).select(
         F.col("id").alias("doc_id"),
@@ -775,7 +775,7 @@ def test_snm_rank_correct_without_exchange_reuse(spark):
     from pyspark.sql import Window
 
     from weather_data_ingestion_gcp_spark.operators import dedup
-    from weather_data_ingestion_gcp_spark.plans.round6b import snm_ranked
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import snm_ranked
 
     docs = spark.range(2000).select(
         F.col("id").alias("doc_id"),

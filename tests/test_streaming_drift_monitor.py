@@ -35,7 +35,7 @@ def _land(landing: str, name: str, rows: list[tuple[int, int]]) -> None:
 
 
 def _psi_ppm(live: dict[int, int]) -> int:
-    """Same integer discipline as plans/round7.psi_value_drift: add-1
+    """Same integer discipline as plans/audit_stats.psi_value_drift: add-1
     smoothing over the union bucket set, clamped ppm fractions,
     (p-q)*(nano_ln p - nano_ln q) BIGINT terms, floor-div to ppm."""
     buckets = sorted(set(_REF) | set(live))

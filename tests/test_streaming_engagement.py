@@ -267,7 +267,7 @@ def test_sink_entry_gates_fixed_floor_tools_to_small_inputs(spark, monkeypatch):
     for the anti-join and normalizes the cached layout — BASELINE.md
     round-13), so the entry must disengage every one of them on the
     >= 64 MB path and engage all of them below it."""
-    import weather_data_ingestion_gcp_spark.plans.round10 as r10
+    import weather_data_ingestion_gcp_spark.plans.streaming_events as r10
 
     calls = []
 
@@ -294,7 +294,7 @@ def test_sink_entry_big_input_path_matches_small_path(spark, monkeypatch):
     CORRECTNESS coverage too: forced onto sf0.001 via a faked file
     size, it must produce exactly the small path's converged profile,
     with the raise_error equivalence guard live on both."""
-    import weather_data_ingestion_gcp_spark.plans.round10 as r10
+    import weather_data_ingestion_gcp_spark.plans.streaming_events as r10
 
     entry = r10.streaming_engagement_sink_equiv
     small = {r.d: r for r in entry(spark, "/root/testdata/sf0.001").collect()}

@@ -28,10 +28,15 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DateType, StructField, StructType
 
 from .operators.rollup import daily_rollup
-from .schemas import LOG_SCHEMA, WEATHER_SCHEMA
+from .schemas import DAILY_SCHEMA, LOG_SCHEMA, WEATHER_SCHEMA
 from .sources.connectors import ParquetTableStorage, TableStorage
+
+
+#: the daily table as stored: DAILY_SCHEMA plus its month partition column
+_STORED_DAILY = StructType([*DAILY_SCHEMA.fields, StructField("part_month", DateType())])
 
 
 class WeatherWarehouse:
@@ -83,7 +88,9 @@ class WeatherWarehouse:
         self.storage.overwrite_partitions(out, "daily", ["part_month", "dt"])
 
     def read_daily(self) -> DataFrame:
-        return self.storage.read(self.spark, "daily").drop("part_month")
+        # the stored schema, so the read infers nothing from parquet footers
+        daily = self.storage.read(self.spark, "daily", schema=_STORED_DAILY)
+        return daily.drop("part_month")
 
     # -- retention ------------------------------------------------------------
 

@@ -13,7 +13,7 @@ Four families, all shuffle-conscious:
   — the verifier used standalone when a cheap blocking key exists.
 
 Determinism: all hashing is md5-based (stable across engines and runs —
-this is also what makes the DuckDB oracles in plans/llm_ops.py possible).
+this is also what makes the DuckDB oracles in plans/dedup_graph.py possible).
 Lexicographic MIN over fixed-width md5 hex strings is equivalent to numeric
 MIN over the corresponding 128-bit integers, so signatures never need a
 hex->int conversion.

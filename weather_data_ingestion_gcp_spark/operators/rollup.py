@@ -14,7 +14,9 @@ single hash aggregate:
   '23:00:00' THEN 'EOD' ELSE MAX(current_time) END`` (F4/A5/T5) — a
   lexicographic string MAX over zero-padded "HH:mm:ss", identical semantics
   in Spark,
-- ORDER BY dt (presentation-only; SURVEY.md 2.6).
+- no ORDER BY: the reference's ORDER BY dt is presentation-only
+  (SURVEY.md 2.6), and a sort would add a range-sampling job and a shuffle
+  in front of every partitioned write.
 
 At 100 TB this is the canonical cheap query: a partial aggregate collapses
 each partition to <= #days rows before the shuffle, so the exchange carries
@@ -63,4 +65,4 @@ def daily_rollup(hourly: DataFrame) -> DataFrame:
         "avg_cloud_coverage", "max_cloud_coverage", "min_cloud_coverage",
         "max_rain_1h", "max_rain_3h", "dt", "month", "till_time",
     ]
-    return agg.select(*cols).orderBy("dt")
+    return agg.select(*cols)

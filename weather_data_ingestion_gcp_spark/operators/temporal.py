@@ -185,7 +185,7 @@ def daily_engagement(active: DataFrame, window_days: int = 7) -> DataFrame:
 
     Output: (d, dau, wau, stickiness) for ACTIVE days only (dau >= 1),
     matching the declarative sliding-distinct definition exactly.
-    Shared by the batch query (plans/core.py dau_wau_engagement) and
+    Shared by the batch query (plans/streaming_events.py dau_wau_engagement) and
     the streaming profile sink (streaming/engagement.py) so the two
     grains cannot drift."""
     span = window_days - 1

@@ -1,15 +1,7 @@
-"""Round-13 registry entries.
-
-multimodal_patch_stats deepens the multimodal family past plumbing
-(round-12 VERDICT "Next round" #5): the first registered entry that
-computes an ANALYTIC over the decoded payload bytes, not just container
-metadata/offsets — per-channel patch statistics of the kind an image
-training-data curation pass runs (patch brightness profile, clipped /
-dead-patch detection). The decode tier is the deterministic byte-level
-stand-in the multimodal family uses throughout (no image libs in this
-environment; a Pillow/CNN decode replaces one inner function), so the
-DuckDB oracle can mirror the arithmetic positionally and hash-verify
-the whole Arrow round trip.
+"""Multimodal payload queries over the binary ``documents`` payloads:
+container metadata, decode and feature extraction through mapInPandas,
+frame sampling plans, and the patch-statistics and frame-energy
+analytics over decoded bytes.
 """
 
 from __future__ import annotations
@@ -22,6 +14,125 @@ from pyspark.sql import functions as F
 
 from ..operators import multimodal
 from .registry import load_table, register
+
+
+# ---------------------------------------------------------------------------
+# Multimodal plumbing
+# ---------------------------------------------------------------------------
+@register(
+    "multimodal_payload_meta",
+    oracle="""
+    SELECT doc_id,
+           octet_length(CAST(text AS BLOB)) AS byte_len,
+           sha256(text)                     AS sha256
+    FROM documents ORDER BY doc_id
+    """,
+)
+def multimodal_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = load_table(spark, sf_dir, "documents")
+    return multimodal.with_binary_payload(d, "text", "doc_id").select(
+        "doc_id", "byte_len", "sha256"
+    ).orderBy("doc_id")
+
+
+@register(
+    "multimodal_decode_meta",
+    oracle="""
+    SELECT doc_id,
+           octet_length(CAST(text AS BLOB))                    AS byte_len,
+           CAST(octet_length(CAST(text AS BLOB)) % 640 + 1 AS INTEGER)       AS width,
+           CAST((octet_length(CAST(text AS BLOB)) * 7) % 480 + 1 AS INTEGER) AS height,
+           CAST(3 AS INTEGER)                                  AS channels,
+           'fake-rgb'                                          AS format
+    FROM documents ORDER BY doc_id
+    """,
+)
+def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The mapInPandas decode path with the deterministic fake codec: the
+    oracle mirrors the fake formula, so the Arrow round-trip, batching, and
+    output schema are all verified by the hash compare."""
+    d = load_table(spark, sf_dir, "documents")
+    media = multimodal.with_binary_payload(d, "text", "doc_id")
+    return multimodal.decode_metadata(media, fake=True).orderBy("doc_id")
+
+
+@register(
+    "multimodal_feature_extract",
+    oracle="""
+    WITH pos AS (
+        SELECT doc_id, (i - 1) % 8 AS j,
+               ascii(substr(text, CAST(i AS INT), 1)) AS b,
+               length(text) AS n
+        FROM documents, UNNEST(generate_series(1, length(text))) AS g(i)
+        WHERE doc_id < 300
+    ),
+    agg AS (
+        SELECT doc_id, j,
+               ROUND(SUM(b) * 1.0 / CAST(ceil(n / 8.0) AS BIGINT), 6) AS m
+        FROM pos GROUP BY doc_id, j, n
+    )
+    SELECT doc_id, CAST(j AS INTEGER) AS component, m AS feature_val
+    FROM agg ORDER BY doc_id, component
+    """,
+)
+def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """mapInPandas feature extraction over binary payloads
+    (multimodal.extract_features): each payload becomes a fixed-dim
+    float vector (stub featurizer: per-component byte means, numpy per
+    Arrow batch) — the shape that feeds the similarity-search operators.
+    The oracle recomputes the same means positionally in SQL: byte sums
+    are exact integers, so the single division matches bitwise and the
+    whole Arrow round-trip (binary in, array<double> out) is
+    hash-verified. The vector is posexploded to (component, feature_val)
+    rows so the registered output is scalar-only (driver canonicalizer
+    cannot hash array cells); the library operator keeps the array type."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    media = multimodal.with_binary_payload(d, "text", "doc_id")
+    out = multimodal.extract_features(media, dim=8)
+    # round 13: round AFTER the posexplode as a scalar projection — the
+    # old transform lambda ran the round through interpreted eval
+    return out.select("doc_id", F.posexplode("feature")).select(
+        "doc_id",
+        F.col("pos").cast("int").alias("component"),
+        F.round(F.col("col"), 6).alias("feature_val"),
+    ).orderBy("doc_id", "component")
+
+
+@register(
+    "multimodal_frame_offsets",
+    oracle="""
+    SELECT doc_id,
+           CAST(unnest(generate_series(0,
+                greatest(octet_length(CAST(text AS BLOB)) - 1, 0), 1000))
+                AS BIGINT) AS frame_offset
+    FROM documents WHERE doc_id < 500 ORDER BY doc_id, frame_offset
+    """,
+)
+def multimodal_frame_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame-sampling plumbing (multimodal.frame_sample_plan): one row per
+    sampled byte offset (every 1000 bytes) of each payload — the schedule
+    a video decoder would consume, generated with sequence + explode
+    entirely JVM-side. The payload column is projected away BEFORE the
+    explode, so the row blowup carries only (id, offset)."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
+    media = multimodal.with_binary_payload(d, "text", "doc_id")
+    out = multimodal.frame_sample_plan(media, every_n_bytes=1000)
+    return out.select(
+        "doc_id", F.col("frame_offset").cast("long").alias("frame_offset")
+    ).orderBy("doc_id", "frame_offset")
+
+
+# multimodal_patch_stats deepens the multimodal family past plumbing
+# (round-12 VERDICT "Next round" #5): the first registered entry that
+# computes an ANALYTIC over the decoded payload bytes, not just container
+# metadata/offsets — per-channel patch statistics of the kind an image
+# training-data curation pass runs (patch brightness profile, clipped /
+# dead-patch detection). The decode tier is the deterministic byte-level
+# stand-in the multimodal family uses throughout (no image libs in this
+# environment; a Pillow/CNN decode replaces one inner function), so the
+# DuckDB oracle can mirror the arithmetic positionally and hash-verify
+# the whole Arrow round trip.
+
 
 #: bytes per (patch, channel): payload bytes are interpreted as
 #: interleaved RGB (byte i -> channel i%3), tiled into patches of 16

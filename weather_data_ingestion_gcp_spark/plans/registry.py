@@ -13,7 +13,8 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .. import store
 
@@ -110,8 +111,6 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
             pass
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         ts_type = dict(df.dtypes).get("ts")
-        from pyspark.sql import functions as F
-
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
@@ -209,8 +208,8 @@ _SAMPLE_PCT = 20
 #: TARGET/PCT% — the round-7 100x-probe finding: a PROPORTIONAL sample
 #: keeps quadratic ground truths growing; an accuracy contract is a
 #: statistical property, so a fixed-size sample estimates it just as
-#: unbiasedly at constant cost. Lives here (not round6) so any plan
-#: module can build sampled contracts without import cycles.
+#: unbiasedly at constant cost. Lives here so any plan module can build
+#: sampled contracts.
 _SAMPLE_TARGET_DOCS = 10_000
 
 
@@ -232,3 +231,23 @@ def _sample_pct(n_docs: int, cap_pct: int = _SAMPLE_PCT) -> int:
         cap_pct, (100 * _SAMPLE_TARGET_DOCS + n_docs - 1) // n_docs
     )
 
+
+def _cents(col: str = "value"):
+    """Per-row exact integer cents for a 2-decimal money double.
+
+    SUM over doubles accumulates in engine- and partitioning-specific
+    order, so rounding the raw double sum can flip a half-cent boundary
+    between Spark and the DuckDB oracle (or between two Spark
+    partitionings — the driver's sessionize_events red row in round 2).
+    The generator emits exact 2-decimal values, so quantizing each row
+    to BIGINT cents first makes the sum exact and order-free; the single
+    final division by 100.0 is identical IEEE arithmetic everywhere.
+    Oracle mirror: ``SUM(CAST(ROUND(col * 100, 0) AS BIGINT)) / 100.0``.
+    """
+    return F.round(F.col(col) * 100, 0).cast("long")
+
+
+def _nano_ln(c: Column) -> Column:
+    """round(ln(x) * 1e9) as BIGINT — the quantization unit every weight
+    term passes through before any cross-term arithmetic."""
+    return F.round(F.log(c.cast("double")) * 1_000_000_000, 0).cast("long")

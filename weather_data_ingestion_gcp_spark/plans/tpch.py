@@ -1,5 +1,5 @@
-"""Extended TPC-H-shaped suite — the join/subquery/window patterns the
-reference's BigQuery SQL surface implies at scale (SURVEY.md §2.5-§2.6).
+"""TPC-H-shaped suite — the join/subquery/window patterns the reference's
+BigQuery SQL surface implies at scale (SURVEY.md §2.5-§2.6).
 
 The driver's tables omit partsupp and some lineitem columns, so each query
 keeps the *plan shape* of its TPC-H namesake (the thing that matters for a
@@ -29,8 +29,315 @@ from pyspark.sql import functions as F
 from .registry import load_table, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+# ---------------------------------------------------------------------------
+# TPC-H-shaped analytics — the multi-aggregate single-pass pattern (A6) and
+# the multiway broadcast-then-shuffle join plan the engine must produce.
+# ---------------------------------------------------------------------------
+@register(
+    "tpch_q1_pricing_summary",
+    oracle="""
+    SELECT l_returnflag, l_linestatus,
+           ROUND(SUM(l_quantity), 2)                                    AS sum_qty,
+           ROUND(SUM(l_extendedprice), 2)                               AS sum_base_price,
+           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)            AS sum_disc_price,
+           ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
+           ROUND(AVG(l_quantity), 2)                                    AS avg_qty,
+           ROUND(AVG(l_extendedprice), 2)                               AS avg_price,
+           ROUND(AVG(l_discount), 4)                                    AS avg_disc,
+           COUNT(*)                                                     AS count_order
+    FROM lineitem
+    WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
+    GROUP BY l_returnflag, l_linestatus
+    ORDER BY l_returnflag, l_linestatus
+    """,
+)
+def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        li.filter(F.to_date("l_shipdate") <= F.lit("1998-09-02").cast("date"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
+            F.round(F.sum(disc), 2).alias("sum_disc_price"),
+            F.round(F.sum(disc * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
+            F.round(F.avg("l_quantity"), 2).alias("avg_qty"),
+            F.round(F.avg("l_extendedprice"), 2).alias("avg_price"),
+            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
+        .orderBy("l_returnflag", "l_linestatus")
+    )
+
+
+@register(
+    "tpch_q3_shipping_priority",
+    oracle="""
+    SELECT o.o_orderkey AS o_orderkey,
+           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           CAST(o.o_orderdate AS DATE) AS orderdate
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    WHERE c.c_mktsegment = 'BUILDING'
+      AND CAST(o.o_orderdate AS DATE) < DATE '1998-03-15'
+      AND CAST(l.l_shipdate  AS DATE) > DATE '1998-03-15'
+    GROUP BY o.o_orderkey, orderdate
+    ORDER BY revenue DESC, o_orderkey
+    LIMIT 10
+    """,
+)
+def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(
+        F.to_date("o_orderdate") < F.lit("1998-03-15").cast("date")
+    )
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.to_date("l_shipdate") > F.lit("1998-03-15").cast("date")
+    )
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .groupBy("o_orderkey", F.to_date("o_orderdate").alias("orderdate"))
+        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .select("o_orderkey", "revenue", "orderdate")
+        .orderBy(F.desc("revenue"), "o_orderkey")
+        .limit(10)
+    )
+
+
+@register(
+    "tpch_q5_local_supplier_volume",
+    oracle="""
+    SELECT n.n_name AS nation,
+           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
+    FROM customer c
+    JOIN orders o   ON c.c_custkey  = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    JOIN supplier s ON l.l_suppkey  = s.s_suppkey AND c.c_nationkey = s.s_nationkey
+    JOIN nation n   ON s.s_nationkey = n.n_nationkey
+    JOIN region r   ON n.n_regionkey = r.r_regionkey
+    WHERE r.r_name = 'ASIA'
+      AND CAST(o.o_orderdate AS DATE) >= DATE '1996-01-01'
+      AND CAST(o.o_orderdate AS DATE) <  DATE '1997-01-01'
+    GROUP BY nation ORDER BY revenue DESC, nation
+    """,
+)
+def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
+        (F.to_date("o_orderdate") >= F.lit("1996-01-01").cast("date"))
+        & (F.to_date("o_orderdate") < F.lit("1997-01-01").cast("date"))
+    )
+    li = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(
+            F.broadcast(s),
+            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
+        )
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy(F.col("n_name").alias("nation"))
+        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .orderBy(F.desc("revenue"), "nation")
+    )
+
+
+@register(
+    "tpch_q10_returned_items",
+    oracle="""
+    SELECT c.c_custkey, c.c_name,
+           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           c.c_acctbal, n.n_name AS nation
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    JOIN nation n   ON c.c_nationkey = n.n_nationkey
+    WHERE CAST(o.o_orderdate AS DATE) >= DATE '1997-01-01'
+      AND CAST(o.o_orderdate AS DATE) <  DATE '1997-04-01'
+      AND l.l_returnflag = 'R'
+    GROUP BY c.c_custkey, c.c_name, c.c_acctbal, nation
+    ORDER BY revenue DESC, c_custkey LIMIT 20
+    """,
+)
+def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
+        (F.to_date("o_orderdate") >= F.lit("1997-01-01").cast("date"))
+        & (F.to_date("o_orderdate") < F.lit("1997-04-01").cast("date"))
+    )
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("c_custkey", "c_name", "c_acctbal", F.col("n_name").alias("nation"))
+        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
+        .select("c_custkey", "c_name", "revenue", "c_acctbal", "nation")
+        .orderBy(F.desc("revenue"), "c_custkey")
+        .limit(20)
+    )
+
+
+@register(
+    "tpch_q14_promo_effect",
+    oracle="""
+    SELECT ROUND(100.0 * SUM(CASE WHEN p.p_type LIKE 'PROMO%'
+                                  THEN l.l_extendedprice * (1 - l.l_discount)
+                                  ELSE 0 END)
+                 / SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS promo_revenue_pct
+    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+    WHERE CAST(l.l_shipdate AS DATE) >= DATE '1997-09-01'
+      AND CAST(l.l_shipdate AS DATE) <  DATE '1997-10-01'
+    """,
+)
+def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        (F.to_date("l_shipdate") >= F.lit("1997-09-01").cast("date"))
+        & (F.to_date("l_shipdate") < F.lit("1997-10-01").cast("date"))
+    )
+    p = load_table(spark, sf_dir, "part")
+    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    promo = F.when(F.col("p_type").like("PROMO%"), disc).otherwise(0.0)
+    return li.join(F.broadcast(p), li.l_partkey == p.p_partkey).agg(
+        F.round(100.0 * F.sum(promo) / F.sum(disc), 4).alias("promo_revenue_pct")
+    )
+
+
+@register(
+    "tpch_q18_large_volume_customers",
+    oracle="""
+    SELECT c.c_custkey, o.o_orderkey, CAST(o.o_orderdate AS DATE) AS odate,
+           o.o_totalprice, ROUND(SUM(l.l_quantity), 2) AS total_qty
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
+                           GROUP BY l_orderkey HAVING SUM(l_quantity) > 150)
+    GROUP BY c.c_custkey, o.o_orderkey, odate, o.o_totalprice
+    ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 50
+    """,
+)
+def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    big = (
+        li.groupBy("l_orderkey")
+        .agg(F.sum("l_quantity").alias("q"))
+        .filter(F.col("q") > 150)
+        .select("l_orderkey")
+    )
+    return (
+        li.join(big.withColumnRenamed("l_orderkey", "big_key"), li.l_orderkey == F.col("big_key"), "left_semi")
+        .join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .groupBy(
+            "c_custkey", "o_orderkey", F.to_date("o_orderdate").alias("odate"), "o_totalprice"
+        )
+        .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
+        .orderBy(F.desc("o_totalprice"), "o_orderkey")
+        .limit(50)
+    )
+
+
+@register(
+    "tpch_q19_discounted_revenue",
+    oracle="""
+    SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           COUNT(*) AS n
+    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+    WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
+           AND l.l_quantity BETWEEN 1 AND 11)
+       OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 10
+           AND l.l_quantity BETWEEN 10 AND 20)
+       OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 15
+           AND l.l_quantity BETWEEN 20 AND 30)
+    """,
+)
+def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    cond = (
+        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5) & F.col("l_quantity").between(1, 11))
+        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 10) & F.col("l_quantity").between(10, 20))
+        | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 15) & F.col("l_quantity").between(20, 30))
+    )
+    return (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .filter(cond)
+        .agg(
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
+
+
+@register(
+    "tpch_q17_small_quantity_avg",
+    oracle="""
+    SELECT ROUND(SUM(l.l_extendedprice) / 7.0, 2) AS avg_yearly,
+           COUNT(*) AS n
+    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    WHERE p.p_brand = 'Brand#23'
+      AND l.l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
+                          FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
+    """,
+)
+def tpch_q17_small_quantity_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Correlated scalar subquery (Catalyst decorrelates it into an
+    aggregate + join — no per-row re-execution)."""
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView("l_q17")
+    spark.read.parquet(f"{sf_dir}/part.parquet").createOrReplaceTempView("p_q17")
+    return spark.sql(
+        """
+        SELECT ROUND(SUM(l.l_extendedprice) / 7.0, 2) AS avg_yearly,
+               COUNT(*) AS n
+        FROM l_q17 l JOIN p_q17 p ON p.p_partkey = l.l_partkey
+        WHERE p.p_brand = 'Brand#23'
+          AND l.l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
+                              FROM l_q17 l2 WHERE l2.l_partkey = l.l_partkey)
+        """
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q6 shape — the pure scan-filter-aggregate: the query whose plan MUST
+# be filter-pushdown + column-pruned scan + single partial/final agg.
+# ---------------------------------------------------------------------------
+@register(
+    "tpch_q6_forecast_revenue",
+    oracle="""
+    SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
+           COUNT(*) AS n
+    FROM lineitem
+    WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
+      AND CAST(l_shipdate AS DATE) <  DATE '1997-01-01'
+      AND l_discount BETWEEN 0.02 AND 0.04
+      AND l_quantity < 25
+    """,
+)
+def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem")
+    return (
+        li.filter(
+            (F.to_date("l_shipdate") >= F.lit("1996-01-01").cast("date"))
+            & (F.to_date("l_shipdate") < F.lit("1997-01-01").cast("date"))
+            & F.col("l_discount").between(0.02, 0.04)
+            & (F.col("l_quantity") < 25)
+        )
+        .agg(
+            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
+            F.count(F.lit(1)).alias("n"),
+        )
+    )
 
 
 def _date(col: str):
@@ -62,13 +369,13 @@ def _date(col: str):
     """,
 )
 def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         _date("l_shipdate").between("1996-01-01", "1997-12-31")
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     sn = n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
     cn = n.select(F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation"))
     return (
@@ -112,15 +419,15 @@ def tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    o = _t(spark, sf_dir, "orders").filter(
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
+    o = load_table(spark, sf_dir, "orders").filter(
         _date("o_orderdate").between("1996-01-01", "1997-12-31")
     )
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     cn = n.select(F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_region"))
     sn = n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
@@ -167,11 +474,11 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
-    s = _t(spark, sf_dir, "supplier")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
+    li = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
+    s = load_table(spark, sf_dir, "supplier")
+    o = load_table(spark, sf_dir, "orders")
+    n = load_table(spark, sf_dir, "nation")
     profit = (
         F.col("l_extendedprice") * (1 - F.col("l_discount"))
         - 0.1 * F.col("p_retailprice") * F.col("l_quantity")
@@ -208,11 +515,11 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (_date("o_orderdate") >= F.lit("1996-01-01").cast("date"))
         & (_date("o_orderdate") < F.lit("1996-04-01").cast("date"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
@@ -241,11 +548,11 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q12_priority_case_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (_date("l_shipdate") >= F.lit("1997-01-01").cast("date"))
         & (_date("l_shipdate") < F.lit("1998-01-01").cast("date"))
     )
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -275,8 +582,8 @@ def tpch_q12_priority_case_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "5-LOW")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "5-LOW")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -310,7 +617,7 @@ def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (_date("l_shipdate") >= F.lit("1996-01-01").cast("date"))
         & (_date("l_shipdate") < F.lit("1996-04-01").cast("date"))
     )
@@ -320,7 +627,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     mx = rev.agg(F.max("total_revenue").alias("_mx"))
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return (
         rev.join(F.broadcast(mx), rev.total_revenue == mx._mx)
         .join(F.broadcast(s), F.col("supplier_no") == s.s_suppkey)
@@ -347,9 +654,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q2_max_acctbal_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     mx = s.groupBy(F.col("s_nationkey").alias("mx_key")).agg(
         F.max("s_acctbal").alias("mx_bal")
     )
@@ -389,13 +696,17 @@ def tpch_q2_max_acctbal_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ps = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    p = _t(spark, sf_dir, "part").filter(
+    ps = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 4, 9, 14, 23, 36, 45, 49)
     )
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select("s_suppkey")
+    bad = (
+        load_table(spark, sf_dir, "supplier")
+        .filter(F.col("s_acctbal") < 0)
+        .select("s_suppkey")
+    )
     return (
         ps.join(F.broadcast(bad), ps.l_suppkey == bad.s_suppkey, "left_anti")
         .join(F.broadcast(p), ps.l_partkey == p.p_partkey)
@@ -426,10 +737,10 @@ def tpch_q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def tpch_q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_nationkey").isin(0, 1, 2, 3))
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_nationkey").isin(0, 1, 2, 3))
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal").alias("_a"))
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
@@ -486,7 +797,7 @@ def window_running_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     window sums are exact and order-free; the single final division is
     identical IEEE arithmetic on both engines — no rounding needed at
     all, which also removes the HALF_UP-vs-banker's tie hazard."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (_date("o_orderdate") >= F.lit("1999-01-01").cast("date"))
         & (_date("o_orderdate") < F.lit("1999-04-01").cast("date"))
     )
@@ -532,7 +843,7 @@ def window_running_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     vals = li.groupBy("l_partkey").agg(
         F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("val")
     )
@@ -569,8 +880,8 @@ def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").filter(F.col("p_name").like("small%"))
-    li = _t(spark, sf_dir, "lineitem").filter(
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("small%"))
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (_date("l_shipdate") >= F.lit("1996-01-01").cast("date"))
         & (_date("l_shipdate") < F.lit("1997-01-01").cast("date"))
     )
@@ -582,8 +893,8 @@ def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     return (
         s.join(shipped, s.s_suppkey == shipped.l_suppkey, "left_semi")
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -624,11 +935,11 @@ def tpch_q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey", "l_shipdate")
     flags = li.join(o, li.l_orderkey == o.o_orderkey).select(
         "l_orderkey",
         "l_suppkey",
@@ -643,7 +954,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.collect_set(F.when(F.col("late"), F.col("l_suppkey"))).over(w)
         ).alias("n_late_supp"),
     ).filter(F.col("late") & (F.col("n_supp") > 1) & (F.col("n_late_supp") == 1))
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     return (
         qualifying.join(F.broadcast(s), qualifying.l_suppkey == s.s_suppkey)
         .groupBy("s_name")

@@ -1,42 +1,26 @@
-"""Core query inventory — the reference's operator families (SURVEY.md §2)
-re-expressed over the driver's TPC-H-ish tables, each with a DuckDB oracle.
+"""Reference warehouse surface: the reference's operator families (SURVEY.md
+§2) re-expressed over the driver's tables, each with a DuckDB oracle —
+cleaning and rollups, filters and routing, joins (inner/outer/semi/anti,
+null-safe, range, salted and skew-adaptive), window and grouping-set
+shapes, SQL passthrough, scalar/array/map/JSON function breadth, layout
+buckets and slowly-changing dimensions.
 
 Every query here is pure DataFrame API compiled by Catalyst: filters and
 projections push into the parquet scan, small dimensions broadcast, and
 aggregations run partial+final with a single shuffle. Literals replace
 ``current_date()`` (nondeterministic across engines — SURVEY.md §5).
 
-Reference citations are given per query (file:line in /root/reference).
+Reference citations are given per query (file:line in the reference).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from ..operators.layout import spread_small
-from ..operators.sampling import hex_int
-from .oracle_sql import hash_bucket_sql, hex_sql
-from .registry import load_table, register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-def _cents(col: str = "value"):
-    """Per-row exact integer cents for a 2-decimal money double.
-
-    SUM over doubles accumulates in engine- and partitioning-specific
-    order, so rounding the raw double sum can flip a half-cent boundary
-    between Spark and the DuckDB oracle (or between two Spark
-    partitionings — the driver's sessionize_events red row in round 2).
-    The generator emits exact 2-decimal values, so quantizing each row
-    to BIGINT cents first makes the sum exact and order-free; the single
-    final division by 100.0 is identical IEEE arithmetic everywhere.
-    Oracle mirror: ``SUM(CAST(ROUND(col * 100, 0) AS BIGINT)) / 100.0``.
-    """
-    return F.round(F.col(col) * 100, 0).cast("long")
+from ..operators import text
+from .registry import _cents, load_table, register
 
 
 # ---------------------------------------------------------------------------
@@ -65,7 +49,7 @@ def _cents(col: str = "value"):
     """,
 )
 def daily_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     max_tod = F.max(F.date_format("ts", "HH:mm:ss"))
     return (
         e.groupBy(F.to_date("ts").alias("dt"))
@@ -100,7 +84,7 @@ def daily_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def clean_restructure_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.filter(F.col("event_type").isNotNull()).select(
         "event_id",
         F.upper("event_type").alias("event_class"),
@@ -124,7 +108,7 @@ def clean_restructure_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def filter_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.filter(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -149,7 +133,7 @@ def filter_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def date_filter_single_day(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.to_date("l_shipdate") == F.lit("1998-06-15").cast("date"))
         .groupBy("l_returnflag")
@@ -172,7 +156,7 @@ def date_filter_single_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def retention_keep_side(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.filter(F.to_date("ts") > F.lit("2024-01-16").cast("date"))
         .groupBy("event_type")
@@ -196,7 +180,7 @@ def retention_keep_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def regex_filename_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     fn = F.concat(
         F.lit("hourly-weather-data-json-"),
         F.date_format("ts", "yyyyMMdd-HH:mm:ss"),
@@ -223,7 +207,7 @@ def regex_filename_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def path_stem_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     path = F.concat(F.col("source"), F.lit("/doc-"), F.col("doc_id").cast("string"), F.lit(".json"))
     return d.select(
         "doc_id",
@@ -252,7 +236,7 @@ _ROUTES = [("click", "t_click"), ("view", "t_view"), ("purchase", "t_purchase")]
     """,
 )
 def broadcast_route_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     routes = spark.createDataFrame(_ROUTES, "event_type string, target string")
     return (
         e.join(F.broadcast(routes), "event_type")  # BroadcastHashJoin by construction
@@ -276,7 +260,7 @@ def broadcast_route_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     b64 = F.base64(F.col("source").cast("binary"))
     return d.select(
         "doc_id",
@@ -301,7 +285,7 @@ def base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def log_path_and_format(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.select(
             F.concat_ws("/", F.col("event_type"), (F.col("user_id") % 10).cast("string")).alias(
@@ -334,7 +318,7 @@ def log_path_and_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def month_partition_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy(F.date_trunc("month", "o_orderdate").cast("date").alias("month_start"))
         .agg(
@@ -361,7 +345,7 @@ def month_partition_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def case_over_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     max_tod = F.max(F.date_format("ts", "HH:mm:ss"))
     return (
         e.groupBy(F.to_date("ts").alias("dt"), "event_type")
@@ -389,8 +373,8 @@ def case_over_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_inner_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -413,8 +397,8 @@ def join_inner_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_left_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     per_cust = (
         c.join(o, o.o_custkey == c.c_custkey, "left")
         .groupBy("c_custkey")
@@ -436,8 +420,8 @@ def join_left_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -456,8 +440,8 @@ def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -488,7 +472,7 @@ def join_full_outer_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shuffle carries per-user counts, not raw events), and the full-outer
     requires a shuffle join by definition — broadcast can't preserve the
     build side's unmatched rows."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     cl = (
         e.filter(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -537,7 +521,7 @@ def join_null_safe_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconciliation needs when the join key is itself nullable. Both sides
     pre-aggregate to their distinct keys, so the null-safe comparison
     runs over bucket-count rows only."""
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     k = F.when(F.col("user_id") % 10 == 0, F.lit(None)).otherwise(
         F.col("user_id") % 5
     )
@@ -561,285 +545,6 @@ def join_null_safe_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# TPC-H-shaped analytics — the multi-aggregate single-pass pattern (A6) and
-# the multiway broadcast-then-shuffle join plan the engine must produce.
-# ---------------------------------------------------------------------------
-@register(
-    "tpch_q1_pricing_summary",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           ROUND(SUM(l_quantity), 2)                                    AS sum_qty,
-           ROUND(SUM(l_extendedprice), 2)                               AS sum_base_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)            AS sum_disc_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-           ROUND(AVG(l_quantity), 2)                                    AS avg_qty,
-           ROUND(AVG(l_extendedprice), 2)                               AS avg_price,
-           ROUND(AVG(l_discount), 4)                                    AS avg_disc,
-           COUNT(*)                                                     AS count_order
-    FROM lineitem
-    WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-    """,
-)
-def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.filter(F.to_date("l_shipdate") <= F.lit("1998-09-02").cast("date"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 2).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 2).alias("avg_price"),
-            F.round(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-@register(
-    "tpch_q3_shipping_priority",
-    oracle="""
-    SELECT o.o_orderkey AS o_orderkey,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           CAST(o.o_orderdate AS DATE) AS orderdate
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND CAST(o.o_orderdate AS DATE) < DATE '1998-03-15'
-      AND CAST(l.l_shipdate  AS DATE) > DATE '1998-03-15'
-    GROUP BY o.o_orderkey, orderdate
-    ORDER BY revenue DESC, o_orderkey
-    LIMIT 10
-    """,
-)
-def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.to_date("o_orderdate") < F.lit("1998-03-15").cast("date")
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.to_date("l_shipdate") > F.lit("1998-03-15").cast("date")
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("o_orderkey", F.to_date("o_orderdate").alias("orderdate"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .select("o_orderkey", "revenue", "orderdate")
-        .orderBy(F.desc("revenue"), "o_orderkey")
-        .limit(10)
-    )
-
-
-@register(
-    "tpch_q5_local_supplier_volume",
-    oracle="""
-    SELECT n.n_name AS nation,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue
-    FROM customer c
-    JOIN orders o   ON c.c_custkey  = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN supplier s ON l.l_suppkey  = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    WHERE r.r_name = 'ASIA'
-      AND CAST(o.o_orderdate AS DATE) >= DATE '1996-01-01'
-      AND CAST(o.o_orderdate AS DATE) <  DATE '1997-01-01'
-    GROUP BY nation ORDER BY revenue DESC, nation
-    """,
-)
-def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.to_date("o_orderdate") >= F.lit("1996-01-01").cast("date"))
-        & (F.to_date("o_orderdate") < F.lit("1997-01-01").cast("date"))
-    )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(s),
-            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
-        )
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .orderBy(F.desc("revenue"), "nation")
-    )
-
-
-@register(
-    "tpch_q10_returned_items",
-    oracle="""
-    SELECT c.c_custkey, c.c_name,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           c.c_acctbal, n.n_name AS nation
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    WHERE CAST(o.o_orderdate AS DATE) >= DATE '1997-01-01'
-      AND CAST(o.o_orderdate AS DATE) <  DATE '1997-04-01'
-      AND l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name, c.c_acctbal, nation
-    ORDER BY revenue DESC, c_custkey LIMIT 20
-    """,
-)
-def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
-        (F.to_date("o_orderdate") >= F.lit("1997-01-01").cast("date"))
-        & (F.to_date("o_orderdate") < F.lit("1997-04-01").cast("date"))
-    )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "c_acctbal", F.col("n_name").alias("nation"))
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"))
-        .select("c_custkey", "c_name", "revenue", "c_acctbal", "nation")
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
-
-
-@register(
-    "tpch_q14_promo_effect",
-    oracle="""
-    SELECT ROUND(100.0 * SUM(CASE WHEN p.p_type LIKE 'PROMO%'
-                                  THEN l.l_extendedprice * (1 - l.l_discount)
-                                  ELSE 0 END)
-                 / SUM(l.l_extendedprice * (1 - l.l_discount)), 4) AS promo_revenue_pct
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE CAST(l.l_shipdate AS DATE) >= DATE '1997-09-01'
-      AND CAST(l.l_shipdate AS DATE) <  DATE '1997-10-01'
-    """,
-)
-def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
-        (F.to_date("l_shipdate") >= F.lit("1997-09-01").cast("date"))
-        & (F.to_date("l_shipdate") < F.lit("1997-10-01").cast("date"))
-    )
-    p = _t(spark, sf_dir, "part")
-    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type").like("PROMO%"), disc).otherwise(0.0)
-    return li.join(F.broadcast(p), li.l_partkey == p.p_partkey).agg(
-        F.round(100.0 * F.sum(promo) / F.sum(disc), 4).alias("promo_revenue_pct")
-    )
-
-
-@register(
-    "tpch_q18_large_volume_customers",
-    oracle="""
-    SELECT c.c_custkey, o.o_orderkey, CAST(o.o_orderdate AS DATE) AS odate,
-           o.o_totalprice, ROUND(SUM(l.l_quantity), 2) AS total_qty
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-                           GROUP BY l_orderkey HAVING SUM(l_quantity) > 150)
-    GROUP BY c.c_custkey, o.o_orderkey, odate, o.o_totalprice
-    ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 50
-    """,
-)
-def tpch_q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 150)
-        .select("l_orderkey")
-    )
-    return (
-        li.join(big.withColumnRenamed("l_orderkey", "big_key"), li.l_orderkey == F.col("big_key"), "left_semi")
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy(
-            "c_custkey", "o_orderkey", F.to_date("o_orderdate").alias("odate"), "o_totalprice"
-        )
-        .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(50)
-    )
-
-
-@register(
-    "tpch_q19_discounted_revenue",
-    oracle="""
-    SELECT ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           COUNT(*) AS n
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE (p.p_brand = 'Brand#12' AND p.p_size BETWEEN 1 AND 5
-           AND l.l_quantity BETWEEN 1 AND 11)
-       OR (p.p_brand = 'Brand#23' AND p.p_size BETWEEN 1 AND 10
-           AND l.l_quantity BETWEEN 10 AND 20)
-       OR (p.p_brand = 'Brand#34' AND p.p_size BETWEEN 1 AND 15
-           AND l.l_quantity BETWEEN 20 AND 30)
-    """,
-)
-def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    cond = (
-        ((F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5) & F.col("l_quantity").between(1, 11))
-        | ((F.col("p_brand") == "Brand#23") & F.col("p_size").between(1, 10) & F.col("l_quantity").between(10, 20))
-        | ((F.col("p_brand") == "Brand#34") & F.col("p_size").between(1, 15) & F.col("l_quantity").between(20, 30))
-    )
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .filter(cond)
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-@register(
-    "tpch_q17_small_quantity_avg",
-    oracle="""
-    SELECT ROUND(SUM(l.l_extendedprice) / 7.0, 2) AS avg_yearly,
-           COUNT(*) AS n
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE p.p_brand = 'Brand#23'
-      AND l.l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
-                          FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
-    """,
-)
-def tpch_q17_small_quantity_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery (Catalyst decorrelates it into an
-    aggregate + join — no per-row re-execution)."""
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView("l_q17")
-    spark.read.parquet(f"{sf_dir}/part.parquet").createOrReplaceTempView("p_q17")
-    return spark.sql(
-        """
-        SELECT ROUND(SUM(l.l_extendedprice) / 7.0, 2) AS avg_yearly,
-               COUNT(*) AS n
-        FROM l_q17 l JOIN p_q17 p ON p.p_partkey = l.l_partkey
-        WHERE p.p_brand = 'Brand#23'
-          AND l.l_quantity < (SELECT 0.2 * AVG(l2.l_quantity)
-                              FROM l_q17 l2 WHERE l2.l_partkey = l.l_partkey)
-        """
-    )
-
-
-# ---------------------------------------------------------------------------
 # Windows / sorts / top-k (§2.6 north-star): row_number keep-first is also
 # the dedup primitive.
 # ---------------------------------------------------------------------------
@@ -855,9 +560,7 @@ def tpch_q17_small_quantity_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy(F.desc("c_acctbal"), F.col("c_custkey"))
     return (
         c.select(
@@ -897,9 +600,7 @@ def window_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     offset exercises range-based (not row-count) frame evaluation.
     percent_rank/cume_dist round at 6 dp (denominators are partition sizes
     << 99 — boundary-free)."""
-    from pyspark.sql.window import Window
-
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 200)
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
     wr = (
         Window.partitionBy("o_custkey")
@@ -963,7 +664,7 @@ def datetime_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both engines clamp Jan 31 + 1 month to end of Feb), month/quarter
     boundaries, and day differences against a pinned epoch (never
     current_date — nondeterministic across engines, SURVEY §5)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 3000)
     d = F.col("o_orderdate").cast("date")
     return o.select(
         "o_orderkey",
@@ -987,7 +688,7 @@ def datetime_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def order_limit_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     # TakeOrderedAndProject: per-partition top-N then driver merge — no full sort.
     return o.select("o_orderkey", "o_totalprice").orderBy(
         F.desc("o_totalprice"), "o_orderkey"
@@ -1015,7 +716,7 @@ def order_limit_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
 
     def ids(et: str) -> DataFrame:
         return e.filter(F.col("event_type") == et).select("user_id")
@@ -1039,7 +740,7 @@ def set_operations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"), F.count(F.lit(1)).alias("n_events"))
@@ -1059,9 +760,9 @@ def distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def grouping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
+    r = load_table(spark, sf_dir, "region")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
     joined = r.join(n, n.n_regionkey == r.r_regionkey).join(
         c, c.c_nationkey == n.n_nationkey, "left"
     )
@@ -1089,203 +790,8 @@ def grouping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def uuid_stable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import stable_uuid
 
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     return d.select("doc_id", stable_uuid(F.col("source")).alias("file_uuid")).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# TPC-H Q6 shape — the pure scan-filter-aggregate: the query whose plan MUST
-# be filter-pushdown + column-pruned scan + single partial/final agg.
-# ---------------------------------------------------------------------------
-@register(
-    "tpch_q6_forecast_revenue",
-    oracle="""
-    SELECT ROUND(SUM(l_extendedprice * l_discount), 2) AS revenue,
-           COUNT(*) AS n
-    FROM lineitem
-    WHERE CAST(l_shipdate AS DATE) >= DATE '1996-01-01'
-      AND CAST(l_shipdate AS DATE) <  DATE '1997-01-01'
-      AND l_discount BETWEEN 0.02 AND 0.04
-      AND l_quantity < 25
-    """,
-)
-def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.to_date("l_shipdate") >= F.lit("1996-01-01").cast("date"))
-            & (F.to_date("l_shipdate") < F.lit("1997-01-01").cast("date"))
-            & F.col("l_discount").between(0.02, 0.04)
-            & (F.col("l_quantity") < 25)
-        )
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# T3 — tumbling event-time window (the daily GROUP BY dt generalized to
-# F.window; batch form of the streaming windowed aggregate). Epoch-aligned
-# 6h buckets on both engines.
-# ---------------------------------------------------------------------------
-@register(
-    "tumbling_window_agg",
-    oracle="""
-    SELECT make_timestamp((epoch_us(ts) // 21600000000) * 21600000000) AS win_start,
-           event_type,
-           COUNT(*) AS n,
-           SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0 AS total
-    FROM events
-    GROUP BY win_start, event_type
-    ORDER BY win_start, event_type
-    """,
-)
-def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), (F.sum(_cents()) / 100.0).alias("total"))
-        .select(F.col("w.start").alias("win_start"), "event_type", "n", "total")
-        .orderBy("win_start", "event_type")
-    )
-
-
-@register(
-    "sliding_window_agg",
-    oracle="""
-    WITH shifted AS (
-        SELECT make_timestamp((epoch_us(ts) // 10800000000) * 10800000000
-                              - s.k * 10800000000) AS win_start,
-               event_type, value
-        FROM events CROSS JOIN (SELECT unnest([0, 1]) AS k) s
-    )
-    SELECT win_start, event_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0 AS total
-    FROM shifted
-    GROUP BY win_start, event_type
-    ORDER BY win_start, event_type
-    """,
-)
-def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping (sliding) windows: 6-hour width, 3-hour slide — each
-    event lands in exactly width/slide = 2 windows. Spark's window()
-    expands rows BEFORE the aggregate (an Expand-like generator), so the
-    shuffle carries 2x rows but stays a single partial+final hash
-    aggregate — same plan family as tumbling, no self-join. The oracle
-    states the expansion directly: each event assigned to its slide-
-    aligned window start and the one before it."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "6 hours", "3 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), (F.sum(_cents()) / 100.0).alias("total"))
-        .select(F.col("w.start").alias("win_start"), "event_type", "n", "total")
-        .orderBy("win_start", "event_type")
-    )
-
-
-@register(
-    "cohort_retention",
-    oracle="""
-    WITH firstday AS (
-        SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day
-        FROM events GROUP BY user_id
-    ),
-    act AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)
-    SELECT f.cohort_day,
-           CAST(a.day - f.cohort_day AS BIGINT) AS days_since,
-           CAST(COUNT(DISTINCT a.user_id) AS BIGINT) AS n_users
-    FROM act a JOIN firstday f USING (user_id)
-    GROUP BY f.cohort_day, days_since
-    ORDER BY f.cohort_day, days_since
-    """,
-)
-def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort-retention triangle: users grouped by first-seen day, counted
-    on each subsequent active day — the standard product-analytics rollup.
-    Two aggregations + one join, all keyed on user_id: the first-seen
-    aggregate, the distinct (user, day) activity set, and their join all
-    hash-partition on the SAME key, so Catalyst reuses one exchange
-    (no re-shuffle between the steps); only the final small
-    (cohort, offset) aggregate re-keys."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("day")
-    )
-    first = e.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    act = e.distinct()
-    return (
-        act.join(first, "user_id")
-        .groupBy(
-            "cohort_day",
-            F.datediff("day", "cohort_day").cast("long").alias("days_since"),
-        )
-        .agg(F.countDistinct("user_id").alias("n_users"))
-        .orderBy("cohort_day", "days_since")
-    )
-
-
-@register(
-    "funnel_view_click_purchase",
-    oracle="""
-    WITH v AS (SELECT user_id, MIN(ts) AS t_view FROM events
-               WHERE event_type = 'view' GROUP BY user_id),
-    c AS (SELECT e.user_id, MIN(e.ts) AS t_click
-          FROM events e JOIN v USING (user_id)
-          WHERE e.event_type = 'click' AND e.ts > v.t_view
-          GROUP BY e.user_id),
-    p AS (SELECT e.user_id, MIN(e.ts) AS t_purchase
-          FROM events e JOIN c USING (user_id)
-          WHERE e.event_type = 'purchase' AND e.ts > c.t_click
-          GROUP BY e.user_id)
-    SELECT CAST((SELECT COUNT(*) FROM v) AS BIGINT) AS n_view,
-           CAST((SELECT COUNT(*) FROM c) AS BIGINT) AS n_click_after_view,
-           CAST((SELECT COUNT(*) FROM p) AS BIGINT) AS n_purchase_after_click
-    """,
-)
-def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered three-stage funnel (view -> click after view -> purchase
-    after click) in ONE shuffle of the fact table. The join-chain
-    formulation (stage N semi-joined to stage N-1's first-completion
-    times) scans events six times through three shuffles; instead, one
-    window pass per user computes the running first-view time and the
-    running first-qualifying-click time, a purchase qualifies when it
-    strictly follows the running click min, and the per-user flag
-    aggregate reuses the window's hash partitioning (no second
-    exchange). Equivalence to the stage-join semantics: a qualifying
-    event exists strictly before row R iff the running min at R is
-    strictly below R's timestamp — ties are excluded by `>` on both
-    formulations. Strictly-ordered sequence semantics preserved: a
-    click before the first view never counts."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    t = F.col("event_type")
-    rv = e.withColumn("rv", F.min(F.when(t == "view", F.col("ts"))).over(w))
-    rc = rv.withColumn(
-        "rc",
-        F.min(
-            F.when((t == "click") & (F.col("ts") > F.col("rv")), F.col("ts"))
-        ).over(w),
-    )
-    per_user = rc.groupBy("user_id").agg(
-        F.max((t == "view").cast("int")).alias("has_view"),
-        F.max(
-            ((t == "click") & (F.col("ts") > F.col("rv"))).cast("int")
-        ).alias("has_click"),
-        F.max(
-            ((t == "purchase") & (F.col("ts") > F.col("rc"))).cast("int")
-        ).alias("has_purchase"),
-    )
-    return per_user.agg(
-        F.sum("has_view").cast("long").alias("n_view"),
-        F.sum("has_click").cast("long").alias("n_click_after_view"),
-        F.sum("has_purchase").cast("long").alias("n_purchase_after_click"),
-    )
 
 
 @register(
@@ -1310,8 +816,8 @@ def skew_salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     group inside an aggregation.)"""
     from ..operators.skew import salted_join
 
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select(
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
     joined = salted_join(o, c, "o_custkey", salts=8)
@@ -1322,72 +828,6 @@ def skew_salted_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("revenue"),
         )
         .orderBy("c_mktsegment")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Sessionization — gap-based sessions per user (30-min inactivity): the
-# batch form of the streaming session-window operator. lag + conditional
-# cumulative sum; one shuffle on user_id shared by both window passes.
-# ---------------------------------------------------------------------------
-@register(
-    "sessionize_events",
-    oracle="""
-    WITH marked AS (
-        SELECT user_id, ts, value,
-               CASE WHEN epoch_us(ts) - LAG(epoch_us(ts))
-                           OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                         > 1800000000 OR
-                         LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-                    THEN 1 ELSE 0 END AS new_session,
-               event_id
-        FROM events
-    ),
-    sessions AS (
-        SELECT user_id, ts, value,
-               CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-        FROM marked
-    )
-    SELECT user_id, session_id,
-           COUNT(*) AS n_events,
-           SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0 AS session_value,
-           (MAX(epoch_us(ts)) - MIN(epoch_us(ts))) // 1000000 AS duration_sec
-    FROM sessions
-    GROUP BY user_id, session_id
-    ORDER BY user_id, session_id
-    """,
-)
-def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessions (30-min inactivity) — batch twin of the
-    streaming session-window operator. Session totals sum exact integer
-    CENTS (see ``_cents``): round 2's one red driver row was this
-    query's rounded raw double sum flipping a half-cent boundary
-    under the driver's partitioning while passing local parity at every
-    SF — the signature of order-dependent double accumulation."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_us = F.lag(F.unix_micros("ts")).over(w)
-    new_session = F.when(
-        prev_us.isNull() | (F.unix_micros("ts") - prev_us > 30 * 60 * 1_000_000),
-        1,
-    ).otherwise(0)
-    sessions = e.select("user_id", "ts", "value", "event_id").withColumn(
-        "session_id",
-        F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return (
-        sessions.groupBy("user_id", "session_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            (F.sum(_cents()) / 100.0).alias("session_value"),
-            ((F.max(F.unix_micros("ts")) - F.min(F.unix_micros("ts"))) / F.lit(1_000_000))
-            .cast("long")
-            .alias("duration_sec"),
-        )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -1415,7 +855,7 @@ _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
     """,
 )
 def pivot_daily_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events").withColumn("value_c", _cents())
+    e = load_table(spark, sf_dir, "events").withColumn("value_c", _cents())
     out = (
         e.groupBy(F.to_date("ts").alias("dt"))
         .pivot("event_type", _EVENT_TYPES)
@@ -1441,7 +881,7 @@ def pivot_daily_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def unpivot_event_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(F.to_date("ts").alias("dt")).agg(
         (F.sum(_cents()) / 100.0).alias("total_value"),
         F.count(F.lit(1)).cast("double").alias("n_events"),
@@ -1449,227 +889,6 @@ def unpivot_event_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.unpivot(
         ["dt"], ["total_value", "n_events"], "metric", "val"
     ).orderBy("dt", "metric")
-
-
-# ---------------------------------------------------------------------------
-# Exact percentiles — the beyond-reference stats surface (SURVEY §2.4 notes
-# the reference has no percentiles). Exact interpolated percentile matches
-# DuckDB's quantile_cont formula.
-# ---------------------------------------------------------------------------
-@register(
-    "percentile_stats",
-    oracle="""
-    SELECT event_type,
-           ROUND(quantile_cont(value, 0.5), 4)  AS p50,
-           ROUND(quantile_cont(value, 0.95), 4) AS p95,
-           ROUND(MIN(value), 4) AS vmin,
-           ROUND(MAX(value), 4) AS vmax
-    FROM events GROUP BY event_type ORDER BY event_type
-    """,
-)
-def percentile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy("event_type")
-        .agg(
-            F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
-            F.round(F.expr("percentile(value, 0.95)"), 4).alias("p95"),
-            F.round(F.min("value"), 4).alias("vmin"),
-            F.round(F.max("value"), 4).alias("vmax"),
-        )
-        .orderBy("event_type")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Approximate percentile — same contract pattern as approx_distinct_users:
-# the sketch estimate (KLL/GK-style, engine-specific) is checked against
-# exact rank bounds, and the ORACLE pins the verdict TRUE. percentile_approx
-# with accuracy=1000 has rank error <= 0.1%; the contract grants +-5% rank
-# slack (exact p45..p55 / p90..p99 value bounds), so a real regression in
-# the sketch flips the flag and fails the hash compare.
-# ---------------------------------------------------------------------------
-@register(
-    "approx_percentile_contract",
-    oracle="""
-    SELECT event_type,
-           ROUND(quantile_cont(value, 0.5), 4)  AS exact_p50,
-           ROUND(quantile_cont(value, 0.95), 4) AS exact_p95,
-           TRUE AS p50_within, TRUE AS p95_within
-    FROM events GROUP BY event_type ORDER BY event_type
-    """,
-)
-def approx_percentile_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    agg = e.groupBy("event_type").agg(
-        F.expr("percentile_approx(value, 0.5, 1000)").alias("a50"),
-        F.expr("percentile_approx(value, 0.95, 1000)").alias("a95"),
-        F.expr("percentile(value, 0.5)").alias("x50"),
-        F.expr("percentile(value, 0.95)").alias("x95"),
-        F.expr("percentile(value, 0.45)").alias("lo50"),
-        F.expr("percentile(value, 0.55)").alias("hi50"),
-        F.expr("percentile(value, 0.90)").alias("lo95"),
-        F.expr("percentile(value, 0.99)").alias("hi95"),
-    )
-    return agg.select(
-        "event_type",
-        F.round("x50", 4).alias("exact_p50"),
-        F.round("x95", 4).alias("exact_p95"),
-        F.col("a50").between(F.col("lo50"), F.col("hi50")).alias("p50_within"),
-        F.col("a95").between(F.col("lo95"), F.col("hi95")).alias("p95_within"),
-    ).orderBy("event_type")
-
-
-# ---------------------------------------------------------------------------
-# Approximate distinct — HLL sketch *values* differ across engines, so the
-# registered output is the accuracy CONTRACT, not the estimate: exact count
-# (hash-checked) + a within-tolerance verdict the oracle pins to TRUE. A
-# Spark-side HLL drift beyond 5*rsd would flip the flag and fail the hash
-# compare — the driver row is a real check, not `no_oracle`. The raw
-# estimate remains available via the KMV twin (`approx_distinct_kmv`,
-# exact-hash green: deterministic md5 k-minimum-values on both engines)
-# and the tolerance pytest (tests/test_ops_extensions.py::
-# test_approx_distinct_within_tolerance).
-# ---------------------------------------------------------------------------
-# shares: locality only (the same events user_id scan as the HLL contract)
-@register(
-    "approx_distinct_users", shares=("events_users",),
-    oracle="""
-    SELECT event_type,
-           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
-           TRUE AS within_tolerance
-    FROM events GROUP BY event_type ORDER BY event_type
-    """,
-)
-def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
-    rsd = 0.02
-    agg = e.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", rsd=rsd).alias("approx_users"),
-        F.countDistinct("user_id").alias("exact_users"),
-    )
-    return agg.select(
-        "event_type",
-        "exact_users",
-        (
-            F.abs(F.col("approx_users") - F.col("exact_users"))
-            <= 5 * rsd * F.col("exact_users")
-        ).alias("within_tolerance"),
-    ).orderBy("event_type")
-
-
-# KMV (k-minimum-values) distinct sketch: unlike HLL, fully deterministic
-# and engine-portable — both engines take the k smallest md5 fingerprints,
-# so the k-th minimum (and therefore the estimate) hash-matches EXACTLY.
-_KMV_K = 64
-#: 2^48 — 12 hex nibbles normalize to (0,1) with exact double representation
-_KMV_SPACE = float(1 << 48)
-
-
-@register(
-    "approx_distinct_kmv",
-    oracle=f"""
-    WITH h AS (
-        SELECT DISTINCT event_type, md5(CAST(user_id AS VARCHAR)) AS hh
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    r AS (
-        SELECT event_type, hh,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hh) AS rn
-        FROM h
-    ),
-    sk AS (
-        SELECT event_type, MAX(hh) AS kth, COUNT(*) AS m
-        FROM r WHERE rn <= {_KMV_K} GROUP BY event_type
-    )
-    SELECT event_type,
-           ROUND(CASE WHEN m < {_KMV_K} THEN CAST(m AS DOUBLE)
-                      ELSE ({_KMV_K} - 1.0)
-                           / (CAST({hex_sql('kth', width=12)} AS DOUBLE)
-                              / {_KMV_SPACE!r})
-                 END, 2) AS est_users
-    FROM sk ORDER BY event_type
-    """,
-)
-def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate distinct users per event type via a KMV sketch: keep the
-    k smallest md5 fingerprints; estimate = (k-1)/u_k where u_k is the k-th
-    minimum normalized to (0,1). Deterministic md5 makes this the
-    oracle-checkable complement to approx_distinct_users (whose HLL sketch
-    is engine-specific, hence rows-only).
-
-    Scale shape: the rank window runs over the per-group DISTINCT
-    fingerprint relation (partial aggregation collapses duplicates before
-    the shuffle), never over raw events. At truly extreme cardinalities the
-    same sketch merges hierarchically (k-min of per-partition k-mins) —
-    KMV is a mergeable sketch; this form keeps the oracle expressible.
-    """
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events")
-    h = (
-        e.filter(F.col("user_id").isNotNull())
-        .select("event_type", F.md5(F.col("user_id").cast("string")).alias("hh"))
-        .distinct()
-    )
-    w = Window.partitionBy("event_type").orderBy("hh")
-    sk = (
-        h.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KMV_K)
-        .groupBy("event_type")
-        .agg(F.max("hh").alias("kth"), F.count(F.lit(1)).alias("m"))
-    )
-    kth_val = hex_int(F.col("kth"), width=12)
-    est = F.when(F.col("m") < _KMV_K, F.col("m").cast("double")).otherwise(
-        F.lit(_KMV_K - 1.0) / (kth_val.cast("double") / F.lit(_KMV_SPACE))
-    )
-    return sk.select(
-        "event_type", F.round(est, 2).alias("est_users")
-    ).orderBy("event_type")
-
-
-@register(
-    "bloom_membership_check",
-    oracle=f"""
-    WITH pos AS (
-        SELECT doc_id,
-               {hash_bucket_sql("doc_id")} % 100 AS b,
-               u.j,
-               {hex_sql("md5(text)", start="u.j * 4 + 1")} AS pos
-        FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j) u
-    ),
-    bits AS (SELECT DISTINCT pos FROM pos WHERE b >= 15),
-    probe AS (SELECT doc_id, pos FROM pos WHERE b < 10)
-    SELECT p.doc_id,
-           CAST(SUM(CASE WHEN bits.pos IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_hits,
-           CAST(SUM(CASE WHEN bits.pos IS NOT NULL THEN 1 ELSE 0 END) = 4 AS INT)
-             AS maybe_member
-    FROM probe p LEFT JOIN bits USING (pos)
-    GROUP BY p.doc_id ORDER BY p.doc_id
-    """,
-)
-def bloom_membership_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable Bloom-filter membership: the train split's content
-    fingerprints are summarized as a DISTINCT set of k=4 hash positions
-    in an m=65536-bit space (4 disjoint 16-bit slices of md5(text) — no
-    engine-native hash, so the sketch is reproducible anywhere); each
-    test-split document is flagged maybe-seen when all 4 of its positions
-    are set. No false negatives by construction — every exact cross-split
-    duplicate is caught — while the summary is at most m rows regardless
-    of corpus size: the 100 TB shape is a BROADCAST of the bit set
-    against a map-side probe, the data-level analog of the runtime
-    bloom-join pruning pinned in tests/test_scale_plans.py. This is the
-    mergeable-sketch completion of the family (KMV above, HLL below)."""
-    from ..operators import sketch
-    from ..operators.sampling import hash_bucket
-
-    d = _t(spark, sf_dir, "documents")
-    b = hash_bucket(F.col("doc_id"))
-    bits = sketch.bloom_build(d.filter(b >= 15), "text")
-    return sketch.bloom_probe(d.filter(b < 10), bits, "doc_id", "text").orderBy(
-        "doc_id"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1687,7 +906,7 @@ def bloom_membership_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     a = n.select(F.col("n_name").alias("name_a"), F.col("n_regionkey").alias("rk"))
     b = n.select(F.col("n_name").alias("name_b"), F.col("n_regionkey").alias("rk"))
     dist = F.levenshtein("name_a", "name_b")
@@ -1718,7 +937,7 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def error_capture_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     payload = F.when(
         F.col("event_id") % 10 == 0, F.concat(F.lit("corrupt-"), F.col("user_id").cast("string"))
     ).otherwise(F.col("user_id").cast("string"))
@@ -1767,7 +986,7 @@ def string_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     translate, Levenshtein distance, and separator-joined concat — the
     string toolkit a curation pipeline leans on. Pure codegen projection:
     one scan, filter pushed down, no shuffle."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_partkey") < 500)
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_partkey") < 500)
     name, brand = F.col("p_name"), F.col("p_brand")
     return p.select(
         "p_partkey",
@@ -1812,7 +1031,7 @@ def array_higher_order_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-space split agrees byte-for-byte between engines (both keep empty
     strings on runs of spaces). The fold seeds 0L so empty arrays yield 0,
     matching the COALESCE on the DuckDB side."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     toks = F.split(F.col("text"), " ")
     return d.select(
         "doc_id",
@@ -1856,7 +1075,7 @@ def regexp_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only stage at any scale. Spark's regexp_substr returns NULL on
     no-match where DuckDB's regexp_extract returns '' — coalesced to ''
     to pin the cross-engine contract."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
+    d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     text = F.col("text")
     pat = "[a-z]+a[a-z]*"
     return d.select(
@@ -1916,7 +1135,7 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     form of the reference's delete+insert upsert (S12)."""
     from ..operators.merge import scd2_apply
 
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     dim = c.select(
         "c_custkey",
         "c_acctbal",
@@ -1959,7 +1178,7 @@ def json_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's struct_pack serialization byte-for-byte for int/string
     fields. Rows where the path is absent are filtered on both sides
     (Spark's to_json drops null fields where DuckDB serializes them)."""
-    e = _t(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
+    e = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
     k = F.get_json_object("props", "$.k").cast("long")
     return (
         e.filter(k.isNotNull())
@@ -1983,95 +1202,6 @@ def json_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "histogram_event_values",
-    oracle="""
-    SELECT CAST(FLOOR(value / 50.0) AS BIGINT) AS bucket,
-           CAST(COUNT(*) AS BIGINT)            AS n,
-           ROUND(MIN(value), 2)                AS lo,
-           ROUND(MAX(value), 2)                AS hi,
-           ROUND(AVG(value), 4)                AS mean_v
-    FROM events WHERE value IS NOT NULL
-    GROUP BY bucket ORDER BY bucket
-    """,
-)
-def histogram_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-width histogram as a single hash aggregate on a derived bucket
-    key — the profiling primitive for numeric columns (the fixed-width
-    variant of what approx_percentile sketches adaptively). Bucketing is
-    floor(value/width): a pure projection, so the aggregate's partial
-    combine sees integer keys and the shuffle carries |buckets| rows per
-    partition regardless of input size. min/max are order-insensitive;
-    the mean rounds at 4 dp to absorb accumulation-order float drift."""
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    return (
-        e.groupBy(F.floor(F.col("value") / 50.0).cast("long").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min("value"), 2).alias("lo"),
-            F.round(F.max("value"), 2).alias("hi"),
-            F.round(F.avg("value"), 4).alias("mean_v"),
-        )
-        .orderBy("bucket")
-    )
-
-
-@register(
-    "stats_aggregate_breadth",
-    oracle="""
-    WITH mu AS (SELECT l_returnflag AS flag, AVG(l_quantity) AS m
-                FROM lineitem GROUP BY l_returnflag)
-    SELECT l.l_returnflag,
-           ROUND(STDDEV_SAMP(l.l_quantity), 6)                    AS sd_samp,
-           ROUND(VAR_POP(l.l_quantity), 6)                        AS var_pop,
-           ROUND(CORR(l.l_quantity, l.l_extendedprice), 6)        AS qty_price_corr,
-           ROUND(COVAR_SAMP(l.l_quantity, l.l_extendedprice), 2)  AS qty_price_cov,
-           ROUND(REGR_SLOPE(l.l_extendedprice, l.l_quantity), 4)  AS price_per_qty,
-           ROUND(REGR_INTERCEPT(l.l_extendedprice, l.l_quantity), 2) AS price_base,
-           ROUND(REGR_R2(l.l_extendedprice, l.l_quantity), 6)     AS r2,
-           ROUND(MEDIAN(l.l_quantity), 2)                         AS med_qty,
-           ROUND(AVG(POWER(l.l_quantity - mu.m, 3))
-                 / POWER(AVG(POWER(l.l_quantity - mu.m, 2)), 1.5), 6) AS skew,
-           ROUND(AVG(POWER(l.l_quantity - mu.m, 4))
-                 / POWER(AVG(POWER(l.l_quantity - mu.m, 2)), 2) - 3, 6) AS kurt
-    FROM lineitem l JOIN mu ON l.l_returnflag = mu.flag
-    GROUP BY l.l_returnflag ORDER BY l.l_returnflag
-    """,
-)
-def stats_aggregate_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical aggregate surface: spread (stddev/variance), dependence
-    (Pearson corr, covariance, OLS slope/intercept/R²), exact median, and
-    shape (skewness, excess kurtosis). Spark's skewness/kurtosis are the
-    POPULATION moments g1 = m3/m2^1.5 and g2 = m4/m2² − 3; DuckDB's
-    builtins apply sample corrections, so the oracle spells out the moment
-    arithmetic instead (two-pass mean CTE). One shuffle: all aggregates
-    share the l_returnflag grouping.
-
-    Round-13: spread before the aggregate — the exact percentile forces
-    the whole aggregation onto the interpreted ObjectHashAggregate path
-    (per-group value buffers), and on the single-row-group testdata scan
-    that partial ran as ONE task (guide §2.5). Measured 2.1 s -> 1.1 s
-    warm; identity at scale."""
-    li = spread_small(_t(spark, sf_dir, "lineitem"), "l_orderkey")
-    q, p = F.col("l_quantity"), F.col("l_extendedprice")
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.stddev_samp(q), 6).alias("sd_samp"),
-            F.round(F.var_pop(q), 6).alias("var_pop"),
-            F.round(F.corr(q, p), 6).alias("qty_price_corr"),
-            F.round(F.covar_samp(q, p), 2).alias("qty_price_cov"),
-            F.round(F.regr_slope(p, q), 4).alias("price_per_qty"),
-            F.round(F.regr_intercept(p, q), 2).alias("price_base"),
-            F.round(F.regr_r2(p, q), 6).alias("r2"),
-            F.round(F.median(q), 2).alias("med_qty"),
-            F.round(F.skewness(q), 6).alias("skew"),
-            F.round(F.kurtosis(q), 6).alias("kurt"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-@register(
     "grouping_sets_priority",
     oracle="""
     SELECT o_orderstatus, o_orderpriority,
@@ -2090,7 +1220,7 @@ def grouping_sets_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupingSets API, with GROUPING() flags distinguishing real NULLs from
     subtotal rows. Spark expands the sets with a single Expand node feeding
     one hash aggregate — one shuffle regardless of how many sets."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     st, pr = F.col("o_orderstatus"), F.col("o_orderpriority")
     return (
         o.groupingSets([[st, pr], [pr], []], st, pr)
@@ -2125,7 +1255,7 @@ def bitwise_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap-index and feature-flag workloads lean on. All integer-exact, so
     the oracle match is bitwise regardless of aggregation order; one hash
     aggregate, map-side partials absorb the scan."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -2170,7 +1300,7 @@ def conditional_null_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable try_divide). Integer paths are exact; the one float sum
     quantizes each quotient to integer micro-units before summing so the
     aggregate is order-free (see ``_cents``)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("event_type")
         .agg(
@@ -2204,115 +1334,6 @@ def conditional_null_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "countmin_heavy_hitters",
-    oracle=f"""
-    WITH seeds AS (SELECT unnest(generate_series(0, 3)) AS s),
-    sb AS (
-        SELECT user_id, s,
-               {hex_sql("md5(CAST(s AS VARCHAR) || '|' || CAST(user_id AS VARCHAR))")} % 256
-                   AS bucket
-        FROM events CROSS JOIN seeds WHERE user_id IS NOT NULL),
-    cells AS (SELECT s, bucket, COUNT(*) AS c FROM sb GROUP BY s, bucket),
-    probes AS (SELECT DISTINCT user_id, s, bucket FROM sb),
-    est AS (SELECT user_id, MIN(c) AS est_count
-            FROM probes JOIN cells USING (s, bucket) GROUP BY user_id),
-    truth AS (SELECT user_id, COUNT(*) AS true_count
-              FROM events WHERE user_id IS NOT NULL GROUP BY user_id)
-    SELECT e.user_id,
-           CAST(e.est_count AS BIGINT) AS est_count,
-           CAST(t.true_count AS BIGINT) AS true_count,
-           CAST(e.est_count - t.true_count AS BIGINT) AS overcount
-    FROM est e JOIN truth t ON e.user_id = t.user_id
-    ORDER BY est_count DESC, e.user_id LIMIT 50
-    """,
-)
-def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch heavy hitters (operators/sketch.countmin_*): d=4
-    md5-seeded hash rows x w=256 buckets summarize per-user event counts in
-    at most 1024 cells — bounded, BROADCASTABLE, and mergeable (cells add),
-    the canonical streaming frequency sketch. Estimates are min-over-rows
-    upper bounds (never under), checked here against true counts with the
-    overcount surfaced. Deterministic md5 hashing makes the sketch
-    oracle-exact cross-engine, completing the sketch family: Bloom
-    (membership), KMV (distinct), HLL (distinct, engine-native), CMS
-    (frequency)."""
-    from ..operators import sketch
-
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    cells = sketch.countmin_build(e, "user_id")
-    probes = e.select("user_id").distinct()
-    est = sketch.countmin_estimate(cells, probes, "user_id")
-    truth = e.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("true_count"))
-    return (
-        est.join(truth, "user_id")
-        .select(
-            "user_id",
-            "est_count",
-            "true_count",
-            (F.col("est_count") - F.col("true_count")).cast("long").alias("overcount"),
-        )
-        .orderBy(F.desc("est_count"), "user_id")
-        .limit(50)
-    )
-
-
-@register(
-    "table_checksum_by_flag",
-    oracle=f"""
-    SELECT l_returnflag,
-           CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(bit_xor({hex_sql(
-               "md5(CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR)"
-               " || '|' || CAST(l_partkey AS VARCHAR) || '|' || CAST(l_suppkey AS VARCHAR))"
-           )} * 65536 + {hex_sql(
-               "md5('x|' || CAST(l_orderkey AS VARCHAR) || '|' || CAST(l_linenumber AS VARCHAR))"
-           )}) AS BIGINT) AS checksum
-    FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
-    """,
-)
-def table_checksum_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order-free data-integrity fingerprint: per-group XOR of a 32-bit
-    per-row key hash (two independent 16-bit md5 slices). XOR is
-    commutative/associative, so the checksum is invariant to partitioning,
-    ordering, and engine — exactly the cross-system migration-validation
-    primitive this repo's own oracle gate embodies. One hash aggregate
-    with map-side partials; at 100 TB the per-partition XOR reduces to one
-    long per group before the (tiny) shuffle.
-
-    Round-13: the scan is spread first — the per-row cost here is two
-    md5s over concatenated key strings (1.2M md5 calls at sf0.1), which
-    ran serially on the single-row-group testdata scan (guide §2.5,
-    unsplittable input). Measured 2.0 s -> 0.7 s warm; identity at scale."""
-    li = spread_small(
-        _t(spark, sf_dir, "lineitem"), "l_orderkey", "l_linenumber"
-    )
-    key1 = F.concat_ws(
-        "|",
-        F.col("l_orderkey").cast("string"),
-        F.col("l_linenumber").cast("string"),
-        F.col("l_partkey").cast("string"),
-        F.col("l_suppkey").cast("string"),
-    )
-    key2 = F.concat_ws(
-        "|",
-        F.lit("x"),
-        F.col("l_orderkey").cast("string"),
-        F.col("l_linenumber").cast("string"),
-    )
-    h = (
-        hex_int(F.md5(key1)) * 65536 + hex_int(F.md5(key2))
-    )
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.bit_xor(h).cast("long").alias("checksum"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-@register(
     "ordered_listagg_by_type",
     oracle="""
     WITH du AS (SELECT DISTINCT event_type, user_id
@@ -2335,9 +1356,7 @@ def ordered_listagg_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     capping each group BEFORE any list is built: list aggregates are only
     scale-safe when a rank/limit bounds the group first, which is the
     pattern pinned here."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     du = e.select("event_type", "user_id").distinct()
     w = Window.partitionBy("event_type").orderBy("user_id")
     return (
@@ -2358,185 +1377,6 @@ def ordered_listagg_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_listed"),
         )
         .orderBy("event_type")
-    )
-
-
-@register(
-    "gapfill_daily_interpolation",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d, AVG(value) AS v
-        FROM events GROUP BY event_type, CAST(ts AS DATE)),
-    obs AS (SELECT * FROM daily WHERE day(d) % 3 <> 0),
-    span AS (SELECT event_type, MIN(d) AS d0, MAX(d) AS d1 FROM daily
-             GROUP BY event_type),
-    spine AS (
-        SELECT event_type,
-               CAST(unnest(generate_series(CAST(d0 AS TIMESTAMP),
-                    CAST(d1 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS d
-        FROM span),
-    s AS (SELECT sp.event_type, sp.d, o.v
-          FROM spine sp LEFT JOIN obs o
-          ON sp.event_type = o.event_type AND sp.d = o.d),
-    f AS (SELECT event_type, d, v,
-            last_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY d
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-            last_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
-                OVER (PARTITION BY event_type ORDER BY d
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pd,
-            first_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY d
-                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-            first_value(CASE WHEN v IS NOT NULL THEN d END IGNORE NULLS)
-                OVER (PARTITION BY event_type ORDER BY d
-                ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nd
-          FROM s)
-    SELECT event_type, d, (v IS NOT NULL) AS observed,
-           ROUND(CASE WHEN v IS NOT NULL THEN v
-                      WHEN pv IS NOT NULL AND nv IS NOT NULL
-                      THEN pv + ((nv - pv) * date_diff('day', pd, d))
-                               / date_diff('day', pd, nd)
-                      ELSE COALESCE(pv, nv) END, 4) AS filled
-    FROM f ORDER BY event_type, d
-    """,
-)
-def gapfill_daily_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series gap-fill with linear interpolation — the hypertable
-    resampling primitive (and the natural extension of the reference's
-    daily weather rollup to missing days): build the full date spine per
-    series, LOCF/NOCB at the edges, linearly interpolate interior gaps
-    (here: every 3rd calendar day withheld to create deterministic gaps).
-    Two windows per series (forward last-non-null, backward
-    first-non-null) — one partition pass each, no self-join; the spine is
-    sequence+explode, never a driver loop. At scale each series fills
-    independently (partitionBy event_type)."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(F.avg("value").alias("v"))
-    obs = daily.filter(F.dayofmonth("d") % 3 != 0)
-    span = daily.groupBy("event_type").agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    spine = span.select(
-        "event_type", F.explode(F.sequence("d0", "d1")).alias("d")
-    )
-    s = spine.join(obs, ["event_type", "d"], "left")
-    wp = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wn = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    v, d = F.col("v"), F.col("d")
-    f = s.select(
-        "event_type",
-        "d",
-        "v",
-        F.last("v", ignorenulls=True).over(wp).alias("pv"),
-        F.last(F.when(v.isNotNull(), d), ignorenulls=True).over(wp).alias("pd"),
-        F.first("v", ignorenulls=True).over(wn).alias("nv"),
-        F.first(F.when(v.isNotNull(), d), ignorenulls=True).over(wn).alias("nd"),
-    )
-    interp = F.col("pv") + (
-        (F.col("nv") - F.col("pv")) * F.datediff(d, F.col("pd"))
-    ) / F.datediff(F.col("nd"), F.col("pd"))
-    filled = (
-        F.when(v.isNotNull(), v)
-        .when(F.col("pv").isNotNull() & F.col("nv").isNotNull(), interp)
-        .otherwise(F.coalesce("pv", "nv"))
-    )
-    return f.select(
-        "event_type",
-        "d",
-        v.isNotNull().alias("observed"),
-        F.round(filled, 4).alias("filled"),
-    ).orderBy("event_type", "d")
-
-
-@register(
-    "dau_wau_engagement",
-    oracle="""
-    WITH active AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
-                    FROM events WHERE user_id IS NOT NULL),
-    dau AS (SELECT d, COUNT(*) AS dau FROM active GROUP BY d),
-    contrib AS (
-        SELECT user_id,
-               CAST(unnest(generate_series(CAST(d AS TIMESTAMP),
-                    CAST(d + 6 AS TIMESTAMP), INTERVAL 1 DAY)) AS DATE) AS d
-        FROM active),
-    wau AS (SELECT d, COUNT(DISTINCT user_id) AS wau FROM contrib GROUP BY d)
-    SELECT dau.d, CAST(dau.dau AS BIGINT) AS dau, CAST(wau.wau AS BIGINT) AS wau,
-           ROUND(dau.dau * 1.0 / wau.wau, 6) AS stickiness
-    FROM dau JOIN wau ON dau.d = wau.d
-    ORDER BY dau.d
-    """,
-)
-def dau_wau_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DAU / trailing-7-day WAU (stickiness): sliding-window COUNT
-    DISTINCT, which no window frame computes directly.
-
-    Round-9 redesign (the r7 sf100 probe measured the explode-x7 +
-    per-day COUNT DISTINCT form at exponent 1.24 — the per-day distinct
-    hash state is 7x the activity relation): the sliding distinct is
-    computed as INTERVAL STABBING instead. Per user, consecutive
-    presence days gap <= 6 apart merge into coverage intervals
-    [first, last+6] (one lag + one running-sum window over the
-    day-deduped activity relation — linear, user-partitioned, the
-    sessionize shuffle class); each interval emits (+1 at start, -1
-    after end) deltas, and WAU(d) is the running sum of per-day deltas.
-    Distinctness is structural (a user's merged intervals are disjoint,
-    so each contributes at most 1 per day) — NO distinct aggregate
-    state anywhere; post-aggregation state is O(distinct days),
-    calendar-bounded, so the final running-sum window over days is a
-    bounded single-partition pass by construction. The computation
-    lives in operators/temporal.py daily_engagement — shared verbatim
-    with the streaming profile sink (streaming/engagement.py), so the
-    two grains cannot drift."""
-    from ..operators.temporal import daily_engagement
-
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    active = e.select("user_id", F.to_date("ts").alias("d")).distinct()
-    return daily_engagement(active).orderBy("d")
-
-
-@register(
-    "histogram_equidepth_deciles",
-    oracle="""
-    WITH t AS (SELECT value, event_id,
-                      NTILE(10) OVER (ORDER BY value, event_id) AS decile
-               FROM events WHERE value IS NOT NULL)
-    SELECT CAST(decile AS BIGINT) AS decile,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND(MIN(value), 4) AS lo,
-           ROUND(MAX(value), 4) AS hi
-    FROM t GROUP BY decile ORDER BY decile
-    """,
-)
-def histogram_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-DEPTH histogram (the optimizer-statistics / drift-monitoring
-    complement of the equi-width `histogram_event_values`): NTILE deciles
-    with a deterministic (value, event_id) tiebreak, then per-decile
-    bounds and counts. The global NTILE is a single total-order sort —
-    acceptable for stats collection; at 100 TB the same result comes from
-    approx quantile boundaries + a bucket-key aggregate, traded here for
-    the exactness the oracle gate checks."""
-    from pyspark.sql.window import Window
-
-    e = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w = Window.orderBy("value", "event_id")
-    return (
-        e.select("value", F.ntile(10).over(w).cast("long").alias("decile"))
-        .groupBy("decile")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(F.min("value"), 4).alias("lo"),
-            F.round(F.max("value"), 4).alias("hi"),
-        )
-        .orderBy("decile")
     )
 
 
@@ -2565,7 +1405,7 @@ def map_function_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     map CELLS are never compared cross-engine (map serialization orders
     differ by engine); every map is reduced to scalars/sorted arrays
     before leaving the query. All JVM-side; one hash aggregate."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     m = F.map_from_arrays(
         F.array(F.lit("a"), F.lit("b"), F.lit("c")),
         F.array(
@@ -2623,7 +1463,7 @@ def try_cast_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ingestion-time hardening a permissive loader needs under Spark
     4's ANSI default, where a single bad cell would otherwise fail the
     job. Null-skipping COUNT pins how many survived."""
-    e = _t(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
+    e = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     t = e.select(
         "event_type",
         "user_id",
@@ -2656,4 +1496,373 @@ def try_cast_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("div_sum"),
         )
         .orderBy("event_type")
+    )
+
+
+@register(
+    "range_join_price_bands",
+    oracle="""
+    SELECT p.p_partkey, c.c_custkey, p.p_retailprice, c.c_acctbal
+    FROM part p JOIN customer c
+      ON c.c_acctbal BETWEEN p.p_retailprice - 5 AND p.p_retailprice + 5
+    ORDER BY p_partkey, c_custkey
+    """,
+)
+def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Interval-point range join via bucket equi-join + refine (the naive
+    inequality join plans a nested-loop product; the oracle side uses
+    DuckDB's IEJoin, ours never materializes the cross space)."""
+    from ..operators.temporal import bucketed_range_join
+
+    p = load_table(spark, sf_dir, "part").select(
+        "p_partkey",
+        "p_retailprice",
+        (F.col("p_retailprice") - 5).alias("lo"),
+        (F.col("p_retailprice") + 5).alias("hi"),
+    )
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    out = bucketed_range_join(p, c, lo="lo", hi="hi", x="c_acctbal", bucket_width=10.0)
+    return out.select("p_partkey", "c_custkey", "p_retailprice", "c_acctbal").orderBy(
+        "p_partkey", "c_custkey"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Window value-function breadth: FIRST_VALUE / LAST_VALUE (with and
+# without IGNORE NULLS), NTH_VALUE, LEAD/LAG with defaults — the family's
+# remaining members beyond the rank functions already pinned. One window
+# spec -> one sort; the synthetic NULL injection (every 3rd value) makes
+# the ignore-nulls semantics observable in the hash.
+# ---------------------------------------------------------------------------
+@register(
+    "window_value_functions_breadth",
+    oracle="""
+    WITH v AS (
+        SELECT user_id, event_id,
+               CASE WHEN event_id % 3 = 0 THEN NULL
+                    ELSE CAST(ROUND(value * 100) AS BIGINT) END AS c
+        FROM events WHERE event_type = 'click' AND user_id < 40
+    )
+    SELECT user_id, event_id, c,
+           FIRST_VALUE(c) OVER w AS first_raw,
+           FIRST_VALUE(c IGNORE NULLS) OVER w AS first_nn,
+           LAST_VALUE(c) OVER w AS last_raw,
+           LAST_VALUE(c IGNORE NULLS) OVER w AS last_nn,
+           NTH_VALUE(c, 2) OVER w AS second_val,
+           LEAD(c, 1, -1) OVER (PARTITION BY user_id ORDER BY event_id)
+             AS next_or_neg1,
+           LAG(c, 2, -2) OVER (PARTITION BY user_id ORDER BY event_id)
+             AS prev2_or_neg2
+    FROM v
+    WINDOW w AS (PARTITION BY user_id ORDER BY event_id
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+    ORDER BY user_id, event_id
+    """,
+)
+def window_value_functions_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "events")
+    v = e.filter((F.col("event_type") == "click") & (F.col("user_id") < 40)).select(
+        "user_id",
+        "event_id",
+        F.when(
+            F.col("event_id") % 3 == 0, F.lit(None).cast("long")
+        ).otherwise(F.expr("CAST(ROUND(value * 100) AS BIGINT)")).alias("c"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("event_id")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    wseq = Window.partitionBy("user_id").orderBy("event_id")
+    return v.select(
+        "user_id",
+        "event_id",
+        "c",
+        F.first("c").over(w).alias("first_raw"),
+        F.first("c", ignorenulls=True).over(w).alias("first_nn"),
+        F.last("c").over(w).alias("last_raw"),
+        F.last("c", ignorenulls=True).over(w).alias("last_nn"),
+        F.nth_value("c", 2).over(w).alias("second_val"),
+        F.lead("c", 1, -1).over(wseq).alias("next_or_neg1"),
+        F.lag("c", 2, -2).over(wseq).alias("prev2_or_neg2"),
+    ).orderBy("user_id", "event_id")
+
+
+# ---------------------------------------------------------------------------
+# Z-order clustering keys (the OPTIMIZE ZORDER primitive): interleave the
+# bits of (user_id, day) so rows near each other in EITHER dimension land
+# in the same file bucket — the write-layout op that lets zonemap
+# data-skipping prune on BOTH columns instead of one. The query computes
+# the 8+8-bit interleave in pure integer arithmetic (identical on both
+# engines), buckets rows by the top byte of the z-key (≈ a target file),
+# and reports each bucket's (user, day) bounding box — the zonemap a
+# scan would skip on. Narrow per-bucket spans on both dimensions ARE the
+# proof the layout works; a single-column sort gives narrow spans on one
+# dimension only.
+# ---------------------------------------------------------------------------
+def _sql_interleave8(a: str, b: str) -> str:
+    """Interleave the low 8 bits of a (even positions) and b (odd)."""
+    terms = []
+    for i in range(8):
+        terms.append(f"((({a} >> {i}) & 1) << {2 * i})")
+        terms.append(f"((({b} >> {i}) & 1) << {2 * i + 1})")
+    return "(" + " + ".join(terms) + ")"
+
+
+@register(
+    "zorder_layout_buckets",
+    oracle=f"""
+    WITH t AS (
+        SELECT user_id % 256 AS u,
+               CAST(CAST(ts AS DATE) - DATE '2024-01-01' AS BIGINT) % 256 AS d
+        FROM events
+    ),
+    z AS (
+        SELECT u, d, {_sql_interleave8('u', 'd')} AS zkey FROM t
+    )
+    SELECT zkey // 256 AS bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(MIN(u) AS BIGINT) AS u_min, CAST(MAX(u) AS BIGINT) AS u_max,
+           CAST(MIN(d) AS BIGINT) AS d_min, CAST(MAX(d) AS BIGINT) AS d_max,
+           CAST(MAX(u) - MIN(u) AS BIGINT) AS u_span,
+           CAST(MAX(d) - MIN(d) AS BIGINT) AS d_span
+    FROM z GROUP BY bucket ORDER BY bucket
+    """,
+)
+def zorder_layout_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "events")
+    t = e.select(
+        (F.col("user_id") % 256).alias("u"),
+        F.expr(
+            "CAST(datediff(CAST(ts AS DATE), DATE '2024-01-01') AS BIGINT) % 256"
+        ).alias("d"),
+    )
+    z = t.withColumn("zkey", F.expr(_sql_interleave8("u", "d")))
+    return (
+        z.groupBy(F.expr("zkey div 256").alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("u").alias("u_min"),
+            F.max("u").alias("u_max"),
+            F.min("d").alias("d_min"),
+            F.max("d").alias("d_max"),
+            (F.max("u") - F.min("u")).alias("u_span"),
+            (F.max("d") - F.min("d")).alias("d_span"),
+        )
+        .orderBy("bucket")
+    )
+
+
+# ---------------------------------------------------------------------------
+# Multiset set operations: INTERSECT ALL / EXCEPT ALL keep per-row
+# multiplicity (min / truncated difference of duplicate counts) — the
+# bag semantics reconciliation jobs need (e.g. "how many event rows per
+# user survive in both snapshots"), distinct from the set-semantics entry
+# (`set_operations`). Count-only output keeps the compare stable.
+# ---------------------------------------------------------------------------
+@register(
+    "set_operations_all",
+    oracle="""
+    SELECT 'clicks_intersect_all_views' AS op, CAST(COUNT(*) AS BIGINT) AS n FROM
+      (SELECT user_id FROM events WHERE event_type = 'click'
+       INTERSECT ALL
+       SELECT user_id FROM events WHERE event_type = 'view')
+    UNION ALL
+    SELECT 'clicks_except_all_purchases' AS op, CAST(COUNT(*) AS BIGINT) AS n FROM
+      (SELECT user_id FROM events WHERE event_type = 'click'
+       EXCEPT ALL
+       SELECT user_id FROM events WHERE event_type = 'purchase')
+    ORDER BY op
+    """,
+)
+def set_operations_all(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, sf_dir, "events")
+    clicks = e.filter(F.col("event_type") == "click").select("user_id")
+    views = e.filter(F.col("event_type") == "view").select("user_id")
+    purchases = e.filter(F.col("event_type") == "purchase").select("user_id")
+    ia = clicks.intersectAll(views).agg(F.count(F.lit(1)).alias("n")).select(
+        F.lit("clicks_intersect_all_views").alias("op"), F.col("n").cast("long")
+    )
+    ea = clicks.exceptAll(purchases).agg(F.count(F.lit(1)).alias("n")).select(
+        F.lit("clicks_except_all_purchases").alias("op"), F.col("n").cast("long")
+    )
+    return ia.unionAll(ea).orderBy("op")
+
+
+# ---------------------------------------------------------------------------
+# Higher-order-function breadth, part 2: EXISTS / FORALL predicates and
+# ZIP_WITH over the embedding arrays — the remaining JVM-side array
+# lambdas beyond transform/filter/aggregate (array_higher_order_breadth).
+# All comparisons are against exact float literals, so booleans and the
+# integer zip result hash-match.
+# ---------------------------------------------------------------------------
+@register(
+    "array_hof_breadth_2",
+    oracle="""
+    SELECT vec_id,
+           len(embedding) = 64 AS right_dim,
+           list_has_any(list_transform(embedding, v -> v > 0.5), [TRUE])
+             AS any_gt_half,
+           NOT list_has_any(list_transform(embedding, v -> NOT (v > -1.0)), [TRUE])
+             AS all_gt_neg1,
+           CAST(list_sum(list_transform(
+               list_zip(embedding, list_reverse(embedding)),
+               p -> CASE WHEN CAST(p[1] AS DOUBLE) > CAST(p[2] AS DOUBLE)
+                         THEN 1 ELSE 0 END)) AS BIGINT) AS n_fwd_gt_rev
+    FROM embeddings ORDER BY vec_id
+    """,
+)
+def array_hof_breadth_2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    e = F.col("embedding")
+    return emb.select(
+        "vec_id",
+        (F.size(e) == 64).alias("right_dim"),
+        F.exists(e, lambda v: v > 0.5).alias("any_gt_half"),
+        F.forall(e, lambda v: v > -1.0).alias("all_gt_neg1"),
+        F.aggregate(
+            F.zip_with(
+                e,
+                F.reverse(e),
+                lambda a, b: F.when(
+                    a.cast("double") > b.cast("double"), F.lit(1)
+                ).otherwise(F.lit(0)),
+            ),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        ).alias("n_fwd_gt_rev"),
+    ).orderBy("vec_id")
+
+
+_SKEW_PROFILE_ORACLE = """
+    WITH counts AS (
+        SELECT user_id, CAST(COUNT(*) AS BIGINT) AS c
+        FROM events GROUP BY user_id
+    ),
+    top10 AS (
+        SELECT CAST(SUM(c) AS BIGINT) AS t
+        FROM (SELECT c FROM counts ORDER BY c DESC, user_id LIMIT 10)
+    )
+    SELECT CAST(SUM(c) AS BIGINT) AS n_rows,
+           CAST(COUNT(*) AS BIGINT) AS n_keys,
+           CAST(MAX(c) AS BIGINT) AS max_key_rows,
+           CAST((MAX(c) * 1000 * COUNT(*)) // SUM(c) AS BIGINT)
+             AS skew_factor_milli,
+           CAST(((SELECT t FROM top10) * 1000000) // SUM(c) AS BIGINT)
+             AS top10_share_ppm
+    FROM counts
+    """
+
+
+@register(
+    "join_skew_profile",
+    oracle=_SKEW_PROFILE_ORACLE,
+)
+def join_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Key-skew diagnosis for the events.user_id join/agg key — the
+    profile you run BEFORE choosing between a plain shuffle join, AQE
+    skew splitting, and explicit salting: total rows, distinct keys,
+    the heaviest key, skew factor (max/mean, milli-units) and the
+    top-10 keys' share (ppm). One keys-sized aggregate + a
+    TakeOrderedAndProject top-10 — no full sort, all integer-exact. At
+    100 TB the counts relation is keys-sized and the profile costs one
+    partial-aggregated scan."""
+    e = load_table(spark, sf_dir, "events")
+    counts = e.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    top10 = (
+        counts.orderBy(F.col("c").desc(), "user_id")
+        .limit(10)
+        .agg(F.sum("c").cast("long").alias("t"))
+    )
+    return (
+        counts.agg(
+            F.sum("c").cast("long").alias("n_rows"),
+            F.count(F.lit(1)).cast("long").alias("n_keys"),
+            F.max("c").cast("long").alias("max_key_rows"),
+            F.expr("(max(c) * 1000 * count(*)) div sum(c)")
+            .cast("long")
+            .alias("skew_factor_milli"),
+            F.sum("c").cast("long").alias("_n"),
+        )
+        .crossJoin(F.broadcast(top10))
+        .select(
+            "n_rows",
+            "n_keys",
+            "max_key_rows",
+            "skew_factor_milli",
+            F.expr("(t * 1000000) div _n").cast("long").alias("top10_share_ppm"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Skew-adaptive salted aggregation: the profile chooses the salt count.
+# Thresholds double per step — a skew factor of k means the hottest key
+# holds k partitions' worth of rows, so ~k-way splitting levels it; the
+# CASE ladder is the integer-exact form both engines state identically.
+# ---------------------------------------------------------------------------
+
+_SALT_LADDER_SQL = """
+    CASE WHEN skew_factor_milli >= 8000 THEN 16
+         WHEN skew_factor_milli >= 4000 THEN 8
+         WHEN skew_factor_milli >= 2000 THEN 4
+         WHEN skew_factor_milli >= 1250 THEN 2
+         ELSE 1 END
+"""
+
+
+def _salts_from_profile(skew_factor_milli: int) -> int:
+    # mirror of _SALT_LADDER_SQL, applied driver-side to the 1-row profile
+    for threshold, salts in ((8000, 16), (4000, 8), (2000, 4), (1250, 2)):
+        if skew_factor_milli >= threshold:
+            return salts
+    return 1
+
+
+def _skew_adaptive_oracle() -> str:
+    return f"""
+    WITH prof AS ({_SKEW_PROFILE_ORACLE}),
+    chosen AS (SELECT {_SALT_LADDER_SQL} AS n FROM prof),
+    counts AS (
+        SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events
+        FROM events GROUP BY user_id
+    )
+    SELECT user_id, n_events,
+           CAST((SELECT n FROM chosen) AS BIGINT) AS salts_used
+    FROM counts ORDER BY n_events DESC, user_id LIMIT 10
+    """
+
+
+@register("skew_adaptive_salted_agg", oracle=_skew_adaptive_oracle())
+def skew_adaptive_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-10 heaviest event users via a salted two-stage aggregation
+    whose salt count is CHOSEN from the measured ``join_skew_profile``
+    (the profile is finally load-bearing: mis-measuring skew changes
+    salts_used and fails the hash check).
+
+    The profile collect is ONE row — bounded plan-choice driver work,
+    the same class as AQE's runtime statistics. The aggregation itself
+    runs as groupBy(user_id, salt) partials then a keys-sized merge:
+    semantically identical to the plain groupBy (the oracle states the
+    plain form), physically resistant to a single pathological key that
+    AQE cannot subdivide inside one aggregation group. Salting must
+    change NOTHING about the result — that invariant is what the
+    cross-engine hash proves."""
+    prof = join_skew_profile(spark, sf_dir).collect()
+    skew = prof[0]["skew_factor_milli"] if prof else None
+    salts = _salts_from_profile(skew) if skew is not None else 1
+    e = load_table(spark, sf_dir, "events")
+    salted = e.withColumn(
+        "_salt", F.pmod(F.xxhash64("event_id"), F.lit(salts))
+    )
+    partial = salted.groupBy("user_id", "_salt").agg(
+        F.count(F.lit(1)).alias("_c")
+    )
+    merged = partial.groupBy("user_id").agg(
+        F.sum("_c").cast("long").alias("n_events")
+    )
+    return (
+        merged.orderBy(F.col("n_events").desc(), "user_id")
+        .limit(10)
+        .withColumn("salts_used", F.lit(salts).cast("long"))
     )

@@ -1,6 +1,6 @@
 """Streaming engagement profile: DAU / trailing-7-day WAU maintained
 incrementally across micro-batches — the streaming-grain twin of the
-batch ``dau_wau_engagement`` query (plans/core.py), built from the same
+batch ``dau_wau_engagement`` query (plans/streaming_events.py), built from the same
 pieces the reference's pipeline uses at daily grain
 (Load-gcs-to-bq/main.py:71-84 append + the stored procedures'
 delete-and-recompute of the current day): exactly-once presence ingest +

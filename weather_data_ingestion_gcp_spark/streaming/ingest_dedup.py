@@ -1,7 +1,7 @@
 """Streaming exactly-once DEDUPLICATING ingest onto the txlog table.
 
 The streaming-grain form of the batch ``incremental_ingest_dedup`` query
-(plans/datapipe.py): each micro-batch of incoming documents is deduped
+(plans/dedup_graph.py): each micro-batch of incoming documents is deduped
 in-batch, anti-joined against the already-ingested table, and appended
 under an (app_id, batch_id) transaction key — so the composition is
 exactly-once even across crash replays (the replayed batch re-runs its
