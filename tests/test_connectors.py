@@ -11,7 +11,9 @@ test pins the atomic-put landing contract.
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from weather_data_ingestion_gcp_spark.jobs import WeatherWarehouse
@@ -36,17 +38,17 @@ class RecordingStorage(TableStorage):
         self.calls.append(("exists", table))
         return self.inner.exists(table)
 
-    def append(self, df, table, partition_by, fmt="parquet"):
-        self.calls.append(("append", table, tuple(partition_by), fmt))
-        self.inner.append(df, table, partition_by, fmt=fmt)
+    def append(self, df, table, partition_by):
+        self.calls.append(("append", table, tuple(partition_by)))
+        self.inner.append(df, table, partition_by)
 
     def overwrite_partitions(self, df, table, partition_by):
         self.calls.append(("overwrite", table, tuple(partition_by)))
         self.inner.overwrite_partitions(df, table, partition_by)
 
-    def read(self, spark, table, schema=None, fmt="parquet"):
-        self.calls.append(("read", table, fmt))
-        return self.inner.read(spark, table, schema=schema, fmt=fmt)
+    def read(self, spark, table, schema=None):
+        self.calls.append(("read", table))
+        return self.inner.read(spark, table, schema=schema)
 
     def drop_partition(self, table, spec):
         self.calls.append(("drop_partition", table, spec))
@@ -60,10 +62,11 @@ def test_warehouse_jobs_route_through_storage_seam(spark, tmp_path):
 
     wh.load_and_transform(batch)
     ops = {c[0] for c in storage.calls}
-    assert ("append", "hourly", ("dt",), "parquet") in storage.calls
+    assert ("append", "hourly", ("dt",)) in storage.calls
     assert ("overwrite", "daily", ("part_month", "dt")) in storage.calls
-    # success log row went through the seam too (json log sink)
-    assert ("append", "logs", ("log_type", "message_type"), "json") in storage.calls
+    # the success log record is an object, not a table row
+    assert wh.read_logs().count() == 1
+    assert not any(c[1] == "logs" for c in storage.calls)
 
     # retention drops partitions only via the seam
     days = sorted({r["dt"] for r in hourly_rows(days=2)})
@@ -98,9 +101,33 @@ def test_object_store_landing_atomic_put(spark, tmp_path):
     assert path.startswith(store.uri())
     assert "20220701-230005" in path
     # no tmp residue — the put is atomic (rename) for the local binding
-    import os
-
     names = os.listdir(store.uri())
     assert len(names) == 1 and not names[0].endswith(".tmp")
     with open(path) as f:
         assert len([ln for ln in f if ln.strip()]) == df.count()
+
+
+def test_object_store_put_hides_partial_file(tmp_path, monkeypatch):
+    """A put that dies before its rename leaves nothing a Spark file
+    index would list: the partial object's name starts with '.'."""
+    store = LocalDirObjectStore(str(tmp_path / "bucket"))
+
+    def fail(src, dst):
+        raise OSError("rename failed")
+
+    monkeypatch.setattr(os, "rename", fail)
+    with pytest.raises(OSError):
+        store.put("a.json", "{}\n")
+    visible = [
+        f for _, _, fs in os.walk(store.uri()) for f in fs
+        if not f.startswith((".", "_"))
+    ]
+    assert visible == []
+
+
+def test_object_store_put_creates_nested_dirs(tmp_path):
+    store = LocalDirObjectStore(str(tmp_path / "bucket"))
+    path = store.put("k=v/j=w/part-0.json", '{"a": 1}\n')
+    assert path == str(tmp_path / "bucket" / "k=v" / "j=w" / "part-0.json")
+    with open(path) as f:
+        assert f.read() == '{"a": 1}\n'

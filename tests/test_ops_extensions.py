@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -844,6 +845,42 @@ def test_scalar_quantize_error_bound(spark):
     assert out[2].max_abs_err == 0.0
 
 
+def test_scalar_quantize_hostile_rows_match_the_per_row_expression(spark):
+    """NULL rows, NULL elements, empty arrays and ragged lengths give what
+    the per-row transform expression gave, and never crash the worker."""
+    rows = [
+        (1, [0.0, 1.0, 0.5, 0.25]),
+        (2, None),
+        (3, []),
+        (4, [0.1, None, 0.9, 0.33]),
+        (5, [0.3, 0.7]),
+        (6, [None, None]),
+        (7, [2.0, None]),
+        (8, [0.11, 0.52, 0.93, 0.24, 0.35]),
+    ]
+    d = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    v = F.col("embedding")
+    mn = F.array_min(v).cast("double")
+    mx = F.array_max(v).cast("double")
+    scale = (mx - mn) / F.lit(255.0)
+    err = F.transform(
+        v,
+        lambda x: F.abs(
+            x.cast("double") - (F.round((x.cast("double") - mn) / scale, 0) * scale + mn)
+        ),
+    )
+    ref = d.select(
+        "vec_id",
+        F.round(mn, 6).alias("q_min"),
+        F.round(mx, 6).alias("q_max"),
+        F.when(mx == mn, F.lit(0.0)).otherwise(F.round(F.array_max(err), 6)).alias("max_abs_err"),
+    )
+    got = {tuple(r) for r in similarity.scalar_quantize_stats(d).collect()}
+    assert got == {tuple(r) for r in ref.collect()}
+    by_id = {r[0]: r for r in got}
+    assert by_id[2][3] is None and by_id[3][3] is None and by_id[4][3] is not None
+
+
 def test_mmr_prefers_diversity_over_redundant_topk(spark):
     # cluster A near the query (ids 1,2,3 nearly identical), cluster B
     # orthogonal-ish (id 4). Pure top-2 would pick two A's; MMR picks A then B.
@@ -1143,6 +1180,47 @@ def test_semantic_prune_bucket_cap_sub_blocks(spark):
         small, tau=0.35, max_bucket_size=4
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+
+def test_semantic_prune_keeps_the_input_id_type(spark):
+    """String ids come back as strings: the verify's pair schema takes
+    the id column's type instead of assuming bigint."""
+    e1 = [1.0] + [0.0] * 63
+    e2 = [0.0, 1.0] + [0.0] * 62
+    emb = spark.createDataFrame(
+        [("a", e1), ("b", e1), ("c", e2), ("d", e1)],
+        "vec_id string, embedding array<double>",
+    )
+    for cap in (None, 2):
+        out = similarity.semantic_dedup_prune(emb, tau=0.9, max_bucket_size=cap)
+        assert out.schema["vec_id"].dataType.simpleString() == "string"
+        got = {r.vec_id: (r.kept, r.n_near) for r in out.collect()}
+        assert got["c"] == (True, 0) and got["a"][0] and not got["d"][0]
+
+
+def test_semantic_prune_bucket_returns_only_near_pairs(spark, monkeypatch):
+    """An uncapped bucket of 300 vectors with no near-duplicates: the
+    Arrow verify pass returns no pairs (not all 44,850). A zero vector's
+    NaN cosines stay in its output, so Spark still decides them: NaN
+    crosses Arrow as NULL and fails ``>= tau``."""
+    from pyspark.sql.group import GroupedData
+
+    verified = []
+    apply = GroupedData.applyInPandas
+
+    def capture(self, func, schema):
+        verified.append(apply(self, func, schema))
+        return verified[-1]
+
+    monkeypatch.setattr(GroupedData, "applyInPandas", capture)
+    X = np.random.default_rng(7).standard_normal((300, 64))
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(X)]
+    for extra, n_pairs in (([], 0), ([(300, [0.0] * 64)], 300)):
+        emb = spark.createDataFrame(rows + extra, "vec_id bigint, embedding array<double>")
+        one_bucket = emb.select("vec_id", F.lit(0).alias("band"), F.lit(0).alias("bsig"))
+        out = similarity.semantic_dedup_prune(emb, tau=0.9, bands=one_bucket)
+        assert {(r.kept, r.n_near) for r in out.collect()} == {(True, 0)}
+        assert verified[-1].count() == n_pairs
 
 
 def test_blocked_jaccard_grouped_matches_pairs_join_form(spark):

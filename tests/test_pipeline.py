@@ -69,6 +69,55 @@ def test_read_daily_starts_no_job(spark, tmp_path):
     assert daily.count() == 2
 
 
+def test_log_starts_no_job(spark, tmp_path):
+    """An op-log record is one object put: no Spark job runs."""
+    wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    wh.log(log_type="bq-load-logging", message_type="success", message="ok", extra="dropped")
+    assert scheduler.nextJobId() == before
+    [row] = wh.read_logs().collect()
+    assert (row.log_type, row.message_type, row.message) == ("bq-load-logging", "success", "ok")
+    assert (row.project, row.service, row.file_name) == ("local", "spark-job", None)
+
+
+def test_log_objects_read_back_as_a_partitioned_json_write(spark, tmp_path):
+    """Differential: the same records written by a
+    partitionBy("log_type", "message_type") JSON write and by the op-log
+    object sink read back as the same rows, partition columns included —
+    with NULL fields, NULL/empty partition values and values Spark must
+    escape in a directory name."""
+    from weather_data_ingestion_gcp_spark.jobs import _partition_dir
+    from weather_data_ingestion_gcp_spark.schemas import LOG_SCHEMA
+
+    base = {f.name: None for f in LOG_SCHEMA.fields}
+    base.update(project="local", service="spark-job", runtime="20220701-23:00:05")
+    records = [
+        dict(base, log_type="bq-load-logging", message_type="success", message="loaded 1 day(s)"),
+        dict(base, log_type="api-logging", message_type="error", file_name="f.json",
+             message='a "quoted"\nline \\ é ☃ 😀'),
+        dict(base, log_type="bq-cleanup-logging", message_type=None, message="no type"),
+        dict(base, log_type="a/b=c d", message_type="success", process="p"),
+        dict(base, log_type="x:y?z#%{}[]^'*\\\x01\x7fé", message_type=""),
+        dict(base, log_type=None, message_type="success", service=None),
+    ]
+    spark.createDataFrame(records, LOG_SCHEMA).write.partitionBy(
+        "log_type", "message_type"
+    ).json(str(tmp_path / "spark_write"))
+    by_spark = spark.read.schema(LOG_SCHEMA).json(str(tmp_path / "spark_write"))
+    wh = WeatherWarehouse(spark, str(tmp_path / "wh"))
+    for r in records:
+        wh.log(**r)
+    by_sink = wh.read_logs()
+    assert by_sink.columns == by_spark.columns
+    assert len(records) == by_sink.count()
+    assert set(map(tuple, by_sink.collect())) == set(map(tuple, by_spark.collect()))
+    # directory names are escaped character for character as Spark's writer does
+    esc = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    for c in [*map(chr, range(1, 256)), "☃", "😀"]:
+        assert _partition_dir("c", c) == "c=" + esc.escapePathName(c), repr(c)
+
+
 def test_load_and_transform_and_idempotent_refresh(spark, tmp_path):
     landing = str(tmp_path / "landing")
     n = _land_fixture(spark, landing)

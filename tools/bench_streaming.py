@@ -13,12 +13,13 @@ import json
 import sys
 import tempfile
 import time
+from pathlib import Path
 
 
 def main() -> int:
     n_files = int(sys.argv[1]) if len(sys.argv) > 1 else 8
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from pyspark.sql import functions as F
 
     from tests.conftest import hourly_rows

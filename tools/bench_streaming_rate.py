@@ -18,13 +18,14 @@ import json
 import sys
 import tempfile
 import time
+from pathlib import Path
 
 
 def main() -> int:
     rows_per_sec = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
     run_secs = int(sys.argv[2]) if len(sys.argv) > 2 else 20
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from pyspark.sql import functions as F
 
     from weather_data_ingestion_gcp_spark.session import get_spark

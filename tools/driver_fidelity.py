@@ -16,10 +16,11 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from parity import normalize_cell, rowset  # noqa: E402  (same dir)
 
 
@@ -111,5 +112,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.path.insert(0, "/root/repo/tools")
     raise SystemExit(main())

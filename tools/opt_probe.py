@@ -13,13 +13,14 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
 
 def main() -> int:
     outdir = sys.argv[1]
     names = sys.argv[2:]
     os.makedirs(outdir, exist_ok=True)
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from weather_data_ingestion_gcp_spark.plans import QUERIES
     from weather_data_ingestion_gcp_spark.session import get_spark
 

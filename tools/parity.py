@@ -11,10 +11,11 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from weather_data_ingestion_gcp_spark.plans.registry import type_class  # noqa: E402
 
 
@@ -51,7 +52,6 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as e
     from weather_data_ingestion_gcp_spark.session import get_spark
 

@@ -11,8 +11,9 @@ Layout (all paths under one warehouse root):
   (sp_...create...sql:22-23) for month-range scans, the nested dt level
   gives the delete-today-+-reinsert upsert (sp_...update...sql:2-5) exact
   per-day dynamic-partition-overwrite semantics.
-- ``logs/``    — op log rows, partitioned log_type/message_type
-  (Load-logs/main.py:48-50).
+- ``logs/``    — op-log records, one NDJSON object each under log_type=/
+  message_type= (Load-logs/main.py:48-50), put through ``ObjectStore``
+  whatever the table binding: the reference logs to a bucket.
 
 Sequencing note: the reference submits the BigQuery load job and CALLs the
 transform without awaiting the load (T10 race, Load-gcs-to-bq/main.py:79-92);
@@ -22,29 +23,40 @@ here append-then-refresh is sequential by construction — an intentional fix.
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
+import uuid
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DateType, StructField, StructType
 
 from .operators.rollup import daily_rollup
 from .schemas import DAILY_SCHEMA, LOG_SCHEMA, WEATHER_SCHEMA
-from .sources.connectors import ParquetTableStorage, TableStorage
+from .sources.connectors import LocalDirObjectStore, ParquetTableStorage, TableStorage
 
 
 #: the daily table as stored: DAILY_SCHEMA plus its month partition column
 _STORED_DAILY = StructType([*DAILY_SCHEMA.fields, StructField("part_month", DateType())])
 
+#: the characters Spark's writer escapes as %XX in a partition directory
+#: name (ExternalCatalogUtils.escapePathName)
+_PATH_ESCAPED = frozenset(map(chr, range(1, 32))) | frozenset("\"#%'*/:=?[\\]^{\x7f")
+
+
+def _partition_dir(col: str, value: str | None) -> str:
+    """``col=value`` named as a ``partitionBy`` write names it."""
+    esc = "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c for c in value or "")
+    return f"{col}={esc or '__HIVE_DEFAULT_PARTITION__'}"
+
 
 class WeatherWarehouse:
-    """Jobs depend only on the ``TableStorage`` seam — the default is the
+    """Tables go through the ``TableStorage`` seam — the default is the
     partitioned-parquet binding, and a BigQuery-backed implementation
     (the reference's actual substrate, Load-gcs-to-bq/main.py:71-84)
     slots in via the ``storage`` argument without touching this class
-    (see sources/connectors.py)."""
+    (see sources/connectors.py). Op-log records go through the
+    ``ObjectStore`` seam, as objects under ``logs_path``."""
 
     def __init__(self, spark: SparkSession, root: str,
                  storage: TableStorage | None = None):
@@ -54,6 +66,7 @@ class WeatherWarehouse:
         self.hourly_path = os.path.join(root, "hourly")
         self.daily_path = os.path.join(root, "daily")
         self.logs_path = os.path.join(root, "logs")
+        self.log_store = LocalDirObjectStore(self.logs_path)
 
     # -- raw layer ----------------------------------------------------------
 
@@ -127,26 +140,20 @@ class WeatherWarehouse:
     # -- log sink ---------------------------------------------------------------
 
     def log(self, **fields) -> None:
-        """S5/S15: structured op-log row -> partitioned log table
+        """S5/S15: one op-log record -> one NDJSON object, no Spark job
         (MESSAGE_DATA template, Load-Data-From-API/main.py:32-38; sink
-        partitioning Load-logs/main.py:48-50)."""
-        base = {f.name: None for f in LOG_SCHEMA.fields}
-        base.update(
-            project="local",
-            service="spark-job",
-            runtime=dt.datetime.now().strftime("%Y%m%d-%H:%M:%S"),
-        )
-        base.update(fields)
-        # Arrow-built: a list-built frame re-serializes through Python workers
-        row_df = self.spark.createDataFrame(
-            pa.Table.from_pylist([base], schema=to_arrow_schema(LOG_SCHEMA))
-        )
-        self.storage.append(
-            row_df, "logs", ["log_type", "message_type"], fmt="json"
-        )
+        Load-logs/main.py:48-50). It is laid out as a JSON
+        ``partitionBy("log_type", "message_type")`` write lays out a row:
+        partition values in the path, NULL fields omitted."""
+        now = dt.datetime.now().strftime("%Y%m%d-%H:%M:%S")
+        record = {"project": "local", "service": "spark-job", "runtime": now, **fields}
+        row = {f.name: record.get(f.name) for f in LOG_SCHEMA.fields}
+        parts = [_partition_dir(c, row.pop(c)) for c in ("log_type", "message_type")]
+        body = json.dumps({k: v for k, v in row.items() if v is not None})
+        self.log_store.put("/".join([*parts, f"part-{uuid.uuid4()}.json"]), body + "\n")
 
     def read_logs(self) -> DataFrame:
-        return self.storage.read(self.spark, "logs", schema=LOG_SCHEMA, fmt="json")
+        return self.spark.read.schema(LOG_SCHEMA).json(self.logs_path)
 
     # -- the load+transform entry point (main_gcs analog) ---------------------
 

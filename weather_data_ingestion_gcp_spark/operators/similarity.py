@@ -517,11 +517,11 @@ def scalar_quantize_stats(
     the non-negative q = (x-mn)/scale — the same result as Spark's
     HALF_UP ``round(q, 0)`` (q >= 0 always: mn is the row minimum), with
     no ``q + 0.5`` float-addition hazard; all remaining ops are the same
-    IEEE doubles in the same order. Precondition (unchanged in practice,
-    now explicit): vector elements are non-NULL — the old lambda
-    propagated NULL elements into a NULL error cell that array_max then
-    skipped; the Arrow path requires dense arrays, as every caller
-    (parquet float arrays) provides."""
+    IEEE doubles in the same order. Rows are stacked by length, so a
+    dense batch is one matrix and ragged rows still get per-row results.
+    Hostile rows get what the lambda gave: a NULL or empty vector has no
+    range and yields NULL, and a NULL element (NaN in the batch) is
+    skipped by ``nanmax`` as array_max skipped the lambda's NULL cell."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import DoubleType
 
@@ -530,13 +530,19 @@ def scalar_quantize_stats(
 
     @pandas_udf(DoubleType())
     def _max_abs_err(vs: pd.Series, mns: pd.Series, mxs: pd.Series) -> pd.Series:
-        X = np.stack(vs.to_numpy()).astype(np.float64)
-        mn_a = mns.to_numpy(dtype=np.float64)[:, None]
-        s = (mxs.to_numpy(dtype=np.float64)[:, None] - mn_a) / 255.0
-        q = (X - mn_a) / s
-        fl = np.floor(q)
-        r = fl + ((q - fl) >= 0.5)  # exact HALF_UP for non-negative q
-        return pd.Series(np.abs(X - (r * s + mn_a)).max(axis=1))
+        vals = vs.to_numpy()
+        lens = np.array([0 if v is None else len(v) for v in vals])
+        out = np.full(len(vals), np.nan)  # NaN returns as a NULL cell
+        for n in np.unique(lens[lens > 0]):
+            idx = np.flatnonzero(lens == n)
+            X = np.stack(vals[idx]).astype(np.float64)
+            mn_a = mns.to_numpy(dtype=np.float64)[idx, None]
+            s = (mxs.to_numpy(dtype=np.float64)[idx, None] - mn_a) / 255.0
+            q = (X - mn_a) / s
+            fl = np.floor(q)
+            r = fl + ((q - fl) >= 0.5)  # exact HALF_UP for non-negative q
+            out[idx] = np.nanmax(np.abs(X - (r * s + mn_a)), axis=1)
+        return pd.Series(out)
 
     return df.select(
         F.col(id_col),
@@ -708,24 +714,19 @@ def semantic_dedup_prune(
     # Parity: ascending-dim accumulation is the exact IEEE sequence of
     # the `_dot` fold and DuckDB's list_dot_product (the round-7
     # semdecon recipe); sqrt/divide association matches the old
-    # dot/(na*nb) expression; float32 -> float64 widening is exact; the
-    # 6-dp round + >= tau decision stays in Spark, unchanged. Tiling
-    # bounds per-group memory at TILE^2 doubles regardless of bucket
-    # size (the capped path never exceeds max_bucket_size anyway).
+    # dot/(na*nb) expression; float32 -> float64 widening is exact. The
+    # 6-dp round + >= tau decision stays in Spark: the pass drops only
+    # pairs under a floor below it, so a bucket yields its near-dup
+    # pairs, not all n(n-1)/2. A NaN cosine (a zero vector) is never
+    # under the floor, so it stays and Spark still decides it. Tiling bounds
+    # per-group memory at TILE^2 doubles regardless of bucket size.
     TILE = 1024
+    floor = tau - 1e-6
 
     def _bucket_verify(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("_vid")
         ids = pdf["_vid"].to_numpy()
         n = len(ids)
-        if n < 2:
-            return pd.DataFrame(
-                {
-                    "id_a": pd.Series(dtype="int64"),
-                    "id_b": pd.Series(dtype="int64"),
-                    "raw": pd.Series(dtype="float64"),
-                }
-            )
         X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
         dim_n = X.shape[1]
         ss = np.zeros(n, dtype=np.float64)
@@ -742,7 +743,8 @@ def semantic_dedup_prune(
                     acc += np.outer(X[i0:i1, d], X[j0:j1, d])
                 raw = acc / np.outer(nrm[i0:i1], nrm[j0:j1])
                 ii, jj = np.indices(raw.shape)
-                keep = (i0 + ii) < (j0 + jj)  # upper triangle, id_a < id_b
+                # upper triangle (id_a < id_b), minus pairs under the floor
+                keep = ((i0 + ii) < (j0 + jj)) & ~(raw < floor)
                 out_a.append(ids[i0 + ii[keep]])
                 out_b.append(ids[j0 + jj[keep]])
                 out_r.append(raw[keep])
@@ -760,8 +762,9 @@ def semantic_dedup_prune(
         ),
         bands[id_col] == F.col("_vid"),
     ).select("_vid", "_v", *bkeys)
+    id_type = emb.schema[id_col].dataType.simpleString()
     raw_pairs = cand.groupBy(*bkeys).applyInPandas(
-        _bucket_verify, "id_a long, id_b long, raw double"
+        _bucket_verify, f"id_a {id_type}, id_b {id_type}, raw double"
     )
     # referenced 3x below (both partner sides + the dropped set); without
     # a persist each reference re-runs the band join AND the Arrow cosine

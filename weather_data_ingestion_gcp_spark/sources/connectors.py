@@ -42,8 +42,9 @@ from pyspark.sql import functions as F
 
 
 class ObjectStore(abc.ABC):
-    """Where landed files live. URI-oriented: implementations return
-    paths/URIs that Spark's readers resolve via Hadoop-FS."""
+    """Where objects live: landed files and op-log records.
+    URI-oriented: implementations return paths/URIs that Spark's readers
+    resolve via Hadoop-FS."""
 
     @abc.abstractmethod
     def ensure(self) -> None:
@@ -58,9 +59,10 @@ class ObjectStore(abc.ABC):
     def put(self, name: str, data: str) -> str:
         """Atomically write one object (the reference's
         ``blob.upload_from_filename``, main.py:145-152) and return its
-        URI. Atomic means a reader (the streaming file source) never
-        observes a partial object — native for real object stores,
-        tmp-file + rename for the local binding."""
+        URI; a name may contain ``/``. Atomic means a reader (the
+        streaming file source) never observes a partial object — native
+        for real object stores, hidden tmp-file + rename for the local
+        binding."""
 
 
 class LocalDirObjectStore(ObjectStore):
@@ -76,9 +78,11 @@ class LocalDirObjectStore(ObjectStore):
         return os.path.join(self.root, name) if name else self.root
 
     def put(self, name: str, data: str) -> str:
-        self.ensure()
         path = self.uri(name)
-        tmp = path + ".tmp"
+        parent, base = os.path.split(path)
+        os.makedirs(parent, exist_ok=True)
+        # a leading "." hides the partial file from Spark's file index
+        tmp = os.path.join(parent, f".{base}.tmp")
         with open(tmp, "w") as f:
             f.write(data)
         os.rename(tmp, path)  # readers never see partial files
@@ -87,15 +91,15 @@ class LocalDirObjectStore(ObjectStore):
 
 class TableStorage(abc.ABC):
     """The five storage operations the warehouse jobs need. Table names
-    are logical (``hourly``, ``daily``, ``logs``); implementations map
-    them to physical locations/datasets."""
+    are logical (``hourly``, ``daily``); implementations map them to
+    physical locations/datasets. Op-log records are objects, not table
+    rows: they go through ``ObjectStore`` (see ``WeatherWarehouse.log``)."""
 
     @abc.abstractmethod
     def exists(self, table: str) -> bool: ...
 
     @abc.abstractmethod
-    def append(self, df: DataFrame, table: str, partition_by: list[str],
-               fmt: str = "parquet") -> None: ...
+    def append(self, df: DataFrame, table: str, partition_by: list[str]) -> None: ...
 
     @abc.abstractmethod
     def overwrite_partitions(self, df: DataFrame, table: str,
@@ -104,8 +108,7 @@ class TableStorage(abc.ABC):
         delete+insert upsert of sp_...update...sql:2-36)."""
 
     @abc.abstractmethod
-    def read(self, spark: SparkSession, table: str, schema=None,
-             fmt: str = "parquet") -> DataFrame: ...
+    def read(self, spark: SparkSession, table: str, schema=None) -> DataFrame: ...
 
     @abc.abstractmethod
     def drop_partition(self, table: str, spec: str) -> bool:
@@ -114,8 +117,8 @@ class TableStorage(abc.ABC):
 
 
 class ParquetTableStorage(TableStorage):
-    """Default binding: one partitioned parquet (or json, for the log
-    sink) directory per table under a warehouse root."""
+    """Default binding: one partitioned parquet directory per table under
+    a warehouse root."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -130,12 +133,11 @@ class ParquetTableStorage(TableStorage):
         fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
         return bool(fs.exists(p))
 
-    def append(self, df: DataFrame, table: str, partition_by: list[str],
-               fmt: str = "parquet") -> None:
+    def append(self, df: DataFrame, table: str, partition_by: list[str]) -> None:
         w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
-        w.format(fmt).save(self.path(table))
+        w.parquet(self.path(table))
 
     def overwrite_partitions(self, df: DataFrame, table: str,
                              partition_by: list[str]) -> None:
@@ -146,12 +148,11 @@ class ParquetTableStorage(TableStorage):
             .parquet(self.path(table))
         )
 
-    def read(self, spark: SparkSession, table: str, schema=None,
-             fmt: str = "parquet") -> DataFrame:
+    def read(self, spark: SparkSession, table: str, schema=None) -> DataFrame:
         reader = spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.format(fmt).load(self.path(table))
+        return reader.parquet(self.path(table))
 
     def drop_partition(self, table: str, spec: str) -> bool:
         jvm = self.spark._jvm
@@ -180,8 +181,7 @@ class BigQueryTableStorage(TableStorage):
       Date-typed partition columns become BigQuery DAY column
       partitioning (``partitionField``/``partitionType``); non-date
       partition_by columns become ``clusteredFields`` (BigQuery cannot
-      column-partition on strings — the reference's log table is in
-      practice ingestion-time partitioned).
+      column-partition on strings).
     - ``overwrite_partitions`` -> one connector write per distinct day
       with ``datePartition=YYYYMMDD`` + ``mode("overwrite")`` — the
       connector's documented single-partition replace. Each day lands
@@ -273,9 +273,7 @@ class BigQueryTableStorage(TableStorage):
                 return False
             raise
 
-    def append(self, df: DataFrame, table: str, partition_by: list[str],
-               fmt: str = "parquet") -> None:
-        # fmt is a file-format concept; BigQuery stores rows natively.
+    def append(self, df: DataFrame, table: str, partition_by: list[str]) -> None:
         w = self._writer(df, table).mode("append")
         if partition_by:
             part_col = partition_by[-1]
@@ -377,8 +375,7 @@ class BigQueryTableStorage(TableStorage):
         finally:
             df.unpersist()
 
-    def read(self, spark: SparkSession, table: str, schema=None,
-             fmt: str = "parquet") -> DataFrame:
+    def read(self, spark: SparkSession, table: str, schema=None) -> DataFrame:
         return (
             spark.read.format(self.format_name)
             .option("table", self.table_ref(table))

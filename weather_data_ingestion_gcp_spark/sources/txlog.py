@@ -939,8 +939,7 @@ class TxLogTableStorage:
     def exists(self, table: str) -> bool:
         return self.table(table).exists()
 
-    def append(self, df: DataFrame, table: str, partition_by: list[str],
-               fmt: str = "parquet") -> None:
+    def append(self, df: DataFrame, table: str, partition_by: list[str]) -> None:
         # partitioning is logical here: the txlog prunes at file grain
         # via per-file stats instead of directory layout
         self.table(table).append(df)
@@ -969,8 +968,7 @@ class TxLogTableStorage:
         else:
             t.append(df)
 
-    def read(self, spark: SparkSession, table: str, schema=None,
-             fmt: str = "parquet") -> DataFrame:
+    def read(self, spark: SparkSession, table: str, schema=None) -> DataFrame:
         t = self.table(table)
         if t.exists() and not t.active_files():
             # all rows deleted (e.g. full retention cleanup): behave like
