@@ -305,3 +305,32 @@ def test_sink_entry_big_input_path_matches_small_path(spark, monkeypatch):
         b = big[d]
         assert (s.dau, s.wau, s.stickiness) == (b.dau, b.wau, b.stickiness)
         assert s.agrees_with_batch and b.agrees_with_batch
+
+
+def test_sink_batch_replays_each_log_at_most_twice(spark, tmp_path, monkeypatch):
+    """Per batch, the sink replays the presence log for its read and its
+    append (plus one commit_info read) and the profile log once for its
+    replace_range — not once per helper call."""
+    presence = TxLogTable(str(tmp_path / "presence"))
+    profile = TxLogTable(str(tmp_path / "profile"))
+    sink = engagement_sink(presence, profile, "engage-reads")
+    reads = {presence.root: 0, profile.root: 0}
+    orig = TxLogTable._read_commit
+
+    def counting(self, v):
+        reads[self.root] += 1
+        return orig(self, v)
+
+    monkeypatch.setattr(TxLogTable, "_read_commit", counting)
+    for b in range(8):
+        reads.update({presence.root: 0, profile.root: 0})
+        ts = _BASE + dt.timedelta(days=b)
+        sink(
+            spark.createDataFrame(
+                [(b * 10 + u, u, ts) for u in range(3)], _SCHEMA
+            ),
+            b,
+        )
+    assert presence.version() == 7 and profile.version() == 7
+    assert reads[presence.root] <= 17
+    assert reads[profile.root] <= 8

@@ -217,9 +217,11 @@ def test_warehouse_runs_on_txlog_binding(spark, tmp_path):
     empty = wh.read_hourly()
     assert empty.count() == 0
     assert empty.schema == WEATHER_SCHEMA
-    # the raw table API (no schema to synthesize from) still raises
-    with pytest.raises(FileNotFoundError):
-        storage.table("hourly").read(spark).count()
+    # the raw table API reads the emptied table under its committed
+    # schema too
+    raw_empty = storage.table("hourly").read(spark)
+    assert raw_empty.count() == 0
+    assert set(raw_empty.columns) == set(empty.columns)
     # and a schema-less seam read reconstructs types from the log
     seam_empty = storage.read(spark, "hourly")
     assert seam_empty.count() == 0
@@ -487,7 +489,7 @@ def test_txlog_matches_set_model_under_random_ops(spark, tmp_path_factory, ops):
 
 def test_concurrent_appenders_all_land(spark, tmp_path):
     """Real threaded writers racing the O_EXCL arbiter: every append
-    lands exactly once under append_with_retry, version numbers are
+    lands exactly once under append's commit retry, version numbers are
     dense, and the final table holds every writer's rows."""
     import threading
 
@@ -500,7 +502,7 @@ def test_concurrent_appenders_all_land(spark, tmp_path):
                 df = spark.createDataFrame(
                     [(w * 100 + i, w)], "id long, k long"
                 )
-                t.append_with_retry(df)
+                t.append(df)
         except Exception as exc:  # pragma: no cover
             errs.append(exc)
 
@@ -1086,3 +1088,59 @@ def test_file_stats_survive_checkpoint_fold(spark, tmp_path):
         spark.createDataFrame([(dt.date(2025, 1, 1), 7)], "d date, v int"),
     )
     assert orig <= set(t.active_files())
+
+
+def test_additive_column_survives_read_compact_and_delete(
+    spark, tmp_path, monkeypatch
+):
+    """Every read is typed by the committed schema, not by whichever
+    data file sorts first: with the pre-evolution file first in the
+    snapshot, the new column's values must survive read(), compact()
+    (which rewrites every file) and a delete_where on an old row."""
+    import itertools
+    import uuid
+
+    from weather_data_ingestion_gcp_spark.sources import txlog
+
+    n = itertools.count(1)
+    # increasing staging-dir names: the first append's file sorts first
+    monkeypatch.setattr(
+        txlog.uuid, "uuid4", lambda: uuid.UUID(int=next(n) << 80)
+    )
+    t = TxLogTable(str(tmp_path / "t"))
+    t.append(spark.range(3).select("id"))
+    t.append(
+        spark.range(3, 6).select(
+            "id", F.concat(F.lit("l"), F.col("id").cast("string")).alias("lang")
+        )
+    )
+    assert t.active_files()[0] in t.history()[0]["add"]
+
+    def langs():
+        return sorted(
+            r.lang for r in t.read(spark).collect() if r.lang is not None
+        )
+
+    assert langs() == ["l3", "l4", "l5"]
+    t.compact(spark)
+    assert langs() == ["l3", "l4", "l5"]
+    t.delete_where(spark, "id = 0")
+    assert langs() == ["l3", "l4", "l5"]
+    assert t.read(spark).count() == 5
+
+
+def test_replay_starts_at_the_newest_checkpoint(spark, tmp_path, monkeypatch):
+    """A read right after checkpoint() reads one commit file — the
+    checkpoint — not the whole log."""
+    t = TxLogTable(str(tmp_path / "t"))
+    for i in range(8):
+        t.append(_df(spark, 2, offset=10 * i))
+    t.checkpoint()
+    reads = []
+    orig = TxLogTable._read_commit
+    monkeypatch.setattr(
+        TxLogTable, "_read_commit",
+        lambda self, v: reads.append(v) or orig(self, v),
+    )
+    assert t.read(spark).count() == 16
+    assert reads == [8]

@@ -1,10 +1,11 @@
 """Streaming throughput: rate source -> event-time tumbling-window count
 with watermark, measured in rows/sec of sustained processing.
 
-Complements tools/bench_streaming.py (per-file load-path latency) with the
-sustained-ingest number a capacity plan needs: how many events/sec one
-node pushes through a watermarked windowed aggregation (the §2.7 T3 shape
-under continuous arrival instead of file batches). The rate source is
+This is the sustained-ingest number a capacity plan needs: how many
+events/sec one node pushes through a watermarked windowed aggregation
+(the §2.7 T3 shape under continuous arrival instead of file batches;
+perfbench's ``ingest_backfill`` times the file-batch load path). The
+rate source is
 Spark's built-in backpressure-free generator, so the measurement is the
 aggregation pipeline, not a source bottleneck.
 

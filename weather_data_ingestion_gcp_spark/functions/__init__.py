@@ -3,8 +3,6 @@
 from .scalar import (  # noqa: F401
     decode_pubsub_payload,
     filename_cleanup,
-    gcs_uri,
-    log_path,
     path_stem,
     runtime_stamp,
     stable_uuid,

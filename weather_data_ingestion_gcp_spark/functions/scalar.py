@@ -22,16 +22,6 @@ def path_stem(path: Column) -> Column:
     return F.regexp_extract(path, r"([^/]+?)(\.[^./]*)?$", 1)
 
 
-def gcs_uri(bucket: Column, name: Column) -> Column:
-    """P6 — gs://bucket/name (Load-gcs-to-bq/main.py:35-36)."""
-    return F.concat(F.lit("gs://"), bucket, F.lit("/"), name)
-
-
-def log_path(log_type: Column, message_type: Column, file_name: Column) -> Column:
-    """P6 — log_type/message_type/file partition path (Load-logs/main.py:48-50)."""
-    return F.concat_ws("/", log_type, message_type, file_name)
-
-
 def runtime_stamp(ts: Column) -> Column:
     """P5 — "%Y%m%d-%H:%M:%S" runtime stamp (Load-Data-From-API/main.py:16)."""
     return F.date_format(ts, "yyyyMMdd-HH:mm:ss")

@@ -1294,10 +1294,9 @@ def _staged_sink_run(
     e.unpersist()
 
     def _read_or_empty(t: TxLogTable, ddl: str) -> DataFrame:
-        # empty input: the sink commits empty batches (txn monotonicity)
-        # but never writes the profile, and TxLogTable.read raises on a
-        # file-less table — degrade to empty typed frames
-        if not t.exists() or not t.active_files():
+        # empty input: the sink never writes the profile, and
+        # TxLogTable.read raises on a table with no commits
+        if not t.exists():
             return spark.createDataFrame([], ddl)
         return t.read(spark)
 

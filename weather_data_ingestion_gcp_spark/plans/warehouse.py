@@ -19,6 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions import (
+    decode_pubsub_payload,
+    filename_cleanup,
+    path_stem,
+    runtime_stamp,
+)
 from ..operators import text
 from .registry import _cents, load_table, register
 
@@ -183,11 +189,11 @@ def regex_filename_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     fn = F.concat(
         F.lit("hourly-weather-data-json-"),
-        F.date_format("ts", "yyyyMMdd-HH:mm:ss"),
+        runtime_stamp(F.col("ts")),
         F.lit(".json"),
     )
     return (
-        e.select(F.regexp_replace(fn, r"-json-\d{8}-\d{2}:\d{2}:\d{2}", "").alias("cleaned"))
+        e.select(filename_cleanup(fn).alias("cleaned"))
         .groupBy("cleaned")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("cleaned")
@@ -209,10 +215,7 @@ def regex_filename_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def path_stem_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     path = F.concat(F.col("source"), F.lit("/doc-"), F.col("doc_id").cast("string"), F.lit(".json"))
-    return d.select(
-        "doc_id",
-        F.regexp_extract(path, r"([^/]+?)(\.[^./]*)?$", 1).alias("stem"),
-    ).orderBy("doc_id")
+    return d.select("doc_id", path_stem(path).alias("stem")).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -265,7 +268,7 @@ def base64_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         b64.alias("b64"),
-        F.unbase64(b64).cast("string").alias("decoded"),
+        decode_pubsub_payload(b64).alias("decoded"),
     ).orderBy("doc_id")
 
 
@@ -291,7 +294,7 @@ def log_path_and_format(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws("/", F.col("event_type"), (F.col("user_id") % 10).cast("string")).alias(
                 "log_path"
             ),
-            F.date_format("ts", "yyyyMMdd-HH:mm:ss").alias("rt"),
+            runtime_stamp(F.col("ts")).alias("rt"),
             F.date_format("ts", "yyyy").alias("y"),
         )
         .groupBy("log_path")

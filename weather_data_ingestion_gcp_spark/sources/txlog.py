@@ -15,19 +15,22 @@ row-level semantics without a whole-partition rewrite:
   writers race on ``os.O_EXCL`` creation of the next version — the loser
   gets a ``CommitConflict`` and retries on a fresh snapshot (optimistic
   concurrency, single-table granularity, exactly Delta's protocol shape).
-- **Snapshot reads**: replaying the log yields the active file set; a
-  read is ``spark.read.parquet(*active_files)`` — O(log) driver work,
-  data reads unchanged. ``version=`` gives time travel for free.
+- **Snapshot reads**: replaying the log yields the live file set and
+  the committed schema (the union of additive evolution); every data
+  read is ``spark.read.schema(<committed schema>).parquet(*files)``, so
+  a file that predates a column null-fills it. ``version=`` gives time
+  travel for free.
 - **Row-level DELETE**: rewrite ONLY the data files that contain matching
   rows (min/max-style pruning via a per-file metadata filter scan), commit
   remove(old)+add(rewritten). Files with no matches are untouched — at
   100 TB a DELETE touching one day's bad rows rewrites that day's files,
   never the table.
 
-Scale notes: the log is O(commits) tiny JSON; periodic ``checkpoint()``
-folds it into one snapshot file so replay stays O(1)-ish like Delta's
-parquet checkpoints. Data paths stay absolute-relative to the table root
-so the table relocates with a rename.
+Scale notes: a replay reads commits newest-first until it meets a
+checkpoint, then folds forward from it — so its cost is the commits
+since the last ``checkpoint()`` (every commit, if there is none; the log
+is tiny JSON, one file per commit). Data paths stay relative to the
+table root so the table relocates with a rename.
 """
 
 from __future__ import annotations
@@ -37,6 +40,7 @@ import json
 import os
 import time
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -90,6 +94,28 @@ def _stat_encode(v) -> list | None:
     if isinstance(v, str):
         return ["s", v]
     return None
+
+
+class _Snapshot(NamedTuple):
+    """One replay of the log (``TxLogTable._snapshot``)."""
+
+    version: int  # last commit replayed; -1 = no commits
+    files: list[str]  # live data files, table-relative, sorted
+    schema: dict[str, str]  # column -> type string
+    stats: dict[str, dict]  # live file -> footer min/max per column
+    txns: dict[str, int]  # app_id -> highest committed txn version
+
+    @property
+    def ddl(self) -> str:
+        return ", ".join(f"`{c}` {t}" for c, t in self.schema.items())
+
+
+def _unmatched(predicate: str):
+    """``keep`` for a predicate rewrite. SQL DELETE semantics remove
+    only rows where the predicate is TRUE: NOT(NULL) is NULL (filtered
+    out), so a bare NOT(pred) would silently delete NULL-evaluating rows
+    that share a file with true matches."""
+    return lambda d: d.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
 
 
 def _compact_parquet_files(paths: list[str], out_path: str) -> None:
@@ -198,6 +224,44 @@ class TxLogTable:
         with open(os.path.join(self.log_dir, f"{v:010d}.json")) as f:
             return json.load(f)
 
+    def _snapshot(self, version: int | None = None,
+                  base: _Snapshot | None = None) -> _Snapshot:
+        """Replay the log up to ``version`` (default: latest). Commits
+        are read newest-first down to the newest checkpoint at or below
+        ``version`` and folded forward from there; with ``base`` (an
+        earlier snapshot) the fold continues from it instead, reading
+        only the commits after ``base.version``."""
+        vs = [v for v in self._versions() if version is None or v <= version]
+        if base is None:
+            base = _Snapshot(-1, [], {}, {}, {})
+            commits = []
+            for v in reversed(vs):
+                c = self._read_commit(v)
+                commits.append(c)
+                # a checkpoint without a schema (written before
+                # checkpoints carried one) cannot seed the fold
+                if c.get("op") == "checkpoint" and "schema" in c:
+                    break
+            commits.reverse()
+        else:
+            commits = [self._read_commit(v) for v in vs if v > base.version]
+        files, schema = set(base.files), dict(base.schema)
+        stats, txns = dict(base.stats), dict(base.txns)
+        for c in commits:
+            if c.get("op") == "checkpoint":
+                files = set(c["files"])
+            files.difference_update(c.get("remove", []))
+            files.update(c.get("add", []))
+            schema.update(c.get("schema") or {})
+            stats.update(c.get("stats") or {})
+            txns.update(c.get("txns") or {})
+            if c.get("txn"):
+                app, ver = c["txn"]
+                txns[app] = max(txns.get(app, -1), ver)
+        live = sorted(files)
+        return _Snapshot(vs[-1] if vs else -1, live, schema,
+                         {r: stats[r] for r in live if r in stats}, txns)
+
     def _try_commit(self, entry: dict) -> int:
         """Atomically publish the next version. The commit body is fully
         written to a private tmp file FIRST; ``os.link`` onto the version
@@ -274,18 +338,8 @@ class TxLogTable:
         return v
 
     def active_files(self, version: int | None = None) -> list[str]:
-        """Replay the log (to ``version``) -> the live data-file set."""
-        files: set[str] = set()
-        for v in self._versions():
-            if version is not None and v > version:
-                break
-            c = self._read_commit(v)
-            if c.get("op") == "checkpoint":
-                files = set(c["files"])
-                continue
-            files.difference_update(c.get("remove", []))
-            files.update(c.get("add", []))
-        return sorted(files)
+        """The live data-file set at ``version`` (default: latest)."""
+        return self._snapshot(version).files
 
     def _collect_stats(self, rels: list[str]) -> dict[str, dict]:
         """Per-file min/max column stats from the staged parquet footers
@@ -327,37 +381,28 @@ class TxLogTable:
         return out
 
     def file_stats(self) -> dict[str, dict]:
-        """rel path -> {col: [[kind, min], [kind, max]]} accumulated
-        from commit entries (collected at commit time from footers;
-        carried forward by checkpoints). Files without stats simply
-        don't appear — readers must treat them as rewrite candidates."""
-        out: dict[str, dict] = {}
-        for c in self.history():
-            out.update(c.get("stats") or {})
-        return out
+        """live rel path -> {col: [[kind, min], [kind, max]]}, collected
+        from footers at commit time and carried forward by checkpoints.
+        Files without stats simply don't appear — readers must treat
+        them as rewrite candidates."""
+        return self._snapshot().stats
 
-    def _overlapping_files(self, col: str, lo, hi) -> list[str]:
-        """Active files whose [min, max] for ``col`` overlaps [lo, hi]
+    def _overlapping_files(self, snap: _Snapshot, col: str, lo,
+                           hi) -> list[str]:
+        """Live files whose [min, max] for ``col`` overlaps [lo, hi]
         — plus every file whose stats are missing or of a different
         kind (pruning must only ever SKIP provably-disjoint files)."""
         lo_e, hi_e = _stat_encode(lo), _stat_encode(hi)
-        stats = self.file_stats()
-        out = []
-        for rel in self.active_files():
-            st = (stats.get(rel) or {}).get(col)
-            if (
-                st is None
-                or lo_e is None
-                or hi_e is None
-                or st[0][0] != lo_e[0]
-                or st[1][0] != hi_e[0]
-            ):
-                out.append(rel)
-                continue
-            if st[0][1] > hi_e[1] or st[1][1] < lo_e[1]:
-                continue  # provably disjoint
-            out.append(rel)
-        return out
+
+        def disjoint(st) -> bool:
+            return (
+                st is not None and lo_e is not None and hi_e is not None
+                and st[0][0] == lo_e[0] and st[1][0] == hi_e[0]
+                and (st[0][1] > hi_e[1] or st[1][1] < lo_e[1])
+            )
+
+        return [r for r in snap.files
+                if not disjoint(snap.stats.get(r, {}).get(col))]
 
     # -- write path ---------------------------------------------------------
 
@@ -365,21 +410,16 @@ class TxLogTable:
         """column -> type string of the committed schema at ``version``
         (default: latest) — the union of additive evolution up to that
         commit; empty if the table has no commits."""
-        cols: dict[str, str] = {}
-        for c in self.history():
-            if version is not None and c["version"] > version:
-                break
-            cols.update(c.get("schema", {}))
-        return cols
+        return self._snapshot(version).schema
 
-    def _check_schema(self, df: DataFrame) -> dict[str, str]:
-        """Reject type CHANGES to existing columns (a mixed-type column
-        across data files breaks every subsequent snapshot read — the
-        failure surfaces at read time, far from the write that caused
-        it). New columns are fine: additive evolution, null-filled on
-        mergeSchema reads."""
+    @staticmethod
+    def _check_schema(df: DataFrame, cur: dict[str, str]) -> dict[str, str]:
+        """Reject type CHANGES to existing columns of the committed
+        schema ``cur`` (a mixed-type column across data files breaks
+        every subsequent snapshot read — the failure surfaces at read
+        time, far from the write that caused it). New columns are fine:
+        additive evolution, null-filled by the schema-pinned reader."""
         new = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        cur = self.table_schema()
         conflicts = [
             (c, cur[c], t) for c, t in new.items() if c in cur and cur[c] != t
         ]
@@ -391,61 +431,26 @@ class TxLogTable:
         return new
 
     def _write_data_files(self, df: DataFrame) -> list[str]:
-        """Write df as new parquet files under a unique staging dir and
-        return their table-relative paths. Staged files are invisible
-        until a commit references them (write-then-publish, like Delta).
+        """Stage df as parquet under a unique dir and return the
+        table-relative paths of the parts that carry rows: zero-row parts
+        are deleted (footer check on the driver, no Spark job) and a
+        small write (<= COMPACT_SMALL_WRITES_BYTES) is merged into one
+        file. Staged files are invisible until a commit references them
+        (write-then-publish, like Delta)."""
+        import pyarrow.parquet as pq
 
-        Small writes (<= COMPACT_SMALL_WRITES_BYTES total compressed) are
-        compacted to a single file while still staged — row groups are
-        STREAMED through one ParquetWriter (driver memory bounded by one
-        row group, never the whole decompressed write: concat-then-write
-        materialized ~5-10x the compressed trigger bound). Timestamps are
-        cast to micros so the compacted file stays readable by a bare
-        Spark scan (nanos parquet throws PARQUET_TYPE_ILLEGAL, the
-        TESTDATA.md gotcha); the cast is SAFE — Spark stages INT96,
-        which Arrow surfaces as nanos, but the values are micro-grain by
-        Spark's own timestamp semantics, so a genuine sub-microsecond
-        value can only mean foreign data and raises instead of silently
-        truncating (the append() contract is micros-at-most)."""
         stage = f"data-{uuid.uuid4().hex[:12]}"
         out_dir = os.path.join(self.root, stage)
         df.write.mode("error").parquet(out_dir)
-        names = [
-            n for n in sorted(os.listdir(out_dir)) if n.endswith(".parquet")
-        ]
-        paths = [os.path.join(out_dir, n) for n in names]
-        if (
-            len(names) > 1
-            and sum(os.path.getsize(p) for p in paths)
-            <= self.COMPACT_SMALL_WRITES_BYTES
-        ):
-            compacted = "part-00000-compacted.parquet"
-            _compact_parquet_files(paths, os.path.join(out_dir, compacted))
-            for p in paths:
-                os.remove(p)
-            return [f"{stage}/{compacted}"]
-        return [f"{stage}/{n}" for n in names]
-
-    def _write_nonempty(self, df: DataFrame) -> list[str]:
-        """Stage ``df`` and return only the files that actually carry
-        rows (zero-row part files deleted in place, footer-checked on
-        the driver — no Spark job). One write job replaces the
-        limit(1).count() probe + conditional write the rewrite paths
-        (DELETE/MERGE/replaceWhere survivors) used to pay: the probe was
-        a whole extra job per commit, and the common case — survivors
-        exist — paid both."""
-        import pyarrow.parquet as pq
-
-        kept = []
-        stage_dirs: set[str] = set()
-        for rel in self._write_data_files(df):
-            path = os.path.join(self.root, rel)
-            stage_dirs.add(os.path.dirname(path))
-            if pq.read_metadata(path).num_rows > 0:
-                kept.append(rel)
+        names = []
+        for n in sorted(os.listdir(out_dir)):
+            if not n.endswith(".parquet"):
+                continue
+            if pq.read_metadata(os.path.join(out_dir, n)).num_rows > 0:
+                names.append(n)
             else:
-                os.remove(path)
-        if not kept:
+                os.remove(os.path.join(out_dir, n))
+        if not names:
             # every part was empty: the staging dir now holds only
             # Spark's _SUCCESS/.crc markers, nothing will ever reference
             # it, and vacuum() only removes *.parquet — without this it
@@ -454,75 +459,85 @@ class TxLogTable:
             # write already complete), so removing it races nothing.
             import shutil
 
-            for d in stage_dirs:
-                shutil.rmtree(d, ignore_errors=True)
-        return kept
+            shutil.rmtree(out_dir, ignore_errors=True)
+            return []
+        paths = [os.path.join(out_dir, n) for n in names]
+        if (
+            len(names) > 1
+            and sum(os.path.getsize(p) for p in paths)
+            <= self.COMPACT_SMALL_WRITES_BYTES
+        ):
+            names = ["part-00000-compacted.parquet"]
+            _compact_parquet_files(paths, os.path.join(out_dir, names[0]))
+            for p in paths:
+                os.remove(p)
+        return [f"{stage}/{n}" for n in names]
 
-    def append_with_retry(self, df: DataFrame,
-                          txn: tuple[str, int] | None = None,
-                          max_retries: int = 20) -> int:
-        """Concurrent-writer append: stage once, then race for a version
-        number, retrying on CommitConflict with a fresh snapshot read.
-        Appends never conflict semantically (no files removed), so the
-        retry is always safe — this is the loop every multi-writer
-        caller should use. DELETE/MERGE losers must instead re-read and
-        re-derive their file rewrites before retrying (their remove set
-        may be stale), which is why they surface CommitConflict raw."""
-        if txn is not None:
-            app, ver = txn
-            if self.committed_txns().get(app, -1) >= ver:
-                return self.version()
-        schema = self._check_schema(df)
-        files = self._write_data_files(df)
-        entry: dict = {"op": "append", "add": files, "schema": schema}
-        if txn is not None:
-            entry["txn"] = [txn[0], txn[1]]
-        for _ in range(max_retries):
+    def _rewrite(self, spark: SparkSession, snap: _Snapshot, op: str,
+                 remove: list[str], keep, add_df: DataFrame | None,
+                 **meta) -> int:
+        """The one write path: the rows of the ``remove`` files that
+        ``keep`` retains (``keep=None``: none) plus ``add_df`` are staged
+        in ONE write and published as ONE remove+add commit, so a reader
+        sees the old table or the new one and a crash leaves the old one.
+        A losing append re-publishes its staged files on the next version
+        (it removes nothing, so it cannot conflict semantically); every
+        other op raises CommitConflict, since its remove set may be
+        stale."""
+        entry: dict = {"op": op, **meta}
+        df = add_df
+        if add_df is not None:
+            entry["schema"] = self._check_schema(add_df, snap.schema)
+        if keep is not None and remove:
+            kept = keep(self._read(spark, remove, snap.ddl))
+            df = kept if df is None else kept.unionByName(
+                df, allowMissingColumns=True
+            )
+        entry["add"] = self._write_data_files(df)
+        if remove:
+            entry["remove"] = remove
+        while True:
             try:
-                return self._try_commit(dict(entry))
+                return self._try_commit(entry)
             except CommitConflict:
-                if txn is not None and (
-                    self.committed_txns().get(txn[0], -1) >= txn[1]
-                ):
+                if op != "append":
+                    raise
+                txn = meta.get("txn")
+                if txn and self.committed_txns().get(txn[0], -1) >= txn[1]:
                     return self.version()  # another worker landed our txn
-                time.sleep(0.01)
-        raise CommitConflict(f"append lost {max_retries} version races")
 
     def append(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
-        """Append; ``txn=(app_id, txn_version)`` makes it IDEMPOTENT: a
-        commit carrying an (app_id, version) pair the log has already
-        recorded is skipped (Delta's txnAppId/txnVersion protocol) —
-        which is exactly what a foreachBatch streaming sink needs to be
-        exactly-once across batch replays after a crash: pass the
-        checkpointed batch_id as txn_version and a stable query name as
-        app_id."""
-        if txn is not None:
-            app, ver = txn
-            seen = self.committed_txns()
-            if seen.get(app, -1) >= ver:
-                # replayed batch — already in (streaming batch ids are
-                # monotonically increasing per query, Delta's assumption)
-                return self.version()
-        schema = self._check_schema(df)
-        files = self._write_data_files(df)
-        entry: dict = {"op": "append", "add": files, "schema": schema}
-        if txn is not None:
-            entry["txn"] = [txn[0], txn[1]]
-        return self._try_commit(entry)
+        """Append; safe under concurrent writers (a lost version race
+        retries the commit, see ``_rewrite``). ``txn=(app_id,
+        txn_version)`` makes it IDEMPOTENT: a commit carrying an
+        (app_id, version) pair the log has already recorded is skipped
+        (Delta's txnAppId/txnVersion protocol) — which is exactly what a
+        foreachBatch streaming sink needs to be exactly-once across
+        batch replays after a crash: pass the checkpointed batch_id as
+        txn_version and a stable query name as app_id."""
+        snap = self._snapshot()
+        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
+            # replayed batch — already in (streaming batch ids are
+            # monotonically increasing per query, Delta's assumption)
+            return snap.version
+        meta = {} if txn is None else {"txn": [txn[0], txn[1]]}
+        return self._rewrite(df.sparkSession, snap, "append", [], None, df,
+                             **meta)
 
     def overwrite(self, df: DataFrame) -> int:
-        snapshot = self.active_files()
-        schema = self._check_schema(df)
-        files = self._write_data_files(df)
-        return self._try_commit(
-            {"op": "overwrite", "add": files, "remove": snapshot,
-             "schema": schema}
-        )
+        snap = self._snapshot()
+        return self._rewrite(df.sparkSession, snap, "overwrite", snap.files,
+                             None, df)
 
-    def _touched_files(self, matched: DataFrame) -> list[str]:
-        """Table-relative paths of the files containing ``matched`` rows
-        — ONE distributed job via input_file_name(), never a per-file
-        driver loop. The collect is bounded by the snapshot's file count."""
+    def _touched_files(self, spark: SparkSession, snap: _Snapshot,
+                       match) -> list[str]:
+        """Table-relative paths of the live files holding rows that
+        ``match`` selects from the snapshot read — ONE distributed job
+        via input_file_name(), never a per-file driver loop. The collect
+        is bounded by the snapshot's file count."""
+        if not snap.files:
+            return []
+        matched = match(self._read(spark, snap.files, snap.ddl))
         rows = (
             matched.select(F.input_file_name().alias("f")).distinct().collect()
         )
@@ -542,32 +557,14 @@ class TxLogTable:
         rows. Match detection is ONE job over the snapshot (predicate +
         input_file_name, parquet stats pruning applies); untouched files
         carry forward without rewrite."""
-        snapshot = self.active_files()
-        if not snapshot:
-            return self.version()
-        scan = self.read(spark)
-        touched = self._touched_files(scan.filter(predicate))
+        snap = self._snapshot()
+        touched = self._touched_files(
+            spark, snap, lambda d: d.filter(predicate)
+        )
         if not touched:
-            return self.version()  # no-op delete: nothing to commit
-        survivors = (
-            spark.read.parquet(
-                *(os.path.join(self.root, f) for f in touched)
-            )
-            # SQL DELETE semantics: remove only rows where the predicate
-            # is TRUE. NOT(NULL) is NULL (filtered out), so a bare
-            # NOT(pred) would silently delete NULL-evaluating rows that
-            # share a file with true matches.
-            .filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-        )
-        kept_new = self._write_nonempty(survivors)
-        return self._try_commit(
-            {
-                "op": "delete",
-                "predicate": predicate,
-                "add": kept_new,
-                "remove": touched,
-            }
-        )
+            return snap.version  # no-op delete: nothing to commit
+        return self._rewrite(spark, snap, "delete", touched,
+                             _unmatched(predicate), None, predicate=predicate)
 
     def merge(self, spark: SparkSession, source: DataFrame,
               on: list[str]) -> int:
@@ -578,32 +575,14 @@ class TxLogTable:
         rows are rewritten (same input_file_name detection as DELETE);
         the whole operation is one commit, so readers see the old or the
         new table, never a half-merge."""
-        if not self.exists() or not self.active_files():
-            # no table, or a table whose rows were all deleted (the log
-            # exists but the active file set is empty — found by the
-            # model-based property test): nothing can match, pure insert
-            return self.append(source)
-        schema = self._check_schema(source)
-        target = self.read(spark)
-        keys = source.select(*on).distinct()
-        matched = target.join(F.broadcast(keys), on, "left_semi")
-        touched = self._touched_files(matched)
-        write_df = source
-        if touched:
-            # survivors and the source land in ONE staged write: one
-            # Spark job (one plan analysis + one codegen pass) instead
-            # of two, same committed content
-            survivors = spark.read.parquet(
-                *(os.path.join(self.root, f) for f in touched)
-            ).join(F.broadcast(keys), on, "left_anti")
-            write_df = survivors.unionByName(
-                source, allowMissingColumns=True
-            )
-        add = self._write_nonempty(write_df)
-        return self._try_commit(
-            {"op": "merge", "on": on, "add": add, "remove": touched,
-             "schema": schema}
+        snap = self._snapshot()
+        keys = F.broadcast(source.select(*on).distinct())
+        touched = self._touched_files(
+            spark, snap, lambda d: d.join(keys, on, "left_semi")
         )
+        return self._rewrite(spark, snap, "merge", touched,
+                             lambda d: d.join(keys, on, "left_anti"), source,
+                             on=on)
 
     def replace_where(self, spark: SparkSession, predicate: str,
                       df: DataFrame) -> int:
@@ -614,36 +593,12 @@ class TxLogTable:
         staged files are invisible until the single commit publishes
         them. Same file-grained rewrite as delete_where: only files
         containing matching rows are rewritten."""
-        schema = self._check_schema(df)
-        touched: list[str] = []
-        write_df = df
-        if self.active_files():
-            scan = self.read(spark)
-            touched = self._touched_files(scan.filter(predicate))
-            if touched:
-                survivors = (
-                    spark.read.parquet(
-                        *(os.path.join(self.root, f) for f in touched)
-                    )
-                    # keep rows where the predicate is not TRUE (SQL
-                    # DELETE semantics; see delete_where)
-                    .filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-                )
-                # one staged write for survivors + replacement rows:
-                # one job instead of two, same committed content
-                write_df = survivors.unionByName(
-                    df, allowMissingColumns=True
-                )
-        add = self._write_nonempty(write_df)
-        return self._try_commit(
-            {
-                "op": "replace_where",
-                "predicate": predicate,
-                "add": add,
-                "remove": touched,
-                "schema": schema,
-            }
+        snap = self._snapshot()
+        touched = self._touched_files(
+            spark, snap, lambda d: d.filter(predicate)
         )
+        return self._rewrite(spark, snap, "replace_where", touched,
+                             _unmatched(predicate), df, predicate=predicate)
 
     def replace_range(self, spark: SparkSession, col: str, lo, hi,
                       df: DataFrame) -> int:
@@ -662,31 +617,10 @@ class TxLogTable:
         predicate = (
             f"{col} >= {_sql_lit(lo)} AND {col} <= {_sql_lit(hi)}"
         )
-        schema = self._check_schema(df)
-        candidates = (
-            self._overlapping_files(col, lo, hi)
-            if self.active_files()
-            else []
-        )
-        write_df = df
-        if candidates:
-            survivors = (
-                spark.read.parquet(
-                    *(os.path.join(self.root, f) for f in candidates)
-                )
-                .filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-            )
-            write_df = survivors.unionByName(df, allowMissingColumns=True)
-        add = self._write_nonempty(write_df)
-        return self._try_commit(
-            {
-                "op": "replace_where",
-                "predicate": predicate,
-                "add": add,
-                "remove": candidates,
-                "schema": schema,
-            }
-        )
+        snap = self._snapshot()
+        return self._rewrite(spark, snap, "replace_where",
+                             self._overlapping_files(snap, col, lo, hi),
+                             _unmatched(predicate), df, predicate=predicate)
 
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
         """Bin-pack the snapshot into ``target_files`` files — the
@@ -696,40 +630,30 @@ class TxLogTable:
         commit swaps the whole set; readers never see a half-compacted
         table, and time travel to pre-compaction versions still works
         until vacuum()."""
-        snapshot = self.active_files()
-        if len(snapshot) <= target_files:
-            return self.version()
-        df = self.read(spark).coalesce(target_files)
-        files = self._write_data_files(df)
-        return self._try_commit(
-            {"op": "compact", "add": files, "remove": snapshot}
-        )
+        snap = self._snapshot()
+        if len(snap.files) <= target_files:
+            return snap.version
+        return self._rewrite(spark, snap, "compact", snap.files,
+                             lambda d: d.coalesce(target_files), None)
 
     def committed_txns(self) -> dict[str, int]:
         """app_id -> highest committed txn_version, surviving checkpoint
         folds (Delta's setTransaction map)."""
-        txns: dict[str, int] = {}
-        for c in self.history():
-            if c.get("op") == "checkpoint":
-                txns.update(c.get("txns", {}))
-            t = c.get("txn")
-            if t:
-                txns[t[0]] = max(txns.get(t[0], -1), t[1])
-        return txns
+        return self._snapshot().txns
 
     def checkpoint(self) -> int:
-        """Fold the log into one snapshot entry so replay is O(1) from
-        here (Delta's parquet-checkpoint analog, JSON-simple). Carries
-        the txn map and the live files' footer stats forward so
-        idempotent appends and file skipping survive the fold."""
-        files = self.active_files()
-        known = self.file_stats()
+        """Commit the current snapshot — live files, schema, their footer
+        stats and the txn map — as one entry, so replay starts here
+        (Delta's parquet-checkpoint analog, JSON-simple) and idempotent
+        appends and file skipping survive the fold."""
+        snap = self._snapshot()
         return self._try_commit(
             {
                 "op": "checkpoint",
-                "files": files,
-                "txns": self.committed_txns(),
-                "stats": {r: known[r] for r in files if r in known},
+                "files": snap.files,
+                "schema": snap.schema,
+                "txns": snap.txns,
+                "stats": snap.stats,
             }
         )
 
@@ -786,14 +710,27 @@ class TxLogTable:
 
     # -- read path ----------------------------------------------------------
 
+    def _read(self, spark: SparkSession, files: list[str],
+              schema) -> DataFrame:
+        """The one data reader. ``schema`` (DDL or StructType) is pinned:
+        no footer is sampled for inference, a file that predates an
+        additive column null-fills it, and an empty file set reads as an
+        empty frame of that schema."""
+        return spark.read.schema(schema).parquet(
+            *(os.path.join(self.root, f) for f in files)
+        )
+
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        files = self.active_files(version=version)
-        if not files:
+        """The snapshot at ``version`` (default: latest) under its
+        committed schema; a table whose rows were all removed reads as
+        an empty frame of that schema."""
+        snap = self._snapshot(version)
+        if snap.version < 0:
             raise FileNotFoundError(
-                f"TxLogTable at {self.root} has no data"
+                f"TxLogTable at {self.root} has no commits"
                 + (f" at version {version}" if version is not None else "")
             )
-        return spark.read.parquet(*(os.path.join(self.root, f) for f in files))
+        return self._read(spark, snap.files, snap.ddl)
 
     def changes(self, spark: SparkSession, from_version: int,
                 to_version: int | None = None) -> DataFrame:
@@ -803,26 +740,16 @@ class TxLogTable:
         removed as ``'delete'``. An UPDATE (merge) therefore appears as a
         delete+insert pair, exactly like Delta's pre/post-image rows.
 
-        Scale property: only the files the interval's commits TOUCHED are
-        read — the file sets are diffed first, and a rewritten file's
-        surviving rows cancel out in the multiset ``exceptAll`` (they
-        appear in both the added and removed reads). A day's retention
-        delete at 100 TB reads that day's files, never the table. Cost is
-        a shuffle of the touched rows only (exceptAll hashes full rows);
-        no change-log storage, no write-path overhead.
-
-        Schema evolution: both sides are read with mergeSchema and
-        projected to the UNION schema committed at ``to_version``
-        (missing columns null-filled), so an additive-evolution interval
-        cannot drop a new column (a bare parquet read infers from an
-        arbitrary footer) or crash ``exceptAll`` on mismatched column
-        counts. Top-level map-typed payload columns (which Spark forbids
-        in set operations) are diffed as key-sorted entry arrays and
-        restored afterwards — map semantics, not entry-order semantics;
-        maps NESTED inside structs/arrays are rejected with a clear
-        error. Diffed file paths are pre-checked on disk so an interval
-        that predates ``vacuum`` retention fails here, at the cause, not
-        at action time deep inside a Spark job.
+        Only the files the interval's commits TOUCHED are read: the file
+        sets are diffed first, and a rewritten file's surviving rows
+        cancel out in the multiset ``exceptAll`` — a day's retention
+        delete at 100 TB reads that day's files, never the table. Both
+        sides are read under the schema committed at ``to_version``, so
+        an additive column null-fills on the older side. Top-level map
+        columns (which Spark forbids in set operations) are diffed as
+        key-sorted entry arrays and restored afterwards; nested maps are
+        rejected. Diffed files are checked on disk first, so an interval
+        that predates ``vacuum`` retention fails here, at the cause.
         """
         if to_version is None:
             to_version = self.version()
@@ -830,8 +757,9 @@ class TxLogTable:
             raise ValueError(
                 f"from_version {from_version} > to_version {to_version}"
             )
-        f1 = set(self.active_files(version=from_version))
-        f2 = set(self.active_files(version=to_version))
+        old = self._snapshot(from_version)
+        new = self._snapshot(to_version, base=old)
+        f1, f2 = set(old.files), set(new.files)
         gone = sorted(
             f for f in (f1 ^ f2)
             if not os.path.exists(os.path.join(self.root, f))
@@ -843,7 +771,7 @@ class TxLogTable:
                 "predates vacuum retention; re-baseline from a full "
                 "snapshot read instead"
             )
-        sch = self.table_schema(version=to_version)
+        sch = new.schema
         # a map is diffable only as a TOP-LEVEL column whose key/value
         # types are themselves map-free (sorted-entry arrays must be
         # orderable): reject maps inside structs/arrays AND maps nested
@@ -862,26 +790,15 @@ class TxLogTable:
         map_cols = [c for c, t in sch.items() if t.startswith("map<")]
 
         def _rd(files: set[str]) -> DataFrame:
-            if files:
-                df = spark.read.option("mergeSchema", "true").parquet(
-                    *(os.path.join(self.root, f) for f in sorted(files))
-                )
-            else:
-                # typed empty frame (either endpoint may be an empty
-                # snapshot)
-                df = spark.createDataFrame(
-                    [], ", ".join(f"`{k}` {v}" for k, v in sch.items())
-                )
-            # project to the union schema at to_version: null-fill columns
-            # the side's files predate; sorted-entry form for map columns
-            have = set(df.columns)
-            cols = []
-            for c, t in sch.items():
-                col = F.col(c) if c in have else F.lit(None).cast(t)
-                if t.startswith("map<"):
-                    col = F.array_sort(F.map_entries(col))
-                cols.append(col.alias(c))
-            return df.select(cols)
+            # sorted-entry form for map columns
+            return self._read(spark, sorted(files), new.ddl).select(
+                *[
+                    F.array_sort(F.map_entries(c)).alias(c)
+                    if c in map_cols
+                    else F.col(c)
+                    for c in sch
+                ]
+            )
 
         added, removed = _rd(f2 - f1), _rd(f1 - f2)
         if "_change_type" in sch:
@@ -970,18 +887,10 @@ class TxLogTableStorage:
 
     def read(self, spark: SparkSession, table: str, schema=None) -> DataFrame:
         t = self.table(table)
-        if t.exists() and not t.active_files():
-            # all rows deleted (e.g. full retention cleanup): behave like
-            # the parquet binding — an empty, schema-typed DataFrame, not
-            # a FileNotFoundError. The committed schema survives in the
-            # log even when no data files do.
-            if schema is not None:
-                return spark.createDataFrame([], schema)
-            cols = t.table_schema()
-            if cols:
-                ddl = ", ".join(f"`{c}` {typ}" for c, typ in cols.items())
-                return spark.createDataFrame([], ddl)
-        return t.read(spark)
+        if schema is None or not t.exists():
+            return t.read(spark)
+        # a passed schema is pinned, as the parquet binding pins it
+        return t._read(spark, t.active_files(), schema)
 
     def drop_partition(self, table: str, spec: str) -> bool:
         col, _, val = spec.partition("=")

@@ -88,13 +88,10 @@ def engagement_sink(
     anyway."""
 
     def _read_presence(spark, template: DataFrame) -> DataFrame:
-        # missing table (first batch) or a table with commits but an
-        # EMPTY active file set (every row removed by a retention
-        # delete_where) are both legal states: TxLogTable.read raises
-        # there, so mirror TxLogTableStorage.read and treat them as an
-        # empty typed frame — the table's truth is "no presence", not a
-        # crash
-        if not presence.exists() or not presence.active_files():
+        # a missing table (first batch) is "no presence", not a crash;
+        # a table whose rows were all deleted already reads as an empty
+        # typed frame (TxLogTable.read)
+        if not presence.exists():
             return template.sparkSession.createDataFrame([], template.schema)
         return presence.read(spark).select("user_id", "d")
 

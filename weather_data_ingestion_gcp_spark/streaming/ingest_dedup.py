@@ -110,7 +110,7 @@ def dedup_ingest_sink(table: TxLogTable, app_id: str, key_cols: list[str]):
         else:
             # keys-only rows: any row IS the canonical row
             fresh = batch_df.dropDuplicates(key_cols)
-        if table.exists() and table.active_files():
+        if table.exists():
             existing = (
                 table.read(batch_df.sparkSession).select(*key_cols).distinct()
             )
