@@ -735,36 +735,22 @@ def _zipf_corpus(n_docs=240, vocab=3000, seed=11):
     return docs
 
 
-def test_verify_prune_unique_is_a_semantic_noop(spark):
-    """The unique-shingle verify prune (r9 parked item, landed r11) must
-    return BIT-IDENTICAL verified pairs with and without the prune, on
-    the realistic-vocabulary corpus where it actually removes most of
-    the pairs-x-shingles intermediate (a 31-word-vocabulary corpus
-    keeps ~every shingle and proves nothing)."""
+def test_verify_matches_minhash_near_duplicates_on_zipf_corpus(spark):
+    """verify_jaccard over the LSH candidates of a realistic-vocabulary
+    corpus (most shingles document-unique — a 31-word-vocabulary corpus
+    keeps ~every shingle and proves little) agrees at the threshold with
+    the full minhash_near_duplicates pipeline, whose verify joins are
+    pruned to the candidate-id set."""
     d = spark.createDataFrame(_zipf_corpus(), "doc_id bigint, text string")
     sh = dedup.shingles(d, "doc_id", "text", n=3)
     wide = dedup.minhash_wide_signatures(sh, num_hashes=8)
     sizes = wide.select("doc_id", F.col("_n_sh").alias("n"))
-    from weather_data_ingestion_gcp_spark.operators.dedup import (
-        lsh_band_keys,
-        lsh_candidate_pairs,
-    )
-
-    sig = wide.selectExpr(
-        "doc_id", "stack(8, 0, h0, 1, h1, 2, h2, 3, h3, 4, h4, 5, h5, 6, h6, 7, h7) AS (seed, minhash)"
-    )
-    bands = lsh_band_keys(sig, rows_per_band=2)
-    pairs = lsh_candidate_pairs(bands)
+    pairs = dedup.lsh_candidate_pairs(dedup.lsh_band_keys(wide, rows_per_band=2))
     rows = lambda df: sorted(
         (r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect()
     )
     plain = rows(dedup.verify_jaccard(pairs, sh, sizes=sizes))
-    pruned = rows(
-        dedup.verify_jaccard(pairs, sh, sizes=sizes, prune_unique=True)
-    )
-    assert plain == pruned
     assert plain  # the fixture's near-copies produce real candidates
-    # and the full pipeline (prune enabled on the LSH path) agrees too
     full = dedup.minhash_near_duplicates(
         d, "doc_id", "text", num_hashes=8, rows_per_band=2, shingle_n=3,
         threshold=0.5, cache_shingles=False,
@@ -1078,12 +1064,20 @@ def test_blocked_jaccard_mega_block_sub_blocked(spark):
     # md5-hex4 % 2 buckets for ids 0..4: {1,2} and {0,3,4} -> only
     # same-bucket pairs survive in the mega block; small block intact
     assert got == {(10, 11), (1, 2), (0, 3), (0, 4), (3, 4)}
+    # a cap of the largest block's size gives every block one sub-block
     uncapped = dedup.blocked_jaccard_pairs(
-        df, "doc_id", "text", ["blk"], shingle_n=2, threshold=0.05
+        df, "doc_id", "text", ["blk"], shingle_n=2, threshold=0.05,
+        max_block_size=5,
     )
     un = {(r.id_a, r.id_b) for r in uncapped.collect()}
     # strict subset: only cross-sub-block mega pairs were dropped
     assert got < un and all(a < 5 and b < 5 for a, b in un - got)
+    # zero-intersection pairs are never formed, so a threshold that
+    # would admit them is refused
+    with pytest.raises(ValueError):
+        dedup.blocked_jaccard_pairs(
+            df, "doc_id", "text", ["blk"], threshold=0, max_block_size=3
+        )
 
 
 def test_blocked_jaccard_internal_names_do_not_shadow_block_cols(spark):

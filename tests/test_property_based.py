@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from weather_data_ingestion_gcp_spark.operators.dedup import exact_dedup_groups
@@ -114,7 +115,7 @@ def test_exact_dedup_group_sizes_sum_to_input(spark, texts):
 )
 @settings(**_SETTINGS)
 def test_connected_components_matches_union_find(spark, n_nodes, edges):
-    from weather_data_ingestion_gcp_spark.operators.graph import connected_components
+    from weather_data_ingestion_gcp_spark.operators import graph
 
     edges = [(a, b) for a, b in edges if a < n_nodes and b < n_nodes and a != b]
 
@@ -139,11 +140,18 @@ def test_connected_components_matches_union_find(spark, n_nodes, edges):
     )
     if not edges:
         edges_df = edges_df.filter("id_a <> id_a")
-    got = {
-        r.doc_id: r.component
-        for r in connected_components(nodes_df, edges_df).collect()
-    }
-    assert got == expected
+
+    def labels():
+        return {
+            r.doc_id: r.component
+            for r in graph.connected_components(nodes_df, edges_df).collect()
+        }
+
+    assert labels() == expected
+    # and the distributed star rounds, forced by a zero union-find cap
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(graph, "SMALL_GRAPH_EDGES", 0)
+        assert labels() == expected
 
 
 @given(

@@ -1144,3 +1144,25 @@ def test_replay_starts_at_the_newest_checkpoint(spark, tmp_path, monkeypatch):
     )
     assert t.read(spark).count() == 16
     assert reads == [8]
+
+
+def test_nested_field_names_needing_quotes_read_back(spark, tmp_path):
+    """A struct field name the DDL parser cannot take bare (a space, a
+    backtick) is quoted in the committed type string, so the
+    schema-pinned reader parses it. Ordinary type strings stay exactly
+    ``simpleString()``, so schemas committed in existing logs still
+    compare equal."""
+    df = spark.createDataFrame(
+        [((1, "x"),)], "s struct<`a b`: int, `c``d`: string>"
+    )
+    t = TxLogTable(str(tmp_path / "t"))
+    t.append(df)
+    assert t.read(spark).collect() == df.collect()
+    t.append(df)  # the incoming type string equals the committed one
+    assert t.read(spark).count() == 2
+    from weather_data_ingestion_gcp_spark.schemas import RAW_API_SCHEMA
+    from weather_data_ingestion_gcp_spark.sources.txlog import _type_string
+
+    for schema in (RAW_API_SCHEMA, WEATHER_SCHEMA):
+        for f in schema.fields:
+            assert _type_string(f.dataType) == f.dataType.simpleString()

@@ -127,33 +127,41 @@ def shingles(
 # ---------------------------------------------------------------------------
 
 
-def minhash_signatures(shingle_df: DataFrame, num_hashes: int = 8) -> DataFrame:
-    """(doc_id, seed, minhash): per-seed min of md5(shingle || '|' || seed).
+def minhash_wide_signatures(shingle_df: DataFrame, num_hashes: int = 8) -> DataFrame:
+    """One wide aggregate per doc: the ``num_hashes`` minhash columns
+    ``h0..h{k-1}`` (per-seed min of md5(shingle || '|' || seed)) PLUS the
+    per-doc shingle count ``_n_sh`` — the single groupBy the whole MinHash
+    pipeline hangs off.
 
-    The ``num_hashes`` mins are computed as SIDE-BY-SIDE aggregate
-    expressions in ONE groupBy over the shingle rows, then unpivoted with
-    ``stack`` — NOT by exploding each shingle x num_hashes first. The
-    explode formulation pushes |shingles| x seeds rows through the
-    aggregate (2M at sf0.1); the wide form evaluates the same md5 calls
-    in-row inside codegen and partial aggregation collapses each
-    partition to one |docs| x seeds-column buffer before the shuffle —
-    the shuffle carries 8x fewer, wider rows. The unpivot is a zero-cost
-    projection after the aggregate."""
+    The mins are SIDE-BY-SIDE aggregate expressions in ONE groupBy over
+    the shingle rows, NOT an explode of each shingle x num_hashes first:
+    the explode form pushes |shingles| x seeds rows through the aggregate
+    (2M at sf0.1), while the wide form evaluates the same md5 calls in-row
+    inside codegen and partial aggregation collapses each partition to one
+    |docs| x seeds-column buffer before the shuffle. Consumers that need
+    both the LSH pairs AND the raw signature columns (the estimate
+    contract query) persist THIS frame and derive everything from it —
+    O(docs x num_hashes x 32B), far below corpus size, so persisting it
+    is safe at the 100 TB design point."""
     aggs = [
         F.min(F.md5(F.concat_ws("|", "shingle", F.lit(str(s))))).alias(f"h{s}")
         for s in range(num_hashes)
     ]
-    wide = shingle_df.groupBy("doc_id").agg(*aggs)
-    stack_args = ", ".join(f"{s}, h{s}" for s in range(num_hashes))
-    return wide.selectExpr(
-        "doc_id", f"stack({num_hashes}, {stack_args}) AS (seed, minhash)"
+    return shingle_df.groupBy("doc_id").agg(
+        *aggs, F.count(F.lit(1)).alias("_n_sh")
     )
 
 
-def lsh_band_keys(sig_df: DataFrame, rows_per_band: int = 2) -> DataFrame:
-    """(doc_id, band, band_key): md5 over the band's ordered minhashes."""
+def lsh_band_keys(wide: DataFrame, rows_per_band: int = 2) -> DataFrame:
+    """(doc_id, band, band_key) from a :func:`minhash_wide_signatures`
+    frame: md5 over the band's ordered minhashes. The ``h{s}`` columns
+    are unpivoted to (doc_id, seed, minhash) rows with one ``stack`` — a
+    zero-cost projection after the wide aggregate."""
+    k = sum(1 for c in wide.columns if c[:1] == "h" and c[1:].isdigit())
+    stack_args = ", ".join(f"{s}, h{s}" for s in range(k))
+    sig = wide.selectExpr("doc_id", f"stack({k}, {stack_args}) AS (seed, minhash)")
     return (
-        sig_df.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
+        sig.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
         .groupBy("doc_id", "band")
         .agg(
             F.md5(
@@ -201,7 +209,6 @@ def verify_jaccard(
     shingle_df: DataFrame,
     sizes: DataFrame | None = None,
     candidate_ids: DataFrame | None = None,
-    prune_unique: bool = False,
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs via two shingle equi-joins (set
     sizes from one aggregate; intersection counts from a join on shingle).
@@ -262,29 +269,6 @@ def verify_jaccard(
         hashed = hashed.join(
             candidate_ids.select("doc_id"), "doc_id", "left_semi"
         )
-    # Unique-shingle prune (the repeated_spans ">= 2 occurrences" rule,
-    # r9 parked item landed in r11): a shingle held by exactly ONE doc
-    # in the (candidate-restricted) relation cannot match across any
-    # pair, so dropping it before the joins is a semantic no-op — sizes
-    # come from the UNPRUNED relation, so the union term is exact. What
-    # it buys: the verify cost is the pairs-x-shingles intermediate
-    # (every shingle of id_a per pair, most of which die at the second
-    # join probe on a realistic vocabulary where most shingles are
-    # document-unique); the prune removes them BEFORE that intermediate
-    # exists. What it costs: one partial-aggregated count over the
-    # candidate shingle slice + a semi-join — which is why it is opt-in:
-    # the LSH path (candidate-restricted slice, cheap count) enables it,
-    # dense-candidate callers on this generator's 31-word vocabulary
-    # (where nearly every shingle repeats and the prune keeps ~all rows)
-    # do not. Requires per-doc-distinct shingles (shingles() output).
-    if prune_unique:
-        shared = (
-            hashed.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") >= 2)
-            .select("shingle")
-        )
-        hashed = hashed.join(shared, "shingle", "left_semi")
     sa = hashed.select(F.col("doc_id").alias("id_a"), "shingle")
     sb = hashed.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (
@@ -347,49 +331,25 @@ def minhash_near_duplicates(
     return verified_pairs_from_wide(
         wide,
         sh,
-        num_hashes=num_hashes,
         rows_per_band=rows_per_band,
         threshold=threshold,
         max_bucket_size=max_bucket_size,
     )
 
 
-def minhash_wide_signatures(shingle_df: DataFrame, num_hashes: int = 8) -> DataFrame:
-    """One wide aggregate per doc: the ``num_hashes`` minhash columns
-    ``h0..h{k-1}`` PLUS the per-doc shingle count ``_n_sh`` — the single
-    groupBy the whole MinHash pipeline hangs off. Consumers that need
-    both the LSH pairs AND the raw signature columns (the estimate
-    contract query) persist THIS frame and derive everything from it —
-    O(docs x num_hashes x 32B), far below corpus size, so persisting it
-    is safe at the 100 TB design point."""
-    aggs = [
-        F.min(F.md5(F.concat_ws("|", "shingle", F.lit(str(s))))).alias(f"h{s}")
-        for s in range(num_hashes)
-    ]
-    return shingle_df.groupBy("doc_id").agg(
-        *aggs, F.count(F.lit(1)).alias("_n_sh")
-    )
-
-
 def verified_pairs_from_wide(
     wide: DataFrame,
     shingle_df: DataFrame,
-    num_hashes: int = 8,
     rows_per_band: int = 2,
     threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    prune_unique: bool = False,
 ) -> DataFrame:
     """LSH candidate pairs + exact-Jaccard verify, derived from an
     existing ``minhash_wide_signatures`` frame (pass a persisted one to
     compute the signature aggregate exactly once across multiple
     consumers)."""
-    stack_args = ", ".join(f"{s}, h{s}" for s in range(num_hashes))
-    sig = wide.selectExpr(
-        "doc_id", f"stack({num_hashes}, {stack_args}) AS (seed, minhash)"
-    )
     sizes = wide.select("doc_id", F.col("_n_sh").alias("n"))
-    bands = lsh_band_keys(sig, rows_per_band=rows_per_band)
+    bands = lsh_band_keys(wide, rows_per_band=rows_per_band)
     pairs = lsh_candidate_pairs(bands, max_bucket_size=max_bucket_size)
     # candidate-id SUPERSET for the verify semi-join prune: docs sharing
     # any band bucket with a second doc. One aggregate + one semi-join
@@ -406,22 +366,8 @@ def verified_pairs_from_wide(
         .select("doc_id")
         .distinct()
     )
-    # prune_unique is OFF by default: the r9 parked-item hypothesis (a
-    # dense-verify win) does NOT survive measurement on top of the r8
-    # candidate semi-join. Once the shingle side is restricted to
-    # candidate docs, the remaining intermediate is small, and the
-    # prune's counting aggregate is pure added cost in BOTH measured
-    # regimes — this generator's 31-word vocabulary (dedup_minhash_lsh
-    # warm 2.3 s -> 3.8-4.6 s at sf0.1) AND a 20k-doc / 20k-word Zipf
-    # corpus (warm verify 8.2 s without vs 19.8 s with; identical 1667
-    # pairs). Its residual win case is candidate sets with mega
-    # duplicate clusters whose members still carry mostly-unshared
-    # shingles; equivalence for that day is pinned by
-    # tests/test_ops_extensions.py::test_verify_prune_unique_is_a_
-    # semantic_noop on a Zipf fixture.
     return verify_jaccard(
-        pairs, shingle_df, sizes=sizes, candidate_ids=cand_ids,
-        prune_unique=prune_unique,
+        pairs, shingle_df, sizes=sizes, candidate_ids=cand_ids
     ).filter(F.col("jaccard") >= threshold)
 
 
@@ -537,103 +483,40 @@ def blocked_jaccard_pairs(
     id_col: str,
     text_col: str,
     block_cols: list[str],
+    max_block_size: int,
     shingle_n: int = 2,
     threshold: float = 0.1,
-    max_block_size: int | None = None,
 ) -> DataFrame:
-    """All-pairs n-gram Jaccard inside blocking groups. The actual
-    intersection is computed by shingle equi-join, not nested loops.
+    """All-pairs n-gram Jaccard >= ``threshold`` inside blocking groups.
 
     Blocking bounds the pair count only while blocks stay small: at 100x
     scale a dominant block (e.g. lang=en, source=web) grows linearly with
-    the corpus, so its within-block pair relation grows QUADRATICALLY
-    before the verify join ever sees it. ``max_block_size`` caps that:
-    every block is deterministically hash-split into ceil(n/cap) salted
-    sub-blocks (the repo-standard md5-hex4 bucket of doc_id, so any SQL
-    engine reproduces the split), and pairs are generated within a
-    sub-block only. Blocks at or under the cap get ONE sub-block —
-    identical to uncapped — so the cap only changes behavior where the
-    quadratic would bite. Total pair count is bounded by ~N*cap/2
-    (LINEAR in corpus size at fixed cap), at a known, deterministic
-    recall cost: a pair whose members hash to different sub-blocks is
-    missed — at 100 TB, candidates in mega-blocks belong to the banded
-    paths (LSH / PPJoin) anyway; this keeps the exact path useful and
-    bounded instead of useless. ``None`` keeps uncapped behavior for
-    small-cardinality blocking schemes. Empirical: the sf0.1 -> sf1
-    (10x) probe measured 0 super-linear growth with cap=100 (BASELINE.md
-    round-6 table).
+    the corpus, so its within-block pair relation grows QUADRATICALLY.
+    ``max_block_size`` caps that: every block is deterministically
+    hash-split into ceil(n/cap) salted sub-blocks (the repo-standard
+    md5-hex4 bucket of doc_id, so any SQL engine reproduces the split),
+    and pairs are generated within a sub-block only. A block at or under
+    the cap gets ONE sub-block, i.e. all its pairs; pass a cap at least
+    the largest block's size for plain blocking. Total pair count is
+    bounded by ~N*cap/2 (LINEAR in corpus size at fixed cap), at a known,
+    deterministic recall cost: a pair whose members hash to different
+    sub-blocks is missed — at 100 TB, candidates in mega-blocks belong
+    to the banded paths (LSH / PPJoin) anyway. Empirical: the sf0.1 ->
+    sf1 (10x) probe measured 0 super-linear growth with cap=100
+    (BASELINE.md round-6 table).
 
-    Execution shape (capped + positive threshold): the intersection is
-    computed by GROUPING the sub-block-keyed shingle relation on
-    (block, sub, shingle) and emitting each group's doc-id pairs — one
-    wide shuffle of the carried shingle relation, with per-group pair
-    fan-out bounded by the sub-block cap. The alternative
-    pairs-join-shingles form (verify_jaccard) materializes
-    |pairs| x ~shingles/doc intermediate rows, almost all of which are
-    non-matches (pair rows where the other side lacks the shingle): at
-    the sf100 probe that intermediate's shuffle exceeded the single
-    box's ~73 GB spill ceiling (ENOSPC, round 9), while the grouped form
-    shuffles each shingle row once and materializes only ACTUAL
-    co-occurrences. Zero-intersection pairs never appear, which is
-    exactly the >= threshold output for any threshold > 0; threshold <= 0
-    (or uncapped blocks, where a mega-group's pair fan-out would land on
-    one task) keeps the pairs-join form."""
-    if max_block_size is not None and threshold > 0:
-        return _sub_blocked_jaccard_grouped(
-            df, id_col, text_col, block_cols, shingle_n, threshold,
-            max_block_size,
-        )
-    base = df.select(F.col(id_col).alias("doc_id"), *block_cols)
-    if max_block_size is not None:
-        # internal column names must not shadow a caller's block column
-        # (the ingest-dedup '_rn' probing pattern)
-        bn = "_bn"
-        while bn in base.columns:
-            bn = "_" + bn
-        sub = "_sub"
-        while sub in base.columns or sub == bn:
-            sub = "_" + sub
-        counts = (
-            base.groupBy(*block_cols)
-            .agg(F.count(F.lit(1)).alias(bn))
-        )
-        # integer ceil-div (float division + cast could round at scale)
-        n_sub = F.expr(
-            f"(`{bn}` + {int(max_block_size) - 1}) div {int(max_block_size)}"
-        )
-        salt = hex_int(F.md5(F.col("doc_id").cast("string"))) % n_sub
-        # re-select: a USING join moves the key columns first, which would
-        # silently break the positional toDF renames below. counts is
-        # block-cardinality-sized -> broadcast side of this join.
-        base = (
-            base.join(F.broadcast(counts), block_cols)
-            .select("doc_id", *block_cols, salt.alias(sub))
-        )
-        block_cols = [*block_cols, sub]
-    sh = shingles(df, id_col, text_col, n=shingle_n)
-    a = base.toDF("id_a", *block_cols)
-    b = base.toDF("id_b", *block_cols)
-    pairs = a.join(b, block_cols).filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
-    return verify_jaccard(pairs, sh).filter(F.col("jaccard") >= threshold)
-
-
-def _sub_blocked_jaccard_grouped(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_cols: list[str],
-    shingle_n: int,
-    threshold: float,
-    max_block_size: int,
-) -> DataFrame:
-    """Grouped-intersection form of capped blocked Jaccard (see
-    blocked_jaccard_pairs): shingle rows carry their (block, sub-block)
-    key through the explode, one groupBy on (block, sub, shingle) emits
-    each group's doc-id pairs, and a pair count IS the exact
-    intersection size. Per-group pair fan-out is bounded by the
-    sub-block cap (<= ~cap ids per group), so no task ever holds a
-    quadratic blob; total shuffle is the carried shingle relation once —
-    linear in corpus size — plus the actual co-occurrence rows."""
+    Execution: shingle rows carry their (block, sub-block) key through
+    the explode, one groupBy on (block, sub, shingle) emits each group's
+    doc-id pairs, and a pair's count IS its exact intersection size. Each
+    shingle row shuffles once and only ACTUAL co-occurrences materialize,
+    with per-group pair fan-out bounded by the cap; the pairs-join-shingles
+    form (:func:`verify_jaccard`) instead materializes |pairs| x
+    ~shingles/doc rows, almost all non-matches, and at the sf100 probe
+    that shuffle exceeded the single box's ~73 GB spill ceiling (ENOSPC,
+    round 9). Zero-intersection pairs never appear, so ``threshold``
+    must be positive."""
+    if threshold <= 0:
+        raise ValueError(f"threshold must be positive, got {threshold}")
     # internal names must not shadow a caller's block column (the
     # ingest-dedup '_rn' probing pattern)
     taken = set(df.columns)
@@ -646,6 +529,7 @@ def _sub_blocked_jaccard_grouped(
 
     bn, sub, ids, p = _fresh("_bn"), _fresh("_sub"), _fresh("_ids"), _fresh("_p")
     counts = df.groupBy(*block_cols).agg(F.count(F.lit(1)).alias(bn))
+    # integer ceil-div (float division + cast could round at scale)
     n_sub = F.expr(
         f"(`{bn}` + {int(max_block_size) - 1}) div {int(max_block_size)}"
     )

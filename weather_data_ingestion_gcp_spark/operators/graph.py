@@ -5,23 +5,23 @@ a curation pipeline needs CLUSTERS: every document labeled with a canonical
 representative so one keep-decision covers the whole duplicate group. Pairs
 are edges; the cluster label is the minimum doc id reachable through them.
 
-Algorithm: iterative min-label propagation (each node adopts the smallest
-label among itself and its neighbors) until a fixpoint. Convergence takes
-O(graph diameter) rounds; dedup graphs are overwhelmingly tiny cliques plus
-the occasional chain, so in practice <10 rounds. Each round is one shuffle
-join on the edge list (both relations hash-partitioned on the join key —
-at cluster scale the edge relation's partitioning is reused every round).
-For adversarial long-chain graphs at 100 TB, the alternating large-star /
-small-star algorithm (Kiveris et al., "Connected Components in MapReduce
-and Beyond", SoCC'14) halves chain lengths per round (O(log n) rounds);
-label propagation is the right default for dedup-shaped graphs because its
-per-round cost is strictly lower and diameters are small.
+One operator, :func:`connected_components`, with a size-based plan switch
+(the same kind Spark itself applies to joins). The canonical distinct edge
+list is probed with ONE bounded ``limit(SMALL_GRAPH_EDGES + 1).collect()``:
 
-The driver-side loop is control flow only — no data ever hits the driver
-except the single `changed` count per round (an aggregate, not a collect of
-rows). Each round's labels are persisted and the previous round's are
-unpersisted, so the lineage chain never grows unboundedly (a truncation
-concern for any iterative Spark algorithm).
+- within the cap the collected list IS the whole graph, so driver
+  union-find labels it (milliseconds) and the labels are broadcast-joined
+  back. Near-dup edge lists are tiny relative to the corpus (pairs above a
+  high Jaccard bar), so this is the common case even at large corpus sizes;
+- above the cap the alternating large-star / small-star rounds (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", SoCC'14) run. Each
+  round roughly halves path lengths, so convergence takes O(log n) rounds
+  whatever the graph's diameter — long chains included, where min-label
+  propagation would need O(diameter) rounds. Each round is one lazy
+  localCheckpoint (lineage truncation) plus one two-scalar convergence
+  fingerprint; no rows reach the driver.
+
+The corpus-size ``nodes`` relation never leaves the cluster on either path.
 
 Reference parity: the reference engine has no graph step (its dedup is
 day-partition overwrite, sp_raw_to_transformed_update_weather_data_query
@@ -32,7 +32,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql.types import StructField, StructType
+
+#: Largest canonical edge count solved by driver union-find; a larger
+#: graph runs the distributed star rounds. Also the driver-memory bound of
+#: the probe. Tests set it to 0 to force the star rounds on a small graph.
+SMALL_GRAPH_EDGES = 200_000
+#: Round cap of the star loop. Each round about halves path lengths, so
+#: the fingerprint reaches its fixpoint long before this on any real graph.
+MAX_ITER = 50
 
 
 def connected_components(
@@ -41,103 +49,68 @@ def connected_components(
     id_col: str = "doc_id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
-    max_iter: int = 25,
-    small_graph_edges: int = 200_000,
 ) -> DataFrame:
     """Label every node with the minimum node id of its component.
 
     ``nodes``: one row per node (isolated nodes keep their own id as label).
-    ``edges``: undirected pairs; direction/duplication is normalized here.
-    Returns (id_col, component) — component = min reachable id.
-
-    Adaptive execution: when the distinct edge list is at most
-    ``small_graph_edges`` rows it is collected ONCE and solved with
-    union-find on the driver (milliseconds), then broadcast-joined back —
-    the same size-based plan switch Spark itself applies to joins. Near-dup
-    edge lists are tiny relative to the corpus (pairs above a high Jaccard
-    bar), so this is the common case even at large corpus sizes; each
-    distributed round otherwise costs multiple scheduled stages just to
-    move a few thousand labels. Graphs above the bound run the iterative
-    propagation below (and the star variant handles adversarial
-    diameters). The corpus-size ``nodes`` relation never leaves the
-    cluster on either path."""
-    # Evaluate the edge subtree exactly ONCE. The callers' edge lists are
-    # often expensive pipelines (the minhash near-dup query feeding this is
-    # a 5-stage shingle/signature/bucket/verify tree); the symmetrization
-    # union below references the relation twice, so without this barrier the
-    # whole upstream pipeline executes twice before the persist kicks in.
-    base = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).localCheckpoint(eager=False)
-    deduped = base.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    # Strategy probe + small-path fetch in ONE bounded action: collect at
-    # most cap+1 distinct edges. Getting <= cap rows back proves the limit
-    # was not the binding constraint — the list IS the complete edge set,
-    # so the small path pays no second job (the previous exact-count probe
-    # was a full execution of the often-expensive upstream candidate
-    # pipeline just to pick a plan). CollectLimit stops producing rows at
-    # the cap, bounding driver memory on huge graphs.
-    pairs = deduped.limit(small_graph_edges + 1).collect()
-    if len(pairs) <= small_graph_edges:
-        deduped.unpersist()
-        return _solve_collected(nodes, id_col, pairs, "src", "dst")
-    sym = (
-        deduped.union(
-            deduped.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ``edges``: undirected pairs; direction, duplicates, self-loops and
+    NULL ends are normalized away here. Returns (id_col, component) —
+    component = min reachable id, of the type of ``nodes[id_col]``."""
+    # Canonical (u > v) distinct edges, lineage-truncated: the probe and
+    # every star round read one evaluation of the often expensive edge
+    # pipeline (a 5-stage shingle/signature/bucket/verify tree for the
+    # MinHash callers). Each round references the previous edge set ~16
+    # times (two symmetric self-joins per star phase), so plans would nest
+    # EXPONENTIALLY if lineage were kept — persist() alone does not
+    # truncate the logical plan and the driver OOMs planning round ~5. The
+    # checkpoint blocks are reclaimed by the ContextCleaner as old rounds
+    # go out of scope.
+    e = (
+        edges.select(
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
+            F.least(F.col(src_col), F.col(dst_col)).alias("v"),
         )
+        .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
-    # Dedup graphs are sparse: most documents touch no edge at all. Only
-    # nodes WITH edges participate in the iteration (the label of an
-    # isolated node never changes); everyone else gets its self-label in
-    # the single left join at the end. This shrinks the per-round state
-    # from |V| to |V_active| — typically 10x+ smaller for near-dup graphs.
-    labels = sym.select(F.col("src").alias("node"), F.col("src").alias("label"))
-    labels = labels.distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        for _ in range(max_iter):
-            nbr_min = (
-                sym.join(labels, sym.dst == labels.node)
-                .groupBy("src")
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            new_labels = (
-                labels.join(nbr_min, labels.node == nbr_min.src, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                    ).alias("label"),
-                    (F.col("nbr_label") < F.col("label")).alias("_changed"),
-                )
-            )
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-            changed = new_labels.filter(F.col("_changed")).count()  # one scalar
-            old = labels
-            labels = new_labels.drop("_changed")
-            old.unpersist()
-            if changed == 0:
-                break
-        active = labels.select(F.col("node").alias(id_col), "label")
-        return nodes.select(id_col).join(active, id_col, "left").select(
-            id_col, F.coalesce("label", F.col(id_col)).alias("component")
-        )
-    finally:
-        sym.unpersist()
-        deduped.unpersist()
+    # Strategy probe + small-path fetch in ONE bounded action: <= cap rows
+    # back proves the limit did not bind, so the list IS the complete edge
+    # set and the small path pays no second job. CollectLimit stops at the
+    # cap, bounding driver memory on huge graphs.
+    pairs = e.limit(SMALL_GRAPH_EDGES + 1).collect()
+    if len(pairs) <= SMALL_GRAPH_EDGES:
+        return _solve_collected(nodes, id_col, pairs)
+    prev_fp = None
+    for _ in range(MAX_ITER):
+        # Lazy checkpoint: the logical plan is truncated to an RDD leaf
+        # immediately, and the fingerprint action below is the single job
+        # that both materializes this round and tests convergence.
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        # Convergence = edge set is a fixpoint. (count, xor-of-hash) is an
+        # order-insensitive fingerprint over the distinct edge set: one
+        # aggregate action, two scalars; xor cannot overflow under ANSI.
+        row = e.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
+        ).first()
+        fp = (row["n"], row["h"])
+        if fp == prev_fp:
+            break
+        prev_fp = fp
+    # At the fixpoint every edge is (member, component-min): label nodes
+    # by their unique downward link; isolated nodes label themselves.
+    labels = e.groupBy("u").agg(F.min("v").alias("component"))
+    return (
+        nodes.select(F.col(id_col))
+        .join(labels.withColumnRenamed("u", id_col), id_col, "left")
+        .select(id_col, F.coalesce("component", F.col(id_col)).alias("component"))
+    )
 
 
-def _solve_collected(
-    nodes: DataFrame,
-    id_col: str,
-    pairs: list,
-    src_field: str,
-    dst_field: str,
-) -> DataFrame:
-    """Driver union-find over an already-collected (bounded) edge list,
-    broadcast-joined back onto the corpus-size ``nodes`` relation — the
-    shared small-graph path of both connected-components variants. Union
+def _solve_collected(nodes: DataFrame, id_col: str, pairs: list) -> DataFrame:
+    """Driver union-find over the collected canonical (u, v) edge list,
+    broadcast-joined back onto the corpus-size ``nodes`` relation. Union
     by MIN id, so the root IS the component label."""
     parent: dict = {}
 
@@ -149,16 +122,16 @@ def _solve_collected(
             parent[x], x = r, parent[x]
         return r
 
-    for p in pairs:
-        ra, rb = find(p[src_field]), find(p[dst_field])
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+    for u, v in pairs:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
-    labeled = [(x, find(x)) for x in parent]
-    spark = nodes.sparkSession
-    active = spark.createDataFrame(
-        labeled or [(None, None)], f"{id_col} long, component long"
-    ).filter(F.col(id_col).isNotNull())
+    id_type = nodes.schema[id_col].dataType
+    active = nodes.sparkSession.createDataFrame(
+        [(x, find(x)) for x in parent],
+        StructType([StructField(id_col, id_type), StructField("component", id_type)]),
+    )
     return nodes.select(id_col).join(F.broadcast(active), id_col, "left").select(
         id_col, F.coalesce("component", F.col(id_col)).alias("component")
     )
@@ -201,85 +174,6 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
     self_link = mins.select("u", F.col("mn").alias("v"))
     return relink.union(self_link).distinct()
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 50,
-    small_graph_edges: int = 200_000,
-) -> DataFrame:
-    """Alternating large-star / small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14).
-
-    Same contract as :func:`connected_components` — every node labeled with
-    its component's minimum id — but chains CONTRACT geometrically: each
-    large-star+small-star round roughly halves path lengths, so convergence
-    is O(log n) rounds regardless of graph diameter. This is the scale
-    fallback for adversarial graphs (long chains, high-diameter meshes)
-    where min-label propagation's O(diameter) rounds would dominate; for
-    dedup-shaped graphs (tiny cliques) label propagation's cheaper rounds
-    win. Both are shuffle-per-round on the edge list; no data touches the
-    driver except a two-scalar convergence fingerprint per round.
-
-    Size-adaptive like :func:`connected_components`: an edge list within
-    ``small_graph_edges`` is already fully collected by the strategy probe
-    and solved with driver union-find (the star rounds' value is bounding
-    ROUNDS on billion-edge graphs; on a graph small enough to collect,
-    each distributed round is pure scheduling floor — measured 5.7 s warm
-    for ~9 rounds over a 5k-edge chain graph at sf0.1 vs ~0.5 s solved
-    directly). Pass ``small_graph_edges=0`` to force the star path (the
-    unit tests exercising contraction do).
-    """
-    # Each round references the previous edge set ~16 times (two symmetric
-    # self-joins per star phase), so plans nest EXPONENTIALLY if lineage is
-    # kept — persist() alone does not truncate the logical plan and the
-    # driver OOMs planning round ~5. localCheckpoint (eager) cuts lineage to
-    # a materialized-RDD leaf each round; its blocks are MEMORY_AND_DISK and
-    # reclaimed by the ContextCleaner as old rounds go out of scope.
-    e = (
-        edges.select(
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("u"),
-            F.least(F.col(src_col), F.col(dst_col)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    if small_graph_edges > 0:
-        # Same bounded probe-and-fetch as connected_components: <= cap
-        # rows back means the list is the complete canonical edge set.
-        pairs = e.limit(small_graph_edges + 1).collect()
-        if len(pairs) <= small_graph_edges:
-            return _solve_collected(nodes, id_col, pairs, "u", "v")
-    prev_fp = None
-    for _ in range(max_iter):
-        # Lazy checkpoint: the logical plan is truncated to an RDD leaf
-        # immediately, and the fingerprint action below is the single job
-        # that both materializes this round and tests convergence.
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        # Convergence = edge set is a fixpoint. (count, xor-of-hash) is an
-        # order-insensitive fingerprint over the distinct edge set: one
-        # aggregate action, two scalars; xor cannot overflow under ANSI.
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-        ).first()
-        fp = (row["n"], row["h"])
-        if fp == prev_fp:
-            break
-        prev_fp = fp
-    # At the fixpoint every edge is (member, component-min): label nodes
-    # by their unique downward link; isolated nodes label themselves.
-    labels = e.groupBy("u").agg(F.min("v").alias("component"))
-    return (
-        nodes.select(F.col(id_col))
-        .join(labels.withColumnRenamed("u", id_col), id_col, "left")
-        .select(id_col, F.coalesce("component", F.col(id_col)).alias("component"))
-    )
 
 
 def dedup_cluster_stats(components: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -85,12 +85,13 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"{clusters_sql} ORDER BY doc_id",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairs -> clusters: iterative min-label propagation over the verified
-    near-dup pairs (operators.graph.connected_components). The oracle is the
-    same fixpoint expressed as a recursive-CTE transitive closure — feasible
-    at oracle scale, while the Spark side's per-round shuffle join is the
-    form that survives 100 TB (state is (node, label) rows, never a
-    transitive closure materialization)."""
+    """Pairs -> clusters: every document labelled with the minimum doc_id
+    its verified near-dup pairs reach (operators.graph.connected_components:
+    driver union-find on an edge list within the probe cap, distributed
+    large-star/small-star rounds above it). The oracle is the same labelling
+    expressed as a recursive-CTE transitive closure — feasible at oracle
+    scale, while neither Spark path ever materializes a transitive
+    closure."""
     d = load_table(spark, sf_dir, "documents")
     pairs = std_minhash_pairs(spark, sf_dir)
     comp = graph.connected_components(
@@ -108,14 +109,13 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al. SoCC'14, operators.graph.connected_components_star) on an
+    """Connected components (operators.graph.connected_components) on an
     ADVERSARIAL graph: each (lang, source) group is linked into one long
-    chain (consecutive doc_ids), so diameters are ~n/100 — the regime where
-    min-label propagation needs O(diameter) shuffle rounds but star
-    contraction halves chain lengths every round (O(log n) rounds). Like
-    connected_components, the operator is size-adaptive: an edge list
-    within the 200k probe cap (every driver SF and sf1; ~5k edges at
+    chain (consecutive doc_ids), so diameters are ~n/100 — the regime
+    where min-label propagation would need O(diameter) shuffle rounds but
+    the operator's large-star/small-star contraction (Kiveris et al.
+    SoCC'14) halves chain lengths every round (O(log n) rounds). An edge
+    list within the 200k probe cap (every driver SF and sf1; ~5k edges at
     sf0.1) is solved with driver union-find instead of paying ~9
     distributed rounds of pure scheduling floor (measured 5.7 s warm ->
     0.5 s); above the cap (sf10+) the star rounds run. A chain over a
@@ -130,7 +130,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select("doc_id", F.lag("doc_id").over(w).alias("prev"))
         .filter(F.col("prev").isNotNull())
     )
-    comp = graph.connected_components_star(
+    comp = graph.connected_components(
         d.select("doc_id"), edges, src_col="doc_id", dst_col="prev"
     )
     return comp.orderBy("doc_id")
@@ -162,7 +162,9 @@ def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard-verified at 0.5 on word-3-gram shingles."""
     d = load_table(spark, sf_dir, "documents")
     sh = dedup.shingles(d, "doc_id", "text", n=3)
-    bands = dedup.lsh_band_keys(dedup.minhash_signatures(sh, num_hashes=8), rows_per_band=2)
+    bands = dedup.lsh_band_keys(
+        dedup.minhash_wide_signatures(sh, num_hashes=8), rows_per_band=2
+    )
     b = hash_bucket(F.col("doc_id"))
     test_ids = d.select("doc_id").filter(b < 10)
     train_ids = d.select("doc_id").filter(b >= 15)
@@ -1344,7 +1346,7 @@ def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw_pairs = std_minhash_pairs(spark, sf_dir)
     else:
         raw_pairs = dedup.verified_pairs_from_wide(
-            wide, sh, num_hashes=8, rows_per_band=2, threshold=0.5
+            wide, sh, rows_per_band=2, threshold=0.5
         )
     pairs = raw_pairs.select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard_exact")

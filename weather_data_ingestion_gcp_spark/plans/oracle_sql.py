@@ -25,7 +25,7 @@ words_sql = r"list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')"
 #: one row per (doc_id, token) occurrence
 tokens_sql = f"SELECT doc_id, unnest({words_sql}) AS token FROM documents"
 
-#: MinHash parameters every oracle uses (dedup.minhash_signatures /
+#: MinHash parameters every oracle uses (dedup.minhash_wide_signatures /
 #: lsh_band_keys at num_hashes=8, rows_per_band=2)
 _NUM_HASHES = 8
 _ROWS_PER_BAND = 2
@@ -95,7 +95,7 @@ def shingles_sql(n: int, positional: bool = False, src: str = "documents") -> st
 
 def minhash_bands_sql(cap: int | None = None) -> str:
     """CTEs ``sig`` (doc_id, seed, minhash) and ``bands`` (doc_id, band,
-    band_key) over ``sh`` — mirrors dedup.minhash_signatures +
+    band_key) over ``sh`` — mirrors dedup.minhash_wide_signatures +
     lsh_band_keys. Lexicographic MIN over fixed-width md5 hex equals the
     numeric min-hash. With ``cap``, band buckets holding more than
     ``cap`` docs are dropped (the max_bucket_size skew control)."""

@@ -38,12 +38,14 @@ from __future__ import annotations
 import errno
 import json
 import os
+import re
 import time
 import uuid
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 
 class CommitConflict(Exception):
@@ -96,6 +98,29 @@ def _stat_encode(v) -> list | None:
     return None
 
 
+def _quote(name: str) -> str:
+    """Backtick-quote a field name unless the DDL parser takes it bare —
+    Spark's own ``quoteIfNeeded`` rule."""
+    if re.fullmatch(r"[A-Za-z0-9_]+", name) and not name.isdigit():
+        return name
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _type_string(t: DataType) -> str:
+    """``t.simpleString()`` with nested field names quoted where needed,
+    so the string parses back as DDL; ordinary type strings (and the
+    schemas already committed in logs) are unchanged."""
+    if isinstance(t, StructType):
+        return "struct<%s>" % ",".join(
+            f"{_quote(f.name)}:{_type_string(f.dataType)}" for f in t.fields
+        )
+    if isinstance(t, ArrayType):
+        return f"array<{_type_string(t.elementType)}>"
+    if isinstance(t, MapType):
+        return f"map<{_type_string(t.keyType)},{_type_string(t.valueType)}>"
+    return t.simpleString()
+
+
 class _Snapshot(NamedTuple):
     """One replay of the log (``TxLogTable._snapshot``)."""
 
@@ -107,7 +132,9 @@ class _Snapshot(NamedTuple):
 
     @property
     def ddl(self) -> str:
-        return ", ".join(f"`{c}` {t}" for c, t in self.schema.items())
+        return ", ".join(
+            f"`{c.replace('`', '``')}` {t}" for c, t in self.schema.items()
+        )
 
 
 def _unmatched(predicate: str):
@@ -419,7 +446,7 @@ class TxLogTable:
         every subsequent snapshot read — the failure surfaces at read
         time, far from the write that caused it). New columns are fine:
         additive evolution, null-filled by the schema-pinned reader."""
-        new = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        new = {f.name: _type_string(f.dataType) for f in df.schema.fields}
         conflicts = [
             (c, cur[c], t) for c, t in new.items() if c in cur and cur[c] != t
         ]
