@@ -194,7 +194,13 @@ def test_semantic_prune_keeps_lowest_id(spark):
     e2 = [0.0, 1.0] + [0.0] * (dim - 2)  # orthogonal to e1
     rows = [(0, e1), (1, e1), (2, e2), (3, e1)]  # 0,1,3 identical
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    out = {r.vec_id: r for r in similarity.semantic_dedup_prune(emb, tau=0.9).collect()}
+    bands = similarity.random_hyperplane_bands(emb)
+    out = {
+        r.vec_id: r
+        for r in similarity.semantic_dedup_prune(
+            emb, bands, max_bucket_size=4, tau=0.9
+        ).collect()
+    }
     assert out[0].kept is True and out[0].n_near == 2
     assert out[1].kept is False  # identical, higher id than 0
     assert out[3].kept is False

@@ -8,6 +8,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from weather_data_ingestion_gcp_spark.operators import layout
 from weather_data_ingestion_gcp_spark.operators.layout import (
     _input_bytes,
     spread_small,
@@ -37,7 +38,7 @@ def test_spread_small_repartitions_below_cap(spark, tmp_path):
 
 def test_spread_small_is_identity_above_cap(spark, tmp_path, monkeypatch):
     df = _write(tmp_path, spark)
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MAX_BYTES", "1")
+    monkeypatch.setattr(layout, "SPREAD_MAX_BYTES", 1)
     assert spread_small(df, "id") is df
 
 

@@ -116,6 +116,53 @@ def test_cosine_topk_matches_numpy(spark):
             assert math.isclose(cs, -negs, rel_tol=1e-9)
 
 
+def test_dot_pandas_matches_jvm_fold_on_null_empty_and_ragged_rows(spark):
+    """One Arrow batch mixing dense, NULL, empty and length-mismatched
+    rows: every cell equals the JVM `_dot` fold bit-for-bit — NULL for a
+    NULL vector or a ragged pair, 0.0 for two empty vectors — instead of
+    the worker crashing on the stack of a ragged batch."""
+    rows = [
+        (0, [1.0, 2.0, 3.0], [0.5, -1.0, 2.0]),
+        (1, None, [1.0, 1.0, 1.0]),
+        (2, [1.0, 2.0], [1.0, 2.0, 3.0]),
+        (3, [], []),
+        (4, [0.1, 0.2], [0.3, 0.4]),
+        (5, [1.0, 1.0, 1.0], None),
+    ]
+    df = spark.createDataFrame(rows, "i int, a array<double>, b array<double>")
+    got = df.select(
+        "i",
+        similarity.dot_pandas(F.col("a"), F.col("b")).alias("arrow"),
+        similarity._dot(F.col("a"), F.col("b")).alias("jvm"),
+    ).collect()
+    assert {r.i: r.arrow for r in got} == {r.i: r.jvm for r in got}
+    assert {r.i for r in got if r.arrow is None} == {1, 2, 5}
+    assert {r.i: r.arrow for r in got}[3] == 0.0
+
+
+def test_null_vector_gets_no_bands_and_no_topk_crash(spark):
+    """A NULL embedding has no sign signature (no band rows) and no
+    cosine (a NULL cell ranked after every number), so the exact top-k
+    of the other vectors is unchanged."""
+    rng = np.random.RandomState(3)
+    vecs = [[float(x) for x in rng.standard_normal(64)] for _ in range(6)]
+    rows = [(i, v) for i, v in enumerate(vecs)]
+    schema = "vec_id bigint, embedding array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    dirty = spark.createDataFrame(rows + [(6, None)], schema)
+    bands = similarity.random_hyperplane_bands(dirty).collect()
+    assert {r.vec_id for r in bands} == set(range(6))
+    assert sorted(map(tuple, bands)) == sorted(
+        map(tuple, similarity.random_hyperplane_bands(clean).collect())
+    )
+
+    def top(df):
+        q = df.filter(F.col("vec_id") < 2)
+        return sorted(map(tuple, similarity.brute_force_topk(df, q, k=3).collect()))
+
+    assert top(dirty) == top(clean)
+
+
 def test_ivf_probes_subset_and_finds_in_cluster_neighbors(spark):
     # two well-separated clusters: IVF with nprobe=1 must stay in-cluster
     rows = []
@@ -312,6 +359,32 @@ def test_multimodal_udf_payload_is_self_contained(tmp_path):
     assert out.stdout.strip() == "(3, 2, 4, 'png')"
 
 
+def test_similarity_numpy_kernels_pickle_by_value(tmp_path):
+    """The fold and the length grouping run inside Arrow UDF closures, so
+    they must unpickle and run where the package cannot be imported."""
+    import subprocess
+    import sys as _sys
+
+    from pyspark import cloudpickle
+
+    blob = tmp_path / "kernels.pkl"
+    blob.write_bytes(cloudpickle.dumps((similarity._fold, similarity._length_groups)))
+    probe = (
+        "import pickle, sys\n"
+        "import numpy as np\n"
+        "sys.modules['weather_data_ingestion_gcp_spark'] = None\n"  # poison
+        f"fold, groups = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
+        "col = np.array([np.array([1.0, 2.0]), None], dtype=object)\n"
+        "print([(list(i), fold(X, X).tolist()) for i, X in groups(col)])\n"
+    )
+    out = subprocess.run(
+        [_sys.executable, "-c", probe],
+        capture_output=True, text=True, cwd=str(tmp_path), env={"PATH": "/usr/bin:/bin"},
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "[([0], [5.0])]"
+
+
 def test_pickle_by_value_registry_is_bounded():
     """cloudpickle's by-value registration is process-global state: every
     dump that references anything from a registered module inlines it.
@@ -506,15 +579,20 @@ def test_rp_lsh_collides_near_identical_and_separates_clusters(spark):
     for i in range(10, 20):
         rows.append((i, [0.0, 10.0 + i * 0.01, 1.0] + [0.0] * 61))
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = similarity.rp_lsh_topk(df, df.filter(F.col("vec_id") == 0), k=3)
+    out = similarity.rp_lsh_topk(
+        df, df.filter(F.col("vec_id") == 0),
+        similarity.random_hyperplane_bands(df), k=3,
+    )
     neighbors = [r.n_id for r in out.collect()]
     assert len(neighbors) >= 1 and all(n < 10 for n in neighbors)
 
 
 def test_hyperplanes_deterministic_and_bounded(spark):
-    W1 = similarity.hyperplanes(n_bits=4, dim=8)
-    W2 = similarity.hyperplanes(n_bits=4, dim=8)
+    W1 = similarity.hyperplanes()
+    W2 = similarity.hyperplanes()
     assert W1 == W2
+    assert len(W1) == similarity.LSH_BITS
+    assert all(len(w) == similarity.LSH_DIM for w in W1)
     assert all(-1.0 <= x <= 1.0 for w in W1 for x in w)
 
 
@@ -1141,24 +1219,30 @@ def test_semantic_prune_bucket_cap_sub_blocks(spark):
     buckets measured at sf100). With max_bucket_size the over-cap
     bucket hash-splits into sub-buckets: pairs only within a sub-bucket,
     under-cap behavior untouched, and the capped pair set is a strict
-    subset of the uncapped one (only cross-sub pairs dropped)."""
+    subset of the one-sub-bucket reference (a cap at least the largest
+    bucket: only cross-sub pairs dropped). A cap below 1 is refused."""
     from pyspark.sql import functions as F
 
     from weather_data_ingestion_gcp_spark.operators import similarity
 
     # 12 near-identical vectors: all land in the same sign buckets and
-    # all 66 pairs verify at tau=0.35 when uncapped
+    # all 66 pairs verify at tau=0.35 in one sub-bucket
     rows = [
         (i, 0, [1.0 + 0.001 * i] + [0.01] * 63) for i in range(12)
     ]
     emb = spark.createDataFrame(
         rows, "vec_id bigint, label bigint, embedding array<double>"
     )
-    uncapped = similarity.semantic_dedup_prune(emb, tau=0.35)
-    capped = similarity.semantic_dedup_prune(emb, tau=0.35, max_bucket_size=4)
+    bands = similarity.random_hyperplane_bands(emb)
+    uncapped = similarity.semantic_dedup_prune(
+        emb, bands, max_bucket_size=12, tau=0.35
+    )
+    capped = similarity.semantic_dedup_prune(
+        emb, bands, max_bucket_size=4, tau=0.35
+    )
     un = {r["vec_id"]: (r["kept"], r["n_near"]) for r in uncapped.collect()}
     cp = {r["vec_id"]: (r["kept"], r["n_near"]) for r in capped.collect()}
-    # uncapped: one 12-clique -> only the min id is kept, 11 partners each
+    # one sub-bucket: one 12-clique -> only the min id is kept, 11 partners each
     assert un == {i: (i == 0, 11) for i in range(12)}
     # capped at 4: each md5 sub-bucket keeps its own minimum; neighbor
     # counts shrink to the sub-bucket cliques — strictly fewer partners
@@ -1169,11 +1253,17 @@ def test_semantic_prune_bucket_cap_sub_blocks(spark):
     small = spark.createDataFrame(
         rows[:3], "vec_id bigint, label bigint, embedding array<double>"
     )
-    a = similarity.semantic_dedup_prune(small, tau=0.35).collect()
+    small_bands = similarity.random_hyperplane_bands(small)
+    a = similarity.semantic_dedup_prune(
+        small, small_bands, max_bucket_size=12, tau=0.35
+    ).collect()
     b = similarity.semantic_dedup_prune(
-        small, tau=0.35, max_bucket_size=4
+        small, small_bands, max_bucket_size=4, tau=0.35
     ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_bucket_size"):
+            similarity.semantic_dedup_prune(emb, bands, max_bucket_size=bad)
 
 
 def test_semantic_prune_keeps_the_input_id_type(spark):
@@ -1185,15 +1275,18 @@ def test_semantic_prune_keeps_the_input_id_type(spark):
         [("a", e1), ("b", e1), ("c", e2), ("d", e1)],
         "vec_id string, embedding array<double>",
     )
-    for cap in (None, 2):
-        out = similarity.semantic_dedup_prune(emb, tau=0.9, max_bucket_size=cap)
+    bands = similarity.random_hyperplane_bands(emb)
+    for cap in (4, 2):
+        out = similarity.semantic_dedup_prune(
+            emb, bands, max_bucket_size=cap, tau=0.9
+        )
         assert out.schema["vec_id"].dataType.simpleString() == "string"
         got = {r.vec_id: (r.kept, r.n_near) for r in out.collect()}
         assert got["c"] == (True, 0) and got["a"][0] and not got["d"][0]
 
 
 def test_semantic_prune_bucket_returns_only_near_pairs(spark, monkeypatch):
-    """An uncapped bucket of 300 vectors with no near-duplicates: the
+    """One bucket of 300 vectors (cap above it) with no near-duplicates: the
     Arrow verify pass returns no pairs (not all 44,850). A zero vector's
     NaN cosines stay in its output, so Spark still decides them: NaN
     crosses Arrow as NULL and fails ``>= tau``."""
@@ -1212,7 +1305,9 @@ def test_semantic_prune_bucket_returns_only_near_pairs(spark, monkeypatch):
     for extra, n_pairs in (([], 0), ([(300, [0.0] * 64)], 300)):
         emb = spark.createDataFrame(rows + extra, "vec_id bigint, embedding array<double>")
         one_bucket = emb.select("vec_id", F.lit(0).alias("band"), F.lit(0).alias("bsig"))
-        out = similarity.semantic_dedup_prune(emb, tau=0.9, bands=one_bucket)
+        out = similarity.semantic_dedup_prune(
+            emb, one_bucket, max_bucket_size=len(rows) + 1, tau=0.9
+        )
         assert {(r.kept, r.n_near) for r in out.collect()} == {(True, 0)}
         assert verified[-1].count() == n_pairs
 

@@ -4,6 +4,8 @@ Scans the package source: the hand-spelled fragments of the md5-hex
 integer, the word split, the MinHash signature and the Jaccard verify
 join occur in ``oracle_sql.py`` only; no plan module rewrites SQL with
 ``re.sub`` or imports a ``_SQL_*`` / ``_sql_*`` fragment from a sibling.
+The numpy mirror of ``list_dot_product``, the ascending-dimension fold,
+occurs in ``operators/similarity.py`` only.
 Then pins the md5-hex integer across engines: DuckDB ``hex_sql`` and
 Spark ``hex_int`` must both equal Python's reading of the same digest.
 """
@@ -30,6 +32,7 @@ FRAGMENTS = [
     "string_split_regex(lower(text)",
     "MIN(md5(shingle",
     "JOIN sh sb ON",
+    "list_dot_product(v, ",
 ]
 FRAGMENT_NAME = re.compile(r"^_(SQL|sql)_")
 
@@ -43,6 +46,43 @@ def _sources():
 def test_fragment_spelled_once_in_oracle_sql(fragment):
     found = {rel: src.count(fragment) for rel, src in _sources() if fragment in src}
     assert found == {HOME: 1}, found
+
+
+def _range_folds(tree: ast.AST):
+    """Line numbers of ``acc += a[..., d] * b[..., d]``-shaped statements:
+    a product accumulated inside ``for d in range(...)`` and subscripted
+    by the loop variable."""
+    for loop in ast.walk(tree):
+        if not (
+            isinstance(loop, ast.For) and isinstance(loop.target, ast.Name)
+            and isinstance(loop.iter, ast.Call)
+            and getattr(loop.iter.func, "id", None) == "range"
+        ):
+            continue
+        var = loop.target.id
+        for n in ast.walk(loop):
+            if (
+                isinstance(n, ast.AugAssign) and isinstance(n.op, ast.Add)
+                and isinstance(n.value, (ast.BinOp, ast.Call))
+                and any(
+                    isinstance(s, ast.Subscript)
+                    and var in {x.id for x in ast.walk(s.slice) if isinstance(x, ast.Name)}
+                    for s in ast.walk(n.value)
+                )
+            ):
+                yield n.lineno
+
+
+def test_ascending_fold_spelled_once_in_similarity():
+    """The fold's IEEE addition order is what makes numpy dot products
+    bitwise-equal to DuckDB's; every numpy dot goes through
+    ``similarity._fold``, so no other module may accumulate one."""
+    found = {
+        rel: list(_range_folds(ast.parse(src))) for rel, src in _sources()
+    }
+    found = {rel: lines for rel, lines in found.items() if lines}
+    assert list(found) == ["operators/similarity.py"], found
+    assert len(found["operators/similarity.py"]) == 1, found
 
 
 def test_plan_modules_neither_rewrite_sql_nor_share_private_fragments():

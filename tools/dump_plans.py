@@ -2,12 +2,20 @@
 named ones) to stdout, so plan shapes (pushdown, broadcast, partial agg)
 can be reviewed or diffed between two checkouts.
 
+Expression ids (``vec_id#123L``), exchange ids (``[plan_id=3600]``) and
+RDD ids (``MapPartitionsRDD[109]``) count what the session built before,
+so they are stripped: a plain ``diff`` of two checkouts' output shows
+only shape changes.
+
 Usage: python tools/dump_plans.py SF_DIR [query ...]"""
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
+
+_SESSION_IDS = re.compile(r"(?<=#)\d+|(?<=RDD\[)\d+(?=\])|(?<=plan_id=)\d+")
 
 HEADLINERS = [
     "daily_rollup_events",
@@ -129,6 +137,7 @@ def main() -> int:
     for name in names:
         df = QUERIES[name](spark, sf)
         plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        plan = _SESSION_IDS.sub("", plan)
         print(f"## {name}\n\n{plan.rstrip()}\n", flush=True)
     return 0
 

@@ -18,9 +18,7 @@ the read.
   aggregate and 2.6 s -> 1.6 s on the minhash shingle build at sf0.1;
 - above the cap the input has natural splits (any sane writer emits
   ~128 MB row groups) and the repartition would shuffle the corpus for
-  nothing, so the frame is returned unchanged. The cap is conf/env
-  parameterised (``SPARK_GRAFT_SPREAD_MAX_BYTES``), not tuned to the
-  local core count.
+  nothing, so the frame is returned unchanged.
 
 Keys must be deterministic columns of the frame (never rand-derived —
 SPARK-38388: retried map tasks would re-draw and duplicate/lose rows).
@@ -39,8 +37,8 @@ from pyspark.sql import Column, DataFrame
 #: Above this compressed-input size the scan is assumed naturally
 #: splittable and spread_small is a no-op. 256 MiB: two default-sized
 #: parquet row groups — the point where a writer that produces one-
-#: row-group files has itself stopped being sane.
-_DEFAULT_CAP = 256 << 20
+#: row-group files has itself stopped being sane. Tests monkeypatch it.
+SPREAD_MAX_BYTES = 256 << 20
 
 
 def _input_bytes(df: DataFrame) -> int | None:
@@ -67,9 +65,8 @@ def spread_small(df: DataFrame, *keys: str | Column) -> DataFrame:
     default parallelism so scan-side per-row work parallelizes; identity
     above the size cap (where the scan has natural splits) or when the
     input size is unknowable."""
-    cap = int(os.environ.get("SPARK_GRAFT_SPREAD_MAX_BYTES", _DEFAULT_CAP))
     size = _input_bytes(df)
-    if size is None or size >= cap:
+    if size is None or size >= SPREAD_MAX_BYTES:
         return df
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism, *keys)

@@ -1,16 +1,26 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths:
+Three decisions are parity-critical, because every result is hash-checked
+bit-for-bit against DuckDB's ``list_dot_product``, and each is spelled
+once, here:
 
-- **brute-force cosine top-k** — the exactness baseline. Queries broadcast
-  (they're small by construction); the corpus never shuffles; per-partition
-  top-k via window row_number. All arithmetic stays JVM-side with
-  higher-order array functions (zip_with + aggregate), in double precision.
-- **IVF (inverted-file) top-k** — the scale path: corpus pre-clustered
-  (here: the dataset's own label column, or any k-means assignment), query
-  probes only the `nprobe` nearest centroids, searching ~nprobe/k of the
-  corpus. At 100 TB the corpus is bucketed/partitioned by cluster id so a
-  probe reads only matching partitions.
+- **the fold** — every dot product accumulates ``acc += x_d * y_d`` in
+  ascending ``d`` from 0.0 in double precision: the JVM ``_dot`` lambda
+  for scalar projections, :func:`_fold` for every numpy batch (Arrow
+  pair scoring, sign bits, the grouped verifies of the embedding plans);
+- **the top-k cut** — :func:`pair_side` projects each side's id, vector
+  and norm, :func:`pair_cosine` scores a pair, and :func:`cosine_rank`
+  holds the ``(cos_sim desc, n_id)`` window that :func:`cosine_topk`
+  cuts on;
+- **the sign-LSH geometry** — ``LSH_BITS`` md5-derived hyperplanes over
+  ``LSH_DIM`` dims in bands of ``LSH_BAND_BITS`` bits, read by
+  ``oracle_sql.sign_bands_sql`` for the oracles.
+
+Search paths: exact brute-force top-k (queries broadcast, the corpus
+never shuffles), IVF (probe the ``nprobe`` nearest centroids of a
+cluster column or a k-means assignment), and random-hyperplane LSH
+(candidates share a band signature), plus SemDedup pruning over the same
+band index.
 """
 
 from __future__ import annotations
@@ -23,6 +33,15 @@ from pyspark.sql.window import Window
 
 from ..store import keep
 from .sampling import hex_int
+
+#: Sign-LSH geometry: ``LSH_BITS`` hyperplanes over ``LSH_DIM``-dim
+#: vectors from md5 seed ``LSH_SEED``, cut into bands of
+#: ``LSH_BAND_BITS`` bits. The oracles embed the same planes, so these
+#: are parity constants, not tuning knobs.
+LSH_BITS = 16
+LSH_BAND_BITS = 4
+LSH_DIM = 64
+LSH_SEED = "hp"
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -43,37 +62,102 @@ def _norm(v: Column) -> Column:
     return F.sqrt(_dot(v, v))
 
 
-def _make_dot_pandas():
-    """Arrow-vectorized pairwise dot product with the SAME accumulation
-    order as the `_dot` fold (and DuckDB's list_dot_product): acc starts at
-    0.0 and adds x_d * y_d in ascending d — one numpy vector op per dim per
-    batch instead of an interpreted lambda per element per row. Identical
-    IEEE operation sequence -> results are bitwise-equal to the fold, so
-    oracle-checked queries can use it freely. Built lazily (fresh UDF per
-    call site) so closures never share Spark-serialized state."""
+def _numpy_kernels():
+    """The numpy helpers Arrow UDF closures call, built as closures so
+    cloudpickle ships them BY VALUE: a module-level function is pickled
+    by reference, and a Python worker whose sys.path lacks this repo dies
+    importing it (the ``_mm_parsers`` finding)."""
+
+    def fold(X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+        """Dot products over the last axis, accumulated ``acc += X[..., d]
+        * Y[..., d]`` in ascending ``d`` from 0.0 — the IEEE operation
+        sequence of :func:`_dot` and DuckDB's list_dot_product, so results
+        are bitwise-equal to both (a BLAS dot or a pairwise sum reorders
+        the additions). The leading axes broadcast:
+        ``fold(A[:, None], B[None])`` is the pairwise matrix."""
+        acc = np.zeros(np.broadcast_shapes(X.shape[:-1], Y.shape[:-1]))
+        for d in range(X.shape[-1]):
+            acc += X[..., d] * Y[..., d]
+        return acc
+
+    def length_groups(*cols: np.ndarray):
+        """Yield ``(idx, X_1, ..., X_k)`` per vector length the rows of an
+        Arrow batch share: the row indices and, per column, the stacked
+        float64 ``(rows, length)`` matrix — a dense batch is one group, a
+        ragged one a group per length. A row that is NULL in any column,
+        or whose columns differ in length, is in no group, so its cell
+        stays NULL, as the `_dot` fold gives."""
+        lens = [np.array([-1 if v is None else len(v) for v in c]) for c in cols]
+        ok = lens[0] >= 0
+        for other in lens[1:]:
+            ok &= other == lens[0]
+        for n in np.unique(lens[0][ok]):
+            idx = np.flatnonzero(ok & (lens[0] == n))
+            yield (idx, *(np.stack(c[idx]).astype(np.float64) for c in cols))
+
+    return fold, length_groups
+
+
+_fold, _length_groups = _numpy_kernels()
+
+
+def dot_pandas(a: Column, b: Column) -> Column:
+    """Pairwise dot product, Arrow-vectorized: one numpy vector op per
+    dim per batch instead of an interpreted lambda per element per row,
+    and bitwise-equal to :func:`_dot` (see :func:`_fold`). A NULL vector
+    or a length-mismatched pair gives NULL, two empty vectors 0.0, as
+    `_dot` does. Use in hot pair-scoring paths; `_dot` remains for plan
+    shapes where a scalar JVM expression matters."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(T.DoubleType())
     def dot_pd(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        X = np.stack(xs.to_numpy()).astype(np.float64)
-        Y = np.stack(ys.to_numpy()).astype(np.float64)
-        acc = np.zeros(X.shape[0], dtype=np.float64)
-        for d in range(X.shape[1]):  # sequential fold order — parity-critical
-            acc += X[:, d] * Y[:, d]
-        return pd.Series(acc)
+        out = np.full(len(xs), np.nan)  # NaN returns as a NULL cell
+        for idx, X, Y in _length_groups(xs.to_numpy(), ys.to_numpy()):
+            out[idx] = _fold(X, Y)
+        return pd.Series(out)
 
-    return dot_pd
+    return dot_pd(a.cast("array<double>"), b.cast("array<double>"))
 
 
-def dot_pandas(a: Column, b: Column) -> Column:
-    """Pairwise dot product, Arrow-vectorized, fold-order-identical to
-    :func:`_dot` (see `_make_dot_pandas`). Use in hot pair-scoring paths;
-    `_dot` remains for plan shapes where a scalar JVM expression matters
-    (e.g. inside otherwise pure-codegen projections of few rows)."""
-    return _make_dot_pandas()(
-        a.cast("array<double>"), b.cast("array<double>")
+def pair_side(
+    df: DataFrame, side: str, id_col: str, vec_col: str, *extra: Column
+) -> DataFrame:
+    """One side of a cosine pair scan: ``{side}_id``, ``{side}_vec`` and
+    ``{side}_nrm`` (``side`` is ``q`` or ``n``), plus ``extra`` columns.
+    The norm is folded once per vector, before the pair blowup, so each
+    pair costs one dot product, not three."""
+    v = F.col(vec_col)
+    return df.select(
+        F.col(id_col).alias(f"{side}_id"),
+        v.alias(f"{side}_vec"),
+        _norm(v).alias(f"{side}_nrm"),
+        *extra,
     )
+
+
+def pair_cosine() -> Column:
+    """``cos_sim`` of a joined q/n :func:`pair_side` pair: the Arrow dot
+    over ``dot/(q_nrm*n_nrm)``, the expression tree of inline cosine and
+    of the oracles."""
+    return (
+        dot_pandas(F.col("q_vec"), F.col("n_vec"))
+        / (F.col("q_nrm") * F.col("n_nrm"))
+    ).alias("cos_sim")
+
+
+def cosine_rank(scored: DataFrame) -> DataFrame:
+    """``scored`` plus ``rk``: each query's candidates numbered by
+    ``(cos_sim desc, n_id)``, the oracles' tie order."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.col("n_id"))
+    return scored.withColumn("rk", F.row_number().over(w))
+
+
+def cosine_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top ``k`` rows per ``q_id`` of a ``(q_id, n_id, cos_sim, ...)``
+    relation, ranked by :func:`cosine_rank`."""
+    return cosine_rank(scored).filter(F.col("rk") <= k)
 
 
 def brute_force_topk(
@@ -86,38 +170,14 @@ def brute_force_topk(
     """Exact top-k cosine neighbors per query (self-matches excluded).
 
     Broadcast the query side: the corpus-side scan stays shuffle-free and
-    the only exchange is the final per-query top-k. Norms are computed ONCE
-    per vector before the pair blowup, so each of the |Q|x|C| pairs costs
-    one array fold (the dot product), not three. `dot/(norm_a*norm_b)` is
-    the same floating-point expression tree as inline cosine — results are
-    bitwise identical (and stay bitwise-comparable to the DuckDB oracle).
+    the only exchange is the final per-query top-k.
     """
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_nrm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        _norm(F.col(vec_col)).alias("n_nrm"),
-    )
-    # pair scoring is the |Q| x |C| hot loop -> Arrow-vectorized dot
-    # (fold-order-identical to _dot, so oracle results are unchanged)
+    q = pair_side(queries, "q", id_col, vec_col)
+    c = pair_side(corpus, "n", id_col, vec_col)
     scored = c.join(F.broadcast(q), F.col("q_id") != F.col("n_id")).select(
-        "q_id",
-        "n_id",
-        (
-            dot_pandas(F.col("q_vec"), F.col("n_vec"))
-            / (F.col("q_nrm") * F.col("n_nrm"))
-        ).alias("cos_sim"),
+        "q_id", "n_id", pair_cosine()
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos_sim", "rk")
-    )
+    return cosine_topk(scored, k)
 
 
 def kmeans_assign(
@@ -161,17 +221,18 @@ def kmeans_assign(
         .localCheckpoint(eager=False)
     )
 
-    def _assigned(C: "np.ndarray") -> DataFrame:
+    def _nearest(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
+        """Max-cosine centroid of each row. argmax takes the FIRST max ->
+        ties resolve to the lowest cluster id."""
+        xn = np.sqrt((X * X).sum(axis=1))
         cn = np.sqrt((C * C).sum(axis=1))
+        return np.argmax((X @ C.T) / (xn[:, None] * cn[None, :]), axis=1)
 
+    def _assigned(C: "np.ndarray") -> DataFrame:
         @pandas_udf(T.IntegerType())
         def nearest(vs: pd.Series) -> pd.Series:
             X = np.stack(vs.to_numpy()).astype(np.float64)
-            xn = np.sqrt((X * X).sum(axis=1))
-            sims = (X @ C.T) / (xn[:, None] * cn[None, :])
-            # argmax takes the FIRST max -> ties resolve to the lowest
-            # cluster id (same as the previous orderBy(desc sim, cluster))
-            return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
+            return pd.Series(_nearest(X, C).astype(np.int32))
 
         return vecs.withColumn("cluster", nearest(F.col("_v")))
 
@@ -196,9 +257,7 @@ def kmeans_assign(
                 if pdf.empty:
                     continue
                 X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                xn = np.sqrt((X * X).sum(axis=1))
-                cn = np.sqrt((Cb * Cb).sum(axis=1))
-                a = np.argmax((X @ Cb.T) / (xn[:, None] * cn[None, :]), axis=1)
+                a = _nearest(X, Cb)
                 if first:
                     S = np.zeros((Cb.shape[0], X.shape[1]), dtype=np.float64)
                     N = np.zeros(Cb.shape[0], dtype=np.float64)
@@ -240,9 +299,10 @@ def kmeans_assign(
     )
 
 
-def hyperplanes(n_bits: int = 16, dim: int = 64, seed: str = "hp") -> list[list[float]]:
+def hyperplanes() -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes for sign-LSH: component
-    (j, d) = md5("seed|j|d") first 12 hex nibbles, normalized to (-1, 1).
+    (j, d) = md5("LSH_SEED|j|d") first 12 hex nibbles, normalized to
+    (-1, 1), for ``LSH_BITS`` planes over ``LSH_DIM`` dims.
 
     Derived driver-side with hashlib so the SAME float literals can be
     embedded in both the Spark plan and a SQL oracle — cross-engine
@@ -252,63 +312,54 @@ def hyperplanes(n_bits: int = 16, dim: int = 64, seed: str = "hp") -> list[list[
 
     return [
         [
-            int(hashlib.md5(f"{seed}|{j}|{d}".encode()).hexdigest()[:12], 16)
+            int(hashlib.md5(f"{LSH_SEED}|{j}|{d}".encode()).hexdigest()[:12], 16)
             / float(1 << 48)
             * 2.0
             - 1.0
-            for d in range(dim)
+            for d in range(LSH_DIM)
         ]
-        for j in range(n_bits)
+        for j in range(LSH_BITS)
     ]
 
 
 def random_hyperplane_bands(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = 16,
-    band_bits: int = 4,
-    dim: int = 64,
-    seed: str = "hp",
+    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """(id, band, bsig) rows: sign-LSH signature split into bands.
 
-    bit_j = [dot(v, w_j) > 0]; bands of ``band_bits`` bits bucket together
-    (two vectors collide in a band with probability (1 - theta/pi)^band_bits
-    — the random-projection analog of MinHash banding).
+    bit_j = [dot(v, w_j) > 0]; bands of ``LSH_BAND_BITS`` bits bucket
+    together (two vectors collide in a band with probability
+    (1 - theta/pi)^LSH_BAND_BITS — the random-projection analog of
+    MinHash banding).
 
-    The 16 projections are computed in an Arrow-vectorized pandas UDF: a
+    The projections are computed in an Arrow-vectorized pandas UDF: a
     higher-order-function fold is interpreted per element (16 planes x 64
     dims = 1024 interpreted ops per row — measured ~1 ms/row), while the
-    UDF does 16x64 numpy vector ops per BATCH. Accumulation is sequential
-    over dims (acc += x_d * w_d, ascending d), the exact IEEE operation
-    sequence of both the previous fold and the DuckDB oracle's
-    list_dot_product — sign bits, and therefore buckets, stay
-    bitwise-identical cross-engine. The x4 band explode multiplies rows
-    only after signatures are computed.
+    UDF does one :func:`_fold` over all planes per BATCH, with the exact
+    IEEE operation sequence of the DuckDB oracle's list_dot_product —
+    sign bits, and therefore buckets, stay bitwise-identical cross-engine.
+    A NULL vector, or one whose length is not ``LSH_DIM``, has no dot
+    product with the planes and gets no band rows. The band explode
+    multiplies rows only after signatures are computed.
     """
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    W = hyperplanes(n_bits=n_bits, dim=dim, seed=seed)
-    n_bands = n_bits // band_bits
+    W = np.array(hyperplanes())
+    n_bands = LSH_BITS // LSH_BAND_BITS
+    place = 1 << np.arange(LSH_BAND_BITS - 1, -1, -1)  # first bit is the MSB
 
     @pandas_udf(T.ArrayType(T.IntegerType()))
     def band_sigs(vecs: pd.Series) -> pd.Series:
-        X = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
-        n = X.shape[0]
-        bits = np.empty((n_bits, n), dtype=np.int64)
-        for j in range(n_bits):
-            acc = np.zeros(n, dtype=np.float64)
-            wj = W[j]
-            for d in range(dim):  # sequential fold order — parity-critical
-                acc += X[:, d] * wj[d]
-            bits[j] = acc > 0
-        sigs = np.zeros((n_bands, n), dtype=np.int64)
-        for b in range(n_bands):
-            for i in range(band_bits):
-                sigs[b] = sigs[b] * 2 + bits[b * band_bits + i]
-        return pd.Series(list(sigs.T.astype(np.int32)))
+        out = [None] * len(vecs)
+        for idx, X in _length_groups(vecs.to_numpy()):
+            if X.shape[1] != W.shape[1]:
+                continue
+            bits = _fold(X[:, None], W[None]) > 0  # (rows, LSH_BITS)
+            sigs = bits.reshape(len(idx), n_bands, -1) @ place
+            for i, sig in zip(idx, sigs.astype(np.int32)):
+                out[i] = sig
+        return pd.Series(out, dtype=object)
 
     return df.select(
         F.col(id_col).alias("vec_id_"),
@@ -325,14 +376,10 @@ def random_hyperplane_bands(
 def rp_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    corpus_bands: DataFrame,
     k: int = 5,
-    n_bits: int = 16,
-    band_bits: int = 4,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: str = "hp",
-    corpus_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane (sign) LSH: candidates are
     pairs sharing ANY signature band; exact cosine ranks them. The
@@ -340,55 +387,28 @@ def rp_lsh_topk(
     bucketed by band signature so a query touches only colliding buckets,
     the same access pattern as the MinHash-LSH dedup path.
 
-    ``corpus_bands``: optionally a precomputed (id, band, bsig) relation
-    for the corpus (a persisted ANN index shared across queries — what a
-    real deployment maintains instead of re-signing the corpus per
-    lookup). Must come from :func:`random_hyperplane_bands` with the
-    SAME band parameters.
+    ``corpus_bands``: the corpus's (id, band, bsig) relation from
+    :func:`random_hyperplane_bands` — a persisted ANN index shared across
+    queries, what a real deployment maintains instead of re-signing the
+    corpus per lookup.
     """
-    cb = (
-        corpus_bands
-        if corpus_bands is not None
-        else random_hyperplane_bands(
-            corpus, id_col, vec_col, n_bits, band_bits, dim, seed
-        )
-    )
-    qb = random_hyperplane_bands(queries, id_col, vec_col, n_bits, band_bits, dim, seed)
+    qb = random_hyperplane_bands(queries, id_col, vec_col)
     pairs = (
         qb.withColumnRenamed(id_col, "q_id")
-        .join(F.broadcast(cb.withColumnRenamed(id_col, "n_id")), ["band", "bsig"])
+        .join(
+            F.broadcast(corpus_bands.withColumnRenamed(id_col, "n_id")),
+            ["band", "bsig"],
+        )
         .filter(F.col("q_id") != F.col("n_id"))
         .select("q_id", "n_id")
         .distinct()
     )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_nrm"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        _norm(F.col(vec_col)).alias("n_nrm"),
-    )
     scored = (
-        pairs.join(F.broadcast(q), "q_id")
-        .join(c, "n_id")
-        .select(
-            "q_id",
-            "n_id",
-            (
-                dot_pandas(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_nrm") * F.col("n_nrm"))
-            ).alias("cos_sim"),
-        )
+        pairs.join(F.broadcast(pair_side(queries, "q", id_col, vec_col)), "q_id")
+        .join(pair_side(corpus, "n", id_col, vec_col), "n_id")
+        .select("q_id", "n_id", pair_cosine())
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos_sim", "rk")
-    )
+    return cosine_topk(scored, k)
 
 
 def ivf_parts(
@@ -419,11 +439,7 @@ def ivf_parts(
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
         .select("cluster", F.col("pm").getField("m").alias("centroid"))
     )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_nrm"),
-    )
+    q = pair_side(queries, "q", id_col, vec_col)
     probe_w = Window.partitionBy("q_id").orderBy(F.desc("c_sim"), F.col("cluster"))
     probes = (
         q.crossJoin(F.broadcast(centroids))
@@ -435,27 +451,13 @@ def ivf_parts(
         .filter(F.col("prk") <= nprobe)
         .select("q_id", "q_vec", "q_nrm", "cluster")
     )
-    # Per-vector norms computed BEFORE the candidate blowup: each candidate
-    # pair costs one dot-product fold. dot/(norm*norm) is the identical
-    # floating-point expression tree as inline cosine (oracle-bitwise-safe).
-    c = corpus.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        _norm(F.col(vec_col)).alias("n_nrm"),
-        F.col(cluster_col).alias("cluster"),
+    c = pair_side(
+        corpus, "n", id_col, vec_col, F.col(cluster_col).alias("cluster")
     )
     scored = (
         c.join(F.broadcast(probes), "cluster")
         .filter(F.col("q_id") != F.col("n_id"))
-        .select(
-            "q_id",
-            "n_id",
-            "cluster",
-            (
-                dot_pandas(F.col("q_vec"), F.col("n_vec"))
-                / (F.col("q_nrm") * F.col("n_nrm"))
-            ).alias("cos_sim"),
-        )
+        .select("q_id", "n_id", "cluster", pair_cosine())
     )
     return probes.select("q_id", "cluster"), scored
 
@@ -480,12 +482,7 @@ def ivf_topk(
         corpus, queries, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
         cluster_col=cluster_col,
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.col("n_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos_sim", "rk")
-    )
+    return cosine_topk(scored, k).select("q_id", "n_id", "cos_sim", "rk")
 
 
 # ---------------------------------------------------------------------------
@@ -530,12 +527,10 @@ def scalar_quantize_stats(
 
     @pandas_udf(DoubleType())
     def _max_abs_err(vs: pd.Series, mns: pd.Series, mxs: pd.Series) -> pd.Series:
-        vals = vs.to_numpy()
-        lens = np.array([0 if v is None else len(v) for v in vals])
-        out = np.full(len(vals), np.nan)  # NaN returns as a NULL cell
-        for n in np.unique(lens[lens > 0]):
-            idx = np.flatnonzero(lens == n)
-            X = np.stack(vals[idx]).astype(np.float64)
+        out = np.full(len(vs), np.nan)  # NaN returns as a NULL cell
+        for idx, X in _length_groups(vs.to_numpy()):
+            if X.shape[1] == 0:
+                continue
             mn_a = mns.to_numpy(dtype=np.float64)[idx, None]
             s = (mxs.to_numpy(dtype=np.float64)[idx, None] - mn_a) / 255.0
             q = (X - mn_a) / s
@@ -639,15 +634,11 @@ def mmr_select(
 
 def semantic_dedup_prune(
     emb: DataFrame,
+    bands: DataFrame,
+    max_bucket_size: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     tau: float = 0.35,
-    n_bits: int = 16,
-    band_bits: int = 4,
-    dim: int = 64,
-    seed: str = "hp",
-    max_bucket_size: int | None = None,
-    bands: DataFrame | None = None,
 ) -> DataFrame:
     """SemDedup-style semantic pruning (Abbas et al. '23, arXiv:2303.09540):
     drop any vector with a semantically-near LOWER-ID neighbor, keeping the
@@ -661,46 +652,39 @@ def semantic_dedup_prune(
     — the decision is one EXISTS per vector, and transitively-linked
     neighborhoods still keep exactly their minimum id.
 
+    ``bands``: the (id, band, bsig) relation of :func:`random_hyperplane_bands`
+    over ``emb`` — the persisted sign-LSH index that also serves
+    :func:`rp_lsh_topk`.
+
     Output: (id, kept, n_near) — n_near counts verified partners on either
     side, the neighborhood-density signal SemDedup thresholds on.
     Quadratic only within an LSH bucket — and, round-7 fix, a bucket is
-    CAPPED: the band space is a fixed 2^band_bits signatures, so with
+    CAPPED: the band space is a fixed 2^LSH_BAND_BITS signatures, so with
     clustered vectors (the whole point of SemDedup) a bucket's size
     grows with the corpus and its self-join grows quadratically (the
     100x probe measured the blow-up at 128k vectors: most of a label's
-    vectors share a sign signature). ``max_bucket_size`` hash-splits
+    vectors share a sign signature). ``max_bucket_size`` (an int >= 1,
+    required so no caller gets the quadratic by omission) hash-splits
     over-cap (band, bsig) buckets into ceil(n/cap) deterministic
     md5-hex4 sub-buckets — pairs are generated within a sub-bucket only,
     bounding candidates at ~N*cap/2 per band (LINEAR), the
-    blocked_jaccard_pairs recipe. Buckets at or under the cap get one
-    sub-bucket, identical to uncapped — the cap only changes behavior
-    where the quadratic would bite; cross-sub near-dups are the
+    blocked_jaccard_pairs recipe. A bucket at or under the cap is one
+    sub-bucket, i.e. all its pairs; pass a cap at least the largest
+    bucket's size for plain banding. Cross-sub near-dups are the
     documented recall trade (a greedy keep-first dedup tolerates it).
     """
-    # ``bands``: optionally the same precomputed persisted (id, band,
-    # bsig) relation rp_lsh_topk accepts — one sign-LSH index serves
-    # both the ANN lookups and this prune
-    if bands is None:
-        bands = random_hyperplane_bands(
-            emb, id_col, vec_col, n_bits, band_bits, dim, seed
-        )
-    if max_bucket_size is not None:
-        counts = bands.groupBy("band", "bsig").agg(
-            F.count(F.lit(1)).alias("_bn")
-        )
-        n_sub = F.expr(
-            f"(`_bn` + {int(max_bucket_size) - 1}) div {int(max_bucket_size)}"
-        )
-        salt = hex_int(F.md5(F.col(id_col).cast("string"))) % n_sub
-        bands = bands.join(F.broadcast(counts), ["band", "bsig"]).select(
-            id_col, "band", "bsig", salt.alias("_sub")
-        )
-        bkeys = ["band", "bsig", "_sub"]
-    else:
-        bkeys = ["band", "bsig"]
+    if not isinstance(max_bucket_size, int) or max_bucket_size < 1:
+        raise ValueError(f"max_bucket_size must be an int >= 1, got {max_bucket_size!r}")
+    counts = bands.groupBy("band", "bsig").agg(F.count(F.lit(1)).alias("_bn"))
+    n_sub = F.expr(f"(`_bn` + {max_bucket_size - 1}) div {max_bucket_size}")
+    salt = hex_int(F.md5(F.col(id_col).cast("string"))) % n_sub
+    bands = bands.join(F.broadcast(counts), ["band", "bsig"]).select(
+        id_col, "band", "bsig", salt.alias("_sub")
+    )
+    bkeys = ["band", "bsig", "_sub"]
     # Round-14 verify (guide §8 / §4.2, VERDICT-r13 #7): candidate
     # generation AND cosine verify run in ONE grouped Arrow pass per
-    # (band, bsig[, _sub]) bucket — each bucket's vectors cross the
+    # (band, bsig, _sub) bucket — each bucket's vectors cross the
     # Python boundary once (O(corpus x bands) rows), and the within-
     # bucket pairwise dots are numpy vector ops, replacing the JVM
     # per-pair path that joined BOTH 64-dim vectors onto ~465k candidate
@@ -711,10 +695,8 @@ def semantic_dedup_prune(
     # unrolled codegen dot REJECTED (cold 9.1 -> 26.1 s — JIT bloat,
     # round 13); this per-bucket shape measured cold 6.96 -> 2.07 s /
     # warm 1.22 -> 0.63 s with byte-identical output (round 14 probe).
-    # Parity: ascending-dim accumulation is the exact IEEE sequence of
-    # the `_dot` fold and DuckDB's list_dot_product (the round-7
-    # semdecon recipe); sqrt/divide association matches the old
-    # dot/(na*nb) expression; float32 -> float64 widening is exact. The
+    # Parity: norms and tile dots are `_fold`s; sqrt/divide association
+    # matches the dot/(na*nb) expression of the oracle; float32 -> float64 widening is exact. The
     # 6-dp round + >= tau decision stays in Spark: the pass drops only
     # pairs under a floor below it, so a bucket yields its near-dup
     # pairs, not all n(n-1)/2. A NaN cosine (a zero vector) is never
@@ -728,19 +710,13 @@ def semantic_dedup_prune(
         ids = pdf["_vid"].to_numpy()
         n = len(ids)
         X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        dim_n = X.shape[1]
-        ss = np.zeros(n, dtype=np.float64)
-        for d in range(dim_n):  # ascending-dim fold — parity-critical
-            ss += X[:, d] * X[:, d]
-        nrm = np.sqrt(ss)
+        nrm = np.sqrt(_fold(X, X))
         out_a, out_b, out_r = [], [], []
         for i0 in range(0, n, TILE):
             i1 = min(i0 + TILE, n)
             for j0 in range(i0, n, TILE):
                 j1 = min(j0 + TILE, n)
-                acc = np.zeros((i1 - i0, j1 - j0), dtype=np.float64)
-                for d in range(dim_n):  # same per-pair IEEE fold
-                    acc += np.outer(X[i0:i1, d], X[j0:j1, d])
+                acc = _fold(X[i0:i1, None], X[None, j0:j1])
                 raw = acc / np.outer(nrm[i0:i1], nrm[j0:j1])
                 ii, jj = np.indices(raw.shape)
                 # upper triangle (id_a < id_b), minus pairs under the floor

@@ -49,9 +49,6 @@ from . import multimodal_payloads  # noqa: F401,E402
 # silently evict driver coverage.
 # ---------------------------------------------------------------------------
 DRIVER_WINDOW = [
-    # changed-code leads
-    "streaming_engagement_sink_equiv",
-    "scd2_customer_history",
     # r09 trigram-minhash block (anchor first; cache-sharing followers
     # adjacent — shares never reorder the window, so the order here IS
     # the adjacency)
@@ -66,9 +63,17 @@ DRIVER_WINDOW = [
     "neardup_cluster_stats",
     "graph_pagerank_neardup",
     "graph_triangle_counts",
-    # r09 embeddings: the sign-LSH band-index builder (its shares
-    # follower dedup_semantic_prune runs just past the window)
+    # changed-code leads: the similarity entries whose fold, top-k cut
+    # or sign-LSH geometry moved behind operators/similarity.py — the
+    # sign-LSH band-index builder, then its shares follower; the exact
+    # top-k memo anchor, then its follower
     "similarity_ann_rp_lsh",
+    "dedup_semantic_prune",
+    "similarity_cosine_topk",
+    "similarity_ann_ivf_kmeans",
+    "similarity_ann_ivf",
+    "dedup_embedding_cosine",
+    "decontaminate_semantic_topmatch",
     # r08 embeddings scans
     "embedding_outlier_scores",
     "hard_negative_topk",
@@ -92,13 +97,6 @@ DRIVER_WINDOW = [
     "set_operations",
     "unpivot_event_metrics",
     "window_running_analytics",
-    "order_limit_topn",
-    # r09 fill: standalone events/orders scans
-    "dau_wau_engagement",
-    "rolling_7d_user_value",
-    "set_operations_all",
-    # (tpch_q4_order_priority stays on its r09 verdict — swapped out for
-    # the new frame-energy entry; the no-pre-r09 goal is unaffected)
     # r08 scalar/dimension scans
     "base64_roundtrip",
     "broadcast_route_lookup",

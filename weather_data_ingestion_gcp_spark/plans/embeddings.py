@@ -16,8 +16,8 @@ from pyspark.sql.window import Window
 from .. import store
 from ..operators import similarity
 from ..operators.sampling import hash_bucket
-from ..operators.similarity import _norm, dot_pandas
-from .oracle_sql import hash_bucket_sql
+from ..operators.similarity import _fold
+from .oracle_sql import hash_bucket_sql, sign_bands_sql
 from .registry import load_table, register
 
 
@@ -46,10 +46,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors cross the Arrow boundary once per block (not once per pair —
     a per-pair formulation ships |pairs| x dim x 2 doubles, ~256 MB at
     sf0.1's ~250k pairs, and an interpreted per-pair lambda fold costs
-    3 x dim lambda evals per pair). numpy accumulates sum-of-outer-products
-    ascending by dimension, so every pair's dot — and each self-dot on the
-    diagonal — follows the exact IEEE sequence of DuckDB's
-    list_dot_product: buckets and values stay bitwise oracle-equal.
+    3 x dim lambda evals per pair). Every pair's dot — and each self-dot
+    on the diagonal — is one `similarity._fold`, the exact IEEE sequence
+    of DuckDB's list_dot_product: values stay bitwise oracle-equal.
     At 100 TB the blocking key bounds group size (a block is a cluster
     assignment by construction), which is what makes grouped-map safe."""
     import numpy as np
@@ -63,10 +62,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         X = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-        n, dim = X.shape
-        acc = np.zeros((n, n), dtype=np.float64)
-        for d in range(dim):  # sequential fold order — parity-critical
-            acc += np.outer(X[:, d], X[:, d])
+        n = len(ids)
+        acc = _fold(X[:, None], X[None])
         nrm = np.sqrt(np.diag(acc))
         sim = acc / np.outer(nrm, nrm)
         ia, ib = np.triu_indices(n, k=1)
@@ -219,31 +216,13 @@ def similarity_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rp_lsh_oracle(k: int = 5, n_bits: int = 16, band_bits: int = 4) -> str:
-    """Oracle for the random-hyperplane LSH: the hyperplane floats are
-    generated by the SAME python helper that feeds the Spark plan, so both
-    engines bucket on bitwise-identical dot products."""
-    from ..operators.similarity import hyperplanes
-
-    W = hyperplanes(n_bits=n_bits, dim=64)
-
-    def lit(w: list[float]) -> str:
-        return "[" + ", ".join(repr(x) for x in w) + "]"
-
-    def bit(j: int) -> str:
-        return f"(CASE WHEN list_dot_product(v, {lit(W[j])}) > 0 THEN 1 ELSE 0 END)"
-
-    n_bands = n_bits // band_bits
-    band_rows = []
-    for b in range(n_bands):
-        sig = "0"
-        for i in range(band_bits):
-            sig = f"({sig} * 2 + {bit(b * band_bits + i)})"
-        band_rows.append(f"SELECT vec_id, {b} AS band, {sig} AS bsig FROM e")
-    bands_sql = " UNION ALL ".join(band_rows)
+def _rp_lsh_oracle(k: int = 5) -> str:
+    """Oracle for the random-hyperplane LSH: the band rows come from
+    ``sign_bands_sql``, the same hyperplane floats that feed the Spark
+    plan, so both engines bucket on bitwise-identical dot products."""
     return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cb AS ({bands_sql}),
+    cb AS ({sign_bands_sql()}),
     qb AS (SELECT * FROM cb WHERE vec_id < 8),
     pairs AS (
         SELECT DISTINCT qb.vec_id AS q_id, cb.vec_id AS n_id
@@ -270,7 +249,7 @@ def _rp_lsh_oracle(k: int = 5, n_bits: int = 16, band_bits: int = 4) -> str:
 
 def emb_bands_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embeddings table's sign-LSH band relation (vec_id, band,
-    bsig) at the engine-default parameters (16 bits, 4 bands), session-
+    bsig) at the sign-LSH geometry (16 bits, 4 bands), session-
     persisted and memoized per (session, sf dir) — ONE index feeding
     ``similarity_ann_rp_lsh`` and its ``shares`` follower
     ``dedup_semantic_prune``, which otherwise each re-run the
@@ -330,8 +309,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
     probes, scored = similarity.ivf_parts(emb, queries, nprobe=2)
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.col("n_id"))
-    ranked = scored.withColumn("rk", F.row_number().over(w))
+    ranked = similarity.cosine_rank(scored)
     audited = ranked.join(
         probes.withColumn("is_probed", F.lit(True)), ["q_id", "cluster"], "left"
     )
@@ -531,42 +509,21 @@ def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pattern), so buckets, cosines, and the kept set all hash-check exactly.
 # ---------------------------------------------------------------------------
 _SEM_TAU = 0.35
-#: sign-LSH bucket cap (round 7): the band space is fixed (2^band_bits
+#: sign-LSH bucket cap (round 7): the band space is fixed (2^LSH_BAND_BITS
 #: signatures), so clustered corpora concentrate a label's vectors into
 #: one bucket and the self-join goes quadratic — the 100x probe measured
 #: the blow-up at 128k vectors. Over-cap buckets hash-split into
 #: ceil(n/cap) md5-hex4 sub-buckets (pairs within a sub-bucket only,
 #: ~N*cap/2 total — linear); buckets at or under the cap are untouched,
 #: and no sf<=0.1 bucket exceeds 256, so driver-SF outputs are
-#: byte-identical to the uncapped form.
+#: byte-identical to plain (one sub-bucket) banding.
 _SEM_CAP = 256
 
 
-def _semantic_dedup_oracle(
-    tau: float, n_bits: int = 16, band_bits: int = 4
-) -> str:
-    from ..operators.similarity import hyperplanes
-
-    W = hyperplanes(n_bits=n_bits, dim=64)
-
-    def lit(w: list) -> str:
-        return "[" + ", ".join(repr(x) for x in w) + "]"
-
-    def bit(j: int) -> str:
-        return (
-            f"(CASE WHEN list_dot_product(v, {lit(W[j])}) > 0 THEN 1 ELSE 0 END)"
-        )
-
-    band_rows = []
-    for b in range(n_bits // band_bits):
-        sig = "0"
-        for i in range(band_bits):
-            sig = f"({sig} * 2 + {bit(b * band_bits + i)})"
-        band_rows.append(f"SELECT vec_id, {b} AS band, {sig} AS bsig FROM e")
-    bands_sql = " UNION ALL ".join(band_rows)
+def _semantic_dedup_oracle(tau: float) -> str:
     return f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-    cb AS ({bands_sql}),
+    cb AS ({sign_bands_sql()}),
     bc AS (SELECT band, bsig, COUNT(*) AS bn FROM cb GROUP BY band, bsig),
     cbs AS (
         SELECT cb.vec_id, cb.band, cb.bsig,
@@ -611,9 +568,9 @@ def dedup_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.semantic_dedup_prune(
         emb,
-        tau=_SEM_TAU,
-        max_bucket_size=_SEM_CAP,
         bands=emb_bands_shared(spark, sf_dir),
+        max_bucket_size=_SEM_CAP,
+        tau=_SEM_TAU,
     ).orderBy("vec_id")
 
 
@@ -749,33 +706,19 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"),
+    q = similarity.pair_side(
+        emb.filter(F.col("vec_id") < 8), "q", "vec_id", "embedding",
         F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_vec"),
-        _norm(F.col("embedding")).alias("q_nrm"),
     )
-    c = emb.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("label").alias("n_label"),
-        F.col("embedding").alias("n_vec"),
-        _norm(F.col("embedding")).alias("n_nrm"),
+    c = similarity.pair_side(
+        emb, "n", "vec_id", "embedding", F.col("label").alias("n_label")
     )
     scored = c.join(
         F.broadcast(q),
         (F.col("q_id") != F.col("n_id")) & (F.col("q_label") != F.col("n_label")),
-    ).select(
-        "q_id",
-        "n_id",
-        "n_label",
-        (
-            dot_pandas(F.col("q_vec"), F.col("n_vec")) / (F.col("q_nrm") * F.col("n_nrm"))
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.col("n_id"))
+    ).select("q_id", "n_id", "n_label", similarity.pair_cosine())
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
+        similarity.cosine_topk(scored, 3)
         .select("q_id", "n_id", "n_label", F.round("cos_sim", 6).alias("cos_sim"), "rk")
         .orderBy("q_id", "rk")
     )
@@ -1138,10 +1081,10 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
     heat). The fold is output-identical to the unchunked argmax: tiles
     advance in ascending train-id order, each tile's argmax takes the
     first occurrence, and the running best replaces only on strictly
-    greater sim — together exactly ORDER BY sim DESC, train_id. numpy
-    accumulates each pair's dot product ascending by dimension — the
-    exact IEEE sequence of DuckDB's list_dot_product — so sims, the
-    >= threshold decision, and the argmax are bitwise oracle-equal.
+    greater sim — together exactly ORDER BY sim DESC, train_id. Each
+    pair's dot product is one `similarity._fold` — the exact IEEE
+    sequence of DuckDB's list_dot_product — so sims, the >= threshold
+    decision, and the argmax are bitwise oracle-equal.
     Zero-norm embeddings are excluded on BOTH sides (sum-of-squares
     > 0, same ascending fold): a zero vector has no cosine, and the
     NaN it would produce sorts differently in Spark (NaN fails >=)
@@ -1179,12 +1122,8 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
             )
         Xt = np.stack(te["e"].to_numpy()).astype(np.float64)
         Xr = np.stack(tr["e"].to_numpy()).astype(np.float64)
-        dim = Xt.shape[1]
-        st = np.zeros(len(te), dtype=np.float64)
-        sr = np.zeros(len(tr), dtype=np.float64)
-        for d in range(dim):  # sequential fold order — parity-critical
-            st += Xt[:, d] * Xt[:, d]
-            sr += Xr[:, d] * Xr[:, d]
+        st = _fold(Xt, Xt)
+        sr = _fold(Xr, Xr)
         tr_ids = tr["vec_id"].to_numpy()
         best_sim = np.empty(len(te), dtype=np.float64)
         best_id = np.empty(len(te), dtype=np.int64)
@@ -1194,9 +1133,7 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
             bi = np.zeros(t1 - t0, dtype=np.int64)
             for r0 in range(0, len(tr), C):
                 r1 = min(r0 + C, len(tr))
-                acc = np.zeros((t1 - t0, r1 - r0), dtype=np.float64)
-                for d in range(dim):  # same per-pair IEEE fold as above
-                    acc += np.outer(Xt[t0:t1, d], Xr[r0:r1, d])
+                acc = _fold(Xt[t0:t1, None], Xr[None, r0:r1])
                 sim = acc / np.outer(np.sqrt(st[t0:t1]), np.sqrt(sr[r0:r1]))
                 j = sim.argmax(axis=1)  # first max = smallest id in tile
                 m = sim[np.arange(t1 - t0), j]

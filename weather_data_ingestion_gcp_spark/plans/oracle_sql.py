@@ -15,7 +15,7 @@ the distinct ``(doc_id, shingle)`` relation.
 
 from __future__ import annotations
 
-from ..operators import text
+from ..operators import similarity, text
 from .registry import _SAMPLE_PCT, _SAMPLE_TARGET_DOCS
 
 #: lowercase whitespace split with empty tokens dropped — mirrors
@@ -243,3 +243,25 @@ winnow_fps_sql = r"""norm AS (
                         ELSE [] END) AS fps
         FROM g
     )"""
+
+
+def sign_bands_sql() -> str:
+    """``UNION ALL`` of ``(vec_id, band, bsig)`` rows over the caller's
+    ``e(vec_id, v)`` — mirrors similarity.random_hyperplane_bands: the
+    same md5 hyperplane float literals and band geometry (the
+    ``similarity.LSH_*`` constants), so both engines bucket on
+    bitwise-identical dot products."""
+    W = similarity.hyperplanes()
+    bb = similarity.LSH_BAND_BITS
+
+    def bit(j: int) -> str:
+        w = "[" + ", ".join(repr(x) for x in W[j]) + "]"
+        return f"(CASE WHEN list_dot_product(v, {w}) > 0 THEN 1 ELSE 0 END)"
+
+    band_rows = []
+    for b in range(similarity.LSH_BITS // bb):
+        sig = "0"
+        for i in range(bb):
+            sig = f"({sig} * 2 + {bit(b * bb + i)})"
+        band_rows.append(f"SELECT vec_id, {b} AS band, {sig} AS bsig FROM e")
+    return " UNION ALL ".join(band_rows)
