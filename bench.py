@@ -3,7 +3,9 @@
 
 Output (stdout): the full per-query JSON record first, then a COMPACT
 summary line LAST — {"metric", "value" (total sec), "unit", "queries"
-(top-10 slowest only), "sf", "n_queries"}. The full 140-float map
+(top-10 slowest only), "sf", "cpus", "master", "n_queries"}; ``cpus``
+and ``master`` are what the session resolved, not what was asked for.
+The full 140-float map
 overflowed the driver's tail-capture buffer in round 2 (rc 0 but
 parsed:null), so the final line is kept small enough to always survive a
 tail capture, whichever line the driver parses. The complete record is
@@ -338,6 +340,8 @@ def main() -> int:
         "calibrated_s_per_query": cal_spq,
         "peak_storage_mb": round(peak_storage_mb, 1),
         "sf": sf_val,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }
     print(json.dumps(full))
     if not only:  # subset runs must not clobber the full-suite record
@@ -361,6 +365,8 @@ def main() -> int:
                 "calibrated_s_per_query": cal_spq,
                 "peak_storage_mb": round(peak_storage_mb, 1),
                 "sf": sf_val,
+                "cpus": full["cpus"],
+                "master": full["master"],
                 "n_queries": len(timings),
             }
         )

@@ -163,6 +163,56 @@ def test_null_vector_gets_no_bands_and_no_topk_crash(spark):
     assert top(dirty) == top(clean)
 
 
+#: a NULL row (id 0) and a ragged row (id 5: length 2 among length-3 rows)
+_HOSTILE = [
+    (0, None),
+    (1, [1.0, 0.0, 0.0]),
+    (2, [0.9, 0.1, 0.0]),
+    (3, [0.0, 1.0, 0.0]),
+    (4, [0.1, 0.9, 0.0]),
+    (5, [1.0, 0.0]),
+]
+
+
+@pytest.mark.parametrize(
+    "op", ["kmeans_assign", "mmr_select", "block_cosine_pairs", "pca_power_iteration"]
+)
+def test_hostile_vectors_give_null_cells_no_pairs_or_value_error(spark, tmp_path, op):
+    """Every operator that turns an Arrow batch of vectors into a matrix
+    survives a NULL and a ragged row: a NULL cell, no pair, or a
+    driver-side ValueError, never a Python-worker crash."""
+    df = spark.createDataFrame(_HOSTILE, "vec_id bigint, embedding array<float>")
+    if op == "kmeans_assign":
+        out = similarity.kmeans_assign(df, k=2, max_iter=3).collect()
+        got = {r.vec_id: r.kmeans_cluster for r in out}
+        assert got[0] is None and got[5] is None
+        assert got[1] == got[2] != got[3] == got[4]
+    elif op == "mmr_select":
+        out = similarity.mmr_select(df, [1.0, 0.0, 0.0], k=8).collect()
+        assert sorted(r.vec_id for r in out) == [1, 2, 3, 4]
+    elif op == "block_cosine_pairs":
+        blocked = df.withColumn("blk", F.lit(0))
+        out = similarity.block_cosine_pairs(blocked, ["blk"], -1.0).collect()
+        assert sorted((r.id_a, r.id_b) for r in out) == [
+            (a, b) for a in range(1, 5) for b in range(a + 1, 5)
+        ]
+    else:
+        from weather_data_ingestion_gcp_spark.plans.embeddings import pca_power_iteration
+
+        def pca(rows, name):
+            sf = str(tmp_path / name)
+            spark.createDataFrame(rows, "vec_id bigint, embedding array<float>").write.parquet(
+                f"{sf}/embeddings.parquet"
+            )
+            return sorted(map(tuple, pca_power_iteration(spark, sf).collect()))
+
+        clean = [(i, [float(i % 7) - 3.0, 0.25, float(i % 3)]) for i in range(1, 30)]
+        # a NULL vector adds nothing to the Gram sums
+        assert pca([_HOSTILE[0], *clean], "with_null") == pca(clean, "clean")
+        with pytest.raises(ValueError, match="differ in length"):
+            pca([*clean, _HOSTILE[5]], "ragged")
+
+
 def test_ivf_probes_subset_and_finds_in_cluster_neighbors(spark):
     # two well-separated clusters: IVF with nprobe=1 must stay in-cluster
     rows = []
@@ -360,29 +410,35 @@ def test_multimodal_udf_payload_is_self_contained(tmp_path):
 
 
 def test_similarity_numpy_kernels_pickle_by_value(tmp_path):
-    """The fold and the length grouping run inside Arrow UDF closures, so
-    they must unpickle and run where the package cannot be imported."""
+    """The fold, the length grouping and the tile scan run inside Arrow
+    UDF closures, so they must unpickle and run where the package cannot
+    be imported."""
     import subprocess
     import sys as _sys
 
     from pyspark import cloudpickle
 
     blob = tmp_path / "kernels.pkl"
-    blob.write_bytes(cloudpickle.dumps((similarity._fold, similarity._length_groups)))
+    blob.write_bytes(
+        cloudpickle.dumps(
+            (similarity._fold, similarity._length_groups, similarity._cosine_tiles)
+        )
+    )
     probe = (
         "import pickle, sys\n"
         "import numpy as np\n"
         "sys.modules['weather_data_ingestion_gcp_spark'] = None\n"  # poison
-        f"fold, groups = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
-        "col = np.array([np.array([1.0, 2.0]), None], dtype=object)\n"
-        "print([(list(i), fold(X, X).tolist()) for i, X in groups(col)])\n"
+        f"fold, groups, tiles = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
+        "col = np.array([np.array([3.0, 4.0]), None], dtype=object)\n"
+        "print([(list(i), fold(X, X).tolist(), [c.tolist() for _, _, c in tiles(X, X)])"
+        " for i, X in groups(col)])\n"
     )
     out = subprocess.run(
         [_sys.executable, "-c", probe],
         capture_output=True, text=True, cwd=str(tmp_path), env={"PATH": "/usr/bin:/bin"},
     )
     assert out.returncode == 0, out.stderr
-    assert out.stdout.strip() == "[([0], [5.0])]"
+    assert out.stdout.strip() == "[([0], [25.0], [[[1.0]]])]"
 
 
 def test_pickle_by_value_registry_is_bounded():

@@ -255,22 +255,23 @@ def test_semantic_decontamination_matches_pure_python(spark, tmp_path):
     assert got[t0][0] == r0 and got[t0][2]
 
 
+def _cos(a, b):
+    """Cosine with the ascending-dim IEEE fold and dot/(na*nb)."""
+    dot = n1 = n2 = 0.0
+    for d in range(len(a)):
+        dot += a[d] * b[d]
+        n1 += a[d] * a[d]
+        n2 += b[d] * b[d]
+    return dot / (math.sqrt(n1) * math.sqrt(n2))
+
+
 def _naive_topmatch(vec, test_ids, train_ids):
     """Unchunked reference: full argmax with the smallest-id tie rule
     and the ascending-dim IEEE fold."""
-
-    def cos(a, b):
-        dot = n1 = n2 = 0.0
-        for d in range(len(a)):
-            dot += a[d] * b[d]
-            n1 += a[d] * a[d]
-            n2 += b[d] * b[d]
-        return dot / (math.sqrt(n1) * math.sqrt(n2))
-
     out = {}
     for t in test_ids:
-        best = max(train_ids, key=lambda r: (cos(vec[t], vec[r]), -r))
-        s = cos(vec[t], vec[best])
+        best = max(train_ids, key=lambda r: (_cos(vec[t], vec[r]), -r))
+        s = _cos(vec[t], vec[best])
         out[t] = (best, round(s, 6), s >= 0.35)
     return out
 
@@ -278,15 +279,17 @@ def _naive_topmatch(vec, test_ids, train_ids):
 def test_semantic_decontamination_chunked_fold_equals_naive(
     spark, tmp_path, monkeypatch
 ):
-    """The round-8 tile fold (bounded score matrix) must be
-    output-identical to the unchunked argmax: shrink the chunk edge to 3
-    so a ~20-train-vector label folds across 7 tiles, with (a) a tie
-    pair split ACROSS tiles (must keep the smaller id), (b) the strict
-    best in the LAST tile (running max must replace), and (c) a test
-    side wider than one tile."""
-    from weather_data_ingestion_gcp_spark.plans import embeddings
+    """The tile scan (bounded score matrix) must be output-identical to
+    the untiled result: shrink the tile edge to 3 so a ~20-train-vector
+    label folds across 7 tiles, with (a) a tie pair split ACROSS tiles
+    (must keep the smaller id), (b) the strict best in the LAST tile
+    (running max must replace), and (c) a test side wider than one
+    tile. The same fixture's within-label pairs through
+    dedup_embedding_cosine (25 vectors: the 45 tiles on or above the
+    diagonal of a 9 x 9 tiling) must equal a pure-Python all-pairs."""
+    from weather_data_ingestion_gcp_spark.operators import similarity
 
-    monkeypatch.setattr(embeddings, "_SEMDECON_CHUNK", 3)
+    monkeypatch.setattr(similarity, "TILE", 3)
     test_ids = [i for i in range(3000) if _hex4_bucket(i) < 10][:5]
     train_ids = [i for i in range(3000) if _hex4_bucket(i) >= 15][:20]
     import random
@@ -323,6 +326,19 @@ def test_semantic_decontamination_chunked_fold_equals_naive(
     assert got == want
     assert got[test_ids[0]][0] == train_ids[2]  # cross-tile tie -> min id
     assert got[test_ids[1]][0] == train_ids[19]  # last-tile strict best
+
+    pairs = {
+        (r["id_a"], r["id_b"]): r["cos_sim"]
+        for r in QUERIES["dedup_embedding_cosine"](spark, str(tmp_path)).collect()
+    }
+    ids = sorted(vec32)
+    want_pairs = {
+        (a, b): round(_cos(vec32[a], vec32[b]), 6)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1 :]
+        if _cos(vec32[a], vec32[b]) >= 0.35
+    }
+    assert want_pairs and pairs == want_pairs
 
 
 def test_semantic_decontamination_excludes_zero_norm(spark, tmp_path):

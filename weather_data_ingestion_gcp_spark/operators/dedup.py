@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..store import keep
-from .sampling import hex_int
+from .sampling import hex_int, sub_block
 # store.release under its older name, still called by perfbench's reset
 from ..store import release as release_shingle_caches  # noqa: F401
 
@@ -529,11 +529,7 @@ def blocked_jaccard_pairs(
 
     bn, sub, ids, p = _fresh("_bn"), _fresh("_sub"), _fresh("_ids"), _fresh("_p")
     counts = df.groupBy(*block_cols).agg(F.count(F.lit(1)).alias(bn))
-    # integer ceil-div (float division + cast could round at scale)
-    n_sub = F.expr(
-        f"(`{bn}` + {int(max_block_size) - 1}) div {int(max_block_size)}"
-    )
-    salt = hex_int(F.md5(F.col(id_col).cast("string"))) % n_sub
+    salt = sub_block(F.col(id_col), bn, int(max_block_size))
     # counts is block-cardinality-sized -> broadcast side; the salt is
     # computable in the same projection, so the blocking key rides the
     # narrow explode instead of a corpus-sized join afterwards

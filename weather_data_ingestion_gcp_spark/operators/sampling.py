@@ -33,6 +33,17 @@ def hash_bucket(key: Column, n_buckets: int = 100) -> Column:
     return (hex_int(F.md5(key.cast("string"))) % n_buckets).alias("bucket")
 
 
+def sub_block(key: Column, n_col: str, cap: int) -> Column:
+    """Capped sub-block of a row whose block holds ``n_col`` rows: the
+    md5-hex4 integer of the key (as :func:`hash_bucket`) modulo
+    ceil(n/cap), an integer ceil-div (float division + cast could round
+    at scale). A block at or under ``cap`` is one sub-block, 0; a larger
+    one splits into deterministic sub-blocks of about ``cap`` rows. DuckDB
+    mirror: plans.oracle_sql.sub_block_sql."""
+    n_sub = F.expr(f"(`{n_col}` + {cap - 1}) div {cap}")
+    return hex_int(F.md5(key.cast("string"))) % n_sub
+
+
 def bernoulli_hash_sample(
     df: DataFrame, key_col: str, fraction_pct: int, n_buckets: int = 100
 ) -> DataFrame:

@@ -7,7 +7,7 @@ once, here:
 - **the fold** — every dot product accumulates ``acc += x_d * y_d`` in
   ascending ``d`` from 0.0 in double precision: the JVM ``_dot`` lambda
   for scalar projections, :func:`_fold` for every numpy batch (Arrow
-  pair scoring, sign bits, the grouped verifies of the embedding plans);
+  pair scoring, sign bits, the tile scan);
 - **the top-k cut** — :func:`pair_side` projects each side's id, vector
   and norm, :func:`pair_cosine` scores a pair, and :func:`cosine_rank`
   holds the ``(cos_sim desc, n_id)`` window that :func:`cosine_topk`
@@ -15,6 +15,14 @@ once, here:
 - **the sign-LSH geometry** — ``LSH_BITS`` md5-derived hyperplanes over
   ``LSH_DIM`` dims in bands of ``LSH_BAND_BITS`` bits, read by
   ``oracle_sql.sign_bands_sql`` for the oracles.
+
+One Arrow vector boundary: every batch of vectors becomes float64
+matrices in :func:`_length_groups`, one per vector length, so a NULL
+vector is in no matrix and vectors of different lengths never meet.
+Within-block cosines run through one tile scan, :func:`_cosine_tiles`:
+it is where the fold meets the cut, ``dot/(na*nb)`` over ``TILE x TILE``
+blocks, and both :func:`block_cosine_pairs` and the semantic
+decontamination argmax read its tiles.
 
 Search paths: exact brute-force top-k (queries broadcast, the corpus
 never shuffles), IVF (probe the ``nprobe`` nearest centroids of a
@@ -32,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..store import keep
-from .sampling import hex_int
+from .sampling import sub_block
 
 #: Sign-LSH geometry: ``LSH_BITS`` hyperplanes over ``LSH_DIM``-dim
 #: vectors from md5 seed ``LSH_SEED``, cut into bands of
@@ -42,6 +50,12 @@ LSH_BITS = 16
 LSH_BAND_BITS = 4
 LSH_DIM = 64
 LSH_SEED = "hp"
+
+#: Tile edge of :func:`_cosine_tiles`: a block's cosine matrix is built
+#: ``TILE x TILE`` at a time, so per-block memory stays at TILE^2
+#: doubles (8 MB) however hot the block is. Tests shrink it to force
+#: many-tile scans on small inputs.
+TILE = 1024
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -83,10 +97,10 @@ def _numpy_kernels():
     def length_groups(*cols: np.ndarray):
         """Yield ``(idx, X_1, ..., X_k)`` per vector length the rows of an
         Arrow batch share: the row indices and, per column, the stacked
-        float64 ``(rows, length)`` matrix — a dense batch is one group, a
-        ragged one a group per length. A row that is NULL in any column,
-        or whose columns differ in length, is in no group, so its cell
-        stays NULL, as the `_dot` fold gives."""
+        float64 ``(rows, length)`` matrix — a dense batch is one group in
+        row order, a ragged one a group per length. A row that is NULL in
+        any column, or whose columns differ in length, is in no group, so
+        its cell stays NULL, as the `_dot` fold gives."""
         lens = [np.array([-1 if v is None else len(v) for v in c]) for c in cols]
         ok = lens[0] >= 0
         for other in lens[1:]:
@@ -95,10 +109,24 @@ def _numpy_kernels():
             idx = np.flatnonzero(ok & (lens[0] == n))
             yield (idx, *(np.stack(c[idx]).astype(np.float64) for c in cols))
 
-    return fold, length_groups
+    def cosine_tiles(A: np.ndarray, B: np.ndarray):
+        """Yield ``(i0, j0, cos)`` for the ``TILE x TILE`` blocks of the
+        cosine matrix of the rows of ``A`` against the rows of ``B``, in
+        ascending ``i0``, then ``j0``. Norms and dots are ``fold``s and
+        the cosine is ``dot/(na*nb)``, the association of the oracles; a
+        zero norm gives NaN. With ``B is A`` the tiles below the
+        diagonal, mirrors of those above it, are skipped."""
+        na = np.sqrt(fold(A, A))
+        nb = na if B is A else np.sqrt(fold(B, B))
+        for i0 in range(0, len(A), TILE):
+            for j0 in range(i0 if B is A else 0, len(B), TILE):
+                dots = fold(A[i0 : i0 + TILE, None], B[None, j0 : j0 + TILE])
+                yield i0, j0, dots / np.outer(na[i0 : i0 + TILE], nb[j0 : j0 + TILE])
+
+    return fold, length_groups, cosine_tiles
 
 
-_fold, _length_groups = _numpy_kernels()
+_fold, _length_groups, _cosine_tiles = _numpy_kernels()
 
 
 def dot_pandas(a: Column, b: Column) -> Column:
@@ -208,7 +236,10 @@ def kmeans_assign(
     driver-side too): the state is k x dim floats by definition,
     independent of corpus size, so this collect is scale-safe. The
     corpus itself never shuffles during assignment. Seeds: the k lowest-
-    id vectors (deterministic, no RNG).
+    id non-NULL vectors (deterministic, no RNG); they set the dimension
+    and must share one length (``ValueError`` otherwise). A NULL vector,
+    or one of another length, gets a NULL cluster and adds nothing to the
+    centroid sums.
     """
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
@@ -231,18 +262,23 @@ def kmeans_assign(
     def _assigned(C: "np.ndarray") -> DataFrame:
         @pandas_udf(T.IntegerType())
         def nearest(vs: pd.Series) -> pd.Series:
-            X = np.stack(vs.to_numpy()).astype(np.float64)
-            return pd.Series(_nearest(X, C).astype(np.int32))
+            out = pd.Series(pd.NA, index=vs.index, dtype="Int32")
+            for idx, X in _length_groups(vs.to_numpy()):
+                if X.shape[1] == C.shape[1]:
+                    out.iloc[idx] = _nearest(X, C)
+            return out
 
         return vecs.withColumn("cluster", nearest(F.col("_v")))
 
-    seed_rows = vecs.orderBy("_id").limit(k).collect()
+    seed_rows = vecs.where(F.col("_v").isNotNull()).orderBy("_id").limit(k).collect()
     if not seed_rows:
         # empty corpus: the fixpoint is the empty assignment — return it
         # with the contract schema instead of crashing on a 0-row seed
         return corpus.select(
             F.col(id_col), F.lit(0).cast("int").alias("kmeans_cluster")
         ).limit(0)
+    if len({len(r["_v"]) for r in seed_rows}) > 1:
+        raise ValueError("kmeans_assign: the seed vectors differ in length")
     # cluster ids ordered by first vector component (stable, data-derived)
     C = np.array(
         [r["_v"] for r in sorted(seed_rows, key=lambda r: r["_v"][0])],
@@ -252,25 +288,22 @@ def kmeans_assign(
         Cb = C
 
         def _partials(batches):
-            first = True
+            S = np.zeros(Cb.shape, dtype=np.float64)
+            N = np.zeros(Cb.shape[0], dtype=np.float64)
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-                a = _nearest(X, Cb)
-                if first:
-                    S = np.zeros((Cb.shape[0], X.shape[1]), dtype=np.float64)
-                    N = np.zeros(Cb.shape[0], dtype=np.float64)
-                    first = False
-                for c in range(Cb.shape[0]):
-                    rows = X[a == c]
-                    # sequential row fold — the old posexplode partial
-                    # avg accumulated rows in this exact per-task order;
-                    # a numpy pairwise sum would drift the centroids
-                    for r_ in rows:
-                        S[c] += r_
-                    N[c] += len(rows)
-            if first:
+                for _, X in _length_groups(pdf["_v"].to_numpy()):
+                    if X.shape[1] != Cb.shape[1]:
+                        continue
+                    a = _nearest(X, Cb)
+                    for c in range(Cb.shape[0]):
+                        rows = X[a == c]
+                        # sequential row fold — the old posexplode partial
+                        # avg accumulated rows in this exact per-task order;
+                        # a numpy pairwise sum would drift the centroids
+                        for r_ in rows:
+                            S[c] += r_
+                        N[c] += len(rows)
+            if not N.any():
                 return
             cc, pp = np.indices(S.shape)
             yield pd.DataFrame(
@@ -586,9 +619,8 @@ def mmr_select(
          when lam >= 0.5).
 
     Deterministic: ties break on ascending id. Returns (id, mmr_rank,
-    relevance) for the k picks."""
-    import numpy as np
-
+    relevance) for the k picks. A NULL vector, or one whose length is not
+    the query's, has a NULL relevance and is never shortlisted."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
@@ -597,21 +629,27 @@ def mmr_select(
 
     @pandas_udf(T.ArrayType(T.DoubleType()))
     def unit_pd(xs: pd.Series) -> pd.Series:
-        X = np.stack(xs.to_numpy()).astype(np.float64)
-        X /= np.sqrt((X * X).sum(axis=1, keepdims=True))
-        return pd.Series(list(X))
+        out = [None] * len(xs)
+        for idx, X in _length_groups(xs.to_numpy()):
+            X /= np.sqrt((X * X).sum(axis=1, keepdims=True))
+            for i, u in zip(idx, X):
+                out[i] = u
+        return pd.Series(out, dtype=object)
 
     base = df.select(F.col(id_col).alias("_id"), unit_pd(F.col(vec_col)).alias("_u"))
     qb = F.array(*[F.lit(float(v)) for v in q])
     short = (
         base.select("_id", "_u", dot_pandas(F.col("_u"), qb).alias("_rel"))
+        .where(F.col("_rel").isNotNull())
         .orderBy(F.desc("_rel"), F.asc("_id"))
         .limit(shortlist_m)
         .collect()
     )
     ids = [r["_id"] for r in short]
-    U = np.stack([np.asarray(r["_u"], dtype=np.float64) for r in short])
     rel = np.asarray([r["_rel"] for r in short], dtype=np.float64)
+    # every shortlisted vector has the query's length: at most one group
+    us = pd.Series([r["_u"] for r in short]).to_numpy()
+    _, U = next(_length_groups(us), (None, None))
 
     picked: list[int] = []
     for _ in range(min(k, len(ids))):
@@ -630,6 +668,55 @@ def mmr_select(
         rows, f"{id_col} long, mmr_rank int, relevance double"
     )
     return out.select(id_col, "mmr_rank", F.round("relevance", 6).alias("relevance"))
+
+
+# ---------------------------------------------------------------------------
+# within-block exact cosine pairs
+# ---------------------------------------------------------------------------
+
+
+def block_cosine_pairs(
+    df: DataFrame,
+    block_cols: "list[str]",
+    floor: float,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """``(id_a, id_b, raw)``: every pair ``id_a < id_b`` of one block whose
+    cosine ``raw`` is not under ``floor``, ids typed by ``id_col``.
+
+    One grouped Arrow pass: a block's vectors cross the Python boundary
+    once (a per-pair formulation ships both vectors per pair), sorted by
+    id, and each :func:`_length_groups` matrix runs through the
+    :func:`_cosine_tiles` scan — quadratic only within a block, in
+    ``TILE x TILE`` memory. Only pairs not under ``floor`` come back, so
+    a block yields its near pairs, not all n(n-1)/2; the caller's exact
+    decision stays in Spark. A NULL vector forms no pair, vectors of
+    different lengths are never paired, and a NaN cosine (a zero-norm
+    vector) is never under the floor: it crosses Arrow as NULL, and the
+    Spark-side decision drops it."""
+
+    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("_id")
+        ids = pdf["_id"].to_numpy()
+        out = [(ids[:0], ids[:0], np.empty(0))]
+        for idx, X in _length_groups(pdf["_v"].to_numpy()):
+            for i0, j0, cos in _cosine_tiles(X, X):
+                ii, jj = np.indices(cos.shape)
+                # upper triangle (id_a < id_b), minus pairs under the floor
+                keep = ((i0 + ii) < (j0 + jj)) & ~(cos < floor)
+                out.append(
+                    (ids[idx[i0 + ii[keep]]], ids[idx[j0 + jj[keep]]], cos[keep])
+                )
+        a, b, raw = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"id_a": a, "id_b": b, "raw": raw})
+
+    id_type = df.schema[id_col].dataType.simpleString()
+    return (
+        df.select(*block_cols, F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .groupBy(*block_cols)
+        .applyInPandas(verify, f"id_a {id_type}, id_b {id_type}, raw double")
+    )
 
 
 def semantic_dedup_prune(
@@ -676,17 +763,13 @@ def semantic_dedup_prune(
     if not isinstance(max_bucket_size, int) or max_bucket_size < 1:
         raise ValueError(f"max_bucket_size must be an int >= 1, got {max_bucket_size!r}")
     counts = bands.groupBy("band", "bsig").agg(F.count(F.lit(1)).alias("_bn"))
-    n_sub = F.expr(f"(`_bn` + {max_bucket_size - 1}) div {max_bucket_size}")
-    salt = hex_int(F.md5(F.col(id_col).cast("string"))) % n_sub
     bands = bands.join(F.broadcast(counts), ["band", "bsig"]).select(
-        id_col, "band", "bsig", salt.alias("_sub")
+        id_col, "band", "bsig",
+        sub_block(F.col(id_col), "_bn", max_bucket_size).alias("_sub"),
     )
-    bkeys = ["band", "bsig", "_sub"]
     # Round-14 verify (guide §8 / §4.2, VERDICT-r13 #7): candidate
     # generation AND cosine verify run in ONE grouped Arrow pass per
-    # (band, bsig, _sub) bucket — each bucket's vectors cross the
-    # Python boundary once (O(corpus x bands) rows), and the within-
-    # bucket pairwise dots are numpy vector ops, replacing the JVM
+    # (band, bsig, _sub) bucket (block_cosine_pairs), replacing the JVM
     # per-pair path that joined BOTH 64-dim vectors onto ~465k candidate
     # pairs (sf0.1) and folded them through the interpreted
     # zip_with/aggregate lambda. History of this hot loop, all measured
@@ -695,52 +778,11 @@ def semantic_dedup_prune(
     # unrolled codegen dot REJECTED (cold 9.1 -> 26.1 s — JIT bloat,
     # round 13); this per-bucket shape measured cold 6.96 -> 2.07 s /
     # warm 1.22 -> 0.63 s with byte-identical output (round 14 probe).
-    # Parity: norms and tile dots are `_fold`s; sqrt/divide association
-    # matches the dot/(na*nb) expression of the oracle; float32 -> float64 widening is exact. The
-    # 6-dp round + >= tau decision stays in Spark: the pass drops only
-    # pairs under a floor below it, so a bucket yields its near-dup
-    # pairs, not all n(n-1)/2. A NaN cosine (a zero vector) is never
-    # under the floor, so it stays and Spark still decides it. Tiling bounds
-    # per-group memory at TILE^2 doubles regardless of bucket size.
-    TILE = 1024
-    floor = tau - 1e-6
-
-    def _bucket_verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_vid")
-        ids = pdf["_vid"].to_numpy()
-        n = len(ids)
-        X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
-        nrm = np.sqrt(_fold(X, X))
-        out_a, out_b, out_r = [], [], []
-        for i0 in range(0, n, TILE):
-            i1 = min(i0 + TILE, n)
-            for j0 in range(i0, n, TILE):
-                j1 = min(j0 + TILE, n)
-                acc = _fold(X[i0:i1, None], X[None, j0:j1])
-                raw = acc / np.outer(nrm[i0:i1], nrm[j0:j1])
-                ii, jj = np.indices(raw.shape)
-                # upper triangle (id_a < id_b), minus pairs under the floor
-                keep = ((i0 + ii) < (j0 + jj)) & ~(raw < floor)
-                out_a.append(ids[i0 + ii[keep]])
-                out_b.append(ids[j0 + jj[keep]])
-                out_r.append(raw[keep])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "raw": np.concatenate(out_r),
-            }
-        )
-
-    cand = bands.join(
-        emb.select(
-            F.col(id_col).alias("_vid"), F.col(vec_col).alias("_v")
-        ),
-        bands[id_col] == F.col("_vid"),
-    ).select("_vid", "_v", *bkeys)
-    id_type = emb.schema[id_col].dataType.simpleString()
-    raw_pairs = cand.groupBy(*bkeys).applyInPandas(
-        _bucket_verify, f"id_a {id_type}, id_b {id_type}, raw double"
+    # The 6-dp round + >= tau decision stays in Spark; the pass drops
+    # only pairs under a floor below it.
+    cand = bands.join(emb.select(id_col, vec_col), id_col)
+    raw_pairs = block_cosine_pairs(
+        cand, ["band", "bsig", "_sub"], tau - 1e-6, id_col, vec_col
     )
     # referenced 3x below (both partner sides + the dropped set); without
     # a persist each reference re-runs the band join AND the Arrow cosine

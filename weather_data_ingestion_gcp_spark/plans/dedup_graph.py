@@ -29,6 +29,7 @@ from .oracle_sql import (
     sampled_docs_sql,
     shingles_sql,
     simhash16_sql,
+    sub_block_sql,
     verify_jaccard_sql,
     winnow_fps_sql,
     words_sql,
@@ -251,7 +252,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     base AS (
         SELECT d.doc_id, d.lang, d.source,
-               {hash_bucket_sql("d.doc_id")} % ((bn.n + 99) // 100) AS sub
+               {sub_block_sql("d.doc_id", "bn.n", 100)} AS sub
         FROM documents d JOIN bn USING (lang, source)
     ),
     pairs AS (

@@ -9,15 +9,15 @@ double-precision fold over the same element order -> bitwise-stable.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import store
 from ..operators import similarity
 from ..operators.sampling import hash_bucket
-from ..operators.similarity import _fold
-from .oracle_sql import hash_bucket_sql, sign_bands_sql
+from ..operators.similarity import _cosine_tiles, _length_groups
+from .oracle_sql import hash_bucket_sql, sign_bands_sql, sub_block_sql
 from .registry import load_table, register
 
 
@@ -42,39 +42,20 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the synthetic corpus, whose vectors are near-orthogonal — max
     within-cluster cosine ~0.47; production near-dup uses 0.9+.)
 
-    The quadratic verify runs INSIDE each label block via applyInPandas:
-    vectors cross the Arrow boundary once per block (not once per pair —
-    a per-pair formulation ships |pairs| x dim x 2 doubles, ~256 MB at
-    sf0.1's ~250k pairs, and an interpreted per-pair lambda fold costs
-    3 x dim lambda evals per pair). Every pair's dot — and each self-dot
-    on the diagonal — is one `similarity._fold`, the exact IEEE sequence
-    of DuckDB's list_dot_product: values stay bitwise oracle-equal.
-    At 100 TB the blocking key bounds group size (a block is a cluster
-    assignment by construction), which is what makes grouped-map safe."""
-    import numpy as np
-    import pandas as pd
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e"),
-    )
-
-    def block_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy()
-        X = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-        n = len(ids)
-        acc = _fold(X[:, None], X[None])
-        nrm = np.sqrt(np.diag(acc))
-        sim = acc / np.outer(nrm, nrm)
-        ia, ib = np.triu_indices(n, k=1)
-        keep = sim[ia, ib] >= 0.35
-        return pd.DataFrame(
-            {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "raw": sim[ia, ib][keep]}
-        )
-
+    The quadratic verify runs INSIDE each label block
+    (similarity.block_cosine_pairs): vectors cross the Arrow boundary
+    once per block, not once per pair (a per-pair formulation ships
+    |pairs| x dim x 2 doubles, ~256 MB at sf0.1's ~250k pairs), and every
+    dot is one `similarity._fold`, the exact IEEE sequence of DuckDB's
+    list_dot_product: values stay bitwise oracle-equal. The >= 0.35
+    decision is made here, in Spark, on the raw cosine the oracle
+    compares. At 100 TB the blocking key bounds group size (a block is a
+    cluster assignment by construction), which is what makes grouped-map
+    safe."""
+    emb = load_table(spark, sf_dir, "embeddings")
     return (
-        emb.groupBy("label")
-        .applyInPandas(block_pairs, "id_a long, id_b long, raw double")
+        similarity.block_cosine_pairs(emb, ["label"], 0.35)
+        .where(F.col("raw") >= 0.35)
         .select("id_a", "id_b", F.round("raw", 6).alias("cos_sim"))
     )
 
@@ -424,6 +405,45 @@ def similarity_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _label_centroids(e: DataFrame) -> DataFrame:
+    """``(label, pos0, c)``: each label's mean embedding, components
+    quantized to exact 1e-6 BIGINTs. Float32 inputs make the per-(label,
+    pos) double sum EXACT (24-bit mantissas, narrow exponent range, 53-bit
+    accumulator), so the quantization sees identical values regardless of
+    accumulation order. DuckDB mirror: ``_CENTROIDS_SQL``."""
+    return (
+        e.select("label", F.posexplode("embedding").alias("pos0", "v"))
+        .groupBy("label", "pos0")
+        .agg(F.round(F.avg("v") * 1000000, 0).cast("long").alias("c"))
+    )
+
+
+def _cos_ppm(sq_a: str, sq_b: str) -> Column:
+    """``floor(dot * 1e6 / (sqrt(sq_a) * sqrt(sq_b)))`` as a long over the
+    caller's ``dot`` column, NULL at a zero norm: the cosine of exact
+    integer sums in parts per million, one correctly-rounded sqrt/divide
+    chain. DuckDB mirror: ``_cos_ppm_sql``."""
+    denom = F.sqrt(F.col(sq_a).cast("double")) * F.sqrt(F.col(sq_b).cast("double"))
+    return F.floor(F.col("dot") * 1000000.0 / F.nullif(denom, F.lit(0.0))).cast("long")
+
+
+#: CTE ``comp`` (label, pos, c) — mirrors :func:`_label_centroids`
+_CENTROIDS_SQL = """comp AS (
+        SELECT label, pos, CAST(ROUND(AVG(v) * 1000000, 0) AS BIGINT) AS c
+        FROM (SELECT label, unnest(embedding) AS v,
+                     generate_subscripts(embedding, 1) AS pos
+              FROM embeddings)
+        GROUP BY label, pos
+    )"""
+
+
+def _cos_ppm_sql(sq_a: str, sq_b: str) -> str:
+    """Mirrors :func:`_cos_ppm` over the caller's ``dot`` column."""
+    return f"""CAST(FLOOR(dot * 1000000.0
+                      / NULLIF(sqrt(CAST({sq_a} AS DOUBLE))
+                               * sqrt(CAST({sq_b} AS DOUBLE)), 0)) AS BIGINT)"""
+
+
 # ---------------------------------------------------------------------------
 # Label-centroid cosine matrix: mean embedding per label (components
 # quantized to exact 1e-6 BIGINTs), then all label-pair cosines from
@@ -433,14 +453,8 @@ def similarity_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "label_centroid_cosine",
-    oracle="""
-    WITH comp AS (
-        SELECT label, pos, CAST(ROUND(AVG(v) * 1000000, 0) AS BIGINT) AS c
-        FROM (SELECT label, unnest(embedding) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings)
-        GROUP BY label, pos
-    ),
+    oracle=f"""
+    WITH {_CENTROIDS_SQL},
     nrm AS (SELECT label, SUM(c * c) AS n2 FROM comp GROUP BY label),
     dots AS (
         SELECT a.label AS label_a, b.label AS label_b, SUM(a.c * b.c) AS dot
@@ -448,9 +462,7 @@ def similarity_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY a.label, b.label
     )
     SELECT label_a, label_b,
-           CAST(FLOOR(dot * 1000000.0
-                      / NULLIF(sqrt(CAST(na.n2 AS DOUBLE))
-                               * sqrt(CAST(nb.n2 AS DOUBLE)), 0)) AS BIGINT)
+           {_cos_ppm_sql("na.n2", "nb.n2")}
                AS cos_ppm
     FROM dots
     JOIN nrm na ON na.label = label_a
@@ -460,18 +472,10 @@ def similarity_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-label centroid cosine similarity — the class-separation
-    diagnostic for an embedding table. Float32 inputs make the per-
-    (label, pos) double sum EXACT (24-bit mantissas, narrow exponent
-    range, 53-bit accumulator), so the 1e-6 quantization sees identical
-    values regardless of accumulation order; dot products and norms are
-    then exact BIGINT sums and the cosine is one correctly-rounded
-    sqrt/divide chain."""
-    e = load_table(spark, sf_dir, "embeddings")
-    comp = (
-        e.select("label", F.posexplode("embedding").alias("pos0", "v"))
-        .groupBy("label", "pos0")
-        .agg(F.round(F.avg("v") * 1000000, 0).cast("long").alias("c"))
-    )
+    diagnostic for an embedding table. The centroids are exact
+    (:func:`_label_centroids`), dot products and norms are exact BIGINT
+    sums, and the cosine is :func:`_cos_ppm`."""
+    comp = _label_centroids(load_table(spark, sf_dir, "embeddings"))
     nrm = comp.groupBy("label").agg(F.sum(F.col("c") * F.col("c")).alias("n2"))
     a = comp.alias("a")
     b = comp.alias("b")
@@ -486,17 +490,11 @@ def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     na = nrm.alias("na")
     nb = nrm.alias("nb")
-    denom = F.nullif(
-        F.sqrt(F.col("na.n2").cast("double")) * F.sqrt(F.col("nb.n2").cast("double")),
-        F.lit(0.0),
-    )
     return (
         dots.join(F.broadcast(na), F.col("na.label") == F.col("label_a"))
         .join(F.broadcast(nb), F.col("nb.label") == F.col("label_b"))
         .select(
-            "label_a",
-            "label_b",
-            F.floor(F.col("dot") * 1000000.0 / denom).cast("long").alias("cos_ppm"),
+            "label_a", "label_b", _cos_ppm("na.n2", "nb.n2").alias("cos_ppm")
         )
         .orderBy("label_a", "label_b")
     )
@@ -527,8 +525,7 @@ def _semantic_dedup_oracle(tau: float) -> str:
     bc AS (SELECT band, bsig, COUNT(*) AS bn FROM cb GROUP BY band, bsig),
     cbs AS (
         SELECT cb.vec_id, cb.band, cb.bsig,
-               {hash_bucket_sql("cb.vec_id")}
-                 % ((bc.bn + {_SEM_CAP - 1}) // {_SEM_CAP}) AS sub
+               {sub_block_sql("cb.vec_id", "bc.bn", _SEM_CAP)} AS sub
         FROM cb JOIN bc ON bc.band = cb.band AND bc.bsig = cb.bsig
     ),
     pairs AS (
@@ -588,13 +585,7 @@ _OUTLIER_TAU_PPM = 0  # negative cos-to-centroid => points away => flagged
 @register(
     "embedding_outlier_scores",
     oracle=f"""
-    WITH comp AS (
-        SELECT label, pos, CAST(ROUND(AVG(v) * 1000000, 0) AS BIGINT) AS c
-        FROM (SELECT label, unnest(embedding) AS v,
-                     generate_subscripts(embedding, 1) AS pos
-              FROM embeddings)
-        GROUP BY label, pos
-    ),
+    WITH {_CENTROIDS_SQL},
     vq AS (
         -- CAST to DOUBLE before the multiply: DuckDB's FLOAT * INTEGER
         -- stays FLOAT (Spark side casts identically)
@@ -613,13 +604,9 @@ _OUTLIER_TAU_PPM = 0  # negative cos-to-centroid => points away => flagged
         GROUP BY vq.vec_id, vq.label
     )
     SELECT vec_id, label,
-           CAST(FLOOR(dot * 1000000.0
-                      / NULLIF(sqrt(CAST(vq2 AS DOUBLE))
-                               * sqrt(CAST(c2 AS DOUBLE)), 0)) AS BIGINT)
+           {_cos_ppm_sql("vq2", "c2")}
                AS cos_ppm,
-           COALESCE(CAST(FLOOR(dot * 1000000.0
-                      / NULLIF(sqrt(CAST(vq2 AS DOUBLE))
-                               * sqrt(CAST(c2 AS DOUBLE)), 0)) AS BIGINT)
+           COALESCE({_cos_ppm_sql("vq2", "c2")}
                     < {_OUTLIER_TAU_PPM}, FALSE) AS is_outlier
     FROM dots ORDER BY vec_id
     """,
@@ -630,11 +617,7 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates. The centroid relation is O(labels x dim) and broadcasts;
     the only full-data pass is the quantized posexplode."""
     e = load_table(spark, sf_dir, "embeddings")
-    comp = (
-        e.select("label", F.posexplode("embedding").alias("pos0", "v"))
-        .groupBy("label", "pos0")
-        .agg(F.round(F.avg("v") * 1000000, 0).cast("long").alias("c"))
-    )
+    comp = _label_centroids(e)
     vq = e.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos0", "v")
     ).select(
@@ -654,14 +637,7 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("c") * F.col("c")).alias("c2"),
         )
     )
-    cos_ppm = F.floor(
-        F.col("dot")
-        * 1000000.0
-        / F.nullif(
-            F.sqrt(F.col("vq2").cast("double")) * F.sqrt(F.col("c2").cast("double")),
-            F.lit(0.0),
-        )
-    ).cast("long")
+    cos_ppm = _cos_ppm("vq2", "c2")
     return dots.select(
         "vec_id",
         "label",
@@ -807,38 +783,37 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same sums was measured ~2× slower at sf0.1 and grows linearly
     # in n either way; the partials contract is what scales to 100 TB
     # (mergeable integer sums, O(d²) per partition crossing the wire).
-    import pandas as _pd
+    # A NULL vector adds nothing; each vector length gets its own sums,
+    # tagged by a (-2, -2, d) row, so ragged dims are caught driver-side.
+    import numpy as np
+    import pandas as pd
 
     def _gram_partials(batches):
-        import numpy as np
-
-        d_dim, P, S, n_rows = None, None, None, 0
+        grams = {}  # d -> [P, S, n]
         for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * 1000
-            ).astype(np.int64)
-            if P is None:
-                d_dim = Q.shape[1]
-                P = np.zeros((d_dim, d_dim), dtype=np.int64)
-                S = np.zeros(d_dim, dtype=np.int64)
-            P += Q.T @ Q
-            S += Q.sum(axis=0)
-            n_rows += Q.shape[0]
-        if n_rows == 0:
-            return
-        js, ks = np.indices((d_dim, d_dim))
-        yield _pd.DataFrame(
-            {
-                "j": np.concatenate([js.ravel() + 1, np.arange(1, d_dim + 1), [-1]]),
-                "k": np.concatenate([ks.ravel() + 1, np.full(d_dim, -1), [-1]]),
-                "v": np.concatenate([P.ravel(), S, [n_rows]]),
-            }
-        )
+            for _, X in _length_groups(pdf["embedding"].to_numpy()):
+                Q = np.floor(X * 1000).astype(np.int64)
+                d = Q.shape[1]
+                g = grams.setdefault(
+                    d, [np.zeros((d, d), dtype=np.int64), np.zeros(d, dtype=np.int64), 0]
+                )
+                g[0] += Q.T @ Q
+                g[1] += Q.sum(axis=0)
+                g[2] += Q.shape[0]
+        for d, (P, S, n_rows) in grams.items():
+            js, ks = np.indices((d, d))
+            yield pd.DataFrame(
+                {
+                    "j": np.concatenate([js.ravel() + 1, np.arange(1, d + 1), [-1, -2]]),
+                    "k": np.concatenate([ks.ravel() + 1, np.full(d, -1), [-1, -2]]),
+                    "v": np.concatenate([P.ravel(), S, [n_rows, d]]),
+                }
+            )
 
     parts = emb.select("embedding").mapInPandas(_gram_partials, "j int, k int, v long")
     parts = store.keep(parts)
+    if parts.where(F.col("j") == -2).select("v").distinct().limit(2).count() > 1:
+        raise ValueError("pca_power_iteration: the embeddings differ in length")
     nn = parts.filter(F.col("j") == -1).agg(F.sum("v").alias("n"))
     s = parts.filter((F.col("k") == -1) & (F.col("j") > 0)).groupBy("j").agg(
         F.sum("v").alias("s")
@@ -1053,13 +1028,6 @@ _SEMDECON_ORACLE = f"""
 """
 
 
-#: chunk edge for the per-label argmax fold: the dense score matrix a
-#: block ever materializes is <= _SEMDECON_CHUNK^2 float64 (~33 MB at
-#: 2048), regardless of how hot the label is. Tests shrink it to force
-#: many-chunk folds on small fixtures.
-_SEMDECON_CHUNK = 2048
-
-
 @register("decontaminate_semantic_topmatch", oracle=_SEMDECON_ORACLE)
 def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic decontamination — the embedding-space sibling of the
@@ -1072,12 +1040,12 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
 
     Scale shape: the blocked form of `dedup_embedding_cosine` — the
     quadratic runs INSIDE each label block only, vectors cross the
-    Arrow boundary once per block, and the argmax folds over fixed
-    `_SEMDECON_CHUNK`-row test x train tiles (round-8 hardening: the
-    round-7 form materialized one dense |test| x |train| matrix per
+    Arrow boundary once per block, and the argmax folds over the
+    `similarity._cosine_tiles` scan of test x train (round-8 hardening:
+    the round-7 form materialized one dense |test| x |train| matrix per
     label, the exact uncapped shape whose SemDedup sibling died at
-    sf100 — a 10M-vector hot label would OOM an executor; the tile
-    fold bounds peak memory at ~33 MB per block regardless of label
+    sf100 — a 10M-vector hot label would OOM an executor; the tiles
+    bound peak memory at TILE^2 doubles per block regardless of label
     heat). The fold is output-identical to the unchunked argmax: tiles
     advance in ascending train-id order, each tile's argmax takes the
     first occurrence, and the running best replaces only on strictly
@@ -1099,9 +1067,6 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("embedding").cast("array<double>").alias("e"),
         hash_bucket(F.col("vec_id")).alias("_b"),
     )
-    # bound driver-side so the closure ships the value to workers (a
-    # module-global lookup would re-resolve on the worker's import)
-    C = _SEMDECON_CHUNK
     sq = F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x)
     marked = (
         emb.filter((F.col("_b") < 10) | (F.col("_b") >= 15))
@@ -1112,43 +1077,24 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
     def block_best(pdf: pd.DataFrame) -> pd.DataFrame:
         te = pdf[pdf["is_test"]].sort_values("vec_id")
         tr = pdf[~pdf["is_test"]].sort_values("vec_id")
-        if te.empty or tr.empty:
-            return pd.DataFrame(
-                {
-                    "test_id": pd.Series(dtype="int64"),
-                    "train_id": pd.Series(dtype="int64"),
-                    "raw": pd.Series(dtype="float64"),
-                }
-            )
-        Xt = np.stack(te["e"].to_numpy()).astype(np.float64)
-        Xr = np.stack(tr["e"].to_numpy()).astype(np.float64)
-        st = _fold(Xt, Xt)
-        sr = _fold(Xr, Xr)
-        tr_ids = tr["vec_id"].to_numpy()
-        best_sim = np.empty(len(te), dtype=np.float64)
-        best_id = np.empty(len(te), dtype=np.int64)
-        for t0 in range(0, len(te), C):
-            t1 = min(t0 + C, len(te))
-            bs = np.full(t1 - t0, -np.inf)
-            bi = np.zeros(t1 - t0, dtype=np.int64)
-            for r0 in range(0, len(tr), C):
-                r1 = min(r0 + C, len(tr))
-                acc = _fold(Xt[t0:t1, None], Xr[None, r0:r1])
-                sim = acc / np.outer(np.sqrt(st[t0:t1]), np.sqrt(sr[r0:r1]))
-                j = sim.argmax(axis=1)  # first max = smallest id in tile
-                m = sim[np.arange(t1 - t0), j]
-                upd = m > bs  # strict: ties keep the earlier (smaller) id
-                bs[upd] = m[upd]
-                bi[upd] = tr_ids[r0 + j[upd]]
-            best_sim[t0:t1] = bs
-            best_id[t0:t1] = bi
-        return pd.DataFrame(
-            {
-                "test_id": te["vec_id"].to_numpy(),
-                "train_id": best_id,
-                "raw": best_sim,
-            }
-        )
+        te_ids, tr_ids = te["vec_id"].to_numpy(), tr["vec_id"].to_numpy()
+        train = {X.shape[1]: (idx, X) for idx, X in _length_groups(tr["e"].to_numpy())}
+        out = [(te_ids[:0], tr_ids[:0], np.empty(0))]
+        for t_idx, Xt in _length_groups(te["e"].to_numpy()):
+            if Xt.shape[1] not in train:
+                continue
+            r_idx, Xr = train[Xt.shape[1]]
+            best = np.full(len(t_idx), -np.inf)
+            arg = np.zeros(len(t_idx), dtype=np.int64)
+            for i0, j0, cos in _cosine_tiles(Xt, Xr):
+                j = cos.argmax(axis=1)  # first max = smallest id in tile
+                m = cos[np.arange(len(j)), j]
+                b, a = best[i0 : i0 + len(j)], arg[i0 : i0 + len(j)]  # views
+                upd = m > b  # strict: ties keep the earlier (smaller) id
+                b[upd], a[upd] = m[upd], j0 + j[upd]
+            out.append((te_ids[t_idx], tr_ids[r_idx[arg]], best))
+        t, r, raw = (np.concatenate(c) for c in zip(*out))
+        return pd.DataFrame({"test_id": t, "train_id": r, "raw": raw})
 
     return (
         marked.groupBy("label")

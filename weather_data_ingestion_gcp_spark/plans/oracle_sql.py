@@ -55,6 +55,13 @@ def hash_bucket_sql(key_sql: str) -> str:
     return hex_sql(f"md5(CAST({key_sql} AS VARCHAR))")
 
 
+def sub_block_sql(key_sql: str, n_sql: str, cap: int) -> str:
+    """Capped sub-block of ``key_sql`` in a block of ``n_sql`` rows: its
+    md5-hex4 integer modulo ceil(n/cap) — mirrors
+    operators.sampling.sub_block."""
+    return f"{hash_bucket_sql(key_sql)} % (({n_sql} + {cap - 1}) // {cap})"
+
+
 def sampled_docs_sql(cap_pct: int = _SAMPLE_PCT) -> str:
     """CTE ``docs_sampled``: the deterministic doc sample the Spark side
     takes with sampling.hash_bucket(doc_id) < registry._sample_pct(n,
