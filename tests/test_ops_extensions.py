@@ -213,6 +213,25 @@ def test_hostile_vectors_give_null_cells_no_pairs_or_value_error(spark, tmp_path
             pca([*clean, _HOSTILE[5]], "ragged")
 
 
+def test_pca_start_vector_orthogonal_to_the_covariance_gives_the_oracle_nulls(spark, tmp_path):
+    """The covariance of these four vectors maps the all-1000 start vector
+    to zero, so every renormalization divides by a zero max: NULL in both
+    engines, never an ANSI DIVIDE_BY_ZERO."""
+    import duckdb
+
+    from weather_data_ingestion_gcp_spark.plans import ORACLE
+    from weather_data_ingestion_gcp_spark.plans.embeddings import pca_power_iteration
+
+    sf = str(tmp_path)
+    spark.createDataFrame(_HOSTILE[1:5], "vec_id bigint, embedding array<float>").write.parquet(
+        f"{sf}/embeddings.parquet"
+    )
+    got = sorted(map(tuple, pca_power_iteration(spark, sf).collect()))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf}/embeddings.parquet/*.parquet'")
+    assert got == sorted(con.execute(ORACLE["pca_power_iteration"]).fetchall()), got
+
+
 def test_ivf_probes_subset_and_finds_in_cluster_neighbors(spark):
     # two well-separated clusters: IVF with nprobe=1 must stay in-cluster
     rows = []

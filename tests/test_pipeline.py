@@ -55,6 +55,39 @@ def test_ingest_once_lands_one_clean_file(spark, tmp_path):
     assert row.dt == dt.date(2022, 7, 3)
 
 
+def test_ingest_once_starts_no_job(spark, tmp_path):
+    """The payload is a local relation, so clean + land run on the driver."""
+    landing = tmp_path / "landing"
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    ingest_once(
+        spark,
+        fetch=raw_api_payload,
+        landing_dir=str(landing),
+        ingest_date=F.lit("2022-07-03").cast("date"),
+        ingest_time=F.lit("14:00:05"),
+    )
+    assert scheduler.nextJobId() == before
+    assert len(os.listdir(landing)) == 1
+
+
+def test_ingest_once_reads_a_whole_number_float_field(spark, tmp_path):
+    """The API serves a whole temperature as a JSON integer (300, not
+    300.0); Arrow widens it to the DOUBLE field instead of rejecting it."""
+    landing = str(tmp_path / "landing")
+    payload = raw_api_payload()
+    payload["main"] = {**payload["main"], "temp": 300}
+    ingest_once(spark, fetch=lambda: payload, landing_dir=landing)
+    assert read_landing(spark, landing).first().main.temp == 300.0
+
+
+def test_write_landing_file_lands_the_tojson_bytes(spark, tmp_path):
+    df = spark.createDataFrame(hourly_rows(days=1), WEATHER_SCHEMA)
+    path = write_landing_file(spark, df, str(tmp_path), stamp="20220701-23:00:05")
+    with open(path) as f:
+        assert f.read() == "\n".join(df.toJSON().collect()) + "\n"
+
+
 def test_read_daily_starts_no_job(spark, tmp_path):
     """read_daily passes the stored schema, so building the DataFrame reads
     no parquet footer (footer schema inference runs a Spark job)."""

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, StructField, StructType
 
+from . import store
 from .operators.rollup import daily_rollup
 from .schemas import DAILY_SCHEMA, LOG_SCHEMA, WEATHER_SCHEMA
 from .sources.connectors import LocalDirObjectStore, ParquetTableStorage, TableStorage
@@ -77,7 +78,7 @@ class WeatherWarehouse:
 
     def read_hourly(self) -> DataFrame:
         if not self.storage.exists("hourly"):
-            return self.spark.createDataFrame([], WEATHER_SCHEMA)
+            return store.rows(self.spark, [], WEATHER_SCHEMA)
         # dt is the partition column — Spark matches it by name in the schema
         return self.storage.read(self.spark, "hourly", schema=WEATHER_SCHEMA)
 

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
+
 #: Adjacent (symbol, next-symbol) pairs of a spelled word, codegen form
 #: (round 14): ONE compiled lookahead regex over the trimmed seq captures
 #: every overlapping "l r" window — at each symbol start the lookahead
@@ -105,4 +107,4 @@ def bpe_learn_merges(
             "seq", F.replace(F.replace(F.col("seq"), pat, rep), pat, rep)
         )
     base.unpersist(blocking=False)
-    return spark.createDataFrame(merges, out_schema)
+    return store.rows(spark, merges, out_schema)

@@ -2,15 +2,16 @@
 
 Replaces the reference's imperative per-field rebuild
 (``clean_weather_data``, ``Load-Data-From-API/main.py:79-143``) with a single
-declarative ``select()``. Spark struct field access is already
+declarative ``select()`` generated from ``WEATHER_SCHEMA``, so the target
+field order is spelled once. Spark struct field access is already
 null-propagating, so the ~45 lines of ``x.get('a').get('b') if x.get('a')
-else None`` chains (P1) collapse into plain column references; the renames
+else None`` chains (P1) collapse into plain field references; the renames
 (P2: lon->longitude, lat->latitude, deg->degree, grnd_level->ground_level,
-1h/3h->rain_1h/rain_3h/snow_1h/snow_3h; main.py:85-86,105,112,121-127) become
-aliases; the weather-array head extraction (P3, main.py:90-92) becomes
-``element_at(weather, 1)``; the ingest-date/time stamping (P4,
-main.py:16-19,131-132) becomes current_date()/date_format() in the pipeline's
-timezone (Asia/Kolkata in the reference, main.py:14).
+1h/3h->rain_1h/rain_3h/snow_1h/snow_3h; main.py:85-86,105,112,121-127) are
+one map, ``schemas.RAW_NAMES``; the weather-array head extraction (P3,
+main.py:90-92) becomes ``try_element_at(weather, 1)``; the ingest-date/time
+stamping (P4, main.py:16-19,131-132) becomes current_date()/date_format() in
+the pipeline's timezone (Asia/Kolkata in the reference, main.py:14).
 
 Whole thing stays inside whole-stage codegen — zero Python in the row path.
 """
@@ -19,6 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..schemas import RAW_NAMES, WEATHER_SCHEMA
 
 #: Reference pins ingest timestamps to Asia/Kolkata (main.py:14-19).
 PIPELINE_TZ = "Asia/Kolkata"
@@ -35,6 +39,19 @@ def _ingest_time() -> Column:
     return F.date_format(F.from_utc_timestamp(F.current_timestamp(), PIPELINE_TZ), "HH:mm:ss")
 
 
+def _read(field: StructField, src: str) -> str:
+    """SQL that reads the cleaned ``field`` from the raw expression
+    ``src``; a struct is rebuilt member by member under its cleaned
+    names."""
+    if not isinstance(field.dataType, StructType):
+        return src
+    members = (
+        f"'{f.name}', {_read(f, f'{src}.`{RAW_NAMES.get(f.name, f.name)}`')}"
+        for f in field.dataType.fields
+    )
+    return f"named_struct({', '.join(members)})"
+
+
 def clean_weather(
     raw: DataFrame,
     ingest_date: Column | None = None,
@@ -46,58 +63,24 @@ def clean_weather(
     timezone, matching the reference; tests inject literals for determinism
     (the reference cannot be tested this way at all — SURVEY.md section 5).
     """
-    from ..schemas import WEATHER_SCHEMA
-
+    # P4: the ingest stamps replace the payload's own dt
+    stamps = {
+        "dt": ingest_date if ingest_date is not None else _ingest_date(),
+        "current_time": ingest_time if ingest_time is not None else _ingest_time(),
+    }
     # P3: only weather[0] is kept; try_ variant: the reference null-guards
     # the empty-array case (`if weather_data.get('weather') else None`) and
     # ANSI element_at would throw instead
-    head = F.try_element_at("weather", F.lit(1))
+    sources = {"weather": "try_element_at(`weather`, 1)"}
     shaped = raw.select(
-        F.struct(
-            F.col("coord.lon").alias("longitude"),
-            F.col("coord.lat").alias("latitude"),
-        ).alias("coordinate"),
-        F.struct(
-            head.getField("id").alias("id"),
-            head.getField("main").alias("main"),
-            head.getField("description").alias("description"),
-        ).alias("weather"),
-        F.col("base"),
-        F.struct(
-            F.col("main.temp").alias("temp"),
-            F.col("main.feels_like").alias("feels_like"),
-            F.col("main.pressure").alias("pressure"),
-            F.col("main.humidity").alias("humidity"),
-            F.col("main.temp_min").alias("temp_min"),
-            F.col("main.temp_max").alias("temp_max"),
-            F.col("main.sea_level").alias("sea_level"),
-            F.col("main.grnd_level").alias("ground_level"),
-        ).alias("main"),
-        F.col("visibility"),
-        F.struct(
-            F.col("wind.speed").alias("speed"),
-            F.col("wind.deg").alias("degree"),
-            F.col("wind.gust").alias("gust"),
-        ).alias("wind"),
-        F.struct(F.col("clouds.all").alias("all")).alias("clouds"),
-        F.struct(
-            F.col("rain.1h").alias("rain_1h"),
-            F.col("rain.3h").alias("rain_3h"),
-        ).alias("rain"),
-        F.struct(
-            F.col("snow.1h").alias("snow_1h"),
-            F.col("snow.3h").alias("snow_3h"),
-        ).alias("snow"),
-        (ingest_date if ingest_date is not None else _ingest_date()).alias("dt"),
-        (ingest_time if ingest_time is not None else _ingest_time()).alias("current_time"),
-        F.struct(
-            F.col("sys.country").alias("country"),
-            F.col("sys.sunrise").alias("sunrise"),
-            F.col("sys.sunset").alias("sunset"),
-        ).alias("sys"),
-        F.col("timezone"),
-        F.col("name"),
+        *[
+            stamps[f.name]
+            if f.name in stamps
+            else F.expr(_read(f, sources.get(f.name, f"`{RAW_NAMES.get(f.name, f.name)}`")))
+            for f in WEATHER_SCHEMA.fields
+        ]
     )
-    # exact target nullability (schema.json: everything NULLABLE) — struct()
-    # literals are otherwise marked non-null
-    return shaped.to(WEATHER_SCHEMA)
+    # positional names (one call; a Column alias costs ~a dozen py4j
+    # round trips), then the exact target nullability (schema.json:
+    # everything NULLABLE) — named_struct() is otherwise marked non-null
+    return shaped.toDF(*WEATHER_SCHEMA.names).to(WEATHER_SCHEMA)

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from .. import store
+
 #: Largest canonical edge count solved by driver union-find; a larger
 #: graph runs the distributed star rounds. Also the driver-memory bound of
 #: the probe. Tests set it to 0 to force the star rounds on a small graph.
@@ -128,7 +130,8 @@ def _solve_collected(nodes: DataFrame, id_col: str, pairs: list) -> DataFrame:
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
     id_type = nodes.schema[id_col].dataType
-    active = nodes.sparkSession.createDataFrame(
+    active = store.rows(
+        nodes.sparkSession,
         [(x, find(x)) for x in parent],
         StructType([StructField(id_col, id_type), StructField("component", id_type)]),
     )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import store
+
 
 def hex_int(md5_col: Column, start: int = 1, width: int = 4) -> Column:
     """Integer value (long) of ``width`` hex digits of the md5 hex column
@@ -120,8 +122,8 @@ def dataset_mix(
     re-ingesting never changes which rows are kept, and a group's kept
     set at 30% is a SUBSET of its kept set at 50% (nested samples, so
     mixtures can be re-tuned without resampling churn)."""
-    spark = df.sparkSession
-    rates = spark.createDataFrame(
+    rates = store.rows(
+        df.sparkSession,
         [(g, int(p)) for g, p in sorted(rates_pct.items())],
         f"{group_col} string, _keep_pct int",
     )

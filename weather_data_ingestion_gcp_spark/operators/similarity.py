@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..store import keep
+from ..store import keep, rows
 from .sampling import sub_block
 
 #: Sign-LSH geometry: ``LSH_BITS`` hyperplanes over ``LSH_DIM``-dim
@@ -663,9 +663,10 @@ def mmr_select(
         best = int(np.lexsort((ids, -score))[0])
         picked.append(best)
 
-    rows = [(ids[i], rank + 1, float(rel[i])) for rank, i in enumerate(picked)]
-    out = df.sparkSession.createDataFrame(
-        rows, f"{id_col} long, mmr_rank int, relevance double"
+    out = rows(
+        df.sparkSession,
+        [(ids[i], rank + 1, float(rel[i])) for rank, i in enumerate(picked)],
+        f"{id_col} long, mmr_rank int, relevance double",
     )
     return out.select(id_col, "mmr_rank", F.round("relevance", 6).alias("relevance"))
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
 from .sampling import hex_int
 
 #: k hash positions from disjoint 16-bit md5 slices -> m = 65536 bits.
@@ -282,18 +283,7 @@ def bloom_xl_prune(
     arithmetic (array subscript + shiftright + mask) evaluated per row
     before any downstream exchange: the pruned relation is what shuffles,
     not the input."""
-    import numpy as np
-    import pandas as pd
-
-    spark = df.sparkSession
-    # Arrow path for the 1-row bitset frame: a plain createDataFrame
-    # pickles the word list through py4j element-by-element (~seconds at
-    # the 7-hex width's 2^22 longs); the pandas/Arrow conversion ships
-    # one columnar buffer
-    bits = spark.createDataFrame(
-        pd.DataFrame({bits_col: [np.asarray(words, dtype=np.int64)]}),
-        f"{bits_col} array<bigint>",
-    )
+    bits = store.rows(df.sparkSession, [(words,)], f"{bits_col} array<bigint>")
     out = df.crossJoin(F.broadcast(bits))
     pcols = []
     for j, pos in enumerate(bloom_xl_positions(F.col(key_col), hexw)):

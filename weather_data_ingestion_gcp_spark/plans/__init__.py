@@ -74,6 +74,16 @@ DRIVER_WINDOW = [
     "similarity_ann_ivf",
     "dedup_embedding_cosine",
     "decontaminate_semantic_topmatch",
+    # changed-code leads: entries whose driver-built frame now enters the
+    # plan as one Arrow local relation (store.rows) — the MMR picks, the
+    # BPE merges, the mix rates, the bloom bitset (it anchors doc_8grams,
+    # so decontaminate_ngram_exact opens the post-window suite), and the
+    # sink's batch-grain comparison rows
+    "similarity_mmr_diverse",
+    "bpe_learn_merges",
+    "dataset_mix_by_lang",
+    "decontaminate_bloom_prefilter",
+    "streaming_engagement_sink_equiv",
     # r08 embeddings scans
     "embedding_outlier_scores",
     "hard_negative_topk",
@@ -92,11 +102,6 @@ DRIVER_WINDOW = [
     "error_capture_routing",
     "filter_dispatch",
     "grouping_rollup",
-    "pivot_daily_event_values",
-    "retention_keep_side",
-    "set_operations",
-    "unpivot_event_metrics",
-    "window_running_analytics",
     # r08 scalar/dimension scans
     "base64_roundtrip",
     "broadcast_route_lookup",

@@ -375,7 +375,8 @@ def similarity_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrow = e.filter(F.col("vec_id") == 0).select("embedding").head()
     if qrow is None:
         # no query vector (empty table): empty result, contract schema
-        return spark.createDataFrame(
+        return store.rows(
+            spark,
             [],
             "n_selected bigint, n_distinct bigint, rank_sum bigint, "
             "top1_is_argmax boolean",
@@ -863,7 +864,10 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             "j",
             (
                 F.when(F.col("y") < 0, F.lit(-1)).otherwise(F.lit(1))
-                * F.expr("(ABS(y) * 1000) div mabs")
+                # a zero max (start vector orthogonal to the covariance's
+                # range) gives NULL, as the oracle's // does, not an
+                # ANSI DIVIDE_BY_ZERO
+                * F.expr("(ABS(y) * 1000) div nullif(mabs, 0)")
             ).alias("x"),
         )
     return x.select(

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import store
 from ..operators import temporal
 from .registry import _cents, load_table, register
 
@@ -1297,7 +1298,7 @@ def _staged_sink_run(
         # empty input: the sink never writes the profile, and
         # TxLogTable.read raises on a table with no commits
         if not t.exists():
-            return spark.createDataFrame([], ddl)
+            return store.rows(spark, [], ddl)
         return t.read(spark)
 
     prof = _read_or_empty(
@@ -1324,9 +1325,7 @@ def _staged_sink_run(
         )
         .collect()
     )
-    b = spark.createDataFrame(
-        batch_rows, "d date, _bd bigint, _bw bigint, _bs double"
-    )
+    b = store.rows(spark, batch_rows, "d date, _bd bigint, _bw bigint, _bs double")
     agrees = (
         F.col("dau").eqNullSafe(F.col("_bd"))
         & F.col("wau").eqNullSafe(F.col("_bw"))

@@ -25,6 +25,7 @@ from ..functions import (
     path_stem,
     runtime_stamp,
 )
+from .. import store
 from ..operators import text
 from .registry import _cents, load_table, register
 
@@ -240,7 +241,7 @@ _ROUTES = [("click", "t_click"), ("view", "t_view"), ("purchase", "t_purchase")]
 )
 def broadcast_route_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-    routes = spark.createDataFrame(_ROUTES, "event_type string, target string")
+    routes = store.rows(spark, _ROUTES, "event_type string, target string")
     return (
         e.join(F.broadcast(routes), "event_type")  # BroadcastHashJoin by construction
         .groupBy("target")

@@ -9,8 +9,8 @@ INT64), DATE -> DateType. It is the single source of truth — ingestion uses
 ``RAW_API_SCHEMA`` is the upstream OpenWeather payload shape consumed by the
 clean/flatten operator (``/root/reference/Load-Data-From-API/main.py:79-143``):
 note ``weather`` is an *array* there, of which only element [0] survives, and
-several fields are renamed (lon->longitude, deg->degree, grnd_level->
-ground_level, 1h/3h->rain_1h/rain_3h etc.).
+several fields are renamed (``RAW_NAMES``: lon->longitude, deg->degree,
+grnd_level->ground_level, 1h/3h->rain_1h/rain_3h etc.).
 
 ``LOG_SCHEMA`` is the structured op-log record: the MESSAGE_DATA template
 (``Load-Data-From-API/main.py:32-38``) plus the fields each function adds at
@@ -88,6 +88,21 @@ WEATHER_SCHEMA = StructType(
         _s("name", StringType()),
     ]
 )
+
+#: The reference's P2 renames (Load-Data-From-API/main.py:85-86,105,112,
+#: 121-127): a WEATHER_SCHEMA field name -> the RAW_API_SCHEMA name it is
+#: read from. Every other field keeps its name.
+RAW_NAMES = {
+    "coordinate": "coord",
+    "longitude": "lon",
+    "latitude": "lat",
+    "ground_level": "grnd_level",
+    "degree": "deg",
+    "rain_1h": "1h",
+    "rain_3h": "3h",
+    "snow_1h": "1h",
+    "snow_3h": "3h",
+}
 
 #: Upstream OpenWeather current-weather payload, pre-clean
 #: (field names as served by the API; Load-Data-From-API/main.py:82-143).

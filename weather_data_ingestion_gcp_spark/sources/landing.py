@@ -20,7 +20,9 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from .. import store
 from ..operators.clean import clean_weather
 from ..schemas import RAW_API_SCHEMA, WEATHER_SCHEMA
 from .connectors import LocalDirObjectStore, ObjectStore
@@ -44,7 +46,7 @@ def write_landing_file(
     GCS/S3 binding lands the same object with the same atomicity
     contract); a plain directory string binds the local default.
     """
-    store = (
+    objects = (
         landing_dir
         if isinstance(landing_dir, ObjectStore)
         else LocalDirObjectStore(landing_dir)
@@ -54,8 +56,9 @@ def write_landing_file(
     # it, so the physical file uses a sanitized stamp
     stamp = stamp.replace(":", "")
     name = f"hourly-weather-data-json-{stamp}-{uuid.uuid4().hex[:8]}.json"
-    rows = cleaned.toJSON().collect()  # single observation batches: tiny
-    return store.put(name, "\n".join(rows) + ("\n" if rows else ""))
+    # single observation batches: tiny, and a local input lands with no job
+    rows = [r[0] for r in cleaned.select(F.to_json(F.struct("*"))).collect()]
+    return objects.put(name, "\n".join(rows) + ("\n" if rows else ""))
 
 
 def ingest_once(
@@ -68,16 +71,11 @@ def ingest_once(
 ) -> str:
     """One reference ingest cycle: S1 fetch -> P1-P4 clean -> S4 land."""
     payload = fetch()
-    raw = spark.createDataFrame([_conform(payload)], RAW_API_SCHEMA)
+    # the API sends extras the reference drops by never reading them;
+    # store.rows reads only the schema's fields
+    raw = store.rows(spark, [payload], RAW_API_SCHEMA)
     cleaned = clean_weather(raw, ingest_date=ingest_date, ingest_time=ingest_time)
     return write_landing_file(spark, cleaned, landing_dir, stamp=stamp)
-
-
-def _conform(payload: dict) -> dict:
-    """Keep only RAW_API_SCHEMA fields (the API sends extras the reference
-    drops by never reading them)."""
-    names = {f.name for f in RAW_API_SCHEMA.fields}
-    return {k: v for k, v in payload.items() if k in names}
 
 
 def read_landing(spark: SparkSession, landing_dir: str) -> DataFrame:

@@ -48,6 +48,7 @@ import datetime as dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators.temporal import daily_engagement
 from ..sources.txlog import TxLogTable
 
@@ -92,7 +93,7 @@ def engagement_sink(
         # a table whose rows were all deleted already reads as an empty
         # typed frame (TxLogTable.read)
         if not presence.exists():
-            return template.sparkSession.createDataFrame([], template.schema)
+            return store.rows(template.sparkSession, [], template.schema)
         return presence.read(spark).select("user_id", "d")
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
