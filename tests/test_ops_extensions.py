@@ -33,16 +33,21 @@ def test_exact_dedup(docs):
     assert sorted(r.doc_id for r in kept.collect()) == [0, 1, 3, 4]
 
 
-def test_minhash_finds_near_dups(docs):
-    # 16 hashes / 8 bands: detection probability for j>=0.78 is ~1-(1-j^2)^8
-    # ~= 0.999, and md5-hashing makes the outcome deterministic
-    out = dedup.minhash_near_duplicates(docs, "doc_id", "text", num_hashes=16, threshold=0.5)
+def test_minhash_finds_near_dups(spark, docs):
+    # md5-hashing makes the candidate set deterministic: at the module
+    # geometry (8 hashes, 4 bands of 2 rows) the exact dup and the
+    # permutation share a band bucket, the dog/cat pair does not
+    out = dedup.minhash_near_duplicates(docs, "doc_id", "text")
     pairs = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
+    assert set(pairs) == {(0, 2), (3, 4)}
     assert pairs[(0, 2)] == 1.0  # exact dup
-    # dog vs cat: word sets share 7 of 9
-    assert pairs[(0, 1)] == pytest.approx(7 / 9)
     # doc 4 = permutation of doc 3 + one extra word: 6 of 7
     assert pairs[(3, 4)] == pytest.approx(6 / 7)
+    # dog vs cat: word sets share 7 of 9 (exact verify of the pair itself)
+    cand = spark.createDataFrame([(0, 1)], "id_a bigint, id_b bigint")
+    sh = dedup.shingles(docs, "doc_id", "text")
+    (r,) = dedup.verify_jaccard(cand, sh).collect()
+    assert (r.id_a, r.id_b) == (0, 1) and r.jaccard == pytest.approx(7 / 9)
 
 
 def test_verify_candidate_prune_is_not_forced_broadcast(spark, docs):
@@ -794,6 +799,40 @@ def test_extract_features_known_values(spark):
     assert out[2] == [0.0] * 8
 
 
+@pytest.mark.parametrize(
+    "site", ["decode_metadata", "resize_payloads", "extract_features"]
+)
+def test_null_payload_keeps_its_row_with_null_cells(spark, site):
+    """A NULL payload keeps its row: the payload-derived cells are NULL
+    (no ``len(None)`` / ``bytes(None)`` in the Python worker), and
+    ``doc_id`` keeps its input type (here a string)."""
+    df = spark.createDataFrame(
+        [("a", bytes([10] * 16)), ("b", None)], "doc_id string, payload binary"
+    )
+    op = {
+        "decode_metadata": lambda m: multimodal.decode_metadata(m, fake=True),
+        "resize_payloads": lambda m: multimodal.resize_payloads(m, 4, 4),
+        "extract_features": lambda m: multimodal.extract_features(m, dim=8),
+    }[site]
+    out = op(df)
+    rows = {r.doc_id: r.asDict() for r in out.collect()}
+    assert out.schema["doc_id"].dataType.simpleString() == "string"
+    assert set(rows) == {"a", "b"}
+    want_a, want_b = {
+        "decode_metadata": (
+            dict(byte_len=16, width=17, height=113, channels=3, format="fake-rgb"),
+            dict(byte_len=None, width=None, height=None, channels=None, format=None),
+        ),
+        "resize_payloads": (
+            dict(width=4, height=4, payload=bytearray([10] * 16)),
+            dict(width=4, height=4, payload=None),
+        ),
+        "extract_features": (dict(feature=[10.0] * 8), dict(feature=None)),
+    }[site]
+    assert {k: rows["a"][k] for k in want_a} == want_a
+    assert {k: rows["b"][k] for k in want_b} == want_b
+
+
 def test_ngram_exact_overlap_counts_and_df_cap(spark):
     rows = [
         (0, "a b c d e f"),       # probe
@@ -896,19 +935,16 @@ def test_verify_matches_minhash_near_duplicates_on_zipf_corpus(spark):
     pruned to the candidate-id set."""
     d = spark.createDataFrame(_zipf_corpus(), "doc_id bigint, text string")
     sh = dedup.shingles(d, "doc_id", "text", n=3)
-    wide = dedup.minhash_wide_signatures(sh, num_hashes=8)
+    wide = dedup.minhash_wide_signatures(sh)
     sizes = wide.select("doc_id", F.col("_n_sh").alias("n"))
-    pairs = dedup.lsh_candidate_pairs(dedup.lsh_band_keys(wide, rows_per_band=2))
+    pairs = dedup.lsh_candidate_pairs(dedup.lsh_band_keys(wide))
     rows = lambda df: sorted(
         (r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect()
     )
     plain = rows(dedup.verify_jaccard(pairs, sh, sizes=sizes))
     assert plain  # the fixture's near-copies produce real candidates
-    full = dedup.minhash_near_duplicates(
-        d, "doc_id", "text", num_hashes=8, rows_per_band=2, shingle_n=3,
-        threshold=0.5, cache_shingles=False,
-    )
-    expect = [t for t in plain if t[2] >= 0.5]
+    full = dedup.minhash_near_duplicates(d, "doc_id", "text", shingle_n=3)
+    expect = [t for t in plain if t[2] >= dedup.JACCARD_FLOOR]
     assert rows(full) == expect
 
 
@@ -1161,6 +1197,27 @@ def test_bloom_xl_no_false_negatives_and_prunes(spark):
     assert kept.filter(F.col("id") < 3000).count() == 3000
     fp = kept.filter(F.col("id") >= 3000).count()
     assert fp < 700, f"false-positive rate implausibly high: {fp}/7000"
+
+
+def test_bloom_bitset_words_stay_an_int64_array(spark):
+    """The folded bitset stays one int64 ndarray into the probe relation
+    (no Python-int list round trip), and the prune it drives keeps every
+    build key and equals the prune over the same words as a list."""
+    from weather_data_ingestion_gcp_spark.operators import sketch
+
+    build = spark.range(200).select(
+        F.concat(F.lit("w-"), F.col("id")).alias("k")
+    )
+    words = sketch.bloom_bitset_words(build, "k")
+    assert isinstance(words, np.ndarray) and words.dtype == np.int64
+    assert words.shape == (sketch.BLOOM_XL_M >> 6,)
+    probe = spark.range(2000).select(
+        F.col("id"), F.concat(F.lit("w-"), F.col("id")).alias("k")
+    )
+    kept = lambda w: {r.id for r in sketch.bloom_xl_prune(probe, "k", w).collect()}
+    got = kept(words)
+    assert set(range(200)) <= got and len(got) < 400
+    assert got == kept(words.tolist())
 
 
 def test_bloom_xl_empty_build_prunes_everything(spark):

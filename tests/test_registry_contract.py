@@ -184,6 +184,30 @@ def test_driver_window_is_pinned():
     assert list(QUERIES)[:50] == DRIVER_WINDOW
 
 
+def test_perfbench_corpus_queries_keep_their_registry_order():
+    """perfbench's corpus_ops workload runs its CORPUS_QUERIES in registry
+    order (each memo anchor before its follower); a window rotation must
+    keep that order."""
+    import ast
+    from pathlib import Path
+
+    src = Path(__file__).resolve().parent.parent / "perfbench" / "workloads.py"
+    (corpus,) = [
+        ast.literal_eval(n.value)
+        for n in ast.parse(src.read_text()).body
+        if isinstance(n, ast.Assign)
+        and [getattr(t, "id", None) for t in n.targets] == ["CORPUS_QUERIES"]
+    ]
+    assert [n for n in QUERIES if n in corpus] == corpus == [
+        "dedup_minhash_lsh",
+        "dedup_clusters",
+        "similarity_ann_rp_lsh",
+        "dedup_semantic_prune",
+        "decontaminate_ngram_exact",
+        "embedding_quantize_int8",
+    ]
+
+
 def test_load_table_memoizes_per_session_and_dir(spark):
     """load_table returns the SAME analyzed DataFrame object for repeat
     calls (kills the per-call spark.read.parquet re-analysis behind the

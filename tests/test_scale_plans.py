@@ -934,10 +934,7 @@ def test_std_minhash_pairs_shared_and_content_identical(spark):
         assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
         assert store.stats(spark)["std_minhash_pairs_tri8"]["bytes"] > 0
         d = load_table(spark, SF, "documents")
-        direct = dedup.minhash_near_duplicates(
-            d, "doc_id", "text", num_hashes=8, rows_per_band=2,
-            shingle_n=3, threshold=0.5,
-        )
+        direct = dedup.minhash_near_duplicates(d, "doc_id", "text", shingle_n=3)
         got = {(r.id_a, r.id_b, round(r.jaccard, 9)) for r in a.collect()}
         want = {
             (r.id_a, r.id_b, round(r.jaccard, 9)) for r in direct.collect()
@@ -945,6 +942,35 @@ def test_std_minhash_pairs_shared_and_content_identical(spark):
         assert got == want and len(got) > 0
     finally:
         dedup.release_shingle_caches()
+
+
+@pytest.mark.parametrize(
+    "params, regroup_exchanges",
+    [(dict(shingle_n=3), 12), (dict(shingle_n=1, max_bucket_size=50), 16)],
+    ids=["std", "capped"],
+)
+def test_minhash_band_keys_are_a_row_local_projection(
+    spark, params, regroup_exchanges
+):
+    """Each wide signature row already holds every band's minhashes, so
+    the band keys are one projection of it: the std and capped pair
+    plans (before the memo's truncation) hold no collect_list
+    ObjectHashAggregate, and fewer Exchanges than the unpivot ->
+    groupBy(doc_id, band) -> collect_list form planned on this input
+    (``regroup_exchanges``)."""
+    import re
+
+    from weather_data_ingestion_gcp_spark.operators import dedup
+    from weather_data_ingestion_gcp_spark.plans.registry import load_table
+
+    d = load_table(spark, SF, "documents")
+    try:
+        plan = _formatted(dedup.minhash_near_duplicates(d, "doc_id", "text", **params))
+    finally:
+        dedup.release_shingle_caches()
+    assert "collect_list" not in plan
+    assert "ObjectHashAggregate" not in plan
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) < regroup_exchanges
 
 
 def test_dsir_topp_rank_is_range_partitioned_and_cached(spark):

@@ -126,53 +126,53 @@ def shingles(
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
+#: The one MinHash-LSH geometry, read by every operator below and by the
+#: DuckDB oracles (plans/oracle_sql.py): 8 per-seed minhashes, 4 bands of
+#: 2 rows, pairs kept at exact Jaccard >= 0.5.
+NUM_HASHES = 8
+ROWS_PER_BAND = 2
+JACCARD_FLOOR = 0.5
 
-def minhash_wide_signatures(shingle_df: DataFrame, num_hashes: int = 8) -> DataFrame:
-    """One wide aggregate per doc: the ``num_hashes`` minhash columns
-    ``h0..h{k-1}`` (per-seed min of md5(shingle || '|' || seed)) PLUS the
+
+def minhash_wide_signatures(shingle_df: DataFrame) -> DataFrame:
+    """One wide aggregate per doc: the ``NUM_HASHES`` minhash columns
+    ``h0..h7`` (per-seed min of md5(shingle || '|' || seed)) PLUS the
     per-doc shingle count ``_n_sh`` — the single groupBy the whole MinHash
     pipeline hangs off.
 
     The mins are SIDE-BY-SIDE aggregate expressions in ONE groupBy over
-    the shingle rows, NOT an explode of each shingle x num_hashes first:
+    the shingle rows, NOT an explode of each shingle x seed first:
     the explode form pushes |shingles| x seeds rows through the aggregate
     (2M at sf0.1), while the wide form evaluates the same md5 calls in-row
     inside codegen and partial aggregation collapses each partition to one
     |docs| x seeds-column buffer before the shuffle. Consumers that need
     both the LSH pairs AND the raw signature columns (the estimate
     contract query) persist THIS frame and derive everything from it —
-    O(docs x num_hashes x 32B), far below corpus size, so persisting it
+    O(docs x NUM_HASHES x 32B), far below corpus size, so persisting it
     is safe at the 100 TB design point."""
     aggs = [
         F.min(F.md5(F.concat_ws("|", "shingle", F.lit(str(s))))).alias(f"h{s}")
-        for s in range(num_hashes)
+        for s in range(NUM_HASHES)
     ]
     return shingle_df.groupBy("doc_id").agg(
         *aggs, F.count(F.lit(1)).alias("_n_sh")
     )
 
 
-def lsh_band_keys(wide: DataFrame, rows_per_band: int = 2) -> DataFrame:
+def lsh_band_keys(wide: DataFrame) -> DataFrame:
     """(doc_id, band, band_key) from a :func:`minhash_wide_signatures`
-    frame: md5 over the band's ordered minhashes. The ``h{s}`` columns
-    are unpivoted to (doc_id, seed, minhash) rows with one ``stack`` — a
-    zero-cost projection after the wide aggregate."""
-    k = sum(1 for c in wide.columns if c[:1] == "h" and c[1:].isdigit())
-    stack_args = ", ".join(f"{s}, h{s}" for s in range(k))
-    sig = wide.selectExpr("doc_id", f"stack({k}, {stack_args}) AS (seed, minhash)")
-    return (
-        sig.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col("band").cast("string"),
-                    F.concat_ws("|", F.sort_array(F.collect_list("minhash"))),
-                )
-            ).alias("band_key")
-        )
+    frame: band b's key is md5 over ``b`` and its ``ROWS_PER_BAND``
+    minhashes in sorted order. Each wide row already holds every band's
+    hashes, so the keys are one row-local projection (a ``stack`` of
+    per-band md5 expressions) — no regroup Exchange, no aggregate."""
+    n = NUM_HASHES // ROWS_PER_BAND
+    keys = ", ".join(
+        f"{b}, md5(concat_ws('|', '{b}', sort_array(array("
+        + ", ".join(f"h{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND))
+        + "))))"
+        for b in range(n)
     )
+    return wide.selectExpr("doc_id", f"stack({n}, {keys}) AS (band, band_key)")
 
 
 def lsh_candidate_pairs(band_df: DataFrame, max_bucket_size: int | None = None) -> DataFrame:
@@ -294,62 +294,47 @@ def minhash_near_duplicates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
     shingle_n: int = 1,
-    threshold: float = 0.5,
     max_bucket_size: int | None = None,
-    cache_shingles: bool = True,
 ) -> DataFrame:
-    """Full pipeline: shingle -> minhash -> LSH bucket -> verify >= threshold.
+    """Full pipeline: shingle -> minhash -> LSH bucket -> verify >=
+    ``JACCARD_FLOOR``.
 
     The shingle relation is referenced by both the signature aggregate and
     the verification joins, so two scan-reduction measures apply:
 
     - per-doc shingle counts are folded into the SAME groupBy that computes
-      the signature mins (one wide aggregate, ``stack``-unpivoted after),
+      the signature mins (one wide aggregate, banded row-locally after),
       eliminating the separate sizes scan verify_jaccard would run;
-    - with ``cache_shingles`` (default), the shingle rows (``big``) and
-      the signatures are kept in the session store (``store.keep``; the
-      storage-level and 100 TB rationale lives there), so every dedup
-      query over the same table shares one tokenization. The verified
-      pairs are NOT kept here: consumers that scan them several times
-      keep or truncate the returned frame themselves.
+    - the shingle rows (``big``) and the signatures are kept in the
+      session store (``store.keep``; the storage-level and 100 TB
+      rationale lives there), so every dedup query over the same table
+      shares one tokenization. The verified pairs are NOT kept here:
+      consumers that scan them several times keep or truncate the
+      returned frame themselves.
     """
-    sh = shingles(df, id_col, text_col, n=shingle_n)
-    if cache_shingles:
-        sh = keep(sh, big=True)
-    wide = minhash_wide_signatures(sh, num_hashes=num_hashes)
-    if cache_shingles:
-        # the verify prune's candidate-id set re-reads the signature
-        # relation (bands -> bucket counts -> semi-join); without this
-        # persist that second read re-runs the whole wide aggregate
-        # (A/B: PageRank isolated-warm 7.5 s -> ~4 s). O(docs x k x 32B),
-        # the designated compact persist candidate — see
-        # minhash_wide_signatures.
-        wide = keep(wide)
-    return verified_pairs_from_wide(
-        wide,
-        sh,
-        rows_per_band=rows_per_band,
-        threshold=threshold,
-        max_bucket_size=max_bucket_size,
-    )
+    sh = keep(shingles(df, id_col, text_col, n=shingle_n), big=True)
+    # the verify prune's candidate-id set re-reads the signature
+    # relation (bands -> bucket counts -> semi-join); without this
+    # persist that second read re-runs the whole wide aggregate
+    # (A/B: PageRank isolated-warm 7.5 s -> ~4 s). O(docs x k x 32B),
+    # the designated compact persist candidate — see
+    # minhash_wide_signatures.
+    wide = keep(minhash_wide_signatures(sh))
+    return verified_pairs_from_wide(wide, sh, max_bucket_size=max_bucket_size)
 
 
 def verified_pairs_from_wide(
     wide: DataFrame,
     shingle_df: DataFrame,
-    rows_per_band: int = 2,
-    threshold: float = 0.5,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """LSH candidate pairs + exact-Jaccard verify, derived from an
-    existing ``minhash_wide_signatures`` frame (pass a persisted one to
-    compute the signature aggregate exactly once across multiple
-    consumers)."""
+    """LSH candidate pairs + exact-Jaccard verify (>= ``JACCARD_FLOOR``),
+    derived from an existing ``minhash_wide_signatures`` frame (pass a
+    persisted one to compute the signature aggregate exactly once across
+    multiple consumers)."""
     sizes = wide.select("doc_id", F.col("_n_sh").alias("n"))
-    bands = lsh_band_keys(wide, rows_per_band=rows_per_band)
+    bands = lsh_band_keys(wide)
     pairs = lsh_candidate_pairs(bands, max_bucket_size=max_bucket_size)
     # candidate-id SUPERSET for the verify semi-join prune: docs sharing
     # any band bucket with a second doc. One aggregate + one semi-join
@@ -368,7 +353,7 @@ def verified_pairs_from_wide(
     )
     return verify_jaccard(
         pairs, shingle_df, sizes=sizes, candidate_ids=cand_ids
-    ).filter(F.col("jaccard") >= threshold)
+    ).filter(F.col("jaccard") >= JACCARD_FLOOR)
 
 
 # ---------------------------------------------------------------------------

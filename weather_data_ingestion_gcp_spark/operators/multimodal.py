@@ -44,10 +44,19 @@ from ._mm_parsers import (  # noqa: F401  (re-exported parsing surface)
     _parse_wav_header,
 )
 
-#: Output schema of decode_metadata — stable contract for downstream ops.
+#: Output columns of decode_metadata after ``doc_id`` — stable contract
+#: for downstream ops.
 DECODE_META_SCHEMA = (
-    "doc_id bigint, byte_len bigint, width int, height int, channels int, format string"
+    "byte_len bigint, width int, height int, channels int, format string"
 )
+
+#: Output columns of resize_payloads after ``doc_id`` — payload out, dims
+#: pinned.
+RESIZE_SCHEMA = "width int, height int, payload binary"
+
+#: Output columns of extract_features after ``doc_id`` — fixed-dim
+#: embedding per payload.
+FEATURE_SCHEMA = "feature array<double>"
 
 
 def with_binary_payload(df: DataFrame, src_col: str, id_col: str) -> DataFrame:
@@ -61,6 +70,17 @@ def with_binary_payload(df: DataFrame, src_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _map_payloads(media: DataFrame, fn, cols: str) -> DataFrame:
+    """``fn`` over the (doc_id, payload) Arrow batches of ``media``; the
+    output ``doc_id`` keeps its input type, followed by ``cols``. A NULL
+    payload reaches ``fn`` as ``None`` and gets NULL cells, never a
+    worker crash."""
+    id_type = media.schema["doc_id"].dataType.simpleString()
+    return media.select("doc_id", "payload").mapInPandas(
+        fn, f"doc_id {id_type}, {cols}"
+    )
+
+
 def decode_metadata(media: DataFrame, fake: bool = False) -> DataFrame:
     """mapInPandas decode: (doc_id, payload) -> typed image metadata.
 
@@ -70,27 +90,23 @@ def decode_metadata(media: DataFrame, fake: bool = False) -> DataFrame:
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            meta = [_decode_image_bytes(p, fake) for p in pdf["payload"]]
-            out = pd.DataFrame(
+            meta = [
+                (None,) * 4 if p is None else _decode_image_bytes(p, fake)
+                for p in pdf["payload"]
+            ]
+            n = pdf["payload"].map(len, na_action="ignore")
+            yield pd.DataFrame(
                 {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "byte_len": pdf["payload"].map(len).astype("int64"),
-                    "width": pd.Series([m[0] for m in meta], dtype="int32"),
-                    "height": pd.Series([m[1] for m in meta], dtype="int32"),
-                    "channels": pd.Series([m[2] for m in meta], dtype="int32"),
+                    "doc_id": pdf["doc_id"],
+                    "byte_len": n.astype("Int64"),
+                    "width": pd.Series([m[0] for m in meta], dtype="Int32"),
+                    "height": pd.Series([m[1] for m in meta], dtype="Int32"),
+                    "channels": pd.Series([m[2] for m in meta], dtype="Int32"),
                     "format": [m[3] for m in meta],
                 }
             )
-            yield out
 
-    return media.select("doc_id", "payload").mapInPandas(decode, DECODE_META_SCHEMA)
-
-
-#: Output schema of resize_payloads — payload out, dims pinned.
-RESIZE_SCHEMA = "doc_id bigint, width int, height int, payload binary"
-
-#: Output schema of extract_features — fixed-dim embedding per payload.
-FEATURE_SCHEMA = "doc_id bigint, feature array<double>"
+    return _map_payloads(media, decode, DECODE_META_SCHEMA)
 
 
 def resize_payloads(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
@@ -101,24 +117,26 @@ def resize_payloads(media: DataFrame, width: int = 64, height: int = 64) -> Data
     and output sizing are all real and testable; a Pillow-backed resize
     replaces one inner function. Payload-carrying output, so batches are
     bounded by arrow.maxRecordsPerBatch (the executor-memory contract
-    documented at module top)."""
+    documented at module top). A NULL payload stays NULL at the pinned
+    dims."""
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         target = width * height
         for pdf in batches:
             out_payload = [
-                bytes(p[:target]).ljust(target, b"\0") for p in pdf["payload"]
+                None if p is None else bytes(p[:target]).ljust(target, b"\0")
+                for p in pdf["payload"]
             ]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf["doc_id"].astype("int64"),
+                    "doc_id": pdf["doc_id"],
                     "width": pd.Series([width] * len(pdf), dtype="int32"),
                     "height": pd.Series([height] * len(pdf), dtype="int32"),
                     "payload": out_payload,
                 }
             )
 
-    return media.select("doc_id", "payload").mapInPandas(resize, RESIZE_SCHEMA)
+    return _map_payloads(media, resize, RESIZE_SCHEMA)
 
 
 def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
@@ -128,13 +146,17 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     and vectorized with numpy per batch, so the Arrow batch path, the
     array<double> output column, and downstream similarity-search
     compatibility (same shape as the embeddings table) are all real;
-    a CLIP/CNN encoder replaces one inner function."""
+    a CLIP/CNN encoder replaces one inner function. A NULL payload gets
+    a NULL feature."""
     import numpy as np
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = []
             for p in pdf["payload"]:
+                if p is None:
+                    feats.append(None)
+                    continue
                 a = np.frombuffer(bytes(p), dtype=np.uint8).astype(np.float64)
                 if len(a) == 0:
                     feats.append([0.0] * dim)
@@ -142,11 +164,9 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
                 pad = (-len(a)) % dim
                 a = np.pad(a, (0, pad))
                 feats.append(a.reshape(-1, dim).mean(axis=0).tolist())
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "feature": feats}
-            )
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "feature": feats})
 
-    return media.select("doc_id", "payload").mapInPandas(featurize, FEATURE_SCHEMA)
+    return _map_payloads(media, featurize, FEATURE_SCHEMA)
 
 
 def frame_sample_plan(media: DataFrame, every_n_bytes: int = 1000) -> DataFrame:

@@ -18,6 +18,7 @@ might_contain on the probe side — is pinned in tests/test_scale_plans.py.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -226,18 +227,18 @@ def bloom_xl_positions(key: Column, hexw: int = BLOOM_XL_HEXW) -> list[Column]:
 
 def bloom_bitset_words(
     df: DataFrame, key_col: str, hexw: int = BLOOM_XL_HEXW
-) -> list[int]:
+) -> np.ndarray:
     """Fold the build side's lit positions into a packed ``m/64``-long
     bitset on the driver. The fold is distributed: positions group to
     word indexes with a BIT_OR partial aggregate, so the collect is at
     most m/64 rows (16 KiB of longs per 2^20 bits), NOT O(build keys).
     The collect rides Arrow (``toArrow`` + a numpy scatter), never py4j
     Rows — at the 7-hex width the fold is up to 2^22 words, and Row
-    objects cost ~10x the raw longs (the round-7 advisor finding). No
-    false negatives by construction (identical md5 arithmetic on build
+    objects cost ~10x the raw longs (the round-7 advisor finding). The
+    words stay one int64 ndarray all the way into the probe's Arrow
+    relation (a Python-int list of 2^22 words took ~1 s to convert back).
+    No false negatives by construction (identical md5 arithmetic on build
     and probe)."""
-    import numpy as np
-
     m = 1 << (4 * hexw)
     folded = (
         df.select(
@@ -255,10 +256,10 @@ def bloom_bitset_words(
     )
     words = np.zeros(m >> 6, dtype=np.int64)
     words[folded.column("w").to_numpy()] = folded.column("bits").to_numpy()
-    return words.tolist()
+    return words
 
 
-def bloom_xl_build(df: DataFrame, key_col: str) -> tuple[list[int], int]:
+def bloom_xl_build(df: DataFrame, key_col: str) -> tuple[np.ndarray, int]:
     """Adaptively-sized build: estimate the build cardinality (HLL,
     one bounded aggregate), pick the slice width that keeps >= ~8 bits
     per key, and fold the bitset at that width. Returns (words, hexw) —
@@ -272,7 +273,7 @@ def bloom_xl_build(df: DataFrame, key_col: str) -> tuple[list[int], int]:
 def bloom_xl_prune(
     df: DataFrame,
     key_col: str,
-    words: list[int],
+    words: np.ndarray,
     hexw: int = BLOOM_XL_HEXW,
     bits_col: str = "_bf",
 ) -> DataFrame:

@@ -63,6 +63,12 @@ DRIVER_WINDOW = [
     "neardup_cluster_stats",
     "graph_pagerank_neardup",
     "graph_triangle_counts",
+    # changed-code leads: the capped MinHash family, whose band keys are
+    # now one row-local projection at the module-constant geometry — the
+    # capped-pairs memo builder, then its two graph readers
+    "dedup_minhash_lsh_capped",
+    "graph_pagerank_neardup_capped",
+    "graph_triangle_counts_capped",
     # changed-code leads: the similarity entries whose fold, top-k cut
     # or sign-LSH geometry moved behind operators/similarity.py — the
     # sign-LSH band-index builder, then its shares follower; the exact
@@ -109,9 +115,6 @@ DRIVER_WINDOW = [
     "join_semi",
     "log_path_and_format",
     "path_stem_extract",
-    "regex_filename_cleanup",
-    "sql_api_passthrough",
-    "uuid_stable",
     # r08 multimodal plumbing + the NEW r13 analytic over the same
     # binary payloads (adjacent: same documents/multimodal scan)
     "multimodal_frame_offsets",

@@ -149,7 +149,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM bands JOIN split USING (doc_id) WHERE split.b >= 15),
     cand AS (SELECT DISTINCT tb.test_id, rb.train_id
              FROM tb JOIN rb USING (band_key)),
-    {verify_jaccard_sql("cand", 0.5, ids=("test_id", "train_id"))}
+    {verify_jaccard_sql("cand", dedup.JACCARD_FLOOR, ids=("test_id", "train_id"))}
     """,
 )
 def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -160,12 +160,10 @@ def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (test: bucket < 10, train: bucket >= 15), and the LSH band join runs
     test-bands x train-bands ONLY — candidate work scales with the small
     test split times colliding train buckets, never train x train.
-    Jaccard-verified at 0.5 on word-3-gram shingles."""
+    Jaccard-verified at dedup.JACCARD_FLOOR on word-3-gram shingles."""
     d = load_table(spark, sf_dir, "documents")
     sh = dedup.shingles(d, "doc_id", "text", n=3)
-    bands = dedup.lsh_band_keys(
-        dedup.minhash_wide_signatures(sh, num_hashes=8), rows_per_band=2
-    )
+    bands = dedup.lsh_band_keys(dedup.minhash_wide_signatures(sh))
     b = hash_bucket(F.col("doc_id"))
     test_ids = d.select("doc_id").filter(b < 10)
     train_ids = d.select("doc_id").filter(b >= 15)
@@ -176,7 +174,9 @@ def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id_b"), "band_key"
     )
     cand = tb.join(rb, "band_key").select("id_a", "id_b").distinct()
-    out = dedup.verify_jaccard(cand, sh).filter(F.col("jaccard") >= 0.5)
+    out = dedup.verify_jaccard(cand, sh).filter(
+        F.col("jaccard") >= dedup.JACCARD_FLOOR
+    )
     return out.select(
         F.col("id_a").alias("test_id"),
         F.col("id_b").alias("train_id"),
@@ -1300,9 +1300,9 @@ def _minhash_estimate_oracle() -> str:
     )
     SELECT id_a, id_b,
            CAST(n_agree AS BIGINT) AS n_agree,
-           ROUND(n_agree / 8e0, 6) AS jaccard_est,
+           ROUND(n_agree / {dedup.NUM_HASHES}e0, 6) AS jaccard_est,
            jaccard AS jaccard_exact,
-           ABS(n_agree / 8e0 - jaccard) <= 375e-3 AS within_bound
+           ABS(n_agree / {dedup.NUM_HASHES}e0 - jaccard) <= 375e-3 AS within_bound
     FROM agree ORDER BY id_a, id_b
     """
 
@@ -1332,7 +1332,7 @@ def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy twice — the suite's most expensive query at 9.5s/sf0.1).
     # wide is O(sampled docs x 8 x 32B), safe to persist.
     sh = store.keep(dedup.shingles(d, "doc_id", "text", n=3), big=True)
-    wide = store.keep(dedup.minhash_wide_signatures(sh, num_hashes=8))
+    wide = store.keep(dedup.minhash_wide_signatures(sh))
     if pct >= 100:
         # full-corpus path (every driver SF): the pairs leg IS the
         # standard-parameter relation — read the session-memoized,
@@ -1346,18 +1346,15 @@ def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         raw_pairs = std_minhash_pairs(spark, sf_dir)
     else:
-        raw_pairs = dedup.verified_pairs_from_wide(
-            wide, sh, rows_per_band=2, threshold=0.5
-        )
+        raw_pairs = dedup.verified_pairs_from_wide(wide, sh)
     pairs = raw_pairs.select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard_exact")
     )
-    wa = wide.select(F.col("doc_id").alias("id_a"), *[F.col(f"h{s}").alias(f"a{s}") for s in range(8)])
-    wb = wide.select(F.col("doc_id").alias("id_b"), *[F.col(f"h{s}").alias(f"b{s}") for s in range(8)])
-    n_agree = sum(
-        (F.col(f"a{s}") == F.col(f"b{s}")).cast("long") for s in range(8)
-    )
-    est = F.col("n_agree") / F.expr("8e0")
+    k = range(dedup.NUM_HASHES)
+    wa = wide.select(F.col("doc_id").alias("id_a"), *[F.col(f"h{s}").alias(f"a{s}") for s in k])
+    wb = wide.select(F.col("doc_id").alias("id_b"), *[F.col(f"h{s}").alias(f"b{s}") for s in k])
+    n_agree = sum((F.col(f"a{s}") == F.col(f"b{s}")).cast("long") for s in k)
+    est = F.col("n_agree") / F.expr(f"{dedup.NUM_HASHES}e0")
     return (
         pairs.join(wa, "id_a")
         .join(wb, "id_b")
@@ -1598,10 +1595,9 @@ def lsh_recall_contract_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct = _sample_pct(docs.count())
     d = docs.filter(sampling.hash_bucket(F.col("doc_id")) < pct)
     lsh = store.keep(
-        dedup.minhash_near_duplicates(
-            d, "doc_id", "text", num_hashes=8, rows_per_band=2, shingle_n=3,
-            threshold=0.5,
-        ).select("id_a", "id_b")
+        dedup.minhash_near_duplicates(d, "doc_id", "text", shingle_n=3).select(
+            "id_a", "id_b"
+        )
     )
     exact = ppjoin_pairs_frame(d).select("id_a", "id_b")
     return recall_summary(exact, lsh)

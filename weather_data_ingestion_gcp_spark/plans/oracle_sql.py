@@ -16,6 +16,7 @@ the distinct ``(doc_id, shingle)`` relation.
 from __future__ import annotations
 
 from ..operators import similarity, text
+from ..operators.dedup import JACCARD_FLOOR, NUM_HASHES, ROWS_PER_BAND
 from .registry import _SAMPLE_PCT, _SAMPLE_TARGET_DOCS
 
 #: lowercase whitespace split with empty tokens dropped — mirrors
@@ -24,11 +25,6 @@ words_sql = r"list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')"
 
 #: one row per (doc_id, token) occurrence
 tokens_sql = f"SELECT doc_id, unnest({words_sql}) AS token FROM documents"
-
-#: MinHash parameters every oracle uses (dedup.minhash_wide_signatures /
-#: lsh_band_keys at num_hashes=8, rows_per_band=2)
-_NUM_HASHES = 8
-_ROWS_PER_BAND = 2
 
 
 def hex_sql(md5_hex: str, start: int | str = 1, width: int = 4) -> str:
@@ -103,20 +99,21 @@ def shingles_sql(n: int, positional: bool = False, src: str = "documents") -> st
 def minhash_bands_sql(cap: int | None = None) -> str:
     """CTEs ``sig`` (doc_id, seed, minhash) and ``bands`` (doc_id, band,
     band_key) over ``sh`` — mirrors dedup.minhash_wide_signatures +
-    lsh_band_keys. Lexicographic MIN over fixed-width md5 hex equals the
-    numeric min-hash. With ``cap``, band buckets holding more than
-    ``cap`` docs are dropped (the max_bucket_size skew control)."""
+    lsh_band_keys at the dedup module's geometry. Lexicographic MIN over
+    fixed-width md5 hex equals the numeric min-hash. With ``cap``, band
+    buckets holding more than ``cap`` docs are dropped (the
+    max_bucket_size skew control)."""
     sig = f"""sig AS (
         SELECT doc_id, s.seed,
                MIN(md5(shingle || '|' || CAST(s.seed AS VARCHAR))) AS minhash
         FROM sh CROSS JOIN
-             (SELECT unnest(generate_series(0, {_NUM_HASHES - 1})) AS seed) s
+             (SELECT unnest(generate_series(0, {NUM_HASHES - 1})) AS seed) s
         GROUP BY doc_id, s.seed
     )"""
     name = "bands" if cap is None else "all_bands"
     bands = f"""{name} AS (
-        SELECT doc_id, seed // {_ROWS_PER_BAND} AS band,
-               md5(CAST(seed // {_ROWS_PER_BAND} AS VARCHAR) || '|' ||
+        SELECT doc_id, seed // {ROWS_PER_BAND} AS band,
+               md5(CAST(seed // {ROWS_PER_BAND} AS VARCHAR) || '|' ||
                    string_agg(minhash, '|' ORDER BY minhash)) AS band_key
         FROM sig GROUP BY doc_id, band
     )"""
@@ -164,11 +161,10 @@ def verify_jaccard_sql(
 
 
 def minhash_pairs_sql(src: str, shingle_n: int, cap: int | None) -> str:
-    """Jaccard-verified (>= 0.5) MinHash-LSH near-dup pairs (id_a, id_b,
-    jaccard) over ``src`` — mirrors dedup.minhash_near_duplicates at
-    num_hashes=8, rows_per_band=2 (registry.std_minhash_pairs is
-    ``("documents", 3, None)``, capped_minhash_pairs ``("documents", 1,
-    50)``)."""
+    """Jaccard-verified MinHash-LSH near-dup pairs (id_a, id_b, jaccard)
+    over ``src`` — mirrors dedup.minhash_near_duplicates
+    (registry.std_minhash_pairs is ``("documents", 3, None)``,
+    capped_minhash_pairs ``("documents", 1, 50)``)."""
     return f"""
     WITH sh AS ({shingles_sql(shingle_n, src=src)}),
     {minhash_bands_sql(cap)},
@@ -177,7 +173,7 @@ def minhash_pairs_sql(src: str, shingle_n: int, cap: int | None) -> str:
         FROM bands a JOIN bands b USING (band_key)
         WHERE a.doc_id < b.doc_id
     ),
-    {verify_jaccard_sql("pairs", 0.5)}"""
+    {verify_jaccard_sql("pairs", JACCARD_FLOOR)}"""
 
 
 #: (doc_id, component) over the std MinHash pairs graph: every document

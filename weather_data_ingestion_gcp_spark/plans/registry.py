@@ -126,8 +126,8 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
 
 def std_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized verified near-dup pairs at the STANDARD
-    parameters (word-3-gram shingles, 8 hashes, rows_per_band=2,
-    Jaccard >= 0.5, no bucket cap) over the full documents table —
+    parameters (word-3-gram shingles, the dedup module's MinHash-LSH
+    geometry, no bucket cap) over the full documents table —
     the one graph 13 registered entries analyze (dedup_minhash_lsh,
     dedup_clusters, the graph analytics, lsh_recall_contract, the
     curation/pretrain composites, ...). Round-13 opt (guide §2.4):
@@ -152,8 +152,8 @@ def std_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def capped_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized verified near-dup pairs at the CAPPED production
-    parameters (unigram shingles, 8 hashes, rows_per_band=2, Jaccard >=
-    0.5, bucket cap 50) — the scale-safe edge source three entries
+    parameters (unigram shingles, the dedup module's MinHash-LSH
+    geometry, bucket cap 50) — the scale-safe edge source three entries
     derive from (``dedup_minhash_lsh_capped``,
     ``graph_pagerank_neardup_capped``, ``graph_triangle_counts_capped``).
     Round-14 opt (guide §2.4, the ``std_minhash_pairs`` discipline,
@@ -178,9 +178,9 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str, key: str, **params) -> Data
 
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
-        return store.truncate(dedup.minhash_near_duplicates(
-            d, "doc_id", "text", num_hashes=8, rows_per_band=2, threshold=0.5, **params
-        ))
+        return store.truncate(
+            dedup.minhash_near_duplicates(d, "doc_id", "text", **params)
+        )
 
     return store.shared(spark, key, sf_dir, build)
 

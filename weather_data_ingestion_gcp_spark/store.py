@@ -19,7 +19,7 @@ multi-reference relations are kept. Storage level:
   source): MEMORY_ONLY, so an evicted block is recomputed. At sf10 the
   shingle relation exceeds the storage region and MEMORY_AND_DISK's warm
   re-read cost 297 s vs 84 s for a cold recompute. At the 100 TB design
-  point callers pass ``cache_shingles=False`` or dedup in date slices.
+  point dedup runs in date slices whose shingle relations fit.
 
 ``truncate(df)`` cuts lineage with an EAGER localCheckpoint, for a frame
 an iterative driver loops over (PageRank rounds, the IVF assignment):
