@@ -106,7 +106,7 @@ def test_bigrams_tokenized_matches_hof(edge_df):
     rows = toks_df.select(
         "id",
         old.alias("old"),
-        text_ops.bigrams(F.col("ws"), tokenized=True).alias("new"),
+        text_ops.bigrams(F.col("ws")).alias("new"),
     ).collect()
     for r in rows:
         assert r["old"] == r["new"], f"id={r['id']}: {r['old']!r} != {r['new']!r}"

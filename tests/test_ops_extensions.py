@@ -582,7 +582,11 @@ def test_scrub_pii_replaces_and_counts(spark):
 
 
 def test_normalize_and_bigrams(spark):
-    from weather_data_ingestion_gcp_spark.operators.text import bigrams, normalize_text
+    from weather_data_ingestion_gcp_spark.operators.text import (
+        bigrams,
+        normalize_text,
+        words,
+    )
 
     df = spark.createDataFrame(
         [(0, "  Hello,   WORLD! 42 "), (1, "one"), (2, "")],
@@ -593,7 +597,7 @@ def test_normalize_and_bigrams(spark):
         for r in df.select(
             "doc_id",
             normalize_text(F.col("text")).alias("norm"),
-            bigrams(F.col("text")).alias("bg"),
+            bigrams(words(F.col("text"))).alias("bg"),
         ).collect()
     }
     assert rows[0].norm == "hello world 42"
@@ -691,7 +695,7 @@ def test_simhash_hamming_pairs_finds_exact_and_respects_threshold(docs):
 def test_inverted_index_postings_sorted_and_capped(spark):
     rows = [(i, "alpha beta gamma") for i in range(15)] + [(99, "delta epsilon")]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = {r.term: r for r in text.inverted_index(df, max_postings=10).collect()}
+    out = {r.term: r for r in text.inverted_index(df).collect()}
     assert out["alpha beta"].df_count == 15
     assert out["alpha beta"].postings == list(range(10))  # sorted, capped
     assert "delta epsilon" not in out  # below min_df
@@ -772,13 +776,37 @@ def test_winnow_guarantees_shared_substring_fingerprint(spark):
         (3, "entirely unrelated content with zero overlap at all"),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    fps = text.winnow_fingerprints(df, k=8, w=4, output="fps").collect()
-    by_doc = {}
-    for r in fps:
-        by_doc.setdefault(r.doc_id, set()).add(r.fp)
+    by_doc = {r.doc_id: set(r.fps) for r in text.winnow_fingerprints(df).collect()}
     # winnowing guarantee: shared substring >= k+w-1 chars -> common fp
     assert by_doc[1] & by_doc[2]
     assert not (by_doc[1] & by_doc[3])
+
+
+def test_winnow_matches_duckdb_oracle_on_nbsp(spark):
+    """U+00A0 is not whitespace to Java's or RE2's ``\\s``: the UDF
+    hashes the engine-normalized text (it used to fold NBSP itself with
+    Python's ``str.split``), so both engines fingerprint it alike."""
+    import duckdb
+
+    from weather_data_ingestion_gcp_spark.plans.oracle_sql import winnow_fps_sql
+
+    rows = [
+        (1, "Alpha\u00a0beta  gamma\tdelta epsilon zeta"),
+        (2, "\u00a0 leading nbsp and   runs of   spaces \u00a0"),
+        (3, "x\u00a0\u00a0y z"),
+        (4, "plain ascii text with no special spaces"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {r.doc_id: sorted(r.fps) for r in text.winnow_fingerprints(df).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = {
+        i: sorted(fps)
+        for i, fps in con.execute(f"WITH {winnow_fps_sql} SELECT doc_id, fps FROM fp").fetchall()
+    }
+    assert got == want
+    assert all(got[i] for i in (1, 2, 4))
 
 
 def test_resize_payloads_truncates_and_pads(spark):
@@ -831,6 +859,26 @@ def test_null_payload_keeps_its_row_with_null_cells(spark, site):
     }[site]
     assert {k: rows["a"][k] for k in want_a} == want_a
     assert {k: rows["b"][k] for k in want_b} == want_b
+
+
+@pytest.mark.parametrize("site", ["audio_metadata", "patch_stats", "frame_energy"])
+def test_null_payload_never_reaches_the_payload_analytics(spark, site):
+    """A NULL payload neither crashes the Python worker (no
+    ``bytes(None)``) nor changes ``doc_id``'s type (here a string):
+    audio_metadata keeps the row with NULL cells, patch_stats and
+    frame_energy emit no row for it, as for an empty payload."""
+    df = spark.createDataFrame(
+        [("a", multimodal.make_wav_payload(1)), ("b", None)],
+        "doc_id string, payload binary",
+    )
+    out = getattr(multimodal, site)(df)
+    rows = {r.doc_id: r.asDict() for r in out.collect()}
+    assert out.schema["doc_id"].dataType.simpleString() == "string"
+    if site == "audio_metadata":
+        assert set(rows) == {"a", "b"} and rows["a"]["format"] == "wav"
+        assert {k for k, v in rows["b"].items() if v is not None} == {"doc_id"}
+    else:
+        assert set(rows) == {"a"}
 
 
 def test_ngram_exact_overlap_counts_and_df_cap(spark):
@@ -1499,13 +1547,13 @@ def test_blocked_jaccard_grouped_matches_pairs_join_form(spark):
 
 
 def test_multimodal_patch_stats_matches_numpy_reference(spark):
-    """patch_stats (plans/multimodal_payloads.py): per-channel patch statistics over
+    """patch_stats (operators/multimodal.py): per-channel patch statistics over
     interleaved-RGB payload bytes must match an independent per-byte
     reference — patch tiling (48 bytes per patch), tail patches shorter
     than 16 samples, the 4-bucket histogram edges (means exactly on a
     multiple of 64 land in the upper bucket), and empty payloads
     (no rows)."""
-    from weather_data_ingestion_gcp_spark.plans.multimodal_payloads import patch_stats
+    from weather_data_ingestion_gcp_spark.operators.multimodal import patch_stats
 
     texts = [
         (0, "a"),                      # 1 byte: channel 0 only, 1 patch
@@ -1551,12 +1599,12 @@ def test_multimodal_patch_stats_matches_numpy_reference(spark):
 
 
 def test_multimodal_frame_energy_matches_python_reference(spark):
-    """frame_energy (plans/multimodal_payloads.py): the PCM interpretation must
+    """frame_energy (operators/multimodal.py): the PCM interpretation must
     match an independent per-byte reference — little-endian int16
     pairing, sign fold at 32768, the odd trailing byte dropped, the
     trailing partial frame kept, integer thresholds, and payloads too
     short for one sample (no rows)."""
-    from weather_data_ingestion_gcp_spark.plans.multimodal_payloads import (
+    from weather_data_ingestion_gcp_spark.operators.multimodal import (
         _FRAME_SAMPLES,
         _LOUD_AT_LEAST,
         _SILENT_BELOW,

@@ -5,7 +5,9 @@ integer, the word split, the MinHash signature and the Jaccard verify
 join occur in ``oracle_sql.py`` only; no plan module rewrites SQL with
 ``re.sub`` or imports a ``_SQL_*`` / ``_sql_*`` fragment from a sibling.
 The numpy mirror of ``list_dot_product``, the ascending-dimension fold,
-occurs in ``operators/similarity.py`` only.
+occurs in ``operators/similarity.py`` only, and the Spark text
+normalization (whitespace folding, the stopword pattern) in
+``operators/text.py`` only.
 Then pins the md5-hex integer across engines: DuckDB ``hex_sql`` and
 Spark ``hex_int`` must both equal Python's reading of the same digest.
 """
@@ -33,6 +35,7 @@ FRAGMENTS = [
     "MIN(md5(shingle",
     "JOIN sh sb ON",
     "list_dot_product(v, ",
+    r"'\s+', ' ', 'g'",
 ]
 FRAGMENT_NAME = re.compile(r"^_(SQL|sql)_")
 
@@ -83,6 +86,19 @@ def test_ascending_fold_spelled_once_in_similarity():
     found = {rel: lines for rel, lines in found.items() if lines}
     assert list(found) == ["operators/similarity.py"], found
     assert len(found["operators/similarity.py"]) == 1, found
+
+
+def test_text_normalization_spelled_once_in_text():
+    """Outside ``oracle_sql.py`` the whitespace-run regex occurs once
+    (``text._collapse_ws``, behind ``norm_ws``, ``normalize_text`` and
+    ``strip_markup``), the stopword count's pattern is built once, and no
+    module folds text in Python: a Python ``str.split()`` also splits on
+    U+00A0, which neither Java's nor RE2's ``\\s`` matches."""
+    spark_side = [(rel, src) for rel, src in _sources() if rel != HOME]
+    for needle in (r"\s+", "(?<= )"):
+        found = {rel: src.count(needle) for rel, src in spark_side if needle in src}
+        assert found == {"operators/text.py": 1}, (needle, found)
+    assert not [rel for rel, src in _sources() if ".lower().split()" in src]
 
 
 def test_plan_modules_neither_rewrite_sql_nor_share_private_fragments():

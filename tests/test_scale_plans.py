@@ -1061,3 +1061,54 @@ def test_store_keep_storage_levels(spark):
     finally:
         compact.unpersist()
         big.unpersist()
+
+
+def _kept_subtrees(plan: str) -> tuple[list[str], list[int]]:
+    """The cached plan under each InMemoryRelation of a ``_plan`` string
+    (relative to the relation's column, so equal text means the same
+    cached relation), and the line numbers they span."""
+    import re
+
+    lines = plan.splitlines()
+    trees, inside = [], []
+    for i, line in enumerate(lines):
+        if "InMemoryRelation" not in line:
+            continue
+        col = line.index("InMemoryRelation")
+        j = i + 1
+        while j < len(lines) and len(re.match(r"[ :|]*(\+- )?", lines[j])[0]) > col:
+            j += 1
+        trees.append("\n".join(x[col:] for x in lines[i + 1 : j]))
+        inside += range(i + 1, j)
+    return trees, inside
+
+
+def test_winnow_fingerprints_kept_once_for_every_reader(spark):
+    """winnow_fingerprints always keeps its per-doc fingerprint arrays:
+    a direct operator call (first, so no earlier caller's cache can serve
+    it), the summary entry and the overlap-pairs entry read the same
+    InMemoryRelation, and the winnow ArrowEvalPython runs only inside
+    it."""
+    from weather_data_ingestion_gcp_spark import store
+    from weather_data_ingestion_gcp_spark.operators import text
+    from weather_data_ingestion_gcp_spark.plans.registry import load_table
+
+    try:
+        plans = [
+            _plan(text.winnow_fingerprints(load_table(spark, SF, "documents"))),
+            _plan(QUERIES["text_winnow_fingerprints"](spark, SF)),
+            _plan(QUERIES["winnow_overlap_pairs"](spark, SF)),
+        ]
+    finally:
+        store.release()
+    cached = set()
+    for plan in plans:
+        trees, inside = _kept_subtrees(plan)
+        assert trees, plan
+        cached.update(trees)
+        udf_lines = [
+            i for i, line in enumerate(plan.splitlines()) if "ArrowEvalPython" in line
+        ]
+        assert udf_lines and set(udf_lines) <= set(inside), plan
+    assert len(cached) == 1, cached
+    assert next(iter(cached)).count("ArrowEvalPython") == 1

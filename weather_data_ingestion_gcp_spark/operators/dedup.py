@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..store import keep
 from .sampling import hex_int, sub_block
+from .text import ngram_array, words
 # store.release under its older name, still called by perfbench's reset
 from ..store import release as release_shingle_caches  # noqa: F401
 
@@ -61,15 +62,6 @@ def drop_exact_duplicates(df: DataFrame, id_col: str, content_col: str) -> DataF
 # ---------------------------------------------------------------------------
 # shingling (shared by MinHash / Jaccard)
 # ---------------------------------------------------------------------------
-
-
-def _words(text: Column) -> Column:
-    # round 13: codegen tokenizer (array_remove(split(norm))) — the old
-    # filter(split, w -> w != '') HOF ran through interpreted Catalyst
-    # eval; see operators.text.words for the measured pathology.
-    from .text import words as _words_cg
-
-    return _words_cg(text)
 
 
 def shingles(
@@ -113,8 +105,6 @@ def shingles(
     per run (isolated aggregates, or builders whose output is
     lineage-truncated before consumers see it).
     """
-    from .text import ngram_array
-
     carry = list(carry_cols or [])
     sh = F.array_distinct(ngram_array(F.col(text_col), n))
     return df.select(
@@ -369,7 +359,7 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     tokens = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(_words(F.col(text_col))).alias("token"),
+        F.explode(words(F.col(text_col))).alias("token"),
     )
     tf = tokens.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("cnt"))
     hashed = tf.select(

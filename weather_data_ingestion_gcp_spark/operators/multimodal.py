@@ -181,13 +181,94 @@ def frame_sample_plan(media: DataFrame, every_n_bytes: int = 1000) -> DataFrame:
     )
 
 
+#: bytes per (patch, channel): payload bytes are interpreted as
+#: interleaved RGB (byte i -> channel i%3), tiled into patches of 16
+#: samples per channel (48 payload bytes per patch).
+_PATCH = 16
+_CHANNELS = 3
+
+#: Output columns of patch_stats after ``doc_id`` — scalar-only so the
+#: driver hash canonicalizer applies; counts are exact integers, the two
+#: doubles are single-division results rounded to 6 (bitwise-stable
+#: cross-engine, the extract_features precedent).
+PATCH_STATS_SCHEMA = (
+    "channel int, n_patches bigint, mean_byte double, max_patch_mean double, "
+    "p_dark bigint, p_dim bigint, p_mid bigint, p_bright bigint"
+)
+
+
+def patch_stats(media: DataFrame) -> DataFrame:
+    """mapInPandas per-channel patch statistics over binary payloads:
+    for every (doc, channel), the patch count, overall byte mean, max
+    patch mean, and a 4-bucket histogram of patch means ([0,64) dark,
+    [64,128) dim, [128,192) mid, [192,256) bright — integer counts, so
+    the histogram hashes exactly cross-engine). The analytic an image
+    curation pass runs to drop clipped or dead images.
+
+    Vectorized per Arrow batch with numpy bincounts (key = patch *
+    channels + channel) — no per-byte Python. The payload column is
+    projected away in the output, so the row blowup downstream carries
+    only the per-channel stats. At 100 TB this is one linear pass over
+    the media scan with bounded Arrow batches; the output is
+    O(docs x channels), payload-free. A NULL or empty payload emits no
+    row."""
+    import numpy as np
+
+    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                if not payload:
+                    continue
+                a = np.frombuffer(bytes(payload), dtype=np.uint8).astype(
+                    np.float64
+                )
+                idx = np.arange(len(a))
+                ch = idx % _CHANNELS
+                key = (idx // (_PATCH * _CHANNELS)) * _CHANNELS + ch
+                cnt = np.bincount(key)
+                tot = np.bincount(key, weights=a)
+                means = tot / cnt  # every key occurs: cnt >= 1
+                buckets = np.minimum(means // 64, 3).astype(np.int64)
+                for c in range(_CHANNELS):
+                    sel = np.nonzero(
+                        (np.arange(len(cnt)) % _CHANNELS == c) & (cnt > 0)
+                    )[0]
+                    if len(sel) == 0:
+                        continue
+                    bc = np.bincount(buckets[sel], minlength=4)
+                    rows.append(
+                        (
+                            doc_id,
+                            c,
+                            int(len(sel)),
+                            round(float(tot[sel].sum() / cnt[sel].sum()), 6),
+                            round(float(means[sel].max()), 6),
+                            int(bc[0]),
+                            int(bc[1]),
+                            int(bc[2]),
+                            int(bc[3]),
+                        )
+                    )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "channel", "n_patches", "mean_byte",
+                    "max_patch_mean", "p_dark", "p_dim", "p_mid", "p_bright",
+                ],
+            )
+
+    return _map_payloads(media, stats, PATCH_STATS_SCHEMA)
+
+
 # ---------------------------------------------------------------------------
 # audio containers — same pure-bytes discipline as the image parsers
 # ---------------------------------------------------------------------------
 
+#: Output columns of audio_metadata after ``doc_id``.
 AUDIO_META_SCHEMA = (
-    "doc_id bigint, byte_len bigint, sample_rate int, channels int, "
-    "bits_per_sample int, n_samples bigint, duration_ms bigint, format string"
+    "byte_len bigint, sample_rate int, channels int, bits_per_sample int, "
+    "n_samples bigint, duration_ms bigint, format string"
 )
 
 
@@ -196,31 +277,105 @@ def audio_metadata(media: DataFrame) -> DataFrame:
     audio member of the decode family (images: decode_metadata). Bad
     payloads yield nulled metadata rows with format='error' rather than
     failing the batch (quarantine-not-crash, like the pipeline's
-    corrupt-NDJSON handling)."""
+    corrupt-NDJSON handling); a NULL payload gets NULL cells."""
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
+            meta = []
+            for p in pdf["payload"]:
                 try:
-                    rate, ch, bits, n, ms, fmt = _parse_wav_header(b)
-                    out.append((doc_id, len(b), rate, ch, bits, n, ms, fmt))
-                except ValueError:
-                    out.append(
-                        (doc_id, len(b), None, None, None, None, None, "error")
+                    meta.append(
+                        (None,) * 6 if p is None else _parse_wav_header(bytes(p))
                     )
+                except ValueError:
+                    meta.append((None,) * 5 + ("error",))
+            n = pdf["payload"].map(len, na_action="ignore")
             yield pd.DataFrame(
-                out,
+                {
+                    "doc_id": pdf["doc_id"],
+                    "byte_len": n.astype("Int64"),
+                    "sample_rate": pd.Series([m[0] for m in meta], dtype="Int32"),
+                    "channels": pd.Series([m[1] for m in meta], dtype="Int32"),
+                    "bits_per_sample": pd.Series([m[2] for m in meta], dtype="Int32"),
+                    "n_samples": pd.Series([m[3] for m in meta], dtype="Int64"),
+                    "duration_ms": pd.Series([m[4] for m in meta], dtype="Int64"),
+                    "format": [m[5] for m in meta],
+                }
+            )
+
+    return _map_payloads(media, decode, AUDIO_META_SCHEMA)
+
+
+#: samples per energy frame (128 payload bytes: little-endian signed
+#: 16-bit PCM, make_wav_payload's sample format)
+_FRAME_SAMPLES = 64
+
+#: integer energy thresholds (sum of squared int16 samples per frame;
+#: exact comparisons, no floats anywhere in frame_energy's output)
+_SILENT_BELOW = 25_000_000_000
+_LOUD_AT_LEAST = 50_000_000_000
+
+#: Output columns of frame_energy after ``doc_id``.
+FRAME_ENERGY_SCHEMA = (
+    "n_frames bigint, total_energy bigint, max_frame_energy bigint, "
+    "n_silent bigint, n_loud bigint"
+)
+
+
+def frame_energy(media: DataFrame) -> DataFrame:
+    """mapInPandas per-document frame-energy profile over binary
+    payloads interpreted as little-endian signed 16-bit PCM — the audio
+    sibling of patch_stats, mirroring the curation pass that drops
+    silent / clipped clips from a speech corpus: frame the sample
+    stream into fixed windows and aggregate each frame's energy
+    (sum of squared samples — EXACT integers end to end: a frame's
+    energy is <= 64 * 32768^2 ~ 6.9e10 and a document's total stays
+    far under 2^53, so numpy's float64 bincount accumulates exactly
+    and the output hashes bitwise cross-engine).
+
+    Vectorized per Arrow batch (frombuffer + bincount; no per-sample
+    Python). A trailing odd byte is dropped (no complete sample); a
+    trailing partial frame is kept; a NULL payload, or one too short
+    for a sample, emits no row. Output is O(docs), payload-free — at
+    100 TB one linear scan with bounded Arrow batches, no shuffle until
+    the (already tiny) result."""
+    import numpy as np
+
+    def energies(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                n2 = 0 if payload is None else (len(payload) // 2) * 2
+                if n2 == 0:
+                    continue
+                a = np.frombuffer(bytes(payload), dtype=np.uint8)
+                s = (
+                    a[0:n2:2].astype(np.int64)
+                    + 256 * a[1:n2:2].astype(np.int64)
+                )
+                s = np.where(s >= 32768, s - 65536, s)
+                fk = np.arange(len(s)) // _FRAME_SAMPLES
+                e = np.bincount(fk, weights=(s * s).astype(np.float64))
+                e = e.astype(np.int64)  # exact: each frame < 2^37
+                rows.append(
+                    (
+                        doc_id,
+                        int(len(e)),
+                        int(e.sum()),
+                        int(e.max()),
+                        int((e < _SILENT_BELOW).sum()),
+                        int((e >= _LOUD_AT_LEAST).sum()),
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
                 columns=[
-                    "doc_id", "byte_len", "sample_rate", "channels",
-                    "bits_per_sample", "n_samples", "duration_ms", "format",
+                    "doc_id", "n_frames", "total_energy",
+                    "max_frame_energy", "n_silent", "n_loud",
                 ],
             )
 
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, AUDIO_META_SCHEMA
-    )
+    return _map_payloads(media, energies, FRAME_ENERGY_SCHEMA)
 
 
 def make_wav_payload(

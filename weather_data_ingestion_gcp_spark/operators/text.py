@@ -28,13 +28,36 @@ STOPWORDS = {
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def _norm_ws(text: Column) -> Column:
-    """Lowercased text with every whitespace run collapsed to one space
-    and ends trimmed — the token sequence of ``split(lower, '\\s+')``
-    minus empties, as ONE canonical string. regexp_replace runs before
-    trim because Spark's trim strips ASCII spaces only ('\\t' at the
-    ends would otherwise survive as a leading/trailing empty token)."""
-    return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
+#: Winnowing geometry: char ``WINNOW_K``-grams, ``WINNOW_W``-wide windows
+#: of gram hashes (any shared substring of >= K + W - 1 chars yields a
+#: common fingerprint). Read by winnow_fingerprints and its DuckDB oracle.
+WINNOW_K = 8
+WINNOW_W = 4
+
+#: inverted_index keeps terms in at least ``INDEX_MIN_DF`` documents and
+#: the ``INDEX_MAX_POSTINGS`` lowest doc ids of each posting list.
+INDEX_MIN_DF = 2
+INDEX_MAX_POSTINGS = 10
+
+#: bm25_topk's term-frequency saturation and length normalization.
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def _collapse_ws(text: Column) -> Column:
+    """Every whitespace run collapsed to one space and ends trimmed — the
+    one whitespace folding of the text operators. regexp_replace runs
+    before trim because Spark's trim strips ASCII spaces only (a tab at
+    the ends would otherwise survive as a leading/trailing empty token).
+    Java's ``\\s`` is ``[ \\t\\n\\x0B\\f\\r]`` (DuckDB's RE2 lacks
+    ``\\x0B``); U+00A0 is in neither."""
+    return F.trim(F.regexp_replace(text, r"\s+", " "))
+
+
+def norm_ws(text: Column) -> Column:
+    """Lowercased text with whitespace folded (:func:`_collapse_ws`): the
+    token sequence of :func:`words` as ONE canonical string."""
+    return _collapse_ws(F.lower(text))
 
 
 def words(text: Column) -> Column:
@@ -52,8 +75,13 @@ def words(text: Column) -> Column:
     split/array_remove form compiles into whole-stage codegen like any
     builtin and is immune. Byte-identical output (pinned by tests and
     the DuckDB oracles): empties arise only from leading/trailing
-    whitespace, which the trim in _norm_ws removes; NULL stays NULL."""
-    return F.array_remove(F.split(_norm_ws(text), " "), "")
+    whitespace, which the trim in norm_ws removes; NULL stays NULL."""
+    return _split_norm(norm_ws(text))
+
+
+def _split_norm(norm: Column) -> Column:
+    """The tokens of a :func:`norm_ws` string."""
+    return F.array_remove(F.split(norm, " "), "")
 
 
 def ngram_array(text: Column, n: int) -> Column:
@@ -76,7 +104,7 @@ def ngram_array(text: Column, n: int) -> Column:
         return words(text)
     pat = r"(?=((?:\S+ ){%d}\S+))\S+" % (n - 1)
     return F.coalesce(
-        F.regexp_extract_all(_norm_ws(text), F.lit(pat), 1),
+        F.regexp_extract_all(norm_ws(text), F.lit(pat), 1),
         F.expr("CAST(array() AS array<string>)"),
     )
 
@@ -91,8 +119,15 @@ def stopword_hits(text: Column, lang: str = "en") -> Column:
     the interpreted-HOF pathology described in :func:`words`. NULL
     text propagates to NULL through concat/regexp_count exactly as it
     did through size(filter(NULL)) under ANSI semantics."""
+    return _stopword_count(norm_ws(text), lang)
+
+
+def _stopword_count(norm: Column, lang: str) -> Column:
+    """Stopword tokens of ``lang`` in a :func:`norm_ws` string: one
+    regexp_count of space-bounded alternatives over the space-padded
+    string."""
     pat = "(?<= )(?:" + _stopword_alternation(lang) + ")(?= )"
-    padded = F.concat(F.lit(" "), _norm_ws(text), F.lit(" "))
+    padded = F.concat(F.lit(" "), norm, F.lit(" "))
     return F.regexp_count(padded, F.lit(pat)).cast("int")
 
 
@@ -137,21 +172,14 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     n_chars = F.length(text)
     # materialized normalized-string projection: the features below
     # derive the token array AND the stopword count from it (~6
-    # references), and an un-aliased _norm_ws(text) would re-run the
+    # references), and an un-aliased norm_ws(text) would re-run the
     # regex normalization per reference (see operators.dedup.shingles)
-    df = df.select("*", _norm_ws(text).alias("_norm"))
+    df = df.select("*", norm_ws(text).alias("_norm"))
     norm = F.col("_norm")
-    toks = F.array_remove(F.split(norm, " "), "")
-    n_words = F.size(toks)
+    n_words = F.size(_split_norm(norm))
     avg_word_len = (n_chars - (n_words - 1)) / F.greatest(n_words, F.lit(1))
     n_punct = F.length(text) - F.length(F.regexp_replace(text, r"[.,;:!?]", ""))
-    # space-bounded stopword count on the padded normalized string — the
-    # codegen form of size(filter(toks, w -> contains)); see stopword_hits
-    sw_pat = "(?<= )(?:" + _stopword_alternation("en") + ")(?= )"
-    sw_hits = F.regexp_count(
-        F.concat(F.lit(" "), norm, F.lit(" ")), F.lit(sw_pat)
-    ).cast("int")
-    sw_ratio = sw_hits / F.greatest(n_words, F.lit(1))
+    sw_ratio = _stopword_count(norm, "en") / F.greatest(n_words, F.lit(1))
     score = (
         F.least(n_words / F.lit(200.0), F.lit(1.0)) * 0.4
         + F.least(sw_ratio * 5, F.lit(1.0)) * 0.4
@@ -247,31 +275,25 @@ def tfidf_top_terms(
 def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Normalization-stable document fingerprint: md5 of lower(collapse-ws)
     + a 16-hex-char prefix usable as a 64-bit shard/bucket key."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    fp = F.md5(norm)
+    fp = F.md5(norm_ws(F.col(text_col)))
     return df.select("*", fp.alias("fp"), F.substring(fp, 1, 16).alias("fp64"))
 
 
 def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    w: int = 4,
-    output: str = "summary",
-    cache: bool = False,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    SIGMOD'03 — the MOSS algorithm): hash every char k-gram, slide a
-    w-wide window over the hash sequence, keep each window's minimum.
-    Guarantees any shared substring of length >= k + w - 1 contributes at
-    least one common fingerprint — the position-robust complement of the
-    whole-document fingerprint (`fingerprint`) and set-based MinHash.
+    SIGMOD'03 — the MOSS algorithm): hash every char ``WINNOW_K``-gram
+    of the :func:`norm_ws` text, slide a ``WINNOW_W``-wide window over
+    the hash sequence, keep each window's minimum. Guarantees any shared
+    substring of length >= K + W - 1 contributes at least one common
+    fingerprint — the position-robust complement of the whole-document
+    fingerprint (`fingerprint`) and set-based MinHash.
 
     Formulation: MAP-ONLY. A document's fingerprints depend on nothing but
     its own text, so the whole operator is one Arrow-batched pandas UDF:
-    texts cross to Python once per batch, each doc's gram hashes and
-    w-window minima are computed in numpy, and only the per-doc
+    normalized texts cross to Python once per batch, each doc's gram
+    hashes and window minima are computed in numpy, and only the per-doc
     fingerprint arrays come back. No explode, no shuffle, no window sort —
     work is bounded by text bytes scanned per partition, embarrassingly
     parallel at any corpus size.
@@ -279,45 +301,43 @@ def winnow_fingerprints(
     Gram hash: winnowing needs any consistent hash (SIGMOD'03 §2), not a
     cryptographic one. A per-gram ``hashlib.md5`` loop ran at Python rate
     (~1 call per text byte — 12 s at sf0.1, the suite's slowest query by
-    2x); instead each k-gram's base-128 value (injective for ASCII,
-    < 2^56) is computed by a vectorized Horner pass over the byte array
-    and scrambled by an odd golden-ratio multiplier mod 2^63 — a
-    bijection, so gram distinctness is preserved and the window minima
-    are uniformly distributed. The DuckDB oracle states the identical
-    arithmetic (HUGEINT multiply, same modulus). Non-ASCII input still
-    hashes deterministically (codepoint path, numpy uint64 wraparound)
-    but cross-engine parity is only pinned for ASCII — which the
-    whitespace-normalized driver corpus is. Short docs (< k+w-1 chars)
-    yield an empty fingerprint set, matching the windowed definition.
-    Output: (id, n_fp, min_fp, max_fp) summary, or (id, fp) rows with
-    ``output="fps"``."""
+    2x); instead each gram's base-128 codepoint value is computed by a
+    vectorized Horner pass over the codepoint array and scrambled by an
+    odd golden-ratio multiplier mod 2^63 — a bijection, so gram
+    distinctness is preserved and the window minima are uniformly
+    distributed. The DuckDB oracle (``oracle_sql.winnow_fps_sql``) states
+    the identical arithmetic (HUGEINT multiply, same modulus) over the
+    same normalization; parity holds while a gram's Horner value fits a
+    BIGINT, which Latin-1 text always does. Short docs (< K + W - 1
+    chars) yield an empty fingerprint set, matching the windowed
+    definition.
+
+    Returns the kept (persisted) per-document relation ``(doc_id, fps
+    array<bigint>)``: every caller in a session shares ONE UDF pass
+    through CacheManager plan matching; ``store.release()`` frees it."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
+    k, w = WINNOW_K, WINNOW_W
+
     @pandas_udf(T.ArrayType(T.LongType()))
-    def fps_pd(texts: pd.Series) -> pd.Series:
+    def fps_pd(norms: pd.Series) -> pd.Series:
         import numpy as np
 
         mult = np.uint64(11400714819323198485)  # odd -> bijective mod 2^63
         mask = np.uint64(0x7FFFFFFFFFFFFFFF)
         out = []
         with np.errstate(over="ignore"):  # uint64 wraparound is the design
-            for s in texts:
-                if s is None:
-                    out.append([])
-                    continue
-                # whitespace-normalize + lowercase (ASCII corpus: Python
-                # and Java/DuckDB \s+ -> " " + trim agree)
-                s2 = " ".join(s.lower().split())
-                ng = len(s2) - k + 1
+            for s in norms:
+                ng = 0 if s is None else len(s) - k + 1
                 if ng < w:  # no full w-wide window of grams
                     out.append([])
                     continue
-                raw = s2.encode("utf-8")
-                if len(raw) == len(s2):  # pure ASCII: zero-copy vector path
+                raw = s.encode("utf-8")
+                if len(raw) == len(s):  # pure ASCII: zero-copy vector path
                     b = np.frombuffer(raw, np.uint8).astype(np.uint64)
-                else:  # rare non-ASCII: per-codepoint fallback
-                    b = np.fromiter(map(ord, s2), np.uint64, len(s2))
+                else:  # non-ASCII: per-codepoint values
+                    b = np.fromiter(map(ord, s), np.uint64, len(s))
                 g = np.zeros(ng, dtype=np.uint64)
                 for j in range(k):  # Horner: g = ((c0*128 + c1)*128 + ...)
                     g = g * np.uint64(128) + b[j : j + ng]
@@ -335,25 +355,11 @@ def winnow_fingerprints(
     sc = df.sparkSession.sparkContext
     if df.rdd.getNumPartitions() < sc.defaultParallelism:
         df = df.repartition(sc.defaultParallelism)
-    base = df.select(F.col(id_col).alias("doc_id"), fps_pd(F.col(text_col)).alias("_fps"))
-    if cache:
-        # cache=True persists the per-doc fingerprint ARRAYS (pre-
-        # explode: one row per doc) so every winnow consumer in a
-        # session — summary entry, overlap pairs, any later caller —
-        # shares ONE UDF tokenization pass via CacheManager plan-dedup,
-        # the same pattern as the shared shingle relations; store.release()
-        # frees it. The DEFAULT is False: a one-shot corpus-scale caller must
-        # not pin a corpus-sized relation for zero reuse; multi-consumer
-        # suites opt in (r4 measured 4.1 s/invocation rebuilt vs ~1 s
-        # shared at sf0.1).
-        base = keep(base)
-    if output == "fps":  # one row per fingerprint (for joins/overlap tests)
-        return base.select("doc_id", F.explode("_fps").alias("fp"))
-    return base.select(
-        "doc_id",
-        F.size("_fps").cast("long").alias("n_fp"),
-        F.array_min("_fps").alias("min_fp"),
-        F.array_max("_fps").alias("max_fp"),
+    return keep(
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            fps_pd(norm_ws(F.col(text_col))).alias("fps"),
+        )
     )
 
 
@@ -362,8 +368,7 @@ def normalize_text(text: Column) -> Column:
     spaces, collapse runs of whitespace, trim. Character classes are kept
     to ASCII-safe sets so the identical regex means the same thing in
     Java regex (Spark) and RE2 (other engines)."""
-    t = F.regexp_replace(F.lower(text), r"[^a-z0-9\s]", " ")
-    return F.trim(F.regexp_replace(t, r"\s+", " "))
+    return _collapse_ws(F.regexp_replace(F.lower(text), r"[^a-z0-9\s]", " "))
 
 
 #: Conservative PII patterns — ASCII-only so Java regex and RE2 agree.
@@ -414,8 +419,7 @@ def strip_markup(df: DataFrame, text_col: str = "text") -> DataFrame:
     out = F.regexp_replace(raw, r"<[^>]+>", " ")
     for ent, rep in _HTML_ENTITIES:
         out = F.replace(out, F.lit(ent), F.lit(rep))
-    out = F.trim(F.regexp_replace(out, r"\s+", " "))
-    return df.withColumn("clean", out).withColumn(
+    return df.withColumn("clean", _collapse_ws(out)).withColumn(
         "n_tags",
         F.size(F.regexp_extract_all(raw, F.lit(r"<[^>]+>"), F.lit(0))).cast(
             "long"
@@ -456,66 +460,60 @@ def extract_urls(
     )
 
 
-def bigrams(text: Column, tokenized: bool = False) -> Column:
-    """Adjacent-token bigrams as an array column; no explode until the
-    caller asks for one, so the array stays columnar through
-    intermediate stages.
+def bigrams(tokens: Column) -> Column:
+    """Adjacent-token bigrams of a token array, as an array column; no
+    explode until the caller asks for one, so the array stays columnar
+    through intermediate stages. (Bigrams of text: ``ngram_array(text,
+    2)``.)
 
-    Pass ``tokenized=True`` when ``text`` is already a token array.
-    PARAMETER CONTRACT for that path (round-14, the r13 ADVICE note,
-    explicit instead of implied): every element must be a non-NULL,
-    non-empty, whitespace-free token — i.e. :func:`words` output, which
-    is what every in-repo caller passes. A token containing a space, an
+    PARAMETER CONTRACT: every element must be a non-NULL, non-empty,
+    whitespace-free token — i.e. :func:`words` output, which is what
+    every in-repo caller passes. A token containing a space, an
     empty-string token, or a NULL element would yield different grams
     than the old transform/element_at form (the array_join can no longer
     tell token boundaries apart); callers with arrays that may violate
     the contract must normalize them first.
 
     Round-13 codegen form (see :func:`words` for the interpreted-HOF
-    pathology this removes): the token-array path re-joins the tokens
-    with single spaces (tokens contain no whitespace by construction,
-    so the join IS the normalized string) and captures overlapping
-    windows with one compiled lookahead regex instead of a ``transform``
-    lambda. NULL/short inputs match the old form exactly: a NULL token
-    array propagates NULL (under ANSI size(NULL)=NULL the old when()
-    fell through to a transform over a NULL sequence -> NULL), and a
-    0/1-token array joins to a string with no window -> []."""
-    if not tokenized:
-        return ngram_array(text, 2)
+    pathology this removes): the tokens are re-joined with single spaces
+    (tokens contain no whitespace by construction, so the join IS the
+    normalized string) and overlapping windows are captured with one
+    compiled lookahead regex instead of a ``transform`` lambda. NULL/short
+    inputs match the old form exactly: a NULL token array propagates NULL
+    (under ANSI size(NULL)=NULL the old when() fell through to a
+    transform over a NULL sequence -> NULL), and a 0/1-token array joins
+    to a string with no window -> []."""
     pat = r"(?=(\S+ \S+))\S+"
-    return F.regexp_extract_all(F.array_join(text, " "), F.lit(pat), 1)
+    return F.regexp_extract_all(F.array_join(tokens, " "), F.lit(pat), 1)
 
 
 def inverted_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 2,
-    max_postings: int = 10,
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Term -> (document frequency, capped posting list) over word bigrams.
+    """Term -> (document frequency, capped posting list) over word bigrams
+    in at least ``INDEX_MIN_DF`` documents.
 
     The indexing primitive of retrieval pipelines: one explode + one
     groupBy (map-side combine collapses per-partition duplicates before
     the shuffle). Posting lists are CAPPED — sort_array + slice keeps the
-    ``max_postings`` lowest doc ids — because unbounded collect_list over
+    ``INDEX_MAX_POSTINGS`` lowest doc ids — because unbounded collect_list over
     a hot term is the classic agg-state blowup at corpus scale; a full
     index shards postings instead (term bucketing), this operator is the
     per-shard build. Bigrams (not unigrams) keep the term space
     meaningful on small vocabularies."""
     base = df.select(F.col(id_col).alias("doc_id"), words(F.col(text_col)).alias("_ws"))
     terms = base.select(
-        "doc_id", F.explode(bigrams(F.col("_ws"), tokenized=True)).alias("term")
+        "doc_id", F.explode(bigrams(F.col("_ws"))).alias("term")
     ).distinct()
     return (
         terms.groupBy("term")
         .agg(
             F.count(F.lit(1)).alias("df_count"),
-            F.slice(F.sort_array(F.collect_list("doc_id")), 1, max_postings).alias(
-                "postings"
-            ),
+            F.slice(
+                F.sort_array(F.collect_list("doc_id")), 1, INDEX_MAX_POSTINGS
+            ).alias("postings"),
         )
-        .filter(F.col("df_count") >= min_df)
+        .filter(F.col("df_count") >= INDEX_MIN_DF)
     )
 
 
@@ -525,13 +523,12 @@ def bm25_topk(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 ranked retrieval for a fixed query — the lexical baseline next
     to the ANN paths (hybrid search = this union embedding top-k).
 
     score(d) = sum_t idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b*dl/avgdl)),
+    k1 = ``BM25_K1``, b = ``BM25_B``,
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)).
 
     ONE token explode + ONE groupBy: per-doc length and each query
@@ -564,6 +561,7 @@ def bm25_topk(
         )
         .crossJoin(df.agg(F.countDistinct(id_col).alias("n_docs")))
     )
+    k1, b = BM25_K1, BM25_B
     total = None
     for i in range(len(query_terms)):
         tf_i, df_i = F.col(f"tf{i}"), F.col(f"df{i}")
@@ -637,7 +635,7 @@ def bigram_counts(df: DataFrame, text_col: str = "text", k: int = 50) -> DataFra
     CollapseProject behavior documented in operators.dedup.shingles)."""
     base = df.select(words(F.col(text_col)).alias("_ws"))
     return (
-        base.select(F.explode(bigrams(F.col("_ws"), tokenized=True)).alias("bigram"))
+        base.select(F.explode(bigrams(F.col("_ws"))).alias("bigram"))
         .groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), "bigram")

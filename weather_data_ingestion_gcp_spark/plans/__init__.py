@@ -90,6 +90,18 @@ DRIVER_WINDOW = [
     "dataset_mix_by_lang",
     "decontaminate_bloom_prefilter",
     "streaming_engagement_sink_equiv",
+    # changed-code leads: the entries whose text normalization now comes
+    # from operators/text.py — the kept winnow-fingerprint relation's
+    # anchor, then its shares follower; the fingerprint, stopword-count,
+    # word-split and simhash readers
+    "text_winnow_fingerprints",
+    "winnow_overlap_pairs",
+    "text_fingerprint",
+    "text_quality_scores",
+    "dup_inflation_by_source",
+    "dataset_card_summary",
+    "good_turing_vocab_coverage",
+    "dedup_simhash",
     # r08 embeddings scans
     "embedding_outlier_scores",
     "hard_negative_topk",
@@ -103,18 +115,9 @@ DRIVER_WINDOW = [
     "vocab_oov_rate",
     "bloom_membership_check",
     # r08 events scans
-    "date_filter_single_day",
-    "distinct_exact",
     "error_capture_routing",
     "filter_dispatch",
     "grouping_rollup",
-    # r08 scalar/dimension scans
-    "base64_roundtrip",
-    "broadcast_route_lookup",
-    "join_anti",
-    "join_semi",
-    "log_path_and_format",
-    "path_stem_extract",
     # r08 multimodal plumbing + the NEW r13 analytic over the same
     # binary payloads (adjacent: same documents/multimodal scan)
     "multimodal_frame_offsets",

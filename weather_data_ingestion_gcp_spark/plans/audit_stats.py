@@ -21,7 +21,7 @@ from ..operators import sketch, text
 from ..operators.layout import spread_small
 from ..operators.sampling import hash_bucket, hex_int
 from ..operators.text import words as text_words
-from .oracle_sql import hash_bucket_sql, hex_sql, words_sql
+from .oracle_sql import fingerprint_sql, hash_bucket_sql, hex_sql, words_sql
 from .registry import _cents, _nano_ln, load_table, register
 
 
@@ -1001,7 +1001,7 @@ def conversion_wilson_by_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=rf"""
     WITH t AS (
         SELECT doc_id, lang, source,
-               md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
+               {fingerprint_sql} AS fp,
                len({words_sql}) AS n_words
         FROM documents
     )
@@ -1028,9 +1028,7 @@ def dataset_card_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         "source",
-        F.md5(F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))).alias(
-            "fp"
-        ),
+        F.md5(text.norm_ws(F.col("text"))).alias("fp"),
         F.size(text.words(F.col("text"))).alias("n_words"),
     )
     return t.agg(
@@ -1509,10 +1507,7 @@ def good_turing_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency-of-frequency counts — integer floor division only, so the
     result is hash-identical across engines by construction."""
     d = load_table(spark, sf_dir, "documents")
-    words = d.select(
-        "source",
-        F.explode(F.split(F.lower("text"), r"\s+")).alias("w"),
-    ).filter(F.col("w") != "")
+    words = d.select("source", F.explode(text_words(F.col("text"))).alias("w"))
     wc = words.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
     g = wc.groupBy("source").agg(
         F.sum("c").cast("long").alias("n_tokens"),

@@ -13,6 +13,8 @@ engine-specific hash functions entirely.
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -22,6 +24,7 @@ from ..operators import dedup, graph, sampling, sketch, text
 from ..operators.sampling import hash_bucket
 from .oracle_sql import (
     clusters_sql,
+    fingerprint_sql,
     hash_bucket_sql,
     minhash_bands_sql,
     minhash_pairs_sql,
@@ -488,8 +491,8 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out exactly like the LSH bucket cap, keeping the pair space
     linear in shared content, not quadratic in corpus size."""
     d = load_table(spark, sf_dir, "documents")
-    fps = text.winnow_fingerprints(
-        d, "doc_id", "text", k=8, w=4, output="fps", cache=True
+    fps = text.winnow_fingerprints(d, "doc_id", "text").select(
+        "doc_id", F.explode("fps").alias("fp")
     )
     rare = (
         fps.groupBy("fp")
@@ -593,12 +596,8 @@ def passage_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dup_inflation_by_source",
-    oracle=r"""
-    WITH fp AS (
-        SELECT source,
-               md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        FROM documents
-    )
+    oracle=f"""
+    WITH fp AS (SELECT source, {fingerprint_sql} AS fp FROM documents)
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(COUNT(DISTINCT fp) AS BIGINT) AS n_distinct,
@@ -610,12 +609,7 @@ def passage_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dup_inflation_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    fp = d.select(
-        "source",
-        F.md5(
-            F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-        ).alias("fp"),
-    )
+    fp = text.fingerprint(d, "text")
     agg = fp.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("fp").alias("n_distinct"),
@@ -887,17 +881,22 @@ def graph_triangle_counts_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # word-3-gram shingles (the minhash family's granularity — single words
 # over a small vocabulary make every pair "similar"); shingles are
 # globally ordered by ascending document frequency, and a pair with
-# Jaccard >= 0.5 MUST share an element within each side's first
-# sz - ceil(sz/2) + 1 rarest shingles, so joining ONLY on prefix
+# Jaccard >= t (t = dedup.JACCARD_FLOOR, the LSH floor these pairs are
+# the ground truth for) MUST share an element within each side's first
+# sz - ceil(t*sz) + 1 rarest shingles, so joining ONLY on prefix
 # shingles is provably complete — and because prefixes hold the RAREST
 # elements, the equi-join fans out least exactly where a naive token
 # join explodes (high-df boilerplate shingles never enter the join).
-# Prefix ranks use pure integer arithmetic ((sz+1)//2 = ceil(sz/2)), the
-# df tiebreak is (df, shingle) lexicographic, and the final Jaccard is
-# one division over exact integer counts — deterministic across engines
-# and partitionings.
+# Prefix ranks use pure integer arithmetic (t = p/q, so ceil(t*sz) =
+# (p*sz + q - 1) div q), the df tiebreak is (df, shingle) lexicographic,
+# and the final Jaccard is one division over exact integer counts —
+# deterministic across engines and partitionings.
 # ---------------------------------------------------------------------------
-_PPJ_T = 0.5  # Jaccard threshold; prefix length = sz - ceil(t*sz) + 1
+def _ppj_prefix_len(div: str) -> str:
+    """SQL prefix length sz - ceil(t*sz) + 1 at t = dedup.JACCARD_FLOOR,
+    with the engine's integer-division operator ``div``."""
+    p, q = Fraction(dedup.JACCARD_FLOOR).limit_denominator(1000).as_integer_ratio()
+    return f"sz - ({p} * sz + {q - 1}) {div} {q} + 1"
 
 
 def _ppjoin_oracle(src: str = "documents") -> str:
@@ -915,7 +914,7 @@ def _ppjoin_oracle(src: str = "documents") -> str:
     ),
     pref AS (
         SELECT doc_id, t, sz FROM ranked
-        WHERE rn <= sz - (sz + 1) // 2 + 1
+        WHERE rn <= {_ppj_prefix_len("//")}
     ),
     cand AS (
         SELECT DISTINCT a.doc_id AS id_a, a.sz AS sza,
@@ -932,7 +931,7 @@ def _ppjoin_oracle(src: str = "documents") -> str:
     SELECT id_a, id_b,
            ROUND(n_ov * 1.0 / (sza + szb - n_ov), 6) AS jaccard
     FROM ov
-    WHERE n_ov * 1.0 / (sza + szb - n_ov) >= {_PPJ_T}
+    WHERE n_ov * 1.0 / (sza + szb - n_ov) >= {dedup.JACCARD_FLOOR}
     ORDER BY id_a, id_b
     """
 
@@ -957,7 +956,7 @@ def ppjoin_pairs_frame(d: DataFrame) -> DataFrame:
         )
         .withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy("doc_id")))
     )
-    pref = ranked.filter(F.col("rn") <= F.expr("sz - (sz + 1) div 2 + 1")).select(
+    pref = ranked.filter(F.col("rn") <= F.expr(_ppj_prefix_len("div"))).select(
         "doc_id", "t", "sz"
     )
     a = pref.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sza"), "t")
@@ -981,7 +980,7 @@ def ppjoin_pairs_frame(d: DataFrame) -> DataFrame:
     # this exact pipeline as its ground truth and CacheManager serves it
     # from this entry instead of re-joining
     return store.keep(
-        ov.filter(jac >= _PPJ_T).select(
+        ov.filter(jac >= dedup.JACCARD_FLOOR).select(
             "id_a", "id_b", F.round(jac, 6).alias("jaccard")
         )
     )
@@ -2154,7 +2153,7 @@ def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("start_b") + F.col("token_len") - 1).alias("e"),
     )
     toks = (
-        d.select("doc_id", dedup._words(F.col("text")).alias("_ws"))
+        d.select("doc_id", text.words(F.col("text")).alias("_ws"))
         .select("doc_id", F.posexplode("_ws").alias("_p", "w"))
         .select("doc_id", (F.col("_p") + 1).cast("long").alias("p"), "w")
     )

@@ -20,8 +20,24 @@ from ..operators.dedup import JACCARD_FLOOR, NUM_HASHES, ROWS_PER_BAND
 from .registry import _SAMPLE_PCT, _SAMPLE_TARGET_DOCS
 
 #: lowercase whitespace split with empty tokens dropped — mirrors
-#: operators.text.words / operators.dedup._words
+#: operators.text.words
 words_sql = r"list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')"
+
+
+def collapse_ws_sql(expr: str) -> str:
+    """``expr`` with every whitespace run folded to one space and ends
+    trimmed — mirrors operators.text._collapse_ws. The trim names its
+    one character because Spark's trim strips ASCII spaces only, where
+    DuckDB's bare trim also strips U+00A0 and other Unicode spaces."""
+    return rf"trim(regexp_replace({expr}, '\s+', ' ', 'g'), ' ')"
+
+
+#: lowercased, whitespace-folded text — mirrors operators.text.norm_ws
+norm_ws_sql = collapse_ws_sql("lower(text)")
+
+#: whole-document md5 of the normalized text — mirrors
+#: operators.text.fingerprint
+fingerprint_sql = f"md5({norm_ws_sql})"
 
 #: one row per (doc_id, token) occurrence
 tokens_sql = f"SELECT doc_id, unnest({words_sql}) AS token FROM documents"
@@ -209,29 +225,28 @@ simhash16_sql = f"""
              AS simhash
     FROM bits GROUP BY doc_id"""
 
+
+def _winnow_gram_sql() -> str:
+    """Base-128 Horner value of the ``WINNOW_K`` codepoints at ``i``."""
+    g = "CAST(ord(substr(t, i, 1)) AS BIGINT)"
+    for j in range(1, text.WINNOW_K):
+        g = f"({g} * 128 + ord(substr(t, i + {j}, 1)))"
+    return g
+
+
 #: CTEs ``norm``, ``g``, ``fp``: per-doc winnowing fingerprint SETS
-#: (doc_id, fps list). Mirrors operators.text.winnow_fingerprints (k=8
-#: char-grams, w=4 windows, base-128 Horner gram value scrambled by the
-#: odd golden-ratio multiplier mod 2^63 — the identical arithmetic the
-#: pandas UDF runs).
-winnow_fps_sql = r"""norm AS (
-        SELECT doc_id,
-               trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-        FROM documents
+#: (doc_id, fps list). Mirrors operators.text.winnow_fingerprints: the
+#: ``text.WINNOW_K`` char-grams of the norm_ws text, ``text.WINNOW_W``
+#: windows, base-128 Horner gram value scrambled by the odd golden-ratio
+#: multiplier mod 2^63 — the identical arithmetic the pandas UDF runs.
+winnow_fps_sql = f"""norm AS (
+        SELECT doc_id, {norm_ws_sql} AS t FROM documents
     ),
     g AS (
         SELECT doc_id,
-               CASE WHEN len(t) >= 8
-                    THEN list_transform(generate_series(1, len(t) - 7),
-                         i -> CAST((CAST(
-                                (((((((CAST(ord(substr(t, i, 1)) AS BIGINT) * 128
-                                     + ord(substr(t, i + 1, 1))) * 128
-                                     + ord(substr(t, i + 2, 1))) * 128
-                                     + ord(substr(t, i + 3, 1))) * 128
-                                     + ord(substr(t, i + 4, 1))) * 128
-                                     + ord(substr(t, i + 5, 1))) * 128
-                                     + ord(substr(t, i + 6, 1))) * 128
-                                     + ord(substr(t, i + 7, 1)))
+               CASE WHEN len(t) >= {text.WINNOW_K}
+                    THEN list_transform(generate_series(1, len(t) - {text.WINNOW_K - 1}),
+                         i -> CAST((CAST({_winnow_gram_sql()}
                               AS HUGEINT) * 11400714819323198485)
                               % 9223372036854775808 AS BIGINT))
                     ELSE [] END AS hs
@@ -240,9 +255,9 @@ winnow_fps_sql = r"""norm AS (
     fp AS (
         SELECT doc_id,
                list_distinct(
-                   CASE WHEN len(hs) >= 4
-                        THEN list_transform(generate_series(1, len(hs) - 3),
-                                            j -> list_min(list_slice(hs, j, j + 3)))
+                   CASE WHEN len(hs) >= {text.WINNOW_W}
+                        THEN list_transform(generate_series(1, len(hs) - {text.WINNOW_W - 1}),
+                                            j -> list_min(list_slice(hs, j, j + {text.WINNOW_W - 1})))
                         ELSE [] END) AS fps
         FROM g
     )"""

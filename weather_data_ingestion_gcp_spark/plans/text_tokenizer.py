@@ -20,6 +20,8 @@ from .. import store
 from ..operators import sketch, text
 from ..operators.text import words as text_words
 from .oracle_sql import (
+    collapse_ws_sql,
+    fingerprint_sql,
     shingles_sql,
     stoplist_sql,
     tokens_sql,
@@ -118,10 +120,10 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprint",
-    oracle=r"""
+    oracle=f"""
     SELECT doc_id,
-           md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
-           substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 16) AS fp64
+           {fingerprint_sql} AS fp,
+           substr({fingerprint_sql}, 1, 16) AS fp64
     FROM documents ORDER BY doc_id
     """,
 )
@@ -162,9 +164,9 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH bg AS (SELECT doc_id, shingle AS term FROM ({shingles_sql(2)}))
     SELECT term, CAST(COUNT(*) AS BIGINT) AS df_count,
-           array_to_string(list_slice(list(doc_id ORDER BY doc_id), 1, 10), '|')
-               AS postings
-    FROM bg GROUP BY term HAVING COUNT(*) >= 2 ORDER BY term
+           array_to_string(list_slice(list(doc_id ORDER BY doc_id), 1,
+                                      {text.INDEX_MAX_POSTINGS}), '|') AS postings
+    FROM bg GROUP BY term HAVING COUNT(*) >= {text.INDEX_MIN_DF} ORDER BY term
     """,
 )
 def inverted_index_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,7 +177,7 @@ def inverted_index_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     Postings are emitted '|'-joined (scalar column) for the driver
     canonicalizer; the library operator keeps the true array type."""
     d = load_table(spark, sf_dir, "documents")
-    idx = text.inverted_index(d, "doc_id", "text", min_df=2, max_postings=10)
+    idx = text.inverted_index(d, "doc_id", "text")
     return idx.select(
         "term",
         "df_count",
@@ -207,8 +209,8 @@ _BM25_TERMS = ["spark", "merge", "window"]
     s AS (
         SELECT q.doc_id, q.term,
                ln(1 + (st.n_docs - dfc.df + 0.5) / (dfc.df + 0.5))
-               * (q.tf * (1.2 + 1))
-               / (q.tf + 1.2 * (1 - 0.75 + 0.75 * dl.dl / st.avgdl)) AS s
+               * (q.tf * ({text.BM25_K1} + 1))
+               / (q.tf + {text.BM25_K1} * (1 - {text.BM25_B} + {text.BM25_B} * dl.dl / st.avgdl)) AS s
         FROM q JOIN dfc USING (term) JOIN dl USING (doc_id) CROSS JOIN st
     ),
     p AS (
@@ -237,7 +239,7 @@ def bm25_lexical_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.bm25_topk(d, _BM25_TERMS, "doc_id", "text", k=20).orderBy("rk")
 
 
-# shares: the persisted fingerprint-array relation (4.1 s rebuilt vs ~1 s shared)
+# shares: the kept fingerprint-array relation (4.1 s rebuilt vs ~1 s shared)
 @register(
     "text_winnow_fingerprints", shares=("winnow_fingerprints",),
     oracle=f"""
@@ -249,14 +251,19 @@ def bm25_lexical_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (operators.text.winnow_fingerprints): char
-    8-gram rolling hashes (base-128 Horner value x golden-ratio odd
-    multiplier mod 2^63 — a bijection, so gram identity is preserved),
-    4-wide window minima, distinct per doc — any shared substring of
-    length >= 11 chars yields a common fingerprint. One Arrow-batched
-    vectorized pass; no explode, no shuffle until the final orderBy."""
+    ``WINNOW_K``-gram rolling hashes (base-128 Horner value x golden-ratio
+    odd multiplier mod 2^63 — a bijection, so gram identity is
+    preserved), ``WINNOW_W``-wide window minima, distinct per doc,
+    summarized per doc from the kept fingerprint arrays. One
+    Arrow-batched vectorized pass; no explode, no shuffle until the
+    final orderBy."""
     d = load_table(spark, sf_dir, "documents")
-    return text.winnow_fingerprints(
-        d, "doc_id", "text", k=8, w=4, cache=True
+    fps = F.col("fps")
+    return text.winnow_fingerprints(d, "doc_id", "text").select(
+        "doc_id",
+        F.size(fps).cast("long").alias("n_fp"),
+        F.array_min(fps).alias("min_fp"),
+        F.array_max(fps).alias("max_fp"),
     ).orderBy("doc_id")
 
 
@@ -481,15 +488,18 @@ def boilerplate_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Canonical text normalization — lowercase, strip punctuation, collapse
 # whitespace. Map-only stage, whole-stage codegen end to end.
 # ---------------------------------------------------------------------------
+#: lowercased text with every non-alphanumeric ASCII char spaced out
+_ALNUM_SPACED_SQL = r"regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g')"
+
+
 @register(
     "text_normalize_clean",
-    oracle=r"""
+    oracle=f"""
     SELECT doc_id,
            substring(norm, 1, 40)     AS prefix40,
            CAST(length(norm) AS BIGINT) AS n_clean_chars
     FROM (SELECT doc_id,
-                 trim(regexp_replace(regexp_replace(lower(text),
-                      '[^a-z0-9\s]', ' ', 'g'), '\s+', ' ', 'g')) AS norm
+                 {collapse_ws_sql(_ALNUM_SPACED_SQL)} AS norm
           FROM documents)
     ORDER BY doc_id
     """,
@@ -627,7 +637,7 @@ def quality_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bc = (
         toks.select(
-            "doc_id", F.explode(text.bigrams(F.col("_ws"), tokenized=True)).alias("g")
+            "doc_id", F.explode(text.bigrams(F.col("_ws"))).alias("g")
         )
         .groupBy("doc_id", "g")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -750,9 +760,16 @@ def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # entry: the synthetic corpus has no HTML, so the query manufactures a
 # verifiable fixture from doc_id) -> strip -> measure. Map-only chain.
 # ---------------------------------------------------------------------------
+#: tags spaced out, then operators.text._HTML_ENTITIES decoded in order
+_UNMARKED_SQL = """replace(replace(replace(replace(replace(replace(
+                       regexp_replace(text, '<[^>]+>', ' ', 'g'),
+                       '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),
+                       '&quot;', '"'), '&#39;', ''''), '&amp;', '&')"""
+
+
 @register(
     "html_strip_markup",
-    oracle=r"""
+    oracle=f"""
     WITH injected AS (
         SELECT doc_id,
                CASE WHEN doc_id % 3 = 0 THEN
@@ -763,12 +780,7 @@ def text_entropy_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     stripped AS (
         SELECT doc_id,
-               trim(regexp_replace(
-                   replace(replace(replace(replace(replace(replace(
-                       regexp_replace(text, '<[^>]+>', ' ', 'g'),
-                       '&nbsp;', ' '), '&lt;', '<'), '&gt;', '>'),
-                       '&quot;', '"'), '&#39;', ''''), '&amp;', '&'),
-                   '\s+', ' ', 'g')) AS clean,
+               {collapse_ws_sql(_UNMARKED_SQL)} AS clean,
                len(regexp_extract_all(text, '<[^>]+>')) AS n_tags
         FROM injected
     )
