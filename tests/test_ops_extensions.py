@@ -45,21 +45,20 @@ def test_minhash_finds_near_dups(spark, docs):
     assert pairs[(3, 4)] == pytest.approx(6 / 7)
     # dog vs cat: word sets share 7 of 9 (exact verify of the pair itself)
     cand = spark.createDataFrame([(0, 1)], "id_a bigint, id_b bigint")
-    sh = dedup.shingles(docs, "doc_id", "text")
-    (r,) = dedup.verify_jaccard(cand, sh).collect()
+    sets = dedup.shingle_sets(docs, "doc_id", "text")
+    (r,) = dedup.verify_jaccard(cand, sets).collect()
     assert (r.id_a, r.id_b) == (0, 1) and r.jaccard == pytest.approx(7 / 9)
 
 
 def test_verify_candidate_prune_is_not_forced_broadcast(spark, docs):
-    """Round-8 advisor finding: the candidate-id prune inside
-    verify_jaccard must NOT carry a forced broadcast hint — the set is
-    O(docs in multi-member buckets), unbounded at the 100 TB design
-    point, and a hint bypasses autoBroadcastJoinThreshold straight into
-    the 8 GB BroadcastExchange ceiling. Behavioral pin: with broadcast
-    joins disallowed outright, the prune must PLAN (shuffled semi-join
-    fallback) and still produce the exact same verified pairs. A forced
-    F.broadcast would make the hint win over the threshold and keep a
-    BroadcastExchange in the plan."""
+    """Round-8 advisor finding: the verify's joins must NOT carry a
+    forced broadcast hint — the shingle-set side is corpus-sized,
+    unbounded at the 100 TB design point, and a hint bypasses
+    autoBroadcastJoinThreshold straight into the 8 GB BroadcastExchange
+    ceiling. Behavioral pin: with broadcast joins disallowed outright,
+    the verify must PLAN (shuffled joins) and still produce the exact
+    same verified pairs. A forced F.broadcast would make the hint win
+    over the threshold and keep a BroadcastExchange in the plan."""
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
     prev_aqe = spark.conf.get(
         "spark.sql.adaptive.autoBroadcastJoinThreshold", None
@@ -67,10 +66,9 @@ def test_verify_candidate_prune_is_not_forced_broadcast(spark, docs):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try:
-        sh = dedup.shingles(docs, "doc_id", "text", n=1)
+        sets = dedup.shingle_sets(docs, "doc_id", "text", n=1)
         pairs = spark.createDataFrame([(0, 2)], "id_a bigint, id_b bigint")
-        cands = spark.createDataFrame([(0,), (2,)], "doc_id bigint")
-        out = dedup.verify_jaccard(pairs, sh, candidate_ids=cands)
+        out = dedup.verify_jaccard(pairs, sets)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan
         got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
@@ -84,6 +82,54 @@ def test_verify_candidate_prune_is_not_forced_broadcast(spark, docs):
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, val)
+
+
+def test_verify_jaccard_survives_empty_and_null_shingle_sets(spark):
+    """NULL text and texts shorter than the shingle width have empty
+    sets; a candidate pairing two of them has no defined Jaccard. The
+    verify at n=3, and the dedup_sorted_neighborhood shape (SNM
+    candidates, bigram sets, threshold 0.05), return only the real
+    near-dup pair and raise nothing. A verify that divides before
+    dropping empty intersections raises DIVIDE_BY_ZERO on this input
+    under ANSI."""
+    from pyspark.errors import ArithmeticException
+
+    from weather_data_ingestion_gcp_spark.plans.dedup_graph import snm_candidates
+
+    docs = spark.createDataFrame(
+        [
+            (0, "en", None),
+            (1, "en", "tiny text"),
+            (2, "en", "x"),
+            (3, "en", "the quick brown fox jumps over the lazy dog"),
+            (4, "en", "the quick brown fox jumps over the lazy cat"),
+        ],
+        "doc_id bigint, lang string, text string",
+    )
+    ids = [r.doc_id for r in docs.collect()]
+    pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a bigint, id_b bigint"
+    )
+    tri = dedup.shingle_sets(docs, "doc_id", "text", n=3)
+    got = {(r.id_a, r.id_b): r.jaccard for r in dedup.verify_jaccard(pairs, tri).collect()}
+    assert got == {(3, 4): pytest.approx(6 / 8)}
+
+    cand = snm_candidates(docs)
+    bi = dedup.shingle_sets(docs, "doc_id", "text", n=2)
+    snm = dedup.verify_jaccard(cand, bi).filter(F.col("jaccard") >= 0.05)
+    got = {(r.id_a, r.id_b): r.jaccard for r in snm.collect()}
+    assert got == {(3, 4): pytest.approx(7 / 9)}
+
+    naive = (
+        pairs.join(tri.toDF("id_a", "s_a"), "id_a")
+        .join(tri.toDF("id_b", "s_b"), "id_b")
+        .select(
+            F.size(F.array_intersect("s_a", "s_b"))
+            / F.size(F.array_union("s_a", "s_b"))
+        )
+    )
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        naive.collect()
 
 
 def test_shingles_bigram(spark):
@@ -809,6 +855,32 @@ def test_winnow_matches_duckdb_oracle_on_nbsp(spark):
     assert all(got[i] for i in (1, 2, 4))
 
 
+def test_winnow_matches_duckdb_oracle_on_cjk(spark):
+    """Gram values of codepoints above ~U+4000 exceed 63 bits: the UDF's
+    uint64 Horner wraps, and the oracle keeps the same residue mod 2^63
+    in HUGEINT, so both engines fingerprint CJK text alike."""
+    import duckdb
+
+    from weather_data_ingestion_gcp_spark.plans.oracle_sql import winnow_fps_sql
+
+    rows = [
+        (1, "日本語の文章を使ったテストです"),
+        (2, "中文文本 混合 latin 龍龘龍龘龍龘龍龘"),
+        (3, "😀😁😂😃😄😅😆😇😈😉😊"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {r.doc_id: sorted(r.fps) for r in text.winnow_fingerprints(df).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = {
+        i: sorted(fps)
+        for i, fps in con.execute(f"WITH {winnow_fps_sql} SELECT doc_id, fps FROM fp").fetchall()
+    }
+    assert got == want
+    assert all(got[i] for i in (1, 2, 3))
+
+
 def test_resize_payloads_truncates_and_pads(spark):
     rows = [(1, b"x" * 10), (2, b"y" * 5000)]
     df = spark.createDataFrame(rows, "doc_id bigint, payload binary")
@@ -976,24 +1048,32 @@ def _zipf_corpus(n_docs=240, vocab=3000, seed=11):
 
 
 def test_verify_matches_minhash_near_duplicates_on_zipf_corpus(spark):
-    """verify_jaccard over the LSH candidates of a realistic-vocabulary
-    corpus (most shingles document-unique — a 31-word-vocabulary corpus
-    keeps ~every shingle and proves little) agrees at the threshold with
-    the full minhash_near_duplicates pipeline, whose verify joins are
-    pruned to the candidate-id set."""
-    d = spark.createDataFrame(_zipf_corpus(), "doc_id bigint, text string")
+    """The full minhash_near_duplicates pipeline over a
+    realistic-vocabulary corpus (most shingles document-unique — a
+    31-word-vocabulary corpus keeps ~every shingle and proves little)
+    equals a pure-Python set Jaccard over its own LSH candidates, kept
+    at the threshold."""
+    corpus = _zipf_corpus()
+    d = spark.createDataFrame(corpus, "doc_id bigint, text string")
     sh = dedup.shingles(d, "doc_id", "text", n=3)
     wide = dedup.minhash_wide_signatures(sh)
-    sizes = wide.select("doc_id", F.col("_n_sh").alias("n"))
-    pairs = dedup.lsh_candidate_pairs(dedup.lsh_band_keys(wide))
-    rows = lambda df: sorted(
-        (r.id_a, r.id_b, round(r.jaccard, 9)) for r in df.collect()
-    )
-    plain = rows(dedup.verify_jaccard(pairs, sh, sizes=sizes))
-    assert plain  # the fixture's near-copies produce real candidates
+    pairs = dedup.lsh_candidate_pairs(dedup.lsh_band_keys(wide)).collect()
+    assert pairs  # the fixture's near-copies produce real candidates
+    sets = {}
+    for i, t in corpus:
+        w = t.lower().split(" ")
+        sets[i] = {" ".join(w[j : j + 3]) for j in range(len(w) - 2)}
+    expect = []
+    for r in pairs:
+        a, b = sets[r.id_a], sets[r.id_b]
+        if a & b:
+            jac = len(a & b) / len(a | b)
+            if jac >= dedup.JACCARD_FLOOR:
+                expect.append((r.id_a, r.id_b, round(jac, 9)))
+    assert expect
     full = dedup.minhash_near_duplicates(d, "doc_id", "text", shingle_n=3)
-    expect = [t for t in plain if t[2] >= dedup.JACCARD_FLOOR]
-    assert rows(full) == expect
+    got = sorted((r.id_a, r.id_b, round(r.jaccard, 9)) for r in full.collect())
+    assert got == sorted(expect)
 
 
 def test_cross_repeated_spans_provenance(spark):
@@ -1536,10 +1616,10 @@ def test_blocked_jaccard_grouped_matches_pairs_join_form(spark):
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    sh = dedup.shingles(df, "doc_id", "text", n=2)
+    sets = dedup.shingle_sets(df, "doc_id", "text", n=2)
     want = {
         (r.id_a, r.id_b, round(r.jaccard, 9))
-        for r in dedup.verify_jaccard(pairs, sh)
+        for r in dedup.verify_jaccard(pairs, sets)
         .filter(F.col("jaccard") >= 0.05)
         .collect()
     }

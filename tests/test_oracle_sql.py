@@ -35,7 +35,7 @@ FRAGMENTS = [
     "MIN(md5(shingle",
     "JOIN sh sb ON",
     "list_dot_product(v, ",
-    r"'\s+', ' ', 'g'",
+    r"[\t\n\v\f\r ]",
 ]
 FRAGMENT_NAME = re.compile(r"^_(SQL|sql)_")
 
@@ -172,3 +172,66 @@ def test_hex_integer_matches_python_in_duckdb_and_spark(spark, start, width):
     df = spark.createDataFrame(list(enumerate(KEYS)), "i INT, k STRING")
     got = df.orderBy("i").select(hex_int(F.md5("k"), start, width).alias("h"))
     assert [r["h"] for r in got.collect()] == expected
+
+
+def _duck_documents(rows):
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    return con
+
+
+def test_vertical_tab_splits_and_folds_alike_in_both_engines(spark):
+    """Java's ``\\s`` matches U+000B and RE2's does not, so the oracle
+    spells the class out: ``words`` and ``norm_ws`` give the same tokens
+    and string on either engine for a document holding vertical tabs."""
+    from weather_data_ingestion_gcp_spark.operators import text
+    from weather_data_ingestion_gcp_spark.plans.oracle_sql import norm_ws_sql, words_sql
+
+    rows = [
+        (1, "Alpha\x0bbeta gamma"),
+        (2, "\x0b lead\x0b\x0btail \x0b"),
+        (3, "tab\there\x0c and\r\nnewline\u00a0nbsp"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {
+        r.doc_id: (list(r.ws), r.nw)
+        for r in df.select(
+            "doc_id",
+            text.words(F.col("text")).alias("ws"),
+            text.norm_ws(F.col("text")).alias("nw"),
+        ).collect()
+    }
+    con = _duck_documents(rows)
+    want = {
+        i: (ws, nw)
+        for i, ws, nw in con.execute(
+            f"SELECT doc_id, {words_sql}, {norm_ws_sql} FROM documents"
+        ).fetchall()
+    }
+    assert got == want
+    assert got[1] == (["alpha", "beta", "gamma"], "alpha beta gamma")
+
+
+def test_bpe_encode_keeps_a_trailing_nbsp_like_the_oracle(spark, tmp_path):
+    """A word that ends in U+00A0 spells to a sequence whose last symbol
+    is U+00A0; Spark's trim strips ASCII spaces only, so the oracle's
+    trims name the space and keep that symbol."""
+    import os
+
+    from weather_data_ingestion_gcp_spark.plans import ORACLE, QUERIES
+
+    text = "ab\u00a0 ab\u00a0 ab\u00a0 cd abcd ab \u00a0x"
+    rows = [(i, text, "en", "web", len(text)) for i in range(4)]
+    sf = str(tmp_path)
+    spark.createDataFrame(
+        rows, "doc_id bigint, text string, lang string, source string, n_chars bigint"
+    ).write.parquet(os.path.join(sf, "documents.parquet"))
+    got = sorted(tuple(r) for r in QUERIES["bpe_apply_encode"](spark, sf).collect())
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet/*.parquet'"
+    )
+    want = sorted(con.execute(ORACLE["bpe_apply_encode"]).fetchall())
+    assert got == want
+    assert any(enc.endswith("\u00a0") for _, _, enc, _ in got)

@@ -973,6 +973,44 @@ def test_minhash_band_keys_are_a_row_local_projection(
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) < regroup_exchanges
 
 
+@pytest.mark.parametrize(
+    "params, prune_exchanges",
+    [(dict(shingle_n=3), 6), (dict(shingle_n=1, max_bucket_size=50), 8)],
+    ids=["std", "capped"],
+)
+def test_minhash_verify_intersects_shingle_arrays(spark, params, prune_exchanges):
+    """The exact-Jaccard verify intersects the two documents' shingle
+    arrays once per candidate pair: the std and capped pair plans hold
+    no hashed-shingle join (``xxhash64``), no semi-join other than the
+    capped plan's bucket cap (keyed on ``band_key``), an
+    ``array_intersect``, and fewer Exchanges than the hashed-shingle
+    explode-join pruned by a candidate-id semi-join planned on this
+    input (``prune_exchanges``)."""
+    import re
+
+    from weather_data_ingestion_gcp_spark.operators import dedup
+    from weather_data_ingestion_gcp_spark.plans.registry import load_table
+
+    d = load_table(spark, SF, "documents")
+    try:
+        plan = _formatted(dedup.minhash_near_duplicates(d, "doc_id", "text", **params))
+    finally:
+        dedup.release_shingle_caches()
+    assert "xxhash64" not in plan
+    assert "array_intersect" in plan
+    semi_keys = re.findall(
+        r"Left keys \[\d+\]: \[([^\]]*)\]\nRight keys \[\d+\]: \[[^\]]*\]\n"
+        r"Join type: LeftSemi",
+        plan,
+    )
+    assert plan.count("Join type: LeftSemi") == len(semi_keys)
+    if "max_bucket_size" in params:
+        assert semi_keys and all(re.fullmatch(r"band_key#\d+", k) for k in semi_keys)
+    else:
+        assert not semi_keys
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) < prune_exchanges
+
+
 def test_dsir_topp_rank_is_range_partitioned_and_cached(spark):
     """The top-p cut needs an exact global rank over corpus-size
     weights; a bare `ROW_NUMBER() OVER (ORDER BY ...)` plans a

@@ -64,6 +64,20 @@ def drop_exact_duplicates(df: DataFrame, id_col: str, content_col: str) -> DataF
 # ---------------------------------------------------------------------------
 
 
+def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 1) -> DataFrame:
+    """Each document's distinct word ``n``-gram set as one array: (doc_id,
+    shingles). The one tokenization of the shingle family — :func:`shingles`
+    explodes this same expression, and :func:`verify_jaccard` intersects
+    it. NULL text gives a NULL set at n=1 and an empty one above."""
+    return df.select(
+        F.col(id_col).alias("doc_id"), _shingle_set(text_col, n).alias("shingles")
+    )
+
+
+def _shingle_set(text_col: str, n: int) -> Column:
+    return F.array_distinct(ngram_array(F.col(text_col), n))
+
+
 def shingles(
     df: DataFrame,
     id_col: str,
@@ -71,7 +85,8 @@ def shingles(
     n: int = 1,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Distinct word n-gram shingles, one row per (id, shingle).
+    """Distinct word n-gram shingles, one row per (id, shingle): the
+    :func:`shingle_sets` array, exploded.
 
     Row-per-shingle (vs array column) keeps downstream joins/aggregations
     JVM-native and lets Spark redistribute shingle skew across partitions.
@@ -106,9 +121,10 @@ def shingles(
     lineage-truncated before consumers see it).
     """
     carry = list(carry_cols or [])
-    sh = F.array_distinct(ngram_array(F.col(text_col), n))
     return df.select(
-        F.col(id_col).alias("doc_id"), *carry, F.explode(sh).alias("shingle")
+        F.col(id_col).alias("doc_id"),
+        *carry,
+        F.explode(_shingle_set(text_col, n)).alias("shingle"),
     )
 
 
@@ -126,9 +142,8 @@ JACCARD_FLOOR = 0.5
 
 def minhash_wide_signatures(shingle_df: DataFrame) -> DataFrame:
     """One wide aggregate per doc: the ``NUM_HASHES`` minhash columns
-    ``h0..h7`` (per-seed min of md5(shingle || '|' || seed)) PLUS the
-    per-doc shingle count ``_n_sh`` — the single groupBy the whole MinHash
-    pipeline hangs off.
+    ``h0..h7`` (per-seed min of md5(shingle || '|' || seed)) — the single
+    groupBy the whole MinHash pipeline hangs off.
 
     The mins are SIDE-BY-SIDE aggregate expressions in ONE groupBy over
     the shingle rows, NOT an explode of each shingle x seed first:
@@ -144,9 +159,7 @@ def minhash_wide_signatures(shingle_df: DataFrame) -> DataFrame:
         F.min(F.md5(F.concat_ws("|", "shingle", F.lit(str(s))))).alias(f"h{s}")
         for s in range(NUM_HASHES)
     ]
-    return shingle_df.groupBy("doc_id").agg(
-        *aggs, F.count(F.lit(1)).alias("_n_sh")
-    )
+    return shingle_df.groupBy("doc_id").agg(*aggs)
 
 
 def lsh_band_keys(wide: DataFrame) -> DataFrame:
@@ -194,89 +207,33 @@ def lsh_candidate_pairs(band_df: DataFrame, max_bucket_size: int | None = None) 
     )
 
 
-def verify_jaccard(
-    pairs: DataFrame,
-    shingle_df: DataFrame,
-    sizes: DataFrame | None = None,
-    candidate_ids: DataFrame | None = None,
-) -> DataFrame:
-    """Exact Jaccard for candidate pairs via two shingle equi-joins (set
-    sizes from one aggregate; intersection counts from a join on shingle).
+def verify_jaccard(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """Exact Jaccard of each candidate (id_a, id_b) over the
+    :func:`shingle_sets` arrays: both sides' sets join onto the pair and
+    one ``array_intersect`` per pair gives the shared count.
 
-    ``sizes``: optional pre-computed (doc_id, n) shingle counts — pass it
-    when the caller already aggregated per-doc (e.g. alongside the minhash
-    signatures) to save one full scan of the shingle relation.
-
-    Measured note (sf0.1, 9.5M pairs): this explode-join shape beats the
-    "attach collect_set arrays to each pair + array_intersect" formulation
-    ~2.5x — per-pair array intersection is evaluated per output expression
-    (no cross-expression CSE) at ~4us a call, while the equi-join's
-    intermediate rows are cheap primitive tuples with partial aggregation
-    collapsing them before the shuffle.
-    """
-    if sizes is None:
-        sizes = shingle_df.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # join on the 8-byte xxhash64 of the shingle, not the string: the
-    # pairs-x-shingles intermediate carries ~n_shingles rows PER PAIR, so
-    # its shuffle bytes are the verify cost — hashing cuts them ~2x (the
-    # 10x probe measured this intermediate crossing the spill boundary).
-    # Distinctness is preserved (collision odds ~|shingles|^2 / 2^64,
-    # ~1e-11 at 10x sf0.1, and a collision would only nudge one pair's
-    # n_inter); the projection sits ABOVE the cached string relation, so
-    # every consumer still shares the one persisted tokenization.
-    hashed = shingle_df.select(
-        "doc_id", F.xxhash64("shingle").alias("shingle")
+    Pairs that share no shingle give no row (a zero Jaccard passes no
+    threshold, and two empty sets have no defined Jaccard). Work is
+    linear in |pairs| x shingles per document, and no per-shingle row is
+    shuffled."""
+    sa = sets.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("s_a"))
+    sb = sets.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("s_b"))
+    counts = F.struct(
+        F.size("s_a").alias("n_a"),
+        F.size("s_b").alias("n_b"),
+        F.size(F.array_intersect("s_a", "s_b")).alias("n_inter"),
     )
-    # Semi-join reduction (round-8 sf100 finding): the two verify joins
-    # hash-partition their shingle side, i.e. shuffle the CORPUS-sized
-    # relation to serve |pairs| candidates. Docs that appear in no
-    # candidate pair cannot contribute an intersection row, so pruning
-    # the shingle relation to a SUPERSET of the candidate-id set first
-    # is a semantic no-op — and it is a broadcast-hash semi-join
-    # (map-side, no shuffle of the corpus side). At sf100 the unpruned
-    # form spilled >70 GB of shuffle and died on the single-box disk
-    # ceiling; pruned, only the candidate slice shuffles.
-    #
-    # The id set comes from the CALLER (``candidate_ids``), not from
-    # ``pairs``: deriving it here (union of pair sides) evaluates the
-    # pairs subplan twice, which an A/B measured as a 2-4x isolated-warm
-    # regression for consumers whose pair derivation is itself a join
-    # chain (PageRank 3.3 -> 14.2 s at sf0.1). LSH callers pass the
-    # bucket-membership set (one cheap aggregate over the persisted
-    # signature relation); dense-candidate callers (SNM windows, blocked
-    # Jaccard — every doc is a candidate, pruning is a paid no-op) pass
-    # nothing and keep the direct joins.
-    #
-    # No forced broadcast on the candidate side: the set is O(docs in
-    # any multi-member bucket) — unbounded at the 100 TB design point,
-    # where a forced hint would bypass autoBroadcastJoinThreshold and
-    # hit the 8 GB BroadcastExchange ceiling. The planner (plus AQE's
-    # runtime join re-selection) broadcasts it whenever its MEASURED
-    # size is small — every driver SF — and falls back to a shuffled
-    # semi-join when it isn't, which still prunes the verify joins'
-    # pairs-x-shingles intermediate, the cost that actually dies first.
-    if candidate_ids is not None:
-        hashed = hashed.join(
-            candidate_ids.select("doc_id"), "doc_id", "left_semi"
-        )
-    sa = hashed.select(F.col("doc_id").alias("id_a"), "shingle")
-    sb = hashed.select(F.col("doc_id").alias("id_b"), "shingle")
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    # the counts come out of a one-row inline, not a projection: a filter
+    # over a projected alias is pushed below it with the expression
+    # substituted (here into the join condition), which evaluated the
+    # intersect twice per pair; a generator's output cannot be pushed past
+    sized = pairs.join(sa, "id_a").join(sb, "id_b").select(
+        "id_a", "id_b", F.inline(F.array(counts))
     )
-    na = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    nb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    return (
-        inter.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))).alias("jaccard"),
-        )
+    return sized.filter(F.col("n_inter") > 0).select(
+        "id_a",
+        "id_b",
+        (F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))).alias("jaccard"),
     )
 
 
@@ -290,60 +247,33 @@ def minhash_near_duplicates(
     """Full pipeline: shingle -> minhash -> LSH bucket -> verify >=
     ``JACCARD_FLOOR``.
 
-    The shingle relation is referenced by both the signature aggregate and
-    the verification joins, so two scan-reduction measures apply:
-
-    - per-doc shingle counts are folded into the SAME groupBy that computes
-      the signature mins (one wide aggregate, banded row-locally after),
-      eliminating the separate sizes scan verify_jaccard would run;
-    - the shingle rows (``big``) and the signatures are kept in the
-      session store (``store.keep``; the storage-level and 100 TB
-      rationale lives there), so every dedup query over the same table
-      shares one tokenization. The verified pairs are NOT kept here:
-      consumers that scan them several times keep or truncate the
-      returned frame themselves.
+    The shingle rows (``big``) and the signatures are kept in the session
+    store (``store.keep``; the storage-level and 100 TB rationale lives
+    there), so every dedup query over the same table shares one
+    tokenization and one signature aggregate. The verify's shingle sets
+    are NOT kept: they are a narrow projection of ``df``, and a kept
+    array relation read by both verify sides was rebuilt by concurrent
+    first readers (the race ``store`` describes). The verified pairs are
+    not kept here either: consumers that scan them several times keep or
+    truncate the returned frame themselves.
     """
     sh = keep(shingles(df, id_col, text_col, n=shingle_n), big=True)
-    # the verify prune's candidate-id set re-reads the signature
-    # relation (bands -> bucket counts -> semi-join); without this
-    # persist that second read re-runs the whole wide aggregate
-    # (A/B: PageRank isolated-warm 7.5 s -> ~4 s). O(docs x k x 32B),
-    # the designated compact persist candidate — see
-    # minhash_wide_signatures.
     wide = keep(minhash_wide_signatures(sh))
-    return verified_pairs_from_wide(wide, sh, max_bucket_size=max_bucket_size)
+    sets = shingle_sets(df, id_col, text_col, n=shingle_n)
+    return verified_pairs_from_wide(wide, sets, max_bucket_size=max_bucket_size)
 
 
 def verified_pairs_from_wide(
     wide: DataFrame,
-    shingle_df: DataFrame,
+    sets: DataFrame,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs + exact-Jaccard verify (>= ``JACCARD_FLOOR``),
     derived from an existing ``minhash_wide_signatures`` frame (pass a
     persisted one to compute the signature aggregate exactly once across
-    multiple consumers)."""
-    sizes = wide.select("doc_id", F.col("_n_sh").alias("n"))
-    bands = lsh_band_keys(wide)
-    pairs = lsh_candidate_pairs(bands, max_bucket_size=max_bucket_size)
-    # candidate-id SUPERSET for the verify semi-join prune: docs sharing
-    # any band bucket with a second doc. One aggregate + one semi-join
-    # over relations derived from the (persisted) wide frame — no
-    # re-evaluation of the pairs subplan (see verify_jaccard).
-    multi = (
-        bands.groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("_bc"))
-        .filter(F.col("_bc") >= 2)
-        .select("band", "band_key")
-    )
-    cand_ids = (
-        bands.join(multi, ["band", "band_key"], "left_semi")
-        .select("doc_id")
-        .distinct()
-    )
-    return verify_jaccard(
-        pairs, shingle_df, sizes=sizes, candidate_ids=cand_ids
-    ).filter(F.col("jaccard") >= JACCARD_FLOOR)
+    multiple consumers) and the same documents' :func:`shingle_sets`."""
+    pairs = lsh_candidate_pairs(lsh_band_keys(wide), max_bucket_size=max_bucket_size)
+    return verify_jaccard(pairs, sets).filter(F.col("jaccard") >= JACCARD_FLOOR)
 
 
 # ---------------------------------------------------------------------------
@@ -484,12 +414,12 @@ def blocked_jaccard_pairs(
     the explode, one groupBy on (block, sub, shingle) emits each group's
     doc-id pairs, and a pair's count IS its exact intersection size. Each
     shingle row shuffles once and only ACTUAL co-occurrences materialize,
-    with per-group pair fan-out bounded by the cap; the pairs-join-shingles
-    form (:func:`verify_jaccard`) instead materializes |pairs| x
-    ~shingles/doc rows, almost all non-matches, and at the sf100 probe
-    that shuffle exceeded the single box's ~73 GB spill ceiling (ENOSPC,
-    round 9). Zero-intersection pairs never appear, so ``threshold``
-    must be positive."""
+    with per-group pair fan-out bounded by the cap; a per-pair verify
+    (:func:`verify_jaccard`) instead attaches two shingle sets to every
+    within-block pair, almost all non-matches (its earlier
+    pairs-join-shingles form exceeded the single box's ~73 GB spill
+    ceiling at the sf100 probe, ENOSPC, round 9). Zero-intersection
+    pairs never appear, so ``threshold`` must be positive."""
     if threshold <= 0:
         raise ValueError(f"threshold must be positive, got {threshold}")
     # internal names must not shadow a caller's block column (the
@@ -514,7 +444,7 @@ def blocked_jaccard_pairs(
     sh = shingles(
         keyed, id_col, text_col, n=shingle_n, carry_cols=[*block_cols, sub]
     )
-    # 8-byte shingle hashes (the verify_jaccard trick): distinctness per
+    # 8-byte shingle hashes halve the shuffle bytes: distinctness per
     # doc is preserved at row grain, collisions only nudge one n_inter
     # with odds ~|shingles|^2 / 2^64. Persisted: sizes and the group
     # aggregate both scan it; MEMORY_ONLY because recompute beats

@@ -49,8 +49,9 @@ def _collapse_ws(text: Column) -> Column:
     one whitespace folding of the text operators. regexp_replace runs
     before trim because Spark's trim strips ASCII spaces only (a tab at
     the ends would otherwise survive as a leading/trailing empty token).
-    Java's ``\\s`` is ``[ \\t\\n\\x0B\\f\\r]`` (DuckDB's RE2 lacks
-    ``\\x0B``); U+00A0 is in neither."""
+    Java's ``\\s`` is ``[ \\t\\n\\x0B\\f\\r]``, which the DuckDB
+    oracle spells out (RE2's ``\\s`` lacks ``\\x0B``); U+00A0 is in
+    neither."""
     return F.trim(F.regexp_replace(text, r"\s+", " "))
 
 
@@ -306,9 +307,10 @@ def winnow_fingerprints(
     odd golden-ratio multiplier mod 2^63 — a bijection, so gram
     distinctness is preserved and the window minima are uniformly
     distributed. The DuckDB oracle (``oracle_sql.winnow_fps_sql``) states
-    the identical arithmetic (HUGEINT multiply, same modulus) over the
-    same normalization; parity holds while a gram's Horner value fits a
-    BIGINT, which Latin-1 text always does. Short docs (< K + W - 1
+    the identical arithmetic over the same normalization, its Horner
+    value in HUGEINT reduced mod 2^63 before the multiply (the residue
+    the uint64 wrap and 63-bit mask keep), so any codepoint range
+    matches. Short docs (< K + W - 1
     chars) yield an empty fingerprint set, matching the windowed
     definition.
 

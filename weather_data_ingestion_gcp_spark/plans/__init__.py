@@ -65,10 +65,13 @@ DRIVER_WINDOW = [
     "graph_triangle_counts",
     # changed-code leads: the capped MinHash family, whose band keys are
     # now one row-local projection at the module-constant geometry — the
-    # capped-pairs memo builder, then its two graph readers
+    # capped-pairs memo builder, then its two graph readers; then the
+    # sorted-neighborhood pairs, whose verify now intersects per-document
+    # shingle arrays like the MinHash block's
     "dedup_minhash_lsh_capped",
     "graph_pagerank_neardup_capped",
     "graph_triangle_counts_capped",
+    "dedup_sorted_neighborhood",
     # changed-code leads: the similarity entries whose fold, top-k cut
     # or sign-LSH geometry moved behind operators/similarity.py — the
     # sign-LSH band-index builder, then its shares follower; the exact
@@ -84,9 +87,11 @@ DRIVER_WINDOW = [
     # plan as one Arrow local relation (store.rows) — the MMR picks, the
     # BPE merges, the mix rates, the bloom bitset (it anchors doc_8grams,
     # so decontaminate_ngram_exact opens the post-window suite), and the
-    # sink's batch-grain comparison rows
+    # sink's batch-grain comparison rows; the BPE encoder, whose oracle
+    # now trims spaces only, right behind its bpe_words anchor
     "similarity_mmr_diverse",
     "bpe_learn_merges",
+    "bpe_apply_encode",
     "dataset_mix_by_lang",
     "decontaminate_bloom_prefilter",
     "streaming_engagement_sink_equiv",
@@ -116,8 +121,6 @@ DRIVER_WINDOW = [
     "bloom_membership_check",
     # r08 events scans
     "error_capture_routing",
-    "filter_dispatch",
-    "grouping_rollup",
     # r08 multimodal plumbing + the NEW r13 analytic over the same
     # binary payloads (adjacent: same documents/multimodal scan)
     "multimodal_frame_offsets",

@@ -177,7 +177,8 @@ def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id_b"), "band_key"
     )
     cand = tb.join(rb, "band_key").select("id_a", "id_b").distinct()
-    out = dedup.verify_jaccard(cand, sh).filter(
+    sets = dedup.shingle_sets(d, "doc_id", "text", n=3)
+    out = dedup.verify_jaccard(cand, sets).filter(
         F.col("jaccard") >= dedup.JACCARD_FLOOR
     )
     return out.select(
@@ -1345,7 +1346,8 @@ def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         raw_pairs = std_minhash_pairs(spark, sf_dir)
     else:
-        raw_pairs = dedup.verified_pairs_from_wide(wide, sh)
+        sets = dedup.shingle_sets(d, "doc_id", "text", n=3)
+        raw_pairs = dedup.verified_pairs_from_wide(wide, sets)
     pairs = raw_pairs.select(
         "id_a", "id_b", F.round("jaccard", 6).alias("jaccard_exact")
     )
@@ -1760,20 +1762,20 @@ def snm_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-neighborhood near-dup pairs: per-lang sort by a 40-char
     normalized prefix, pair each doc with its 4 sort-order successors,
-    verify with exact bigram Jaccard (shared `dedup.verify_jaccard`
-    machinery, threshold 0.05).
+    verify with exact bigram Jaccard (the shared `dedup.verify_jaccard`,
+    threshold 0.05).
 
     Scale shape: the rank is `snm_ranked`'s range-partitioned two-pass
     rank (bounded ~N/n_partitions rows per task, no per-lang hash
     window); candidate generation is one explode (W rows/doc) + one
     equi-join on (lang, rank) — never a block self-join, so candidates
     are exactly N*W regardless of how skewed the corpus is. The verify
-    is the audited hashed-shingle equi-join. The oracle's BETWEEN-join
-    expresses the same rank adjacency."""
+    intersects the two documents' bigram sets once per candidate. The
+    oracle's BETWEEN-join expresses the same rank adjacency."""
     d = load_table(spark, sf_dir, "documents")
     cand = snm_candidates_shared(spark, sf_dir)
-    sh = dedup.shingles(d, "doc_id", "text", n=2)
-    out = dedup.verify_jaccard(cand, sh).filter(F.col("jaccard") >= 0.05)
+    sets = dedup.shingle_sets(d, "doc_id", "text", n=2)
+    out = dedup.verify_jaccard(cand, sets).filter(F.col("jaccard") >= 0.05)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
 

@@ -19,9 +19,13 @@ from ..operators import similarity, text
 from ..operators.dedup import JACCARD_FLOOR, NUM_HASHES, ROWS_PER_BAND
 from .registry import _SAMPLE_PCT, _SAMPLE_TARGET_DOCS
 
+#: Java's ``\s`` spelled out for RE2, whose ``\s`` lacks the vertical
+#: tab (U+000B); U+00A0 is in neither
+ws_class_sql = r"[\t\n\v\f\r ]"
+
 #: lowercase whitespace split with empty tokens dropped — mirrors
 #: operators.text.words
-words_sql = r"list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')"
+words_sql = f"list_filter(string_split_regex(lower(text), '{ws_class_sql}+'), w -> w <> '')"
 
 
 def collapse_ws_sql(expr: str) -> str:
@@ -29,7 +33,7 @@ def collapse_ws_sql(expr: str) -> str:
     trimmed — mirrors operators.text._collapse_ws. The trim names its
     one character because Spark's trim strips ASCII spaces only, where
     DuckDB's bare trim also strips U+00A0 and other Unicode spaces."""
-    return rf"trim(regexp_replace({expr}, '\s+', ' ', 'g'), ' ')"
+    return f"trim(regexp_replace({expr}, '{ws_class_sql}+', ' ', 'g'), ' ')"
 
 
 #: lowercased, whitespace-folded text — mirrors operators.text.norm_ws
@@ -227,11 +231,15 @@ simhash16_sql = f"""
 
 
 def _winnow_gram_sql() -> str:
-    """Base-128 Horner value of the ``WINNOW_K`` codepoints at ``i``."""
-    g = "CAST(ord(substr(t, i, 1)) AS BIGINT)"
+    """Base-128 Horner value of the ``WINNOW_K`` codepoints at ``i``, in
+    HUGEINT (a codepoint above ~U+4000 overflows BIGINT), reduced mod
+    2^63: the UDF's uint64 wrap followed by its 63-bit mask keeps the
+    same residue, and the reduced value keeps the golden-ratio product
+    under 2^127."""
+    g = "CAST(ord(substr(t, i, 1)) AS HUGEINT)"
     for j in range(1, text.WINNOW_K):
         g = f"({g} * 128 + ord(substr(t, i + {j}, 1)))"
-    return g
+    return f"({g} % 9223372036854775808)"
 
 
 #: CTEs ``norm``, ``g``, ``fp``: per-doc winnowing fingerprint SETS
@@ -246,8 +254,7 @@ winnow_fps_sql = f"""norm AS (
         SELECT doc_id,
                CASE WHEN len(t) >= {text.WINNOW_K}
                     THEN list_transform(generate_series(1, len(t) - {text.WINNOW_K - 1}),
-                         i -> CAST((CAST({_winnow_gram_sql()}
-                              AS HUGEINT) * 11400714819323198485)
+                         i -> CAST(({_winnow_gram_sql()} * 11400714819323198485)
                               % 9223372036854775808 AS BIGINT))
                     ELSE [] END AS hs
         FROM norm

@@ -1269,7 +1269,7 @@ def _bpe_oracle(n_rounds: int) -> str:
         SELECT p.l AS l, p.r AS r, CAST(SUM(n) AS BIGINT) AS pair_count FROM (
             SELECT n, unnest(list_transform(generate_series(1, len(t) - 1),
                              i -> {{'l': t[i], 'r': t[i + 1]}})) AS p
-            FROM (SELECT n, string_split(trim(seq), ' ') AS t FROM w{r - 1})
+            FROM (SELECT n, string_split(trim(seq, ' '), ' ') AS t FROM w{r - 1})
             WHERE len(t) >= 2)
         GROUP BY p.l, p.r
     ),
@@ -1560,7 +1560,7 @@ def _bpe_apply_oracle(rounds: int, k: int = 20) -> str:
         SELECT p.l AS l, p.r AS r, SUM(n) AS pair_count FROM (
             SELECT n, unnest(list_transform(generate_series(1, len(t) - 1),
                              i -> {{'l': t[i], 'r': t[i + 1]}})) AS p
-            FROM (SELECT n, string_split(trim(seq), ' ') AS t FROM w{r - 1})
+            FROM (SELECT n, string_split(trim(seq, ' '), ' ') AS t FROM w{r - 1})
             WHERE len(t) >= 2)
         GROUP BY p.l, p.r
     ),
@@ -1580,8 +1580,8 @@ def _bpe_apply_oracle(rounds: int, k: int = 20) -> str:
         "WITH "
         + ",\n    ".join(parts)
         + f"""
-    SELECT w AS word, n, trim(seq) AS encoded,
-           CAST(len(string_split(trim(seq), ' ')) AS BIGINT) AS n_tokens
+    SELECT w AS word, n, trim(seq, ' ') AS encoded,
+           CAST(len(string_split(trim(seq, ' '), ' ')) AS BIGINT) AS n_tokens
     FROM w{rounds} ORDER BY n DESC, w LIMIT {k}
     """
     )
