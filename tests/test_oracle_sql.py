@@ -1,8 +1,9 @@
 """Each DuckDB oracle primitive is spelled once, in ``plans/oracle_sql.py``.
 
 Scans the package source: the hand-spelled fragments of the md5-hex
-integer, the word split, the MinHash signature and the Jaccard verify
-join occur in ``oracle_sql.py`` only; no plan module rewrites SQL with
+integer, the word split, the whitespace class and its fold, the MinHash
+signature and the Jaccard verify join occur in ``oracle_sql.py`` only; no
+plan module rewrites SQL with
 ``re.sub`` or imports a ``_SQL_*`` / ``_sql_*`` fragment from a sibling.
 The numpy mirror of ``list_dot_product``, the ascending-dimension fold,
 occurs in ``operators/similarity.py`` only, and the Spark text
@@ -36,6 +37,7 @@ FRAGMENTS = [
     "JOIN sh sb ON",
     "list_dot_product(v, ",
     r"[\t\n\v\f\r ]",
+    "+', ' ', 'g'",
 ]
 FRAGMENT_NAME = re.compile(r"^_(SQL|sql)_")
 
