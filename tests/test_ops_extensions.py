@@ -806,8 +806,11 @@ def test_bloom_membership_no_false_negatives(spark):
         + [(i, f"never seen before {i}") for i in range(1000, 1010)],
         "doc_id bigint, text string",
     )
-    bits = sketch.bloom_build(train, "text")
-    got = {r.doc_id: r.maybe_member for r in sketch.bloom_probe(probe, bits, "doc_id", "text").collect()}
+    words = sketch.bloom_bitset_words(train, "text", 4)
+    got = {
+        r.doc_id: int(r.n_hits == sketch.BLOOM_K)
+        for r in sketch.bloom_hits(probe, "text", words, 4).collect()
+    }
     assert all(got[i] == 1 for i in range(10))  # exact dups always flagged
     # unseen probes are overwhelmingly rejected (fp rate ~ (1-e^-kn/m)^k ~ 1e-4)
     assert sum(got[i] for i in range(1000, 1010)) <= 1
@@ -1212,13 +1215,17 @@ def test_countmin_never_underestimates(spark):
 
     rows = [(i % 7,) for i in range(1000)] + [(99,)] * 500
     d = spark.createDataFrame(rows, "k bigint")
-    cells = sketch.countmin_build(d, "k")
-    assert cells.count() <= sketch.CMS_D * sketch.CMS_W
+    # at most CMS_D x width cells: every row's bucket lies in [0, width)
+    buckets = d.select(
+        *[sketch.cms_bucket(F.col("k"), s, 256).alias(f"b{s}") for s in range(sketch.CMS_D)]
+    ).agg(*[F.min(f"b{s}") for s in range(sketch.CMS_D)], *[F.max(f"b{s}") for s in range(sketch.CMS_D)])
+    assert all(0 <= b < 256 for b in buckets.first())
+    counts = d.groupBy("k").count()
     est = {
         r.k: r.est_count
-        for r in sketch.countmin_estimate(cells, d.distinct(), "k").collect()
+        for r in sketch.countmin_estimate(counts, "k", "count", 256).collect()
     }
-    true = {r.k: r["count"] for r in d.groupBy("k").count().collect()}
+    true = {r.k: r["count"] for r in counts.collect()}
     for k, t in true.items():
         assert est[k] >= t  # CMS upper bound property
     assert est[99] >= 500

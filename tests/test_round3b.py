@@ -1,6 +1,7 @@
 """Crafted-input units for the round-3b extensions:
 passage dedup, shard packing, last-touch attribution, hard negatives,
-code-density counting, and KMV intersection estimation."""
+and code-density counting (the KMV intersection estimate is in
+test_sketch.py)."""
 
 from __future__ import annotations
 
@@ -149,31 +150,6 @@ def test_code_signal_counts_exact(spark):
     ).first()
     assert r["fences"] == 2
     assert r["indents"] == 1
-
-
-def test_kmv_intersection_estimate_reasonable(spark, tmp_path):
-    import os
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    eid = 0
-    # 200 users click, 200 view, overlap = users 100..199
-    for u in range(200):
-        rows.append((eid, t0, u, "click", 1.0, "{}")); eid += 1
-    for u in range(100, 300):
-        rows.append((eid, t0, u, "view", 1.0, "{}")); eid += 1
-    e = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    )
-    sf = str(tmp_path)
-    e.write.mode("overwrite").parquet(os.path.join(sf, "events.parquet"))
-    from weather_data_ingestion_gcp_spark.plans.audit_stats import kmv_join_cardinality
-
-    r = kmv_join_cardinality(spark, sf).first()
-    assert r["exact_intersection"] == 100
-    assert r["within_bound"] is True
-    # inclusion-exclusion over k=64 sketches lands near the exact count
-    assert abs(r["est_intersection"] - 100) <= 50
 
 
 def test_triangle_counts_on_crafted_clique(spark, tmp_path):

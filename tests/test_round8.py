@@ -10,6 +10,7 @@ from collections import Counter
 from weather_data_ingestion_gcp_spark.plans import QUERIES
 
 from test_round7 import _py_dsir, _write_documents
+from test_sketch import _py_cms
 
 
 def _py_topp(rows: list[tuple], keep_div: int = 10) -> dict:
@@ -85,56 +86,7 @@ def test_dsir_select_topp_tie_at_cutoff_keeps_smallest_ids(spark, tmp_path):
     assert got == {"src3": (1, 10), "src4": (1, 10), "src5": (1, 10)}
 
 
-# --- cms_heavy_hitters vs pure Python ----------------------------------------
-
-
-def _py_cms(rows, d=4, w=1024, phi_div=100, top=50):
-    import hashlib
-
-    toks: list[str] = []
-    for _i, text, _l, _s in rows:
-        toks += [t for t in text.lower().split() if t]
-    wc = Counter(toks)
-
-    def bucket(i: int, word: str) -> int:
-        return int(hashlib.md5(f"{i}:{word}".encode()).hexdigest()[:4], 16) % w
-
-    cms: Counter = Counter()
-    for word, c in wc.items():
-        for i in range(d):
-            cms[(i, bucket(i, word))] += c
-    est = {
-        word: min(cms[(i, bucket(i, word))] for i in range(d)) for word in wc
-    }
-    n = sum(wc.values())
-    thr = (n + phi_div - 1) // phi_div
-    out = [
-        (word, est[word], wc[word], est[word] - wc[word], int(wc[word] >= thr))
-        for word in wc
-        if est[word] >= thr
-    ]
-    out.sort(key=lambda t: (-t[1], t[0]))
-    return out[:top]
-
-
-def test_cms_heavy_hitters_matches_pure_python(spark, tmp_path):
-    """Zipf-ish corpus with one dominant term, a mid tier, and a long
-    unique tail: the sketch estimates, exact counts, overcounts, and the
-    ceil(N/100) heavy cut must equal the literal hashlib computation."""
-    rows = []
-    for i in range(40):
-        body = ["the"] * 5 + [f"mid{i % 7}"] * 2 + [f"tail{i}a", f"tail{i}b"]
-        rows.append((i, " ".join(body), "en", "src0"))
-    _write_documents(spark, str(tmp_path), rows)
-    got = [
-        (r["term"], r["est_count"], r["exact_count"], r["overcount"],
-         r["heavy_exact"])
-        for r in QUERIES["cms_heavy_hitters"](spark, str(tmp_path)).collect()
-    ]
-    want = _py_cms(rows)
-    assert got == want
-    assert any(t[4] == 1 for t in got)  # the dominant term is heavy
-    assert all(t[3] >= 0 for t in got)  # one-sided error law
+# --- cms_heavy_hitters vs pure Python (the reference is test_sketch._py_cms)
 
 
 def test_cms_heavy_hitters_threshold_boundary(spark, tmp_path):

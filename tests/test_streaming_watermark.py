@@ -158,7 +158,7 @@ def test_session_window_emits_closed_sessions(spark, tmp_path):
 def test_streaming_bloom_prune_is_stateless_mapside(spark, tmp_path):
     """The broadcast-bloom prefilter composes with Structured Streaming
     unchanged: bloom_xl_prune is a stateless map-side filter (bitset in
-    a broadcast, bit arithmetic per row), so pruning a stream of
+    a scalar subquery, bit arithmetic per row), so pruning a stream of
     incoming documents against a static corpus bloom needs no state
     store and no watermark — the streaming twin of
     decontaminate_bloom_prefilter's train-side prune."""

@@ -107,18 +107,22 @@ DRIVER_WINDOW = [
     "dataset_card_summary",
     "good_turing_vocab_coverage",
     "dedup_simhash",
-    # r08 embeddings scans
-    "embedding_outlier_scores",
-    "hard_negative_topk",
-    "kmv_join_cardinality",
-    "pca_power_iteration",
-    # r08 documents scans (standalone pipelines)
-    "sample_hash_bernoulli",
-    "source_unigram_kl",
-    "text_token_counts",
-    "url_extract_normalize",
-    "vocab_oov_rate",
+    # changed-code leads: the sketch entries whose Bloom, KMV, Count-Min
+    # or Misra-Gries decision now lives once in operators/sketch.py (the
+    # bitset-probed Bloom pair, the grouped KMV pair, the two Count-Min
+    # reports, the shared k-counter step's batch entry); then the regex
+    # tokenizer count, whose oracle now spells Java's whitespace class
     "bloom_membership_check",
+    "incremental_ingest_dedup",
+    "approx_distinct_kmv",
+    "kmv_join_cardinality",
+    "countmin_heavy_hitters",
+    "cms_heavy_hitters",
+    "heavy_hitters_mg",
+    "text_token_counts",
+    # r08 documents scans (standalone pipelines)
+    "source_unigram_kl",
+    "vocab_oov_rate",
     # r08 events scans
     "error_capture_routing",
     # r08 multimodal plumbing + the NEW r13 analytic over the same

@@ -21,7 +21,15 @@ from ..operators import sketch, text
 from ..operators.layout import spread_small
 from ..operators.sampling import hash_bucket, hex_int
 from ..operators.text import words as text_words
-from .oracle_sql import fingerprint_sql, hash_bucket_sql, hex_sql, words_sql
+from .oracle_sql import (
+    bloom_positions_sql,
+    countmin_sql,
+    fingerprint_sql,
+    hash_bucket_sql,
+    hex_sql,
+    kmv_sql,
+    words_sql,
+)
 from .registry import _cents, _nano_ln, load_table, register
 
 
@@ -135,109 +143,71 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # KMV (k-minimum-values) distinct sketch: unlike HLL, fully deterministic
 # and engine-portable — both engines take the k smallest md5 fingerprints,
 # so the k-th minimum (and therefore the estimate) hash-matches EXACTLY.
-_KMV_K = 64
-#: 2^48 — 12 hex nibbles normalize to (0,1) with exact double representation
-_KMV_SPACE = float(1 << 48)
-
-
 @register(
     "approx_distinct_kmv",
     oracle=f"""
-    WITH h AS (
-        SELECT DISTINCT event_type, md5(CAST(user_id AS VARCHAR)) AS hh
-        FROM events WHERE user_id IS NOT NULL
-    ),
-    r AS (
-        SELECT event_type, hh,
-               ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hh) AS rn
-        FROM h
-    ),
-    sk AS (
-        SELECT event_type, MAX(hh) AS kth, COUNT(*) AS m
-        FROM r WHERE rn <= {_KMV_K} GROUP BY event_type
-    )
-    SELECT event_type,
-           ROUND(CASE WHEN m < {_KMV_K} THEN CAST(m AS DOUBLE)
-                      ELSE ({_KMV_K} - 1.0)
-                           / (CAST({hex_sql('kth', width=12)} AS DOUBLE)
-                              / {_KMV_SPACE!r})
-                 END, 2) AS est_users
-    FROM sk ORDER BY event_type
+    SELECT event_type, ROUND(est, 2) AS est_users
+    FROM ({kmv_sql("events", "event_type", "user_id")}) ORDER BY event_type
     """,
 )
 def approx_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate distinct users per event type via a KMV sketch: keep the
-    k smallest md5 fingerprints; estimate = (k-1)/u_k where u_k is the k-th
-    minimum normalized to (0,1). Deterministic md5 makes this the
-    oracle-checkable complement to approx_distinct_users (whose HLL sketch
-    is engine-specific, hence rows-only).
-
-    Scale shape: the rank window runs over the per-group DISTINCT
-    fingerprint relation (partial aggregation collapses duplicates before
-    the shuffle), never over raw events. At truly extreme cardinalities the
-    same sketch merges hierarchically (k-min of per-partition k-mins) —
-    KMV is a mergeable sketch; this form keeps the oracle expressible.
-    """
+    """Approximate distinct users per event type via a KMV sketch
+    (sketch.kmv_estimate). Deterministic md5 makes this the
+    oracle-checkable complement to approx_distinct_users (whose HLL
+    sketch is engine-specific, hence rows-only)."""
     e = load_table(spark, sf_dir, "events")
-    h = (
-        e.filter(F.col("user_id").isNotNull())
-        .select("event_type", F.md5(F.col("user_id").cast("string")).alias("hh"))
-        .distinct()
+    return (
+        sketch.kmv_estimate(e, "event_type", "user_id")
+        .select("event_type", F.round("est", 2).alias("est_users"))
+        .orderBy("event_type")
     )
-    w = Window.partitionBy("event_type").orderBy("hh")
-    sk = (
-        h.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KMV_K)
-        .groupBy("event_type")
-        .agg(F.max("hh").alias("kth"), F.count(F.lit(1)).alias("m"))
-    )
-    kth_val = hex_int(F.col("kth"), width=12)
-    est = F.when(F.col("m") < _KMV_K, F.col("m").cast("double")).otherwise(
-        F.lit(_KMV_K - 1.0) / (kth_val.cast("double") / F.lit(_KMV_SPACE))
-    )
-    return sk.select(
-        "event_type", F.round(est, 2).alias("est_users")
-    ).orderBy("event_type")
+
+
+#: bloom_membership_check's slice width: 4 hex digits -> m = 2^16 bits,
+#: fixed because its per-document n_hits is oracle-checked
+_BLOOM_HEXW = 4
 
 
 @register(
     "bloom_membership_check",
     oracle=f"""
-    WITH pos AS (
-        SELECT doc_id,
-               {hash_bucket_sql("doc_id")} % 100 AS b,
-               u.j,
-               {hex_sql("md5(text)", start="u.j * 4 + 1")} AS pos
-        FROM documents CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS j) u
+    WITH split AS (
+        SELECT doc_id, {bloom_positions_sql("text", _BLOOM_HEXW)} AS ps,
+               {hash_bucket_sql("doc_id")} % 100 AS b
+        FROM documents
     ),
-    bits AS (SELECT DISTINCT pos FROM pos WHERE b >= 15),
-    probe AS (SELECT doc_id, pos FROM pos WHERE b < 10)
+    bits AS (SELECT DISTINCT unnest(ps) AS pos FROM split WHERE b >= 15),
+    probe AS (SELECT doc_id, unnest(ps) AS pos FROM split WHERE b < 10)
     SELECT p.doc_id,
-           CAST(SUM(CASE WHEN bits.pos IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_hits,
-           CAST(SUM(CASE WHEN bits.pos IS NOT NULL THEN 1 ELSE 0 END) = 4 AS INT)
-             AS maybe_member
+           CAST(COUNT(bits.pos) AS BIGINT) AS n_hits,
+           CAST(COUNT(bits.pos) = {sketch.BLOOM_K} AS INT) AS maybe_member
     FROM probe p LEFT JOIN bits USING (pos)
     GROUP BY p.doc_id ORDER BY p.doc_id
     """,
 )
 def bloom_membership_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Portable Bloom-filter membership: the train split's content
-    fingerprints are summarized as a DISTINCT set of k=4 hash positions
-    in an m=65536-bit space (4 disjoint 16-bit slices of md5(text) — no
-    engine-native hash, so the sketch is reproducible anywhere); each
-    test-split document is flagged maybe-seen when all 4 of its positions
-    are set. No false negatives by construction — every exact cross-split
-    duplicate is caught — while the summary is at most m rows regardless
-    of corpus size: the 100 TB shape is a BROADCAST of the bit set
-    against a map-side probe, the data-level analog of the runtime
-    bloom-join pruning pinned in tests/test_scale_plans.py. This is the
-    mergeable-sketch completion of the family (KMV above, HLL below)."""
+    """Portable Bloom-filter membership: the train split's texts fold into
+    a 2^16-bit packed bitset (sketch.bloom_bitset_words: k = 4 disjoint
+    16-bit slices of md5(text) — no engine-native hash, so the sketch is
+    reproducible anywhere); each test-split document gets its hit count
+    and is flagged maybe-seen when all 4 of its positions are set. No
+    false negatives by construction — every exact cross-split duplicate
+    is caught — while the bitset is bounded regardless of corpus size:
+    the probe is a map-side bit test with no exchange, the data-level
+    analog of the runtime bloom-join pruning pinned in
+    tests/test_scale_plans.py."""
     d = load_table(spark, sf_dir, "documents")
     b = hash_bucket(F.col("doc_id"))
-    bits = sketch.bloom_build(d.filter(b >= 15), "text")
-    return sketch.bloom_probe(d.filter(b < 10), bits, "doc_id", "text").orderBy(
-        "doc_id"
+    words = sketch.bloom_bitset_words(d.filter(b >= 15), "text", _BLOOM_HEXW)
+    probe = d.filter(b < 10).select("doc_id", "text")
+    return (
+        sketch.bloom_hits(probe, "text", words, _BLOOM_HEXW)
+        .select(
+            "doc_id",
+            "n_hits",
+            (F.col("n_hits") == sketch.BLOOM_K).cast("int").alias("maybe_member"),
+        )
+        .orderBy("doc_id")
     )
 
 
@@ -330,46 +300,37 @@ def stats_aggregate_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: countmin_heavy_hitters' sketch width (buckets per hash row)
+_USER_CMS_W = 256
+
+
 @register(
     "countmin_heavy_hitters",
     oracle=f"""
-    WITH seeds AS (SELECT unnest(generate_series(0, 3)) AS s),
-    sb AS (
-        SELECT user_id, s,
-               {hex_sql("md5(CAST(s AS VARCHAR) || '|' || CAST(user_id AS VARCHAR))")} % 256
-                   AS bucket
-        FROM events CROSS JOIN seeds WHERE user_id IS NOT NULL),
-    cells AS (SELECT s, bucket, COUNT(*) AS c FROM sb GROUP BY s, bucket),
-    probes AS (SELECT DISTINCT user_id, s, bucket FROM sb),
-    est AS (SELECT user_id, MIN(c) AS est_count
-            FROM probes JOIN cells USING (s, bucket) GROUP BY user_id),
-    truth AS (SELECT user_id, COUNT(*) AS true_count
-              FROM events WHERE user_id IS NOT NULL GROUP BY user_id)
-    SELECT e.user_id,
-           CAST(e.est_count AS BIGINT) AS est_count,
-           CAST(t.true_count AS BIGINT) AS true_count,
-           CAST(e.est_count - t.true_count AS BIGINT) AS overcount
-    FROM est e JOIN truth t ON e.user_id = t.user_id
-    ORDER BY est_count DESC, e.user_id LIMIT 50
+    WITH truth AS (
+        SELECT user_id, CAST(COUNT(*) AS BIGINT) AS true_count
+        FROM events GROUP BY user_id),
+    est AS ({countmin_sql("truth", "user_id", "true_count", _USER_CMS_W)})
+    SELECT user_id, est_count, true_count,
+           CAST(est_count - true_count AS BIGINT) AS overcount
+    FROM est ORDER BY est_count DESC, user_id LIMIT 50
     """,
 )
 def countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch heavy hitters (operators/sketch.countmin_*): d=4
+    """Count-min sketch heavy hitters (sketch.countmin_estimate): d=4
     md5-seeded hash rows x w=256 buckets summarize per-user event counts in
     at most 1024 cells — bounded, BROADCASTABLE, and mergeable (cells add),
     the canonical streaming frequency sketch. Estimates are min-over-rows
     upper bounds (never under), checked here against true counts with the
-    overcount surfaced. Deterministic md5 hashing makes the sketch
+    overcount surfaced; the sketch is built from the per-user counts the
+    check needs anyway. Deterministic md5 hashing makes the sketch
     oracle-exact cross-engine, completing the sketch family: Bloom
     (membership), KMV (distinct), HLL (distinct, engine-native), CMS
     (frequency)."""
-    e = load_table(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
-    cells = sketch.countmin_build(e, "user_id")
-    probes = e.select("user_id").distinct()
-    est = sketch.countmin_estimate(cells, probes, "user_id")
+    e = load_table(spark, sf_dir, "events")
     truth = e.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("true_count"))
     return (
-        est.join(truth, "user_id")
+        sketch.countmin_estimate(truth, "user_id", "true_count", _USER_CMS_W)
         .select(
             "user_id",
             "est_count",
@@ -585,44 +546,30 @@ def event_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# KMV join-cardinality estimate: |clickers ∩ viewers| from three mergeable
-# KMV sketches via inclusion-exclusion (est_a + est_b - est_union) — the
+# KMV join-cardinality estimate: |clickers ∩ viewers| from three KMV
+# estimates via inclusion-exclusion (est_a + est_b - est_union) — the
 # sketch-level pre-join sizing a planner does before committing a shuffle
-# strategy. Every ingredient is deterministic md5 arithmetic, so BOTH the
-# estimates and the verdict hash-match the oracle exactly; the sketches
-# themselves are O(k) relations, mergeable hierarchically at 100 TB.
+# strategy. The three are ONE grouped sketch over a click/view/union tag
+# (a click or view row feeds its own tag and the union's). Every
+# ingredient is deterministic md5 arithmetic, so BOTH the estimates and
+# the verdict hash-match the oracle exactly; the sketch is O(3k) rows,
+# mergeable hierarchically at 100 TB.
 # ---------------------------------------------------------------------------
-def _tag_pred(tag: str) -> str:
-    return {
-        "a": "= 'click'",
-        "b": "= 'view'",
-        "u": "IN ('click', 'view')",
-    }[tag]
-
-
-def _sql_kmv_est(tag: str) -> str:
-    return f"""
-        SELECT '{tag}' AS s, CASE WHEN COUNT(*) < {_KMV_K}
-                    THEN CAST(COUNT(*) AS DOUBLE)
-                    ELSE ({_KMV_K} - 1.0)
-                         / (CAST({hex_sql('MAX(hh)', width=12)} AS DOUBLE)
-                            / {_KMV_SPACE!r}) END AS est
-        FROM (SELECT DISTINCT md5(CAST(user_id AS VARCHAR)) AS hh
-              FROM events WHERE event_type {_tag_pred(tag)}
-              ORDER BY hh LIMIT {_KMV_K})
-    """
-
-
 @register(
     "kmv_join_cardinality",
     oracle=f"""
-    WITH ests AS (
-        {_sql_kmv_est('a')} UNION ALL {_sql_kmv_est('b')} UNION ALL {_sql_kmv_est('u')}
+    WITH cv AS (SELECT event_type, user_id FROM events
+                WHERE event_type IN ('click', 'view')),
+    tagged AS (
+        SELECT CASE WHEN event_type = 'click' THEN 'a' ELSE 'b' END AS tag, user_id
+        FROM cv
+        UNION ALL SELECT 'u', user_id FROM cv
     ),
+    ests AS ({kmv_sql("tagged", "tag", "user_id")}),
     wide AS (
-        SELECT MAX(CASE WHEN s = 'a' THEN est END) AS est_a,
-               MAX(CASE WHEN s = 'b' THEN est END) AS est_b,
-               MAX(CASE WHEN s = 'u' THEN est END) AS est_u
+        SELECT COALESCE(MAX(CASE WHEN tag = 'a' THEN est END), 0.0) AS est_a,
+               COALESCE(MAX(CASE WHEN tag = 'b' THEN est END), 0.0) AS est_b,
+               COALESCE(MAX(CASE WHEN tag = 'u' THEN est END), 0.0) AS est_u
         FROM ests
     ),
     exact AS (
@@ -642,41 +589,24 @@ def _sql_kmv_est(tag: str) -> str:
 )
 def kmv_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
-
-    def kmv_est(pred) -> DataFrame:
-        # orderBy + limit plans as TakeOrderedAndProject over the distinct
-        # fingerprint relation (k smallest of per-partition k smallest) —
-        # no global sort, no single-partition window shuffle.
-        h = (
-            e.filter(pred)
-            .select(F.md5(F.col("user_id").cast("string")).alias("hh"))
-            .distinct()
-        )
-        sk = h.orderBy("hh").limit(_KMV_K).agg(
-            F.max("hh").alias("kth"), F.count(F.lit(1)).alias("m")
-        )
-        kth_val = hex_int(F.col("kth"), width=12)
-        return sk.select(
-            F.when(F.col("m") < _KMV_K, F.col("m").cast("double"))
-            .otherwise(
-                F.lit(_KMV_K - 1.0) / (kth_val.cast("double") / F.lit(_KMV_SPACE))
-            )
-            .alias("est")
-        )
-
-    ea = kmv_est(F.col("event_type") == "click").select(F.col("est").alias("est_a"))
-    eb = kmv_est(F.col("event_type") == "view").select(F.col("est").alias("est_b"))
-    eu = kmv_est(F.col("event_type").isin("click", "view")).select(
-        F.col("est").alias("est_u")
+    et = F.col("event_type")
+    tagged = e.filter(et.isin("click", "view")).select(
+        "user_id",
+        F.explode(F.array(F.when(et == "click", "a").otherwise("b"), F.lit("u"))).alias("tag"),
     )
-    clickers = e.filter(F.col("event_type") == "click").select("user_id").distinct()
-    viewers = e.filter(F.col("event_type") == "view").select("user_id").distinct()
+    wide = sketch.kmv_estimate(tagged, "tag", "user_id").agg(
+        *[
+            F.coalesce(F.max(F.when(F.col("tag") == t, F.col("est"))), F.lit(0.0)).alias(f"est_{t}")
+            for t in "abu"
+        ]
+    )
+    clickers = e.filter(et == "click").select("user_id").distinct()
+    viewers = e.filter(et == "view").select("user_id").distinct()
     exact = clickers.intersect(viewers).agg(
         F.count(F.lit(1)).alias("exact_intersection")
     )
-    wide = ea.crossJoin(eb).crossJoin(eu).crossJoin(exact)
     est_int = F.col("est_a") + F.col("est_b") - F.col("est_u")
-    return wide.select(
+    return wide.crossJoin(exact).select(
         F.round("est_a", 2).alias("est_a"),
         F.round("est_b", 2).alias("est_b"),
         F.round("est_u", 2).alias("est_union"),
@@ -2306,36 +2236,24 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: the sketch is THE textbook bounded sufficient statistic —
 # D*W = 4096 cells regardless of corpus size, built by partial-aggregated
-# hash aggregation and broadcast back for lookups; at 100 TB the token
-# stream reduces map-side to the distinct-word relation before any md5 is
-# computed (hashing cost is per distinct word, not per occurrence), the
-# estimate join broadcasts the 4096-row sketch, and the phi threshold is
-# a 1-row scalar broadcast. Buckets use the repo's md5-hex4 discipline
-# (`sampling.hash_bucket` / `oracle_sql.hash_bucket_sql`) so both engines
-# compute bit-identical sketches — the collision pattern itself is part
-# of the parity contract.
+# hash aggregation and broadcast back for lookups
+# (`sketch.countmin_estimate`); at 100 TB the token stream reduces
+# map-side to the distinct-word relation before any md5 is computed
+# (hashing cost is per distinct word, not per occurrence), the estimate
+# join broadcasts the 4096-row sketch, and the phi threshold is a 1-row
+# scalar broadcast. Buckets are the sketch module's md5-hex4 "seed|word"
+# buckets, mirrored by `oracle_sql.countmin_sql`, so both engines compute
+# bit-identical sketches — the collision pattern itself is part of the
+# parity contract.
 
 
 # --- Count-Min-Sketch heavy hitters ------------------------------------------
 
-#: sketch geometry: D independent hash rows x W buckets
-_CMS_D = 4
-_CMS_W = 1024
+#: sketch width (buckets per hash row; sketch.CMS_D rows)
+_WORD_CMS_W = 1024
 #: heavy-hitter rule: estimate >= ceil(N / _CMS_PHI_DIV) of N occurrences
 _CMS_PHI_DIV = 100
 _CMS_TOP = 50
-
-
-def _cms_bucket(i: int, w) -> F.Column:
-    """Row-``i`` CMS bucket of word column ``w`` — md5-hex4 of "i:word",
-    mod W (the engine-portable hash discipline of sampling.hash_bucket,
-    salted per sketch row)."""
-    return (hex_int(F.md5(F.concat(F.lit(f"{i}:"), w))) % _CMS_W).cast("long")
-
-
-def _sql_cms_bucket(i: int, w_sql: str) -> str:
-    key = f"'{i}:' || {w_sql}"
-    return f"CAST({hash_bucket_sql(key)} % {_CMS_W} AS BIGINT)"
 
 
 _CMS_ORACLE = rf"""
@@ -2346,19 +2264,7 @@ _CMS_ORACLE = rf"""
     wc AS (
         SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM tok GROUP BY w
     ),
-    bk AS (
-        SELECT w, cnt, i,
-               CASE i {' '.join(f"WHEN {i} THEN {_sql_cms_bucket(i, 'w')}" for i in range(_CMS_D))} END AS b
-        FROM wc, UNNEST(generate_series(0, {_CMS_D - 1})) AS t(i)
-    ),
-    cms AS (
-        SELECT i, b, CAST(SUM(cnt) AS BIGINT) AS c FROM bk GROUP BY i, b
-    ),
-    est AS (
-        SELECT bk.w, bk.cnt, CAST(MIN(cms.c) AS BIGINT) AS est
-        FROM bk JOIN cms ON cms.i = bk.i AND cms.b = bk.b
-        GROUP BY bk.w, bk.cnt
-    ),
+    est AS ({countmin_sql("wc", "w", "cnt", _WORD_CMS_W)}),
     tot AS (
         SELECT CAST(SUM(cnt) AS BIGINT) AS n,
                CAST((SUM(cnt) + {_CMS_PHI_DIV - 1}) // {_CMS_PHI_DIV}
@@ -2366,13 +2272,13 @@ _CMS_ORACLE = rf"""
         FROM wc
     )
     SELECT w AS term,
-           est AS est_count,
+           est_count,
            cnt AS exact_count,
-           CAST(est - cnt AS BIGINT) AS overcount,
+           CAST(est_count - cnt AS BIGINT) AS overcount,
            CAST(cnt >= thr AS BIGINT) AS heavy_exact
     FROM est CROSS JOIN tot
-    WHERE est >= thr
-    ORDER BY est DESC, term
+    WHERE est_count >= thr
+    ORDER BY est_count DESC, term
     LIMIT {_CMS_TOP}
 """
 
@@ -2381,32 +2287,14 @@ _CMS_ORACLE = rf"""
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top heavy-hitter terms by Count-Min-Sketch estimate, with the
     exact count and the (provably non-negative) overcount alongside.
-    See module docstring for the sketch geometry and scale shape."""
-    from ..operators.text import words
-
+    See the comment above for the sketch geometry and scale shape."""
     d = load_table(spark, sf_dir, "documents")
     wc = store.keep(
-        d.select(F.explode(words(F.col("text"))).alias("w"))
+        d.select(F.explode(text_words(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
-    bk = store.keep(
-        wc.select(
-            "w", "cnt", *[_cms_bucket(i, F.col("w")).alias(f"b{i}") for i in range(_CMS_D)]
-        ).selectExpr(
-            "w",
-            "cnt",
-            "stack({}, {}) as (i, b)".format(
-                _CMS_D, ", ".join(f"{i}L, b{i}" for i in range(_CMS_D))
-            ),
-        )
-    )
-    cms = bk.groupBy("i", "b").agg(F.sum("cnt").cast("long").alias("c"))
-    est = (
-        bk.join(F.broadcast(cms), ["i", "b"])
-        .groupBy("w", "cnt")
-        .agg(F.min("c").cast("long").alias("est"))
-    )
+    est = sketch.countmin_estimate(wc, "w", "cnt", _WORD_CMS_W)
     tot = wc.agg(
         F.sum("cnt").cast("long").alias("n"),
         F.expr(
@@ -2416,12 +2304,12 @@ def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         est.crossJoin(F.broadcast(tot))
-        .filter(F.col("est") >= F.col("thr"))
+        .filter(F.col("est_count") >= F.col("thr"))
         .select(
             F.col("w").alias("term"),
-            F.col("est").alias("est_count"),
+            "est_count",
             F.col("cnt").alias("exact_count"),
-            (F.col("est") - F.col("cnt")).cast("long").alias("overcount"),
+            (F.col("est_count") - F.col("cnt")).cast("long").alias("overcount"),
             (F.col("cnt") >= F.col("thr")).cast("long").alias("heavy_exact"),
         )
         .orderBy(F.col("est_count").desc(), "term")

@@ -419,26 +419,28 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-ingest exact dedup, Bloom-pruned: incoming documents
     (hash bucket < 30) are kept only if their exact text is absent from
-    the already-ingested corpus (bucket >= 30). The Bloom bit-set of the
-    corpus (bounded, broadcast — operators/sketch) first classifies each
-    incoming doc: definite-new rows SKIP the verify join entirely (no
-    false negatives), and only maybe-members anti-join against the corpus
-    — at 100 TB that turns a full fact-fact anti-join into a broadcast
-    probe plus a join over the (tiny) maybe set. The oracle is the plain
-    anti-join, proving the pruned composition is semantics-neutral."""
+    the already-ingested corpus (bucket >= 30). The corpus's packed 2^20-bit
+    Bloom bitset (bounded, 128 KB — operators/sketch) first gives
+    each incoming doc its hit count: definite-new rows (a NULL text
+    included, 0 hits) SKIP the verify join entirely (no false negatives),
+    and only maybe-members anti-join against the corpus — at 100 TB that
+    turns a full fact-fact anti-join into a map-side bit test plus a join
+    over the (tiny) maybe set. The oracle is the plain anti-join, proving
+    the pruned composition is semantics-neutral."""
     d = load_table(spark, sf_dir, "documents")
     b = sampling.hash_bucket(F.col("doc_id"))
     inc = d.filter(b < 30).select("doc_id", "lang", "text")
+    # the bitset folds straight off the corpus scan (a repeated text lights
+    # the same bits), so only the anti-join pays the DISTINCT's shuffle.
+    # Its width is the fixed default (~1% false positives up to ~100k
+    # corpus texts): bloom_xl_build's cardinality pass cost +0.35 s warm
+    # at sf0.1 (4 cores), and a wider bitset only moves the prune's yield
+    words = sketch.bloom_bitset_words(d.filter(b >= 30), "text")
     corp = d.filter(b >= 30).select("text").distinct()
-    bits = sketch.bloom_build(corp, "text")
-    probed = sketch.bloom_probe(inc, bits, "doc_id", "text")
-    definite_new = inc.join(
-        probed.filter(F.col("maybe_member") == 0).select("doc_id"), "doc_id", "left_semi"
-    )
-    maybes = inc.join(
-        probed.filter(F.col("maybe_member") == 1).select("doc_id"), "doc_id", "left_semi"
-    )
-    verified_new = maybes.join(corp, "text", "left_anti")
+    probed = sketch.bloom_hits(inc, "text", words, sketch.BLOOM_XL_HEXW)
+    maybe = F.col("n_hits") == sketch.BLOOM_K
+    definite_new = probed.filter(~maybe).drop("n_hits")
+    verified_new = probed.filter(maybe).drop("n_hits").join(corp, "text", "left_anti")
     kept = definite_new.unionByName(verified_new).select(
         F.col("doc_id").alias("k_id"), F.col("lang").alias("k_lang")
     )
@@ -1399,8 +1401,8 @@ def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination with a broadcast-bloom prefilter — the 100 TB
     shape of decontaminate_ngram_exact. The test split's 8-grams fold
-    into a packed 2^20-bit bloom (bounded 128 KB driver collect and
-    broadcast, regardless of corpus size); train grams are pruned
+    into a packed 2^20-bit bloom (bounded 128 KB driver collect, shipped
+    as one scalar subquery, regardless of corpus size); train grams are pruned
     MAP-SIDE by pure bit arithmetic before the equi-join, so the
     shuffle carries only maybe-contaminating grams instead of the whole
     train corpus. The bloom has no false negatives (identical md5

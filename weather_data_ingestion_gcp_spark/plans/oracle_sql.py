@@ -2,10 +2,11 @@
 
 Every registered query carries a DuckDB oracle; the oracles of queries
 that run the same operator (the word split, shingling, MinHash banding,
-Jaccard verify, the md5-hex integer, ...) build it here, so each
-primitive is spelled exactly once. This module registers no queries and
-imports no plan module that does, so any plan module can use it without
-depending on registration order.
+Jaccard verify, the md5-hex integer, the Bloom, Count-Min and KMV
+sketches, ...) build it here, so each primitive is spelled exactly
+once. This module registers no queries and imports no plan module that
+does, so any plan module can use it without depending on registration
+order.
 
 Fragments that take no parameter are plain strings. Builders that
 return CTE text (``minhash_bands_sql``, ``overlap_sql``,
@@ -17,11 +18,23 @@ from __future__ import annotations
 
 from ..operators import similarity, text
 from ..operators.dedup import JACCARD_FLOOR, NUM_HASHES, ROWS_PER_BAND
+from ..operators.sketch import BLOOM_K, CMS_D, KMV_K, KMV_SPACE
 from .registry import _SAMPLE_PCT, _SAMPLE_TARGET_DOCS
 
 #: Java's ``\s`` spelled out for RE2, whose ``\s`` lacks the vertical
 #: tab (U+000B); U+00A0 is in neither
 ws_class_sql = r"[\t\n\v\f\r ]"
+
+
+def non_ws_class_sql(chars: str) -> str:
+    """RE2 class of one character neither in ``chars`` (a class body like
+    ``a-z0-9``) nor whitespace — mirrors Java's ``[^<chars>\\s]``."""
+    return f"[^{chars}{ws_class_sql[1:-1]}]"
+
+
+#: letter runs, digit runs and single non-space symbols — mirrors
+#: operators.text.TOKEN_REGEX
+token_regex_sql = f"[A-Za-z]+|[0-9]+|{non_ws_class_sql('A-Za-z0-9')}"
 
 #: lowercase whitespace split with empty tokens dropped — mirrors
 #: operators.text.words
@@ -268,6 +281,53 @@ winnow_fps_sql = f"""norm AS (
                         ELSE [] END) AS fps
         FROM g
     )"""
+
+
+def bloom_positions_sql(key_sql: str, hexw: int) -> str:
+    """List of the ``BLOOM_K`` bit positions of ``key_sql``: disjoint
+    ``hexw``-digit slices of its md5, NULLs for a NULL key — mirrors
+    operators.sketch.bloom_positions."""
+    fp = f"md5({key_sql})"
+    return "[" + ", ".join(
+        hex_sql(fp, start=hexw * j + 1, width=hexw) for j in range(BLOOM_K)
+    ) + "]"
+
+
+def countmin_sql(counts: str, key: str, cnt: str, width: int) -> str:
+    """Query of (<key>, <cnt>, est_count) over the one-row-per-key
+    relation ``counts``: the Count-Min estimate at ``CMS_D`` rows x
+    ``width`` buckets, a NULL key dropped — mirrors
+    operators.sketch.countmin_estimate."""
+    bucket = hex_sql(f"md5(CAST(s.seed AS VARCHAR) || '|' || CAST({key} AS VARCHAR))")
+    return f"""
+        WITH sb AS (
+            SELECT {key}, {cnt}, s.seed, {bucket} % {width} AS bucket
+            FROM {counts} CROSS JOIN (SELECT unnest(range({CMS_D})) AS seed) s
+        ),
+        cells AS (SELECT seed, bucket, SUM({cnt}) AS c FROM sb GROUP BY seed, bucket)
+        SELECT {key}, {cnt}, CAST(MIN(c) AS BIGINT) AS est_count
+        FROM sb JOIN cells USING (seed, bucket)
+        GROUP BY {key}, {cnt}"""
+
+
+def kmv_sql(src: str, group: str, key: str) -> str:
+    """Query of (<group>, est) over relation ``src``: the KMV estimate of
+    the distinct non-NULL ``key`` values per ``group`` at ``KMV_K`` —
+    mirrors operators.sketch.kmv_estimate."""
+    return f"""
+        SELECT {group},
+               CASE WHEN COUNT(*) < {KMV_K} THEN CAST(COUNT(*) AS DOUBLE)
+                    ELSE ({KMV_K} - 1.0)
+                         / (CAST({hex_sql("MAX(hh)", width=12)} AS DOUBLE)
+                            / {KMV_SPACE!r})
+               END AS est
+        FROM (
+            SELECT {group}, hh,
+                   ROW_NUMBER() OVER (PARTITION BY {group} ORDER BY hh) AS rn
+            FROM (SELECT DISTINCT {group}, md5(CAST({key} AS VARCHAR)) AS hh
+                  FROM {src} WHERE {key} IS NOT NULL)
+        )
+        WHERE rn <= {KMV_K} GROUP BY {group}"""
 
 
 def sign_bands_sql() -> str:

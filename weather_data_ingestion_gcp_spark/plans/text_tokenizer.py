@@ -22,8 +22,10 @@ from ..operators.text import words as text_words
 from .oracle_sql import (
     collapse_ws_sql,
     fingerprint_sql,
+    non_ws_class_sql,
     shingles_sql,
     stoplist_sql,
+    token_regex_sql,
     tokens_sql,
     winnow_fps_sql,
     words_sql,
@@ -104,10 +106,10 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_token_counts",
-    oracle=rf"""
+    oracle=f"""
     SELECT doc_id,
            len({words_sql}) AS ws_tokens,
-           len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
+           len(regexp_extract_all(text, '{token_regex_sql}'))
              AS re_tokens
     FROM documents ORDER BY doc_id
     """,
@@ -489,7 +491,7 @@ def boilerplate_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whitespace. Map-only stage, whole-stage codegen end to end.
 # ---------------------------------------------------------------------------
 #: lowercased text with every non-alphanumeric ASCII char spaced out
-_ALNUM_SPACED_SQL = r"regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g')"
+_ALNUM_SPACED_SQL = f"regexp_replace(lower(text), '{non_ws_class_sql('a-z0-9')}', ' ', 'g')"
 
 
 @register(
@@ -1427,11 +1429,11 @@ def langid_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "token_fertility_by_lang",
-    oracle=rf"""
+    oracle=f"""
     WITH t AS (
         SELECT lang,
                len({words_sql}) AS ws_tokens,
-               len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]'))
+               len(regexp_extract_all(text, '{token_regex_sql}'))
                  AS re_tokens,
                n_chars
         FROM documents

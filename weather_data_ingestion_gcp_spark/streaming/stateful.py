@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.sketch import mg_update
+
 #: (n_events_total, value_total, emit_seq)
 _STATE_SCHEMA = "n BIGINT, total DOUBLE, seq BIGINT"
 _OUTPUT_SCHEMA = "user_id BIGINT, n_events BIGINT, value_total DOUBLE, emit_seq BIGINT"
@@ -142,9 +144,10 @@ except ImportError:  # pragma: no cover - pyspark < 4.0 or no protobuf
 
 # ---------------------------------------------------------------------------
 # Streaming Misra-Gries heavy-hitter candidates — the stream twin of
-# operators.sketch.mg_heavy_hitters. Keys are hash-bucketed so every
-# occurrence of a word lands in ONE group's state; within the bucket the
-# classic k-counter summary holds the MG guarantee (candidate count >=
+# operators.sketch.mg_heavy_hitters, running the same k-counter step
+# (sketch.mg_update). Keys are hash-bucketed so every occurrence of a
+# word lands in ONE group's state; within the bucket the k-counter
+# summary holds the MG guarantee (candidate count >=
 # true count - n_bucket/(k+1), every item above n_bucket/(k+1) present).
 # State per bucket is two bounded arrays (<= k keys + counts) regardless
 # of stream length — the memory contract that makes frequency tracking
@@ -169,17 +172,8 @@ def _mg_update_factory(k: int):
         else:
             counters, n_seen, seq = {}, 0, 0
         for pdf in pdfs:
-            for w in pdf["w"]:
-                n_seen += 1
-                if w in counters:
-                    counters[w] += 1
-                elif len(counters) < k:
-                    counters[w] = 1
-                else:
-                    for c in list(counters):
-                        counters[c] -= 1
-                        if counters[c] == 0:
-                            del counters[c]
+            n_seen += len(pdf)
+            mg_update(counters, pdf["w"], k)
         seq += 1
         state.update((list(counters), [counters[c] for c in counters], n_seen, seq))
         yield pd.DataFrame(
