@@ -33,6 +33,18 @@ def test_exact_dedup(docs):
     assert sorted(r.doc_id for r in kept.collect()) == [0, 1, 3, 4]
 
 
+def test_exact_dedup_rn_payload_column_survives(spark):
+    """A payload column literally named _rn must not be clobbered by the
+    keep-first row number."""
+    df = spark.createDataFrame(
+        [(1, 77, "a"), (2, 99, "a"), (3, 55, "b")],
+        "doc_id long, _rn long, text string",
+    )
+    kept = dedup.drop_exact_duplicates(df, "doc_id", "text")
+    assert kept.columns == ["doc_id", "_rn", "text"]
+    assert sorted(tuple(r) for r in kept.collect()) == [(1, 77, "a"), (3, 55, "b")]
+
+
 def test_minhash_finds_near_dups(spark, docs):
     # md5-hashing makes the candidate set deterministic: at the module
     # geometry (8 hashes, 4 bands of 2 rows) the exact dup and the

@@ -239,6 +239,26 @@ def test_streaming_dedup_hardening(spark, tmp_path):
     assert wh.read_hourly().count() == 24
 
 
+def test_streaming_dedup_winner_ignores_input_order(spark, tmp_path):
+    """dedup=True keeps the same row for a duplicated (dt, current_time,
+    name) observation whatever order the two deliveries arrive in (a
+    redelivered event can carry a corrected payload)."""
+    from weather_data_ingestion_gcp_spark.streaming.pipeline import _batch_processor
+
+    first = hourly_rows(days=1, partial_last_day=False)[0]
+    second = dict(first, main=dict(first["main"], temp=first["main"]["temp"] + 1.0))
+    kept = []
+    for i, rows in enumerate(([first, second], [second, first])):
+        wh = WeatherWarehouse(spark, str(tmp_path / f"wh{i}"))
+        # one partition: the input order is the order a first-seen rule
+        # would keep
+        batch = spark.createDataFrame(rows, WEATHER_SCHEMA).coalesce(1)
+        _batch_processor(wh, dedup=True)(batch, 0)
+        (row,) = wh.read_hourly().collect()
+        kept.append(row["main"]["temp"])
+    assert kept[0] == kept[1] == first["main"]["temp"]
+
+
 def test_error_rows_logged_on_failure(spark, tmp_path):
     """P16: a failing batch produces an error log row and re-raises."""
     wh = WeatherWarehouse(spark, str(tmp_path / "wh"))

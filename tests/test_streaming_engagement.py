@@ -222,8 +222,9 @@ def test_replay_with_concurrent_commit_does_not_resurrect(spark, tmp_path):
     content-neutral checkpoint standing in for a racing retention job)
     made committed read True, unioning the batch's novel rows — rows a
     retention delete had already removed — back into the recompute
-    slice. The commit_info check reads the returned commit's own txn
-    entry instead, so the replay sees the table's real truth: empty."""
+    slice. TxLogTable.append_once reports the skipped replay as not
+    committed whatever else committed meanwhile, so the replay sees the
+    table's real truth: empty."""
     presence = TxLogTable(str(tmp_path / "presence"))
     profile = TxLogTable(str(tmp_path / "profile"))
     sink = engagement_sink(presence, profile, "engage-race")
@@ -309,8 +310,8 @@ def test_sink_entry_big_input_path_matches_small_path(spark, monkeypatch):
 
 def test_sink_batch_replays_each_log_at_most_twice(spark, tmp_path, monkeypatch):
     """Per batch, the sink replays the presence log for its read and its
-    append (plus one commit_info read) and the profile log once for its
-    replace_range — not once per helper call."""
+    append and the profile log once for its replace_range — not once per
+    helper call."""
     presence = TxLogTable(str(tmp_path / "presence"))
     profile = TxLogTable(str(tmp_path / "profile"))
     sink = engagement_sink(presence, profile, "engage-reads")
@@ -334,3 +335,50 @@ def test_sink_batch_replays_each_log_at_most_twice(spark, tmp_path, monkeypatch)
     assert presence.version() == 7 and profile.version() == 7
     assert reads[presence.root] <= 17
     assert reads[profile.root] <= 8
+
+
+def test_null_ts_rows_do_not_reland_across_batches(spark, tmp_path):
+    """A NULL ts is presence on no calendar day: the sink drops it before
+    the novelty anti-join, so three batches of the same rows leave the
+    one real (user, day) row — a plain anti-join re-landed every NULL-day
+    row in every batch (7 rows)."""
+    presence = TxLogTable(str(tmp_path / "presence"))
+    profile = TxLogTable(str(tmp_path / "profile"))
+    sink = engagement_sink(presence, profile, "engage-null-ts")
+    rows = [(0, 1, _BASE), (1, 1, None), (2, 2, None)]
+    for b in range(3):
+        sink(spark.createDataFrame(rows, _SCHEMA), b)
+    assert [tuple(r) for r in presence.read(spark).collect()] == [
+        (1, _BASE.date())
+    ]
+    assert _profile_rows(spark, profile) == _brute_force({1: {0}})
+
+
+def test_dau_wau_engagement_matches_oracle_with_a_null_ts(spark, tmp_path):
+    """dau_wau_engagement on an events table holding one NULL-ts event
+    gives the oracle's rows: the NULL day is on no calendar day (it used
+    to reach the stickiness division with wau 0 and raise
+    DIVIDE_BY_ZERO)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tools.parity import rowset
+    from weather_data_ingestion_gcp_spark.plans import ORACLE, QUERIES
+
+    events = pq.read_table("/root/testdata/sf0.001/events.parquet")
+    null_ts = events.slice(0, 1).set_column(
+        events.schema.get_field_index("ts"),
+        "ts",
+        pa.nulls(1, events.schema.field("ts").type),
+    )
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(pa.concat_tables([events, null_ts]), path)
+
+    sdf = QUERIES["dau_wau_engagement"](spark, str(tmp_path))
+    got = rowset(sdf.columns, [tuple(r) for r in sdf.collect()])
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    rel = con.execute(ORACLE["dau_wau_engagement"])
+    want = rowset([d[0] for d in rel.description], rel.fetchall())
+    assert got == want and len(got[1]) > 0

@@ -245,17 +245,15 @@ def test_idempotent_txn_append_survives_checkpoint(spark, tmp_path):
 
 
 def test_streaming_foreach_batch_sink_exactly_once(spark, tmp_path):
-    """Drive a real file-source stream into the txlog table via the
-    foreachBatch appender, then re-invoke the appender with the last
-    batch (exactly what Structured Streaming does when restarting from a
-    checkpoint whose sink write never acknowledged) — the table must not
-    double-count."""
+    """Drive a real file-source stream into the txlog table through a
+    foreachBatch sink that calls append_once, then re-invoke the sink
+    with the last batch (exactly what Structured Streaming does when
+    restarting from a checkpoint whose sink write never acknowledged) —
+    the table must not double-count, and the replay reports that its
+    commit did not land."""
     from weather_data_ingestion_gcp_spark.sources.landing import (
         stream_landing,
         write_landing_file,
-    )
-    from weather_data_ingestion_gcp_spark.sources.txlog import (
-        foreach_batch_appender,
     )
 
     landing = str(tmp_path / "landing")
@@ -263,7 +261,11 @@ def test_streaming_foreach_batch_sink_exactly_once(spark, tmp_path):
     write_landing_file(spark, df, landing, stamp="20220701-23:00:05")
 
     t = TxLogTable(str(tmp_path / "t"))
-    sink = foreach_batch_appender(t, "ingest-q")
+    landed = []
+
+    def sink(batch_df, batch_id):
+        landed.append(t.append_once(batch_df, "ingest-q", batch_id))
+
     q = (
         stream_landing(spark, landing)
         .writeStream.foreachBatch(sink)
@@ -274,9 +276,11 @@ def test_streaming_foreach_batch_sink_exactly_once(spark, tmp_path):
     q.awaitTermination(120)
     n = t.read(spark).count()
     assert n == df.count()
+    assert landed == [True]
     # post-crash replay of the already-committed batch
     sink(spark.createDataFrame(hourly_rows(days=2), WEATHER_SCHEMA), 0)
     assert t.read(spark).count() == n
+    assert landed == [True, False]
 
 
 def test_merge_updates_matched_inserts_new_rewrites_only_touched(spark, tmp_path):
@@ -989,24 +993,24 @@ def test_all_rows_deleted_rewrite_leaves_no_orphan_staging_dir(
     assert not os.path.exists(orphan)
 
 
-def test_commit_info_distinguishes_own_commit_from_txn_skip(
+def test_append_once_distinguishes_own_commit_from_txn_skip(
     spark, tmp_path
 ):
-    """ADVICE r12: commit_info(version) is the race-free way to learn
-    whether a txn append COMMITTED — the returned version's own txn
-    entry is ours iff we committed, regardless of concurrent commits
-    (a version-delta check reads True when anyone else commits between
-    the version() read and the append)."""
+    """append_once is the race-free way to learn whether a txn append
+    COMMITTED: True iff this attempt's commit landed, regardless of
+    concurrent commits (a version-delta check reads True when anyone
+    else commits between the version() read and the append)."""
     t = TxLogTable(str(tmp_path / "t"))
     df = spark.createDataFrame([(1,)], "id int")
-    v = t.append(df, txn=("app", 0))
-    assert t.commit_info(v).get("txn") == ["app", 0]
+    assert t.append_once(df, "app", 0)
+    # a replay right behind its own commit is skipped
+    assert not t.append_once(df, "app", 0)
     # a concurrent commit (checkpoint: content-neutral) lands, then the
-    # txn replay is skipped — the returned version is the checkpoint's,
-    # whose entry carries no txn, so the caller reads "not committed"
+    # txn replay is skipped — the caller reads "not committed"
     t.checkpoint()
-    v2 = t.append(df, txn=("app", 0))
-    assert t.commit_info(v2).get("txn") != ["app", 0]
+    before = t.version()
+    assert not t.append_once(df, "app", 0)
+    assert t.version() == before
     assert t.read(spark).count() == 1
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..store import keep
 from .sampling import hex_int, sub_block
@@ -51,12 +52,62 @@ def exact_dedup_groups(df: DataFrame, id_col: str, content_col: str) -> DataFram
     )
 
 
-def drop_exact_duplicates(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
-    """Keep the min-id row per distinct content (deterministic keep-first)."""
+def fresh_name(name: str, taken) -> str:
+    """``name``, underscore-prefixed until it is not in ``taken`` (a
+    frame's columns): an internal column never shadows a caller's."""
+    while name in taken:
+        name = "_" + name
+    return name
+
+
+def _first_per(df: DataFrame, partition, order: list[Column]) -> DataFrame:
+    """The first row of each ``partition`` group by ``order``."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(F.md5(F.col(content_col))).orderBy(id_col)
-    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+    rn = fresh_name("_rn", df.columns)
+    w = Window.partitionBy(*partition).orderBy(*order)
+    return df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) == 1).drop(rn)
+
+
+def drop_exact_duplicates(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
+    """Keep the min-id row per distinct content (deterministic keep-first)."""
+    return _first_per(df, [F.md5(F.col(content_col))], [F.col(id_col)])
+
+
+def _orderable(dt) -> bool:
+    # MapType cannot be sorted; arrays/structs are orderable iff their
+    # element/field types are
+    if isinstance(dt, T.MapType):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _orderable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_orderable(f.dataType) for f in dt.fields)
+    return True
+
+
+def one_per_key(df: DataFrame, keys: list[str]) -> DataFrame:
+    """One row per ``keys`` value, and the SAME row on every partitioning
+    and input order: the least by the orderable payload columns
+    (ascending, NULLs first). ``dropDuplicates`` keeps whichever row a
+    partition meets first, so a replayed micro-batch could land a
+    different payload than its first attempt did.
+
+    Rows can tie on every orderable column while differing in a
+    non-orderable one (a map). The last tiebreak is the xxhash64 of the
+    JSON of those columns: a replay re-serializes each row identically,
+    so the hash-least row is stable. (Two equal maps built in different
+    key orders hash differently; that changes which duplicate wins,
+    never whether the choice is stable.) A keys-only frame has no
+    payload to choose by, so any row is the row."""
+    payload = [f for f in df.schema.fields if f.name not in keys]
+    order = [F.col(f.name).asc_nulls_first() for f in payload if _orderable(f.dataType)]
+    maps = sorted(f.name for f in payload if not _orderable(f.dataType))
+    if maps:
+        order.append(F.xxhash64(F.to_json(F.struct(*[F.col(c) for c in maps]))).asc())
+    if not order:
+        return df.dropDuplicates(keys)
+    return _first_per(df, keys, order)
 
 
 # ---------------------------------------------------------------------------
@@ -422,17 +473,8 @@ def blocked_jaccard_pairs(
     pairs never appear, so ``threshold`` must be positive."""
     if threshold <= 0:
         raise ValueError(f"threshold must be positive, got {threshold}")
-    # internal names must not shadow a caller's block column (the
-    # ingest-dedup '_rn' probing pattern)
-    taken = set(df.columns)
-
-    def _fresh(name: str) -> str:
-        while name in taken:
-            name = "_" + name
-        taken.add(name)
-        return name
-
-    bn, sub, ids, p = _fresh("_bn"), _fresh("_sub"), _fresh("_ids"), _fresh("_p")
+    # internal names must not shadow a caller's block column
+    bn, sub, ids, p = (fresh_name(n, df.columns) for n in ("_bn", "_sub", "_ids", "_p"))
     counts = df.groupBy(*block_cols).agg(F.count(F.lit(1)).alias(bn))
     salt = sub_block(F.col(id_col), bn, int(max_block_size))
     # counts is block-cardinality-sized -> broadcast side; the salt is

@@ -1,4 +1,5 @@
-"""Incremental view maintenance from an insert/delete change feed.
+"""Incremental view maintenance from an insert/delete change feed, and
+the NULL-safe novelty anti-join an incremental ingest appends through.
 
 The consumer that makes ``TxLogTable.changes`` load-bearing: a stored
 rollup (sum/count/avg per group) is brought from snapshot A to snapshot
@@ -17,8 +18,31 @@ change interval touches many days sparsely.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+import operator
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def same_keys(left: str, right: str, keys: list[str]) -> Column:
+    """Join condition: ``keys`` equal between the frames aliased ``left``
+    and ``right``, NULL-safe — a NULL key matches a NULL key, where a
+    plain equi-join matches NULL to nothing."""
+    return functools.reduce(
+        operator.and_,
+        [F.col(f"{left}.{k}").eqNullSafe(F.col(f"{right}.{k}")) for k in keys],
+    )
+
+
+def novel(df: DataFrame, existing: DataFrame, keys: list[str]) -> DataFrame:
+    """The rows of ``df`` whose ``keys`` appear in no row of ``existing``
+    — the new rows of an ingest. NULL-safe (:func:`same_keys`): a
+    NULL-keyed row that already landed is not new again, where a plain
+    anti-join would re-land it every batch."""
+    return df.alias("_new").join(
+        existing.alias("_old"), same_keys("_new", "_old", keys), "left_anti"
+    )
 
 
 def delta_sum_count(changes: DataFrame, keys: list[str],
@@ -61,13 +85,7 @@ def apply_delta(rollup: DataFrame, delta: DataFrame, keys: list[str],
     outer join. Null-safe on both sides."""
     r = rollup.alias("r")
     d = delta.alias("d")
-    import functools
-
-    cond = functools.reduce(
-        lambda a, b: a & b,
-        [F.col(f"r.{k}").eqNullSafe(F.col(f"d.{k}")) for k in keys],
-    )
-    merged = r.join(d, cond, "full_outer").select(
+    merged = r.join(d, same_keys("r", "d", keys), "full_outer").select(
         *[
             F.coalesce(F.col(f"r.{k}"), F.col(f"d.{k}")).alias(k)
             for k in keys

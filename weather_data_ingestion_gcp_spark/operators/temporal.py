@@ -184,11 +184,14 @@ def daily_engagement(active: DataFrame, window_days: int = 7) -> DataFrame:
     is a bounded single-partition pass by construction.
 
     Output: (d, dau, wau, stickiness) for ACTIVE days only (dau >= 1),
-    matching the declarative sliding-distinct definition exactly.
+    matching the declarative sliding-distinct definition exactly. A NULL
+    day is on no calendar day, so its rows are dropped (kept, they would
+    form a NULL-day group with wau 0 and divide by zero).
     Shared by the batch query (plans/streaming_events.py dau_wau_engagement) and
     the streaming profile sink (streaming/engagement.py) so the two
     grains cannot drift."""
     span = window_days - 1
+    active = active.filter(F.col("d").isNotNull())
     dau = active.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("dau"))
     wu = Window.partitionBy("user_id").orderBy("d")
     prev = F.lag("d").over(wu)

@@ -120,9 +120,12 @@ DRIVER_WINDOW = [
     "cms_heavy_hitters",
     "heavy_hitters_mg",
     "text_token_counts",
-    # r08 documents scans (standalone pipelines)
-    "source_unigram_kl",
-    "vocab_oov_rate",
+    # changed-code leads: the batch twin of the engagement sink, whose
+    # daily_engagement now drops NULL days, and the change-feed rollup,
+    # whose merge joins on the NULL-safe key condition the ingest
+    # sinks' novelty anti-join shares
+    "dau_wau_engagement",
+    "incremental_rollup_equivalence",
     # r08 events scans
     "error_capture_routing",
     # r08 multimodal plumbing + the NEW r13 analytic over the same

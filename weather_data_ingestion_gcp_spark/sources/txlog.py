@@ -237,16 +237,6 @@ class TxLogTable:
     def history(self) -> list[dict]:
         return [self._read_commit(v) for v in self._versions()]
 
-    def commit_info(self, version: int) -> dict:
-        """The commit entry at ``version`` — lets a caller check what a
-        specific commit actually did. The canonical use: a txn-keyed
-        ``append`` returns a version, and ONLY this entry's own ``txn``
-        field says whether that version is the caller's commit or a
-        txn-skipped replay's view of someone else's — inferring from a
-        version DELTA races any concurrent commit landing between the
-        caller's version() read and the append."""
-        return self._read_commit(version)
-
     def _read_commit(self, v: int) -> dict:
         with open(os.path.join(self.log_dir, f"{v:010d}.json")) as f:
             return json.load(f)
@@ -502,13 +492,14 @@ class TxLogTable:
 
     def _rewrite(self, spark: SparkSession, snap: _Snapshot, op: str,
                  remove: list[str], keep, add_df: DataFrame | None,
-                 **meta) -> int:
+                 **meta) -> int | None:
         """The one write path: the rows of the ``remove`` files that
         ``keep`` retains (``keep=None``: none) plus ``add_df`` are staged
         in ONE write and published as ONE remove+add commit, so a reader
         sees the old table or the new one and a crash leaves the old one.
         A losing append re-publishes its staged files on the next version
-        (it removes nothing, so it cannot conflict semantically); every
+        (it removes nothing, so it cannot conflict semantically), or
+        returns None if the winner committed the same txn key; every
         other op raises CommitConflict, since its remove set may be
         stale."""
         entry: dict = {"op": op, **meta}
@@ -531,25 +522,35 @@ class TxLogTable:
                     raise
                 txn = meta.get("txn")
                 if txn and self.committed_txns().get(txn[0], -1) >= txn[1]:
-                    return self.version()  # another worker landed our txn
+                    return None  # another worker landed our txn
 
-    def append(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
-        """Append; safe under concurrent writers (a lost version race
-        retries the commit, see ``_rewrite``). ``txn=(app_id,
-        txn_version)`` makes it IDEMPOTENT: a commit carrying an
-        (app_id, version) pair the log has already recorded is skipped
-        (Delta's txnAppId/txnVersion protocol) — which is exactly what a
-        foreachBatch streaming sink needs to be exactly-once across
-        batch replays after a crash: pass the checkpointed batch_id as
-        txn_version and a stable query name as app_id."""
+    def append(self, df: DataFrame,
+               txn: tuple[str, int] | None = None) -> int | None:
+        """Append and return the committed version; safe under
+        concurrent writers (a lost version race retries the commit, see
+        ``_rewrite``). ``txn=(app_id, txn_version)`` makes it
+        IDEMPOTENT: a commit carrying an (app_id, version) pair the log
+        has already recorded is skipped and returns None (Delta's
+        txnAppId/txnVersion protocol; see ``append_once``)."""
         snap = self._snapshot()
         if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
             # replayed batch — already in (streaming batch ids are
             # monotonically increasing per query, Delta's assumption)
-            return snap.version
+            return None
         meta = {} if txn is None else {"txn": [txn[0], txn[1]]}
         return self._rewrite(df.sparkSession, snap, "append", [], None, df,
                              **meta)
+
+    def append_once(self, df: DataFrame, app_id: str, batch_id: int) -> bool:
+        """The exactly-once step of a ``foreachBatch`` sink: append
+        ``df`` under the ``(app_id, batch_id)`` txn key (a stable query
+        name and the checkpointed batch id), and say whether THIS
+        attempt's commit landed. Structured Streaming replays the last
+        uncommitted batch after a crash; the replay's append is skipped
+        and reads False, whatever else committed meanwhile (a version
+        delta would read True if a retention ``delete_where`` landed
+        between a ``version()`` read and the append)."""
+        return self.append(df, txn=(app_id, int(batch_id))) is not None
 
     def overwrite(self, df: DataFrame) -> int:
         snap = self._snapshot()
@@ -854,18 +855,6 @@ class TxLogTable:
 
     def exists(self) -> bool:
         return self.version() >= 0
-
-
-def foreach_batch_appender(table: TxLogTable, app_id: str):
-    """An exactly-once foreachBatch sink: Structured Streaming replays
-    the last uncommitted batch after a crash, and the (app_id, batch_id)
-    txn key makes the replayed append a no-op — the Delta streaming-sink
-    recipe on the txlog table."""
-
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        table.append(batch_df, txn=(app_id, int(batch_id)))
-
-    return _append
 
 
 class TxLogTableStorage:

@@ -15,10 +15,12 @@ replaying state — while this table-backed design recovers by
 RECOMPUTING from the presence table, which is already exactly-once.
 The batch body is three bounded steps:
 
-1. presence ingest — the batch's distinct (user_id, d) rows, anti-joined
-   against the presence table and appended under an (app_id, batch_id)
-   txn key (the streaming/ingest_dedup.py recipe at (user, day) grain):
-   crash replays are commit-level no-ops.
+1. presence ingest — the batch's distinct (user_id, d) rows (a row
+   with a NULL user or day is on no calendar day and is dropped), the
+   NULL-safe ``operators.incremental.novel`` anti-join against the
+   presence table, and ``TxLogTable.append_once`` under an (app_id,
+   batch_id) txn key — the streaming/ingest_dedup.py steps at (user,
+   day) grain: crash replays are commit-level no-ops.
 2. affected-day bounds from the BATCH's own min/max day — not from the
    post-anti-join novelty: if a crash lands between the presence append
    and the profile refresh, the replayed batch sees zero novel presence
@@ -49,6 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import store
+from ..operators.incremental import novel
 from ..operators.temporal import daily_engagement
 from ..sources.txlog import TxLogTable
 
@@ -98,8 +101,9 @@ def engagement_sink(
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        new = batch_df.filter(F.col("user_id").isNotNull()).select(
-            "user_id", F.to_date("ts").alias("d")
+        # a row with no user or no day is no one's presence on any day
+        new = batch_df.select("user_id", F.to_date("ts").alias("d")).filter(
+            F.col("user_id").isNotNull() & F.col("d").isNotNull()
         )
         if not day_grain_input:
             new = new.distinct()
@@ -114,37 +118,27 @@ def engagement_sink(
         # after the append, paying a second listing + footer + scan of
         # a file set that is by construction pre ∪ novel.
         pre = _read_presence(spark, new)
-        novel = new.join(pre, ["user_id", "d"], "left_anti")
+        fresh = novel(new, pre, ["user_id", "d"])
         if novelty_files:
-            novel = novel.coalesce(novelty_files)
-        novel = novel.persist()
-        # empty batches still commit so the txn map stays monotone.
-        # Whether OUR append committed comes from the returned commit's
-        # own txn entry, never from a version delta: a concurrent commit
-        # (e.g. a retention delete_where) landing between a version()
-        # read and the append would make a delta-based check read True
-        # on a txn-skipped replay — unioning ``novel`` rows the table no
-        # longer holds into the recompute slice (the resurrection case
-        # below).
-        v = presence.append(novel, txn=(app_id, batch_id))
-        committed = (
-            presence.commit_info(v).get("txn") == [app_id, int(batch_id)]
-        )
+            fresh = fresh.coalesce(novelty_files)
+        fresh = fresh.persist()
+        # empty batches still commit so the txn map stays monotone
+        committed = presence.append_once(fresh, app_id, batch_id)
         try:
             if b is None or b["lo"] is None:
                 return
             out_lo = b["lo"]
             out_hi = b["hi"] + dt.timedelta(days=_WINDOW_DAYS - 1)
             in_lo = b["lo"] - dt.timedelta(days=_WINDOW_DAYS - 1)
-            # post-append presence == pre ∪ novel when the append
-            # COMMITTED (it adds exactly the novel rows). On a replayed
+            # post-append presence == pre ∪ fresh when the append
+            # COMMITTED (it adds exactly the fresh rows). On a replayed
             # txn-skipped append nothing landed, so the table truth is
-            # pre alone — novel may be non-empty there if the originally
+            # pre alone — fresh may be non-empty there if the originally
             # appended rows were deleted since (retention between crash
             # and replay; the fully-deleted-presence regression test),
             # and unioning it in would resurrect rows the table no
             # longer holds. Either way: no second table read needed.
-            post = pre.unionByName(novel) if committed else pre
+            post = pre.unionByName(fresh) if committed else pre
             sl = post.filter(
                 (F.col("d") >= F.lit(in_lo)) & (F.col("d") <= F.lit(out_hi))
             )
@@ -160,6 +154,6 @@ def engagement_sink(
             profile.replace_range(spark, "d", out_lo, out_hi, prof)
         finally:
             new.unpersist()
-            novel.unpersist()
+            fresh.unpersist()
 
     return _sink

@@ -3,9 +3,15 @@ Structured Streaming query (SIGMOD'18 incremental-execution model).
 
 Reference event plumbing -> Spark mapping (SURVEY.md §2.7):
 - GCS object-finalize event per landed file (T2)  -> file source discovers
-  new files; the checkpoint makes processing exactly-once per file (T7),
-  strictly better than the reference's at-least-once Pub/Sub redelivery
-  (its raw table double-appends on replay — T6).
+  new files; the checkpoint makes file DISCOVERY exactly-once (T7). The
+  raw append is not: ``foreachBatch`` is at-least-once, and a batch that
+  fails after ``append_hourly`` and before the checkpoint commit is
+  replayed whole. A crash injected into ``refresh_daily`` left ``hourly``
+  with 80 rows for 40 landed — the reference's T6 double-append, still
+  present under a crash. Closing it takes the txn-keyed append the
+  ingest-dedup and engagement sinks already use
+  (``TxLogTable.append_once``) on the warehouse sink: ROADMAP.md,
+  Direction 1.
 - CALL transform per event (T4)                   -> foreachBatch body:
   append raw, recompute ONLY the days present in the batch, dynamic-
   partition-overwrite those days (idempotent update mode).
@@ -14,9 +20,10 @@ Reference event plumbing -> Spark mapping (SURVEY.md §2.7):
 - the reference's unawaited-load race (T10)       -> gone: the body is
   sequential.
 
-Optional hardening beyond the reference (T6): ``dedup=True`` drops
-duplicate (dt, current_time, name) observations inside each batch before
-they ever reach the raw table.
+Optional hardening beyond the reference (T6): ``dedup=True`` keeps one
+row per (dt, current_time, name) observation inside each batch before
+it reaches the raw table — the same row whatever the input order
+(``operators.dedup.one_per_key``).
 """
 
 from __future__ import annotations
@@ -25,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..jobs import WeatherWarehouse
+from ..operators.dedup import one_per_key
 from ..sources.landing import stream_landing
 
 
@@ -32,7 +40,7 @@ def _batch_processor(warehouse: WeatherWarehouse, dedup: bool):
     def process(batch: DataFrame, batch_id: int) -> None:
         # an empty batch is a no-op inside load_and_transform
         if dedup:
-            batch = batch.dropDuplicates(["dt", "current_time", "name"])
+            batch = one_per_key(batch, ["dt", "current_time", "name"])
         warehouse.load_and_transform(batch)
 
     return process
