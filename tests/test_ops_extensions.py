@@ -225,7 +225,8 @@ def test_null_vector_gets_no_bands_and_no_topk_crash(spark):
     assert top(dirty) == top(clean)
 
 
-#: a NULL row (id 0) and a ragged row (id 5: length 2 among length-3 rows)
+#: a NULL row (id 0), a ragged row (id 5: length 2 among length-3 rows)
+#: and a row with a NULL element (id 6: row 5 with a NULL between)
 _HOSTILE = [
     (0, None),
     (1, [1.0, 0.0, 0.0]),
@@ -233,21 +234,32 @@ _HOSTILE = [
     (3, [0.0, 1.0, 0.0]),
     (4, [0.1, 0.9, 0.0]),
     (5, [1.0, 0.0]),
+    (6, [1.0, None, 0.0]),
 ]
 
 
 @pytest.mark.parametrize(
-    "op", ["kmeans_assign", "mmr_select", "block_cosine_pairs", "pca_power_iteration"]
+    "op",
+    [
+        "kmeans_assign",
+        "mmr_select",
+        "block_cosine_pairs",
+        "pca_power_iteration",
+        "dot_pandas",
+        "random_hyperplane_bands",
+        "scalar_quantize_stats",
+        "semantic_dedup_prune",
+    ],
 )
 def test_hostile_vectors_give_null_cells_no_pairs_or_value_error(spark, tmp_path, op):
     """Every operator that turns an Arrow batch of vectors into a matrix
-    survives a NULL and a ragged row: a NULL cell, no pair, or a
-    driver-side ValueError, never a Python-worker crash."""
+    survives a NULL, a ragged and a NULL-element row: a NULL cell, no
+    pair, or a driver-side ValueError, never a Python-worker crash."""
     df = spark.createDataFrame(_HOSTILE, "vec_id bigint, embedding array<float>")
     if op == "kmeans_assign":
         out = similarity.kmeans_assign(df, k=2, max_iter=3).collect()
         got = {r.vec_id: r.kmeans_cluster for r in out}
-        assert got[0] is None and got[5] is None
+        assert got[0] is None and got[5] is None and got[6] is None
         assert got[1] == got[2] != got[3] == got[4]
     elif op == "mmr_select":
         out = similarity.mmr_select(df, [1.0, 0.0, 0.0], k=8).collect()
@@ -255,9 +267,45 @@ def test_hostile_vectors_give_null_cells_no_pairs_or_value_error(spark, tmp_path
     elif op == "block_cosine_pairs":
         blocked = df.withColumn("blk", F.lit(0))
         out = similarity.block_cosine_pairs(blocked, ["blk"], -1.0).collect()
-        assert sorted((r.id_a, r.id_b) for r in out) == [
+        # the NULL-element row pairs only with NULL cosines
+        assert sorted((r.id_a, r.id_b) for r in out if r.raw is not None) == [
             (a, b) for a in range(1, 5) for b in range(a + 1, 5)
         ]
+        assert sorted((r.id_a, r.id_b) for r in out if r.raw is None) == [
+            (a, 6) for a in range(1, 5)
+        ]
+    elif op == "dot_pandas":
+        q = F.array(*[F.lit(x) for x in (1.0, 0.5, 0.0)])
+        out = df.select(
+            "vec_id",
+            similarity.dot_pandas(F.col("embedding"), q).alias("arrow"),
+            similarity._dot(F.col("embedding"), q).alias("jvm"),
+        ).collect()
+        assert {r.vec_id: r.arrow for r in out} == {r.vec_id: r.jvm for r in out}
+        assert {r.vec_id for r in out if r.arrow is None} == {0, 5, 6}
+    elif op == "random_hyperplane_bands":
+        v = [float(x) for x in np.random.RandomState(5).standard_normal(64)]
+        rows = [(0, None), (1, v), (2, v[:-1]), (3, v[:7] + [None] + v[8:]), (4, [])]
+        bands = similarity.random_hyperplane_bands(
+            spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+        ).collect()
+        assert {r.vec_id for r in bands} == {1}
+    elif op == "scalar_quantize_stats":
+        got = {r.vec_id: tuple(r)[1:] for r in similarity.scalar_quantize_stats(df).collect()}
+        assert got[0] == (None, None, None)
+        # array_min/array_max and the error skip the NULL element
+        assert got[6] == got[5] and None not in got[6]
+    elif op == "semantic_dedup_prune":
+        emb = spark.createDataFrame(
+            [*_HOSTILE, (7, [0.0, 0.0, 0.0])], "vec_id bigint, embedding array<float>"
+        )
+        one_bucket = emb.select("vec_id", F.lit(0).alias("band"), F.lit(0).alias("bsig"))
+        out = similarity.semantic_dedup_prune(emb, one_bucket, max_bucket_size=8, tau=0.9)
+        got = {r.vec_id: (r.kept, r.n_near) for r in out.collect()}
+        assert got == {
+            0: (True, 0), 1: (True, 1), 2: (False, 1), 3: (True, 1),
+            4: (False, 1), 5: (True, 0), 6: (True, 0), 7: (True, 0),
+        }
     else:
         from weather_data_ingestion_gcp_spark.plans.embeddings import pca_power_iteration
 
@@ -269,10 +317,41 @@ def test_hostile_vectors_give_null_cells_no_pairs_or_value_error(spark, tmp_path
             return sorted(map(tuple, pca_power_iteration(spark, sf).collect()))
 
         clean = [(i, [float(i % 7) - 3.0, 0.25, float(i % 3)]) for i in range(1, 30)]
-        # a NULL vector adds nothing to the Gram sums
-        assert pca([_HOSTILE[0], *clean], "with_null") == pca(clean, "clean")
+        # a NULL vector and a vector with a NULL element add nothing to the Gram sums
+        assert pca([_HOSTILE[0], *clean, _HOSTILE[6]], "with_null") == pca(clean, "clean")
         with pytest.raises(ValueError, match="differ in length"):
             pca([*clean, _HOSTILE[5]], "ragged")
+
+
+def test_length_groups_reads_offsets_and_validity():
+    """`_length_groups` gathers each length group from the flat child at
+    the list offsets: a sliced ListArray (offsets not starting at 0), a
+    two-chunk ChunkedArray, an empty list and a NULL element as NaN."""
+    import pyarrow as pa
+
+    lists = pa.array(
+        [[9.0], [1.0, 2.0], None, [3.0, None], [], [4.0, 5.0, 6.0]],
+        pa.list_(pa.float32()),
+    )
+    sliced = lists.slice(1)
+    assert sliced.offsets[0].as_py() == 1
+
+    def groups(col):
+        return [(i.tolist(), X.tolist()) for i, X in similarity._length_groups(col)]
+
+    want = [
+        ([3], [[]]),
+        ([0, 2], [[1.0, 2.0], [3.0, math.nan]]),
+        ([4], [[4.0, 5.0, 6.0]]),
+    ]
+    for col in (sliced, pa.chunked_array([lists.slice(1, 2), lists.slice(3)])):
+        got = groups(col)
+        assert repr(got) == repr(want)
+        assert all(X.dtype == np.float64 for _, X in similarity._length_groups(col))
+    assert groups(pa.chunked_array([], pa.list_(pa.float64()))) == []
+    # two columns: a row is grouped only where both are valid and equal length
+    other = pa.array([[1.0, 1.0], [0.0], None, [], [7.0, 7.0, 7.0]], pa.list_(pa.float64()))
+    assert [i.tolist() for i, *_ in similarity._length_groups(sliced, other)] == [[3], [0], [4]]
 
 
 def test_pca_start_vector_orthogonal_to_the_covariance_gives_the_oracle_nulls(spark, tmp_path):
@@ -403,7 +482,7 @@ def _bmp_bytes(w: int, h: int, bpp: int = 24) -> bytes:
 def test_multimodal_decode_real_image_headers(spark):
     """fake=False on genuine container bytes: the pure-bytes header parser
     reads dimensions/channels/format from real PNG/JPEG/GIF/BMP headers —
-    no image library needed, full mapInPandas path exercised."""
+    no image library needed, full mapInArrow path exercised."""
     payloads = [
         (0, bytearray(_png_bytes(640, 480, color_type=6))),
         (1, bytearray(_jpeg_bytes(1024, 768, channels=3))),
@@ -457,7 +536,7 @@ def test_multimodal_header_parser_pure():
 
 
 def test_multimodal_udf_payload_is_self_contained(tmp_path):
-    """The mapInPandas helpers must pickle BY VALUE: a Python worker whose
+    """The mapInArrow helpers must pickle BY VALUE: a Python worker whose
     sys.path lacks this repo (an executor the package was never shipped
     to; observed with a driver launched from another cwd) otherwise dies
     with ModuleNotFoundError on the first decode task. Proof: unpickle
@@ -507,10 +586,10 @@ def test_similarity_numpy_kernels_pickle_by_value(tmp_path):
     )
     probe = (
         "import pickle, sys\n"
-        "import numpy as np\n"
+        "import pyarrow as pa\n"
         "sys.modules['weather_data_ingestion_gcp_spark'] = None\n"  # poison
         f"fold, groups, tiles = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
-        "col = np.array([np.array([3.0, 4.0]), None], dtype=object)\n"
+        "col = pa.array([[3.0, 4.0], None], pa.list_(pa.float64()))\n"
         "print([(list(i), fold(X, X).tolist(), [c.tolist() for _, _, c in tiles(X, X)])"
         " for i, X in groups(col)])\n"
     )
@@ -840,6 +919,35 @@ def test_winnow_guarantees_shared_substring_fingerprint(spark):
     # winnowing guarantee: shared substring >= k+w-1 chars -> common fp
     assert by_doc[1] & by_doc[2]
     assert not (by_doc[1] & by_doc[3])
+
+
+def test_winnow_null_and_short_texts_get_no_fingerprints(spark):
+    """A NULL text and one shorter than a full window of grams each get an
+    empty fingerprint array, never a Python-worker crash."""
+    rows = [(1, None), (2, "short"), (3, "the quick brown fox jumps over the lazy dog")]
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    got = {r.doc_id: r.fps for r in text.winnow_fingerprints(df).collect()}
+    assert got[1] == [] and got[2] == [] and len(got[3]) > 0
+
+
+def test_grouped_zscore_keeps_int_key_and_id_types(spark):
+    """The group and id columns come back in their input types (an int
+    group key once crashed the Python worker against a hard-coded
+    ``string``); a NULL value gets a NULL z-score and adds nothing to its
+    group's moments, and a group without a sample stddev gets 0.0."""
+    from weather_data_ingestion_gcp_spark.operators.grouped import grouped_zscore
+
+    df = spark.createDataFrame(
+        [(1, 10, 1.0), (1, 11, 3.0), (1, 15, None), (2, 12, 5.0), (2, 13, None), (3, 14, 2.0)],
+        "g int, row_id int, value double",
+    )
+    out = grouped_zscore(df, "g", "row_id", "value")
+    assert out.dtypes == [("g", "int"), ("row_id", "int"), ("zscore", "double")]
+    got = {r.row_id: (r.g, r.zscore) for r in out.collect()}
+    assert got == {
+        10: (1, -0.707107), 11: (1, 0.707107), 15: (1, None),
+        12: (2, 0.0), 13: (2, None), 14: (3, 0.0),
+    }
 
 
 def test_winnow_matches_duckdb_oracle_on_nbsp(spark):
@@ -1571,13 +1679,13 @@ def test_semantic_prune_bucket_returns_only_near_pairs(spark, monkeypatch):
     from pyspark.sql.group import GroupedData
 
     verified = []
-    apply = GroupedData.applyInPandas
+    apply = GroupedData.applyInArrow
 
     def capture(self, func, schema):
         verified.append(apply(self, func, schema))
         return verified[-1]
 
-    monkeypatch.setattr(GroupedData, "applyInPandas", capture)
+    monkeypatch.setattr(GroupedData, "applyInArrow", capture)
     X = np.random.default_rng(7).standard_normal((300, 64))
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(X)]
     for extra, n_pairs in (([], 0), ([(300, [0.0] * 64)], 300)):

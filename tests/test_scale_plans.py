@@ -173,7 +173,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 @pytest.mark.parametrize("name", ["dedup_exact", "text_fingerprint", "sessionize_events"])
 def test_no_python_udfs_in_core_plans(spark, name):
     """Core operators stay JVM-side: no BatchEvalPython / ArrowEvalPython
-    stages (mapInPandas appears only in the multimodal decode path)."""
+    stages (mapInArrow appears only in the multimodal decode path)."""
     plan = _formatted(QUERIES[name](spark, SF))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
@@ -1053,7 +1053,7 @@ def test_semantic_decontamination_is_grouped_arrow_no_cartesian(spark):
     the grouped-map Arrow path — a row-pair formulation would plan a
     join that ships |test| x |train| vector pairs."""
     plan = _formatted(QUERIES["decontaminate_semantic_topmatch"](spark, SF))
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

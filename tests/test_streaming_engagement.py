@@ -382,3 +382,25 @@ def test_dau_wau_engagement_matches_oracle_with_a_null_ts(spark, tmp_path):
     rel = con.execute(ORACLE["dau_wau_engagement"])
     want = rowset([d[0] for d in rel.description], rel.fetchall())
     assert got == want and len(got[1]) > 0
+
+
+def test_sink_entry_keeps_a_live_process_scratch(spark, tmp_path, monkeypatch):
+    """The sink entry's scratch cleanup removes only directories whose
+    process has exited: a sibling directory of this (live) process, whose
+    tables a returned frame may still read, survives a run of the entry."""
+    import subprocess
+
+    import weather_data_ingestion_gcp_spark.plans.streaming_events as r10
+
+    monkeypatch.setattr(r10, "_SCRATCH", str(tmp_path))
+    exited = subprocess.Popen(["true"])
+    exited.wait()
+    live = tmp_path / f"engagement_sink_{os.getpid()}_sibling"
+    dead = tmp_path / f"engagement_sink_{exited.pid}_gone"
+    for d in (live, dead):
+        d.mkdir()
+        (d / "marker").write_text("x")
+    rows = r10.streaming_engagement_sink_equiv(spark, "/root/testdata/sf0.001").collect()
+    assert rows and all(r.agrees_with_batch for r in rows)
+    assert (live / "marker").exists()
+    assert not dead.exists()

@@ -78,3 +78,18 @@ def test_weighted_mean_udaf_matches_builtin(spark):
     }
     for g in want:
         assert math.isclose(got[g], want[g], rel_tol=1e-12)
+
+
+def test_weighted_mean_udaf_skips_nulls_and_nulls_a_zero_weight_group(spark):
+    """A NULL value or weight adds nothing to either sum, and a group
+    whose weights sum to zero (or are all NULL) gets NULL."""
+    df = spark.createDataFrame(
+        [
+            ("a", 1.0, 1.0), ("a", None, 5.0), ("a", 3.0, None), ("a", 3.0, 3.0),
+            ("z", 4.0, 0.0), ("n", 4.0, None),
+        ],
+        "g string, v double, w double",
+    )
+    wm = weighted_mean_udaf()
+    got = {r.g: r.wm for r in df.groupBy("g").agg(wm("v", "w").alias("wm")).collect()}
+    assert got == {"a": 10.0 / 9.0, "z": None, "n": None}

@@ -10,13 +10,15 @@ follows exactly this shape.
 
 UDTFs evaluate row-at-a-time in Python, so at 100 TB a UDTF belongs on
 bounded or pre-reduced relations only; anything per-token goes through
-the columnar operators or an Arrow-batched pandas UDF instead.
+the columnar operators or an Arrow UDF instead.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf, udtf
+from pyspark.sql.functions import arrow_udf, udtf
 
 
 class ChunkSpansLogic:
@@ -54,16 +56,15 @@ def register_udtfs(spark: SparkSession) -> None:
 
 
 def weighted_mean_udaf():
-    """Grouped-agg pandas UDF (the PySpark UDAF mechanism): weighted mean
-    over Arrow-batched columns. Partial aggregation happens JVM-side per
-    group partition; use for custom aggregates the built-ins lack."""
-    from pyspark.sql.functions import PandasUDFType
+    """Grouped-agg Arrow UDF (the PySpark UDAF mechanism): weighted mean
+    over Arrow-batched columns; use for custom aggregates the built-ins
+    lack. NULLs add nothing to either sum, and a group whose weights sum
+    to zero gets NULL."""
 
-    # explicit functionType: postponed annotations (PEP 563) make string
-    # hints unresolvable for the pandas type-hint inferencer
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def weighted_mean(v, w):
-        tot = float(w.sum())
-        return float((v * w).sum() / tot) if tot else float("nan")
+    @arrow_udf("double")
+    def weighted_mean(v: pa.Array, w: pa.Array) -> float:
+        v, w = v.to_numpy(zero_copy_only=False), w.to_numpy(zero_copy_only=False)
+        tot = np.nansum(w)
+        return float(np.nansum(v * w) / tot) if tot else None
 
     return weighted_mean

@@ -1,4 +1,4 @@
-"""Pure-bytes media-container parsers — the mapInPandas UDF payload of
+"""Pure-bytes media-container parsers — the mapInArrow UDF payload of
 ``operators.multimodal``, isolated in their own module so cloudpickle's
 by-value registration covers EXACTLY these helpers.
 
@@ -13,7 +13,7 @@ is process-global cloudpickle state: every dump anywhere that references
 anything from the registered module inlines it. Keeping this module to
 the three small pure parsers (plus one lookup table) bounds that blast
 radius to a few KB of stateless bytecode; registering the full
-``multimodal`` module (as round 10 did) would also inline its pandas- and
+``multimodal`` module (as round 10 did) would also inline its pyarrow- and
 pyspark-importing namespace into unrelated pickles.
 """
 

@@ -1,7 +1,7 @@
 """Multimodal column plumbing: image/audio/video as opaque ``binary``
 columns with typed metadata.
 
-The Spark-side contract — schema, Arrow batching, ``mapInPandas``
+The Spark-side contract — schema, Arrow batching, ``mapInArrow``
 signatures, partitioning — is real and tested. Decoding is real too, with
 two tiers: Pillow when importable (full pixel decode), else a pure-bytes
 container-header parse that reads width/height/channels/format straight
@@ -11,7 +11,7 @@ the cross-engine oracles (DuckDB can mirror arithmetic on byte length, not
 a JPEG bitstream).
 
 At scale: binary payloads dominate row size, so every operator here projects
-the payload away as early as possible and mapInPandas batches are bounded by
+the payload away as early as possible and mapInArrow batches are bounded by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` to keep Arrow buffers in
 executor memory.
 """
@@ -19,14 +19,15 @@ executor memory.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
-
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
-# The parser helpers the mapInPandas closures call live in _mm_parsers,
+# The parser helpers the mapInArrow closures call live in _mm_parsers,
 # a module registered with cloudpickle for by-value pickling: the UDF
 # payload is self-contained stdlib-only bytecode, so a Python worker
 # whose sys.path lacks this repo still runs the decode tasks. They are
@@ -35,7 +36,7 @@ from pyspark.sql import functions as F
 # multimodal._parse_image_header etc. Keeping the registered module to
 # the three pure parsers bounds cloudpickle's process-global by-value
 # state to a few KB of stateless bytecode (round-10 registered THIS
-# module, leaking the whole pandas/pyspark-importing namespace into any
+# module, leaking the whole pyarrow/pyspark-importing namespace into any
 # pickle that touched it).
 from ._mm_parsers import (  # noqa: F401  (re-exported parsing surface)
     _PNG_CHANNELS,
@@ -71,46 +72,42 @@ def with_binary_payload(df: DataFrame, src_col: str, id_col: str) -> DataFrame:
 
 
 def _map_payloads(media: DataFrame, fn, cols: str) -> DataFrame:
-    """``fn`` over the (doc_id, payload) Arrow batches of ``media``; the
-    output ``doc_id`` keeps its input type, followed by ``cols``. A NULL
-    payload reaches ``fn`` as ``None`` and gets NULL cells, never a
+    """``fn(payload)`` over the (doc_id, payload) Arrow batches of
+    ``media``: each tuple it yields is one output row, after its input
+    row's ``doc_id``. ``doc_id`` keeps its input type and the DDL
+    ``cols`` types the rest, with the ``to_arrow_schema`` typing of
+    ``store.rows``. A NULL payload reaches ``fn`` as ``None``, never a
     worker crash."""
-    id_type = media.schema["doc_id"].dataType.simpleString()
-    return media.select("doc_id", "payload").mapInPandas(
-        fn, f"doc_id {id_type}, {cols}"
-    )
+    schema = StructType([media.schema["doc_id"], *StructType.fromDDL(cols).fields])
+    arrow = to_arrow_schema(schema)
+
+    def run(batches):
+        for b in batches:
+            ids, payloads = b.column("doc_id").to_pylist(), b.column("payload").to_pylist()
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(arrow.names, (d, *r))) for d, p in zip(ids, payloads) for r in fn(p)],
+                schema=arrow,
+            )
+
+    return media.select("doc_id", "payload").mapInArrow(run, schema)
 
 
 def decode_metadata(media: DataFrame, fake: bool = False) -> DataFrame:
-    """mapInPandas decode: (doc_id, payload) -> typed image metadata.
+    """mapInArrow decode: (doc_id, payload) -> typed image metadata.
 
-    Arrow-batched: each pandas batch decodes vectorized-ish in one Python
-    call per batch, not per row; output drops the payload immediately.
+    Arrow-batched: each batch decodes in one Python call per batch, not
+    per row; output drops the payload immediately. A NULL payload gets
+    NULL cells.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = [
-                (None,) * 4 if p is None else _decode_image_bytes(p, fake)
-                for p in pdf["payload"]
-            ]
-            n = pdf["payload"].map(len, na_action="ignore")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "byte_len": n.astype("Int64"),
-                    "width": pd.Series([m[0] for m in meta], dtype="Int32"),
-                    "height": pd.Series([m[1] for m in meta], dtype="Int32"),
-                    "channels": pd.Series([m[2] for m in meta], dtype="Int32"),
-                    "format": [m[3] for m in meta],
-                }
-            )
+    def decode(p):
+        yield (None,) * 5 if p is None else (len(p), *_decode_image_bytes(p, fake))
 
     return _map_payloads(media, decode, DECODE_META_SCHEMA)
 
 
 def resize_payloads(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """mapInPandas resize: (doc_id, payload) -> payload re-encoded at the
+    """mapInArrow resize: (doc_id, payload) -> payload re-encoded at the
     target dimensions. STUB codec (no image library here): the fake
     "resize" deterministically truncates/pads the byte stream to
     width*height bytes, so batch shapes, Arrow binary round-tripping,
@@ -120,27 +117,16 @@ def resize_payloads(media: DataFrame, width: int = 64, height: int = 64) -> Data
     documented at module top). A NULL payload stays NULL at the pinned
     dims."""
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = width * height
-        for pdf in batches:
-            out_payload = [
-                None if p is None else bytes(p[:target]).ljust(target, b"\0")
-                for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series([width] * len(pdf), dtype="int32"),
-                    "height": pd.Series([height] * len(pdf), dtype="int32"),
-                    "payload": out_payload,
-                }
-            )
+    target = width * height
+
+    def resize(p):
+        yield width, height, None if p is None else p[:target].ljust(target, b"\0")
 
     return _map_payloads(media, resize, RESIZE_SCHEMA)
 
 
 def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
-    """mapInPandas feature extraction: (doc_id, payload) -> fixed-dim
+    """mapInArrow feature extraction: (doc_id, payload) -> fixed-dim
     float vector. STUB featurizer: component j is the mean of payload
     byte values at positions congruent to j mod ``dim`` — deterministic
     and vectorized with numpy per batch, so the Arrow batch path, the
@@ -148,23 +134,14 @@ def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
     compatibility (same shape as the embeddings table) are all real;
     a CLIP/CNN encoder replaces one inner function. A NULL payload gets
     a NULL feature."""
-    import numpy as np
 
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                if p is None:
-                    feats.append(None)
-                    continue
-                a = np.frombuffer(bytes(p), dtype=np.uint8).astype(np.float64)
-                if len(a) == 0:
-                    feats.append([0.0] * dim)
-                    continue
-                pad = (-len(a)) % dim
-                a = np.pad(a, (0, pad))
-                feats.append(a.reshape(-1, dim).mean(axis=0).tolist())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "feature": feats})
+    def featurize(p):
+        if not p:
+            yield (None if p is None else [0.0] * dim,)
+            return
+        a = np.frombuffer(p, dtype=np.uint8).astype(np.float64)
+        a = np.pad(a, (0, (-len(a)) % dim))
+        yield (a.reshape(-1, dim).mean(axis=0).tolist(),)
 
     return _map_payloads(media, featurize, FEATURE_SCHEMA)
 
@@ -198,7 +175,7 @@ PATCH_STATS_SCHEMA = (
 
 
 def patch_stats(media: DataFrame) -> DataFrame:
-    """mapInPandas per-channel patch statistics over binary payloads:
+    """mapInArrow per-channel patch statistics over binary payloads:
     for every (doc, channel), the patch count, overall byte mean, max
     patch mean, and a 4-bucket histogram of patch means ([0,64) dark,
     [64,128) dim, [128,192) mid, [192,256) bright — integer counts, so
@@ -212,50 +189,29 @@ def patch_stats(media: DataFrame) -> DataFrame:
     the media scan with bounded Arrow batches; the output is
     O(docs x channels), payload-free. A NULL or empty payload emits no
     row."""
-    import numpy as np
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if not payload:
-                    continue
-                a = np.frombuffer(bytes(payload), dtype=np.uint8).astype(
-                    np.float64
-                )
-                idx = np.arange(len(a))
-                ch = idx % _CHANNELS
-                key = (idx // (_PATCH * _CHANNELS)) * _CHANNELS + ch
-                cnt = np.bincount(key)
-                tot = np.bincount(key, weights=a)
-                means = tot / cnt  # every key occurs: cnt >= 1
-                buckets = np.minimum(means // 64, 3).astype(np.int64)
-                for c in range(_CHANNELS):
-                    sel = np.nonzero(
-                        (np.arange(len(cnt)) % _CHANNELS == c) & (cnt > 0)
-                    )[0]
-                    if len(sel) == 0:
-                        continue
-                    bc = np.bincount(buckets[sel], minlength=4)
-                    rows.append(
-                        (
-                            doc_id,
-                            c,
-                            int(len(sel)),
-                            round(float(tot[sel].sum() / cnt[sel].sum()), 6),
-                            round(float(means[sel].max()), 6),
-                            int(bc[0]),
-                            int(bc[1]),
-                            int(bc[2]),
-                            int(bc[3]),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "channel", "n_patches", "mean_byte",
-                    "max_patch_mean", "p_dark", "p_dim", "p_mid", "p_bright",
-                ],
+    def stats(payload):
+        if not payload:
+            return
+        a = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
+        idx = np.arange(len(a))
+        ch = idx % _CHANNELS
+        key = (idx // (_PATCH * _CHANNELS)) * _CHANNELS + ch
+        cnt = np.bincount(key)
+        tot = np.bincount(key, weights=a)
+        means = tot / cnt  # every key occurs: cnt >= 1
+        buckets = np.minimum(means // 64, 3).astype(np.int64)
+        for c in range(_CHANNELS):
+            sel = np.nonzero((np.arange(len(cnt)) % _CHANNELS == c) & (cnt > 0))[0]
+            if len(sel) == 0:
+                continue
+            bc = np.bincount(buckets[sel], minlength=4)
+            yield (
+                c,
+                int(len(sel)),
+                round(float(tot[sel].sum() / cnt[sel].sum()), 6),
+                round(float(means[sel].max()), 6),
+                *(int(x) for x in bc),
             )
 
     return _map_payloads(media, stats, PATCH_STATS_SCHEMA)
@@ -279,29 +235,14 @@ def audio_metadata(media: DataFrame) -> DataFrame:
     failing the batch (quarantine-not-crash, like the pipeline's
     corrupt-NDJSON handling); a NULL payload gets NULL cells."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = []
-            for p in pdf["payload"]:
-                try:
-                    meta.append(
-                        (None,) * 6 if p is None else _parse_wav_header(bytes(p))
-                    )
-                except ValueError:
-                    meta.append((None,) * 5 + ("error",))
-            n = pdf["payload"].map(len, na_action="ignore")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "byte_len": n.astype("Int64"),
-                    "sample_rate": pd.Series([m[0] for m in meta], dtype="Int32"),
-                    "channels": pd.Series([m[1] for m in meta], dtype="Int32"),
-                    "bits_per_sample": pd.Series([m[2] for m in meta], dtype="Int32"),
-                    "n_samples": pd.Series([m[3] for m in meta], dtype="Int64"),
-                    "duration_ms": pd.Series([m[4] for m in meta], dtype="Int64"),
-                    "format": [m[5] for m in meta],
-                }
-            )
+    def decode(p):
+        if p is None:
+            yield (None,) * 7
+            return
+        try:
+            yield (len(p), *_parse_wav_header(p))
+        except ValueError:
+            yield (len(p),) + (None,) * 5 + ("error",)
 
     return _map_payloads(media, decode, AUDIO_META_SCHEMA)
 
@@ -323,7 +264,7 @@ FRAME_ENERGY_SCHEMA = (
 
 
 def frame_energy(media: DataFrame) -> DataFrame:
-    """mapInPandas per-document frame-energy profile over binary
+    """mapInArrow per-document frame-energy profile over binary
     payloads interpreted as little-endian signed 16-bit PCM — the audio
     sibling of patch_stats, mirroring the curation pass that drops
     silent / clipped clips from a speech corpus: frame the sample
@@ -339,41 +280,24 @@ def frame_energy(media: DataFrame) -> DataFrame:
     for a sample, emits no row. Output is O(docs), payload-free — at
     100 TB one linear scan with bounded Arrow batches, no shuffle until
     the (already tiny) result."""
-    import numpy as np
 
-    def energies(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n2 = 0 if payload is None else (len(payload) // 2) * 2
-                if n2 == 0:
-                    continue
-                a = np.frombuffer(bytes(payload), dtype=np.uint8)
-                s = (
-                    a[0:n2:2].astype(np.int64)
-                    + 256 * a[1:n2:2].astype(np.int64)
-                )
-                s = np.where(s >= 32768, s - 65536, s)
-                fk = np.arange(len(s)) // _FRAME_SAMPLES
-                e = np.bincount(fk, weights=(s * s).astype(np.float64))
-                e = e.astype(np.int64)  # exact: each frame < 2^37
-                rows.append(
-                    (
-                        doc_id,
-                        int(len(e)),
-                        int(e.sum()),
-                        int(e.max()),
-                        int((e < _SILENT_BELOW).sum()),
-                        int((e >= _LOUD_AT_LEAST).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_frames", "total_energy",
-                    "max_frame_energy", "n_silent", "n_loud",
-                ],
-            )
+    def energies(payload):
+        n2 = 0 if payload is None else (len(payload) // 2) * 2
+        if n2 == 0:
+            return
+        a = np.frombuffer(payload, dtype=np.uint8)
+        s = a[0:n2:2].astype(np.int64) + 256 * a[1:n2:2].astype(np.int64)
+        s = np.where(s >= 32768, s - 65536, s)
+        fk = np.arange(len(s)) // _FRAME_SAMPLES
+        e = np.bincount(fk, weights=(s * s).astype(np.float64))
+        e = e.astype(np.int64)  # exact: each frame < 2^37
+        yield (
+            int(len(e)),
+            int(e.sum()),
+            int(e.max()),
+            int((e < _SILENT_BELOW).sum()),
+            int((e >= _LOUD_AT_LEAST).sum()),
+        )
 
     return _map_payloads(media, energies, FRAME_ENERGY_SCHEMA)
 

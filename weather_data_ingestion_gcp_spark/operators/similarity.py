@@ -16,9 +16,14 @@ once, here:
   ``LSH_DIM`` dims in bands of ``LSH_BAND_BITS`` bits, read by
   ``oracle_sql.sign_bands_sql`` for the oracles.
 
-One Arrow vector boundary: every batch of vectors becomes float64
-matrices in :func:`_length_groups`, one per vector length, so a NULL
-vector is in no matrix and vectors of different lengths never meet.
+One Arrow vector boundary: every batch of vectors crosses as pyarrow
+list arrays (``arrow_udf``, ``mapInArrow``, ``applyInArrow``) and
+becomes float64 matrices in :func:`_length_groups`, one per vector
+length read from the list offsets, so a NULL vector (its validity bit)
+is in no matrix, vectors of different lengths never meet, and a NULL
+element is NaN. Results go back the same way: :func:`_nulled` sends a
+NaN double as NULL, as the pandas boundary did, and :func:`_list_rows`
+builds a list column from per-group matrices.
 Within-block cosines run through one tile scan, :func:`_cosine_tiles`:
 it is where the fold meets the cut, ``dot/(na*nb)`` over ``TILE x TILE``
 blocks, and both :func:`block_cosine_pairs` and the semantic
@@ -34,9 +39,10 @@ band index.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.window import Window
 
 from ..store import keep, rows
@@ -94,20 +100,50 @@ def _numpy_kernels():
             acc += X[..., d] * Y[..., d]
         return acc
 
-    def length_groups(*cols: np.ndarray):
-        """Yield ``(idx, X_1, ..., X_k)`` per vector length the rows of an
-        Arrow batch share: the row indices and, per column, the stacked
-        float64 ``(rows, length)`` matrix — a dense batch is one group in
-        row order, a ragged one a group per length. A row that is NULL in
-        any column, or whose columns differ in length, is in no group, so
-        its cell stays NULL, as the `_dot` fold gives."""
-        lens = [np.array([-1 if v is None else len(v) for v in c]) for c in cols]
-        ok = lens[0] >= 0
-        for other in lens[1:]:
-            ok &= other == lens[0]
+    def length_groups(*cols):
+        """Yield ``(idx, X_1, ..., X_k)`` per vector length the rows of Arrow
+        list columns share (``ListArray``s, or the ``ChunkedArray``s of an
+        ``applyInArrow`` table): the row indices and, per column, the
+        float64 ``(rows, length)`` matrix gathered from the flat child at
+        the row offsets, a NULL element as NaN. A dense batch is one group
+        in row order, a ragged one a group per length. A row that is NULL
+        in any column (its validity bit), or whose columns differ in
+        length, is in no group, so its cell stays NULL, as the `_dot` fold
+        gives."""
+        cols = [c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c for c in cols]
+        offs = [c.offsets.to_numpy() for c in cols]
+        lens = [np.diff(o) for o in offs]
+        ok = np.ones(len(lens[0]), dtype=bool)
+        for c, n in zip(cols, lens):
+            ok &= c.is_valid().to_numpy(zero_copy_only=False) & (n == lens[0])
+        flats = [c.values.to_numpy(zero_copy_only=False) for c in cols]
         for n in np.unique(lens[0][ok]):
             idx = np.flatnonzero(ok & (lens[0] == n))
-            yield (idx, *(np.stack(c[idx]).astype(np.float64) for c in cols))
+            yield (
+                idx,
+                *(f[o[idx, None] + np.arange(n)].astype(np.float64) for f, o in zip(flats, offs)),
+            )
+
+    def nulled(out: np.ndarray) -> pa.Array:
+        """``out`` as a double array whose NaN cells cross as NULL, the
+        pandas boundary's rule: Spark orders NaN above every double, so a
+        NaN cosine would pass a ``>=`` cut that NULL fails."""
+        return pa.array(out, from_pandas=True)
+
+    def list_rows(n: int, parts, value_type):
+        """The list array of ``n`` rows whose row ``idx[i]`` is ``M[i]``
+        for each ``(idx, M)`` of ``parts``; every other row is NULL."""
+        lens = np.zeros(n, dtype=np.int32)
+        valid = np.zeros(n, dtype=bool)
+        for idx, M in parts:
+            lens[idx], valid[idx] = M.shape[1], True
+        offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+        flat = np.empty(offsets[-1], dtype=value_type.to_pandas_dtype())
+        for idx, M in parts:
+            flat[offsets[idx, None] + np.arange(M.shape[1])] = M
+        return pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(flat, value_type), mask=pa.array(~valid)
+        )
 
     def cosine_tiles(A: np.ndarray, B: np.ndarray):
         """Yield ``(i0, j0, cos)`` for the ``TILE x TILE`` blocks of the
@@ -123,10 +159,10 @@ def _numpy_kernels():
                 dots = fold(A[i0 : i0 + TILE, None], B[None, j0 : j0 + TILE])
                 yield i0, j0, dots / np.outer(na[i0 : i0 + TILE], nb[j0 : j0 + TILE])
 
-    return fold, length_groups, cosine_tiles
+    return fold, length_groups, nulled, list_rows, cosine_tiles
 
 
-_fold, _length_groups, _cosine_tiles = _numpy_kernels()
+_fold, _length_groups, _nulled, _list_rows, _cosine_tiles = _numpy_kernels()
 
 
 def dot_pandas(a: Column, b: Column) -> Column:
@@ -136,17 +172,15 @@ def dot_pandas(a: Column, b: Column) -> Column:
     or a length-mismatched pair gives NULL, two empty vectors 0.0, as
     `_dot` does. Use in hot pair-scoring paths; `_dot` remains for plan
     shapes where a scalar JVM expression matters."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(T.DoubleType())
-    def dot_pd(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = np.full(len(xs), np.nan)  # NaN returns as a NULL cell
-        for idx, X, Y in _length_groups(xs.to_numpy(), ys.to_numpy()):
+    @arrow_udf("double")
+    def dot_pa(xs: pa.Array, ys: pa.Array) -> pa.Array:
+        out = np.full(len(xs), np.nan)
+        for idx, X, Y in _length_groups(xs, ys):
             out[idx] = _fold(X, Y)
-        return pd.Series(out)
+        return _nulled(out)
 
-    return dot_pd(a.cast("array<double>"), b.cast("array<double>"))
+    return dot_pa(a.cast("array<double>"), b.cast("array<double>"))
 
 
 def pair_side(
@@ -223,8 +257,8 @@ def kmeans_assign(
     over k centroids costs k x dim lambda evaluations, measured ~10x
     slower). Round-14 (guide §2.3 "aggregate before you shuffle"): each
     training round's centroid sums are accumulated INSIDE the same
-    Arrow pass as the assignment (mapInPandas emitting one k x dim
-    partial-sum frame per task) instead of a posexplode of every
+    Arrow pass as the assignment (mapInArrow emitting one k x dim
+    partial-sum batch per task) instead of a posexplode of every
     (row, dim) pair into a corpus x dim shuffle — the per-round shuffle
     shrinks from n*d rows to k*d per task, and one Spark job per round
     replaces the assign+explode+agg chain (warm 2.44 -> 1.20 s at
@@ -238,12 +272,9 @@ def kmeans_assign(
     corpus itself never shuffles during assignment. Seeds: the k lowest-
     id non-NULL vectors (deterministic, no RNG); they set the dimension
     and must share one length (``ValueError`` otherwise). A NULL vector,
-    or one of another length, gets a NULL cluster and adds nothing to the
-    centroid sums.
+    one of another length, or one with a NULL element gets a NULL cluster
+    and adds nothing to the centroid sums.
     """
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     vecs = (
         corpus.select(
             F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
@@ -253,20 +284,22 @@ def kmeans_assign(
     )
 
     def _nearest(X: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
-        """Max-cosine centroid of each row. argmax takes the FIRST max ->
-        ties resolve to the lowest cluster id."""
+        """Max-cosine centroid of each row, -1 for a row with a NaN (a NULL
+        element). argmax takes the FIRST max -> ties resolve to the lowest
+        cluster id."""
         xn = np.sqrt((X * X).sum(axis=1))
         cn = np.sqrt((C * C).sum(axis=1))
-        return np.argmax((X @ C.T) / (xn[:, None] * cn[None, :]), axis=1)
+        a = np.argmax((X @ C.T) / (xn[:, None] * cn[None, :]), axis=1)
+        return np.where(np.isnan(X).any(axis=1), -1, a)
 
     def _assigned(C: "np.ndarray") -> DataFrame:
-        @pandas_udf(T.IntegerType())
-        def nearest(vs: pd.Series) -> pd.Series:
-            out = pd.Series(pd.NA, index=vs.index, dtype="Int32")
-            for idx, X in _length_groups(vs.to_numpy()):
+        @arrow_udf("int")
+        def nearest(vs: pa.Array) -> pa.Array:
+            out = np.full(len(vs), -1, dtype=np.int32)
+            for idx, X in _length_groups(vs):
                 if X.shape[1] == C.shape[1]:
-                    out.iloc[idx] = _nearest(X, C)
-            return out
+                    out[idx] = _nearest(X, C)
+            return pa.array(out, mask=out < 0)
 
         return vecs.withColumn("cluster", nearest(F.col("_v")))
 
@@ -290,8 +323,8 @@ def kmeans_assign(
         def _partials(batches):
             S = np.zeros(Cb.shape, dtype=np.float64)
             N = np.zeros(Cb.shape[0], dtype=np.float64)
-            for pdf in batches:
-                for _, X in _length_groups(pdf["_v"].to_numpy()):
+            for batch in batches:
+                for _, X in _length_groups(batch.column("_v")):
                     if X.shape[1] != Cb.shape[1]:
                         continue
                     a = _nearest(X, Cb)
@@ -305,11 +338,11 @@ def kmeans_assign(
                         N[c] += len(rows)
             if not N.any():
                 return
-            cc, pp = np.indices(S.shape)
-            yield pd.DataFrame(
+            cc, pp = np.indices(S.shape, dtype=np.int32)
+            yield pa.RecordBatch.from_pydict(
                 {
-                    "cluster": cc.ravel().astype("int32"),
-                    "pos": pp.ravel().astype("int32"),
+                    "cluster": cc.ravel(),
+                    "pos": pp.ravel(),
                     "s": S.ravel(),
                     "n": np.repeat(N, S.shape[1]),
                 }
@@ -317,7 +350,7 @@ def kmeans_assign(
 
         sums = (
             vecs.select("_v")
-            .mapInPandas(_partials, "cluster int, pos int, s double, n double")
+            .mapInArrow(_partials, "cluster int, pos int, s double, n double")
             .groupBy("cluster", "pos")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()
@@ -365,34 +398,31 @@ def random_hyperplane_bands(
     (1 - theta/pi)^LSH_BAND_BITS — the random-projection analog of
     MinHash banding).
 
-    The projections are computed in an Arrow-vectorized pandas UDF: a
+    The projections are computed in an Arrow UDF: a
     higher-order-function fold is interpreted per element (16 planes x 64
     dims = 1024 interpreted ops per row — measured ~1 ms/row), while the
     UDF does one :func:`_fold` over all planes per BATCH, with the exact
     IEEE operation sequence of the DuckDB oracle's list_dot_product —
     sign bits, and therefore buckets, stay bitwise-identical cross-engine.
-    A NULL vector, or one whose length is not ``LSH_DIM``, has no dot
-    product with the planes and gets no band rows. The band explode
+    A NULL vector, one whose length is not ``LSH_DIM``, or one with a
+    NULL element has no dot product with the planes and gets no band
+    rows. The band explode
     multiplies rows only after signatures are computed.
     """
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     W = np.array(hyperplanes())
     n_bands = LSH_BITS // LSH_BAND_BITS
     place = 1 << np.arange(LSH_BAND_BITS - 1, -1, -1)  # first bit is the MSB
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def band_sigs(vecs: pd.Series) -> pd.Series:
-        out = [None] * len(vecs)
-        for idx, X in _length_groups(vecs.to_numpy()):
-            if X.shape[1] != W.shape[1]:
-                continue
-            bits = _fold(X[:, None], W[None]) > 0  # (rows, LSH_BITS)
-            sigs = bits.reshape(len(idx), n_bands, -1) @ place
-            for i, sig in zip(idx, sigs.astype(np.int32)):
-                out[i] = sig
-        return pd.Series(out, dtype=object)
+    @arrow_udf("array<int>")
+    def band_sigs(vecs: pa.Array) -> pa.Array:
+        parts = []
+        for idx, X in _length_groups(vecs):
+            if X.shape[1] == W.shape[1]:
+                P = _fold(X[:, None], W[None])  # (rows, LSH_BITS)
+                ok = ~np.isnan(P).any(axis=1)
+                sigs = (P[ok] > 0).reshape(-1, n_bands, LSH_BAND_BITS) @ place
+                parts.append((idx[ok], sigs))
+        return _list_rows(len(vecs), parts, pa.int32())
 
     return df.select(
         F.col(id_col).alias("vec_id_"),
@@ -552,25 +582,22 @@ def scalar_quantize_stats(
     Hostile rows get what the lambda gave: a NULL or empty vector has no
     range and yields NULL, and a NULL element (NaN in the batch) is
     skipped by ``nanmax`` as array_max skipped the lambda's NULL cell."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
     mn = F.array_min(F.col(vec_col)).cast("double")
     mx = F.array_max(F.col(vec_col)).cast("double")
 
-    @pandas_udf(DoubleType())
-    def _max_abs_err(vs: pd.Series, mns: pd.Series, mxs: pd.Series) -> pd.Series:
-        out = np.full(len(vs), np.nan)  # NaN returns as a NULL cell
-        for idx, X in _length_groups(vs.to_numpy()):
+    @arrow_udf("double")
+    def _max_abs_err(vs: pa.Array, mns: pa.Array, mxs: pa.Array) -> pa.Array:
+        out = np.full(len(vs), np.nan)
+        for idx, X in _length_groups(vs):
             if X.shape[1] == 0:
                 continue
-            mn_a = mns.to_numpy(dtype=np.float64)[idx, None]
-            s = (mxs.to_numpy(dtype=np.float64)[idx, None] - mn_a) / 255.0
+            mn_a = mns.to_numpy(zero_copy_only=False)[idx, None]
+            s = (mxs.to_numpy(zero_copy_only=False)[idx, None] - mn_a) / 255.0
             q = (X - mn_a) / s
             fl = np.floor(q)
             r = fl + ((q - fl) >= 0.5)  # exact HALF_UP for non-negative q
             out[idx] = np.nanmax(np.abs(X - (r * s + mn_a)), axis=1)
-        return pd.Series(out)
+        return _nulled(out)
 
     return df.select(
         F.col(id_col),
@@ -621,22 +648,18 @@ def mmr_select(
     Deterministic: ties break on ascending id. Returns (id, mmr_rank,
     relevance) for the k picks. A NULL vector, or one whose length is not
     the query's, has a NULL relevance and is never shortlisted."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     q = np.asarray(query_vec, dtype=np.float64)
     q /= np.sqrt((q * q).sum())
 
-    @pandas_udf(T.ArrayType(T.DoubleType()))
-    def unit_pd(xs: pd.Series) -> pd.Series:
-        out = [None] * len(xs)
-        for idx, X in _length_groups(xs.to_numpy()):
-            X /= np.sqrt((X * X).sum(axis=1, keepdims=True))
-            for i, u in zip(idx, X):
-                out[i] = u
-        return pd.Series(out, dtype=object)
+    @arrow_udf("array<double>")
+    def unit_pa(xs: pa.Array) -> pa.Array:
+        parts = [
+            (idx, X / np.sqrt((X * X).sum(axis=1, keepdims=True)))
+            for idx, X in _length_groups(xs)
+        ]
+        return _list_rows(len(xs), parts, pa.float64())
 
-    base = df.select(F.col(id_col).alias("_id"), unit_pd(F.col(vec_col)).alias("_u"))
+    base = df.select(F.col(id_col).alias("_id"), unit_pa(F.col(vec_col)).alias("_u"))
     qb = F.array(*[F.lit(float(v)) for v in q])
     short = (
         base.select("_id", "_u", dot_pandas(F.col("_u"), qb).alias("_rel"))
@@ -648,7 +671,7 @@ def mmr_select(
     ids = [r["_id"] for r in short]
     rel = np.asarray([r["_rel"] for r in short], dtype=np.float64)
     # every shortlisted vector has the query's length: at most one group
-    us = pd.Series([r["_u"] for r in short]).to_numpy()
+    us = pa.array([r["_u"] for r in short], pa.list_(pa.float64()))
     _, U = next(_length_groups(us), (None, None))
 
     picked: list[int] = []
@@ -697,26 +720,24 @@ def block_cosine_pairs(
     vector) is never under the floor: it crosses Arrow as NULL, and the
     Spark-side decision drops it."""
 
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_id")
-        ids = pdf["_id"].to_numpy()
-        out = [(ids[:0], ids[:0], np.empty(0))]
-        for idx, X in _length_groups(pdf["_v"].to_numpy()):
+    def verify(block: pa.Table) -> pa.Table:
+        block = block.sort_by("_id")
+        ids = block.column("_id")
+        out = [(np.empty(0, dtype=np.int64),) * 2 + (np.empty(0),)]
+        for idx, X in _length_groups(block.column("_v")):
             for i0, j0, cos in _cosine_tiles(X, X):
                 ii, jj = np.indices(cos.shape)
                 # upper triangle (id_a < id_b), minus pairs under the floor
                 keep = ((i0 + ii) < (j0 + jj)) & ~(cos < floor)
-                out.append(
-                    (ids[idx[i0 + ii[keep]]], ids[idx[j0 + jj[keep]]], cos[keep])
-                )
+                out.append((idx[i0 + ii[keep]], idx[j0 + jj[keep]], cos[keep]))
         a, b, raw = (np.concatenate(c) for c in zip(*out))
-        return pd.DataFrame({"id_a": a, "id_b": b, "raw": raw})
+        return pa.table({"id_a": ids.take(a), "id_b": ids.take(b), "raw": _nulled(raw)})
 
     id_type = df.schema[id_col].dataType.simpleString()
     return (
         df.select(*block_cols, F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .groupBy(*block_cols)
-        .applyInPandas(verify, f"id_a {id_type}, id_b {id_type}, raw double")
+        .applyInArrow(verify, f"id_a {id_type}, id_b {id_type}, raw double")
     )
 
 

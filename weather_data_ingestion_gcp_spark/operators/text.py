@@ -7,10 +7,10 @@ row-local and run fastest as one Arrow-batched map pass.
 
 from __future__ import annotations
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import arrow_udf
 
 from ..store import keep
 
@@ -292,7 +292,7 @@ def winnow_fingerprints(
     fingerprint (`fingerprint`) and set-based MinHash.
 
     Formulation: MAP-ONLY. A document's fingerprints depend on nothing but
-    its own text, so the whole operator is one Arrow-batched pandas UDF:
+    its own text, so the whole operator is one Arrow UDF:
     normalized texts cross to Python once per batch, each doc's gram
     hashes and window minima are computed in numpy, and only the per-doc
     fingerprint arrays come back. No explode, no shuffle, no window sort —
@@ -317,20 +317,17 @@ def winnow_fingerprints(
     Returns the kept (persisted) per-document relation ``(doc_id, fps
     array<bigint>)``: every caller in a session shares ONE UDF pass
     through CacheManager plan matching; ``store.release()`` frees it."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     k, w = WINNOW_K, WINNOW_W
 
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def fps_pd(norms: pd.Series) -> pd.Series:
+    @arrow_udf("array<bigint>")
+    def fps_pa(norms: pa.Array) -> pa.Array:
         import numpy as np
 
         mult = np.uint64(11400714819323198485)  # odd -> bijective mod 2^63
         mask = np.uint64(0x7FFFFFFFFFFFFFFF)
         out = []
         with np.errstate(over="ignore"):  # uint64 wraparound is the design
-            for s in norms:
+            for s in norms.to_pylist():
                 ng = 0 if s is None else len(s) - k + 1
                 if ng < w:  # no full w-wide window of grams
                     out.append([])
@@ -348,7 +345,7 @@ def winnow_fingerprints(
                 for j in range(1, w):  # sliding window min, vectorized
                     m = np.minimum(m, hs[j : ng - w + 1 + j])
                 out.append(np.unique(m).astype(np.int64).tolist())
-        return pd.Series(out)
+        return pa.array(out, pa.list_(pa.int64()))
 
     # a small single-file source scans as ONE split, serializing the UDF on
     # one Python worker (measured 3x the whole-query time at sf0.1);
@@ -360,7 +357,7 @@ def winnow_fingerprints(
     return keep(
         df.select(
             F.col(id_col).alias("doc_id"),
-            fps_pd(norm_ws(F.col(text_col))).alias("fps"),
+            fps_pa(norm_ws(F.col(text_col))).alias("fps"),
         )
     )
 

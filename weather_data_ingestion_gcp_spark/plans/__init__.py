@@ -103,10 +103,13 @@ DRIVER_WINDOW = [
     "winnow_overlap_pairs",
     "text_fingerprint",
     "text_quality_scores",
-    "dup_inflation_by_source",
-    "dataset_card_summary",
-    "good_turing_vocab_coverage",
-    "dedup_simhash",
+    # changed-code leads: the entries whose Python workers now take
+    # pyarrow batches (arrow_udf / mapInArrow / applyInArrow) and were
+    # outside the window — the Gram partials, the reranker's Arrow dot
+    # and the grouped z-score, whose key types now come from its input
+    "pca_power_iteration",
+    "rerank_two_stage_topk",
+    "pandas_zscore_normalize",
     # changed-code leads: the sketch entries whose Bloom, KMV, Count-Min
     # or Misra-Gries decision now lives once in operators/sketch.py (the
     # bitset-probed Bloom pair, the grouped KMV pair, the two Count-Min
@@ -126,10 +129,11 @@ DRIVER_WINDOW = [
     # sinks' novelty anti-join shares
     "dau_wau_engagement",
     "incremental_rollup_equivalence",
-    # r08 events scans
-    "error_capture_routing",
     # r08 multimodal plumbing + the NEW r13 analytic over the same
-    # binary payloads (adjacent: same documents/multimodal scan)
+    # binary payloads (adjacent: same documents/multimodal scan), led by
+    # the two payload maps now built from typed Arrow rows
+    "multimodal_decode_meta",
+    "multimodal_feature_extract",
     "multimodal_frame_offsets",
     "multimodal_patch_stats",
     "multimodal_frame_energy",  # NEW r13: audio sibling, same scan

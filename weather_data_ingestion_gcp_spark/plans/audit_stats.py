@@ -443,8 +443,8 @@ def histogram_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pandas_zscore_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandas grouped-map vs the window-function oracle: the Arrow
-    group-to-pandas round trip must reproduce SQL stddev_samp semantics."""
+    """applyInArrow grouped-map vs the window-function oracle: the Arrow
+    group round trip must reproduce SQL stddev_samp semantics."""
     from ..operators.grouped import grouped_zscore
 
     e = load_table(spark, sf_dir, "events").select(

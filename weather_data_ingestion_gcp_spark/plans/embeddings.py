@@ -16,7 +16,7 @@ from pyspark.sql.window import Window
 from .. import store
 from ..operators import similarity
 from ..operators.sampling import hash_bucket
-from ..operators.similarity import _cosine_tiles, _length_groups
+from ..operators.similarity import _cosine_tiles, _length_groups, _nulled
 from .oracle_sql import hash_bucket_sql, sign_bands_sql, sub_block_sql
 from .registry import load_table, register
 
@@ -165,7 +165,7 @@ def similarity_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     # The assignment relation is consumed by BOTH sides of the IVF
     # (centroid aggregate + candidate search) and the query filter, so
-    # the composed plan references the k-means subtree — pandas UDF,
+    # the composed plan references the k-means subtree — Arrow UDF,
     # per-round lineage — several times per run. store.truncate (eager
     # localCheckpoint) hands every reference a 2000-row leaf instead:
     # cold 7.2 s -> 3.1 s, warm 3.1 s -> 2.6 s at sf0.1, output
@@ -780,20 +780,21 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle: floor(float64(v)·1000), identical IEEE ops), so executors
     # run BLAS instead of generating n·d² codegen rows, and the only
     # shuffle carries d²-sized integer partials per partition. This is
-    # the deliberate pandas-UDF drop-down: a generator-based expansion of
+    # the deliberate Arrow drop-down: a generator-based expansion of
     # the same sums was measured ~2× slower at sf0.1 and grows linearly
     # in n either way; the partials contract is what scales to 100 TB
     # (mergeable integer sums, O(d²) per partition crossing the wire).
-    # A NULL vector adds nothing; each vector length gets its own sums,
-    # tagged by a (-2, -2, d) row, so ragged dims are caught driver-side.
+    # A NULL vector, or one with a NULL element, adds nothing; each
+    # vector length gets its own sums, tagged by a (-2, -2, d) row, so
+    # ragged dims are caught driver-side.
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
     def _gram_partials(batches):
         grams = {}  # d -> [P, S, n]
-        for pdf in batches:
-            for _, X in _length_groups(pdf["embedding"].to_numpy()):
-                Q = np.floor(X * 1000).astype(np.int64)
+        for batch in batches:
+            for _, X in _length_groups(batch.column("embedding")):
+                Q = np.floor(X[~np.isnan(X).any(axis=1)] * 1000).astype(np.int64)
                 d = Q.shape[1]
                 g = grams.setdefault(
                     d, [np.zeros((d, d), dtype=np.int64), np.zeros(d, dtype=np.int64), 0]
@@ -803,15 +804,16 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 g[2] += Q.shape[0]
         for d, (P, S, n_rows) in grams.items():
             js, ks = np.indices((d, d))
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
                     "j": np.concatenate([js.ravel() + 1, np.arange(1, d + 1), [-1, -2]]),
                     "k": np.concatenate([ks.ravel() + 1, np.full(d, -1), [-1, -2]]),
                     "v": np.concatenate([P.ravel(), S, [n_rows, d]]),
-                }
+                },
+                schema=pa.schema([("j", pa.int32()), ("k", pa.int32()), ("v", pa.int64())]),
             )
 
-    parts = emb.select("embedding").mapInPandas(_gram_partials, "j int, k int, v long")
+    parts = emb.select("embedding").mapInArrow(_gram_partials, "j int, k int, v long")
     parts = store.keep(parts)
     if parts.where(F.col("j") == -2).select("v").distinct().limit(2).count() > 1:
         raise ValueError("pca_power_iteration: the embeddings differ in length")
@@ -1063,7 +1065,8 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
     vs DuckDB (NaN greater than everything) — the parity contract
     must not ride on engine NaN semantics."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -1078,13 +1081,12 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
         .select("vec_id", "label", "e", (F.col("_b") < 10).alias("is_test"))
     )
 
-    def block_best(pdf: pd.DataFrame) -> pd.DataFrame:
-        te = pdf[pdf["is_test"]].sort_values("vec_id")
-        tr = pdf[~pdf["is_test"]].sort_values("vec_id")
-        te_ids, tr_ids = te["vec_id"].to_numpy(), tr["vec_id"].to_numpy()
-        train = {X.shape[1]: (idx, X) for idx, X in _length_groups(tr["e"].to_numpy())}
-        out = [(te_ids[:0], tr_ids[:0], np.empty(0))]
-        for t_idx, Xt in _length_groups(te["e"].to_numpy()):
+    def block_best(block: pa.Table) -> pa.Table:
+        te = block.filter(block.column("is_test")).sort_by("vec_id")
+        tr = block.filter(pc.invert(block.column("is_test"))).sort_by("vec_id")
+        train = {X.shape[1]: (idx, X) for idx, X in _length_groups(tr.column("e"))}
+        out = [(np.empty(0, dtype=np.int64),) * 2 + (np.empty(0),)]
+        for t_idx, Xt in _length_groups(te.column("e")):
             if Xt.shape[1] not in train:
                 continue
             r_idx, Xr = train[Xt.shape[1]]
@@ -1096,13 +1098,20 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
                 b, a = best[i0 : i0 + len(j)], arg[i0 : i0 + len(j)]  # views
                 upd = m > b  # strict: ties keep the earlier (smaller) id
                 b[upd], a[upd] = m[upd], j0 + j[upd]
-            out.append((te_ids[t_idx], tr_ids[r_idx[arg]], best))
+            out.append((t_idx, r_idx[arg], best))
         t, r, raw = (np.concatenate(c) for c in zip(*out))
-        return pd.DataFrame({"test_id": t, "train_id": r, "raw": raw})
+        return pa.table(
+            {
+                "test_id": te.column("vec_id").take(t),
+                "train_id": tr.column("vec_id").take(r),
+                "raw": _nulled(raw),
+            }
+        )
 
+    id_type = marked.schema["vec_id"].dataType.simpleString()
     return (
         marked.groupBy("label")
-        .applyInPandas(block_best, "test_id long, train_id long, raw double")
+        .applyInArrow(block_best, f"test_id {id_type}, train_id {id_type}, raw double")
         .select(
             "test_id",
             "train_id",

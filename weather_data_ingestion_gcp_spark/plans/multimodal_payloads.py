@@ -1,5 +1,5 @@
 """Multimodal payload queries over the binary ``documents`` payloads:
-container metadata, decode and feature extraction through mapInPandas,
+container metadata, decode and feature extraction through mapInArrow,
 frame sampling plans, and the patch-statistics and frame-energy
 analytics over decoded bytes.
 """
@@ -45,7 +45,7 @@ def multimodal_payload_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The mapInPandas decode path with the deterministic fake codec: the
+    """The mapInArrow decode path with the deterministic fake codec: the
     oracle mirrors the fake formula, so the Arrow round-trip, batching, and
     output schema are all verified by the hash compare."""
     d = load_table(spark, sf_dir, "documents")
@@ -73,7 +73,7 @@ def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads
+    """mapInArrow feature extraction over binary payloads
     (multimodal.extract_features): each payload becomes a fixed-dim
     float vector (stub featurizer: per-component byte means, numpy per
     Arrow batch) — the shape that feeds the similarity-search operators.

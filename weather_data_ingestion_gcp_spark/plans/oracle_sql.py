@@ -259,7 +259,7 @@ def _winnow_gram_sql() -> str:
 #: (doc_id, fps list). Mirrors operators.text.winnow_fingerprints: the
 #: ``text.WINNOW_K`` char-grams of the norm_ws text, ``text.WINNOW_W``
 #: windows, base-128 Horner gram value scrambled by the odd golden-ratio
-#: multiplier mod 2^63 — the identical arithmetic the pandas UDF runs.
+#: multiplier mod 2^63 — the identical arithmetic the Arrow UDF runs.
 winnow_fps_sql = f"""norm AS (
         SELECT doc_id, {norm_ws_sql} AS t FROM documents
     ),

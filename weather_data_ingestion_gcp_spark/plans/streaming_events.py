@@ -1224,6 +1224,20 @@ def streaming_engagement_sink_equiv(spark: SparkSession, sf_dir: str) -> DataFra
             spark.conf.set(_k, _v)
 
 
+def _pid_alive(pid: str) -> bool:
+    """Whether ``pid`` names a live process (a name from before the pid
+    was recorded, or any other non-number, does not)."""
+    try:
+        os.kill(int(pid), 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # alive, owned by another user
+    except (ValueError, OverflowError):
+        return False
+    return True
+
+
 def _staged_sink_run(
     spark: SparkSession,
     ev: DataFrame,
@@ -1264,13 +1278,13 @@ def _staged_sink_run(
         .persist()
     )
     os.makedirs(_SCRATCH, exist_ok=True)
-    root = tempfile.mkdtemp(prefix="engagement_sink_", dir=_SCRATCH)
-    # previous runs' scratch is dead weight once a new run starts — keep
-    # the directory bounded instead of leaking one tree per invocation
+    root = tempfile.mkdtemp(prefix=f"engagement_sink_{os.getpid()}_", dir=_SCRATCH)
+    # a run's tables outlive it (the returned frame reads them), so only
+    # the scratch of processes that have exited is dead weight: keep the
+    # directory bounded without touching another live process's tables
     for old in os.listdir(_SCRATCH):
-        p = os.path.join(_SCRATCH, old)
-        if p != root and old.startswith("engagement_sink_"):
-            shutil.rmtree(p, ignore_errors=True)
+        if old.startswith("engagement_sink_") and not _pid_alive(old.split("_")[2]):
+            shutil.rmtree(os.path.join(_SCRATCH, old), ignore_errors=True)
     presence = TxLogTable(os.path.join(root, "presence"))
     profile = TxLogTable(os.path.join(root, "profile"))
     # day_grain_input: the staged relation is ev.distinct() over

@@ -19,7 +19,9 @@ from pyspark.sql import SparkSession
 #:   coalescing) — essential at 100 TB where static planning guesses wrong.
 #: - dynamic partitionOverwriteMode implements the reference's idempotent
 #:   per-day refresh without a DELETE-capable table format.
-#: - Arrow makes any toPandas/pandas_udf boundary columnar, not row-by-row.
+#: - Arrow makes toPandas and pandas createDataFrame columnar, not
+#:   row-by-row; Python UDFs cross as Arrow batches by construction
+#:   (arrow_udf, mapInArrow, applyInArrow).
 SCALE_CONFS: dict[str, str] = {
     # Pin the session timezone so TIMESTAMP_NTZ -> TIMESTAMP casts (see
     # plans/registry.py load_table) are pure type relabels and every
