@@ -754,7 +754,7 @@ def test_hash_sampling_deterministic_and_partition_invariant(spark):
     assert 100 < len(a) < 300  # ~10% of 2000
 
     # split: total partition, disjoint, deterministic
-    s = sampling.train_test_split(df, "k", test_pct=10, holdout_pct=5)
+    s = sampling.train_test_split(df, "k")
     counts = {r.split: r.n for r in s.groupBy("split").agg(F.count("*").alias("n")).collect()}
     assert sum(counts.values()) == 2000
     assert set(counts) == {"train", "test", "holdout"}
@@ -1075,7 +1075,7 @@ def test_null_payload_never_reaches_the_payload_analytics(spark, site):
         assert set(rows) == {"a"}
 
 
-def test_ngram_exact_overlap_counts_and_df_cap(spark):
+def test_ngram_exact_overlap_counts_and_df_cap(spark, monkeypatch):
     rows = [
         (0, "a b c d e f"),       # probe
         (1, "a b c d e g"),       # corpus: shares grams "a b c" "b c d" with 0? n=3
@@ -1086,17 +1086,27 @@ def test_ngram_exact_overlap_counts_and_df_cap(spark):
     sh = dedup.shingles(d, "doc_id", "text", n=3)
     probe = sh.filter(F.col("doc_id") == 0)
     corpus = sh.filter(F.col("doc_id") > 0)
-    out = dedup.ngram_exact_overlap(probe, corpus, min_shared=2, max_gram_df=None)
+    # a df cap at the corpus size (3 docs) keeps every gram
+    monkeypatch.setattr(dedup, "MAX_GRAM_DF", 3)
+    out = dedup.ngram_exact_overlap(probe, corpus)
     got = {(r.probe_id, r.corpus_id): r.shared_grams for r in out.collect()}
     # doc1 shares "a b c", "b c d", "c d e" -> 3; doc2 shares only "a b c" (<2)
     assert got == {(0, 1): 3}
     # df cap of 1 drops "a b c" (in 2 corpus docs) -> doc1 still has 2 left
-    capped = dedup.ngram_exact_overlap(probe, corpus, min_shared=2, max_gram_df=1)
+    monkeypatch.setattr(dedup, "MAX_GRAM_DF", 1)
+    capped = dedup.ngram_exact_overlap(probe, corpus)
     got_capped = {(r.probe_id, r.corpus_id): r.shared_grams for r in capped.collect()}
     assert got_capped == {(0, 1): 2}
 
 
-def test_repeated_spans_maximal_and_aligned(spark):
+def _span_geometry(monkeypatch, max_gram_occ=20):
+    """Word 4-grams and 10-token spans, so the fixtures stay short."""
+    monkeypatch.setattr(dedup, "GRAM_N", 4)
+    monkeypatch.setattr(dedup, "MIN_SPAN_TOKENS", 10)
+    monkeypatch.setattr(dedup, "MAX_GRAM_OCC", max_gram_occ)
+
+
+def test_repeated_spans_maximal_and_aligned(spark, monkeypatch):
     """Span semantics: a shared L-token substring must come back as ONE
     span of token_len L at the right positions in both docs; two shared
     substrings at different alignments stay separate spans; a match that
@@ -1110,8 +1120,9 @@ def test_repeated_spans_maximal_and_aligned(spark):
         (3, "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10"),   # no overlap
     ]
     d = spark.createDataFrame(rows, "doc_id bigint, text string")
-    g = dedup.positioned_shingles(d, "doc_id", "text", n=4)
-    out = dedup.repeated_spans(g, n=4, min_tokens=10, max_gram_occ=20)
+    _span_geometry(monkeypatch)
+    g = dedup.positioned_shingles(d, "doc_id", "text")
+    out = dedup.repeated_spans(g)
     got = {
         (r.id_a, r.id_b): sorted(
             (q.start_a, q.start_b, q.token_len)
@@ -1130,17 +1141,19 @@ def test_repeated_spans_maximal_and_aligned(spark):
     assert not any(3 in pair for pair in got)
 
 
-def test_repeated_spans_occurrence_cap_drops_boilerplate(spark):
+def test_repeated_spans_occurrence_cap_drops_boilerplate(spark, monkeypatch):
     """The stop-gram guard counts OCCURRENCES corpus-wide: a gram pasted
     everywhere (boilerplate) is dropped before the self-join, so no
     span made only of over-cap grams survives."""
     boiler = "b1 b2 b3 b4 b5 b6 b7 b8 b9 b10"
     rows = [(i, boiler) for i in range(6)]  # every gram occurs 6x
     d = spark.createDataFrame(rows, "doc_id bigint, text string")
-    g = dedup.positioned_shingles(d, "doc_id", "text", n=4)
-    assert dedup.repeated_spans(g, n=4, min_tokens=10, max_gram_occ=5).count() == 0
+    _span_geometry(monkeypatch, max_gram_occ=5)
+    g = dedup.positioned_shingles(d, "doc_id", "text")
+    assert dedup.repeated_spans(g).count() == 0
     # raising the cap above the occurrence count restores the spans
-    out = dedup.repeated_spans(g, n=4, min_tokens=10, max_gram_occ=6)
+    monkeypatch.setattr(dedup, "MAX_GRAM_OCC", 6)
+    out = dedup.repeated_spans(g)
     assert out.count() == 15  # C(6,2) pairs, one full-doc span each
     assert {r.token_len for r in out.collect()} == {10}
 
@@ -1198,7 +1211,7 @@ def test_verify_matches_minhash_near_duplicates_on_zipf_corpus(spark):
     assert got == sorted(expect)
 
 
-def test_cross_repeated_spans_provenance(spark):
+def test_cross_repeated_spans_provenance(spark, monkeypatch):
     """Cross-set spans: a probe doc sharing an L-token run with a corpus
     doc reports one span with both start positions; matches WITHIN one
     side never pair; the >= 2 occurrence floor must NOT apply (one
@@ -1210,13 +1223,12 @@ def test_cross_repeated_spans_provenance(spark):
     )
     corpus_rows = [(10, shared + " c1 c2"), (11, "c3 c4 c5 c6 c7 c8 c9 c10")]
     corpus = spark.createDataFrame(corpus_rows, "doc_id bigint, text string")
-    pg = dedup.positioned_shingles(probe, "doc_id", "text", n=4)
-    cg = dedup.positioned_shingles(corpus, "doc_id", "text", n=4)
+    _span_geometry(monkeypatch)
+    pg = dedup.positioned_shingles(probe, "doc_id", "text")
+    cg = dedup.positioned_shingles(corpus, "doc_id", "text")
     got = [
         (r.probe_id, r.corpus_id, r.start_probe, r.start_corpus, r.token_len)
-        for r in dedup.cross_repeated_spans(
-            pg, cg, n=4, min_tokens=10, max_corpus_occ=20
-        ).collect()
+        for r in dedup.cross_repeated_spans(pg, cg).collect()
     ]
     # each shared gram occurs ONCE per side -> still matches (no 2-floor)
     assert got == [(0, 10, 3, 1, 10)]
@@ -1225,19 +1237,19 @@ def test_cross_repeated_spans_provenance(spark):
     many = spark.createDataFrame(
         [(10 + i, shared) for i in range(6)], "doc_id bigint, text string"
     )
-    cg6 = dedup.positioned_shingles(many, "doc_id", "text", n=4)
-    assert dedup.cross_repeated_spans(
-        pg, cg6, n=4, min_tokens=10, max_corpus_occ=5
-    ).count() == 0
+    cg6 = dedup.positioned_shingles(many, "doc_id", "text")
+    monkeypatch.setattr(dedup, "MAX_GRAM_OCC", 5)
+    assert dedup.cross_repeated_spans(pg, cg6).count() == 0
 
 
-def test_positioned_shingles_short_doc_and_positions(spark):
+def test_positioned_shingles_short_doc_and_positions(spark, monkeypatch):
     d = spark.createDataFrame(
         [(0, "a b c d e"), (1, "a b")], "doc_id bigint, text string"
     )
+    monkeypatch.setattr(dedup, "GRAM_N", 4)
     got = sorted(
         (r.doc_id, r.pos, r.shingle)
-        for r in dedup.positioned_shingles(d, "doc_id", "text", n=4).collect()
+        for r in dedup.positioned_shingles(d, "doc_id", "text").collect()
     )
     # doc 1 is shorter than n -> no rows; doc 0: positions 1 and 2
     assert got == [(0, 1, "a b c d"), (0, 2, "b c d e")]

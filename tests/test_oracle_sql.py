@@ -2,9 +2,9 @@
 
 Scans the package source: the hand-spelled fragments of the md5-hex
 integer, the word split, the whitespace class and its fold, the MinHash
-signature and the Jaccard verify join occur in ``oracle_sql.py`` only; no
-plan module rewrites SQL with
-``re.sub`` or imports a ``_SQL_*`` / ``_sql_*`` fragment from a sibling.
+signature, the Jaccard verify join, the span islands and the eval split's
+predicates occur in ``oracle_sql.py`` only; no plan module rewrites SQL
+with ``re.sub`` or imports a ``_SQL_*`` / ``_sql_*`` fragment from a sibling.
 The numpy mirror of ``list_dot_product``, the ascending-dimension fold,
 occurs in ``operators/similarity.py`` only, and the Spark text
 normalization (whitespace folding, the stopword pattern) in
@@ -38,6 +38,9 @@ FRAGMENTS = [
     "list_dot_product(v, ",
     r"[\t\n\v\f\r ]",
     "+', ' ', 'g'",
+    "- ROW_NUMBER() OVER (",
+    "< {TEST_PCT}",
+    ">= {TRAIN_FROM}",
 ]
 FRAGMENT_NAME = re.compile(r"^_(SQL|sql)_")
 

@@ -46,7 +46,7 @@ SITES = {
     ("plans/embeddings.py", "pca_power_iteration", "mapInArrow"):
         f"{_HOSTILE_VECTORS}[pca_power_iteration]",
     ("plans/embeddings.py", "decontaminate_semantic_topmatch", "applyInArrow"):
-        "test_round7.py::test_semantic_decontamination_excludes_zero_norm",
+        "test_decontamination.py::test_semantic_decontamination_excludes_zero_norm",
     ("operators/multimodal.py", "_map_payloads", "mapInArrow"):
         "test_ops_extensions.py::test_null_payload_keeps_its_row_with_null_cells",
     ("operators/text.py", "winnow_fingerprints", "arrow_udf"):

@@ -208,6 +208,20 @@ def test_perfbench_corpus_queries_keep_their_registry_order():
     ]
 
 
+def test_capped_minhash_readers_declare_their_memo():
+    """The three readers of registry.capped_minhash_pairs declare one
+    shares key, so the registry order keeps them adjacent wherever
+    DRIVER_WINDOW puts them."""
+    from weather_data_ingestion_gcp_spark.plans import SHARES
+
+    readers = {n for n, keys in SHARES.items() if "capped_minhash_pairs" in keys}
+    assert readers == {
+        "dedup_minhash_lsh_capped",
+        "graph_pagerank_neardup_capped",
+        "graph_triangle_counts_capped",
+    }
+
+
 def test_load_table_memoizes_per_session_and_dir(spark):
     """load_table returns the SAME analyzed DataFrame object for repeat
     calls (kills the per-call spark.read.parquet re-analysis behind the

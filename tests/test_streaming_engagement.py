@@ -385,9 +385,9 @@ def test_dau_wau_engagement_matches_oracle_with_a_null_ts(spark, tmp_path):
 
 
 def test_sink_entry_keeps_a_live_process_scratch(spark, tmp_path, monkeypatch):
-    """The sink entry's scratch cleanup removes only directories whose
-    process has exited: a sibling directory of this (live) process, whose
-    tables a returned frame may still read, survives a run of the entry."""
+    """The sink entry's scratch cleanup never removes another live
+    process's directory, whose tables a frame it returned may still
+    read; a directory whose process has exited goes."""
     import subprocess
 
     import weather_data_ingestion_gcp_spark.plans.streaming_events as r10
@@ -395,12 +395,35 @@ def test_sink_entry_keeps_a_live_process_scratch(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(r10, "_SCRATCH", str(tmp_path))
     exited = subprocess.Popen(["true"])
     exited.wait()
-    live = tmp_path / f"engagement_sink_{os.getpid()}_sibling"
-    dead = tmp_path / f"engagement_sink_{exited.pid}_gone"
-    for d in (live, dead):
-        d.mkdir()
-        (d / "marker").write_text("x")
-    rows = r10.streaming_engagement_sink_equiv(spark, "/root/testdata/sf0.001").collect()
-    assert rows and all(r.agrees_with_batch for r in rows)
-    assert (live / "marker").exists()
-    assert not dead.exists()
+    other = subprocess.Popen(["sleep", "600"])
+    try:
+        live = tmp_path / f"engagement_sink_{other.pid}_sibling"
+        dead = tmp_path / f"engagement_sink_{exited.pid}_gone"
+        for d in (live, dead):
+            d.mkdir()
+            (d / "marker").write_text("x")
+        rows = r10.streaming_engagement_sink_equiv(
+            spark, "/root/testdata/sf0.001"
+        ).collect()
+        assert rows and all(r.agrees_with_batch for r in rows)
+        assert (live / "marker").exists()
+        assert not dead.exists()
+    finally:
+        other.kill()
+        other.wait()
+
+
+def test_sink_entry_keeps_one_scratch_tree_per_process(spark, tmp_path, monkeypatch):
+    """A long-lived process keeps only its latest run's scratch tree: two
+    runs of the entry leave one ``engagement_sink_<pid>_*`` directory for
+    this process, and the second run's frame still reads its tables."""
+    import weather_data_ingestion_gcp_spark.plans.streaming_events as r10
+
+    monkeypatch.setattr(r10, "_SCRATCH", str(tmp_path))
+    sf = "/root/testdata/sf0.001"
+    first = r10.streaming_engagement_sink_equiv(spark, sf).collect()
+    second = r10.streaming_engagement_sink_equiv(spark, sf)
+    mine = f"engagement_sink_{os.getpid()}_"
+    assert len([p for p in tmp_path.iterdir() if p.name.startswith(mine)]) == 1
+    rows = second.collect()
+    assert rows == first and all(r.agrees_with_batch for r in rows)

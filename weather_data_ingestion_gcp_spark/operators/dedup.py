@@ -537,11 +537,21 @@ def blocked_jaccard_pairs(
 # maximal repeated spans (exact substring dedup at the word grain)
 # ---------------------------------------------------------------------------
 
+#: The one exact-overlap and span geometry, read by the operators below,
+#: the decontamination entries and the DuckDB oracles
+#: (plans/oracle_sql.py): word ``GRAM_N``-grams; an overlap pair shares
+#: >= ``MIN_SHARED`` grams, counting only grams in <= ``MAX_GRAM_DF``
+#: corpus documents; a span is >= ``MIN_SPAN_TOKENS`` tokens, built from
+#: grams seen <= ``MAX_GRAM_OCC`` times.
+GRAM_N = 8
+MIN_SHARED = 2
+MAX_GRAM_DF = 50
+MIN_SPAN_TOKENS = 12
+MAX_GRAM_OCC = 20
 
-def positioned_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 8
-) -> DataFrame:
-    """Word n-grams WITH their 1-based token position: (doc_id, pos,
+
+def positioned_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Word ``GRAM_N``-grams WITH their 1-based token position: (doc_id, pos,
     shingle), one row per occurrence. The distinct-set form
     (:func:`shingles`) deliberately loses adjacency; span coalescing
     needs it back — two grams only merge into one span if their
@@ -550,42 +560,36 @@ def positioned_shingles(
     shingles() (round 13; regex matches iterate left-to-right, so the
     array index under posexplode IS the 1-based token position minus
     one, exactly as with the old transform-over-sequence lambda)."""
-    from .text import ngram_array
-
-    grams = ngram_array(F.col(text_col), n)
+    grams = ngram_array(F.col(text_col), GRAM_N)
     return df.select(
         F.col(id_col).alias("doc_id"), F.posexplode(grams).alias("_p", "shingle")
     ).select("doc_id", (F.col("_p") + 1).cast("long").alias("pos"), "shingle")
 
 
-def repeated_spans(
-    grams: DataFrame,
-    n: int = 8,
-    min_tokens: int = 12,
-    max_gram_occ: int = 20,
-) -> DataFrame:
+def repeated_spans(grams: DataFrame) -> DataFrame:
     """Maximal cross-document repeated token spans — exact substring
     dedup at the word grain (Lee et al., "Deduplicating Training Data
     Makes Language Models Better", ACL'22; their suffix-array 50-token
     spans, re-expressed relationally): coalesce runs of position-aligned
     shared n-grams into maximal spans per (doc pair, alignment
     diagonal). A repeated substring of L >= n tokens appears as exactly
-    L - n + 1 consecutive matching n-grams on one diagonal, so
-    ``token_len = run + n - 1`` recovers the true span length.
+    L - n + 1 consecutive matching n-grams on one diagonal (n =
+    ``GRAM_N``), so ``token_len = run + n - 1`` recovers the true span
+    length; spans shorter than ``MIN_SPAN_TOKENS`` are dropped.
 
     ``grams``: :func:`positioned_shingles` output. Scale shape:
     - the self-join key is xxhash64(gram) — 8-byte keys shuffle ~7x
       less than 8-word strings (64-bit collisions cannot FABRICATE a
-      span: a false span would need min_tokens-n+1 consecutive
+      span: a false span would need MIN_SPAN_TOKENS-n+1 consecutive
       colliding alignments; the one real risk is a collision inflating
       a gram's occurrence count past the cap, vanishing at ~n_grams^2 /
       2^65 and caught by the cross-engine oracle, which joins raw gram
       strings — swap in a 128-bit hash if a corpus ever trips it);
-    - only grams seen 2..``max_gram_occ`` times corpus-wide enter the
+    - only grams seen 2..``MAX_GRAM_OCC`` times corpus-wide enter the
       self-join: occurrence 1 cannot match across documents (the vast
       majority of grams — measured ~90%+ — never leave the count
       aggregate), and the upper cap is the stop-gram guard bounding
-      every gram's fan-out by max_gram_occ^2 regardless of corpus size,
+      every gram's fan-out by MAX_GRAM_OCC^2 regardless of corpus size,
       the same discipline as ngram_exact_overlap's df cap. Boilerplate
       (license headers, nav text) is exactly what the cap drops;
     - islands need ONE window over the matched rows (pos_a -
@@ -594,13 +598,11 @@ def repeated_spans(
       occurrence), never a positions self-join.
     Returns (id_a, id_b, start_a, start_b, token_len), id_a < id_b.
     """
-    from pyspark.sql.window import Window
-
     g = grams.select("doc_id", "pos", F.xxhash64("shingle").alias("h"))
     kept = (
         g.groupBy("h")
         .agg(F.count(F.lit(1)).alias("_occ"))
-        .filter((F.col("_occ") >= 2) & (F.col("_occ") <= max_gram_occ))
+        .filter((F.col("_occ") >= 2) & (F.col("_occ") <= MAX_GRAM_OCC))
         .select("h")
     )
     # both self-join sides scan this relation; without the persist each
@@ -617,27 +619,10 @@ def repeated_spans(
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", "pa", "pb", (F.col("pa") - F.col("pb")).alias("diag"))
     )
-    w = Window.partitionBy("id_a", "id_b", "diag").orderBy("pa")
-    isl = m.withColumn("_isl", F.col("pa") - F.row_number().over(w))
-    return (
-        isl.groupBy("id_a", "id_b", "diag", "_isl")
-        .agg(
-            F.min("pa").alias("start_a"),
-            F.min("pb").alias("start_b"),
-            (F.count(F.lit(1)) + F.lit(n - 1)).cast("long").alias("token_len"),
-        )
-        .filter(F.col("token_len") >= min_tokens)
-        .select("id_a", "id_b", "start_a", "start_b", "token_len")
-    )
+    return _spans(m, "id_a", "id_b", ("start_a", "start_b"))
 
 
-def cross_repeated_spans(
-    probe_grams: DataFrame,
-    corpus_grams: DataFrame,
-    n: int = 8,
-    min_tokens: int = 12,
-    max_corpus_occ: int = 20,
-) -> DataFrame:
+def cross_repeated_spans(probe_grams: DataFrame, corpus_grams: DataFrame) -> DataFrame:
     """Cross-set maximal repeated spans — :func:`repeated_spans` between
     two DISJOINT relations instead of a self-join: for every (probe doc,
     corpus doc) pair, the maximal verbatim token spans they share. The
@@ -651,8 +636,6 @@ def cross_repeated_spans(
     bounds fan-out (probe-side grams are the small set by construction —
     a test split, an eval suite). Islands are the same single window per
     (pair, diagonal)."""
-    from pyspark.sql.window import Window
-
     pg = probe_grams.select(
         F.col("doc_id").alias("probe_id"),
         F.col("pos").alias("pa"),
@@ -666,24 +649,34 @@ def cross_repeated_spans(
     kept = (
         cg.groupBy("h")
         .agg(F.count(F.lit(1)).alias("_occ"))
-        .filter(F.col("_occ") <= max_corpus_occ)
+        .filter(F.col("_occ") <= MAX_GRAM_OCC)
         .select("h")
     )
     cg = cg.join(kept, "h", "left_semi")
     m = pg.join(cg, "h").select(
         "probe_id", "corpus_id", "pa", "pb", (F.col("pa") - F.col("pb")).alias("diag")
     )
-    w = Window.partitionBy("probe_id", "corpus_id", "diag").orderBy("pa")
-    isl = m.withColumn("_isl", F.col("pa") - F.row_number().over(w))
+    return _spans(m, "probe_id", "corpus_id", ("start_probe", "start_corpus"))
+
+
+def _spans(m: DataFrame, a: str, b: str, starts: tuple[str, str]) -> DataFrame:
+    """Maximal spans over matched grams ``m`` (<a>, <b>, pa, pb, diag):
+    each run of consecutive positions on one diagonal is one span of
+    run + ``GRAM_N`` - 1 tokens, kept at >= ``MIN_SPAN_TOKENS``. DuckDB
+    mirror: plans.oracle_sql._spans_sql."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy(a, b, "diag").orderBy("pa")
     return (
-        isl.groupBy("probe_id", "corpus_id", "diag", "_isl")
+        m.withColumn("_isl", F.col("pa") - F.row_number().over(w))
+        .groupBy(a, b, "diag", "_isl")
         .agg(
-            F.min("pa").alias("start_probe"),
-            F.min("pb").alias("start_corpus"),
-            (F.count(F.lit(1)) + F.lit(n - 1)).cast("long").alias("token_len"),
+            F.min("pa").alias(starts[0]),
+            F.min("pb").alias(starts[1]),
+            (F.count(F.lit(1)) + F.lit(GRAM_N - 1)).cast("long").alias("token_len"),
         )
-        .filter(F.col("token_len") >= min_tokens)
-        .select("probe_id", "corpus_id", "start_probe", "start_corpus", "token_len")
+        .filter(F.col("token_len") >= MIN_SPAN_TOKENS)
+        .select(a, b, *starts, "token_len")
     )
 
 
@@ -692,37 +685,31 @@ def cross_repeated_spans(
 # ---------------------------------------------------------------------------
 
 
-def ngram_exact_overlap(
-    probe_grams: DataFrame,
-    corpus_grams: DataFrame,
-    min_shared: int = 2,
-    max_gram_df: int | None = 50,
-) -> DataFrame:
+def ngram_exact_overlap(probe_grams: DataFrame, corpus_grams: DataFrame) -> DataFrame:
     """Exact n-gram overlap pairs (GPT-3-style decontamination): for every
-    probe document, find corpus documents sharing >= ``min_shared`` exact
+    probe document, find corpus documents sharing >= ``MIN_SHARED`` exact
     word n-grams. Inputs are ``shingles()``-shaped (doc_id, shingle),
     distinct per doc, so the equi-join emits one row per shared gram and a
     plain count is the distinct intersection size.
 
-    ``max_gram_df`` drops grams appearing in more than that many corpus
-    docs before the join — the standard stop-gram guard: at 100 TB a
+    Grams appearing in more than ``MAX_GRAM_DF`` corpus docs are dropped
+    before the join — the standard stop-gram guard: at 100 TB a
     boilerplate gram (license headers, nav text) would otherwise fan out
     |probe| x |corpus| rows; dropping high-DF grams bounds each gram's
     join output. Skew-safe by construction.
     """
     tr = corpus_grams.select(F.col("doc_id").alias("corpus_id"), "shingle")
-    if max_gram_df is not None:
-        kept = (
-            tr.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_gram_df)
-            .select("shingle")
-        )
-        tr = tr.join(kept, "shingle", "left_semi")
+    kept = (
+        tr.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("_df"))
+        .filter(F.col("_df") <= MAX_GRAM_DF)
+        .select("shingle")
+    )
+    tr = tr.join(kept, "shingle", "left_semi")
     pr = probe_grams.select(F.col("doc_id").alias("probe_id"), "shingle")
     return (
         pr.join(tr, "shingle")
         .groupBy("probe_id", "corpus_id")
         .agg(F.count(F.lit(1)).cast("long").alias("shared_grams"))
-        .filter(F.col("shared_grams") >= min_shared)
+        .filter(F.col("shared_grams") >= MIN_SHARED)
     )

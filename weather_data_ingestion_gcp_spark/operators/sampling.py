@@ -135,16 +135,32 @@ def dataset_mix(
     )
 
 
-def train_test_split(
-    df: DataFrame, key_col: str, test_pct: int = 10, holdout_pct: int = 0
-) -> DataFrame:
+#: The one eval split, by hash bucket, read by every decontamination
+#: entry and by the DuckDB oracles (plans/oracle_sql.py): test is buckets
+#: [0, TEST_PCT), holdout the next HOLDOUT_PCT, train the rest.
+TEST_PCT = 10
+HOLDOUT_PCT = 5
+TRAIN_FROM = TEST_PCT + HOLDOUT_PCT
+
+
+def in_test_split(key_col: str) -> Column:
+    """Whether ``key_col`` falls in the eval split's test buckets."""
+    return hash_bucket(F.col(key_col)) < TEST_PCT
+
+
+def in_train_split(key_col: str) -> Column:
+    """Whether ``key_col`` falls in the eval split's train buckets."""
+    return hash_bucket(F.col(key_col)) >= TRAIN_FROM
+
+
+def train_test_split(df: DataFrame, key_col: str) -> DataFrame:
     """Adds a ``split`` column (train/test/holdout) from the key hash.
     Membership is a function of the key alone — re-ingesting a document
     never migrates it across splits (the leakage guarantee)."""
     b = hash_bucket(F.col(key_col))
     split = (
-        F.when(b < test_pct, F.lit("test"))
-        .when(b < test_pct + holdout_pct, F.lit("holdout"))
+        F.when(b < TEST_PCT, F.lit("test"))
+        .when(b < TRAIN_FROM, F.lit("holdout"))
         .otherwise(F.lit("train"))
     )
     return df.withColumn("split", split)

@@ -65,7 +65,8 @@ DRIVER_WINDOW = [
     "graph_triangle_counts",
     # changed-code leads: the capped MinHash family, whose band keys are
     # now one row-local projection at the module-constant geometry — the
-    # capped-pairs memo builder, then its two graph readers; then the
+    # capped-pairs memo builder, then its two graph readers (one shares
+    # key, so they stay adjacent); then the
     # sorted-neighborhood pairs, whose verify now intersects per-document
     # shingle arrays like the MinHash block's
     "dedup_minhash_lsh_capped",
@@ -74,26 +75,27 @@ DRIVER_WINDOW = [
     "dedup_sorted_neighborhood",
     # changed-code leads: the similarity entries whose fold, top-k cut
     # or sign-LSH geometry moved behind operators/similarity.py — the
-    # sign-LSH band-index builder, then its shares follower; the exact
-    # top-k memo anchor, then its follower
+    # sign-LSH band-index builder, then its shares follower — and the
+    # semantic decontamination, which now reads the eval split
     "similarity_ann_rp_lsh",
     "dedup_semantic_prune",
-    "similarity_cosine_topk",
-    "similarity_ann_ivf_kmeans",
-    "similarity_ann_ivf",
-    "dedup_embedding_cosine",
     "decontaminate_semantic_topmatch",
-    # changed-code leads: entries whose driver-built frame now enters the
-    # plan as one Arrow local relation (store.rows) — the MMR picks, the
-    # BPE merges, the mix rates, the bloom bitset (it anchors doc_8grams,
-    # so decontaminate_ngram_exact opens the post-window suite), and the
-    # sink's batch-grain comparison rows; the BPE encoder, whose oracle
-    # now trims spaces only, right behind its bpe_words anchor
-    "similarity_mmr_diverse",
-    "bpe_learn_merges",
-    "bpe_apply_encode",
-    "dataset_mix_by_lang",
+    # changed-code leads: the entries whose eval split, 80/20 split or
+    # exact-overlap and span geometry now come from the constants of
+    # operators/sampling.py and operators/dedup.py — the doc_8grams pair
+    # (after dedup_semantic_prune, as perfbench's corpus_ops expects),
+    # the span provenance, the repeated_spans pair, the split report and
+    # the three 80/20 entries; then the engagement sink, whose scratch
+    # now keeps one tree per live process
+    "decontaminate_ngram_exact",
     "decontaminate_bloom_prefilter",
+    "decontaminate_span_provenance",
+    "dedup_repeated_spans",
+    "dedup_span_scrub",
+    "train_test_split_stats",
+    "split_leakage_safe",
+    "pretrain_data_build",
+    "lm_eval_train_test_split",
     "streaming_engagement_sink_equiv",
     # changed-code leads: the entries whose text normalization now comes
     # from operators/text.py — the kept winnow-fingerprint relation's

@@ -19,14 +19,15 @@ from pyspark.sql.window import Window
 from .. import store
 from ..operators import sketch, text
 from ..operators.layout import spread_small
-from ..operators.sampling import hash_bucket, hex_int
+from ..operators.sampling import hex_int, in_test_split, in_train_split
 from ..operators.text import words as text_words
 from .oracle_sql import (
     bloom_positions_sql,
     countmin_sql,
     fingerprint_sql,
-    hash_bucket_sql,
     hex_sql,
+    in_test_split_sql,
+    in_train_split_sql,
     kmv_sql,
     words_sql,
 )
@@ -171,13 +172,14 @@ _BLOOM_HEXW = 4
 @register(
     "bloom_membership_check",
     oracle=f"""
-    WITH split AS (
-        SELECT doc_id, {bloom_positions_sql("text", _BLOOM_HEXW)} AS ps,
-               {hash_bucket_sql("doc_id")} % 100 AS b
+    WITH docs AS (
+        SELECT doc_id, {bloom_positions_sql("text", _BLOOM_HEXW)} AS ps
         FROM documents
     ),
-    bits AS (SELECT DISTINCT unnest(ps) AS pos FROM split WHERE b >= 15),
-    probe AS (SELECT doc_id, unnest(ps) AS pos FROM split WHERE b < 10)
+    bits AS (SELECT DISTINCT unnest(ps) AS pos FROM docs
+             WHERE {in_train_split_sql("doc_id")}),
+    probe AS (SELECT doc_id, unnest(ps) AS pos FROM docs
+              WHERE {in_test_split_sql("doc_id")})
     SELECT p.doc_id,
            CAST(COUNT(bits.pos) AS BIGINT) AS n_hits,
            CAST(COUNT(bits.pos) = {sketch.BLOOM_K} AS INT) AS maybe_member
@@ -197,9 +199,8 @@ def bloom_membership_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog of the runtime bloom-join pruning pinned in
     tests/test_scale_plans.py."""
     d = load_table(spark, sf_dir, "documents")
-    b = hash_bucket(F.col("doc_id"))
-    words = sketch.bloom_bitset_words(d.filter(b >= 15), "text", _BLOOM_HEXW)
-    probe = d.filter(b < 10).select("doc_id", "text")
+    words = sketch.bloom_bitset_words(d.filter(in_train_split("doc_id")), "text", _BLOOM_HEXW)
+    probe = d.filter(in_test_split("doc_id")).select("doc_id", "text")
     return (
         sketch.bloom_hits(probe, "text", words, _BLOOM_HEXW)
         .select(

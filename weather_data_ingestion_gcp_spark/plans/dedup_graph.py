@@ -21,14 +21,19 @@ from pyspark.sql.window import Window
 
 from .. import store
 from ..operators import dedup, graph, sampling, sketch, text
-from ..operators.sampling import hash_bucket
+from ..operators.sampling import in_test_split, in_train_split
 from .oracle_sql import (
     clusters_sql,
+    cross_spans_sql,
     fingerprint_sql,
     hash_bucket_sql,
+    in_test_split_sql,
+    in_train_split_sql,
     minhash_bands_sql,
     minhash_pairs_sql,
+    ngram_overlap_sql,
     overlap_sql,
+    repeated_spans_sql,
     sampled_docs_sql,
     shingles_sql,
     simhash16_sql,
@@ -145,11 +150,10 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sh AS ({shingles_sql(3)}),
     {minhash_bands_sql()},
-    split AS (SELECT doc_id, {hash_bucket_sql("doc_id")} % 100 AS b FROM documents),
-    tb AS (SELECT bands.doc_id AS test_id, band_key
-           FROM bands JOIN split USING (doc_id) WHERE split.b < 10),
-    rb AS (SELECT bands.doc_id AS train_id, band_key
-           FROM bands JOIN split USING (doc_id) WHERE split.b >= 15),
+    tb AS (SELECT doc_id AS test_id, band_key FROM bands
+           WHERE {in_test_split_sql("doc_id")}),
+    rb AS (SELECT doc_id AS train_id, band_key FROM bands
+           WHERE {in_train_split_sql("doc_id")}),
     cand AS (SELECT DISTINCT tb.test_id, rb.train_id
              FROM tb JOIN rb USING (band_key)),
     {verify_jaccard_sql("cand", dedup.JACCARD_FLOOR, ids=("test_id", "train_id"))}
@@ -160,16 +164,16 @@ def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline: find every test-split document with a near-duplicate in the
     train split (a test answer the model may have memorized verbatim).
     Splits are the SAME deterministic hash buckets as train_test_split
-    (test: bucket < 10, train: bucket >= 15), and the LSH band join runs
-    test-bands x train-bands ONLY — candidate work scales with the small
-    test split times colliding train buckets, never train x train.
+    (sampling.in_test_split / in_train_split, at the TEST_PCT and
+    TRAIN_FROM constants of operators/sampling.py), and the LSH band join
+    runs test-bands x train-bands ONLY — candidate work scales with the
+    small test split times colliding train buckets, never train x train.
     Jaccard-verified at dedup.JACCARD_FLOOR on word-3-gram shingles."""
     d = load_table(spark, sf_dir, "documents")
     sh = dedup.shingles(d, "doc_id", "text", n=3)
     bands = dedup.lsh_band_keys(dedup.minhash_wide_signatures(sh))
-    b = hash_bucket(F.col("doc_id"))
-    test_ids = d.select("doc_id").filter(b < 10)
-    train_ids = d.select("doc_id").filter(b >= 15)
+    test_ids = d.select("doc_id").filter(in_test_split("doc_id"))
+    train_ids = d.select("doc_id").filter(in_train_split("doc_id"))
     tb = bands.join(test_ids, "doc_id", "left_semi").select(
         F.col("doc_id").alias("id_a"), "band_key"
     )
@@ -189,7 +193,7 @@ def decontaminate_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "dedup_minhash_lsh_capped",
+    "dedup_minhash_lsh_capped", shares=("capped_minhash_pairs",),
     oracle=minhash_pairs_sql("documents", 1, 50),
 )
 def dedup_minhash_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -294,38 +298,26 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the full tokenization at the registry tail, 4.6 s -> 13.2 s in-suite)
 @register(
     "decontaminate_ngram_exact", shares=("doc_8grams",),
-    oracle=rf"""
-    WITH sh AS ({shingles_sql(8)}),
-    split AS (SELECT doc_id, {hash_bucket_sql("doc_id")} % 100 AS b FROM documents),
-    te AS (SELECT sh.doc_id AS test_id, shingle
-           FROM sh JOIN split USING (doc_id) WHERE split.b < 10),
-    tr AS (SELECT sh.doc_id AS train_id, shingle
-           FROM sh JOIN split USING (doc_id) WHERE split.b >= 15),
-    kept AS (SELECT shingle FROM tr GROUP BY shingle HAVING COUNT(*) <= 50)
-    SELECT te.test_id, tr.train_id, CAST(COUNT(*) AS BIGINT) AS shared_grams
-    FROM te
-    JOIN kept USING (shingle)
-    JOIN tr USING (shingle)
-    GROUP BY te.test_id, tr.train_id
-    HAVING COUNT(*) >= 2
-    ORDER BY test_id, train_id
+    oracle=f"""
+    WITH {ngram_overlap_sql()}
+    SELECT * FROM pairs ORDER BY test_id, train_id
     """,
 )
 def decontaminate_ngram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-overlap decontamination (the GPT-3 appendix-C recipe, sized to
-    this corpus): flag every test-split document sharing >= 2 exact word
-    8-grams with a train-split document. Complements the LSH variant
+    this corpus): flag every test-split document sharing >= MIN_SHARED
+    exact word GRAM_N-grams with a train-split document (the
+    operators/dedup.py geometry). Complements the LSH variant
     (decontaminate_test_split) — exact n-grams catch verbatim spans that
     near-dup Jaccard can dilute away on long documents. The high-DF
-    stop-gram guard (dedup.ngram_exact_overlap max_gram_df) bounds the
+    stop-gram guard (dedup.ngram_exact_overlap's MAX_GRAM_DF) bounds the
     per-gram join fan-out, which is what makes the equi-join safe at
     corpus scale."""
     d = load_table(spark, sf_dir, "documents")
     # persisted + registry-tracked: the full-corpus 8-gram relation is
     # CacheManager-shared with any other same-shape consumer, so the
     # corpus tokenizes once for the whole decontamination block
-    sh = store.keep(dedup.shingles(d, "doc_id", "text", n=8), big=True)
-    b = hash_bucket(F.col("doc_id"))
+    sh = store.keep(dedup.shingles(d, "doc_id", "text", n=dedup.GRAM_N), big=True)
     # round-14 probe, REJECTED at decade scale: filtering the gram
     # relation directly on the md5 doc-id bucket (instead of these
     # broadcast semi-joins) removed two joins and measured warm
@@ -334,9 +326,9 @@ def decontaminate_ngram_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (~70M md5s across both splits at sf10) instead of once per
     # DOCUMENT row (~1M) on the broadcast build side. The semi-join is
     # the scale shape; keep it.
-    te = sh.join(d.filter(b < 10).select("doc_id"), "doc_id", "left_semi")
-    tr = sh.join(d.filter(b >= 15).select("doc_id"), "doc_id", "left_semi")
-    out = dedup.ngram_exact_overlap(te, tr, min_shared=2, max_gram_df=50)
+    te = sh.join(d.filter(in_test_split("doc_id")).select("doc_id"), "doc_id", "left_semi")
+    tr = sh.join(d.filter(in_train_split("doc_id")).select("doc_id"), "doc_id", "left_semi")
+    out = dedup.ngram_exact_overlap(te, tr)
     return out.select(
         F.col("probe_id").alias("test_id"),
         F.col("corpus_id").alias("train_id"),
@@ -404,7 +396,7 @@ def dedup_keep_best_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "incremental_ingest_dedup",
     oracle=f"""
     WITH split AS (
-        SELECT doc_id, lang, text, {hash_bucket_sql('doc_id')} % 100 AS b
+        SELECT doc_id, lang, text, {hash_bucket_sql('doc_id')} AS b
         FROM documents),
     inc AS (SELECT doc_id, lang, text FROM split WHERE b < 30),
     corp AS (SELECT DISTINCT text FROM split WHERE b >= 30)
@@ -854,7 +846,7 @@ def _capped_pairs(spark: SparkSession, sf_dir: str):
 
 
 @register(
-    "graph_pagerank_neardup_capped",
+    "graph_pagerank_neardup_capped", shares=("capped_minhash_pairs",),
     oracle=_pagerank_oracle(_PR_ITERS, minhash_pairs_sql("documents", 1, 50)),
 )
 def graph_pagerank_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,7 +858,7 @@ def graph_pagerank_neardup_capped(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @register(
-    "graph_triangle_counts_capped",
+    "graph_triangle_counts_capped", shares=("capped_minhash_pairs",),
     oracle=_triangle_oracle(minhash_pairs_sql("documents", 1, 50)),
 )
 def graph_triangle_counts_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1378,23 +1370,11 @@ def minhash_estimate_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "decontaminate_bloom_prefilter", shares=("doc_8grams",),
-    oracle=rf"""
-    WITH sh AS ({shingles_sql(8)}),
-    split AS (SELECT doc_id, {hash_bucket_sql("doc_id")} % 100 AS b FROM documents),
-    te AS (SELECT sh.doc_id AS test_id, shingle
-           FROM sh JOIN split USING (doc_id) WHERE split.b < 10),
-    tr AS (SELECT sh.doc_id AS train_id, shingle
-           FROM sh JOIN split USING (doc_id) WHERE split.b >= 15),
-    kept AS (SELECT shingle FROM tr GROUP BY shingle HAVING COUNT(*) <= 50),
-    pairs AS (
-        SELECT te.test_id, tr.train_id, CAST(COUNT(*) AS BIGINT) AS c
-        FROM te JOIN kept USING (shingle) JOIN tr USING (shingle)
-        GROUP BY te.test_id, tr.train_id
-        HAVING COUNT(*) >= 2
-    )
+    oracle=f"""
+    WITH {ngram_overlap_sql()}
     SELECT test_id,
            CAST(COUNT(*) AS BIGINT) AS n_train_docs,
-           CAST(SUM(c) AS BIGINT) AS shared_grams_total
+           CAST(SUM(shared_grams) AS BIGINT) AS shared_grams_total
     FROM pairs GROUP BY test_id ORDER BY test_id
     """,
 )
@@ -1426,11 +1406,11 @@ def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     side. (decontaminate_ngram_exact keeps its persisted full-corpus
     relation — without a bloom it genuinely joins the whole train side.)"""
     d = load_table(spark, sf_dir, "documents")
-    b = hash_bucket(F.col("doc_id"))
     # test split: tokenize ONLY the 10% split; persisted because both
     # the bloom build and the exact join consume it
     te = store.keep(
-        dedup.shingles(d.filter(b < 10), "doc_id", "text", n=8), big=True
+        dedup.shingles(d.filter(in_test_split("doc_id")), "doc_id", "text", n=dedup.GRAM_N),
+        big=True,
     )
     # adaptive width (r7): a fixed 2^20-bit bloom saturates once the
     # test split carries ~>130k distinct grams and the prune stops
@@ -1444,11 +1424,11 @@ def decontaminate_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame
     # (measured: sf1 isolated-warm 9.9 s with the double tokenize). It
     # is O(maybe-contaminating grams) — bounded by the bloom, NOT
     # corpus-sized, so persisting it is safe at any scale.
-    tr = dedup.shingles(d.filter(b >= 15), "doc_id", "text", n=8)
+    tr = dedup.shingles(d.filter(in_train_split("doc_id")), "doc_id", "text", n=dedup.GRAM_N)
     tr_pruned = store.keep(
         sketch.bloom_xl_prune(tr, "shingle", words, hexw)
     )
-    out = dedup.ngram_exact_overlap(te, tr_pruned, min_shared=2, max_gram_df=50)
+    out = dedup.ngram_exact_overlap(te, tr_pruned)
     return (
         out.groupBy(F.col("probe_id").alias("test_id"))
         .agg(
@@ -2048,65 +2028,33 @@ def record_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame
 # surface like the rest of the dedup block.
 
 
-#: The spans CTE block shared by the finder and scrub oracles
-#: (finder/apply pairs mirror their oracles the same way
-#: dsir_importance_weights / dsir_select_topp do).
-_SQL_SPANS = f"""
-    pg AS ({shingles_sql(8, positional=True)}),
-    kept AS (SELECT shingle FROM pg GROUP BY shingle
-             HAVING COUNT(*) BETWEEN 2 AND 20),
-    g AS (SELECT doc_id, pos, shingle FROM pg JOIN kept USING (shingle)),
-    m AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-               a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
-        FROM g a JOIN g b USING (shingle)
-        WHERE a.doc_id < b.doc_id
-    ),
-    isl AS (
-        SELECT *,
-               pa - ROW_NUMBER() OVER (
-                   PARTITION BY id_a, id_b, diag ORDER BY pa) AS grp
-        FROM m
-    ),
-    spans AS (
-        SELECT id_a, id_b,
-               CAST(MIN(pa) AS BIGINT) AS start_a,
-               CAST(MIN(pb) AS BIGINT) AS start_b,
-               CAST(COUNT(*) + 7 AS BIGINT) AS token_len
-        FROM isl
-        GROUP BY id_a, id_b, diag, grp
-        HAVING COUNT(*) + 7 >= 12
-    )
-"""
-
-
 # shares: the persisted repeated-gram relation the scrub composes verbatim
 @register(
     "dedup_repeated_spans", shares=("repeated_spans",),
     oracle=f"""
-    WITH {_SQL_SPANS}
+    WITH {repeated_spans_sql()}
     SELECT * FROM spans ORDER BY id_a, id_b, start_a, start_b
     """,
 )
 def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximal repeated token spans (>= 12 tokens) between document
-    pairs: position-aligned word-8-gram matches coalesced per alignment
-    diagonal (operators/dedup.repeated_spans). The 20-occurrence
-    stop-gram cap bounds every gram's self-join fan-out at any corpus
-    size; islands are one window over the matched rows. Near-copies
-    surface as one long span, template reuse as several short ones —
-    the whole-doc entries (dedup_minhash_lsh, dedup_ngram_jaccard)
-    can't distinguish those two shapes."""
+    """Maximal repeated token spans (>= dedup.MIN_SPAN_TOKENS tokens)
+    between document pairs: position-aligned word-GRAM_N-gram matches
+    coalesced per alignment diagonal (operators/dedup.repeated_spans).
+    The MAX_GRAM_OCC stop-gram cap bounds every gram's self-join fan-out
+    at any corpus size; islands are one window over the matched rows.
+    Near-copies surface as one long span, template reuse as several
+    short ones — the whole-doc entries (dedup_minhash_lsh,
+    dedup_ngram_jaccard) can't distinguish those two shapes."""
     d = load_table(spark, sf_dir, "documents")
-    g = dedup.positioned_shingles(d, "doc_id", "text", n=8)
-    out = dedup.repeated_spans(g, n=8, min_tokens=12, max_gram_occ=20)
+    g = dedup.positioned_shingles(d, "doc_id", "text")
+    out = dedup.repeated_spans(g)
     return out.orderBy("id_a", "id_b", "start_a", "start_b")
 
 
 @register(
     "dedup_span_scrub", shares=("repeated_spans",),
     oracle=rf"""
-    WITH {_SQL_SPANS},
+    WITH {repeated_spans_sql()},
     rng AS (
         SELECT id_b AS doc_id, start_b AS s, start_b + token_len - 1 AS e
         FROM spans
@@ -2149,8 +2097,8 @@ def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_repeated_spans (CacheManager plan-dedup; shares-adjacent).
     """
     d = load_table(spark, sf_dir, "documents")
-    g = dedup.positioned_shingles(d, "doc_id", "text", n=8)
-    spans = dedup.repeated_spans(g, n=8, min_tokens=12, max_gram_occ=20)
+    g = dedup.positioned_shingles(d, "doc_id", "text")
+    spans = dedup.repeated_spans(g)
     rng = spans.select(
         F.col("id_b").alias("doc_id"),
         F.col("start_b").alias("s"),
@@ -2192,27 +2140,8 @@ def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "decontaminate_span_provenance",
-    oracle=rf"""
-    WITH pg AS ({shingles_sql(8, positional=True)}),
-    split AS (SELECT doc_id, {hash_bucket_sql("doc_id")} % 100 AS b FROM documents),
-    te AS (SELECT pg.doc_id AS probe_id, pos AS pa, shingle
-           FROM pg JOIN split USING (doc_id) WHERE split.b < 10),
-    tr0 AS (SELECT pg.doc_id AS corpus_id, pos AS pb, shingle
-            FROM pg JOIN split USING (doc_id) WHERE split.b >= 15),
-    kept AS (SELECT shingle FROM tr0 GROUP BY shingle HAVING COUNT(*) <= 20),
-    tr AS (SELECT tr0.* FROM tr0 JOIN kept USING (shingle)),
-    m AS (SELECT probe_id, corpus_id, pa, pb, pa - pb AS diag
-          FROM te JOIN tr USING (shingle)),
-    isl AS (SELECT *, pa - ROW_NUMBER() OVER (
-                PARTITION BY probe_id, corpus_id, diag ORDER BY pa) AS grp
-            FROM m),
-    spans AS (
-        SELECT probe_id, corpus_id,
-               CAST(MIN(pa) AS BIGINT) AS start_test,
-               CAST(MIN(pb) AS BIGINT) AS start_train,
-               CAST(COUNT(*) + 7 AS BIGINT) AS token_len
-        FROM isl GROUP BY probe_id, corpus_id, diag, grp
-        HAVING COUNT(*) + 7 >= 12),
+    oracle=f"""
+    WITH {cross_spans_sql()},
     ranked AS (SELECT *, ROW_NUMBER() OVER (
                    PARTITION BY probe_id
                    ORDER BY token_len DESC, corpus_id, start_test, start_train
@@ -2225,10 +2154,10 @@ def dedup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def decontaminate_span_provenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contamination provenance (the GPT-3-appendix-style exclusion
     report, upgraded from counts to SPANS): for every test-split doc
-    sharing a verbatim run of >= 12 tokens with a train-split doc,
-    report the LONGEST such span — which train doc, and where in both
-    texts. Composes the positioned-gram machinery cross-set
-    (operators/dedup.cross_repeated_spans): only the train side carries
+    sharing a verbatim run of >= dedup.MIN_SPAN_TOKENS tokens with a
+    train-split doc, report the LONGEST such span — which train doc,
+    and where in both texts. Composes the positioned-gram machinery
+    cross-set (operators/dedup.cross_repeated_spans): only the train side carries
     the stop-gram cap (a gram once-in-test + once-in-train is a
     legitimate leak), the probe side is the small split by
     construction, islands are one window per (pair, diagonal), and the
@@ -2236,18 +2165,15 @@ def decontaminate_span_provenance(spark: SparkSession, sf_dir: str) -> DataFrame
     then ids/positions). Same doc-id-hash split as
     decontaminate_ngram_exact, so the two reports cross-reference."""
     d = load_table(spark, sf_dir, "documents")
-    g = dedup.positioned_shingles(d, "doc_id", "text", n=8)
-    b = hash_bucket(F.col("doc_id"))
+    g = dedup.positioned_shingles(d, "doc_id", "text")
     # round-14 probe, REJECTED at decade scale (see the twin comment in
     # decontaminate_ngram_exact): filtering the positioned-gram relation
     # directly on the md5 bucket moves the md5 from once-per-document to
     # once-per-gram-row — the sf10 A/B on the ngram twin measured warm
     # 16 -> 106 s. The broadcast semi-join stays.
-    te = g.join(d.filter(b < 10).select("doc_id"), "doc_id", "left_semi")
-    tr = g.join(d.filter(b >= 15).select("doc_id"), "doc_id", "left_semi")
-    spans = dedup.cross_repeated_spans(
-        te, tr, n=8, min_tokens=12, max_corpus_occ=20
-    )
+    te = g.join(d.filter(in_test_split("doc_id")).select("doc_id"), "doc_id", "left_semi")
+    tr = g.join(d.filter(in_train_split("doc_id")).select("doc_id"), "doc_id", "left_semi")
+    spans = dedup.cross_repeated_spans(te, tr)
 
     w = Window.partitionBy("probe_id").orderBy(
         F.col("token_len").desc(), "corpus_id", "start_probe", "start_corpus"

@@ -15,9 +15,9 @@ from pyspark.sql.window import Window
 
 from .. import store
 from ..operators import similarity
-from ..operators.sampling import hash_bucket
+from ..operators.sampling import in_test_split, in_train_split
 from ..operators.similarity import _cosine_tiles, _length_groups, _nulled
-from .oracle_sql import hash_bucket_sql, sign_bands_sql, sub_block_sql
+from .oracle_sql import in_test_split_sql, in_train_split_sql, sign_bands_sql, sub_block_sql
 from .registry import load_table, register
 
 
@@ -1009,10 +1009,10 @@ _SEMDECON_ORACLE = f"""
         FROM embeddings
     ),
     te AS (SELECT * FROM v
-           WHERE {hash_bucket_sql("vec_id")} % 100 < 10
+           WHERE {in_test_split_sql("vec_id")}
              AND list_dot_product(e, e) > 0),
     tr AS (SELECT * FROM v
-           WHERE {hash_bucket_sql("vec_id")} % 100 >= 15
+           WHERE {in_train_split_sql("vec_id")}
              AND list_dot_product(e, e) > 0),
     scored AS (
         SELECT te.vec_id AS test_id, tr.vec_id AS train_id,
@@ -1069,16 +1069,14 @@ def decontaminate_semantic_topmatch(spark: SparkSession, sf_dir: str) -> DataFra
     import pyarrow.compute as pc
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        "label",
-        F.col("embedding").cast("array<double>").alias("e"),
-        hash_bucket(F.col("vec_id")).alias("_b"),
+        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
     )
     sq = F.aggregate("e", F.lit(0.0), lambda a, x: a + x * x)
+    is_test = in_test_split("vec_id")
     marked = (
-        emb.filter((F.col("_b") < 10) | (F.col("_b") >= 15))
+        emb.filter(is_test | in_train_split("vec_id"))
         .filter(sq > 0)
-        .select("vec_id", "label", "e", (F.col("_b") < 10).alias("is_test"))
+        .select("vec_id", "label", "e", is_test.alias("is_test"))
     )
 
     def block_best(block: pa.Table) -> pa.Table:

@@ -11,13 +11,15 @@ order.
 Fragments that take no parameter are plain strings. Builders that
 return CTE text (``minhash_bands_sql``, ``overlap_sql``,
 ``verify_jaccard_sql``) expect the caller's ``WITH`` to define ``sh``,
-the distinct ``(doc_id, shingle)`` relation.
+the distinct ``(doc_id, shingle)`` relation; the decontamination
+builders (``ngram_overlap_sql``, ``*spans_sql``) build their own.
 """
 
 from __future__ import annotations
 
-from ..operators import similarity, text
+from ..operators import dedup, similarity, text
 from ..operators.dedup import JACCARD_FLOOR, NUM_HASHES, ROWS_PER_BAND
+from ..operators.sampling import TEST_PCT, TRAIN_FROM
 from ..operators.sketch import BLOOM_K, CMS_D, KMV_K, KMV_SPACE
 from .registry import _SAMPLE_PCT, _SAMPLE_TARGET_DOCS
 
@@ -79,16 +81,34 @@ def hex_sql(md5_hex: str, start: int | str = 1, width: int = 4) -> str:
 
 
 def hash_bucket_sql(key_sql: str) -> str:
-    """First 4 hex digits of md5(key) as an integer — mirrors
-    operators.sampling.hash_bucket."""
-    return hex_sql(f"md5(CAST({key_sql} AS VARCHAR))")
+    """Bucket in [0, 100) of the key — mirrors operators.sampling.hash_bucket."""
+    return f"({hex_sql(f'md5(CAST({key_sql} AS VARCHAR))')} % 100)"
+
+
+def in_test_split_sql(key_sql: str) -> str:
+    """Mirrors operators.sampling.in_test_split."""
+    return f"{hash_bucket_sql(key_sql)} < {TEST_PCT}"
+
+
+def in_train_split_sql(key_sql: str) -> str:
+    """Mirrors operators.sampling.in_train_split."""
+    return f"{hash_bucket_sql(key_sql)} >= {TRAIN_FROM}"
+
+
+def train_test_split_sql(key_sql: str) -> str:
+    """Mirrors operators.sampling.train_test_split (a NULL key is 'train')."""
+    return (
+        f"CASE WHEN {in_test_split_sql(key_sql)} THEN 'test' "
+        f"WHEN NOT ({in_train_split_sql(key_sql)}) THEN 'holdout' ELSE 'train' END"
+    )
 
 
 def sub_block_sql(key_sql: str, n_sql: str, cap: int) -> str:
     """Capped sub-block of ``key_sql`` in a block of ``n_sql`` rows: its
     md5-hex4 integer modulo ceil(n/cap) — mirrors
     operators.sampling.sub_block."""
-    return f"{hash_bucket_sql(key_sql)} % (({n_sql} + {cap - 1}) // {cap})"
+    hex4 = hex_sql(f"md5(CAST({key_sql} AS VARCHAR))")
+    return f"{hex4} % (({n_sql} + {cap - 1}) // {cap})"
 
 
 def sampled_docs_sql(cap_pct: int = _SAMPLE_PCT) -> str:
@@ -103,7 +123,7 @@ def sampled_docs_sql(cap_pct: int = _SAMPLE_PCT) -> str:
     )
     return (
         "docs_sampled AS (SELECT * FROM documents "
-        f"WHERE {hash_bucket_sql('doc_id')} % 100 < {pct})"
+        f"WHERE {hash_bucket_sql('doc_id')} < {pct})"
     )
 
 
@@ -207,6 +227,79 @@ def minhash_pairs_sql(src: str, shingle_n: int, cap: int | None) -> str:
         WHERE a.doc_id < b.doc_id
     ),
     {verify_jaccard_sql("pairs", JACCARD_FLOOR)}"""
+
+
+def ngram_overlap_sql() -> str:
+    """CTEs ending in ``pairs`` (test_id, train_id, shared_grams) — mirrors
+    dedup.ngram_exact_overlap from the eval split's test to its train
+    documents."""
+    return f"""sh AS ({shingles_sql(dedup.GRAM_N)}),
+    te AS (SELECT doc_id AS test_id, shingle FROM sh
+           WHERE {in_test_split_sql("doc_id")}),
+    tr AS (SELECT doc_id AS train_id, shingle FROM sh
+           WHERE {in_train_split_sql("doc_id")}),
+    kept AS (SELECT shingle FROM tr GROUP BY shingle
+             HAVING COUNT(*) <= {dedup.MAX_GRAM_DF}),
+    pairs AS (
+        SELECT te.test_id, tr.train_id, CAST(COUNT(*) AS BIGINT) AS shared_grams
+        FROM te JOIN kept USING (shingle) JOIN tr USING (shingle)
+        GROUP BY te.test_id, tr.train_id
+        HAVING COUNT(*) >= {dedup.MIN_SHARED}
+    )"""
+
+
+def _spans_sql(a: str, b: str, starts: tuple[str, str]) -> str:
+    """CTEs ``isl`` and ``spans`` over the caller's matched grams ``m``
+    (<a>, <b>, pa, pb, diag) — mirrors dedup._spans."""
+    n = dedup.GRAM_N
+    return f"""isl AS (
+        SELECT *,
+               pa - ROW_NUMBER() OVER (
+                   PARTITION BY {a}, {b}, diag ORDER BY pa) AS grp
+        FROM m
+    ),
+    spans AS (
+        SELECT {a}, {b},
+               CAST(MIN(pa) AS BIGINT) AS {starts[0]},
+               CAST(MIN(pb) AS BIGINT) AS {starts[1]},
+               CAST(COUNT(*) + {n - 1} AS BIGINT) AS token_len
+        FROM isl
+        GROUP BY {a}, {b}, diag, grp
+        HAVING COUNT(*) + {n - 1} >= {dedup.MIN_SPAN_TOKENS}
+    )"""
+
+
+def repeated_spans_sql() -> str:
+    """CTEs ending in ``spans`` (id_a, id_b, start_a, start_b, token_len)
+    — mirrors dedup.repeated_spans over dedup.positioned_shingles."""
+    return f"""pg AS ({shingles_sql(dedup.GRAM_N, positional=True)}),
+    kept AS (SELECT shingle FROM pg GROUP BY shingle
+             HAVING COUNT(*) BETWEEN 2 AND {dedup.MAX_GRAM_OCC}),
+    g AS (SELECT doc_id, pos, shingle FROM pg JOIN kept USING (shingle)),
+    m AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               a.pos AS pa, b.pos AS pb, a.pos - b.pos AS diag
+        FROM g a JOIN g b USING (shingle)
+        WHERE a.doc_id < b.doc_id
+    ),
+    {_spans_sql("id_a", "id_b", ("start_a", "start_b"))}"""
+
+
+def cross_spans_sql() -> str:
+    """CTEs ending in ``spans`` (probe_id, corpus_id, start_test,
+    start_train, token_len) — mirrors dedup.cross_repeated_spans from the
+    eval split's test to its train documents."""
+    return f"""pg AS ({shingles_sql(dedup.GRAM_N, positional=True)}),
+    te AS (SELECT doc_id AS probe_id, pos AS pa, shingle FROM pg
+           WHERE {in_test_split_sql("doc_id")}),
+    tr0 AS (SELECT doc_id AS corpus_id, pos AS pb, shingle FROM pg
+            WHERE {in_train_split_sql("doc_id")}),
+    kept AS (SELECT shingle FROM tr0 GROUP BY shingle
+             HAVING COUNT(*) <= {dedup.MAX_GRAM_OCC}),
+    tr AS (SELECT tr0.* FROM tr0 JOIN kept USING (shingle)),
+    m AS (SELECT probe_id, corpus_id, pa, pb, pa - pb AS diag
+          FROM te JOIN tr USING (shingle)),
+    {_spans_sql("probe_id", "corpus_id", ("start_test", "start_train"))}"""
 
 
 #: (doc_id, component) over the std MinHash pairs graph: every document

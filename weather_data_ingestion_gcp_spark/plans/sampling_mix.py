@@ -12,7 +12,7 @@ are integer ppm arithmetic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -24,9 +24,11 @@ from ..operators.text import words as text_words
 from .oracle_sql import (
     clusters_sql,
     hash_bucket_sql,
+    hex_sql,
     shingles_sql,
     stoplist_sql,
     tokens_sql,
+    train_test_split_sql,
     words_sql,
 )
 from .registry import _nano_ln, load_table, register, std_minhash_pairs
@@ -37,19 +39,22 @@ from .registry import _nano_ln, load_table, register, std_minhash_pairs
 # sampling decision is a function of the row key, so retries, engine swaps,
 # and repartitions all produce the identical sample.
 # ---------------------------------------------------------------------------
+_BERNOULLI_PCT = 10
+
+
 @register(
     "sample_hash_bernoulli",
     oracle=f"""
     SELECT doc_id, lang
     FROM documents
-    WHERE {hash_bucket_sql('doc_id')} % 100 < 10
+    WHERE {hash_bucket_sql('doc_id')} < {_BERNOULLI_PCT}
     ORDER BY doc_id
     """,
 )
 def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return (
-        sampling.bernoulli_hash_sample(d, "doc_id", fraction_pct=10)
+        sampling.bernoulli_hash_sample(d, "doc_id", fraction_pct=_BERNOULLI_PCT)
         .select("doc_id", "lang")
         .orderBy("doc_id")
     )
@@ -68,7 +73,7 @@ _MIX_RATES = {"en": 100, "de": 60, "es": 40, "fr": 30, "zh": 20}
                CASE lang WHEN 'en' THEN 100 WHEN 'de' THEN 60
                          WHEN 'es' THEN 40 WHEN 'fr' THEN 30
                          WHEN 'zh' THEN 20 ELSE 0 END AS keep_pct,
-               {hash_bucket_sql('doc_id')} % 100 AS b
+               {hash_bucket_sql('doc_id')} AS b
         FROM documents)
     SELECT lang,
            CAST(COUNT(*) AS BIGINT)                         AS n_total,
@@ -108,7 +113,7 @@ def dataset_mix_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT doc_id, n_chars, sample_key FROM (
         SELECT doc_id, n_chars,
-               ROUND(pow(({hash_bucket_sql('doc_id')} + 0.5) / 65536.0,
+               ROUND(pow(({hex_sql('md5(CAST(doc_id AS VARCHAR))')} + 0.5) / 65536.0,
                    1.0 / n_chars), 6) AS sample_key
         FROM documents)
     ORDER BY sample_key DESC, doc_id LIMIT 100
@@ -165,19 +170,17 @@ def sample_stratified_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "train_test_split_stats",
     oracle=f"""
-    SELECT CASE WHEN b < 10 THEN 'test' WHEN b < 15 THEN 'holdout'
-                ELSE 'train' END AS split,
+    SELECT {train_test_split_sql('doc_id')} AS split,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            ROUND(AVG(n_chars), 2)   AS avg_chars
-    FROM (SELECT n_chars, {hash_bucket_sql('doc_id')} % 100 AS b
-          FROM documents)
+    FROM documents
     GROUP BY split ORDER BY split
     """,
 )
 def train_test_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return (
-        sampling.train_test_split(d, "doc_id", test_pct=10, holdout_pct=5)
+        sampling.train_test_split(d, "doc_id")
         .groupBy("split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -214,7 +217,7 @@ def _curation_oracle() -> str:
         JOIN comp c ON c.doc_id = d.doc_id
         WHERE t.n_words >= 30 AND t.sw_hits >= 1
           AND d.doc_id = c.component
-          AND {hash_bucket_sql('d.doc_id')} % 100 < 50
+          AND {hash_bucket_sql('d.doc_id')} < 50
     )
     SELECT lang, source,
            CAST(COUNT(*) AS BIGINT)     AS n_docs,
@@ -351,11 +354,30 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash keeps every near-dup family on one side by construction. The
 # oracle composes the same closure as dedup_clusters (oracle_sql.clusters_sql).
 # ---------------------------------------------------------------------------
+
+#: Train share of the 80/20 split that split_leakage_safe,
+#: pretrain_data_build and lm_eval_train_test_split assign by the hash
+#: bucket of a cluster or document id (the eval split of the
+#: decontamination entries is operators.sampling's)
+_TRAIN_PCT = 80
+
+
+def _split_80_20(key: str) -> Column:
+    """'train' for ``key``'s hash bucket below ``_TRAIN_PCT``, else 'test'."""
+    return F.when(
+        hash_bucket(F.col(key)) < _TRAIN_PCT, F.lit("train")
+    ).otherwise(F.lit("test"))
+
+
+def _split_80_20_sql(key_sql: str) -> str:
+    """DuckDB mirror of :func:`_split_80_20`."""
+    b = hash_bucket_sql(key_sql)
+    return f"CASE WHEN {b} < {_TRAIN_PCT} THEN 'train' ELSE 'test' END"
+
+
 def _leakage_safe_oracle() -> str:
-    bucket = hash_bucket_sql("c.component")
     return f"""
-    SELECT c.doc_id, c.component,
-           CASE WHEN {bucket} % 100 < 80 THEN 'train' ELSE 'test' END AS split
+    SELECT c.doc_id, c.component, {_split_80_20_sql("c.component")} AS split
     FROM ({clusters_sql}) c
     ORDER BY c.doc_id
     """
@@ -372,10 +394,9 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     pairs = std_minhash_pairs(spark, sf_dir)
     comp = graph.connected_components(d.select("doc_id"), pairs.select("id_a", "id_b"))
-    split = F.when(
-        sampling.hash_bucket(F.col("component")) % 100 < 80, F.lit("train")
-    ).otherwise(F.lit("test"))
-    return comp.select("doc_id", "component", split.alias("split")).orderBy("doc_id")
+    return comp.select(
+        "doc_id", "component", _split_80_20("component").alias("split")
+    ).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -447,7 +468,7 @@ def shard_pack_by_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # text never moves after tokenization.
 # ---------------------------------------------------------------------------
 def _pretrain_build_oracle() -> str:
-    bucket = hash_bucket_sql("k.component")
+    split = _split_80_20_sql("k.component")
     return rf"""
     SELECT split, source, shard,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -456,10 +477,9 @@ def _pretrain_build_oracle() -> str:
            CAST(MAX(doc_id) AS BIGINT) AS last_doc
     FROM (
         SELECT k.doc_id, k.source, k.n_words,
-               CASE WHEN {bucket} % 100 < 80 THEN 'train' ELSE 'test' END AS split,
+               {split} AS split,
                CAST(COALESCE(SUM(k.n_words) OVER (
-                   PARTITION BY CASE WHEN {bucket} % 100 < 80
-                                     THEN 'train' ELSE 'test' END, k.source
+                   PARTITION BY {split}, k.source
                    ORDER BY k.doc_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
                  // {_SHARD_TOKENS} AS BIGINT) AS shard
@@ -500,10 +520,7 @@ def pretrain_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w_keep))
         .filter(F.col("rn") == 1)
     )
-    split = F.when(
-        sampling.hash_bucket(F.col("component")) % 100 < 80, F.lit("train")
-    ).otherwise(F.lit("test"))
-    kept = kept.withColumn("split", split)
+    kept = kept.withColumn("split", _split_80_20("component"))
     w_pack = (
         Window.partitionBy("split", "source")
         .orderBy("doc_id")
@@ -534,11 +551,9 @@ def pretrain_data_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sized and joins by word (broadcast at test SF, shuffle join at scale).
 # ---------------------------------------------------------------------------
 def _split_lm_oracle() -> str:
-    bucket = hash_bucket_sql("doc_id")
     return rf"""
     WITH wx AS (
-        SELECT doc_id,
-               CASE WHEN {bucket} % 100 < 80 THEN 'train' ELSE 'test' END AS split,
+        SELECT doc_id, {_split_80_20_sql("doc_id")} AS split,
                unnest({words_sql}) AS w
         FROM documents
     ),
@@ -573,9 +588,7 @@ def lm_eval_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     wx = d.select(
         "doc_id",
-        F.when(sampling.hash_bucket(F.col("doc_id")) % 100 < 80, F.lit("train"))
-        .otherwise(F.lit("test"))
-        .alias("split"),
+        _split_80_20("doc_id").alias("split"),
         F.explode(text.words(F.col("text"))).alias("w"),
     )
     train = wx.filter(F.col("split") == "train")
@@ -791,7 +804,7 @@ def _mix_apply_oracle() -> str:
     kept AS (
         SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_kept
         FROM documents d JOIN rates r ON d.source = r.source
-        WHERE {hash_bucket_sql('d.doc_id')} * 1000000 < r.keep_ppm * 65536
+        WHERE {hex_sql('md5(CAST(d.doc_id AS VARCHAR))')} * 1000000 < r.keep_ppm * 65536
         GROUP BY d.source
     ),
     tot AS (SELECT CAST(SUM(n_kept) AS BIGINT) AS tk FROM kept)
@@ -896,8 +909,7 @@ _N_TRAIN_SHARDS = 16
     oracle=f"""
     WITH h AS (
         SELECT doc_id, source, n_chars,
-               {hash_bucket_sql(f"'{_SHUFFLE_SEED}' || CAST(doc_id AS VARCHAR)")}
-                 AS hv
+               {hex_sql(f"md5('{_SHUFFLE_SEED}' || CAST(doc_id AS VARCHAR))")} AS hv
         FROM documents
     )
     SELECT CAST(hv // {65536 // _N_TRAIN_SHARDS} AS BIGINT) AS shard,
@@ -972,7 +984,7 @@ _DSIR_ORACLE = rf"""
     ),
     bk AS (
         SELECT doc_id, source,
-               CAST({hash_bucket_sql("g")} % {_DSIR_B} AS BIGINT) AS b
+               CAST({hex_sql("md5(g)")} % {_DSIR_B} AS BIGINT) AS b
         FROM bg
     ),
     tc AS (
@@ -1196,7 +1208,7 @@ _DSIR_TOPP_ORACLE = rf"""
     ),
     bk AS (
         SELECT doc_id, lang, source,
-               CAST({hash_bucket_sql("g")} % {_DSIR_B} AS BIGINT) AS b
+               CAST({hex_sql("md5(g)")} % {_DSIR_B} AS BIGINT) AS b
         FROM bg
     ),
     tc AS (

@@ -1278,13 +1278,18 @@ def _staged_sink_run(
         .persist()
     )
     os.makedirs(_SCRATCH, exist_ok=True)
-    root = tempfile.mkdtemp(prefix=f"engagement_sink_{os.getpid()}_", dir=_SCRATCH)
-    # a run's tables outlive it (the returned frame reads them), so only
-    # the scratch of processes that have exited is dead weight: keep the
-    # directory bounded without touching another live process's tables
+    # a run's tables outlive it (the returned frame reads them), so each
+    # live process keeps the tree of its latest run only: this process's
+    # earlier trees and those of exited processes go, another live
+    # process's never (a frame from an earlier run in this process can
+    # no longer be read)
+    me = str(os.getpid())
     for old in os.listdir(_SCRATCH):
-        if old.startswith("engagement_sink_") and not _pid_alive(old.split("_")[2]):
-            shutil.rmtree(os.path.join(_SCRATCH, old), ignore_errors=True)
+        if old.startswith("engagement_sink_"):
+            pid = old.split("_")[2]
+            if pid == me or not _pid_alive(pid):
+                shutil.rmtree(os.path.join(_SCRATCH, old), ignore_errors=True)
+    root = tempfile.mkdtemp(prefix=f"engagement_sink_{me}_", dir=_SCRATCH)
     presence = TxLogTable(os.path.join(root, "presence"))
     profile = TxLogTable(os.path.join(root, "profile"))
     # day_grain_input: the staged relation is ev.distinct() over
