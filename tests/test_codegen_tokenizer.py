@@ -262,3 +262,46 @@ def test_ngram_plan_has_no_interpreted_hof(spark, edge_df):
     assert "lambdafunction" not in plan.lower(), plan
     assert "ArrayTransform" not in plan, plan
     assert "ArrayFilter" not in plan, plan
+
+
+#: Text on which the engine session's lower()/upper() must equal DuckDB's:
+#: ASCII, Latin-1, U+00A0, vertical tab, CJK, and Unicode 14 letters
+#: (Vithkuqi U+10570/U+10597, Latin U+A7D0/U+A7D1) that ICU case-maps
+#: and the JVM and DuckDB leave unchanged.
+CASE_AGREE = [
+    "Hello World 123",
+    "ÀÉÎÕÜ àéîõü ÿ",
+    "a\xa0B",
+    "x\x0bY",
+    "中文字符",
+    "\U00010570\U00010597",
+    "Ꟑꟑ",
+]
+#: Text whose mapping differs from DuckDB's with ICU on or off, so the
+#: Spark output is pinned: final sigma (context-sensitive ``ς``), U+0130
+#: (lowercases to ``i`` + U+0307) and ``ß`` (uppercases to ``SS``).
+CASE_PINNED = {
+    "ΑΣ Σ": ("ας σ", "ΑΣ Σ"),
+    "İstanbul": ("i̇stanbul", "İSTANBUL"),
+    "straße": ("straße", "STRASSE"),
+}
+
+
+def test_case_mapping_matches_duckdb(spark):
+    """``session.SCALE_CONFS`` turns ICU case mapping off: Spark's
+    lower()/upper() then agree with the DuckDB oracles' on every
+    CASE_AGREE string, and keep their pinned output on the rest."""
+    import duckdb
+
+    texts = CASE_AGREE + list(CASE_PINNED)
+    got = {
+        r.s: (r.lo, r.up)
+        for r in spark.createDataFrame([(s,) for s in texts], "s string")
+        .select("s", F.lower("s").alias("lo"), F.upper("s").alias("up"))
+        .collect()
+    }
+    con = duckdb.connect()
+    for s in CASE_AGREE:
+        assert got[s] == con.execute("SELECT lower($1), upper($1)", [s]).fetchone(), repr(s)
+    for s, want in CASE_PINNED.items():
+        assert got[s] == want, repr(s)

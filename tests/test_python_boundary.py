@@ -11,6 +11,9 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+
 _ROOT = Path(__file__).resolve().parent.parent
 _PKG = _ROOT / "weather_data_ingestion_gcp_spark"
 
@@ -132,3 +135,61 @@ def test_every_boundary_site_has_a_hostile_input_test():
             }
         assert test in defined[file], ref
         assert not param or repr(param) in defined[file][test].replace('"', "'"), ref
+
+
+def _nonfinite_frame(spark, block=None):
+    """Four 64-dim vectors, the last three with a NaN, +inf or -inf
+    element, one row per partition plus an empty partition (a
+    ``parallelize`` with one more slice than rows)."""
+    import numpy as np
+
+    v = [float(x) for x in np.random.RandomState(3).standard_normal(64)]
+    rows = [(i, v[:3] + [x] + v[4:]) for i, x in enumerate([v[3], np.nan, np.inf, -np.inf])]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, len(rows) + 1),
+        "vec_id bigint, embedding array<float>",
+    )
+    assert sorted(df.rdd.glom().map(len).collect()) == [0, 1, 1, 1, 1]
+    return df
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["dot_pandas", "random_hyperplane_bands", "block_cosine_pairs", "scalar_quantize_stats"],
+)
+def test_vector_sites_null_nonfinite_elements_across_tiny_partitions(spark, op):
+    """The Arrow vector sites of the corpus path over NaN and +/-inf
+    elements, an empty partition and one-row partitions (or one-row
+    blocks): a non-finite result is a NULL cell, never a worker crash,
+    and the finite row keeps its value."""
+    from weather_data_ingestion_gcp_spark.operators import similarity
+
+    df = _nonfinite_frame(spark)
+    if op == "dot_pandas":
+        q = F.array(*[F.lit(1.0)] * 64)
+        got = {
+            r.vec_id: r.d
+            for r in df.select("vec_id", similarity.dot_pandas(F.col("embedding"), q).alias("d"))
+            .collect()
+        }
+        want = df.where("vec_id = 0").select(similarity._dot(F.col("embedding"), q)).first()[0]
+        assert got == {0: want, 1: None, 2: None, 3: None}
+    elif op == "random_hyperplane_bands":
+        bands = similarity.random_hyperplane_bands(df).collect()
+        assert {r.vec_id for r in bands} == {0}
+        assert len(bands) == similarity.LSH_BITS // similarity.LSH_BAND_BITS
+    elif op == "block_cosine_pairs":
+        one_block = similarity.block_cosine_pairs(
+            df.withColumn("blk", F.lit(0)), ["blk"], -1.0
+        ).collect()
+        assert sorted((r.id_a, r.id_b, r.raw) for r in one_block) == [
+            (a, b, None) for a in range(4) for b in range(a + 1, 4)
+        ]
+        one_row_blocks = similarity.block_cosine_pairs(
+            df.withColumn("blk", F.col("vec_id")), ["blk"], -1.0
+        )
+        assert one_row_blocks.collect() == []
+    else:
+        got = {r.vec_id: r.max_abs_err for r in similarity.scalar_quantize_stats(df).collect()}
+        assert got[0] is not None and got[0] >= 0.0
+        assert (got[1], got[2], got[3]) == (None, None, None)

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from weather_data_ingestion_gcp_spark.operators import sketch
 from weather_data_ingestion_gcp_spark.plans import ORACLE, QUERIES
 
-from test_round7 import _write_documents
+from test_dsir import _write_documents
 from test_scale_plans import SF
 
 
@@ -123,6 +123,23 @@ def test_cms_heavy_hitters_matches_pure_python(spark, tmp_path):
     assert all(t[3] >= 0 for t in got)  # one-sided error law
 
 
+def test_cms_heavy_hitters_threshold_boundary(spark, tmp_path):
+    """N = 100 total occurrences, thr = 1: every distinct term clears
+    the cut, so the report is exactly the top-50 by (estimate, term) —
+    the LIMIT boundary under full ties on the unique tail."""
+    body = " ".join(f"u{i:03d}" for i in range(100))
+    _write_documents(spark, str(tmp_path), [(0, body, "en", "src0")])
+    got = [
+        (r["term"], r["est_count"], r["exact_count"])
+        for r in QUERIES["cms_heavy_hitters"](spark, str(tmp_path)).collect()
+    ]
+    want = [(t, e, c) for t, e, c, _o, _h in _py_cms(
+        [(0, body, "en", "src0")]
+    )]
+    assert got == want
+    assert len(got) == 50
+
+
 def test_countmin_null_key_has_no_bucket_in_either_engine(spark):
     """One NULL rule in both engines: a NULL key hashes to no bucket, so
     it adds to no cell and gets no estimate; a 4-bucket width forces
@@ -176,6 +193,30 @@ def test_bloom_null_build_and_probe_keys(spark):
     assert hits[1] == sketch.BLOOM_K and hits[2] == 0
     assert {r.id for r in sketch.bloom_xl_prune(probe, "k", words, hexw).collect()} >= {1}
     assert 2 not in {r.id for r in sketch.bloom_xl_prune(probe, "k", words, hexw).collect()}
+
+
+@pytest.mark.parametrize("n", [2_000, 300_000])
+def test_bloom_xl_build_sizes_from_its_first_fold(spark, monkeypatch, n):
+    """The adaptive build picks ``bloom_xl_width`` of the true key count
+    from the fill of one fold at ``BLOOM_XL_HEXW`` (linear counting),
+    with no separate cardinality job: below the ~131k-key threshold it
+    folds once, above it it refolds once at the wider slice."""
+    folds = []
+    fold = sketch.bloom_bitset_words
+
+    def counted(df, key_col, hexw=sketch.BLOOM_XL_HEXW):
+        folds.append(hexw)
+        return fold(df, key_col, hexw)
+
+    monkeypatch.setattr(sketch, "bloom_bitset_words", counted)
+    # every key twice: duplicates light the same bits
+    build = spark.range(2 * n).select(F.concat(F.lit("key-"), F.col("id") % n).alias("k"))
+    words, hexw = sketch.bloom_xl_build(build, "k")
+    want = sketch.bloom_xl_width(n)
+    assert hexw == want == (5 if n < 131_072 else 6)
+    assert folds == sorted({sketch.BLOOM_XL_HEXW, want})
+    assert len(words) == (1 << (4 * hexw)) >> 6
+    assert (words == fold(build, "k", hexw)).all()
 
 
 def test_incremental_ingest_dedup_keeps_a_null_text_doc(spark, tmp_path):

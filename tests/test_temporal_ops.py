@@ -100,3 +100,54 @@ def test_asof_nearest_directions_and_ties(spark):
     assert (out[2].asof_rid, out[2].asof_direction, out[2].asof_gap_us) == (100, "b", 0)
     assert (out[3].asof_rid, out[3].asof_direction, out[3].asof_gap_us) == (200, "f", 300_000_000)
     assert out[4].asof_rid is None and out[4].asof_direction is None
+
+
+def test_dau_wau_interval_stabbing_matches_brute_force(spark, tmp_path):
+    """Round-9 redesign pin: the interval-stabbing WAU (per-user merged
+    coverage intervals + day-delta prefix sums — no distinct aggregate
+    state) must equal the sliding 7-day distinct count from the
+    definition, on data built to hit the merge boundaries: a gap of
+    EXACTLY 7 days (two disjoint-but-adjacent intervals), a gap of 6
+    (one merged interval), an isolated day, and two users overlapping
+    the same day."""
+    from weather_data_ingestion_gcp_spark.plans import QUERIES
+
+    base = dt.datetime(2024, 1, 1, 12, 0, 0)
+
+    def ts(day: int) -> dt.datetime:
+        return base + dt.timedelta(days=day)
+
+    presence = {  # user -> active day offsets
+        1: [0, 7],        # gap 7: [0,6] and [7,13] — adjacent, disjoint
+        2: [0, 6],        # gap 6: one merged interval [0,12]
+        3: [19],          # isolated
+        4: [5, 7, 20],    # merge then restart
+    }
+    rows = []
+    eid = 0
+    for u, days in presence.items():
+        for d in days:
+            rows.append((eid, ts(d), u, "view", 1.0, "{}"))
+            eid += 1
+    spark.createDataFrame(
+        rows,
+        "event_id bigint, ts timestamp, user_id bigint, "
+        "event_type string, value double, props string",
+    ).write.parquet(f"{tmp_path}/events.parquet")
+
+    got = {
+        r.d: (r.dau, r.wau)
+        for r in QUERIES["dau_wau_engagement"](spark, str(tmp_path)).collect()
+    }
+
+    active_days = sorted({d for days in presence.values() for d in days})
+    want = {}
+    for d in active_days:
+        dau = sum(1 for days in presence.values() if d in days)
+        wau = sum(
+            1
+            for days in presence.values()
+            if any(d - 6 <= p <= d for p in days)
+        )
+        want[(base + dt.timedelta(days=d)).date()] = (dau, wau)
+    assert got == want

@@ -112,9 +112,11 @@ class WeatherWarehouse:
         """S13/T8: DELETE WHERE dt <= today - retention_days
         (Cleanup-job/sp_raw_cleanup_15days_older_data_query.sql:2).
 
-        Day-partitioned raw layer makes this a metadata-only partition drop
-        (what Delta's DELETE on a partition predicate compiles to) — O(days
-        dropped), never a 100 TB rewrite.
+        The drop itself is per day partition (what Delta's DELETE on a
+        partition predicate compiles to), never a rewrite of kept rows. To
+        find the days, though, it reads ``dt`` from the hourly table and
+        collects its distinct values: two Spark jobs that open every
+        hourly file, whatever the number of days dropped.
         """
         today = today or dt.date.today()
         cutoff = today - dt.timedelta(days=retention_days)
@@ -126,17 +128,15 @@ class WeatherWarehouse:
                 dropped.append(str(day))
         return dropped
 
-    def compact_hourly(self, dates: list[dt.date] | None = None) -> None:
+    def compact_hourly(self) -> None:
         """Small-file compaction: the hourly layer accretes one file per
         landed batch per day; at 100 TB that is millions of KB-files whose
-        open/footer cost dominates scans. Rewrite each (selected) day
-        partition in one pass: repartition by dt clusters each day into one
-        task, dynamic partition overwrite swaps only the rewritten days —
-        concurrent readers of other days are untouched."""
-        hourly = self.read_hourly()
-        if dates is not None:
-            hourly = hourly.filter(F.col("dt").isin(list(dates)))
-        self.storage.overwrite_partitions(hourly.repartition("dt"), "hourly", ["dt"])
+        open/footer cost dominates scans. Rewrite each day partition in one
+        pass: repartition by dt clusters each day into one task, and the
+        dynamic partition overwrite replaces each day's files with it."""
+        self.storage.overwrite_partitions(
+            self.read_hourly().repartition("dt"), "hourly", ["dt"]
+        )
 
     # -- log sink ---------------------------------------------------------------
 

@@ -43,12 +43,13 @@ SMALL_GRAPH_EDGES = 200_000
 #: Round cap of the star loop. Each round about halves path lengths, so
 #: the fingerprint reaches its fixpoint long before this on any real graph.
 MAX_ITER = 50
+#: The node id column: every caller labels documents.
+ID_COL = "doc_id"
 
 
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
-    id_col: str = "doc_id",
     src_col: str = "id_a",
     dst_col: str = "id_b",
 ) -> DataFrame:
@@ -56,8 +57,8 @@ def connected_components(
 
     ``nodes``: one row per node (isolated nodes keep their own id as label).
     ``edges``: undirected pairs; direction, duplicates, self-loops and
-    NULL ends are normalized away here. Returns (id_col, component) —
-    component = min reachable id, of the type of ``nodes[id_col]``."""
+    NULL ends are normalized away here. Returns (``ID_COL``, component) —
+    component = min reachable id, of the type of ``nodes[ID_COL]``."""
     # Canonical (u > v) distinct edges, lineage-truncated: the probe and
     # every star round read one evaluation of the often expensive edge
     # pipeline (a 5-stage shingle/signature/bucket/verify tree for the
@@ -82,7 +83,7 @@ def connected_components(
     # cap, bounding driver memory on huge graphs.
     pairs = e.limit(SMALL_GRAPH_EDGES + 1).collect()
     if len(pairs) <= SMALL_GRAPH_EDGES:
-        return _solve_collected(nodes, id_col, pairs)
+        return _solve_collected(nodes, pairs)
     prev_fp = None
     for _ in range(MAX_ITER):
         # Lazy checkpoint: the logical plan is truncated to an RDD leaf
@@ -104,13 +105,13 @@ def connected_components(
     # by their unique downward link; isolated nodes label themselves.
     labels = e.groupBy("u").agg(F.min("v").alias("component"))
     return (
-        nodes.select(F.col(id_col))
-        .join(labels.withColumnRenamed("u", id_col), id_col, "left")
-        .select(id_col, F.coalesce("component", F.col(id_col)).alias("component"))
+        nodes.select(F.col(ID_COL))
+        .join(labels.withColumnRenamed("u", ID_COL), ID_COL, "left")
+        .select(ID_COL, F.coalesce("component", F.col(ID_COL)).alias("component"))
     )
 
 
-def _solve_collected(nodes: DataFrame, id_col: str, pairs: list) -> DataFrame:
+def _solve_collected(nodes: DataFrame, pairs: list) -> DataFrame:
     """Driver union-find over the collected canonical (u, v) edge list,
     broadcast-joined back onto the corpus-size ``nodes`` relation. Union
     by MIN id, so the root IS the component label."""
@@ -129,14 +130,14 @@ def _solve_collected(nodes: DataFrame, id_col: str, pairs: list) -> DataFrame:
         if ru != rv:
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
-    id_type = nodes.schema[id_col].dataType
+    id_type = nodes.schema[ID_COL].dataType
     active = store.rows(
         nodes.sparkSession,
         [(x, find(x)) for x in parent],
-        StructType([StructField(id_col, id_type), StructField("component", id_type)]),
+        StructType([StructField(ID_COL, id_type), StructField("component", id_type)]),
     )
-    return nodes.select(id_col).join(F.broadcast(active), id_col, "left").select(
-        id_col, F.coalesce("component", F.col(id_col)).alias("component")
+    return nodes.select(ID_COL).join(F.broadcast(active), ID_COL, "left").select(
+        ID_COL, F.coalesce("component", F.col(ID_COL)).alias("component")
     )
 
 
@@ -179,10 +180,10 @@ def _small_star(e: DataFrame) -> DataFrame:
     return relink.union(self_link).distinct()
 
 
-def dedup_cluster_stats(components: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def dedup_cluster_stats(components: DataFrame) -> DataFrame:
     """Cluster summary: representative (the component min id), member count.
     Single map-side-combining aggregate on the component label."""
     return components.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_members"),
-        F.min(id_col).alias("keep_id"),
+        F.min(ID_COL).alias("keep_id"),
     )

@@ -80,8 +80,6 @@ def scd2_apply(
     key_col: str,
     attr_cols: list[str],
     eff_date: str,
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
 ) -> DataFrame:
     """Slowly-changing-dimension Type 2: apply ``updates`` (key + new
     attribute values, effective ``eff_date``) to a versioned dimension,
@@ -98,8 +96,8 @@ def scd2_apply(
     untouched with no join at all. Returns the full new history
     (closed rows + unchanged open rows + closed-out rows + new
     versions)."""
-    open_rows = dim.filter(F.col(to_col).isNull())
-    closed_rows = dim.filter(F.col(to_col).isNotNull())
+    open_rows = dim.filter(F.col("valid_to").isNull())
+    closed_rows = dim.filter(F.col("valid_to").isNotNull())
     upd = updates.select(key_col, *[F.col(c).alias(f"_u_{c}") for c in attr_cols])
     joined = open_rows.join(upd, key_col)
     diff = None
@@ -108,13 +106,13 @@ def scd2_apply(
         diff = d if diff is None else (diff | d)
     changed = joined.filter(diff)
     closed_out = changed.select(*dim.columns).withColumn(
-        to_col, F.lit(eff_date).cast("date")
+        "valid_to", F.lit(eff_date).cast("date")
     )
     new_rows = changed.select(
         key_col,
         *[F.col(f"_u_{c}").alias(c) for c in attr_cols],
-        F.lit(eff_date).cast("date").alias(from_col),
-        F.lit(None).cast("date").alias(to_col),
+        F.lit(eff_date).cast("date").alias("valid_from"),
+        F.lit(None).cast("date").alias("valid_to"),
     ).select(*dim.columns)
     open_unchanged = open_rows.join(
         changed.select(key_col), key_col, "left_anti"

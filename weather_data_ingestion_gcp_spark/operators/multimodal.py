@@ -302,17 +302,13 @@ def frame_energy(media: DataFrame) -> DataFrame:
     return _map_payloads(media, energies, FRAME_ENERGY_SCHEMA)
 
 
-def make_wav_payload(
-    doc_id: int, rate: int = 16000, channels: int = 1, bits: int = 16
-) -> bytes:
-    """Deterministic valid WAVE bytes for tests/fixtures: a doc_id-seeded
-    sample count so every payload differs but reproducibly."""
+def make_wav_payload(doc_id: int) -> bytes:
+    """Deterministic valid WAVE bytes for tests/fixtures (16 kHz mono
+    16-bit PCM): a doc_id-seeded sample count so every payload differs
+    but reproducibly."""
     n = 100 + (doc_id % 50)
-    data = bytes((doc_id + i) % 256 for i in range(n * channels * (bits // 8)))
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, rate,
-        rate * channels * (bits // 8), channels * (bits // 8), bits,
-    )
+    data = bytes((doc_id + i) % 256 for i in range(n * 2))
+    fmt = struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
     chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
     chunks += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks

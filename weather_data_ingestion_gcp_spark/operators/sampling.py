@@ -46,13 +46,11 @@ def sub_block(key: Column, n_col: str, cap: int) -> Column:
     return hex_int(F.md5(key.cast("string"))) % n_sub
 
 
-def bernoulli_hash_sample(
-    df: DataFrame, key_col: str, fraction_pct: int, n_buckets: int = 100
-) -> DataFrame:
+def bernoulli_hash_sample(df: DataFrame, key_col: str, fraction_pct: int) -> DataFrame:
     """Keep rows whose hash bucket < fraction_pct — a deterministic
-    Bernoulli sample at fraction_pct/n_buckets rate. A pure filter: no
+    Bernoulli sample at a fraction_pct percent rate. A pure filter: no
     shuffle, pushes into the scan's data-filter stage."""
-    return df.filter(hash_bucket(F.col(key_col), n_buckets) < fraction_pct)
+    return df.filter(hash_bucket(F.col(key_col)) < fraction_pct)
 
 
 def stratified_quota(
@@ -71,9 +69,7 @@ def stratified_quota(
     )
 
 
-def weighted_sample_topk(
-    df: DataFrame, key_col: str, weight_col: str, k: int, key_decimals: int = 6
-) -> DataFrame:
+def weighted_sample_topk(df: DataFrame, key_col: str, weight_col: str, k: int) -> DataFrame:
     """Weighted sampling WITHOUT replacement via the A-ES key trick
     (Efraimidis & Spirakis, IPL 2006): score every row u^(1/w) with u a
     hash-derived uniform in (0,1), keep the k largest scores. Inclusion
@@ -84,19 +80,16 @@ def weighted_sample_topk(
     no global sort, no shuffle of the data itself. ``weight_col`` must
     be > 0.
 
-    The selection key is QUANTIZED (``key_decimals``, then ``key_col``
+    The selection key is QUANTIZED (6 decimals, then ``key_col``
     tiebreak): pow() is libm-dependent, and two engines' last-ulp
     disagreements flip the k-th-place ordering once enough keys bunch
     near 1.0 (observed at sf0.1 between Spark/JVM and DuckDB). Rounding
     the comparator makes the SELECTED SET a platform-invariant function
     of the data — for a sampling operator, cross-engine reproducibility
-    is worth the (sub-1e-6) weighting granularity it costs. Pass
-    ``key_decimals=None`` for full-precision keys."""
+    is worth the (sub-1e-6) weighting granularity it costs."""
     hex4 = hex_int(F.md5(F.col(key_col).cast("string")))
     u = (hex4 + 0.5) / 65536.0
-    skey = F.pow(u, F.lit(1.0) / F.col(weight_col))
-    if key_decimals is not None:
-        skey = F.round(skey, key_decimals)
+    skey = F.round(F.pow(u, F.lit(1.0) / F.col(weight_col)), 6)
     return (
         df.withColumn("sample_key", skey)
         .orderBy(F.desc("sample_key"), key_col)
@@ -109,11 +102,11 @@ def dataset_mix(
     group_col: str,
     key_col: str,
     rates_pct: dict[str, int],
-    default_pct: int = 0,
 ) -> DataFrame:
     """Weighted dataset mixing: keep each group at its configured rate
     (the corpus-composition knob of a training-data pipeline — e.g.
-    up/down-weighting languages or sources to a target mixture).
+    up/down-weighting languages or sources to a target mixture); a group
+    absent from ``rates_pct`` is dropped.
 
     The per-group rate rides a tiny broadcast dimension joined on the
     group key — the same routing-map shape as the reference's
@@ -129,7 +122,7 @@ def dataset_mix(
     )
     return (
         df.join(F.broadcast(rates), group_col, "left")
-        .withColumn("_keep_pct", F.coalesce("_keep_pct", F.lit(default_pct)))
+        .withColumn("_keep_pct", F.coalesce("_keep_pct", F.lit(0)))
         .filter(hash_bucket(F.col(key_col)) < F.col("_keep_pct"))
         .drop("_keep_pct")
     )

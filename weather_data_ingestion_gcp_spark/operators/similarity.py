@@ -22,7 +22,7 @@ becomes float64 matrices in :func:`_length_groups`, one per vector
 length read from the list offsets, so a NULL vector (its validity bit)
 is in no matrix, vectors of different lengths never meet, and a NULL
 element is NaN. Results go back the same way: :func:`_nulled` sends a
-NaN double as NULL, as the pandas boundary did, and :func:`_list_rows`
+NaN or infinite double as NULL, and :func:`_list_rows`
 builds a list column from per-group matrices.
 Within-block cosines run through one tile scan, :func:`_cosine_tiles`:
 it is where the fold meets the cut, ``dot/(na*nb)`` over ``TILE x TILE``
@@ -62,6 +62,11 @@ LSH_SEED = "hp"
 #: doubles (8 MB) however hot the block is. Tests shrink it to force
 #: many-tile scans on small inputs.
 TILE = 1024
+
+#: The id and vector columns of the embeddings table, the one relation
+#: every vector operator here reads.
+ID_COL = "vec_id"
+VEC_COL = "embedding"
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -125,10 +130,11 @@ def _numpy_kernels():
             )
 
     def nulled(out: np.ndarray) -> pa.Array:
-        """``out`` as a double array whose NaN cells cross as NULL, the
-        pandas boundary's rule: Spark orders NaN above every double, so a
-        NaN cosine would pass a ``>=`` cut that NULL fails."""
-        return pa.array(out, from_pandas=True)
+        """``out`` as a double array whose non-finite cells cross as NULL:
+        Spark orders NaN above every double, so a NaN cosine would pass a
+        ``>=`` cut that NULL fails, and an infinite dot (a vector with an
+        infinite element) would rank first in a top-k or divide to NaN."""
+        return pa.array(np.where(np.isfinite(out), out, np.nan), from_pandas=True)
 
     def list_rows(n: int, parts, value_type):
         """The list array of ``n`` rows whose row ``idx[i]`` is ``M[i]``
@@ -170,8 +176,10 @@ def dot_pandas(a: Column, b: Column) -> Column:
     dim per batch instead of an interpreted lambda per element per row,
     and bitwise-equal to :func:`_dot` (see :func:`_fold`). A NULL vector
     or a length-mismatched pair gives NULL, two empty vectors 0.0, as
-    `_dot` does. Use in hot pair-scoring paths; `_dot` remains for plan
-    shapes where a scalar JVM expression matters."""
+    `_dot` does; a non-finite dot (a NaN or infinite element) is NULL
+    where `_dot` gives NaN or an infinity. Use in hot pair-scoring paths;
+    `_dot` remains for plan shapes where a scalar JVM expression
+    matters."""
 
     @arrow_udf("double")
     def dot_pa(xs: pa.Array, ys: pa.Array) -> pa.Array:
@@ -183,16 +191,14 @@ def dot_pandas(a: Column, b: Column) -> Column:
     return dot_pa(a.cast("array<double>"), b.cast("array<double>"))
 
 
-def pair_side(
-    df: DataFrame, side: str, id_col: str, vec_col: str, *extra: Column
-) -> DataFrame:
+def pair_side(df: DataFrame, side: str, *extra: Column) -> DataFrame:
     """One side of a cosine pair scan: ``{side}_id``, ``{side}_vec`` and
     ``{side}_nrm`` (``side`` is ``q`` or ``n``), plus ``extra`` columns.
     The norm is folded once per vector, before the pair blowup, so each
     pair costs one dot product, not three."""
-    v = F.col(vec_col)
+    v = F.col(VEC_COL)
     return df.select(
-        F.col(id_col).alias(f"{side}_id"),
+        F.col(ID_COL).alias(f"{side}_id"),
         v.alias(f"{side}_vec"),
         _norm(v).alias(f"{side}_nrm"),
         *extra,
@@ -226,29 +232,21 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (self-matches excluded).
 
     Broadcast the query side: the corpus-side scan stays shuffle-free and
     the only exchange is the final per-query top-k.
     """
-    q = pair_side(queries, "q", id_col, vec_col)
-    c = pair_side(corpus, "n", id_col, vec_col)
+    q = pair_side(queries, "q")
+    c = pair_side(corpus, "n")
     scored = c.join(F.broadcast(q), F.col("q_id") != F.col("n_id")).select(
         "q_id", "n_id", pair_cosine()
     )
     return cosine_topk(scored, k)
 
 
-def kmeans_assign(
-    corpus: DataFrame,
-    k: int = 8,
-    max_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assign(corpus: DataFrame, k: int = 8, max_iter: int = 5) -> DataFrame:
     """Deterministic Lloyd's k-means over the embedding column — produces
     the cluster assignment IVF needs when no pre-clustering exists.
 
@@ -277,7 +275,7 @@ def kmeans_assign(
     """
     vecs = (
         corpus.select(
-            F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
+            F.col(ID_COL).alias("_id"), F.col(VEC_COL).cast("array<double>").alias("_v")
         )
         # materialized once on the first action, reused by every round
         .localCheckpoint(eager=False)
@@ -308,7 +306,7 @@ def kmeans_assign(
         # empty corpus: the fixpoint is the empty assignment — return it
         # with the contract schema instead of crashing on a 0-row seed
         return corpus.select(
-            F.col(id_col), F.lit(0).cast("int").alias("kmeans_cluster")
+            F.col(ID_COL), F.lit(0).cast("int").alias("kmeans_cluster")
         ).limit(0)
     if len({len(r["_v"]) for r in seed_rows}) > 1:
         raise ValueError("kmeans_assign: the seed vectors differ in length")
@@ -361,7 +359,7 @@ def kmeans_assign(
                 nxt[r["cluster"], r["pos"]] = r["s"] / r["n"]
         C = nxt
     return _assigned(C).select(
-        F.col("_id").alias(id_col), F.col("cluster").alias("kmeans_cluster")
+        F.col("_id").alias(ID_COL), F.col("cluster").alias("kmeans_cluster")
     )
 
 
@@ -388,9 +386,7 @@ def hyperplanes() -> list[list[float]]:
     ]
 
 
-def random_hyperplane_bands(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def random_hyperplane_bands(df: DataFrame) -> DataFrame:
     """(id, band, bsig) rows: sign-LSH signature split into bands.
 
     bit_j = [dot(v, w_j) > 0]; bands of ``LSH_BAND_BITS`` bits bucket
@@ -405,8 +401,8 @@ def random_hyperplane_bands(
     IEEE operation sequence of the DuckDB oracle's list_dot_product —
     sign bits, and therefore buckets, stay bitwise-identical cross-engine.
     A NULL vector, one whose length is not ``LSH_DIM``, or one with a
-    NULL element has no dot product with the planes and gets no band
-    rows. The band explode
+    NULL, NaN or infinite element has no finite dot product with the
+    planes and gets no band rows. The band explode
     multiplies rows only after signatures are computed.
     """
     W = np.array(hyperplanes())
@@ -419,18 +415,18 @@ def random_hyperplane_bands(
         for idx, X in _length_groups(vecs):
             if X.shape[1] == W.shape[1]:
                 P = _fold(X[:, None], W[None])  # (rows, LSH_BITS)
-                ok = ~np.isnan(P).any(axis=1)
+                ok = np.isfinite(P).all(axis=1)
                 sigs = (P[ok] > 0).reshape(-1, n_bands, LSH_BAND_BITS) @ place
                 parts.append((idx[ok], sigs))
         return _list_rows(len(vecs), parts, pa.int32())
 
     return df.select(
-        F.col(id_col).alias("vec_id_"),
-        F.posexplode(band_sigs(F.col(vec_col).cast("array<double>"))).alias(
+        F.col(ID_COL).alias("vec_id_"),
+        F.posexplode(band_sigs(F.col(VEC_COL).cast("array<double>"))).alias(
             "band", "bsig"
         ),
     ).select(
-        F.col("vec_id_").alias(id_col),
+        F.col("vec_id_").alias(ID_COL),
         "band",
         F.col("bsig").cast("int").alias("bsig"),
     )
@@ -441,8 +437,6 @@ def rp_lsh_topk(
     queries: DataFrame,
     corpus_bands: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k via random-hyperplane (sign) LSH: candidates are
     pairs sharing ANY signature band; exact cosine ranks them. The
@@ -455,11 +449,11 @@ def rp_lsh_topk(
     queries, what a real deployment maintains instead of re-signing the
     corpus per lookup.
     """
-    qb = random_hyperplane_bands(queries, id_col, vec_col)
+    qb = random_hyperplane_bands(queries)
     pairs = (
-        qb.withColumnRenamed(id_col, "q_id")
+        qb.withColumnRenamed(ID_COL, "q_id")
         .join(
-            F.broadcast(corpus_bands.withColumnRenamed(id_col, "n_id")),
+            F.broadcast(corpus_bands.withColumnRenamed(ID_COL, "n_id")),
             ["band", "bsig"],
         )
         .filter(F.col("q_id") != F.col("n_id"))
@@ -467,8 +461,8 @@ def rp_lsh_topk(
         .distinct()
     )
     scored = (
-        pairs.join(F.broadcast(pair_side(queries, "q", id_col, vec_col)), "q_id")
-        .join(pair_side(corpus, "n", id_col, vec_col), "n_id")
+        pairs.join(F.broadcast(pair_side(queries, "q")), "q_id")
+        .join(pair_side(corpus, "n"), "n_id")
         .select("q_id", "n_id", pair_cosine())
     )
     return cosine_topk(scored, k)
@@ -478,8 +472,6 @@ def ivf_parts(
     corpus: DataFrame,
     queries: DataFrame,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cluster_col: str = "label",
 ) -> "tuple[DataFrame, DataFrame]":
     """The two IVF stages before the final top-k cut, exposed so callers
@@ -493,7 +485,7 @@ def ivf_parts(
     # centroid per cluster: element-wise mean via posexplode + re-assemble
     exploded = corpus.select(
         F.col(cluster_col).alias("cluster"),
-        F.posexplode(F.col(vec_col)).alias("pos", "x"),
+        F.posexplode(F.col(VEC_COL)).alias("pos", "x"),
     )
     centroids = (
         exploded.groupBy("cluster", "pos")
@@ -502,7 +494,7 @@ def ivf_parts(
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
         .select("cluster", F.col("pm").getField("m").alias("centroid"))
     )
-    q = pair_side(queries, "q", id_col, vec_col)
+    q = pair_side(queries, "q")
     probe_w = Window.partitionBy("q_id").orderBy(F.desc("c_sim"), F.col("cluster"))
     probes = (
         q.crossJoin(F.broadcast(centroids))
@@ -514,9 +506,7 @@ def ivf_parts(
         .filter(F.col("prk") <= nprobe)
         .select("q_id", "q_vec", "q_nrm", "cluster")
     )
-    c = pair_side(
-        corpus, "n", id_col, vec_col, F.col(cluster_col).alias("cluster")
-    )
+    c = pair_side(corpus, "n", F.col(cluster_col).alias("cluster"))
     scored = (
         c.join(F.broadcast(probes), "cluster")
         .filter(F.col("q_id") != F.col("n_id"))
@@ -530,8 +520,6 @@ def ivf_topk(
     queries: DataFrame,
     k: int = 5,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cluster_col: str = "label",
 ) -> DataFrame:
     """Approximate top-k: probe the nprobe clusters whose centroids are
@@ -541,10 +529,7 @@ def ivf_topk(
     query side; the candidate search is an equi-join on cluster id, which at
     scale hits only the probed partitions of a cluster-bucketed corpus.
     """
-    _, scored = ivf_parts(
-        corpus, queries, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-        cluster_col=cluster_col,
-    )
+    _, scored = ivf_parts(corpus, queries, nprobe=nprobe, cluster_col=cluster_col)
     return cosine_topk(scored, k).select("q_id", "n_id", "cos_sim", "rk")
 
 
@@ -553,9 +538,7 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 
-def scalar_quantize_stats(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def scalar_quantize_stats(df: DataFrame) -> DataFrame:
     """Per-vector int8 scalar quantization audit: min/max range, the
     (max-min)/255 scale, and the max absolute reconstruction error of
     round-tripping every dimension through its 0..255 code. This is the
@@ -582,8 +565,8 @@ def scalar_quantize_stats(
     Hostile rows get what the lambda gave: a NULL or empty vector has no
     range and yields NULL, and a NULL element (NaN in the batch) is
     skipped by ``nanmax`` as array_max skipped the lambda's NULL cell."""
-    mn = F.array_min(F.col(vec_col)).cast("double")
-    mx = F.array_max(F.col(vec_col)).cast("double")
+    mn = F.array_min(F.col(VEC_COL)).cast("double")
+    mx = F.array_max(F.col(VEC_COL)).cast("double")
 
     @arrow_udf("double")
     def _max_abs_err(vs: pa.Array, mns: pa.Array, mxs: pa.Array) -> pa.Array:
@@ -600,13 +583,13 @@ def scalar_quantize_stats(
         return _nulled(out)
 
     return df.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.round(mn, 6).alias("q_min"),
         F.round(mx, 6).alias("q_max"),
         F.when(mx == mn, F.lit(0.0))
         .otherwise(
             F.round(
-                _max_abs_err(F.col(vec_col).cast("array<double>"), mn, mx), 6
+                _max_abs_err(F.col(VEC_COL).cast("array<double>"), mn, mx), 6
             )
         )
         .alias("max_abs_err"),
@@ -621,11 +604,8 @@ def scalar_quantize_stats(
 def mmr_select(
     df: DataFrame,
     query_vec: "list[float]",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     lam: float = 0.7,
-    shortlist_m: int = 64,
 ) -> DataFrame:
     """Maximal-Marginal-Relevance selection: pick k vectors maximizing
     ``lam * rel(q, x) - (1 - lam) * max_sim(x, selected)`` — the
@@ -634,7 +614,7 @@ def mmr_select(
 
     Two stages, the standard retrieve-then-rerank split:
       1. DISTRIBUTED shortlist: one Arrow-vectorized relevance pass over
-         the corpus, TakeOrdered top-``shortlist_m`` — the only part that
+         the corpus, TakeOrdered top-64 — the only part that
          scales with data size, and it is a single job with no shuffle
          beyond the top-k merge.
       2. DRIVER rerank: greedy MMR over the bounded m x dim matrix
@@ -659,13 +639,13 @@ def mmr_select(
         ]
         return _list_rows(len(xs), parts, pa.float64())
 
-    base = df.select(F.col(id_col).alias("_id"), unit_pa(F.col(vec_col)).alias("_u"))
+    base = df.select(F.col(ID_COL).alias("_id"), unit_pa(F.col(VEC_COL)).alias("_u"))
     qb = F.array(*[F.lit(float(v)) for v in q])
     short = (
         base.select("_id", "_u", dot_pandas(F.col("_u"), qb).alias("_rel"))
         .where(F.col("_rel").isNotNull())
         .orderBy(F.desc("_rel"), F.asc("_id"))
-        .limit(shortlist_m)
+        .limit(64)
         .collect()
     )
     ids = [r["_id"] for r in short]
@@ -689,9 +669,9 @@ def mmr_select(
     out = rows(
         df.sparkSession,
         [(ids[i], rank + 1, float(rel[i])) for rank, i in enumerate(picked)],
-        f"{id_col} long, mmr_rank int, relevance double",
+        f"{ID_COL} long, mmr_rank int, relevance double",
     )
-    return out.select(id_col, "mmr_rank", F.round("relevance", 6).alias("relevance"))
+    return out.select(ID_COL, "mmr_rank", F.round("relevance", 6).alias("relevance"))
 
 
 # ---------------------------------------------------------------------------
@@ -703,11 +683,9 @@ def block_cosine_pairs(
     df: DataFrame,
     block_cols: "list[str]",
     floor: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """``(id_a, id_b, raw)``: every pair ``id_a < id_b`` of one block whose
-    cosine ``raw`` is not under ``floor``, ids typed by ``id_col``.
+    cosine ``raw`` is not under ``floor``, ids of ``ID_COL``'s type.
 
     One grouped Arrow pass: a block's vectors cross the Python boundary
     once (a per-pair formulation ships both vectors per pair), sorted by
@@ -733,9 +711,9 @@ def block_cosine_pairs(
         a, b, raw = (np.concatenate(c) for c in zip(*out))
         return pa.table({"id_a": ids.take(a), "id_b": ids.take(b), "raw": _nulled(raw)})
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema[ID_COL].dataType.simpleString()
     return (
-        df.select(*block_cols, F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        df.select(*block_cols, F.col(ID_COL).alias("_id"), F.col(VEC_COL).alias("_v"))
         .groupBy(*block_cols)
         .applyInArrow(verify, f"id_a {id_type}, id_b {id_type}, raw double")
     )
@@ -745,8 +723,6 @@ def semantic_dedup_prune(
     emb: DataFrame,
     bands: DataFrame,
     max_bucket_size: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     tau: float = 0.35,
 ) -> DataFrame:
     """SemDedup-style semantic pruning (Abbas et al. '23, arXiv:2303.09540):
@@ -786,8 +762,8 @@ def semantic_dedup_prune(
         raise ValueError(f"max_bucket_size must be an int >= 1, got {max_bucket_size!r}")
     counts = bands.groupBy("band", "bsig").agg(F.count(F.lit(1)).alias("_bn"))
     bands = bands.join(F.broadcast(counts), ["band", "bsig"]).select(
-        id_col, "band", "bsig",
-        sub_block(F.col(id_col), "_bn", max_bucket_size).alias("_sub"),
+        ID_COL, "band", "bsig",
+        sub_block(F.col(ID_COL), "_bn", max_bucket_size).alias("_sub"),
     )
     # Round-14 verify (guide §8 / §4.2, VERDICT-r13 #7): candidate
     # generation AND cosine verify run in ONE grouped Arrow pass per
@@ -802,10 +778,8 @@ def semantic_dedup_prune(
     # warm 1.22 -> 0.63 s with byte-identical output (round 14 probe).
     # The 6-dp round + >= tau decision stays in Spark; the pass drops
     # only pairs under a floor below it.
-    cand = bands.join(emb.select(id_col, vec_col), id_col)
-    raw_pairs = block_cosine_pairs(
-        cand, ["band", "bsig", "_sub"], tau - 1e-6, id_col, vec_col
-    )
+    cand = bands.join(emb.select(ID_COL, VEC_COL), ID_COL)
+    raw_pairs = block_cosine_pairs(cand, ["band", "bsig", "_sub"], tau - 1e-6)
     # referenced 3x below (both partner sides + the dropped set); without
     # a persist each reference re-runs the band join AND the Arrow cosine
     # verify. The relation is O(verified near-dup pairs) — bounded far
@@ -819,20 +793,20 @@ def semantic_dedup_prune(
         .distinct()
     )
     partners = (
-        dup.select(F.col("id_a").alias(id_col))
-        .unionAll(dup.select(F.col("id_b").alias(id_col)))
-        .groupBy(id_col)
+        dup.select(F.col("id_a").alias(ID_COL))
+        .unionAll(dup.select(F.col("id_b").alias(ID_COL)))
+        .groupBy(ID_COL)
         .agg(F.count(F.lit(1)).cast("long").alias("n_near"))
     )
-    dropped = dup.select(F.col("id_b").alias(id_col)).distinct().withColumn(
+    dropped = dup.select(F.col("id_b").alias(ID_COL)).distinct().withColumn(
         "_dropped", F.lit(True)
     )
     return (
-        emb.select(id_col)
-        .join(partners, id_col, "left")
-        .join(dropped, id_col, "left")
+        emb.select(ID_COL)
+        .join(partners, ID_COL, "left")
+        .join(dropped, ID_COL, "left")
         .select(
-            id_col,
+            ID_COL,
             F.coalesce("_dropped", F.lit(False)).alias("is_dropped"),
             F.coalesce("n_near", F.lit(0)).alias("n_near"),
         )

@@ -62,7 +62,7 @@ BLOOM_XL_HEXW = 5
 BLOOM_XL_M = 1 << (4 * BLOOM_XL_HEXW)
 
 
-def bloom_xl_width(n_keys: int) -> int:
+def bloom_xl_width(n_keys: float) -> int:
     """Smallest supported hex-slice width giving >= ~8 bits per key."""
     for hexw in (5, 6, 7):
         if (1 << (4 * hexw)) >= 8 * max(n_keys, 1):
@@ -105,13 +105,21 @@ def bloom_bitset_words(
 
 
 def bloom_xl_build(df: DataFrame, key_col: str) -> tuple[np.ndarray, int]:
-    """Adaptively-sized build: estimate the build cardinality (HLL, one
-    bounded aggregate), pick the slice width that keeps >= ~8 bits per
-    key, and fold the bitset at that width. Returns (words, hexw) — hand
-    both to the probe so its positions use the same slices."""
-    n = df.agg(F.approx_count_distinct(key_col).alias("n")).first()["n"]
-    hexw = bloom_xl_width(int(n))
-    return bloom_bitset_words(df, key_col, hexw), hexw
+    """Adaptively-sized build: fold at ``BLOOM_XL_HEXW``, estimate the
+    build cardinality from that fold's fill by linear counting (``lit`` of
+    m bits lit by ``BLOOM_K`` positions per key: n = -(m/k) ln(1 - lit/m)),
+    and refold only when ``bloom_xl_width(n)`` is wider, past ~131k keys;
+    a full bitset estimates infinity, the widest slice. Below that it is
+    one fold, one Spark job. Returns (words, hexw) — hand both to the
+    probe so its positions use the same slices."""
+    words = bloom_bitset_words(df, key_col)
+    lit = int(np.unpackbits(words.view(np.uint8)).sum())
+    with np.errstate(divide="ignore"):
+        n = -(BLOOM_XL_M / BLOOM_K) * np.log1p(-lit / BLOOM_XL_M)
+    hexw = bloom_xl_width(n)
+    if hexw != BLOOM_XL_HEXW:
+        words = bloom_bitset_words(df, key_col, hexw)
+    return words, hexw
 
 
 def _bloom_lit(

@@ -425,8 +425,7 @@ def incremental_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bitset folds straight off the corpus scan (a repeated text lights
     # the same bits), so only the anti-join pays the DISTINCT's shuffle.
     # Its width is the fixed default (~1% false positives up to ~100k
-    # corpus texts): bloom_xl_build's cardinality pass cost +0.35 s warm
-    # at sf0.1 (4 cores), and a wider bitset only moves the prune's yield
+    # corpus texts): a wider bitset only moves the prune's yield
     words = sketch.bloom_bitset_words(d.filter(b >= 30), "text")
     corp = d.filter(b >= 30).select("text").distinct()
     probed = sketch.bloom_hits(inc, "text", words, sketch.BLOOM_XL_HEXW)
@@ -1676,20 +1675,20 @@ def snm_ranked(d: DataFrame, prefix: int = _SNM_PREFIX) -> DataFrame:
     )
 
 
-def snm_candidates(d: DataFrame, w: int = _SNM_W, prefix: int = _SNM_PREFIX) -> DataFrame:
+def snm_candidates(d: DataFrame) -> DataFrame:
     """Sorted-neighborhood candidate pairs (id_a < id_b) — per-lang sort
-    by a normalized text prefix, each doc paired with its `w` sort-order
-    successors. Exactly N*w candidates regardless of corpus skew; the
-    explode + equi-join on (lang, rank) keeps it a hash join (no
-    range-join nested loop). Shared by `dedup_sorted_neighborhood` and
+    by a normalized text prefix, each doc paired with its `_SNM_W`
+    sort-order successors. Exactly N*_SNM_W candidates regardless of
+    corpus skew; the explode + equi-join on (lang, rank) keeps it a hash
+    join (no range-join nested loop). Shared by `dedup_sorted_neighborhood` and
     the Fellegi-Sunter record-linkage scorer. The rank comes
     from `snm_ranked` (range-partitioned two-pass rank — no
     one-task-per-language window)."""
-    ranked = snm_ranked(d, prefix)
+    ranked = snm_ranked(d)
     left = ranked.select(
         "lang",
         F.col("doc_id").alias("da"),
-        F.explode(F.sequence(F.col("rk") + 1, F.col("rk") + w)).alias("rk_b"),
+        F.explode(F.sequence(F.col("rk") + 1, F.col("rk") + _SNM_W)).alias("rk_b"),
     )
     right = ranked.select(
         "lang", F.col("rk").alias("rk_b"), F.col("doc_id").alias("db")
@@ -1701,8 +1700,7 @@ def snm_candidates(d: DataFrame, w: int = _SNM_W, prefix: int = _SNM_PREFIX) -> 
 
 
 def snm_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized persisted SNM candidate relation at the default
-    (w, prefix) — the shared-relation discipline (``store.shared``)
+    """Session-memoized persisted SNM candidate relation — the shared-relation discipline (``store.shared``)
     applied to the pair block both `dedup_sorted_neighborhood` and
     `record_linkage_fellegi_sunter` rebuild from scratch: the two
     entries are suite-adjacent, and the rebuild (rank + explode-join
@@ -1710,7 +1708,7 @@ def snm_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     allocation footprint — it was the in-suite GC-stall victim two
     rounds running (43.9 s in-suite vs 4.6 s warm in round 11, landing
     7 queries past the periodic GC at max heap debt). The relation is
-    exactly N*w (id_a, id_b) pairs — far below corpus size, safe to
+    exactly N*_SNM_W (id_a, id_b) pairs — far below corpus size, safe to
     persist at the 100 TB design point."""
     return store.shared(
         spark,

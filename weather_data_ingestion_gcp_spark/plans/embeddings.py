@@ -197,7 +197,7 @@ def similarity_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _rp_lsh_oracle(k: int = 5) -> str:
+def _rp_lsh_oracle() -> str:
     """Oracle for the random-hyperplane LSH: the band rows come from
     ``sign_bands_sql``, the same hyperplane floats that feed the Spark
     plan, so both engines bucket on bitwise-identical dot products."""
@@ -224,7 +224,7 @@ def _rp_lsh_oracle(k: int = 5) -> str:
         FROM scored
     )
     SELECT q_id, n_id, ROUND(cos, 6) AS cos_sim, rk
-    FROM ranked WHERE rk <= {k} ORDER BY q_id, rk
+    FROM ranked WHERE rk <= 5 ORDER BY q_id, rk
     """
 
 
@@ -684,12 +684,9 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     q = similarity.pair_side(
-        emb.filter(F.col("vec_id") < 8), "q", "vec_id", "embedding",
-        F.col("label").alias("q_label"),
+        emb.filter(F.col("vec_id") < 8), "q", F.col("label").alias("q_label")
     )
-    c = similarity.pair_side(
-        emb, "n", "vec_id", "embedding", F.col("label").alias("n_label")
-    )
+    c = similarity.pair_side(emb, "n", F.col("label").alias("n_label"))
     scored = c.join(
         F.broadcast(q),
         (F.col("q_id") != F.col("n_id")) & (F.col("q_label") != F.col("n_label")),

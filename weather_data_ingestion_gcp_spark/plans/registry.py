@@ -185,13 +185,13 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str, key: str, **params) -> Data
     return store.shared(spark, key, sf_dir, build)
 
 
-def register_views(spark: SparkSession, sf_dir: str, suffix: str = "") -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Expose every driver table as a temp view so callers can speak raw
     Spark SQL — the reference's own query interface is SQL (stored
     procedures handed to BigQuery, Load-gcs-to-bq/main.py:86-92), so the
     engine keeps a SQL-first entry point alongside the DataFrame API."""
     for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t + suffix)
+        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
@@ -232,8 +232,8 @@ def _sample_pct(n_docs: int, cap_pct: int = _SAMPLE_PCT) -> int:
     )
 
 
-def _cents(col: str = "value"):
-    """Per-row exact integer cents for a 2-decimal money double.
+def _cents():
+    """Per-row exact integer cents of the 2-decimal money double ``value``.
 
     SUM over doubles accumulates in engine- and partitioning-specific
     order, so rounding the raw double sum can flip a half-cent boundary
@@ -242,9 +242,9 @@ def _cents(col: str = "value"):
     The generator emits exact 2-decimal values, so quantizing each row
     to BIGINT cents first makes the sum exact and order-free; the single
     final division by 100.0 is identical IEEE arithmetic everywhere.
-    Oracle mirror: ``SUM(CAST(ROUND(col * 100, 0) AS BIGINT)) / 100.0``.
+    Oracle mirror: ``SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) / 100.0``.
     """
-    return F.round(F.col(col) * 100, 0).cast("long")
+    return F.round(F.col("value") * 100, 0).cast("long")
 
 
 def _nano_ln(c: Column) -> Column:

@@ -1546,7 +1546,7 @@ def code_markdown_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the identical 5 unrolled merge rounds (BPE-oracle pattern) and carries
 # the word key through every round.
 # ---------------------------------------------------------------------------
-def _bpe_apply_oracle(rounds: int, k: int = 20) -> str:
+def _bpe_apply_oracle(rounds: int) -> str:
     parts = [
         rf"""w0 AS (
         SELECT w, CAST(COUNT(*) AS BIGINT) AS n,
@@ -1584,7 +1584,7 @@ def _bpe_apply_oracle(rounds: int, k: int = 20) -> str:
         + f"""
     SELECT w AS word, n, trim(seq, ' ') AS encoded,
            CAST(len(string_split(trim(seq, ' '), ' ')) AS BIGINT) AS n_tokens
-    FROM w{rounds} ORDER BY n DESC, w LIMIT {k}
+    FROM w{rounds} ORDER BY n DESC, w LIMIT 20
     """
     )
 

@@ -54,6 +54,11 @@ SCALE_CONFS: dict[str, str] = {
     # operators (PageRank/PCA rounds, CC) persist small per-round state and
     # would otherwise schedule shuffle.partitions tasks per round.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # JVM case mapping for lower()/upper(), not ICU: ICU's first use
+    # title-cases every code point once (1.2-2.0 s on the first lower() of
+    # a JVM), and it maps Unicode 14+ letters (U+10570, U+A7D0) that the
+    # DuckDB oracles leave unchanged. ASCII maps identically either way.
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 

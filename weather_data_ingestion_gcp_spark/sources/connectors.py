@@ -177,7 +177,8 @@ class BigQueryTableStorage(TableStorage):
 
     - ``append`` -> ``df.write.format("bigquery").option("table",
       "<project>.<dataset>.<table>").mode("append")`` with the Storage
-      Write API (``writeMethod=direct`` — no staging bucket needed).
+      Write API (``writeMethod=direct``, the one method this binding
+      writes with: it has no staging-bucket setting).
       Date-typed partition columns become BigQuery DAY column
       partitioning (``partitionField``/``partitionType``); non-date
       partition_by columns become ``clusteredFields`` (BigQuery cannot
@@ -206,14 +207,12 @@ class BigQueryTableStorage(TableStorage):
     """
 
     def __init__(self, spark: SparkSession, project: str, dataset: str,
-                 format_name: str = "bigquery", client=None,
-                 write_method: str = "direct"):
+                 format_name: str = "bigquery", client=None):
         self.spark = spark
         self.project = project
         self.dataset = dataset
         self.format_name = format_name
         self.client = client
-        self.write_method = write_method
 
     def table_ref(self, table: str) -> str:
         return f"{self.project}.{self.dataset}.{table}"
@@ -230,7 +229,7 @@ class BigQueryTableStorage(TableStorage):
         return (
             df.write.format(self.format_name)
             .option("table", self.table_ref(table))
-            .option("writeMethod", self.write_method)
+            .option("writeMethod", "direct")
         )
 
     @staticmethod

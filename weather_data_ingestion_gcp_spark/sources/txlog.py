@@ -423,11 +423,10 @@ class TxLogTable:
 
     # -- write path ---------------------------------------------------------
 
-    def table_schema(self, version: int | None = None) -> dict[str, str]:
-        """column -> type string of the committed schema at ``version``
-        (default: latest) — the union of additive evolution up to that
-        commit; empty if the table has no commits."""
-        return self._snapshot(version).schema
+    def table_schema(self) -> dict[str, str]:
+        """column -> type string of the latest committed schema — the
+        union of additive evolution; empty if the table has no commits."""
+        return self._snapshot().schema
 
     @staticmethod
     def _check_schema(df: DataFrame, cur: dict[str, str]) -> dict[str, str]:

@@ -140,12 +140,12 @@ def shared(spark, key: str, sf_dir: str, build) -> DataFrame:
     return df
 
 
-def release(blocking: bool = False) -> int:
+def release() -> int:
     """Returns how many kept relations were unpersisted."""
     n = 0
     for df in _KEPT:
         try:
-            df.unpersist(blocking)
+            df.unpersist()
             n += 1
         except Exception:
             pass  # session already stopped: nothing to release

@@ -17,10 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def enrich_with_dim(
-    stream_df: DataFrame, dim_df: DataFrame, key: str, how: str = "left"
-) -> DataFrame:
-    """Stream-static enrichment: join each micro-batch against a static
+def enrich_with_dim(stream_df: DataFrame, dim_df: DataFrame, key: str) -> DataFrame:
+    """Stream-static enrichment: left-join each micro-batch against a static
     (or slowly-refreshed) dimension — the streaming form of the
     reference's routing-map lookup P9 (Load-gcs-to-bq/main.py:15-17,67).
 
@@ -30,7 +28,7 @@ def enrich_with_dim(
     needed. The dimension must fit the broadcast threshold — exactly the
     contract of the reference's in-memory FILE_TABLE_MAP. Mode-agnostic:
     the same call on batch frames returns the identical rows."""
-    return stream_df.join(F.broadcast(dim_df), key, how)
+    return stream_df.join(F.broadcast(dim_df), key, "left")
 
 
 def clicks_within(
@@ -40,15 +38,13 @@ def clicks_within(
     imp_ts: str = "imp_ts",
     click_ts: str = "click_ts",
     within: str = "10 minutes",
-    imp_late: str = "20 minutes",
-    click_late: str = "30 minutes",
     how: str = "inner",
 ) -> DataFrame:
     """Attribute each click to the impression it followed: equi-join on
     ``key`` with ``imp_ts <= click_ts <= imp_ts + within``.
 
-    ``imp_late``/``click_late`` are the per-stream watermark delays (how
-    late each side may arrive). Spark derives the state-expiry horizon from
+    The per-stream watermark delays (how late each side may arrive) are
+    20 minutes for impressions and 30 for clicks. Spark derives the state-expiry horizon from
     BOTH watermarks plus the interval, so neither side's state grows
     unboundedly. Works identically on batch DataFrames (the interval join
     becomes a range-refined sort-merge join).
@@ -57,12 +53,12 @@ def clicks_within(
     columns) — the conversion-funnel denominator. Outer rows can only emit
     once the watermark proves no matching click can still arrive (the
     impression's join window has fully expired), so they trail the inner
-    results by up to ``within + click_late`` of event time; the same
+    results by up to ``within`` plus the click delay of event time; the same
     interval condition is what makes the outer join legal on two streams
     at all (an unbounded outer would wait forever).
     """
-    imp = impressions.withWatermark(imp_ts, imp_late)
-    clk = clicks.withWatermark(click_ts, click_late)
+    imp = impressions.withWatermark(imp_ts, "20 minutes")
+    clk = clicks.withWatermark(click_ts, "30 minutes")
     cond = (
         (imp[key] == clk[key])
         & (clk[click_ts] >= imp[imp_ts])

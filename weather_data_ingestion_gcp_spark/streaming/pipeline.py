@@ -80,14 +80,14 @@ def run_landing_stream(
     warehouse: WeatherWarehouse,
     checkpoint_dir: str,
     dedup: bool = False,
-    timeout_sec: int = 300,
 ) -> None:
-    """Synchronous catch-up run: process all landed files once and return."""
+    """Synchronous catch-up run: process all landed files once and return,
+    stopping the query if it has not finished within 300 s."""
     q = start_landing_stream(
         spark, landing_dir, warehouse, checkpoint_dir, available_now=True, dedup=dedup
     )
     try:
-        q.awaitTermination(timeout_sec)
+        q.awaitTermination(300)
     finally:
         if q.isActive:
             q.stop()

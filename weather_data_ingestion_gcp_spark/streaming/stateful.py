@@ -190,9 +190,9 @@ def _mg_update_factory(k: int):
 
 
 def streaming_heavy_hitter_candidates(
-    words: DataFrame, word_col: str = "w", n_buckets: int = 8, k: int = 4
+    words: DataFrame, n_buckets: int = 8, k: int = 4
 ) -> DataFrame:
-    """word stream -> per-bucket Misra-Gries candidate summaries, one
+    """word stream (column ``w``) -> per-bucket Misra-Gries candidate summaries, one
     emission per (bucket, trigger) in update mode. Bucketing uses the
     md5-hex hash (portable, partition-invariant) so a word's counts never
     split across states."""
@@ -201,8 +201,8 @@ def streaming_heavy_hitter_candidates(
     from ..operators.sampling import hex_int
 
     bucketed = words.select(
-        F.col(word_col).alias("w"),
-        (hex_int(F.md5(F.col(word_col))) % n_buckets)
+        "w",
+        (hex_int(F.md5(F.col("w"))) % n_buckets)
         .cast("int")
         .alias("bucket"),
     )
